@@ -1,0 +1,147 @@
+"""The serving facade (api.ProductSearchEngine) end to end on a small
+seeded catalog in the reference's on-disk layout (conftest.ref_fixture),
+checked against numpy: E1 vector and filtered search, E2 item-to-item,
+J5 compare and hybrid(alpha=1) == vector ranking. Runs without the
+reference's own artifacts, unlike tests/test_api.py.
+"""
+
+from __future__ import annotations
+
+import time
+
+import numpy as np
+import pytest
+
+from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
+
+K = 4
+TOL = 2e-6  # both sides round scores to 6 decimals
+
+
+@pytest.fixture(scope="module")
+def engine(spark, ref_fixture):
+    from vector_database_product_recommendation_spark.api import ProductSearchEngine
+
+    return ProductSearchEngine.from_reference_dir(spark, ref_fixture.ref_dir)
+
+
+def _oracle(fx, qv, mask, k=K):
+    """Top-k (ids, scores) by (score desc, id asc) among ``mask``."""
+    scores = np.round(fx.emb @ np.asarray(qv), 6)
+    idx = np.flatnonzero(mask)
+    order = idx[np.lexsort((fx.ids[idx], -scores[idx]))][:k]
+    return list(fx.ids[order]), scores[order]
+
+
+def _app_mask(fx, brand="All", min_rating=0.0, min_reviews=0):
+    """The app's filters, nulls included: avg_rating compares as
+    coalesce(avg, -1), so an all-null product fails even min_rating 0."""
+    mask = np.nan_to_num(fx.avg_rating, nan=-1.0) >= min_rating
+    mask &= fx.n_reviews >= min_reviews
+    if brand != "All":
+        mask &= np.char.lower(fx.brand.astype(str)) == brand.lower()
+    return mask
+
+
+def _assert_ranked(rows, ids, scores):
+    assert [r["rank"] for r in rows] == list(range(1, len(ids) + 1))
+    assert [r["id"] for r in rows] == ids
+    assert np.allclose([r["score"] for r in rows], scores, atol=TOL)
+
+
+def test_embedding_dim_comes_from_the_npy(engine, ref_fixture):
+    assert engine.embedding_dim == ref_fixture.emb.shape[1]
+
+
+def test_vector_search_matches_numpy(engine, ref_fixture):
+    text = "kindle reading light"
+    rows = engine.search_products(text, k=K).collect()
+    qv = hash_embed_py(text, ref_fixture.emb.shape[1])
+    _assert_ranked(rows, *_oracle(ref_fixture, qv, _app_mask(ref_fixture)))
+
+
+def test_filtered_search_matches_numpy(engine, ref_fixture):
+    text = "tablet battery charger"
+    f = {"brand": "amazon", "min_rating": 3.0, "min_reviews": 3}
+    mask = _app_mask(ref_fixture, **f)
+    assert 1 < mask.sum() < len(mask) - 1  # the filters really bite
+    rows = engine.search_products(text, k=K, **f).collect()
+    qv = hash_embed_py(text, ref_fixture.emb.shape[1])
+    _assert_ranked(rows, *_oracle(ref_fixture, qv, mask))
+    by_id = {r["id"]: r for r in rows}
+    for i in np.flatnonzero(np.isin(ref_fixture.ids, list(by_id))):
+        r = by_id[ref_fixture.ids[i]]
+        assert r["brand"] == ref_fixture.brand[i]
+        assert r["n_reviews"] == ref_fixture.n_reviews[i]
+        assert abs(r["avg_rating"] - ref_fixture.avg_rating[i]) < 1e-9
+
+
+def test_item_to_item_matches_numpy_and_skips_query(engine, ref_fixture):
+    for i in (0, 5):
+        pid = ref_fixture.ids[i]
+        rows = engine.search_by_product_id(pid, k=K).collect()
+        assert pid not in {r["id"] for r in rows}
+        mask = np.ones(len(ref_fixture.ids), dtype=bool)
+        mask[i] = False
+        _assert_ranked(rows, *_oracle(ref_fixture, ref_fixture.emb[i], mask))
+
+
+def test_unknown_product_id_names_it(engine):
+    with pytest.raises(ValueError, match="NO-SUCH-ID"):
+        engine.search_by_product_id("NO-SUCH-ID", k=K)
+
+
+def test_compare_is_symmetric_with_unit_diagonal(engine, ref_fixture):
+    pids = [str(p) for p in ref_fixture.ids[[2, 7, 9]]]
+    got = {(r["id_a"], r["id_b"]): r["score"] for r in engine.compare_products(pids).collect()}
+    assert len(got) == 9
+    vecs = ref_fixture.emb[[2, 7, 9]]
+    exp = np.round(vecs @ vecs.T, 6)
+    for a, pa in enumerate(pids):
+        assert abs(got[(pa, pa)] - 1.0) < TOL
+        for b, pb in enumerate(pids):
+            assert got[(pa, pb)] == got[(pb, pa)]
+            assert abs(got[(pa, pb)] - exp[a, b]) < TOL
+
+
+def test_hybrid_alpha1_ranks_like_vector(engine):
+    text = "speaker sound music"
+    v = engine.search_products(text, mode="vector", k=K).collect()
+    h = engine.search_products(text, mode="hybrid", alpha=1.0, k=K).collect()
+    assert [r["id"] for r in h] == [r["id"] for r in v]
+    assert [r["score"] for r in h] == [r["score"] for r in v]
+
+
+def _jobs_run_by(spark, fn, label: str) -> int:
+    """Spark jobs ``fn`` runs, read from statusTracker() under a job group
+    of its own."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, marker = f"engine-{label}", f"engine-{label}-marker"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        # listener events land asynchronously but in order: once a later
+        # marker job is visible, every job of ``group`` is too
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_serving_caches_right_sized_and_jobs_bounded(spark, engine, ref_fixture):
+    """The caches are sized by the shared rule (one partition per ~25k
+    rows) and materialized at construction, so a request scans one
+    cached partition, skips exact_knn's merge window and does not
+    collect its own query vector back."""
+    assert engine.products.rdd.getNumPartitions() == 1
+    assert engine.product_emb.rdd.getNumPartitions() == 1
+    assert engine.products.is_cached and engine.product_emb.is_cached
+    pid = str(ref_fixture.ids[3])
+    engine.search_products("warm up", k=K).collect()
+    assert _jobs_run_by(spark, lambda: engine.search_products("fire tablet", k=K).collect(), "vector") <= 4
+    assert _jobs_run_by(spark, lambda: engine.search_by_product_id(pid, k=K).collect(), "item") <= 3

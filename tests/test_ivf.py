@@ -115,3 +115,20 @@ def test_ann_tradeoff_exact_at_full_probe(spark, sf_dir):
     assert out[nlist]["precision_at_k"] == 1.0
     assert out[nlist]["mrr"] == 1.0
     assert out[1]["precision_at_k"] <= 1.0
+
+
+def test_ivf_task_holding_only_the_query_row(spark):
+    """exclude_self where the probed cluster's task holds only the query
+    row: the task keeps no candidate and must emit nothing, not fail."""
+    vecs = [[1.0, 0.0], [0.8, 0.6], [0.0, 1.0]]
+    sc = spark.sparkContext
+    assigned = sc.parallelize([(i, v, i) for i, v in enumerate(vecs)], 3).toDF(
+        "vec_id long, embedding array<double>, cluster_id int"
+    )
+    cents = spark.createDataFrame(list(enumerate(vecs)), "cluster_id int, centroid array<double>")
+    q = assigned.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    assert ivf_knn(assigned, cents, q, 2, nprobe=1, exclude_self=True).collect() == []
+    two = ivf_knn(assigned, cents, q, 2, nprobe=2, exclude_self=True).collect()
+    assert [(r["neighbor_id"], r["rank"]) for r in two] == [(1, 1)]

@@ -3,11 +3,12 @@ from __future__ import annotations
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame, Window
 
+from vector_database_product_recommendation_spark.functions.vectors import dot
 from vector_database_product_recommendation_spark.operators.centroids import group_centroids, group_centroids_long
 from vector_database_product_recommendation_spark.operators.knn import (
     exact_knn,
-    exact_knn_expr,
     item_to_item,
     pairwise_similarity,
 )
@@ -18,6 +19,24 @@ def emb(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
     df.count()
     return df
+
+
+def exact_knn_expr(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Pure-expression cross-check of exact_knn: crossJoin(broadcast(queries))
+    + zip_with dot + a row_number window. JVM-only, no Python worker, but it
+    shuffles O(q*N) scored rows, so it is a test oracle, not a serving path."""
+    q = queries.select("query_id", F.col("query_vec").alias("__qv"))
+    scored = (
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
+        .crossJoin(F.broadcast(q))
+        .select("query_id", "neighbor_id", F.round(dot("__cv", "__qv"), 6).alias("score"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
 
 
 def _queries(emb, n=5):
@@ -48,6 +67,19 @@ def test_exact_knn_expr_agrees_with_kernel(spark, emb):
     a = exact_knn(emb, _queries(emb, 3), k).collect()
     b = exact_knn_expr(emb, _queries(emb, 3), k).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+def test_exact_knn_task_holding_only_the_query_row(spark):
+    """exclude_self on a multi-partition corpus where one task's only row
+    is the query itself: that task keeps no candidate and must emit
+    nothing rather than fail."""
+    vecs = [[1.0, 0.0], [0.8, 0.6], [0.0, 1.0]]
+    corpus = spark.sparkContext.parallelize(list(enumerate(vecs)), 3).toDF("vec_id long, embedding array<double>")
+    q = corpus.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    out = exact_knn(corpus, q, 2, exclude_self=True).collect()
+    assert [(r["neighbor_id"], r["score"], r["rank"]) for r in out] == [(1, 0.8, 1), (2, 0.0, 2)]
 
 
 def test_item_to_item_excludes_self(spark, emb):

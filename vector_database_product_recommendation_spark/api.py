@@ -26,6 +26,7 @@ match the reference bit-for-bit (tests/test_reference_retrieval.py).
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -71,7 +72,22 @@ class ProductSearchEngine:
         """Build from the reference's shipped artifacts: reviews.csv +
         review_embeddings.npy, products/product-vectors REBUILT through
         this engine's lineage operators (proved identical in
-        tests/test_reference_parity.py)."""
+        tests/test_reference_parity.py).
+
+        Like the reference's ``@st.cache_resource``, the serving caches
+        are built once, here: ``products`` and ``product_emb`` go through
+        artifacts.persist_right_sized (~25k rows per partition, so one
+        partition at the reference's size) and are materialized before
+        this returns. A request then scans one cached partition, takes
+        exact_knn's single-partition path and shuffles nothing: a vector
+        or filtered search runs 4 Spark jobs, an item-to-item lookup 3
+        and a compare 2 (tests/test_engine.py bounds the first two).
+        ``embedding_dim`` defaults to the .npy's width, so free-text
+        search never probes the corpus for it.
+        """
+        from vector_database_product_recommendation_spark.artifacts import (
+            persist_right_sized,
+        )
         from vector_database_product_recommendation_spark.sources.reference import (
             load_embeddings_npy,
             load_reviews,
@@ -79,21 +95,26 @@ class ProductSearchEngine:
             rebuild_products,
         )
 
+        npy = f"{ref_dir}/review_embeddings.npy"
+        kw.setdefault("embedding_dim", int(np.load(npy, mmap_mode="r").shape[1]))
         # no .cache() here: load_reviews already persists the (expensive,
         # unsplittable multiLine) CSV parse; the returned frame only adds a
         # map lookup + cast on top of that cache, and re-caching it would
         # pin a second, redundant copy of every row
         reviews = load_reviews(spark, f"{ref_dir}/reviews.csv")
-        review_emb = load_embeddings_npy(
-            spark, f"{ref_dir}/review_embeddings.npy"
-        ).cache()
-        products = rebuild_products(reviews).cache()
-        product_emb = rebuild_product_embeddings(reviews, review_emb).select(
-            "id", F.col("vector").alias("embedding")
+        review_emb = load_embeddings_npy(spark, npy).cache()
+        products = rebuild_products(reviews)
+        n_products = products.count()  # product_emb has one row per product too
+        products = persist_right_sized(products, n_products)
+        product_emb = persist_right_sized(
+            rebuild_product_embeddings(reviews, review_emb).select(
+                "id", F.col("vector").alias("embedding")
+            ),
+            n_products,
         )
         return cls(
             products,
-            product_emb.cache(),
+            product_emb,
             reviews=reviews,
             review_emb=review_emb,
             **kw,
@@ -126,8 +147,8 @@ class ProductSearchEngine:
             return self.encoder(query_text)
         if self.embedding_dim is None:
             # probed ONCE and memoized — the encode hot path must not run a
-            # Spark job per free-text query (pass embedding_dim at
-            # construction to avoid even this first probe)
+            # Spark job per free-text query (from_reference_dir reads the
+            # width from the .npy; direct construction can pass it)
             self.embedding_dim = len(self.product_emb.select("embedding").first()[0])
         return hash_embed_py(query_text, self.embedding_dim)
 
@@ -148,11 +169,13 @@ class ProductSearchEngine:
             brand=brand, min_rating=min_rating, min_reviews=min_reviews
         )
         cand_emb = self.product_emb.join(cand.select("id"), "id")
-        qv = self._encode_query(query_text)
-        q = spark.createDataFrame([(0, qv)], "query_id int, query_vec array<double>")
+        # the encoded vector goes to the kernel as query_rows: the one-row
+        # frame only carries the schema, and no job collects it back
+        rows = [(0, self._encode_query(query_text))]
+        q = spark.createDataFrame(rows, "query_id int, query_vec array<double>")
 
         if mode == "vector":
-            hits = exact_knn(cand_emb, q, k, corpus_id="id").select(
+            hits = exact_knn(cand_emb, q, k, corpus_id="id", query_rows=rows).select(
                 F.col("neighbor_id").alias("id"), "score", "rank"
             )
         elif mode == "hybrid":
@@ -160,7 +183,7 @@ class ProductSearchEngine:
             # exact_scores is the same BLAS kernel minus top-k selection, so
             # no O(N) rows ever cross the single-partition rank window
             # (the old k=10**9 sentinel did exactly that).
-            dense = exact_scores(cand_emb, q, corpus_id="id").select(
+            dense = exact_scores(cand_emb, q, corpus_id="id", query_rows=rows).select(
                 F.col("neighbor_id").alias("id"), "score"
             )
             hits = self._blend_hybrid(query_text, cand, dense, alpha, k)
@@ -229,7 +252,8 @@ class ProductSearchEngine:
     # -- E2: item-to-item -------------------------------------------------
 
     def search_by_product_id(self, pid, k: int = 5) -> DataFrame:
-        """E2 (app.py:221-241): the query vector comes FROM the corpus."""
+        """E2 (app.py:221-241): the query vector comes FROM the corpus.
+        An unknown ``pid`` raises ValueError naming it."""
         from vector_database_product_recommendation_spark.operators.knn import item_to_item
 
         hits = item_to_item(self.product_emb, pid, k, corpus_id="id")

@@ -24,6 +24,25 @@ def _key(spark: SparkSession, sf_dir: str, tag: str, *params) -> tuple:
     return (spark.sparkContext.applicationId, sf_dir, tag, *params)
 
 
+ROWS_PER_PARTITION = 25_000
+
+
+def persist_right_sized(df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` (about ``n_rows`` rows) coalesced to ~25k rows per partition
+    (at least 1, at most ``defaultParallelism``), persisted, and
+    materialized with one count.
+
+    A tiny corpus spread over defaultParallelism (or shuffle) partitions
+    pays per-task overhead on every probe and never takes the
+    single-partition paths of the kernels (knn.py); at 100 TB the same
+    rule yields thousands of partitions. coalesce, so no shuffle.
+    """
+    cap = int(df.sparkSession.sparkContext.defaultParallelism)
+    out = df.coalesce(max(1, min(cap, n_rows // ROWS_PER_PARTITION + 1))).persist()
+    out.count()
+    return out
+
+
 def fitted_tfidf(
     spark: SparkSession,
     sf_dir: str,
@@ -81,14 +100,7 @@ def ivf_index(
         cents = train_kmeans_centroids(
             emb, eff_nlist, seed=seed, max_iter=max_iter, n_rows=n
         )
-        # right-size the cached partitions (~25k vectors each): a tiny
-        # corpus spread over defaultParallelism partitions pays
-        # per-task overhead on every probe; at 100 TB the same rule
-        # yields thousands of partitions. coalesce (no shuffle).
-        n_parts = max(1, min(int(spark.sparkContext.defaultParallelism), n // 25_000 + 1))
-        assigned = assign_clusters(emb, cents).coalesce(n_parts).persist()
-        assigned.count()
-        _CACHE[k] = (cents, assigned)
+        _CACHE[k] = (cents, persist_right_sized(assign_clusters(emb, cents), n))
     return _CACHE[k]
 
 

@@ -294,7 +294,7 @@ def ivf_knn(
         order = np.lexsort((cn, -cs, cq))
         cq, cn, cs = cq[order], cn[order], cs[order]
         uniq, counts = np.unique(cq, return_counts=True)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        starts = np.cumsum(counts) - counts  # empty-safe: a task may keep no row
         rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
         sel = rank <= k_local
         return cq[sel], cn[sel], cs[sel], rank[sel]

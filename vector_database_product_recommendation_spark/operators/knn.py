@@ -31,15 +31,17 @@ from pyspark.sql import DataFrame, Window
 from vector_database_product_recommendation_spark.functions.vectors import dot
 
 
-def _collect_queries(
-    queries: DataFrame, query_id: str, query_vec: str
+def _query_batch(
+    queries: DataFrame, query_id: str, query_vec: str, query_rows: list | None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-side gather of the query batch (small by contract)."""
-    rows = queries.select(query_id, query_vec).collect()
-    if not rows:
+    """(ids, matrix) of the query batch: ``query_rows`` when the caller
+    already holds them, else a driver-side gather (small by contract)."""
+    if query_rows is None:
+        query_rows = queries.select(query_id, query_vec).collect()
+    if not query_rows:
         raise ValueError("empty query batch")
-    ids = np.array([r[0] for r in rows])
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    ids = np.array([r[0] for r in query_rows])
+    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in query_rows])
     return ids, mat
 
 
@@ -68,14 +70,7 @@ def exact_knn(
     encodes its query batch once, app.py:169-171) pass them to skip the
     per-call collect job, exactly like ivf_knn.
     """
-    if query_rows is not None:
-        if not query_rows:
-            raise ValueError("empty query batch")
-        q_ids = np.array([r[0] for r in query_rows])
-        q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in query_rows])
-    else:
-        q_ids, q_mat = _collect_queries(queries, query_id, query_vec)
-
+    q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
     qid_dtype = queries.schema[query_id].dataType.simpleString()
     nid_dtype = corpus.schema[corpus_id].dataType.simpleString()
     out_schema = (
@@ -132,7 +127,7 @@ def exact_knn(
         order = np.lexsort((cn, -cs, cq))
         cq, cn, cs = cq[order], cn[order], cs[order]
         uniq, counts = np.unique(cq, return_counts=True)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        starts = np.cumsum(counts) - counts  # empty-safe: a task may keep no row
         rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
         sel = rank <= k_local
         yield pd.DataFrame(
@@ -171,6 +166,7 @@ def exact_scores(
     query_vec: str = "query_vec",
     exclude_self: bool = False,
     round_decimals: int = 6,
+    query_rows: list | None = None,
 ) -> DataFrame:
     """Score EVERY corpus row against the query batch — no top-k, no window.
 
@@ -179,9 +175,10 @@ def exact_scores(
     k would drag O(N) rows through the per-query rank window (a single
     serialized partition at scale). This is the same mapInPandas BLAS
     kernel as exact_knn minus selection: output stays partition-local,
-    zero shuffles. Returns (query_id, neighbor_id, score).
+    zero shuffles. Returns (query_id, neighbor_id, score). ``query_rows``
+    as in exact_knn.
     """
-    q_ids, q_mat = _collect_queries(queries, query_id, query_vec)
+    q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
     qid_dtype = queries.schema[query_id].dataType.simpleString()
     nid_dtype = corpus.schema[corpus_id].dataType.simpleString()
     out_schema = f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double"
@@ -214,45 +211,6 @@ def exact_scores(
     )
 
 
-def exact_knn_expr(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    exclude_self: bool = False,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Pure-expression variant: crossJoin(broadcast(queries)) + zip_with dot.
-
-    Same semantics as exact_knn; stays entirely JVM-side (no Python worker)
-    but shuffles O(q*N) scored rows into the top-k window — use for small
-    query batches / cross-validation of the fast kernel, not the 100-TB path.
-    """
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
-    )
-    joined = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("__cv")
-    ).crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.select(
-        "query_id",
-        "neighbor_id",
-        F.round(dot("__cv", "__qv"), round_decimals).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
-
-
 def item_to_item(
     corpus: DataFrame,
     item_id,
@@ -263,10 +221,14 @@ def item_to_item(
 ) -> DataFrame:
     """E2 (app.py:221-241): the query vector comes FROM the corpus —
     look up the item's vector, score everyone else, top-k, never return
-    the item itself."""
+    the item itself. An ``item_id`` missing from the corpus raises
+    ValueError naming it."""
     q = corpus.filter(F.col(corpus_id) == F.lit(item_id)).select(
         F.col(corpus_id).alias("query_id"), F.col(corpus_vec).alias("query_vec")
     )
+    rows = q.collect()
+    if not rows:
+        raise ValueError(f"item {item_id!r} is not in the corpus")
     return exact_knn(
         corpus,
         q,
@@ -274,6 +236,7 @@ def item_to_item(
         corpus_id=corpus_id,
         corpus_vec=corpus_vec,
         exclude_self=True,
+        query_rows=rows,
     )
 
 
