@@ -1,8 +1,9 @@
 """The serving facade (api.ProductSearchEngine) end to end on a small
 seeded catalog in the reference's on-disk layout (conftest.ref_fixture),
 checked against numpy: E1 vector and filtered search, E2 item-to-item,
-J5 compare and hybrid(alpha=1) == vector ranking. Runs without the
-reference's own artifacts, unlike tests/test_api.py.
+J5 compare, hybrid(alpha=1) == vector ranking and the E3 side-by-side
+at full probe. Runs without the reference's own artifacts, unlike
+tests/test_api.py.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ import time
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
 
@@ -104,6 +106,22 @@ def test_compare_is_symmetric_with_unit_diagonal(engine, ref_fixture):
             assert abs(got[(pa, pb)] - exp[a, b]) < TOL
 
 
+def test_compare_unknown_ids_names_them(engine, ref_fixture):
+    real = str(ref_fixture.ids[1])
+    with pytest.raises(ValueError, match="NO-SUCH-ID") as err:
+        engine.compare_products([real, "NO-SUCH-ID", "ALSO-MISSING"])
+    assert "ALSO-MISSING" in str(err.value) and real not in str(err.value)
+
+
+def test_ann_full_probe_equals_exact(engine):
+    """E3: probing every IVF list degenerates to exact search, ids and
+    scores alike."""
+    exact, ivf = engine.ann_review_search(11, k=K, nprobe=4, nlist=4)
+    e = [(r["neighbor_id"], r["score"]) for r in exact.collect()]
+    assert len(e) == K and 11 not in {n for n, _ in e}
+    assert [(r["neighbor_id"], r["score"]) for r in ivf.collect()] == e
+
+
 def test_hybrid_alpha1_ranks_like_vector(engine):
     text = "speaker sound music"
     v = engine.search_products(text, mode="vector", k=K).collect()
@@ -134,14 +152,21 @@ def _jobs_run_by(spark, fn, label: str) -> int:
 
 
 def test_serving_caches_right_sized_and_jobs_bounded(spark, engine, ref_fixture):
-    """The caches are sized by the shared rule (one partition per ~25k
-    rows) and materialized at construction, so a request scans one
-    cached partition, skips exact_knn's merge window and does not
-    collect its own query vector back."""
-    assert engine.products.rdd.getNumPartitions() == 1
-    assert engine.product_emb.rdd.getNumPartitions() == 1
-    assert engine.products.is_cached and engine.product_emb.is_cached
-    pid = str(ref_fixture.ids[3])
+    """Products and their vectors are one catalog table, sized by the
+    shared rule (one partition per ~25k rows) and materialized at
+    construction. A search is then one kernel pass over one cached
+    partition that returns its hits with their payload: no join, no
+    merge window, no collect of its own query vector."""
+    cached = {n for n, v in vars(engine).items() if isinstance(v, DataFrame) and v.is_cached}
+    assert cached == {"catalog", "review_emb"}
+    assert engine.catalog.rdd.getNumPartitions() == 1
+    pids = [str(p) for p in ref_fixture.ids[[3, 4, 8]]]
     engine.search_products("warm up", k=K).collect()
-    assert _jobs_run_by(spark, lambda: engine.search_products("fire tablet", k=K).collect(), "vector") <= 4
-    assert _jobs_run_by(spark, lambda: engine.search_by_product_id(pid, k=K).collect(), "item") <= 3
+    requests = {
+        "vector": (lambda: engine.search_products("fire tablet", k=K), 1),
+        "filtered": (lambda: engine.search_products("fire tablet", k=K, brand="amazon", min_reviews=3), 1),
+        "item": (lambda: engine.search_by_product_id(pids[0], k=K), 2),
+        "compare": (lambda: engine.compare_products(pids), 1),
+    }
+    for label, (request, bound) in requests.items():
+        assert _jobs_run_by(spark, lambda: request().collect(), label) <= bound, label

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import DataFrame, Window
@@ -80,6 +81,70 @@ def test_exact_knn_task_holding_only_the_query_row(spark):
     )
     out = exact_knn(corpus, q, 2, exclude_self=True).collect()
     assert [(r["neighbor_id"], r["score"], r["rank"]) for r in out] == [(1, 0.8, 1), (2, 0.0, 2)]
+
+
+# (id, vector, label, weight, n) in partition order: partition 0 holds
+# the high ids. Id 10 (partition 0) ties at 0.5 with id 3 against query 6
+# and with id 0 against query 4 (both in partition 2); with k=3 either
+# tie falls on the cutoff, the one for query 6 when the query's own row
+# is excluded, the one for query 4 when it is not. Both winners carry a
+# null payload value.
+PAYLOAD_ROWS = [
+    (11, [0.9, 0.1, 0.0], "k", 1.5, 4),
+    (10, [0.5, 0.5, 0.0], "j", 2.5, 7),
+    (9, [0.2, 0.0, 0.3], "i", None, 1),
+    (8, [0.0, 0.0, 1.0], None, 0.5, None),
+    (7, [0.7, 0.0, 0.0], "g", 0.0, 2),
+    (6, [1.0, 0.0, 0.0], "f", 3.0, 9),
+    (5, [0.1, 0.9, 0.0], "e", 1.0, 3),
+    (4, [0.0, 1.0, 0.0], "d", 1.0, 3),
+    (3, [0.5, 0.0, 0.5], None, None, None),
+    (2, [0.3, 0.2, 0.0], "b", 4.0, 5),
+    (1, [-1.0, 0.0, 0.0], "a", 5.0, 6),
+    (0, [0.0, 0.5, 0.5], "z", None, 8),
+]
+PAYLOAD = ("label", "weight", "n")
+
+
+def _payload_oracle(queries: list, k: int, exclude_self: bool) -> list:
+    """Per query, the top-k rows by (rounded score desc, id asc) with
+    their payload, in pandas."""
+    corpus = pd.DataFrame(PAYLOAD_ROWS, columns=["id", "vec", *PAYLOAD])
+    mat = np.stack(corpus["vec"].to_numpy())
+    out = []
+    for qid, qv in sorted(queries):
+        c = corpus.assign(score=np.round(mat @ np.asarray(qv), 6))
+        if exclude_self:
+            c = c[c["id"] != qid]
+        top = c.sort_values(["score", "id"], ascending=[False, True]).head(k)
+        top = top.astype(object).where(top.notna(), None)
+        for rank, r in enumerate(top.itertuples(), 1):
+            out.append((qid, r.id, r.score, rank, *(getattr(r, col) for col in PAYLOAD)))
+    return out
+
+
+@pytest.mark.parametrize("exclude_self", [False, True])
+def test_exact_knn_payload_on_merge_path(spark, exclude_self):
+    """Payload rides through the task-local top-k and the window merge
+    of a 3-partition corpus: null values survive, a score tie across
+    partitions goes to the lower id, and exclude_self holds."""
+    corpus = spark.sparkContext.parallelize(PAYLOAD_ROWS, 3).toDF(
+        "vec_id long, embedding array<double>, label string, weight double, n long"
+    )
+    assert corpus.rdd.getNumPartitions() == 3
+    queries = [(6, [1.0, 0.0, 0.0]), (4, [0.0, 1.0, 0.0])]
+    q = spark.createDataFrame(queries, "query_id long, query_vec array<double>")
+    out = exact_knn(corpus, q, 3, exclude_self=exclude_self, payload=PAYLOAD)
+    assert out.columns == ["query_id", "neighbor_id", "score", "rank", *PAYLOAD]
+    got = [tuple(r) for r in out.collect()]
+    assert got == _payload_oracle(queries, 3, exclude_self)
+    ids = {qid: [g[1] for g in got if g[0] == qid] for qid, _ in queries}
+    assert ids == ({6: [11, 7, 3], 4: [5, 0, 10]} if exclude_self else {6: [6, 11, 7], 4: [4, 5, 0]})
+    default = exact_knn(corpus, q, 3, exclude_self=exclude_self)
+    assert default.schema.simpleString() == (
+        "struct<query_id:bigint,neighbor_id:bigint,score:double,rank:int>"
+    )
+    assert [tuple(r) for r in default.collect()] == [g[:4] for g in got]
 
 
 def test_item_to_item_excludes_self(spark, emb):

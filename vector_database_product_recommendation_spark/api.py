@@ -35,18 +35,21 @@ from vector_database_product_recommendation_spark.functions.text import STOPWORD
 from vector_database_product_recommendation_spark.operators.knn import (
     exact_knn,
     exact_scores,
-    pairwise_similarity,
+    item_to_item,
 )
+
+# the product fields a search hit carries (app.py:186)
+HIT_PAYLOAD = ("brand", "n_reviews", "avg_rating")
 
 
 class ProductSearchEngine:
-    """Serving engine over (products, product_embeddings) with optional
+    """Serving engine over one catalog table (a row per product: its
+    products.csv fields plus its unit ``embedding``) with optional
     (reviews, review_embeddings) for the ANN demo paths."""
 
     def __init__(
         self,
-        products: DataFrame,
-        product_emb: DataFrame,
+        catalog: DataFrame,
         *,
         reviews: DataFrame | None = None,
         review_emb: DataFrame | None = None,
@@ -55,8 +58,7 @@ class ProductSearchEngine:
         stopwords: tuple[str, ...] = STOPWORDS_EN,
         embedding_dim: int | None = None,
     ):
-        self.products = products
-        self.product_emb = product_emb  # (id, embedding) unit vectors
+        self.catalog = catalog
         self.reviews = reviews
         self.review_emb = review_emb  # (review_idx, embedding)
         self.text_col = text_col
@@ -64,6 +66,11 @@ class ProductSearchEngine:
         self.stopwords = stopwords
         self.embedding_dim = embedding_dim  # lazily probed once if None
         self._tfidf = None
+        # the free-text query frame only carries the schema: each request's
+        # encoded vector reaches the kernel as query_rows
+        self._text_query = catalog.sparkSession.createDataFrame(
+            [], "query_id int, query_vec array<double>"
+        )
 
     # -- construction -----------------------------------------------------
 
@@ -74,16 +81,18 @@ class ProductSearchEngine:
         this engine's lineage operators (proved identical in
         tests/test_reference_parity.py).
 
-        Like the reference's ``@st.cache_resource``, the serving caches
-        are built once, here: ``products`` and ``product_emb`` go through
-        artifacts.persist_right_sized (~25k rows per partition, so one
-        partition at the reference's size) and are materialized before
-        this returns. A request then scans one cached partition, takes
-        exact_knn's single-partition path and shuffles nothing: a vector
-        or filtered search runs 4 Spark jobs, an item-to-item lookup 3
-        and a compare 2 (tests/test_engine.py bounds the first two).
-        ``embedding_dim`` defaults to the .npy's width, so free-text
-        search never probes the corpus for it.
+        Like the reference's ``@st.cache_resource``, the serving cache is
+        built once, here: products joined with their vectors into one
+        ``catalog`` table, sized by artifacts.persist_right_sized (~25k
+        rows per partition, so one partition at the reference's size) and
+        materialized before this returns. A request scans that one cached
+        table with one kernel pass, which returns its hits with their
+        payload, so nothing is joined per request: a vector or filtered
+        search runs 1 Spark job, an item-to-item lookup 2 (the query
+        vector's lookup, then the kernel) and a compare 1 (the selected
+        vectors' lookup; tests/test_engine.py pins these). ``embedding_dim`` defaults to
+        the .npy's width, so free-text search never probes the corpus
+        for it.
         """
         from vector_database_product_recommendation_spark.artifacts import (
             persist_right_sized,
@@ -104,17 +113,12 @@ class ProductSearchEngine:
         reviews = load_reviews(spark, f"{ref_dir}/reviews.csv")
         review_emb = load_embeddings_npy(spark, npy).cache()
         products = rebuild_products(reviews)
-        n_products = products.count()  # product_emb has one row per product too
-        products = persist_right_sized(products, n_products)
-        product_emb = persist_right_sized(
-            rebuild_product_embeddings(reviews, review_emb).select(
-                "id", F.col("vector").alias("embedding")
-            ),
-            n_products,
+        vectors = rebuild_product_embeddings(reviews, review_emb).select(
+            "id", F.col("vector").alias("embedding")
         )
+        catalog = persist_right_sized(products.join(vectors, "id"), products.count())
         return cls(
-            products,
-            product_emb,
+            catalog,
             reviews=reviews,
             review_emb=review_emb,
             **kw,
@@ -130,7 +134,7 @@ class ProductSearchEngine:
         min_reviews: int = 0,
     ) -> DataFrame:
         """Conjunctive metadata filter with the app's exact null handling."""
-        out = self.products
+        out = self.catalog
         if brand != "All":
             out = out.filter(F.lower(F.col("brand")) == F.lit(brand.lower()))
         out = out.filter(
@@ -149,7 +153,7 @@ class ProductSearchEngine:
             # probed ONCE and memoized — the encode hot path must not run a
             # Spark job per free-text query (from_reference_dir reads the
             # width from the .npy; direct construction can pass it)
-            self.embedding_dim = len(self.product_emb.select("embedding").first()[0])
+            self.embedding_dim = len(self.catalog.select("embedding").first()[0])
         return hash_embed_py(query_text, self.embedding_dim)
 
     def search_products(
@@ -163,35 +167,36 @@ class ProductSearchEngine:
         mode: str = "vector",
         alpha: float = 0.7,
     ) -> DataFrame:
-        """E1 (app.py:281-303): filter -> score -> top-k -> gather."""
-        spark = self.products.sparkSession
+        """E1 (app.py:281-303): filter -> score -> top-k -> gather, the
+        gather riding on the kernel's hits (exact_knn ``payload``)."""
+        if mode not in ("vector", "hybrid"):
+            raise ValueError(f"unknown mode {mode!r}")
         cand = self.candidate_products(
             brand=brand, min_rating=min_rating, min_reviews=min_reviews
         )
-        cand_emb = self.product_emb.join(cand.select("id"), "id")
-        # the encoded vector goes to the kernel as query_rows: the one-row
-        # frame only carries the schema, and no job collects it back
         rows = [(0, self._encode_query(query_text))]
-        q = spark.createDataFrame(rows, "query_id int, query_vec array<double>")
-
         if mode == "vector":
-            hits = exact_knn(cand_emb, q, k, corpus_id="id", query_rows=rows).select(
-                F.col("neighbor_id").alias("id"), "score", "rank"
+            return _hit_rows(
+                exact_knn(
+                    cand,
+                    self._text_query,
+                    k,
+                    corpus_id="id",
+                    query_rows=rows,
+                    payload=HIT_PAYLOAD,
+                )
             )
-        elif mode == "hybrid":
-            # The blend needs every candidate's dense score, not a ranking:
-            # exact_scores is the same BLAS kernel minus top-k selection, so
-            # no O(N) rows ever cross the single-partition rank window
-            # (the old k=10**9 sentinel did exactly that).
-            dense = exact_scores(cand_emb, q, corpus_id="id", query_rows=rows).select(
-                F.col("neighbor_id").alias("id"), "score"
-            )
-            hits = self._blend_hybrid(query_text, cand, dense, alpha, k)
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
+        # The blend needs every candidate's dense score, not a ranking:
+        # exact_scores is the same BLAS kernel minus top-k selection, so
+        # no O(N) rows ever cross the single-partition rank window
+        # (the old k=10**9 sentinel did exactly that).
+        dense = exact_scores(
+            cand, self._text_query, corpus_id="id", query_rows=rows
+        ).select(F.col("neighbor_id").alias("id"), "score")
+        hits = self._blend_hybrid(query_text, cand, dense, alpha, k)
         return (
-            hits.join(self.products, "id")
-            .select("rank", "id", "score", "brand", "n_reviews", "avg_rating")
+            hits.join(self.catalog, "id")
+            .select("rank", "id", "score", *HIT_PAYLOAD)
             .orderBy("rank")
         )
 
@@ -200,7 +205,7 @@ class ProductSearchEngine:
 
         if self._tfidf is None:
             self._tfidf = TfidfModel(
-                self.products, "id", self.text_col, self.stopwords
+                self.catalog, "id", self.text_col, self.stopwords
             )
         return self._tfidf
 
@@ -254,23 +259,44 @@ class ProductSearchEngine:
     def search_by_product_id(self, pid, k: int = 5) -> DataFrame:
         """E2 (app.py:221-241): the query vector comes FROM the corpus.
         An unknown ``pid`` raises ValueError naming it."""
-        from vector_database_product_recommendation_spark.operators.knn import item_to_item
-
-        hits = item_to_item(self.product_emb, pid, k, corpus_id="id")
-        return (
-            hits.select(F.col("neighbor_id").alias("id"), "score", "rank")
-            .join(self.products, "id")
-            .select("rank", "id", "score", "brand", "n_reviews", "avg_rating")
-            .orderBy("rank")
+        return _hit_rows(
+            item_to_item(self.catalog, pid, k, corpus_id="id", payload=HIT_PAYLOAD)
         )
 
     # -- J5: pairwise compare ---------------------------------------------
 
     def compare_products(self, pids: list) -> DataFrame:
         """J5 (app.py:348-354): pairwise similarity of 2-4 selected
-        products, long form (id_a, id_b, score)."""
-        sel = self.product_emb.filter(F.col("id").isin(list(pids)))
-        return pairwise_similarity(sel, id_col="id")
+        products, long form (id_a, id_b, score), rows sorted by
+        (id_a, id_b). One job collects the selected vectors; the matrix
+        is the reference's ``V @ V.T`` on the driver, each pair scored
+        once so the cells are exactly symmetric, and comes back as an
+        inline table, which Spark returns without a job. Unknown ids
+        raise ValueError naming them, as does an empty ``pids``."""
+        wanted = list(dict.fromkeys(pids))
+        if not wanted:
+            raise ValueError("no product ids to compare")
+        vec = {
+            r[0]: np.asarray(r[1], dtype=np.float64)
+            for r in self.catalog.filter(F.col("id").isin(wanted))
+            .select("id", "embedding")
+            .collect()
+        }
+        missing = [p for p in wanted if p not in vec]
+        if missing:
+            raise ValueError(f"products {missing!r} are not in the catalog")
+        ids = sorted(vec)
+        score = {}
+        for i, a in enumerate(ids):
+            for b in ids[i:]:
+                score[a, b] = score[b, a] = float(np.round(vec[a] @ vec[b], 6))
+        cells = [(a, b, score[a, b]) for a in ids for b in ids]
+        # named markers bind the ids as literals: no quoting, no injection
+        rows = ", ".join(f"(:a{i}, :b{i}, :s{i})" for i in range(len(cells)))
+        args = {f"{c}{i}": v for i, cell in enumerate(cells) for c, v in zip("abs", cell)}
+        return self.catalog.sparkSession.sql(
+            f"SELECT * FROM VALUES {rows} AS t(id_a, id_b, score)", args=args
+        )
 
     # -- E3: ANN demo -----------------------------------------------------
 
@@ -308,3 +334,10 @@ class ProductSearchEngine:
             F.col("review_idx").alias("vec_id"), "embedding"
         )
         return ann_tradeoff(emb, **kw)
+
+
+def _hit_rows(hits: DataFrame) -> DataFrame:
+    """exact_knn's (query_id, neighbor_id, score, rank, *HIT_PAYLOAD) rows
+    of one query as the API's (rank, id, score, *HIT_PAYLOAD), in rank
+    order."""
+    return hits.select("rank", F.col("neighbor_id").alias("id"), "score", *HIT_PAYLOAD)

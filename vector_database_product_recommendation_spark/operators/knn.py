@@ -57,10 +57,12 @@ def exact_knn(
     exclude_self: bool = False,
     round_decimals: int = 6,
     query_rows: list | None = None,
+    payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """Batch exact KNN: for every query row, the top-k corpus rows by dot.
 
-    Returns (query_id, neighbor_id, score, rank), rank 1..k per query.
+    Returns (query_id, neighbor_id, score, rank, *payload), rank 1..k per
+    query.
     `exclude_self` drops corpus rows whose id equals the query id — the
     reference's item-to-item self-exclusion (app.py:227-228) done as a
     filter BEFORE the limit (SURVEY.md section 2.9.4), not a k+1 overfetch.
@@ -69,12 +71,22 @@ def exact_knn(
     reusing one query batch across calls (the serving loop; the reference
     encodes its query batch once, app.py:169-171) pass them to skip the
     per-call collect job, exactly like ivf_knn.
+
+    ``payload``: corpus columns returned on each hit row, the way a vector
+    store returns a point's payload with its score. They ride through the
+    task-local top-k and the merge untouched (nulls included), so a caller
+    needs no join back to the corpus. With the default ``()`` the plan and
+    output are those of a plain top-k.
     """
     q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
     qid_dtype = queries.schema[query_id].dataType.simpleString()
     nid_dtype = corpus.schema[corpus_id].dataType.simpleString()
-    out_schema = (
-        f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double, rank int"
+    out_cols = ["query_id", "neighbor_id", "score", "rank", *payload]
+    if set(out_cols[:4]) & set(payload):
+        raise ValueError(f"payload {payload!r} shadows an output column")
+    out_schema = ", ".join(
+        [f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double, rank int"]
+        + [f"`{c}` {corpus.schema[c].dataType.simpleString()}" for c in payload]
     )
     k_local = k
     excl = exclude_self
@@ -95,6 +107,7 @@ def exact_knn(
         cand_q: list[np.ndarray] = []
         cand_n: list[np.ndarray] = []
         cand_s: list[np.ndarray] = []
+        cand_p: list[pd.DataFrame] = []  # payload of each kept candidate
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -118,6 +131,8 @@ def exact_knn(
             cand_q.append(cols)
             cand_n.append(ids[rows])
             cand_s.append(scores[rows, cols])
+            if payload:
+                cand_p.append(pdf[list(payload)].iloc[rows])
         if not cand_q:
             return
         cq = np.concatenate(cand_q)
@@ -130,7 +145,7 @@ def exact_knn(
         starts = np.cumsum(counts) - counts  # empty-safe: a task may keep no row
         rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
         sel = rank <= k_local
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "query_id": q_ids[cq[sel]],
                 "neighbor_id": cn[sel],
@@ -138,8 +153,12 @@ def exact_knn(
                 "rank": rank[sel].astype(np.int32),
             }
         )
+        if payload:
+            hit_payload = pd.concat(cand_p).iloc[order[sel]].reset_index(drop=True)
+            out = pd.concat([out, hit_payload], axis=1)
+        yield out
 
-    narrowed = corpus.select(corpus_id, corpus_vec)
+    narrowed = corpus.select(corpus_id, corpus_vec, *payload)
     partial = narrowed.mapInPandas(score_partition, out_schema)
     if narrowed.rdd.getNumPartitions() == 1:
         # single scan task -> the task-local ranks ARE global; the merge
@@ -152,6 +171,7 @@ def exact_knn(
         partial.drop("rank")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
+        .select(*out_cols)
         .orderBy("query_id", "rank")
     )
 
@@ -218,11 +238,12 @@ def item_to_item(
     *,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
+    payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """E2 (app.py:221-241): the query vector comes FROM the corpus —
     look up the item's vector, score everyone else, top-k, never return
     the item itself. An ``item_id`` missing from the corpus raises
-    ValueError naming it."""
+    ValueError naming it. ``payload`` as in exact_knn."""
     q = corpus.filter(F.col(corpus_id) == F.lit(item_id)).select(
         F.col(corpus_id).alias("query_id"), F.col(corpus_vec).alias("query_vec")
     )
@@ -237,6 +258,7 @@ def item_to_item(
         corpus_vec=corpus_vec,
         exclude_self=True,
         query_rows=rows,
+        payload=payload,
     )
 
 
