@@ -7,6 +7,9 @@ same ranks) — the reference's own ground-truth construction.
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -16,7 +19,9 @@ from vector_database_product_recommendation_spark.operators.ivf import (
     assign_clusters,
     ivf_knn,
     knn,
+    read_ivf_store,
     train_kmeans_centroids,
+    write_ivf_store,
 )
 from vector_database_product_recommendation_spark.operators.knn import exact_knn
 from vector_database_product_recommendation_spark.sources.tables import load_table
@@ -132,3 +137,55 @@ def test_ivf_task_holding_only_the_query_row(spark):
     assert ivf_knn(assigned, cents, q, 2, nprobe=1, exclude_self=True).collect() == []
     two = ivf_knn(assigned, cents, q, 2, nprobe=2, exclude_self=True).collect()
     assert [(r["neighbor_id"], r["rank"]) for r in two] == [(1, 1)]
+
+
+def plan_of(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_ivf_knn_single_partition_elides_merge_window(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings").coalesce(1)
+    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    assigned = assign_clusters(emb, cents)
+    plan = plan_of(ivf_knn(assigned, cents, _queries(emb), 5, nprobe=2))
+    # kernel emits task-local ranks; a one-task pool needs no merge window
+    assert "hashpartitioning" not in plan, plan
+    assert "Window" not in plan.replace("WindowGroupLimit", ""), plan
+
+
+def test_ivf_knn_multi_partition_matches_single(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    one = assign_clusters(emb.coalesce(1), cents)
+    many = assign_clusters(emb.repartition(7), cents)
+    a = ivf_knn(one, cents, _queries(emb), 5, nprobe=3).collect()
+    b = ivf_knn(many, cents, _queries(emb), 5, nprobe=3).collect()
+    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    assigned = assign_clusters(emb, cents)
+    q = _queries(emb)
+    rows = cents.orderBy("cluster_id").collect()
+    a = ivf_knn(assigned, cents, q, 5, nprobe=2).collect()
+    b = ivf_knn(assigned, cents, q, 5, nprobe=2, centroid_rows=rows).collect()
+    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+def test_ivf_knn_store_probe_statically_pruned(spark, sf_dir, tmp_path):
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    assigned = assign_clusters(emb, cents)
+    path = str(tmp_path / "store")
+    write_ivf_store(assigned, path)
+    store = read_ivf_store(spark, path)
+    plan = plan_of(ivf_knn(store, cents, _queries(emb), 5, nprobe=2))
+    # the isin cluster filter must reach the store scan as partition pruning
+    assert "PartitionFilters" in plan
+    pf_line = plan.split("PartitionFilters")[1].splitlines()[0]
+    assert "cluster_id" in pf_line, plan

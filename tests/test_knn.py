@@ -4,6 +4,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import DataFrame, Window
 
 from vector_database_product_recommendation_spark.functions.vectors import dot
@@ -12,6 +14,7 @@ from vector_database_product_recommendation_spark.operators.knn import (
     exact_knn,
     item_to_item,
     pairwise_similarity,
+    rank_topk,
 )
 
 
@@ -145,6 +148,42 @@ def test_exact_knn_payload_on_merge_path(spark, exclude_self):
         "struct<query_id:bigint,neighbor_id:bigint,score:double,rank:int>"
     )
     assert [tuple(r) for r in default.collect()] == [g[:4] for g in got]
+
+
+# (query index, neighbor id, score) rows: scores come from five values and
+# ids from a small range, so ties on score (and on whole rows) are heavy
+_CANDIDATES = st.lists(
+    st.tuples(
+        st.integers(0, 3),
+        st.integers(0, 20),
+        st.sampled_from([-1.0, -0.5, 0.0, 0.25, 1.0]),
+    ),
+    max_size=40,
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(rows=_CANDIDATES, k=st.integers(1, 12))
+@example(rows=[], k=1)
+@example(rows=[(0, 5, 0.5), (0, 3, 0.5), (1, 2, 0.0)], k=1)
+@example(rows=[(2, 1, 0.0), (2, 0, 0.0), (0, 9, 1.0)], k=40)
+def test_rank_topk_matches_pandas_oracle(rows, k):
+    """The shared task-local selector keeps, per query, the first k rows
+    under (score desc, id asc) with 1-based ranks, and ``idx`` points at
+    those rows of the input arrays."""
+    cq = np.array([r[0] for r in rows], dtype=np.int64)
+    cn = np.array([r[1] for r in rows], dtype=np.int64)
+    cs = np.array([r[2] for r in rows], dtype=np.float64)
+    idx, rank = rank_topk(cq, cn, cs, k)
+    got = list(zip(cq[idx].tolist(), cn[idx].tolist(), cs[idx].tolist(), rank.tolist()))
+
+    df = pd.DataFrame({"q": cq, "n": cn, "s": cs})
+    df = df.sort_values(["q", "s", "n"], ascending=[True, False, True])
+    df["rank"] = df.groupby("q").cumcount() + 1
+    df = df[df["rank"] <= k]
+    want = list(zip(df["q"].tolist(), df["n"].tolist(), df["s"].tolist(), df["rank"].tolist()))
+    assert got == want
+    assert len(set(idx.tolist())) == len(idx)  # each input row kept at most once
 
 
 def test_item_to_item_excludes_self(spark, emb):

@@ -3,7 +3,11 @@ compression plumbing."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 import pyspark.sql.functions as F
+import pytest
 
 from vector_database_product_recommendation_spark.operators.knn import exact_knn
 from vector_database_product_recommendation_spark.operators.pq import encode_pq, pq_knn, train_pq
@@ -72,3 +76,58 @@ def test_sq8_knn_matches_exact_top1(spark, sf_dir):
     exact = item_to_item(emb, 7, k=5)
     top_exact = exact.orderBy(F.desc("score"), F.asc("neighbor_id")).first()
     assert sq[0]["vec_id"] == top_exact["neighbor_id"]
+
+
+def test_pq_knn_empty_query_batch_raises(spark):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    books = train_pq(emb, m=8, ksub=16)
+    codes = encode_pq(emb, books)
+    empty = _queries(emb).limit(0)
+    for kw in ({}, {"emb": emb}):
+        # raised while building the query, not inside a scoring task
+        with pytest.raises(ValueError, match="empty query batch"):
+            pq_knn(codes, books, empty, 5, **kw)
+
+
+def plan_of(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _fixture(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    books = train_pq(emb)
+    codes = encode_pq(emb, books)
+    q = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    return emb, books, codes, q
+
+
+def test_pq_knn_single_partition_elides_adc_merge_window(spark, sf_dir):
+    emb, books, codes, q = _fixture(spark, sf_dir)
+    plan = plan_of(pq_knn(codes.coalesce(1), books, q, 5))
+    # kernel emits task-local exact ranks; a one-task code table needs no
+    # merge window (and therefore no hashpartitioning exchange at all)
+    assert "hashpartitioning" not in plan, plan
+    assert "Window" not in plan.replace("WindowGroupLimit", ""), plan
+
+
+def test_pq_knn_multi_partition_matches_single(spark, sf_dir):
+    emb, books, codes, q = _fixture(spark, sf_dir)
+    one = codes.coalesce(1)
+    many = codes.repartition(7)
+    for kw in ({}, {"emb": emb, "refine_factor": 3}):
+        a = pq_knn(one, books, q, 5, **kw).collect()
+        b = pq_knn(many, books, q, 5, **kw).collect()
+        assert [tuple(r) for r in a] == [tuple(r) for r in b], kw
+
+
+def test_pq_knn_refine_broadcasts_candidates_not_corpus(spark, sf_dir):
+    emb, books, codes, q = _fixture(spark, sf_dir)
+    plan = plan_of(pq_knn(codes.coalesce(1), books, q, 5, emb=emb, refine_factor=3))
+    # the corpus scan must not feed an exchange: candidates broadcast onto it
+    assert "BroadcastHashJoin" in plan
+    assert plan.count("Exchange hashpartitioning") <= 1, plan

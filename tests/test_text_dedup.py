@@ -26,7 +26,9 @@ from vector_database_product_recommendation_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
     simhash_signatures,
+    winnow_fingerprints_df,
 )
+from vector_database_product_recommendation_spark.sources.tables import load_table
 
 
 def _docs(spark, rows):
@@ -308,3 +310,17 @@ def test_embedding_near_dup_guard_raises_beyond_max_rows(spark):
         embedding_near_dup(emb, max_rows=5)
     # at or under the cap it still runs
     assert embedding_near_dup(emb, max_rows=6).count() > 0
+
+
+def test_ngram_jaccard_sort_param_same_rows(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").limit(300)
+    srt = ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    uns = ngram_jaccard_pairs(docs, threshold=0.5, sort=False).collect()
+    assert sorted(map(tuple, uns)) == [tuple(r) for r in srt]
+
+
+def test_winnow_sort_param_same_rows(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents").limit(200)
+    srt = winnow_fingerprints_df(docs).collect()
+    uns = winnow_fingerprints_df(docs, sort=False).collect()
+    assert sorted(map(tuple, uns)) == [tuple(r) for r in srt]

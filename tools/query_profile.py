@@ -1,11 +1,11 @@
-"""Per-query isolation profiler for the r21 optimization round.
+"""Per-query isolation profiler.
 
 Times each named query with the noop sink (guide section 1.4 — computes
 every column, no driver shipping) after one warm run, and dumps
-``.explain('formatted')`` to plans/r21/<name>_<tag>.txt.
+``.explain('formatted')`` to plans/<subdir>/<name>_<tag>.txt.
 
-Usage: python tools/profile_r21.py <tag> <query> [<query> ...]
-       python tools/profile_r21.py <tag> --plans-only <query> ...
+Usage: python tools/query_profile.py <subdir> <tag> <query> [<query> ...]
+       python tools/query_profile.py <subdir> <tag> --plans-only <query> ...
 """
 
 from __future__ import annotations
@@ -22,8 +22,8 @@ RUNS = int(os.environ.get("PROFILE_RUNS", "3"))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    args = sys.argv[2:]
+    subdir, tag = sys.argv[1], sys.argv[2]
+    args = sys.argv[3:]
     plans_only = "--plans-only" in args
     names = [a for a in args if not a.startswith("--")]
 
@@ -31,9 +31,10 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    spark = get_spark("profile-r21")
+    spark = get_spark(f"profile-{subdir}")
     qmap = entrymod.queries()
-    os.makedirs(os.path.join(REPO, "plans", "r21"), exist_ok=True)
+    out_dir = os.path.join(REPO, "plans", subdir)
+    os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
         fn = qmap[name]
@@ -44,7 +45,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
-        with open(os.path.join(REPO, "plans", "r21", f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
         if plans_only:
             print(f"{name}: plan written (build {t_build:.2f}s)")

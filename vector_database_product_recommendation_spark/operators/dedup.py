@@ -13,8 +13,8 @@ hashes via ``functions.text.hash60``):
 Scale notes (100 TB):
 - signatures (minhash, simhash, fingerprints) are ROW-LOCAL: computed in
   Arrow-batched mapInPandas kernels (vectorized numpy int math; the
-  equivalent pure-Column folds `_minhash_col`/`simhash_col` are kept for
-  expression composability but run ~20x slower interpreted). No shuffle.
+  pure-Column higher-order folds measured ~20x slower interpreted). No
+  shuffle.
   The only shuffles are the pair-finding joins, whose keys
   (shingle / band signature / simhash chunk) are engineered to be sparse.
 - the inverted-index join caps shingle document-frequency (``max_df``):
@@ -34,16 +34,10 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.lifetime import pin
-from vector_database_product_recommendation_spark.functions.text import (
-    hash60,
-    tokens_ws,
-    word_shingles,
-)
-
-_MAXLONG = (1 << 62) - 1
+from vector_database_product_recommendation_spark.functions.text import tokens_ws
 
 # MinHash permutation family: one md5-based hash per shingle, then k affine
 # permutations h -> (a*h + b) mod P over the Mersenne prime P = 2^31 - 1.
@@ -79,24 +73,10 @@ def exact_dedup_groups(
     )
 
 
-def _doc_shingles(
-    docs: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(doc_id, shingles array<string>) for non-empty docs.
-
-    Pure-Column form (functions.text.word_shingles); kept for expression
-    composability. The dedup pipelines below use the Arrow kernel twin
-    `_doc_shingles_py` — the interpreted transform/slice/array_join chain
-    costs ~10s per 5000 docs vs <1s in Python string ops."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"), word_shingles(text_col, n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
 def _shingles_py(text: str, n: int) -> list[str]:
-    """Python twin of word_shingles: lowercased whitespace tokens, distinct
-    word n-grams in first-occurrence order, whole-text shingle when the doc
-    is shorter than n tokens."""
+    """Python form of functions.text.word_shingles: lowercased whitespace
+    tokens, distinct word n-grams in first-occurrence order, whole-text
+    shingle when the doc is shorter than n tokens."""
     toks = (text or "").lower().split()
     if not toks:
         return []
@@ -107,7 +87,11 @@ def _shingles_py(text: str, n: int) -> list[str]:
 def _doc_shingles_py(
     docs: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """Arrow-kernel twin of _doc_shingles (identical output values)."""
+    """(doc_id, shingles array<string>) for non-empty docs, one Arrow pass.
+
+    Same values as ``word_shingles`` over the text column; the interpreted
+    transform/slice/array_join chain costs ~10s per 5000 docs vs <1s in
+    Python string ops."""
     src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     dtype = src.schema["doc_id"].dataType.simpleString()
 
@@ -202,38 +186,16 @@ def ngram_jaccard_pairs(
     return out.orderBy("id_a", "id_b") if sort else out
 
 
-def _minhash_col(shingles: Column, num_hashes: int) -> Column:
-    """array<bigint> of `num_hashes` minhashes — a row-local fold over the
-    shingle array: base = hash60(shingle) mod P computed ONCE per shingle,
-    then mh[s] = min over shingles of (a_s*base + b_s) mod P. Pure
-    expression -> whole-stage codegen, zero shuffle, one md5 per shingle."""
-    a_const, b_const = _perm_constants(num_hashes)
-    a_arr = F.array(*[F.lit(x) for x in a_const])
-    b_arr = F.array(*[F.lit(x) for x in b_const])
-    hs = F.transform(shingles, lambda sh: hash60(sh) % F.lit(_MERSENNE_P))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda s: F.aggregate(
-            hs,
-            F.lit(_MAXLONG),
-            lambda acc, h: F.least(
-                acc,
-                (F.element_at(a_arr, s + 1) * h + F.element_at(b_arr, s + 1))
-                % F.lit(_MERSENNE_P),
-            ),
-        ),
-    )
-
-
 def _md5_60(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
 def _minhash_np(shingles, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Numpy twin of _minhash_col — identical integer arithmetic, one
-    vectorized (k, n_shingles) permutation table instead of interpreted
-    per-element lambdas (the JVM higher-order-function fold is ~20x
-    slower; measured 33s -> 2s for 5000 docs at sf0.1)."""
+    """``num_hashes`` minhashes of one doc: base = hash60(shingle) mod P
+    computed ONCE per shingle, then mh[s] = min over shingles of
+    (a_s*base + b_s) mod P, as one vectorized (k, n_shingles) permutation
+    table (an interpreted JVM higher-order-function fold measured ~20x
+    slower: 33s -> 2s for 5000 docs at sf0.1)."""
     hs = np.fromiter((_md5_60(s) for s in shingles), dtype=np.int64) % _MERSENNE_P
     return ((a[:, None] * hs[None, :] + b[:, None]) % _MERSENNE_P).min(axis=1)
 
@@ -363,39 +325,15 @@ def minhash_lsh_pairs(
 _SIMHASH_BITS = 60  # hash60 yields 60-bit values; stay within them
 
 
-def simhash_col(text: Column | str, bits: int = _SIMHASH_BITS) -> Column:
-    """Row-local 60-bit SimHash of the whitespace-token multiset (token
-    frequency acts as the weight, the classic Charikar construction):
-    bit b is set iff sum over tokens of (+1 if bit b of hash60(token) else
-    -1) is positive."""
-    toks = tokens_ws(text)
-    hs = F.transform(toks, lambda t: hash60(t))
-    pows = F.array(*[F.lit(1 << b) for b in range(bits)])
-    vote = F.transform(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        lambda b: F.aggregate(
-            hs,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(F.element_at(pows, b + 1)) != 0, 1).otherwise(-1),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            vote, pows, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def simhash_signatures(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, simhash) — row-local, no shuffle at all.
 
-    Computed by an Arrow/numpy kernel (bit-identical to `simhash_col`; the
-    interpreted higher-order fold costs ~60x T lambda evals per row)."""
+    Charikar SimHash of the whitespace-token multiset (token frequency is
+    the weight): bit b is set iff sum over tokens of (+1 if bit b of
+    hash60(token) else -1) is positive. Computed by an Arrow/numpy kernel
+    (an interpreted higher-order fold costs ~60x T lambda evals per row)."""
     src = docs.select(
         F.col(id_col).alias("doc_id"), tokens_ws(text_col).alias("toks")
     ).filter(F.size("toks") > 0)

@@ -26,7 +26,14 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
+
+from vector_database_product_recommendation_spark.operators.knn import (
+    _query_batch,
+    exact_knn,
+    merge_topk,
+    rank_topk,
+)
 
 
 def train_kmeans_centroids(
@@ -240,26 +247,23 @@ def ivf_knn(
     semi-join becomes partition pruning — only nprobe/nlist of the data is
     read per query batch.
 
-    Like exact_knn, the scoring kernel keeps only its task-local top-k per
-    query (score rounded BEFORE selection, ties by neighbor id), so the
-    merge shuffle moves O(q * k * n_tasks) rows instead of every scored
-    candidate — at 100 TB the probed candidate set is nprobe/nlist of the
-    corpus, which must never cross an exchange. A single-task candidate
-    scan (the cached serving layout) elides the merge window entirely.
+    The scoring kernel rounds scores BEFORE selection and keeps only its
+    task-local top-k per query (``knn.rank_topk``, per Arrow batch and per
+    task); ``knn.merge_topk`` merges the tasks. So the merge shuffle moves
+    O(q * k * n_tasks) rows instead of every scored candidate — at 100 TB
+    the probed candidate set is nprobe/nlist of the corpus, which must
+    never cross an exchange.
 
     ``query_rows``: pre-collected (query_id, query_vec) rows — callers
     probing the same batch repeatedly (the nprobe sweep) pass them once
     instead of re-running the collect job per call. ``centroid_rows``:
     same for the (tiny) centroid table, ordered by cluster_id.
     """
-    spark = assigned.sparkSession
     cent = centroid_rows if centroid_rows is not None else centroids.orderBy("cluster_id").collect()
     cmat = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
     cids = np.array([r["cluster_id"] for r in cent])
 
-    qrows = query_rows if query_rows is not None else queries.select(query_id, query_vec).collect()
-    if not qrows:
-        raise ValueError("empty query batch")
+    q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
     # cluster -> row indices of the queries that probe it. The probe map
     # ships in the task closure (it is O(q * nprobe) ints) instead of a
     # broadcast-joined table: corpus rows then cross the Python boundary
@@ -267,8 +271,7 @@ def ivf_knn(
     # plain pushable isin — native PARTITION PRUNING on the ivf_store
     # layout with no runtime (DPP) machinery needed.
     probe_map: dict[int, list[int]] = {}
-    for qi, r in enumerate(qrows):
-        qv = np.asarray(r[1], dtype=np.float64)
+    for qi, qv in enumerate(q_mat):
         sims = cmat @ qv
         # deterministic centroid ranking: (-sim, cluster_id)
         top = cids[np.lexsort((cids, -sims))[: min(nprobe, len(cids))]]
@@ -278,26 +281,11 @@ def ivf_knn(
     # Score candidates with a vectorized Arrow kernel — the query batch is
     # already on the driver. Per batch, rows group by cluster and one BLAS
     # matmul scores each cluster's rows against exactly the queries that
-    # probed it. Each task emits only its local top-k per query (exact
-    # task-level (score desc, id asc) ordering after rounding — identical
-    # selection semantics to the global window).
-    q_ids = np.array([r[0] for r in qrows])
-    q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
+    # probed it.
     qid_dtype = queries.schema[query_id].dataType.simpleString()
     nid_dtype = assigned.schema[corpus_id].dataType.simpleString()
     dec = round_decimals
     excl = exclude_self
-    k_local = k
-
-    def _topk(cq: np.ndarray, cn: np.ndarray, cs: np.ndarray):
-        """Exact (query, score desc, id asc) ranks; returns arrays + rank."""
-        order = np.lexsort((cn, -cs, cq))
-        cq, cn, cs = cq[order], cn[order], cs[order]
-        uniq, counts = np.unique(cq, return_counts=True)
-        starts = np.cumsum(counts) - counts  # empty-safe: a task may keep no row
-        rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
-        sel = rank <= k_local
-        return cq[sel], cn[sel], cs[sel], rank[sel]
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cand_q: list[np.ndarray] = []
@@ -332,20 +320,21 @@ def ivf_knn(
                 qa, na, s = qa[keep], na[keep], s[keep]
             # per-batch prune to the batch-local top-k (exact superset of
             # the task-level top-k) so task memory stays O(q * k * batches)
-            qa, na, s, _ = _topk(qa, na, s)
-            cand_q.append(qa)
-            cand_n.append(na)
-            cand_s.append(s)
+            idx, _ = rank_topk(qa, na, s, k)
+            cand_q.append(qa[idx])
+            cand_n.append(na[idx])
+            cand_s.append(s[idx])
         if not cand_q:
             return
-        cq, cn, cs, rank = _topk(
-            np.concatenate(cand_q), np.concatenate(cand_n), np.concatenate(cand_s)
-        )
+        cq = np.concatenate(cand_q)
+        cn = np.concatenate(cand_n)
+        cs = np.concatenate(cand_s)
+        idx, rank = rank_topk(cq, cn, cs, k)
         yield pd.DataFrame(
             {
-                "query_id": q_ids[cq],
-                "neighbor_id": cn,
-                "score": cs,
+                "query_id": q_ids[cq[idx]],
+                "neighbor_id": cn[idx],
+                "score": cs[idx],
                 "rank": rank.astype(np.int32),
             }
         )
@@ -357,17 +346,8 @@ def ivf_knn(
         score,
         f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double, rank int",
     )
-    if pool.rdd.getNumPartitions() == 1:
-        # one scan task -> task-local ranks ARE global (same elision as
-        # exact_knn); no exchange at all beyond the output sort
-        return partial.orderBy("query_id", "rank")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        partial.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    single = pool.rdd.getNumPartitions() == 1
+    return merge_topk(partial, k, single_task=single).orderBy("query_id", "rank")
 
 
 def knn(
@@ -386,8 +366,6 @@ def knn(
     small corpora, IVF where scale warrants — the reference's footnote
     heuristic (app.py:442-445) made explicit, mirroring Spark's own
     broadcast-threshold idea."""
-    from vector_database_product_recommendation_spark.operators.knn import exact_knn
-
     n = None
     if method == "auto":
         n = corpus.count()  # counted once; reused by the IVF branch below

@@ -45,6 +45,53 @@ def _query_batch(
     return ids, mat
 
 
+def rank_topk(
+    cq: np.ndarray, cn: np.ndarray, cs: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Task-local top-k of scored candidates under the one retrieval order
+    (query, score desc, neighbor id asc), shared by the exact, IVF and PQ
+    kernels.
+
+    ``cq``/``cn``/``cs`` are parallel arrays of query index, neighbor id
+    and score. Returns ``(idx, rank)``: positions into those arrays of the
+    kept rows, in that order, and their 1-based rank within the query
+    (``rank <= k``). Callers gather any parallel column with ``idx``.
+    Empty-safe: a task may keep no row.
+    """
+    order = np.lexsort((cn, -cs, cq))
+    # np.unique sorts, so its groups come in the lexsort's primary order
+    _, counts = np.unique(cq, return_counts=True)
+    starts = np.cumsum(counts) - counts
+    rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
+    sel = rank <= k
+    return order[sel], rank[sel]
+
+
+def merge_topk(
+    partial: DataFrame, k: int, *, single_task: bool, score: str = "score"
+) -> DataFrame:
+    """Global top-k from the kernels' task-local top-k rows.
+
+    A single scan task's ranks ARE global, so ``partial`` comes back as is:
+    the merge window (an exchange + sort over k rows/query/task) would be a
+    no-op. The serving regime (one cached partition per ~25k vectors,
+    artifacts.py) hits this constantly. Otherwise the rows re-rank in a
+    ``row_number`` window under (``score`` desc, neighbor_id asc), keeping
+    ``partial.columns`` in their order. Task-local selection under that
+    total order provably contains the global top-k, so the result is
+    deterministic and independent of batch or partition boundaries.
+    """
+    if single_task:
+        return partial
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        partial.drop("rank")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*partial.columns)
+    )
+
+
 def exact_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -72,6 +119,9 @@ def exact_knn(
     encodes its query batch once, app.py:169-171) pass them to skip the
     per-call collect job, exactly like ivf_knn.
 
+    Each task keeps a dense ``np.partition`` threshold superset of its
+    top-k, ranks it with ``rank_topk`` and ``merge_topk`` merges the tasks.
+
     ``payload``: corpus columns returned on each hit row, the way a vector
     store returns a point's payload with its score. They ride through the
     task-local top-k and the merge untouched (nulls included), so a caller
@@ -88,7 +138,6 @@ def exact_knn(
         [f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double, rank int"]
         + [f"`{c}` {corpus.schema[c].dataType.simpleString()}" for c in payload]
     )
-    k_local = k
     excl = exclude_self
     dec = round_decimals
 
@@ -119,7 +168,7 @@ def exact_knn(
             if excl:
                 invalid = ids[:, None] == q_ids[None, :]  # (n, q)
                 scores[invalid] = -np.inf
-            kk = min(k_local, n)
+            kk = min(k, n)
             if n > kk:
                 thr = np.partition(scores, n - kk, axis=0)[n - kk]  # (q,)
                 keep = scores >= thr
@@ -138,42 +187,24 @@ def exact_knn(
         cq = np.concatenate(cand_q)
         cn = np.concatenate(cand_n)
         cs = np.concatenate(cand_s)
-        # one exact task-level ordering: (query, score desc, neighbor asc)
-        order = np.lexsort((cn, -cs, cq))
-        cq, cn, cs = cq[order], cn[order], cs[order]
-        uniq, counts = np.unique(cq, return_counts=True)
-        starts = np.cumsum(counts) - counts  # empty-safe: a task may keep no row
-        rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
-        sel = rank <= k_local
+        idx, rank = rank_topk(cq, cn, cs, k)
         out = pd.DataFrame(
             {
-                "query_id": q_ids[cq[sel]],
-                "neighbor_id": cn[sel],
-                "score": cs[sel],
-                "rank": rank[sel].astype(np.int32),
+                "query_id": q_ids[cq[idx]],
+                "neighbor_id": cn[idx],
+                "score": cs[idx],
+                "rank": rank.astype(np.int32),
             }
         )
         if payload:
-            hit_payload = pd.concat(cand_p).iloc[order[sel]].reset_index(drop=True)
+            hit_payload = pd.concat(cand_p).iloc[idx].reset_index(drop=True)
             out = pd.concat([out, hit_payload], axis=1)
         yield out
 
     narrowed = corpus.select(corpus_id, corpus_vec, *payload)
     partial = narrowed.mapInPandas(score_partition, out_schema)
-    if narrowed.rdd.getNumPartitions() == 1:
-        # single scan task -> the task-local ranks ARE global; the merge
-        # window (an exchange + sort over k rows/query/task) is a no-op —
-        # elide it. The serving regime (one cached corpus partition per
-        # ~25k vectors, artifacts.py) hits this constantly.
-        return partial.orderBy("query_id", "rank")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        partial.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
-        .orderBy("query_id", "rank")
-    )
+    single = narrowed.rdd.getNumPartitions() == 1
+    return merge_topk(partial, k, single_task=single).orderBy("query_id", "rank")
 
 
 def exact_scores(

@@ -38,6 +38,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from vector_database_product_recommendation_spark.operators.knn import (
+    _query_batch,
+    merge_topk,
+    rank_topk,
+)
+
 
 def _lloyd(x: np.ndarray, k: int, *, iters: int = 25, seed: int = 42) -> np.ndarray:
     """Plain Lloyd k-means on a (n, d) sample -> (k', d) centroids.
@@ -157,20 +163,11 @@ def pq_knn(
 
     Per task: for each query, an (m x ksub) lookup table of subvector
     dots, then scores = sum of m fancy-indexed lookups over the code
-    matrix. The kernel emits only its task-local exact top-``fetch`` per
-    query under the total order (adc_score DESC, neighbor_id ASC) — the
-    same ordering the merge window uses — so the merge shuffle moves
-    O(tasks * queries * fetch) rows instead of every scored candidate,
-    and a single-task code table (the cached serving layout) elides the
-    merge window entirely: task-local ranks ARE global. Exact task-local
-    selection under a total order provably contains the global top-fetch
-    (any globally top-ranked candidate ranks at least as high within its
-    own task), and because the order is total (ADC ties break by
-    neighbor_id) the result is deterministic and independent of batch or
-    partition boundaries — unlike the previous per-batch raw
-    ``argpartition`` prune, whose tie handling at the fetch boundary was
-    arbitrary. (Verified value-identical on the test corpora at
-    sf0.001/0.01/0.1 — no ADC tie straddles a fetch boundary there.)
+    matrix. ADC scores are NOT rounded before selection. The kernel keeps
+    only its task-local top-``fetch`` per query (``knn.rank_topk``, per
+    Arrow batch and per task, order (adc_score desc, neighbor_id asc))
+    and ``knn.merge_topk`` merges the tasks, so the merge shuffle moves
+    O(tasks * queries * fetch) rows instead of every scored candidate.
 
     If ``emb`` is given, the ADC top ``k*refine_factor`` candidates are
     re-scored exactly against the full-precision vectors (the tiny
@@ -179,35 +176,17 @@ def pq_knn(
     score, rank) with exact scores, comparable to exact_knn's.
     """
     sess = codes_df.sparkSession
-    qrows = queries.select(
-        F.col("query_id"), F.col("query_vec").cast("array<double>")
-    ).collect()
-    qids = [int(r["query_id"]) for r in qrows]
-    qmat = np.asarray([r["query_vec"] for r in qrows], dtype=np.float64)
-    bc_q = sess.sparkContext.broadcast(qmat.tolist())
-    bc_books = sess.sparkContext.broadcast([c.tolist() for c in codebooks])
-    bc_qids = sess.sparkContext.broadcast(qids)
+    q_ids, q_mat = _query_batch(queries, "query_id", "query_vec", None)
+    q_ids = q_ids.astype(np.int64)
+    books = [np.asarray(c, dtype=np.float64) for c in codebooks]
     fetch = k * refine_factor if emb is not None else k
-    m = len(codebooks)
-
-    def _topfetch(cq: np.ndarray, cn: np.ndarray, cs: np.ndarray):
-        """Exact (query, adc desc, id asc) ranks; keep rank <= fetch."""
-        order = np.lexsort((cn, -cs, cq))
-        cq, cn, cs = cq[order], cn[order], cs[order]
-        uniq, counts = np.unique(cq, return_counts=True)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        rank = np.arange(len(cq)) - np.repeat(starts, counts) + 1
-        sel = rank <= fetch
-        return cq[sel], cn[sel], cs[sel], rank[sel]
+    m = len(books)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books = [np.asarray(c, dtype=np.float64) for c in bc_books.value]
-        q = np.asarray(bc_q.value, dtype=np.float64)
-        ids = np.asarray(bc_qids.value, dtype=np.int64)
         dsub = books[0].shape[1]
         # luts[qi] is (m, ksub_j) ragged -> keep as list per subspace
-        luts = [q[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-        nq = len(q)
+        luts = [q_mat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
+        nq = len(q_mat)
         cand_q: list[np.ndarray] = []
         cand_n: list[np.ndarray] = []
         cand_s: list[np.ndarray] = []
@@ -221,24 +200,24 @@ def pq_knn(
                 scores += luts[j][:, codes[:, j]]  # (nq, n) lookup-add
             # batch-local exact top-fetch (a superset of the task-level
             # top-fetch) bounds task memory at O(queries * fetch * batches)
-            bq, bn, bs, _ = _topfetch(
-                np.repeat(np.arange(nq), len(codes)),
-                np.tile(nid, nq),
-                scores.ravel(),
-            )
-            cand_q.append(bq)
-            cand_n.append(bn)
-            cand_s.append(bs)
+            bq = np.repeat(np.arange(nq), len(codes))
+            bn = np.tile(nid, nq)
+            bs = scores.ravel()
+            idx, _ = rank_topk(bq, bn, bs, fetch)
+            cand_q.append(bq[idx])
+            cand_n.append(bn[idx])
+            cand_s.append(bs[idx])
         if not cand_q:
             return
-        cq, cn, cs, rank = _topfetch(
-            np.concatenate(cand_q), np.concatenate(cand_n), np.concatenate(cand_s)
-        )
+        cq = np.concatenate(cand_q)
+        cn = np.concatenate(cand_n)
+        cs = np.concatenate(cand_s)
+        idx, rank = rank_topk(cq, cn, cs, fetch)
         yield pd.DataFrame(
             {
-                "query_id": ids[cq],
-                "neighbor_id": cn,
-                "adc_score": cs,
+                "query_id": q_ids[cq[idx]],
+                "neighbor_id": cn[idx],
+                "adc_score": cs[idx],
                 "rank": rank.astype(np.int32),
             }
         )
@@ -246,19 +225,12 @@ def pq_knn(
     partial = codes_df.select(id_col, "codes").mapInPandas(
         score, "query_id long, neighbor_id long, adc_score double, rank int"
     )
-    if codes_df.rdd.getNumPartitions() == 1:
-        # one scan task -> task-local ranks ARE global (same elision as
-        # ivf_knn/exact_knn); no merge exchange at all
-        cand = partial
-    else:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("adc_score"), F.asc("neighbor_id")
-        )
-        cand = (
-            partial.drop("rank")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= fetch)
-        )
+    cand = merge_topk(
+        partial,
+        fetch,
+        single_task=codes_df.rdd.getNumPartitions() == 1,
+        score="adc_score",
+    )
     if emb is None:
         return cand.select(
             "query_id",
@@ -277,7 +249,7 @@ def pq_knn(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
     )
     qdf = sess.createDataFrame(
-        [(i, v) for i, v in zip(qids, qmat.tolist())],
+        list(zip(q_ids.tolist(), q_mat.tolist())),
         "query_id long, qv array<double>",
     )
     rescored = (

@@ -42,33 +42,20 @@ from vector_database_product_recommendation_spark.lifetime import pin
 TOKEN_PATTERN = r"\w\w+"
 
 
-def _doc_terms(docs: DataFrame, id_col: str, text_col: str, stopwords) -> DataFrame:
-    """(doc_id, term) one row per token occurrence, stop words removed.
-
-    Pure-Column form, kept as the ANSI-SQL-expressible reference (it is
-    the shape the DuckDB oracles mirror); the hot paths use the
-    value-identical `_doc_term_counts` kernel below."""
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), F.lit(0))
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(toks).alias("term")
-    ).filter(~F.array_contains(sw, F.col("term")))
-
-
 def _doc_term_counts(
     docs: DataFrame, id_col: str, text_col: str, stopwords
 ) -> DataFrame:
     """(doc_id, term, tf) — term frequency per document, one Arrow kernel.
 
-    Value-identical twin of ``_doc_terms(...).groupBy("doc_id","term")
-    .count()``: term frequency is DOC-LOCAL, so counting inside the kernel
-    removes the explode of every token occurrence AND the (doc_id, term)
-    hash exchange — the previous form shuffled one row per token of the
-    corpus to count what never leaves a document. Tokenization parity with
-    the Column form is the bm25_search precedent: Python ``re`` with
-    ``re.ASCII`` pins ``\\w`` to [a-zA-Z0-9_], byte-identical to Java's
-    default ``\\w`` in regexp_extract_all, and ASCII lower() agrees with
-    Java toLowerCase (oracle-verified across sf0.001/0.01/0.1).
+    Same values as exploding ``regexp_extract_all(lower(text),
+    TOKEN_PATTERN)`` minus stop words, then ``groupBy("doc_id","term")
+    .count()`` (the shape the DuckDB oracles mirror): term frequency is
+    DOC-LOCAL, so counting inside the kernel removes the explode of every
+    token occurrence AND the (doc_id, term) hash exchange. Tokenization
+    parity is the bm25_search precedent: Python ``re`` with ``re.ASCII``
+    pins ``\\w`` to [a-zA-Z0-9_], byte-identical to Java's default ``\\w``
+    in regexp_extract_all, and ASCII lower() agrees with Java toLowerCase
+    (oracle-verified across sf0.001/0.01/0.1).
     """
     pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
     stop = frozenset(stopwords)
@@ -244,18 +231,6 @@ def tfidf_weights(
 ) -> DataFrame:
     """l2-normalized smooth-idf TF-IDF, long sparse form."""
     return TfidfModel(docs, id_col, text_col, stopwords).weights(round_decimals)
-
-
-def query_tfidf(
-    query_text: str,
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = STOPWORDS_EN,
-) -> DataFrame:
-    """Transform one query string with the corpus-fitted idf -> (term, qw)."""
-    return TfidfModel(docs, id_col, text_col, stopwords).transform_query(query_text)
 
 
 def tfidf_search(
