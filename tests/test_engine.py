@@ -1,20 +1,24 @@
 """The serving facade (api.ProductSearchEngine) end to end on a small
 seeded catalog in the reference's on-disk layout (conftest.ref_fixture),
 checked against numpy: E1 vector and filtered search, E2 item-to-item,
-J5 compare, hybrid(alpha=1) == vector ranking and the E3 side-by-side
-at full probe. Runs without the reference's own artifacts, unlike
+J5 compare, hybrid(alpha=1) == vector ranking, filtered hybrid(alpha=0.7)
+against a numpy TF-IDF blend and the E3 side-by-side at full probe. Runs without the reference's own artifacts, unlike
 tests/test_api.py.
 """
 
 from __future__ import annotations
 
+import os
+import re
 import time
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
+from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
 
 K = 4
 TOL = 2e-6  # both sides round scores to 6 decimals
@@ -128,6 +132,57 @@ def test_hybrid_alpha1_ranks_like_vector(engine):
     h = engine.search_products(text, mode="hybrid", alpha=1.0, k=K).collect()
     assert [r["id"] for r in h] == [r["id"] for r in v]
     assert [r["score"] for r in h] == [r["score"] for r in v]
+
+
+def _tfidf_cosine(docs: list[str], query: str) -> np.ndarray:
+    """sklearn TfidfVectorizer(token_pattern=r"(?u)\\b\\w\\w+\\b",
+    stop_words=STOPWORDS_EN, smooth_idf=True, norm="l2") fit on ``docs``:
+    the cosine of ``query`` against each doc."""
+    stop = set(STOPWORDS_EN)
+
+    def tokens(t):
+        return [w for w in re.findall(r"(?u)\b\w\w+\b", t.lower()) if w not in stop]
+
+    vocab = sorted({w for d in docs for w in tokens(d)})
+    col = {w: j for j, w in enumerate(vocab)}
+
+    def counts(t):
+        v = np.zeros(len(vocab))
+        for w in tokens(t):
+            if w in col:
+                v[col[w]] += 1
+        return v
+
+    tf = np.stack([counts(d) for d in docs])
+    idf = np.log((1 + len(docs)) / (1 + (tf > 0).sum(axis=0))) + 1
+    w = tf * idf
+    w /= np.linalg.norm(w, axis=1, keepdims=True)
+    q = counts(query) * idf
+    return w @ (q / np.linalg.norm(q))
+
+
+def test_hybrid_blend_matches_numpy_over_filtered_candidates(engine, ref_fixture):
+    """The reference's hybrid (app.py:202-210): TF-IDF cosine fitted on the
+    WHOLE catalog's example_text, min-max over the filtered candidates
+    only, the dense side raw, then alpha*dense + (1-alpha)*scaled."""
+    fx, text, alpha = ref_fixture, "battery charger", 0.7
+    reviews = pd.read_csv(os.path.join(fx.ref_dir, "reviews.csv"))
+    # a product's example_text is its first review's combined_text
+    example = reviews.drop_duplicates("id").set_index("id").loc[fx.ids, "combined_text"]
+    ts = _tfidf_cosine(list(example), text)
+    mask = _app_mask(fx, brand="amazon")
+    assert 1 < mask.sum() < len(mask) - 1  # the filter really bites
+    idx = np.flatnonzero(mask)
+    cand = ts[idx]
+    mn, mx = cand.min(), cand.max()
+    # the rescale branch runs, over bounds the whole catalog does not share
+    assert mn < mx < ts.max()
+    scaled = (cand - mn) / (mx - mn + 1e-12)
+    vs = np.round(fx.emb[idx] @ np.asarray(hash_embed_py(text, fx.emb.shape[1])), 6)
+    scores = np.round(alpha * vs + (1 - alpha) * scaled, 6)
+    order = np.lexsort((fx.ids[idx], -scores))[:K]
+    rows = engine.search_products(text, mode="hybrid", alpha=alpha, brand="amazon", k=K).collect()
+    _assert_ranked(rows, list(fx.ids[idx][order]), scores[order])
 
 
 def _jobs_run_by(spark, fn, label: str) -> int:

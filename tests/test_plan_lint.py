@@ -3,8 +3,8 @@
 Builds the plan of EVERY registered query at sf0.001 (no execution) and
 asserts the scale invariants the oracle can't see: no unbounded cartesian
 products, and core fact-table queries keep their filters pushed into the
-parquet scans. Also a free analysis-error smoke test for all queries, and
-the registry's query-local pin lifetime.
+parquet scans. Also a free analysis-error smoke test for all queries,
+the registry's query-local pin lifetime and its query order.
 """
 
 from __future__ import annotations
@@ -79,3 +79,36 @@ def test_query_local_pins_released_between_queries(spark, sf_dir):
     assert lifetime.pinned_count() == 1  # only hybrid's sparse pin lives
     lifetime.release_pins()
     assert lifetime.pinned_count() == 0
+
+
+def test_pinning_the_same_plan_twice_records_it_once(spark):
+    """A same-query re-run pins an equal plan again: Spark's cache already
+    holds it, and the pin registry must not grow with each re-run."""
+    from vector_database_product_recommendation_spark import lifetime
+
+    lifetime.release_pins()
+    try:
+        for _ in range(2):
+            lifetime.pin(spark.range(10).selectExpr("id * 2 AS x")).count()
+        assert lifetime.pinned_count() == 1
+    finally:
+        lifetime.release_pins()
+
+
+def test_registry_queries_in_registration_order_without_file_reads(monkeypatch):
+    import builtins
+    import glob
+
+    import __spark_entry__
+    from vector_database_product_recommendation_spark import registry
+
+    def no_io(*a, **kw):
+        raise AssertionError("registry.queries() read a file")
+
+    with monkeypatch.context() as m:
+        m.setattr(glob, "glob", no_io)
+        m.setattr(builtins, "open", no_io)
+        got = list(registry.queries())
+    assert got == list(registry._QUERIES)
+    # the driver-facing order only rotates the same queries
+    assert sorted(__spark_entry__.queries()) == sorted(got)

@@ -77,3 +77,18 @@ def test_bm25_self_retrieval_and_positive_scores(spark, sf_dir):
     top_score = rows[0]["score"]
     self_score = [r["score"] for r in rows if r["doc_id"] == 7]
     assert self_score and self_score[0] == top_score
+
+
+def test_base_tf_without_max_features_raises(docs):
+    """A shared tf frame only seeds a capped refit; an uncapped model over
+    it would co-own (and on teardown unpersist) the sibling's cache."""
+    from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
+    from vector_database_product_recommendation_spark.operators.tfidf import TfidfModel
+
+    base = TfidfModel(docs, "doc_id", "text", STOPWORDS_EN)
+    try:
+        with pytest.raises(ValueError, match="max_features"):
+            TfidfModel(docs, "doc_id", "text", STOPWORDS_EN, base_tf=base.tf)
+    finally:
+        for df in base.persisted():
+            df.unpersist()

@@ -14,7 +14,9 @@ brand "All" sentinel = no filter (app.py:158-159), min_rating compares
 against coalesce(avg_rating, -1) (app.py:160-161), min_reviews against
 coalesce(n_reviews, 0) (app.py:162-163), hybrid blends
 alpha*dense + (1-alpha)*minmax(tfidf) with the dense side raw
-(app.py:206-210, quirks 2.9.2-3 preserved).
+(app.py:206-210, quirks 2.9.2-3 preserved) through the one sparse scorer
+and the one blend of operators/tfidf.py (``TfidfModel.scores``,
+``blend_hybrid``).
 
 The encoder is pluggable: hash_embedder by default (deterministic,
 oracle-checkable), sentence_encoder(SBERT) when installed — matching the
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
 from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
@@ -36,6 +38,10 @@ from vector_database_product_recommendation_spark.operators.knn import (
     exact_knn,
     exact_scores,
     item_to_item,
+)
+from vector_database_product_recommendation_spark.operators.tfidf import (
+    TfidfModel,
+    blend_hybrid,
 )
 
 # the product fields a search hit carries (app.py:186)
@@ -186,73 +192,35 @@ class ProductSearchEngine:
                     payload=HIT_PAYLOAD,
                 )
             )
-        # The blend needs every candidate's dense score, not a ranking:
-        # exact_scores is the same BLAS kernel minus top-k selection, so
-        # no O(N) rows ever cross the single-partition rank window
-        # (the old k=10**9 sentinel did exactly that).
+        # F2-F4 with the reference's quirks: TF-IDF cosine over the WHOLE
+        # catalog, min-max over the CANDIDATE set, dense side raw
+        # (app.py:202-210). The blend needs every candidate's dense score,
+        # not a ranking: exact_scores is the same BLAS kernel minus top-k
+        # selection. No pin: engine calls never begin a registry query, so
+        # nothing would release it.
+        sparse = self._tfidf_model().scores(
+            query_text, cand.select(F.col("id").alias("doc_id"))
+        )
         dense = exact_scores(
             cand, self._text_query, corpus_id="id", query_rows=rows
-        ).select(F.col("neighbor_id").alias("id"), "score")
-        hits = self._blend_hybrid(query_text, cand, dense, alpha, k)
+        ).select(F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs"))
+        top = blend_hybrid(sparse, dense, alpha, k, 6)
+        # ranks are minted after the selection: the window sees k rows
+        hits = top.select(F.col("doc_id").alias("id"), "score").withColumn(
+            "rank", F.row_number().over(Window.orderBy(F.desc("score"), F.asc("id")))
+        )
         return (
             hits.join(self.catalog, "id")
             .select("rank", "id", "score", *HIT_PAYLOAD)
             .orderBy("rank")
         )
 
-    def _tfidf_model(self):
-        from vector_database_product_recommendation_spark.operators.tfidf import TfidfModel
-
+    def _tfidf_model(self) -> TfidfModel:
         if self._tfidf is None:
             self._tfidf = TfidfModel(
                 self.catalog, "id", self.text_col, self.stopwords
             )
         return self._tfidf
-
-    def _blend_hybrid(
-        self, query_text: str, cand: DataFrame, dense: DataFrame, alpha: float, k: int
-    ) -> DataFrame:
-        """F2-F4 with the reference's quirks: TF-IDF cosine over the WHOLE
-        corpus, min-max over the CANDIDATE set, dense side raw
-        (app.py:202-210)."""
-        model = self._tfidf_model()
-        w = model.weights(round_decimals=12)
-        qw = model.transform_query(query_text)
-        sparse = (
-            w.join(F.broadcast(qw), "term")
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("weight") * F.col("qw")).alias("ts"))
-        )
-        sparse = (
-            cand.select(F.col("id").alias("doc_id"))
-            .join(sparse, "doc_id", "left")
-            .select("doc_id", F.coalesce("ts", F.lit(0.0)).alias("ts"))
-        )
-        bounds = sparse.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
-        scaled = sparse.crossJoin(F.broadcast(bounds)).select(
-            F.col("doc_id").alias("id"),
-            F.when(
-                F.col("mx") > F.col("mn"),
-                (F.col("ts") - F.col("mn")) / (F.col("mx") - F.col("mn") + F.lit(1e-12)),
-            )
-            .otherwise(F.col("ts"))
-            .alias("ts_scaled"),
-        )
-        from pyspark.sql import Window
-
-        blended = dense.join(scaled, "id").select(
-            "id",
-            F.round(
-                F.lit(alpha) * F.col("score") + F.lit(1.0 - alpha) * F.col("ts_scaled"),
-                6,
-            ).alias("score"),
-        )
-        # Select first (TakeOrderedAndProject: partition-local heaps, no
-        # full-set shuffle), THEN mint ranks — the row_number window only
-        # ever sees k rows.
-        top = blended.orderBy(F.desc("score"), F.asc("id")).limit(k)
-        wk = Window.orderBy(F.desc("score"), F.asc("id"))
-        return top.withColumn("rank", F.row_number().over(wk))
 
     # -- E2: item-to-item -------------------------------------------------
 

@@ -36,10 +36,12 @@ def pin(df: DataFrame) -> DataFrame:
     protocol; a serving workload's hot query) keep their pins: Spark's
     CacheManager matches the re-built plan against the still-cached one
     and reuses it — the warm-serving regime every round's numbers have
-    always measured. The growth bound is unchanged: at most one query's
-    pins are ever live."""
+    always measured. Such a re-run pins a plan that is already pinned:
+    it is not recorded twice, so at most one query's pins are ever live,
+    each once."""
     df = df.persist()
-    _PINS.append(df)
+    if not any(p.sameSemantics(df) for p in _PINS):
+        _PINS.append(df)
     return df
 
 

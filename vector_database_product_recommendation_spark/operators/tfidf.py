@@ -8,6 +8,12 @@ the WHOLE corpus, min-max rescale of the TF-IDF score over the candidate
 set, then ``alpha*dense + (1-alpha)*tfidf_scaled`` (the dense side stays
 raw — an asymmetry the reference ships, replicated per SURVEY 2.9.3).
 
+Each rule is written once here and every caller routes through it:
+``_tokens`` is the one tokenizer (corpus kernels and driver-side
+queries), ``TfidfModel.scores`` the one sparse scorer (F2; tfidf_search,
+hybrid_search and the serving engine's hybrid) and ``blend_hybrid`` the
+one min-max blend (F3+F4; hybrid_search and the serving engine).
+
 Representation: the long sparse form (doc_id, term, weight) — the exploded
 (term, weight) join is the Spark-native sparse dot product, shuffles only
 on `term`, and doubles as the DuckDB oracle form (SURVEY 7 hard-part v).
@@ -40,6 +46,19 @@ from vector_database_product_recommendation_spark.lifetime import pin
 
 # sklearn's (?u)\b\w\w+\b — runs of >=2 word chars (ASCII corpus).
 TOKEN_PATTERN = r"\w\w+"
+# re.ASCII pins \w to [a-zA-Z0-9_], byte-identical to Java's default \w
+# in regexp_extract_all, and ASCII lower() agrees with Java toLowerCase
+# (oracle-verified across sf0.001/0.01/0.1): a non-ASCII query like
+# "café" yields the same "caf" token as the Column form.
+_token_pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
+
+
+def _tokens(text: str | None, stop: frozenset) -> list[str]:
+    """The tokens of one string, in order: TOKEN_PATTERN runs over the
+    lowercased text (None has none), stop words dropped. The one
+    tokenizer of every TF-IDF/BM25 path, corpus kernels and driver-side
+    queries alike."""
+    return [w for w in _token_pat.findall((text or "").lower()) if w not in stop]
 
 
 def _doc_term_counts(
@@ -51,13 +70,9 @@ def _doc_term_counts(
     TOKEN_PATTERN)`` minus stop words, then ``groupBy("doc_id","term")
     .count()`` (the shape the DuckDB oracles mirror): term frequency is
     DOC-LOCAL, so counting inside the kernel removes the explode of every
-    token occurrence AND the (doc_id, term) hash exchange. Tokenization
-    parity is the bm25_search precedent: Python ``re`` with ``re.ASCII``
-    pins ``\\w`` to [a-zA-Z0-9_], byte-identical to Java's default ``\\w``
-    in regexp_extract_all, and ASCII lower() agrees with Java toLowerCase
-    (oracle-verified across sf0.001/0.01/0.1).
+    token occurrence AND the (doc_id, term) hash exchange. Tokens come
+    from ``_tokens``, byte-identical to the Column form.
     """
-    pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
     stop = frozenset(stopwords)
     src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     dtype = src.schema["doc_id"].dataType.simpleString()
@@ -72,9 +87,7 @@ def _doc_term_counts(
             terms: list[str] = []
             tfs: list[int] = []
             for did, t in zip(pdf["doc_id"], pdf["__t"]):
-                counts = Counter(
-                    w for w in pat.findall((t or "").lower()) if w not in stop
-                )
+                counts = Counter(_tokens(t, stop))
                 ids.extend([did] * len(counts))
                 terms.extend(counts.keys())
                 tfs.extend(counts.values())
@@ -98,6 +111,10 @@ class TfidfModel:
         max_features: int | None = None,
         base_tf: DataFrame | None = None,
     ):
+        if base_tf is not None and max_features is None:
+            # an uncapped model over base_tf would share (and, on teardown,
+            # unpersist) the sibling's cached tf frame
+            raise ValueError("base_tf seeds a capped refit only: pass max_features")
         self.docs = docs
         self.id_col = id_col
         self.text_col = text_col
@@ -198,19 +215,14 @@ class TfidfModel:
         sklearn transform). Tiny result, meant to be broadcast.
 
         The query is a scalar parameter, not data, so its term counts are
-        tokenized DRIVER-SIDE (re.ASCII — the bm25_search precedent,
-        byte-identical to the Column form) into a literal local relation:
-        no corpus-side job runs just to split one string. Counts are exact
-        integers; every float enters downstream through the same engine
-        expressions as before."""
+        tokenized DRIVER-SIDE (``_tokens``, byte-identical to the Column
+        form) into a literal local relation: no corpus-side job runs just
+        to split one string. Counts are exact integers; every float enters
+        downstream through the same engine expressions as before."""
         from collections import Counter
 
         spark = self.docs.sparkSession
-        pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
-        stop = frozenset(self.stopwords)
-        counts = Counter(
-            w for w in pat.findall((query_text or "").lower()) if w not in stop
-        )
+        counts = Counter(_tokens(query_text, frozenset(self.stopwords)))
         q_tf = spark.createDataFrame(
             sorted(counts.items()) or [(None, None)], "term string, tf long"
         ).filter(F.col("term").isNotNull())
@@ -219,6 +231,63 @@ class TfidfModel:
         return raw.crossJoin(F.broadcast(nrm)).select(
             "term", (F.col("w") / F.col("nrm")).alias("qw")
         )
+
+    def scores(
+        self, query_text: str, candidates: DataFrame | None = None
+    ) -> DataFrame:
+        """F2, the one sparse scorer: (doc_id, ts), the cosine of the query
+        against the fitted docs = sum over shared terms of qw*weight. The
+        join broadcasts the query's terms, so the corpus side never
+        shuffles before the per-doc sum. Docs sharing no term have no row;
+        with ``candidates`` (a frame with a ``doc_id`` column) every
+        candidate has one, 0.0 where no term is shared (as sklearn
+        yields), and only candidates do."""
+        w = self.weights(round_decimals=12)
+        qw = self.transform_query(query_text)
+        ts = (
+            w.join(F.broadcast(qw), "term")
+            .groupBy("doc_id")
+            .agg(F.sum(F.col("weight") * F.col("qw")).alias("ts"))
+        )
+        if candidates is None:
+            return ts
+        return candidates.join(ts, "doc_id", "left").select(
+            "doc_id", F.coalesce("ts", F.lit(0.0)).alias("ts")
+        )
+
+
+def blend_hybrid(
+    sparse: DataFrame, dense: DataFrame, alpha: float, k: int, round_decimals: int
+) -> DataFrame:
+    """F3+F4 (app.py:206-210), the one hybrid blend: min-max the sparse
+    ``(doc_id, ts)`` over the candidate set it covers (guarded like
+    app.py:207-208: no rescale when every score ties, an epsilon in
+    the denominator), leave the dense ``(doc_id, vs)`` raw, and return the
+    top-k ``(doc_id, score)`` of ``alpha*vs + (1-alpha)*scaled`` rounded
+    to ``round_decimals``, by (score desc, doc_id asc). The top-k is a
+    TakeOrderedAndProject: partition-local heaps, no full-set shuffle."""
+    bounds = sparse.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
+    scaled = sparse.crossJoin(F.broadcast(bounds)).select(
+        "doc_id",
+        F.when(
+            F.col("mx") > F.col("mn"),
+            (F.col("ts") - F.col("mn")) / (F.col("mx") - F.col("mn") + F.lit(1e-12)),
+        )
+        .otherwise(F.col("ts"))
+        .alias("ts_scaled"),
+    )
+    return (
+        scaled.join(dense, "doc_id")
+        .select(
+            "doc_id",
+            F.round(
+                F.lit(alpha) * F.col("vs") + F.lit(1.0 - alpha) * F.col("ts_scaled"),
+                round_decimals,
+            ).alias("score"),
+        )
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
 
 
 def tfidf_weights(
@@ -244,18 +313,12 @@ def tfidf_search(
     round_decimals: int = 6,
     model: TfidfModel | None = None,
 ) -> DataFrame:
-    """F2: sparse cosine = sum over shared terms of qw*weight, top-k.
-
-    The scored join broadcasts the query terms; the corpus side never
-    shuffles before the (tiny) per-query top-k. Pass a prefitted
+    """F2: the top-k of ``TfidfModel.scores``, rounded. Pass a prefitted
     ``model`` to skip the fit (the joblib-artifact serving path)."""
     model = model or TfidfModel(docs, id_col, text_col, stopwords)
-    w = model.weights(round_decimals=12)
-    qw = model.transform_query(query_text)
     return (
-        w.join(F.broadcast(qw), "term")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("weight") * F.col("qw")), round_decimals).alias("score"))
+        model.scores(query_text)
+        .select("doc_id", F.round("ts", round_decimals).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -284,31 +347,10 @@ def hybrid_search(
     """
     from vector_database_product_recommendation_spark.functions.vectors import dot
 
-    # sparse side — cosine for every doc (missing -> 0.0, as sklearn yields)
+    # sparse side — cosine for every doc; query-local pin: it feeds the
+    # blend's min/max bounds agg AND its rescale projection
     model = model or TfidfModel(docs, id_col, text_col, stopwords)
-    w = model.weights(round_decimals=12)
-    qw = model.transform_query(query_text)
-    sparse = (
-        w.join(F.broadcast(qw), "term")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("weight") * F.col("qw")).alias("ts"))
-    )
-    all_docs = docs.select(F.col(id_col).alias("doc_id"))
-    # query-local pin: feeds the min/max bounds agg AND the rescale projection
-    sparse = pin(all_docs.join(sparse, "doc_id", "left").select(
-        "doc_id", F.coalesce("ts", F.lit(0.0)).alias("ts")
-    ))
-    # min-max over the candidate set (F3; guarded like app.py:207-208)
-    bounds = sparse.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
-    scaled = sparse.crossJoin(F.broadcast(bounds)).select(
-        "doc_id",
-        F.when(
-            F.col("mx") > F.col("mn"),
-            (F.col("ts") - F.col("mn")) / (F.col("mx") - F.col("mn") + F.lit(1e-12)),
-        )
-        .otherwise(F.col("ts"))
-        .alias("ts_scaled"),
-    )
+    sparse = pin(model.scores(query_text, docs.select(F.col(id_col).alias("doc_id"))))
     # dense side — raw dot against the query item's own vector (E2 shape)
     qv = emb.filter(F.col(vec_id_col) == F.lit(query_vec_id)).select(
         F.col(vec_col).alias("__qv")
@@ -316,18 +358,7 @@ def hybrid_search(
     dense = emb.crossJoin(F.broadcast(qv)).select(
         F.col(vec_id_col).alias("doc_id"), dot(vec_col, "__qv").alias("vs")
     )
-    return (
-        scaled.join(dense, "doc_id")
-        .select(
-            "doc_id",
-            F.round(
-                F.lit(alpha) * F.col("vs") + F.lit(1.0 - alpha) * F.col("ts_scaled"),
-                round_decimals,
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return blend_hybrid(sparse, dense, alpha, k, round_decimals)
 
 
 def bm25_search(
@@ -353,20 +384,16 @@ def bm25_search(
     occurrence is ever exploded or exchanged (the previous form exploded
     every corpus token twice, once per statistic, and hash-exchanged the
     query-term postings to count them). Query terms are tokenized
-    driver-side (re.ASCII — byte-identical to Java \\w, so a non-ASCII
-    query like "café" yields the same "caf" token both sides) and ship in
-    the kernel closure. df over the kernel's tf rows equals full-corpus df
+    driver-side by the same ``_tokens`` as the corpus and ship in the
+    kernel closure. df over the kernel's tf rows equals full-corpus df
     on those terms; dl/avgdl stay all-terms by definition. Corpus-level
     scalars (n, avgdl) ride along as broadcast crossJoins, so nothing
     collects to the driver. Per-term contributions round to 12 decimals
     before the sum so engine FP noise stays below the final 6-decimal
     round (same policy as TfidfModel).
     """
-    pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
     stop = frozenset(stopwords)
-    qset = frozenset(
-        t for t in pat.findall((query_text or "").lower()) if t not in stop
-    )
+    qset = frozenset(_tokens(query_text, stop))
 
     src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     dtype = src.schema["doc_id"].dataType.simpleString()
@@ -382,9 +409,7 @@ def bm25_search(
             tfs: list = []
             dls: list = []
             for did, t in zip(pdf["doc_id"], pdf["__t"]):
-                toks = [
-                    w for w in pat.findall((t or "").lower()) if w not in stop
-                ]
+                toks = _tokens(t, stop)
                 if not toks:
                     # zero post-stopword tokens: absent from dl (and tf),
                     # exactly like the old explode->aggregate form

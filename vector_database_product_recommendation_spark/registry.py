@@ -58,73 +58,9 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver checks the FIRST 50 entries of queries() per round, so the
-# ordering of this dict IS the correctness window. Rounds 3-6 proved a
-# hardcoded priority tuple freezes (r05's tuple was re-checked verbatim
-# in r06, leaving 51 queries with stale driver rows) — so rotation is now
-# disk-driven: read which CORRECTNESS_r*.json files exist, find each
-# query's most recent driver row, and front the never-checked / oldest
-# rows. New queries (no row anywhere) sort first; ties break by
-# registration order. No manual edit is ever needed again — each round's
-# artifact automatically pushes its 50 queries to the back of the line.
-def _latest_driver_round() -> dict[str, int]:
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for qname in rows:
-            latest[qname] = max(latest.get(qname, -1), rnd)
-    return latest
-
-
-# Queries whose computation path was rewritten in the latest optimization
-# round: fronted just behind never-checked queries so the next driver
-# sample re-hash-checks them before anything merely old (r21 verdict item
-# 3 — four r21 rewrites missed that round's sample purely by rotation
-# age). Update per round; stale entries cost nothing once their round's
-# CORRECTNESS file lands (they fall back into the age order).
-_TOUCHED_LAST_ROUND = frozenset(
-    {
-        "pq_knn_refined",
-        "pq_knn_exactrefine",
-        "q11_important_parts",
-        "hybrid_search",
-        "tfidf_search",
-        "bm25_search",
-        "tfidf_weights",
-        "tfidf_weights_capped",
-        "ann_tradeoff",
-    }
-)
-
-
 def queries() -> dict[str, QueryFn]:
-    latest = _latest_driver_round()
-    order = {n: i for i, n in enumerate(_QUERIES)}
-
-    def key(n: str):
-        tier = (
-            0
-            if latest.get(n, -1) < 0
-            else (1 if n in _TOUCHED_LAST_ROUND else 2)
-        )
-        return (tier, latest.get(n, -1), order[n])
-
-    names = sorted(_QUERIES, key=key)
-    return {n: _QUERIES[n] for n in names}
+    """Every registered query, in registration order."""
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
