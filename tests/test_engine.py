@@ -2,9 +2,11 @@
 seeded catalog in the reference's on-disk layout (conftest.ref_fixture),
 checked against numpy: E1 vector and filtered search, E2 item-to-item,
 J5 compare, hybrid(alpha=1) == vector ranking, filtered hybrid(alpha=0.7)
-against a numpy TF-IDF blend and the E3 side-by-side at full probe. Runs without the reference's own artifacts, unlike
-tests/test_api.py.
-"""
+against a numpy TF-IDF blend and the E3 side-by-side at full probe. The
+default engine serves from driver arrays; a second one, its array bound
+at 0, takes the Spark path, and both must give the oracle's rows and the
+same schema. Runs without the reference's own artifacts, unlike
+tests/test_api.py."""
 
 from __future__ import annotations
 
@@ -31,6 +33,17 @@ def engine(spark, ref_fixture):
     return ProductSearchEngine.from_reference_dir(spark, ref_fixture.ref_dir)
 
 
+@pytest.fixture(scope="module")
+def spark_engine(spark, ref_fixture):
+    """The same catalog over the driver-array bound: every request takes
+    the Spark path."""
+    from vector_database_product_recommendation_spark import api
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(api, "DRIVER_CATALOG_MAX_BYTES", 0)
+        return api.ProductSearchEngine.from_reference_dir(spark, ref_fixture.ref_dir)
+
+
 def _oracle(fx, qv, mask, k=K):
     """Top-k (ids, scores) by (score desc, id asc) among ``mask``."""
     scores = np.round(fx.emb @ np.asarray(qv), 6)
@@ -55,51 +68,99 @@ def _assert_ranked(rows, ids, scores):
     assert np.allclose([r["score"] for r in rows], scores, atol=TOL)
 
 
+def _assert_hits(fx, rows, ids, scores):
+    """The oracle's ranking, each hit carrying its product's payload."""
+    _assert_ranked(rows, ids, scores)
+    pos = {p: i for i, p in enumerate(fx.ids)}
+    for r in rows:
+        i = pos[r["id"]]
+        assert (r["brand"], r["n_reviews"]) == (fx.brand[i], fx.n_reviews[i])
+        if np.isnan(fx.avg_rating[i]):
+            assert r["avg_rating"] is None
+        else:
+            assert abs(r["avg_rating"] - fx.avg_rating[i]) < 1e-9
+
+
+def _same_on_both_paths(engine, spark_engine, request) -> list:
+    """The rows of ``request`` on the driver and the Spark path, which must
+    agree in rows (rank, id, score, payload) and schema."""
+    driver, spark_side = request(engine), request(spark_engine)
+    assert driver.schema == spark_side.schema
+    rows = driver.collect()
+    assert rows == spark_side.collect()
+    return rows
+
+
 def test_embedding_dim_comes_from_the_npy(engine, ref_fixture):
     assert engine.embedding_dim == ref_fixture.emb.shape[1]
 
 
-def test_vector_search_matches_numpy(engine, ref_fixture):
+def test_vector_search_matches_numpy(engine, spark_engine, ref_fixture):
     text = "kindle reading light"
-    rows = engine.search_products(text, k=K).collect()
+    rows = _same_on_both_paths(engine, spark_engine, lambda e: e.search_products(text, k=K))
     qv = hash_embed_py(text, ref_fixture.emb.shape[1])
-    _assert_ranked(rows, *_oracle(ref_fixture, qv, _app_mask(ref_fixture)))
+    _assert_hits(ref_fixture, rows, *_oracle(ref_fixture, qv, _app_mask(ref_fixture)))
 
 
-def test_filtered_search_matches_numpy(engine, ref_fixture):
+def test_filtered_search_matches_numpy(engine, spark_engine, ref_fixture):
     text = "tablet battery charger"
-    f = {"brand": "amazon", "min_rating": 3.0, "min_reviews": 3}
+    f = {"brand": "AmAzOn", "min_rating": 3.0, "min_reviews": 3}
     mask = _app_mask(ref_fixture, **f)
     assert 1 < mask.sum() < len(mask) - 1  # the filters really bite
-    rows = engine.search_products(text, k=K, **f).collect()
+    rows = _same_on_both_paths(engine, spark_engine, lambda e: e.search_products(text, k=K, **f))
     qv = hash_embed_py(text, ref_fixture.emb.shape[1])
-    _assert_ranked(rows, *_oracle(ref_fixture, qv, mask))
-    by_id = {r["id"]: r for r in rows}
-    for i in np.flatnonzero(np.isin(ref_fixture.ids, list(by_id))):
-        r = by_id[ref_fixture.ids[i]]
-        assert r["brand"] == ref_fixture.brand[i]
-        assert r["n_reviews"] == ref_fixture.n_reviews[i]
-        assert abs(r["avg_rating"] - ref_fixture.avg_rating[i]) < 1e-9
+    _assert_hits(ref_fixture, rows, *_oracle(ref_fixture, qv, mask))
 
 
-def test_item_to_item_matches_numpy_and_skips_query(engine, ref_fixture):
+# filters and k at the edges of the candidate set: (text, filters, k)
+EDGE_SEARCHES = {
+    "min_rating_-1": ("fire tablet", {"min_rating": -1.0}, 12),  # every product
+    "k_over_candidates": ("speaker sound music", {"brand": "moshi"}, 50),
+    "no_candidate": ("speaker sound music", {"brand": "no-such-brand"}, K),
+}
+
+
+@pytest.mark.parametrize("case", list(EDGE_SEARCHES))
+def test_edge_searches_match_numpy(engine, spark_engine, ref_fixture, case):
+    """min_rating -1 admits the all-null-rating product (its avg_rating
+    comes back null), a k over the candidate count returns them all and
+    a filter nothing passes returns no row, with the hit schema."""
+    fx = ref_fixture
+    text, f, k = EDGE_SEARCHES[case]
+    rows = _same_on_both_paths(engine, spark_engine, lambda e: e.search_products(text, k=k, **f))
+    mask = _app_mask(fx, **f)
+    _assert_hits(fx, rows, *_oracle(fx, hash_embed_py(text, fx.emb.shape[1]), mask, k))
+    if case == "min_rating_-1":
+        (null,) = fx.ids[np.isnan(fx.avg_rating)]  # the all-null-rating product
+        assert null in {r["id"] for r in rows}
+    elif case == "k_over_candidates":
+        assert 0 < len(rows) == mask.sum() < k
+    else:
+        assert rows == []
+
+
+def test_item_to_item_matches_numpy_and_skips_query(engine, spark_engine, ref_fixture):
     for i in (0, 5):
         pid = ref_fixture.ids[i]
-        rows = engine.search_by_product_id(pid, k=K).collect()
+        rows = _same_on_both_paths(
+            engine, spark_engine, lambda e: e.search_by_product_id(pid, k=K)
+        )
         assert pid not in {r["id"] for r in rows}
         mask = np.ones(len(ref_fixture.ids), dtype=bool)
         mask[i] = False
-        _assert_ranked(rows, *_oracle(ref_fixture, ref_fixture.emb[i], mask))
+        _assert_hits(ref_fixture, rows, *_oracle(ref_fixture, ref_fixture.emb[i], mask))
 
 
-def test_unknown_product_id_names_it(engine):
-    with pytest.raises(ValueError, match="NO-SUCH-ID"):
-        engine.search_by_product_id("NO-SUCH-ID", k=K)
+def test_unknown_product_id_names_it(engine, spark_engine):
+    for e in (engine, spark_engine):
+        with pytest.raises(ValueError, match="NO-SUCH-ID"):
+            e.search_by_product_id("NO-SUCH-ID", k=K)
 
 
-def test_compare_is_symmetric_with_unit_diagonal(engine, ref_fixture):
+def test_compare_is_symmetric_with_unit_diagonal(engine, spark_engine, ref_fixture):
     pids = [str(p) for p in ref_fixture.ids[[2, 7, 9]]]
-    got = {(r["id_a"], r["id_b"]): r["score"] for r in engine.compare_products(pids).collect()}
+    rows = _same_on_both_paths(engine, spark_engine, lambda e: e.compare_products(pids))
+    got = {(r["id_a"], r["id_b"]): r["score"] for r in rows}
     assert len(got) == 9
     vecs = ref_fixture.emb[[2, 7, 9]]
     exp = np.round(vecs @ vecs.T, 6)
@@ -110,11 +171,12 @@ def test_compare_is_symmetric_with_unit_diagonal(engine, ref_fixture):
             assert abs(got[(pa, pb)] - exp[a, b]) < TOL
 
 
-def test_compare_unknown_ids_names_them(engine, ref_fixture):
+def test_compare_unknown_ids_names_them(engine, spark_engine, ref_fixture):
     real = str(ref_fixture.ids[1])
-    with pytest.raises(ValueError, match="NO-SUCH-ID") as err:
-        engine.compare_products([real, "NO-SUCH-ID", "ALSO-MISSING"])
-    assert "ALSO-MISSING" in str(err.value) and real not in str(err.value)
+    for e in (engine, spark_engine):
+        with pytest.raises(ValueError, match="NO-SUCH-ID") as err:
+            e.compare_products([real, "NO-SUCH-ID", "ALSO-MISSING"])
+        assert "ALSO-MISSING" in str(err.value) and real not in str(err.value)
 
 
 def test_ann_full_probe_equals_exact(engine):
@@ -206,22 +268,52 @@ def _jobs_run_by(spark, fn, label: str) -> int:
     return len(tracker.getJobIdsForGroup(group))
 
 
-def test_serving_caches_right_sized_and_jobs_bounded(spark, engine, ref_fixture):
+def test_serving_caches_right_sized_and_jobs_bounded(spark, engine, spark_engine, ref_fixture):
     """Products and their vectors are one catalog table, sized by the
     shared rule (one partition per ~25k rows) and materialized at
-    construction. A search is then one kernel pass over one cached
-    partition that returns its hits with their payload: no join, no
-    merge window, no collect of its own query vector."""
-    cached = {n for n, v in vars(engine).items() if isinstance(v, DataFrame) and v.is_cached}
-    assert cached == {"catalog", "review_emb"}
-    assert engine.catalog.rdd.getNumPartitions() == 1
+    construction. Within the driver-array bound a vector, filtered, item
+    or compare request runs no job. Over it, a search is one kernel pass
+    over one cached partition that returns its hits with their payload:
+    no join, no merge window, no collect of its own query vector."""
+    for e in (engine, spark_engine):
+        cached = {n for n, v in vars(e).items() if isinstance(v, DataFrame) and v.is_cached}
+        assert cached == {"catalog", "review_emb"}
+        assert e.catalog.rdd.getNumPartitions() == 1
+        e.search_products("warm up", k=K).collect()
     pids = [str(p) for p in ref_fixture.ids[[3, 4, 8]]]
-    engine.search_products("warm up", k=K).collect()
     requests = {
-        "vector": (lambda: engine.search_products("fire tablet", k=K), 1),
-        "filtered": (lambda: engine.search_products("fire tablet", k=K, brand="amazon", min_reviews=3), 1),
-        "item": (lambda: engine.search_by_product_id(pids[0], k=K), 2),
-        "compare": (lambda: engine.compare_products(pids), 1),
+        "vector": (lambda e: e.search_products("fire tablet", k=K), 1),
+        "filtered": (lambda e: e.search_products("fire tablet", k=K, brand="amazon", min_reviews=3), 1),
+        "item": (lambda e: e.search_by_product_id(pids[0], k=K), 2),
+        "compare": (lambda e: e.compare_products(pids), 1),
     }
-    for label, (request, bound) in requests.items():
-        assert _jobs_run_by(spark, lambda: request().collect(), label) <= bound, label
+    for label, (request, spark_bound) in requests.items():
+        assert _jobs_run_by(spark, lambda: request(engine).collect(), label) == 0, label
+        jobs = _jobs_run_by(spark, lambda: request(spark_engine).collect(), f"{label}-spark")
+        assert jobs <= spark_bound, label
+
+
+def test_over_the_bound_the_constructor_holds_no_arrays(engine, spark_engine, ref_fixture):
+    """Within the bound the engine holds the catalog's float64 matrix;
+    over it, the constructor collects nothing."""
+    from vector_database_product_recommendation_spark.api import _DriverCatalog
+
+    assert engine._driver.mat.shape == ref_fixture.emb.shape
+    assert not [
+        n for n, v in vars(spark_engine).items() if isinstance(v, (np.ndarray, _DriverCatalog))
+    ]
+
+
+def test_query_width_is_checked_before_any_spark_work(spark, engine, spark_engine, monkeypatch):
+    """A custom encoder of the wrong width fails with a ValueError naming
+    both widths on either path and in either mode, running no job."""
+    dim = engine.embedding_dim
+    for path, e in (("driver", engine), ("spark", spark_engine)):
+        monkeypatch.setattr(e, "encoder", lambda text: [0.0] * (dim + 1))
+        for mode in ("vector", "hybrid"):
+
+            def request():
+                with pytest.raises(ValueError, match=rf"width {dim + 1}\b.* {dim}\b"):
+                    e.search_products("fire tablet", k=K, mode=mode)
+
+            assert _jobs_run_by(spark, request, f"width-{path}-{mode}") == 0

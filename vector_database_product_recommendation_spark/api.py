@@ -18,6 +18,16 @@ alpha*dense + (1-alpha)*minmax(tfidf) with the dense side raw
 and the one blend of operators/tfidf.py (``TfidfModel.scores``,
 ``blend_hybrid``).
 
+Like the reference's ``@st.cache_resource`` numpy/FAISS state, the engine
+collects its catalog once, at construction, into driver arrays (ids,
+filter columns, hit payload and the float64 embedding matrix) when the
+matrix fits ``DRIVER_CATALOG_MAX_BYTES``. Vector and filtered search,
+item-to-item and compare then mask, score (``np.round(mat @ qv, 6)``) and
+rank (``knn.rank_topk``) on the driver and reply with an inline table:
+no Spark job per request. A larger catalog is never collected: it is
+served by the one-job ``exact_knn(payload=...)`` pass over the cached
+``catalog``. Hybrid search always runs on Spark.
+
 The encoder is pluggable: hash_embedder by default (deterministic,
 oracle-checkable), sentence_encoder(SBERT) when installed — matching the
 reference's all-MiniLM-L6-v2 (app.py:84). NB: with the default hash
@@ -38,6 +48,7 @@ from vector_database_product_recommendation_spark.operators.knn import (
     exact_knn,
     exact_scores,
     item_to_item,
+    rank_topk,
 )
 from vector_database_product_recommendation_spark.operators.tfidf import (
     TfidfModel,
@@ -47,11 +58,55 @@ from vector_database_product_recommendation_spark.operators.tfidf import (
 # the product fields a search hit carries (app.py:186)
 HIT_PAYLOAD = ("brand", "n_reviews", "avg_rating")
 
+# the largest float64 embedding matrix the engine collects to the driver:
+# 64 MiB is ~21.8k products at 384 dimensions, under one right-sized
+# catalog partition (artifacts.persist_right_sized, ~25k rows)
+DRIVER_CATALOG_MAX_BYTES = 64 << 20
+
+
+class _DriverCatalog:
+    """The catalog as driver arrays, row-aligned: what a vector, filtered,
+    item-to-item or compare request reads instead of running a job."""
+
+    def __init__(self, rows: list):
+        self.ids = np.array([r[0] for r in rows], dtype=object)
+        self.row = {pid: i for i, pid in enumerate(self.ids)}
+        self.brand_lower = np.array([r[1] for r in rows], dtype=object)
+        self.rating = np.array([r[2] for r in rows], dtype=np.float64)
+        self.reviews = np.array([r[3] for r in rows], dtype=np.int64)
+        self.payload = [tuple(r[4:-1]) for r in rows]  # raw, nulls kept
+        self.mat = np.array([r[-1] for r in rows], dtype=np.float64)
+
+    def mask(self, brand: str, min_rating: float, min_reviews: int) -> np.ndarray:
+        """candidate_products' filters: ``lower(brand)`` equality (a null
+        brand never matches), coalesced rating and review count."""
+        mask = (self.rating >= float(min_rating)) & (self.reviews >= int(min_reviews))
+        if brand != "All":
+            mask &= self.brand_lower == brand.lower()
+        return mask
+
+    def hits(self, qv, mask: np.ndarray, k: int) -> list[tuple]:
+        """(rank, id, score, *HIT_PAYLOAD) of the top-k among ``mask`` under
+        exact_knn's scores (rounded to 6 decimals before selection) and
+        its order (score desc, id asc)."""
+        idx = np.flatnonzero(mask)
+        scores = np.round(self.mat[idx] @ np.asarray(qv, dtype=np.float64), 6)
+        sel, rank = rank_topk(np.zeros(len(idx), dtype=np.int64), self.ids[idx], scores, k)
+        return [
+            (int(r), self.ids[i], float(s), *self.payload[i])
+            for i, s, r in zip(idx[sel], scores[sel], rank)
+        ]
+
 
 class ProductSearchEngine:
     """Serving engine over one catalog table (a row per product: its
     products.csv fields plus its unit ``embedding``) with optional
-    (reviews, review_embeddings) for the ANN demo paths."""
+    (reviews, review_embeddings) for the ANN demo paths.
+
+    Construction runs one job for the catalog's row count and embedding
+    width and, when ``0 < rows * width * 8 <= DRIVER_CATALOG_MAX_BYTES``,
+    one more that collects it into a ``_DriverCatalog``; ``embedding_dim``
+    defaults to that width."""
 
     def __init__(
         self,
@@ -70,13 +125,36 @@ class ProductSearchEngine:
         self.text_col = text_col
         self.encoder = encoder  # None -> driver-side hash_embed_py
         self.stopwords = stopwords
-        self.embedding_dim = embedding_dim  # lazily probed once if None
         self._tfidf = None
         # the free-text query frame only carries the schema: each request's
         # encoded vector reaches the kernel as query_rows
         self._text_query = catalog.sparkSession.createDataFrame(
             [], "query_id int, query_vec array<double>"
         )
+        n, self._width = catalog.select(
+            F.count(F.lit(1)), F.max(F.size("embedding"))
+        ).first()
+        self.embedding_dim = self._width if embedding_dim is None else embedding_dim
+        types = {f.name: f.dataType.simpleString() for f in catalog.schema}
+        self._hit_schema = [
+            ("rank", "int"), ("id", types["id"]), ("score", "double"),
+            *((c, types[c]) for c in HIT_PAYLOAD),
+        ]
+        self._compare_schema = [("id_a", types["id"]), ("id_b", types["id"]), ("score", "double")]
+        # the bound is checked before the collect: an over-bound catalog
+        # never reaches the driver (nor does an empty one, which has no
+        # width; the Spark path serves both)
+        self._driver = None
+        if 0 < n * (self._width or 0) * 8 <= DRIVER_CATALOG_MAX_BYTES:
+            rows = catalog.select(
+                "id",
+                F.lower("brand"),
+                F.coalesce(F.col("avg_rating"), F.lit(-1.0)),
+                F.coalesce(F.col("n_reviews"), F.lit(0)),
+                *HIT_PAYLOAD,
+                "embedding",
+            ).collect()
+            self._driver = _DriverCatalog(rows)
 
     # -- construction -----------------------------------------------------
 
@@ -87,18 +165,21 @@ class ProductSearchEngine:
         this engine's lineage operators (proved identical in
         tests/test_reference_parity.py).
 
-        Like the reference's ``@st.cache_resource``, the serving cache is
+        Like the reference's ``@st.cache_resource``, the serving state is
         built once, here: products joined with their vectors into one
         ``catalog`` table, sized by artifacts.persist_right_sized (~25k
         rows per partition, so one partition at the reference's size) and
-        materialized before this returns. A request scans that one cached
+        materialized before this returns, then, within
+        ``DRIVER_CATALOG_MAX_BYTES``, collected into driver arrays. A
+        vector or filtered search, an item-to-item lookup and a compare
+        then run no Spark job. Above the bound, a request scans the cached
         table with one kernel pass, which returns its hits with their
-        payload, so nothing is joined per request: a vector or filtered
-        search runs 1 Spark job, an item-to-item lookup 2 (the query
-        vector's lookup, then the kernel) and a compare 1 (the selected
-        vectors' lookup; tests/test_engine.py pins these). ``embedding_dim`` defaults to
-        the .npy's width, so free-text search never probes the corpus
-        for it.
+        payload: a vector or filtered search runs 1 Spark job, an
+        item-to-item lookup 2 (the query vector's lookup, then the kernel)
+        and a compare 1 (the selected vectors' lookup). tests/test_engine.py
+        pins both sets of counts. ``embedding_dim`` defaults to the
+        catalog's width, so free-text search never probes the corpus for
+        it.
         """
         from vector_database_product_recommendation_spark.artifacts import (
             persist_right_sized,
@@ -110,14 +191,12 @@ class ProductSearchEngine:
             rebuild_products,
         )
 
-        npy = f"{ref_dir}/review_embeddings.npy"
-        kw.setdefault("embedding_dim", int(np.load(npy, mmap_mode="r").shape[1]))
         # no .cache() here: load_reviews already persists the (expensive,
         # unsplittable multiLine) CSV parse; the returned frame only adds a
         # map lookup + cast on top of that cache, and re-caching it would
         # pin a second, redundant copy of every row
         reviews = load_reviews(spark, f"{ref_dir}/reviews.csv")
-        review_emb = load_embeddings_npy(spark, npy).cache()
+        review_emb = load_embeddings_npy(spark, f"{ref_dir}/review_embeddings.npy").cache()
         products = rebuild_products(reviews)
         vectors = rebuild_product_embeddings(reviews, review_emb).select(
             "id", F.col("vector").alias("embedding")
@@ -153,14 +232,18 @@ class ProductSearchEngine:
     # -- E1: free-text search (vector / hybrid) ---------------------------
 
     def _encode_query(self, query_text: str) -> list[float]:
+        """The query's vector, checked against the catalog's width before
+        any Spark work (an empty catalog has no width to check)."""
         if self.encoder is not None:
-            return self.encoder(query_text)
-        if self.embedding_dim is None:
-            # probed ONCE and memoized — the encode hot path must not run a
-            # Spark job per free-text query (from_reference_dir reads the
-            # width from the .npy; direct construction can pass it)
-            self.embedding_dim = len(self.catalog.select("embedding").first()[0])
-        return hash_embed_py(query_text, self.embedding_dim)
+            qv = self.encoder(query_text)
+        else:
+            qv = hash_embed_py(query_text, self.embedding_dim)
+        if self._width not in (None, len(qv)):
+            raise ValueError(
+                f"query vector has width {len(qv)} but the catalog's embeddings "
+                f"have width {self._width}"
+            )
+        return qv
 
     def search_products(
         self,
@@ -173,14 +256,19 @@ class ProductSearchEngine:
         mode: str = "vector",
         alpha: float = 0.7,
     ) -> DataFrame:
-        """E1 (app.py:281-303): filter -> score -> top-k -> gather, the
-        gather riding on the kernel's hits (exact_knn ``payload``)."""
+        """E1 (app.py:281-303): filter -> score -> top-k -> gather. On the
+        driver arrays when held, else the gather rides on the kernel's hits
+        (exact_knn ``payload``)."""
         if mode not in ("vector", "hybrid"):
             raise ValueError(f"unknown mode {mode!r}")
+        qv = self._encode_query(query_text)
+        if mode == "vector" and self._driver is not None:
+            mask = self._driver.mask(brand, min_rating, min_reviews)
+            return self._inline(self._hit_schema, self._driver.hits(qv, mask, k))
         cand = self.candidate_products(
             brand=brand, min_rating=min_rating, min_reviews=min_reviews
         )
-        rows = [(0, self._encode_query(query_text))]
+        rows = [(0, qv)]
         if mode == "vector":
             return _hit_rows(
                 exact_knn(
@@ -227,29 +315,40 @@ class ProductSearchEngine:
     def search_by_product_id(self, pid, k: int = 5) -> DataFrame:
         """E2 (app.py:221-241): the query vector comes FROM the corpus.
         An unknown ``pid`` raises ValueError naming it."""
-        return _hit_rows(
-            item_to_item(self.catalog, pid, k, corpus_id="id", payload=HIT_PAYLOAD)
-        )
+        if self._driver is None:
+            return _hit_rows(
+                item_to_item(self.catalog, pid, k, corpus_id="id", payload=HIT_PAYLOAD)
+            )
+        i = self._driver.row.get(pid)
+        if i is None:
+            raise ValueError(f"item {pid!r} is not in the corpus")
+        mask = np.ones(len(self._driver.ids), dtype=bool)
+        mask[i] = False
+        return self._inline(self._hit_schema, self._driver.hits(self._driver.mat[i], mask, k))
 
     # -- J5: pairwise compare ---------------------------------------------
 
     def compare_products(self, pids: list) -> DataFrame:
         """J5 (app.py:348-354): pairwise similarity of 2-4 selected
         products, long form (id_a, id_b, score), rows sorted by
-        (id_a, id_b). One job collects the selected vectors; the matrix
-        is the reference's ``V @ V.T`` on the driver, each pair scored
-        once so the cells are exactly symmetric, and comes back as an
-        inline table, which Spark returns without a job. Unknown ids
+        (id_a, id_b). The vectors come from the driver arrays when held,
+        else one job collects them; the matrix is the reference's
+        ``V @ V.T`` on the driver, each pair scored once so the cells are
+        exactly symmetric, and comes back as an inline table. Unknown ids
         raise ValueError naming them, as does an empty ``pids``."""
         wanted = list(dict.fromkeys(pids))
         if not wanted:
             raise ValueError("no product ids to compare")
-        vec = {
-            r[0]: np.asarray(r[1], dtype=np.float64)
-            for r in self.catalog.filter(F.col("id").isin(wanted))
-            .select("id", "embedding")
-            .collect()
-        }
+        if self._driver is not None:
+            d = self._driver
+            vec = {p: d.mat[d.row[p]] for p in wanted if p in d.row}
+        else:
+            vec = {
+                r[0]: np.asarray(r[1], dtype=np.float64)
+                for r in self.catalog.filter(F.col("id").isin(wanted))
+                .select("id", "embedding")
+                .collect()
+            }
         missing = [p for p in wanted if p not in vec]
         if missing:
             raise ValueError(f"products {missing!r} are not in the catalog")
@@ -258,12 +357,26 @@ class ProductSearchEngine:
         for i, a in enumerate(ids):
             for b in ids[i:]:
                 score[a, b] = score[b, a] = float(np.round(vec[a] @ vec[b], 6))
-        cells = [(a, b, score[a, b]) for a in ids for b in ids]
-        # named markers bind the ids as literals: no quoting, no injection
-        rows = ", ".join(f"(:a{i}, :b{i}, :s{i})" for i in range(len(cells)))
-        args = {f"{c}{i}": v for i, cell in enumerate(cells) for c, v in zip("abs", cell)}
+        return self._inline(self._compare_schema, [(a, b, score[a, b]) for a in ids for b in ids])
+
+    def _inline(self, schema: list[tuple[str, str]], rows: list[tuple]) -> DataFrame:
+        """``rows`` as an inline ``VALUES`` table of ``schema`` (name, type)
+        pairs, which Spark returns without a job. Named markers bind the
+        values as literals: no quoting, no injection. Each column is cast
+        to its type, and a trailing all-NULL row, filtered out again,
+        keeps every column nullable and typed when a reply has no row or
+        an all-null column, so the schema is the Spark path's."""
+        args, values = {}, []
+        for i, row in enumerate(rows):
+            args.update({f"v{i}_{j}": v for j, v in enumerate(row) if v is not None})
+            cells = [f":v{i}_{j}" if v is not None else "NULL" for j, v in enumerate(row)]
+            values.append(f"({', '.join(cells)}, true)")
+        values.append(f"({'NULL, ' * len(schema)}false)")
+        cols = ", ".join(f"`{c}`" for c, _ in schema)
+        cast = ", ".join(f"CAST(`{c}` AS {t}) AS `{c}`" for c, t in schema)
         return self.catalog.sparkSession.sql(
-            f"SELECT * FROM VALUES {rows} AS t(id_a, id_b, score)", args=args
+            f"SELECT {cast} FROM VALUES {', '.join(values)} AS t({cols}, `__row`) WHERE `__row`",
+            args=args,
         )
 
     # -- E3: ANN demo -----------------------------------------------------
