@@ -10,6 +10,7 @@ tests/test_api.py."""
 
 from __future__ import annotations
 
+import math
 import os
 import re
 import time
@@ -186,6 +187,25 @@ def test_ann_full_probe_equals_exact(engine):
     e = [(r["neighbor_id"], r["score"]) for r in exact.collect()]
     assert len(e) == K and 11 not in {n for n, _ in e}
     assert [(r["neighbor_id"], r["score"]) for r in ivf.collect()] == e
+
+
+def test_ann_tradeoff_table_derives_nlist(engine, monkeypatch):
+    """AN5 on the review corpus: with nlist omitted the index has
+    ⌊√n⌋ lists, and probing all of them gives precision == MRR == 1.0."""
+    from vector_database_product_recommendation_spark.operators import eval as ann_eval
+
+    trained = []
+    train = ann_eval.train_kmeans_centroids
+
+    def spy(*a, **kw):
+        trained.append(train(*a, **kw))
+        return trained[-1]
+
+    monkeypatch.setattr(ann_eval, "train_kmeans_centroids", spy)
+    nlist = math.isqrt(engine.review_emb.count())
+    rows = engine.ann_tradeoff_table(k=K, nprobes=(nlist,)).collect()
+    assert trained[0].count() == nlist
+    assert [(r["nprobe"], r["precision_at_k"], r["mrr"]) for r in rows] == [(nlist, 1.0, 1.0)]
 
 
 def test_hybrid_alpha1_ranks_like_vector(engine):

@@ -18,7 +18,6 @@ from vector_database_product_recommendation_spark.operators.eval import ann_trad
 from vector_database_product_recommendation_spark.operators.ivf import (
     assign_clusters,
     ivf_knn,
-    knn,
     read_ivf_store,
     train_kmeans_centroids,
     write_ivf_store,
@@ -75,11 +74,20 @@ def test_assign_clusters_covers_corpus(emb, ivf_parts):
     assert 1 < n_clusters <= NLIST
 
 
-def test_knn_auto_picks_exact_for_small_corpus(emb):
-    q = _queries(emb)
-    auto = knn(emb, q, 5, method="auto")
-    exact = exact_knn(emb, q, 5)
-    assert [tuple(r) for r in auto.collect()] == [tuple(r) for r in exact.collect()]
+def test_train_on_empty_corpus_names_it(emb):
+    with pytest.raises(ValueError, match="empty corpus"):
+        train_kmeans_centroids(emb.limit(0), NLIST)
+
+
+def test_mllib_fallback_past_the_byte_budget(emb, monkeypatch):
+    """A sample past the driver byte budget trains with MLlib KMeans."""
+    from vector_database_product_recommendation_spark.operators import ivf
+
+    monkeypatch.setattr(ivf, "MAX_TRAIN_BYTES", 1)
+    rows = train_kmeans_centroids(emb, 5, seed=42, max_iter=5).orderBy("cluster_id").collect()
+    d = len(emb.first()["embedding"])
+    assert [r["cluster_id"] for r in rows] == list(range(5))
+    assert all(len(r["centroid"]) == d for r in rows)
 
 
 def test_ann_tradeoff_shape_and_monotonicity(emb):

@@ -22,16 +22,38 @@ def _queries(emb, n=8):
     )
 
 
-def test_pq_lossless_regime_equals_exact(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    n = emb.count()
-    books = train_pq(emb, m=8, ksub=n + 10)  # every subvector its own centroid
+def _assert_pq_equals_exact(emb, books):
     codes = encode_pq(emb, books)
     got = pq_knn(codes, books, _queries(emb), 10)
     want = exact_knn(emb, _queries(emb), 10)
     g = {(r["query_id"], r["neighbor_id"], r["score"], r["rank"]) for r in got.collect()}
     w = {(r["query_id"], r["neighbor_id"], r["score"], r["rank"]) for r in want.collect()}
     assert g == w
+
+
+def test_pq_lossless_regime_equals_exact(spark):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    n = emb.count()
+    books = train_pq(emb, m=8, ksub=n + 10)  # every subvector its own centroid
+    _assert_pq_equals_exact(emb, books)
+
+
+def test_pq_lossless_regime_with_more_rows_than_centroids(spark):
+    # 40 rows, 5 distinct vectors: more rows than ksub, yet ksub covers
+    # every distinct subvector, so the codebooks are those subvectors
+    base = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 5)
+    emb = base.crossJoin(spark.range(8).withColumnRenamed("id", "copy")).select(
+        (F.col("vec_id") * 8 + F.col("copy")).alias("vec_id"), "embedding"
+    )
+    books = train_pq(emb, m=8, ksub=16)
+    assert all(len(b) == 5 for b in books)
+    _assert_pq_equals_exact(emb, books)
+
+
+def test_pq_train_on_empty_corpus_names_it(spark):
+    emb = load_table(spark, SF_DIR, "embeddings").limit(0)
+    with pytest.raises(ValueError, match="empty corpus"):
+        train_pq(emb)
 
 
 def test_pq_refine_recall_bound(spark):

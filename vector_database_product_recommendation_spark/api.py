@@ -399,9 +399,7 @@ class ProductSearchEngine:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
         exact = exact_knn(emb, q, k, exclude_self=True)
-        n = emb.count()
-        eff = nlist or max(2, int(n**0.5))
-        cents = train_kmeans_centroids(emb, eff)
+        cents = train_kmeans_centroids(emb, nlist)
         assigned = assign_clusters(emb, cents)
         ivf = ivf_knn(assigned, cents, q, k, nprobe, exclude_self=True)
         return exact, ivf

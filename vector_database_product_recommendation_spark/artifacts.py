@@ -96,9 +96,8 @@ def ivf_index(
     if k not in _CACHE:
         emb = load_table(spark, sf_dir, "embeddings")
         n = emb.count()
-        eff_nlist = nlist or max(2, int(n**0.5))
         cents = train_kmeans_centroids(
-            emb, eff_nlist, seed=seed, max_iter=max_iter, n_rows=n
+            emb, nlist, seed=seed, max_iter=max_iter, n_rows=n
         )
         _CACHE[k] = (cents, persist_right_sized(assign_clusters(emb, cents), n))
     return _CACHE[k]

@@ -63,8 +63,6 @@ def ann_tradeoff(
         cents, assigned = index
         owns_assigned = False
     else:
-        n = emb.count()
-        nlist = nlist or max(2, int(n**0.5))
         cents = train_kmeans_centroids(
             emb, nlist, vec_col=vec_col, seed=seed, max_iter=kmeans_iter
         )

@@ -4,9 +4,12 @@ pruning — the Spark-native rebuild of the reference's IndexIVFFlat
 nprobe slider at app.py:383-384 [verified from the index binary header]).
 
 Spark-first mapping:
-- train (AN2): MLlib KMeans(k=nlist, fixed seed) on the vectors. Euclidean
-  KMeans == spherical KMeans on unit vectors (‖a-b‖² = 2-2a·b), so the
-  trained centroids serve the inner-product metric directly.
+- train (AN2): seeded Lloyd k-means on the driver, over a sample of at
+  most 256 points per centroid (FAISS's default); MLlib KMeans trains only
+  when that sample would pass the driver byte budget. Euclidean KMeans ==
+  spherical KMeans on unit vectors (‖a-b‖² = 2-2a·b), so the trained
+  centroids serve the inner-product metric directly. The sample transfer
+  and the Lloyd loop here also train the PQ codebooks (operators/pq.py).
 - assign/build (AN3): row-local argmax-dot against the broadcast centroid
   matrix inside mapInPandas (one BLAS matmul per Arrow batch; the corpus
   NEVER shuffles). Persisting `write.partitionBy('cluster_id')` turns
@@ -30,26 +33,32 @@ from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.operators.knn import (
     _query_batch,
-    exact_knn,
     merge_topk,
     rank_topk,
 )
 
 
+# FAISS's Clustering.max_points_per_centroid: every k-means trainer in the
+# package (IVF quantizer, PQ codebooks) samples at most this many points per
+# centroid
+MAX_POINTS_PER_CENTROID = 256
+# driver budget for the IVF sample transfer peak; past it, MLlib trains
+MAX_TRAIN_BYTES = 2 << 30
+# rows per Lloyd assignment block (FAISS chunks the same way)
+ASSIGN_BLOCK = 65_536
+
+
 def train_kmeans_centroids(
     emb: DataFrame,
-    nlist: int,
+    nlist: int | None = None,
     *,
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 20,
-    max_points_per_centroid: int = 256,
-    max_train_bytes: int = 2 << 30,
-    assign_block: int = 65_536,
     n_rows: int | None = None,
 ) -> DataFrame:
     """AN2: (cluster_id, centroid array<double>) — seeded Lloyd on a
-    BOUNDED sample, FAISS-style.
+    BOUNDED sample, FAISS-style. ``nlist`` defaults to max(2, ⌊√n⌋).
 
     FAISS's own IVF training subsamples to Clustering.max_points_per_centroid
     (default 256) points per centroid before running k-means; the reference's
@@ -66,11 +75,8 @@ def train_kmeans_centroids(
     is freed before Lloyd runs, so the iterations hold only the float32
     matrix (nlist=4096, d=384 -> ~1.6 GiB held, ~4.8 GiB transfer peak;
     nlist=39 at bench scale -> trivial). The guard below budgets the full
-    12 B/elem peak, not just the held matrix. The assignment step is
-    CHUNKED (``assign_block`` rows at a time, like FAISS), so its scratch
-    is O(assign_block * nlist), never the full s x k distance matrix
-    (which would be ~34 GiB at nlist=4096). When even the sample exceeds
-    ``max_train_bytes``, points-per-centroid shrinks to fit (floor 16);
+    12 B/elem peak, not just the held matrix. When even the sample exceeds
+    ``MAX_TRAIN_BYTES``, points-per-centroid shrinks to fit (floor 16);
     past that — huge nlist, e.g. the 100-TB-implied nlist~sqrt(N)~5e5 —
     the trainer falls back to distributed MLlib KMeans, which never
     collects the sample at all.
@@ -81,25 +87,49 @@ def train_kmeans_centroids(
     metamorphic test; clustering quality only shifts the recall/nprobe
     trade-off, which tests/test_ivf.py bounds.
     """
-    # one job answers both scalars (callers that already counted pass
-    # ``n_rows`` and only dim is fetched — the old form ran two jobs here
-    # plus a third in the caller)
+    n, d = _corpus_shape(emb, vec_col, n_rows)
+    if nlist is None:
+        nlist = max(2, int(n**0.5))
+    ppc = MAX_POINTS_PER_CENTROID
+    # 12 B/elem = true transfer peak (8 B Arrow float64 + 4 B float32
+    # target), not just the 4 B/elem matrix Lloyd holds afterwards
+    bytes_per_elem = 12
+    if bytes_per_elem * d * ppc * nlist > MAX_TRAIN_BYTES:
+        ppc = max(16, MAX_TRAIN_BYTES // (bytes_per_elem * d * nlist))
+    if bytes_per_elem * d * ppc * nlist > MAX_TRAIN_BYTES:
+        return _mllib_centroids(emb, nlist, vec_col=vec_col, seed=seed, max_iter=max_iter)
+    bound = max(nlist * ppc, nlist + 1)
+    x = _sample_matrix(emb, vec_col, n, d, bound, seed=seed, dtype=np.float32)
+    cents = _lloyd(x, nlist, iters=max_iter, seed=seed)
+    out = [(i, [float(v) for v in c]) for i, c in enumerate(cents)]
+    return emb.sparkSession.createDataFrame(
+        out, "cluster_id int, centroid array<double>"
+    )
+
+
+def _corpus_shape(emb: DataFrame, vec_col: str, n_rows: int | None = None) -> tuple[int, int]:
+    """(rows, width) of the corpus in one job; callers that already counted
+    pass ``n_rows`` and only the width is fetched. An empty corpus raises
+    here, before any sample job."""
     if n_rows is None:
         n, d = emb.agg(
             F.count(F.lit(1)), F.first(F.size(vec_col), ignorenulls=True)
         ).first()
-    else:
+    elif n_rows:
         n, d = n_rows, emb.select(F.size(vec_col)).first()[0]
-    n, d = int(n), int(d)
-    ppc = max_points_per_centroid
-    # 12 B/elem = true transfer peak (8 B Arrow float64 + 4 B float32
-    # target), not just the 4 B/elem matrix Lloyd holds afterwards
-    bytes_per_elem = 12
-    if bytes_per_elem * d * ppc * nlist > max_train_bytes:
-        ppc = max(16, max_train_bytes // (bytes_per_elem * d * nlist))
-    if bytes_per_elem * d * ppc * nlist > max_train_bytes:
-        return _mllib_centroids(emb, nlist, vec_col=vec_col, seed=seed, max_iter=max_iter)
-    bound = max(nlist * ppc, nlist + 1)
+    else:
+        n = 0
+    if not n:
+        raise ValueError("cannot train k-means on an empty corpus")
+    return int(n), int(d)
+
+
+def _sample_matrix(
+    emb: DataFrame, vec_col: str, n: int, d: int, bound: int, *, seed: int, dtype
+) -> np.ndarray:
+    """At most ``bound`` of the corpus's ``n`` vectors of width ``d`` as one
+    driver-side (rows, d) matrix of ``dtype``: the one k-means training
+    sample transfer."""
     sample = emb.select(vec_col)
     if n > bound:
         # seeded Bernoulli sample with slack, trimmed to the bound: one
@@ -112,16 +142,15 @@ def train_kmeans_centroids(
     # Arrow path: one columnar transfer held as the raw Arrow list buffer
     # (8 B/elem float64 — no pandas object-cell materialization, which
     # costs ~12 B/elem in per-row numpy headers alone), cast chunk-by-chunk
-    # into the preallocated float32 matrix and freed. Peak = Arrow buffer +
-    # float32 target = the 12 B/elem the guard above budgets.
+    # into the preallocated target matrix and freed.
     tbl = sample.toArrow()
     n_rows = tbl.num_rows
-    x = np.empty((n_rows, d), dtype=np.float32)
+    x = np.empty((n_rows, d), dtype=dtype)
     pos = 0
     for chunk in tbl.column(vec_col).chunks:
         flat = chunk.flatten()  # offset-adjusted float64 values array
         m = np.asarray(flat).reshape(-1, d)
-        x[pos : pos + len(m)] = m  # float64 -> float32 cast into place
+        x[pos : pos + len(m)] = m  # cast into place
         pos += len(m)
     del tbl
     if pos != n_rows:
@@ -132,24 +161,31 @@ def train_kmeans_centroids(
             f"k-means sample transfer lost rows: filled {pos} of {n_rows} "
             f"(null embedding slots in the sample?)"
         )
+    return x
+
+
+def _lloyd(x: np.ndarray, k: int, *, iters: int, seed: int) -> np.ndarray:
+    """Seeded Lloyd k-means on a (s, d) sample -> (min(k, s), d) centroids
+    of x's dtype. Empty clusters re-seed at the points farthest from their
+    center; the loop stops once no centroid moves by more than 1e-7."""
     s = len(x)
-    k = min(nlist, s)
+    k = min(k, s)
     rng = np.random.default_rng(seed)
-    cents = x[rng.choice(s, size=k, replace=False)].astype(np.float32)
+    cents = x[rng.choice(s, size=k, replace=False)].astype(x.dtype)
     # einsum with an explicit accumulate dtype: no full float64 copy of x
     x_sq = np.einsum("ij,ij->i", x, x, dtype=np.float64)
     assign = np.zeros(s, dtype=np.int64)
     adist = np.zeros(s, dtype=np.float64)
-    for _ in range(max_iter):
+    for _ in range(iters):
         # chunked argmin ||x-c||^2 = argmin -2x.c + ||c||^2 (x^2 const/row):
-        # peak scratch is O(assign_block * k), never the full s x k distance
+        # peak scratch is O(ASSIGN_BLOCK * k), never the full s x k distance
         # matrix; centroid sums accumulate per block, so no full float64
         # copy of the sample exists at any point either
         c_sq = (cents.astype(np.float64) ** 2).sum(axis=1)
         new64 = np.zeros((k, x.shape[1]), dtype=np.float64)
         counts = np.zeros(k, dtype=np.float64)
-        for lo in range(0, s, assign_block):
-            hi = min(lo + assign_block, s)
+        for lo in range(0, s, ASSIGN_BLOCK):
+            hi = min(lo + ASSIGN_BLOCK, s)
             d2 = -2.0 * (x[lo:hi] @ cents.T).astype(np.float64) + c_sq[None, :]
             blk = np.argmin(d2, axis=1)
             assign[lo:hi] = blk
@@ -162,22 +198,19 @@ def train_kmeans_centroids(
             # re-seed empty clusters at the points farthest from their center
             far = np.argsort(-(x_sq + adist))
             new64[~nonempty] = x[far[: (~nonempty).sum()]]
-        new = new64.astype(np.float32)
+        new = new64.astype(x.dtype)
         if np.allclose(new, cents, atol=1e-7):
             cents = new
             break
         cents = new
-    out = [(i, [float(v) for v in c]) for i, c in enumerate(cents)]
-    return emb.sparkSession.createDataFrame(
-        out, "cluster_id int, centroid array<double>"
-    )
+    return cents
 
 
 def _mllib_centroids(
     emb: DataFrame, nlist: int, *, vec_col: str, seed: int, max_iter: int
 ) -> DataFrame:
     """Distributed KMeans escape hatch for nlist too large to train
-    driver-side (the sample alone would blow ``max_train_bytes``). One full
+    driver-side (the sample alone would blow ``MAX_TRAIN_BYTES``). One full
     corpus pass per iteration — the price of never collecting vectors."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -348,38 +381,6 @@ def ivf_knn(
     )
     single = pool.rdd.getNumPartitions() == 1
     return merge_topk(partial, k, single_task=single).orderBy("query_id", "rank")
-
-
-def knn(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    *,
-    method: str = "auto",
-    nlist: int | None = None,
-    nprobe: int = 5,
-    exact_threshold: int = 100_000,
-    seed: int = 42,
-    **kw,
-) -> DataFrame:
-    """Strategy-choosing KNN (SURVEY.md section 4): exact brute force for
-    small corpora, IVF where scale warrants — the reference's footnote
-    heuristic (app.py:442-445) made explicit, mirroring Spark's own
-    broadcast-threshold idea."""
-    n = None
-    if method == "auto":
-        n = corpus.count()  # counted once; reused by the IVF branch below
-        method = "exact" if n <= exact_threshold else "ivf"
-    if method == "exact":
-        return exact_knn(corpus, queries, k, **kw)
-    if method != "ivf":
-        raise ValueError(f"unknown method {method!r}")
-    if n is None:
-        n = corpus.count()
-    nlist = nlist or max(1, int(n ** 0.5))
-    cents = train_kmeans_centroids(corpus, nlist, vec_col=kw.get("corpus_vec", "embedding"), seed=seed, n_rows=n)
-    assigned = assign_clusters(corpus, cents, vec_col=kw.get("corpus_vec", "embedding"))
-    return ivf_knn(assigned, cents, queries, k, nprobe, **kw)
 
 
 def write_ivf_store(

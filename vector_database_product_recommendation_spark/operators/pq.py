@@ -13,8 +13,10 @@ corpus fit hot in cluster memory.
 Spark-first mapping (no reference code involved — the reference has no
 PQ; this is a training-data-pipeline extension):
 - train: per-subspace Lloyd k-means on a bounded driver-side SAMPLE
-  (exactly how faiss trains PQ codebooks); the codebook is m*ksub*dsub
-  floats — kilobytes — broadcast to executors.
+  (exactly how faiss trains PQ codebooks), with the IVF quantizer's
+  trainer (operators/ivf.py): the same sample transfer, at most 256
+  points per centroid, and the same Lloyd loop. The codebook is
+  m*ksub*dsub floats — kilobytes — shipped in the task closures.
 - encode: mapInPandas over the corpus; one argmin-distance matmul per
   (Arrow batch, subspace). The corpus never shuffles and never collects.
 - search: asymmetric distance computation (ADC) — per query build an
@@ -38,41 +40,17 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from vector_database_product_recommendation_spark.operators.ivf import (
+    MAX_POINTS_PER_CENTROID,
+    _corpus_shape,
+    _lloyd,
+    _sample_matrix,
+)
 from vector_database_product_recommendation_spark.operators.knn import (
     _query_batch,
     merge_topk,
     rank_topk,
 )
-
-
-def _lloyd(x: np.ndarray, k: int, *, iters: int = 25, seed: int = 42) -> np.ndarray:
-    """Plain Lloyd k-means on a (n, d) sample -> (k', d) centroids.
-
-    Unique-point init: if the sample has <= k distinct rows, each becomes
-    its own centroid (zero distortion immediately — the lossless regime
-    the exactness test exploits). Otherwise seeded random init.
-    """
-    uniq = np.unique(x, axis=0)
-    if len(uniq) <= k:
-        return uniq.astype(np.float64)
-    rng = np.random.default_rng(seed)
-    cents = uniq[rng.choice(len(uniq), size=k, replace=False)].astype(np.float64)
-    for _ in range(iters):
-        # (n, k) squared distances via the expansion trick; argmin assign
-        d2 = (
-            (x * x).sum(axis=1)[:, None]
-            - 2.0 * (x @ cents.T)
-            + (cents * cents).sum(axis=1)[None, :]
-        )
-        assign = d2.argmin(axis=1)
-        new = np.empty_like(cents)
-        for j in range(len(cents)):
-            members = x[assign == j]
-            new[j] = members.mean(axis=0) if len(members) else cents[j]
-        if np.allclose(new, cents):
-            break
-        cents = new
-    return cents
 
 
 def train_pq(
@@ -81,32 +59,31 @@ def train_pq(
     m: int = 8,
     ksub: int = 16,
     vec_col: str = "embedding",
-    sample: int = 20_000,
     seed: int = 42,
 ) -> list[np.ndarray]:
     """Train per-subspace codebooks on a bounded sample.
 
-    Driver-side by contract: the sample is capped at ``sample`` rows (PQ
-    codebooks are always trained on a subsample at scale — the codebook
-    quality depends on the distribution, not the corpus size) and the
-    result is m arrays of (<=ksub, d/m) floats, kilobytes total.
+    Driver-side by contract: one float64 sample of at most
+    ``MAX_POINTS_PER_CENTROID * ksub`` rows (codebook quality depends on
+    the distribution, not the corpus size), then one Lloyd run per
+    subspace, seeded ``seed + j``. The result is m arrays of
+    (<=ksub, d/m) floats, kilobytes total. A subspace with at most ksub
+    distinct sample rows takes those rows as its codebook: zero
+    distortion, the lossless regime the exactness test exploits.
     """
-    n = emb.count()
-    frac = min(1.0, sample / max(n, 1))
-    rows = (
-        emb.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .sample(fraction=frac, seed=seed)
-        .limit(sample)
-        .collect()
-    )
-    x = np.asarray([r["v"] for r in rows], dtype=np.float64)
-    d = x.shape[1]
+    n, d = _corpus_shape(emb, vec_col)
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
+    x = _sample_matrix(
+        emb, vec_col, n, d, MAX_POINTS_PER_CENTROID * ksub, seed=seed, dtype=np.float64
+    )
     dsub = d // m
-    return [
-        _lloyd(x[:, j * dsub : (j + 1) * dsub], ksub, seed=seed + j) for j in range(m)
-    ]
+    books = []
+    for j in range(m):
+        sub = x[:, j * dsub : (j + 1) * dsub]
+        uniq = np.unique(sub, axis=0)
+        books.append(uniq if len(uniq) <= ksub else _lloyd(sub, ksub, iters=25, seed=seed + j))
+    return books
 
 
 def encode_pq(
@@ -121,13 +98,11 @@ def encode_pq(
     One mapInPandas pass; per Arrow batch and subspace the assignment is a
     single (batch x ksub) distance matmul. No shuffle, no collect.
     """
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast([c.tolist() for c in codebooks])
-    m = len(codebooks)
+    books = [np.asarray(c, dtype=np.float64) for c in codebooks]
+    m = len(books)
+    dsub = books[0].shape[1]
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books = [np.asarray(c, dtype=np.float64) for c in bc.value]
-        dsub = books[0].shape[1]
         for pdf in batches:
             if pdf.empty:
                 continue
