@@ -15,8 +15,10 @@ cheapest query amortizes JVM/session startup out of the per-query numbers
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -240,9 +242,9 @@ def main() -> None:
     # trimmed, with a STABLE priority order so the emitted set no longer
     # churns round-over-round (r21's PERF recorded 7 phantom
     # "dropped_from_bench" entries because the old slowest-first cut
-    # dropped queries that got FASTER): every query the r21 line emitted
-    # stays in the line (so r22's PERF comparison sees zero drops), then
-    # the remaining slots fill slowest-first. Values round to 10 ms in
+    # dropped queries that got FASTER): every query the newest committed
+    # line emitted stays in the line (line_queries), then the remaining
+    # slots fill slowest-first. Values round to 10 ms in
     # the line only (BENCH_SUMMARY.json keeps full precision), and the
     # bulky floor/decomposition extras live in BENCH_SUMMARY.json only,
     # which together fit ~20 more queries than r21's line carried.
@@ -267,7 +269,7 @@ def main() -> None:
             compact.pop(k, None)
         compact["full_summary"] = "BENCH_SUMMARY.json"
         by_time = sorted(timings, key=lambda n: -timings[n])
-        pinned = [n for n in _R21_LINE_QUERIES if n in timings]
+        pinned = [n for n in line_queries() if n in timings]
         order = pinned + [n for n in by_time if n not in set(pinned)]
         keep = len(order)
         line = json.dumps(compact, separators=(",", ":"))
@@ -281,29 +283,23 @@ def main() -> None:
     spark.stop()
 
 
-# The 49 queries the round-21 stdout line carried (BENCH_r21.json "queries"
-# keys): pinned into every future line so the driver's round-over-round
-# PERF diff never sees a query vanish from the bench merely because it got
-# faster. Remaining line budget fills slowest-first on top of these.
-_R21_LINE_QUERIES = [
-    "dedup_components", "ann_tradeoff", "pq_knn_refined",
-    "q11_important_parts", "dedup_embedding_lsh", "dedup_ngram_jaccard",
-    "q21_waiting_suppliers", "hybrid_search", "bm25_search",
-    "q2_min_cost_supplier", "ivf_store_pruned_probe", "tfidf_search",
-    "ivf_store_exactprobe", "q8_market_share", "knn_exact_batch",
-    "q7_volume_shipping", "simhash_signatures", "ivf_knn_probe",
-    "dedup_embedding_cosine", "ivf_knn_exactprobe", "pq_knn_exactrefine",
-    "partitioned_orders_pruned", "q3_shipping_priority", "sql_api_star_join",
-    "json_roundtrip_events", "q5_regional_revenue", "events_props_map_explode",
-    "events_sessionization", "q4_order_priority", "q9_profit_by_nation_year",
-    "free_text_filtered_search", "free_text_search", "dedup_winnowing",
-    "hypertable_rollup", "top_parts_per_brand", "corpus_prep_pipeline",
-    "dedup_minhash_lsh", "orc_roundtrip_embeddings", "sq8_knn",
-    "winnow_fingerprints", "q20_heavy_red_suppliers", "q10_returned_items",
-    "q18_large_orders", "doc_context_chunks", "q13_order_count_distribution",
-    "centroid_by_label", "minhash_signatures", "events_range_join",
-    "q12_priority_mix",
-]
+def line_queries(repo: str = REPO) -> list[str]:
+    """The query names the newest committed ``BENCH_r<round>.json`` line
+    carried (its ``parsed.queries`` keys): pinned into every future line
+    so the round-over-round PERF diff never sees a query vanish from the
+    bench merely because it got faster. Each line carries its
+    predecessor's names, so membership only grows. Remaining line budget
+    fills slowest-first on top of these."""
+    rounds = {}
+    for path in glob.glob(os.path.join(repo, "BENCH_r*.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
+        if m:
+            rounds[int(m.group(1))] = path
+    if not rounds:
+        return []
+    with open(rounds[max(rounds)]) as fh:
+        parsed = json.load(fh).get("parsed") or {}
+    return list(parsed.get("queries") or {})
 
 
 if __name__ == "__main__":

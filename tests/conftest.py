@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass
 
 import numpy as np
@@ -17,6 +18,32 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("vdb-rec-tests", cpus="8")
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_run_by(spark):
+    """``jobs_run_by(fn, label)``: the Spark jobs ``fn`` runs, read from
+    statusTracker() under a job group of its own."""
+
+    def count(fn, label: str) -> int:
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group, marker = f"jobs-{label}", f"jobs-{label}-marker"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+            # listener events land asynchronously but in order: once a
+            # later marker job is visible, every job of ``group`` is too
+            sc.setJobGroup(marker, marker)
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 10
+        while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -1,0 +1,40 @@
+"""bench.py's stdout line pins the queries of the newest committed
+``BENCH_r<round>.json`` line, so membership only grows."""
+
+from __future__ import annotations
+
+import importlib.util
+import json
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _bench():
+    spec = importlib.util.spec_from_file_location("bench", os.path.join(REPO, "bench.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _line(path: str) -> list[str]:
+    with open(path) as fh:
+        return list(json.load(fh)["parsed"]["queries"])
+
+
+def test_line_queries_contain_every_name_the_r21_line_carried():
+    names = _bench().line_queries()
+    r21 = _line(os.path.join(REPO, "BENCH_r21.json"))
+    assert len(r21) == 49
+    assert set(r21) <= set(names)
+    assert len(names) >= len(_line(os.path.join(REPO, "BENCH_r22.json")))
+
+
+def test_line_queries_read_the_highest_round_only(tmp_path):
+    def write(name: str, queries: list[str]) -> None:
+        (tmp_path / name).write_text(json.dumps({"parsed": {"queries": dict.fromkeys(queries, 1.0)}}))
+
+    write("BENCH_r9.json", ["a"])
+    write("BENCH_r10.json", ["a", "b"])
+    write("BENCH_r10_c8.json", ["c"])  # a core-count variant, not a round
+    assert _bench().line_queries(str(tmp_path)) == ["a", "b"]

@@ -5,15 +5,13 @@ J5 compare, hybrid(alpha=1) == vector ranking, filtered hybrid(alpha=0.7)
 against a numpy TF-IDF blend and the E3 side-by-side at full probe. The
 default engine serves from driver arrays; a second one, its array bound
 at 0, takes the Spark path, and both must give the oracle's rows and the
-same schema. Runs without the reference's own artifacts, unlike
-tests/test_api.py."""
+same schema. The E3 and AN5 demos share one review index per engine."""
 
 from __future__ import annotations
 
 import math
 import os
 import re
-import time
 
 import numpy as np
 import pandas as pd
@@ -183,29 +181,48 @@ def test_compare_unknown_ids_names_them(engine, spark_engine, ref_fixture):
 def test_ann_full_probe_equals_exact(engine):
     """E3: probing every IVF list degenerates to exact search, ids and
     scores alike."""
-    exact, ivf = engine.ann_review_search(11, k=K, nprobe=4, nlist=4)
+    nlist = math.isqrt(engine.review_emb.count())
+    exact, ivf = engine.ann_review_search(11, k=K, nprobe=nlist)
     e = [(r["neighbor_id"], r["score"]) for r in exact.collect()]
     assert len(e) == K and 11 not in {n for n, _ in e}
     assert [(r["neighbor_id"], r["score"]) for r in ivf.collect()] == e
 
 
-def test_ann_tradeoff_table_derives_nlist(engine, monkeypatch):
-    """AN5 on the review corpus: with nlist omitted the index has
-    ⌊√n⌋ lists, and probing all of them gives precision == MRR == 1.0."""
-    from vector_database_product_recommendation_spark.operators import eval as ann_eval
+def test_ann_tradeoff_table_derives_nlist(engine):
+    """AN5 on the review corpus: the index has ⌊√n⌋ lists, and probing
+    all of them gives precision == MRR == 1.0."""
+    nlist = math.isqrt(engine.review_emb.count())
+    rows = engine.ann_tradeoff_table(k=K, nprobes=(nlist,)).collect()
+    cents, _ = engine._review_index()
+    assert cents.count() == nlist
+    assert [(r["nprobe"], r["precision_at_k"], r["mrr"]) for r in rows] == [(nlist, 1.0, 1.0)]
+
+
+def test_review_index_is_trained_once_per_engine(engine, monkeypatch):
+    """E3 and AN5 read one review index per engine, built on the first
+    such call: two E3 calls and an AN5 call train k-means once, and
+    nprobe = nlist still equals exact search."""
+    from vector_database_product_recommendation_spark.api import ProductSearchEngine
+    from vector_database_product_recommendation_spark.operators import ivf
 
     trained = []
-    train = ann_eval.train_kmeans_centroids
+    train = ivf.train_kmeans_centroids
 
     def spy(*a, **kw):
         trained.append(train(*a, **kw))
         return trained[-1]
 
-    monkeypatch.setattr(ann_eval, "train_kmeans_centroids", spy)
+    monkeypatch.setattr(ivf, "train_kmeans_centroids", spy)
+    fresh = ProductSearchEngine(engine.catalog, reviews=engine.reviews, review_emb=engine.review_emb)
     nlist = math.isqrt(engine.review_emb.count())
-    rows = engine.ann_tradeoff_table(k=K, nprobes=(nlist,)).collect()
-    assert trained[0].count() == nlist
-    assert [(r["nprobe"], r["precision_at_k"], r["mrr"]) for r in rows] == [(nlist, 1.0, 1.0)]
+    for q_idx in (3, 11):
+        exact, probed = fresh.ann_review_search(q_idx, k=K, nprobe=nlist)
+        e = [(r["neighbor_id"], r["score"]) for r in exact.collect()]
+        assert [(r["neighbor_id"], r["score"]) for r in probed.collect()] == e
+    rows = fresh.ann_tradeoff_table(k=K, nprobes=(nlist,)).collect()
+    assert [(r["precision_at_k"], r["mrr"]) for r in rows] == [(1.0, 1.0)]
+    assert len(trained) == 1
+    assert fresh._review_index() is fresh._review_index()
 
 
 def test_hybrid_alpha1_ranks_like_vector(engine):
@@ -267,28 +284,7 @@ def test_hybrid_blend_matches_numpy_over_filtered_candidates(engine, ref_fixture
     _assert_ranked(rows, list(fx.ids[idx][order]), scores[order])
 
 
-def _jobs_run_by(spark, fn, label: str) -> int:
-    """Spark jobs ``fn`` runs, read from statusTracker() under a job group
-    of its own."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group, marker = f"engine-{label}", f"engine-{label}-marker"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        # listener events land asynchronously but in order: once a later
-        # marker job is visible, every job of ``group`` is too
-        sc.setJobGroup(marker, marker)
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.monotonic() + 10
-    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
-
-
-def test_serving_caches_right_sized_and_jobs_bounded(spark, engine, spark_engine, ref_fixture):
+def test_serving_caches_right_sized_and_jobs_bounded(jobs_run_by, engine, spark_engine, ref_fixture):
     """Products and their vectors are one catalog table, sized by the
     shared rule (one partition per ~25k rows) and materialized at
     construction. Within the driver-array bound a vector, filtered, item
@@ -308,8 +304,8 @@ def test_serving_caches_right_sized_and_jobs_bounded(spark, engine, spark_engine
         "compare": (lambda e: e.compare_products(pids), 1),
     }
     for label, (request, spark_bound) in requests.items():
-        assert _jobs_run_by(spark, lambda: request(engine).collect(), label) == 0, label
-        jobs = _jobs_run_by(spark, lambda: request(spark_engine).collect(), f"{label}-spark")
+        assert jobs_run_by(lambda: request(engine).collect(), label) == 0, label
+        jobs = jobs_run_by(lambda: request(spark_engine).collect(), f"{label}-spark")
         assert jobs <= spark_bound, label
 
 
@@ -324,7 +320,7 @@ def test_over_the_bound_the_constructor_holds_no_arrays(engine, spark_engine, re
     ]
 
 
-def test_query_width_is_checked_before_any_spark_work(spark, engine, spark_engine, monkeypatch):
+def test_query_width_is_checked_before_any_spark_work(jobs_run_by, engine, spark_engine, monkeypatch):
     """A custom encoder of the wrong width fails with a ValueError naming
     both widths on either path and in either mode, running no job."""
     dim = engine.embedding_dim
@@ -336,4 +332,4 @@ def test_query_width_is_checked_before_any_spark_work(spark, engine, spark_engin
                 with pytest.raises(ValueError, match=rf"width {dim + 1}\b.* {dim}\b"):
                     e.search_products("fire tablet", k=K, mode=mode)
 
-            assert _jobs_run_by(spark, request, f"width-{path}-{mode}") == 0
+            assert jobs_run_by(request, f"width-{path}-{mode}") == 0

@@ -17,6 +17,7 @@ from vector_database_product_recommendation_spark.functions.embed import free_te
 from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff
 from vector_database_product_recommendation_spark.operators.ivf import (
     assign_clusters,
+    build_ivf_index,
     ivf_knn,
     read_ivf_store,
     train_kmeans_centroids,
@@ -91,7 +92,8 @@ def test_mllib_fallback_past_the_byte_budget(emb, monkeypatch):
 
 
 def test_ann_tradeoff_shape_and_monotonicity(emb):
-    rows = ann_tradeoff(emb, n_queries=8, k=5, nprobes=(1, NLIST), nlist=NLIST).collect()
+    index = build_ivf_index(emb, nlist=NLIST)
+    rows = ann_tradeoff(emb, index, n_queries=8, k=5, nprobes=(1, NLIST)).collect()
     assert [r["nprobe"] for r in rows] == [1, NLIST]
     for r in rows:
         assert 0.0 <= r["precision_at_k"] <= 1.0
@@ -122,7 +124,7 @@ def test_ann_tradeoff_exact_at_full_probe(spark, sf_dir):
     out = {
         r["nprobe"]: r
         for r in ann_tradeoff(
-            emb, n_queries=16, k=5, nprobes=(1, nlist), nlist=nlist
+            emb, build_ivf_index(emb, nlist=nlist), n_queries=16, k=5, nprobes=(1, nlist)
         ).collect()
     }
     assert out[nlist]["precision_at_k"] == 1.0

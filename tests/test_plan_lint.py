@@ -74,7 +74,7 @@ def test_query_local_pins_released_between_queries(spark, sf_dir):
     assert n_cached() <= cached_after_one
     # a different pinning query evicts the previous query's pins (the
     # session-scoped tfidf/embedding ARTIFACTS it builds are not pins and
-    # are torn down by artifacts.clear, so assert on the pin registry)
+    # live as long as the session, so assert on the pin registry)
     qmap["hybrid_search"](spark, sf_dir).count()
     assert lifetime.pinned_count() == 1  # only hybrid's sparse pin lives
     lifetime.release_pins()

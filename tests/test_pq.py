@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -153,3 +154,27 @@ def test_pq_knn_refine_broadcasts_candidates_not_corpus(spark, sf_dir):
     # the corpus scan must not feed an exchange: candidates broadcast onto it
     assert "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+def test_pq_refine_broadcast_gated_on_candidate_rows(spark, sf_dir, monkeypatch):
+    """The refine candidates broadcast onto the corpus scan only while
+    queries * fetch stays within REFINE_BROADCAST_MAX_ROWS: pq_knn_refined
+    (8 queries x 40) keeps that BroadcastExchange, pq_knn_exactrefine
+    (8 x 5,000,000) joins without it and returns the same rows as when
+    forced to broadcast."""
+    from vector_database_product_recommendation_spark import registry
+    from vector_database_product_recommendation_spark.operators import pq
+
+    def broadcasts(df) -> int:
+        return len(re.findall(r"^\(\d+\) BroadcastExchange$", plan_of(df), re.M))
+
+    qmap = registry.queries()
+    refined = broadcasts(qmap["pq_knn_refined"](spark, sf_dir))
+    exact = qmap["pq_knn_exactrefine"](spark, sf_dir)
+    plain = broadcasts(exact)
+    monkeypatch.setattr(pq, "REFINE_BROADCAST_MAX_ROWS", 10**12)
+    forced = qmap["pq_knn_exactrefine"](spark, sf_dir)
+    # the query batch broadcasts on every path; the candidates only below the bound
+    assert refined == broadcasts(forced) == 2
+    assert plain == 1
+    assert exact.collect() == forced.collect()

@@ -70,6 +70,7 @@ def test_ann_tradeoff_on_reference_reviews(spark):
     IVF header), nprobe sweep — recall must land in the reference's
     regime and be monotone to exactness."""
     from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff
+    from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
 
     mat = np.load(f"{REF}/review_embeddings.npy").astype(np.float64)
     emb = spark.createDataFrame(
@@ -79,7 +80,7 @@ def test_ann_tradeoff_on_reference_reviews(spark):
     rows = {
         r["nprobe"]: r
         for r in ann_tradeoff(
-            emb, n_queries=64, k=10, nprobes=(1, 5, 20, 39), nlist=39, seed=42
+            emb, build_ivf_index(emb, nlist=39, seed=42), n_queries=64, k=10, nprobes=(1, 5, 20, 39)
         ).collect()
     }
     # nprobe == nlist is exact

@@ -90,5 +90,5 @@ def test_base_tf_without_max_features_raises(docs):
         with pytest.raises(ValueError, match="max_features"):
             TfidfModel(docs, "doc_id", "text", STOPWORDS_EN, base_tf=base.tf)
     finally:
-        for df in base.persisted():
+        for df in (base.tf, base.dfreq):
             df.unpersist()

@@ -1,4 +1,4 @@
-"""Query-scoped persist lifetimes (guide section 5: unpersist when done).
+"""Persist lifetimes: query-scoped pins and session-scoped artifacts.
 
 Several composite queries persist an intermediate that feeds two or more
 consumers inside the SAME query (LSH signature tables, winnowing
@@ -15,14 +15,18 @@ START of the next query (not at return) because queries return lazy
 DataFrames — the pins must survive until the caller materializes the
 result.
 
-Artifact-lifetime persists (fitted TF-IDF tables, the IVF assignment,
-encoded documents, PQ codes) are NOT pins: they are session-scoped by
-design and torn down by ``artifacts.clear()``.
+Session-scoped artifacts (fitted TF-IDF tables, the IVF assignment,
+signature tables, encoded documents, PQ codes, the serving catalog) are
+NOT pins: each is cached once, under :func:`persist_right_sized`, and
+lives as long as the session (``artifacts.py`` memoizes them per
+session and corpus).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+ROWS_PER_PARTITION = 25_000
 
 _PINS: list[DataFrame] = []
 _CURRENT_QUERY: str | None = None
@@ -67,3 +71,30 @@ def release_pins() -> None:
 def pinned_count() -> int:
     """How many query-local pins are currently live (tests)."""
     return len(_PINS)
+
+
+def persist_right_sized(df: DataFrame) -> DataFrame:
+    """``df`` persisted, materialized with one count and cached at ~25k
+    rows per partition (at least 1, at most ``defaultParallelism``): the
+    one rule for every session-scoped artifact.
+
+    When the materialized cache holds more partitions than its rows need,
+    or its rows fit one partition, the cached frame is coalesced (no
+    shuffle) to that number and cached in its turn; the wide copy is
+    released before this returns, so storage never holds both. A
+    one-partition artifact is thus always cached under ``coalesce(1)``,
+    whose plan declares the single partition: a sort or a per-key window
+    over it needs no exchange. A tiny table spread over shuffle partitions
+    pays per-task overhead on every read and never takes the
+    single-partition paths of the kernels (knn.py); at 100 TB the same
+    rule yields thousands of partitions."""
+    wide = df.persist()
+    n = wide.count()
+    cap = int(wide.sparkSession.sparkContext.defaultParallelism)
+    want = max(1, min(cap, n // ROWS_PER_PARTITION + 1))
+    if want > 1 and wide.rdd.getNumPartitions() <= want:
+        return wide
+    out = wide.coalesce(want).persist()
+    out.count()
+    wide.unpersist(blocking=True)
+    return out

@@ -2,6 +2,9 @@
 instrument (SURVEY.md section 5): IVF results scored against exact flat
 search as ground truth, reported as Precision@K / MRR / avg ms per query
 over a query sample, per nprobe (ann_tradeoff_table.csv:1-6, AN5/J6/A-g7).
+Like the reference, which evaluates its one shipped index, the harness
+evaluates a prebuilt IVF index (``ivf.build_ivf_index``) and trains
+nothing itself.
 
 Output schema matches the reference table: (nprobe, precision_at_k, mrr,
 avg_query_time_ms, queries_used).
@@ -24,51 +27,31 @@ import time
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.operators.ivf import (
-    assign_clusters,
-    ivf_knn,
-    train_kmeans_centroids,
-)
+from vector_database_product_recommendation_spark.operators.ivf import ivf_knn
 from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
 
 def ann_tradeoff(
     emb: DataFrame,
+    index: tuple[DataFrame, DataFrame],
     *,
     n_queries: int = 64,
     k: int = 10,
     nprobes: tuple[int, ...] = (1, 2, 5, 10, 20),
-    nlist: int | None = None,
-    seed: int = 42,
-    kmeans_iter: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """Regenerate the reference's nprobe trade-off table on any corpus.
-
-    kmeans_iter defaults to 10: a coarse quantizer converges to useful
-    centroids in a handful of iterations, and recall is measured against
-    the exact oracle anyway. Pass ``index=(centroids, assigned)`` to
-    evaluate a prebuilt IVF index (the reference evaluates the persisted
-    FAISS index, not a fresh train)."""
+    """Regenerate the reference's nprobe trade-off table on any corpus,
+    for a prebuilt IVF ``index=(centroids, assigned)`` over ``emb``
+    (``ivf.build_ivf_index``): the reference evaluates its persisted FAISS
+    index, not a fresh train."""
     spark = emb.sparkSession
+    cents, assigned = index
 
     queries = (
         emb.filter(F.col(id_col) < n_queries)
         .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"))
     )
-
-    if index is not None:
-        cents, assigned = index
-        owns_assigned = False
-    else:
-        cents = train_kmeans_centroids(
-            emb, nlist, vec_col=vec_col, seed=seed, max_iter=kmeans_iter
-        )
-        assigned = assign_clusters(emb, cents, vec_col=vec_col).persist()
-        assigned.count()  # materialize so per-nprobe timing excludes assignment
-        owns_assigned = True
 
     # Collect the (small) query batch and centroid table ONCE — the sweep
     # reuses them across every per-nprobe probe and the exact oracle, so
@@ -165,8 +148,6 @@ def ann_tradeoff(
     ]
     for _, _, ivf in per_probe:
         ivf.unpersist()
-    if owns_assigned:
-        assigned.unpersist()
     exact.unpersist()
     return spark.createDataFrame(
         out_rows,

@@ -12,8 +12,10 @@ Spark-first mapping:
   and the Lloyd loop here also train the PQ codebooks (operators/pq.py).
 - assign/build (AN3): row-local argmax-dot against the broadcast centroid
   matrix inside mapInPandas (one BLAS matmul per Arrow batch; the corpus
-  NEVER shuffles). Persisting `write.partitionBy('cluster_id')` turns
-  nprobe pruning into native parquet partition pruning.
+  NEVER shuffles). ``build_ivf_index`` is the one index builder: train,
+  assign, and cache the assignment under the one persist rule. Persisting
+  `write.partitionBy('cluster_id')` turns nprobe pruning into native
+  parquet partition pruning.
 - probe (AN4): rank centroids per query (driver-side — the centroid table
   is tiny by construction), keep top-nprobe, then score ONLY corpus rows in
   probed clusters: a broadcast join on cluster_id followed by the same
@@ -31,6 +33,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from vector_database_product_recommendation_spark.lifetime import persist_right_sized
 from vector_database_product_recommendation_spark.operators.knn import (
     _query_batch,
     merge_topk,
@@ -55,7 +58,6 @@ def train_kmeans_centroids(
     vec_col: str = "embedding",
     seed: int = 42,
     max_iter: int = 20,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """AN2: (cluster_id, centroid array<double>) — seeded Lloyd on a
     BOUNDED sample, FAISS-style. ``nlist`` defaults to max(2, ⌊√n⌋).
@@ -87,7 +89,7 @@ def train_kmeans_centroids(
     metamorphic test; clustering quality only shifts the recall/nprobe
     trade-off, which tests/test_ivf.py bounds.
     """
-    n, d = _corpus_shape(emb, vec_col, n_rows)
+    n, d = _corpus_shape(emb, vec_col)
     if nlist is None:
         nlist = max(2, int(n**0.5))
     ppc = MAX_POINTS_PER_CENTROID
@@ -107,18 +109,10 @@ def train_kmeans_centroids(
     )
 
 
-def _corpus_shape(emb: DataFrame, vec_col: str, n_rows: int | None = None) -> tuple[int, int]:
-    """(rows, width) of the corpus in one job; callers that already counted
-    pass ``n_rows`` and only the width is fetched. An empty corpus raises
+def _corpus_shape(emb: DataFrame, vec_col: str) -> tuple[int, int]:
+    """(rows, width) of the corpus in one job. An empty corpus raises
     here, before any sample job."""
-    if n_rows is None:
-        n, d = emb.agg(
-            F.count(F.lit(1)), F.first(F.size(vec_col), ignorenulls=True)
-        ).first()
-    elif n_rows:
-        n, d = n_rows, emb.select(F.size(vec_col)).first()[0]
-    else:
-        n = 0
+    n, d = emb.agg(F.count(F.lit(1)), F.first(F.size(vec_col), ignorenulls=True)).first()
     if not n:
         raise ValueError("cannot train k-means on an empty corpus")
     return int(n), int(d)
@@ -255,6 +249,24 @@ def assign_clusters(
             yield pdf[out_cols]
 
     return emb.mapInPandas(assign, schema)
+
+
+def build_ivf_index(
+    emb: DataFrame,
+    *,
+    nlist: int | None = None,
+    seed: int = 42,
+    max_iter: int = 10,
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, assigned): the one IVF index builder. Trains the coarse
+    quantizer (``max_iter`` 10: a coarse quantizer converges to useful
+    centroids in a handful of iterations, and recall is measured against
+    the exact oracle anyway), assigns the corpus and caches the assignment
+    under ``lifetime.persist_right_sized``. Not memoized: its callers keep
+    one index per corpus (``artifacts.ivf_index`` per session and corpus,
+    ``api.ProductSearchEngine`` per engine)."""
+    cents = train_kmeans_centroids(emb, nlist, seed=seed, max_iter=max_iter)
+    return cents, persist_right_sized(assign_clusters(emb, cents))
 
 
 def ivf_knn(

@@ -52,6 +52,10 @@ from vector_database_product_recommendation_spark.operators.knn import (
     rank_topk,
 )
 
+# the most refine candidates (queries * fetch) pq_knn broadcasts onto the
+# corpus scan; past it they take a sort-merge join
+REFINE_BROADCAST_MAX_ROWS = 1_000_000
+
 
 def train_pq(
     emb: DataFrame,
@@ -145,9 +149,10 @@ def pq_knn(
     O(tasks * queries * fetch) rows instead of every scored candidate.
 
     If ``emb`` is given, the ADC top ``k*refine_factor`` candidates are
-    re-scored exactly against the full-precision vectors (the tiny
-    candidate set is BROADCAST onto the corpus scan, so the corpus never
-    shuffles) and re-ranked; output is then (query_id, neighbor_id,
+    re-scored exactly against the full-precision vectors (a candidate set
+    of at most ``REFINE_BROADCAST_MAX_ROWS`` rows is BROADCAST onto the
+    corpus scan, so the corpus never shuffles; a larger one takes a
+    sort-merge join) and re-ranked; output is then (query_id, neighbor_id,
     score, rank) with exact scores, comparable to exact_knn's.
     """
     sess = codes_df.sparkSession
@@ -214,10 +219,13 @@ def pq_knn(
             "rank",
         ).orderBy("query_id", "rank")
 
-    # exact refine: re-score the tiny candidate set with full vectors.
-    # The candidate table (queries * fetch rows) broadcasts onto the
-    # corpus scan — emb itself never shuffles; only the rescored
-    # candidates cross the rank-window exchange.
+    # exact refine: re-score the candidate set with full vectors. A
+    # candidate table of at most REFINE_BROADCAST_MAX_ROWS rows
+    # (queries * fetch) broadcasts onto the corpus scan — emb itself never
+    # shuffles; only the rescored candidates cross the rank-window
+    # exchange. Past the bound (a refine_factor near the corpus size makes
+    # the candidates queries x corpus rows) a sort-merge join shuffles both
+    # sides instead: the corpus is then the smaller one.
     from vector_database_product_recommendation_spark.functions.vectors import dot
 
     full = emb.select(
@@ -227,8 +235,13 @@ def pq_knn(
         list(zip(q_ids.tolist(), q_mat.tolist())),
         "query_id long, qv array<double>",
     )
+    pairs = cand.select("query_id", "neighbor_id")
+    if len(q_ids) * fetch <= REFINE_BROADCAST_MAX_ROWS:
+        pairs = F.broadcast(pairs)
+    else:
+        pairs = pairs.hint("merge")
     rescored = (
-        full.join(F.broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
+        full.join(pairs, "neighbor_id")
         .join(F.broadcast(qdf), "query_id")
         .select(
             "query_id",

@@ -42,7 +42,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
-from vector_database_product_recommendation_spark.lifetime import pin
+from vector_database_product_recommendation_spark.lifetime import persist_right_sized, pin
 
 # sklearn's (?u)\b\w\w+\b — runs of >=2 word chars (ASCII corpus).
 TOKEN_PATTERN = r"\w\w+"
@@ -97,7 +97,8 @@ def _doc_term_counts(
 
 
 class TfidfModel:
-    """The fitted state (tf, df, n) with the per-scan shuffles persisted —
+    """The fitted state (tf, df, n) with the per-scan shuffles cached under
+    the one persist rule (``lifetime.persist_right_sized``) —
     every downstream consumer (weights, query transform, search, hybrid)
     derives from these without re-running tokenization/aggregation. The
     warehouse-scale analog is writing the tf/df tables once per corpus."""
@@ -112,8 +113,8 @@ class TfidfModel:
         base_tf: DataFrame | None = None,
     ):
         if base_tf is not None and max_features is None:
-            # an uncapped model over base_tf would share (and, on teardown,
-            # unpersist) the sibling's cached tf frame
+            # an uncapped model over base_tf would only be the sibling's
+            # own fit, sharing its cached tf frame
             raise ValueError("base_tf seeds a capped refit only: pass max_features")
         self.docs = docs
         self.id_col = id_col
@@ -153,18 +154,11 @@ class TfidfModel:
                 .select("term")
             )
             tf = tf.join(F.broadcast(vocab), "term")
-        self.tf = tf.persist()
-        self.dfreq = self.tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df")
-        ).persist()
+        self.tf = persist_right_sized(tf)
+        self.dfreq = persist_right_sized(
+            self.tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        )
         self._normalized_df: DataFrame | None = None
-
-    def persisted(self) -> list[DataFrame]:
-        """Every persisted DataFrame this model owns (for teardown)."""
-        out = [self.tf, self.dfreq]
-        if self._normalized_df is not None:
-            out.append(self._normalized_df)
-        return out
 
     def _raw(self, tf: DataFrame, keys: list[str]) -> DataFrame:
         # (1 + n) enters as an exact integer literal — value-identical to
@@ -182,7 +176,7 @@ class TfidfModel:
 
     def _normalized(self) -> DataFrame:
         """The UNROUNDED l2-normalized weight table (doc_id, term, wn),
-        persisted once — every rounding level is a projection over it, so
+        cached once — every rounding level is a projection over it, so
         the normalize join+aggregate runs once per model instead of once
         per rounding level (and pins one cached copy, not one per level)."""
         if self._normalized_df is None:
@@ -190,10 +184,10 @@ class TfidfModel:
             norms = raw.groupBy("doc_id").agg(
                 F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
             )
-            self._normalized_df = (
-                raw.join(norms, "doc_id")
-                .select("doc_id", "term", (F.col("w") / F.col("nrm")).alias("wn"))
-                .persist()
+            self._normalized_df = persist_right_sized(
+                raw.join(norms, "doc_id").select(
+                    "doc_id", "term", (F.col("w") / F.col("nrm")).alias("wn")
+                )
             )
         return self._normalized_df
 

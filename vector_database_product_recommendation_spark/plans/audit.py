@@ -69,13 +69,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     ]
 
 
-def partition_filters(df: DataFrame) -> list[str]:
-    return [
-        m.group(1)
-        for m in re.finditer(r"PartitionFilters: \[([^\]]*)\]", spark_plan(df))
-    ]
-
-
 def plan_summary(df: DataFrame) -> dict:
     """One-stop plan facts for debugging and bench annotations."""
     p = executed_plan(df)
