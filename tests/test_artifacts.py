@@ -36,7 +36,7 @@ def test_spelled_out_defaults_hit_the_same_entry(spark, sf_dir):
     assert artifacts.fitted_tfidf(spark, sf_dir, max_features=None) is artifacts.fitted_tfidf(
         spark, sf_dir
     )
-    assert artifacts.ivf_index(spark, sf_dir, seed=42) is artifacts.ivf_index(spark, sf_dir)
+    assert artifacts.ivf_index(spark, sf_dir, nlist=None) is artifacts.ivf_index(spark, sf_dir)
 
 
 def plan_of(df) -> str:
@@ -74,18 +74,32 @@ def test_wide_frame_is_coalesced_materialized_and_the_wide_copy_released(spark):
     out.unpersist()
 
 
-def test_one_partition_frame_is_cached_declared_single(spark):
-    """A frame already at one partition is still cached once, under
-    coalesce(1): its plan then declares the single partition, so a sort
-    over it adds no exchange."""
-    df = spark.range(100).selectExpr("id", "id + 1 AS y").coalesce(1).selectExpr("id", "y")
-    got = []
-    assert _new_cached_rdds(spark, lambda: got.append(persist_right_sized(df))) == [1]
+def test_one_partition_frame_is_cached_declared_single(spark, jobs_run_by):
+    """A frame already at one partition is cached once, under coalesce(1),
+    and filled by one count: its plan then declares the single partition,
+    so a sort over it adds no exchange."""
+
+    def one_partition():
+        return spark.range(100).selectExpr("id", "id + 1 AS y").coalesce(1).selectExpr("id", "y")
+
+    df = one_partition()
+    got, cached = [], []
+    jobs = jobs_run_by(
+        lambda: cached.extend(
+            _new_cached_rdds(spark, lambda: got.append(persist_right_sized(df)))
+        ),
+        "rule-one-partition",
+    )
+    assert cached == [1]
     (out,) = got
     assert out.is_cached and out.rdd.getNumPartitions() == 1
     assert "Exchange" not in plan_of(out.orderBy("y"))
     assert sorted(map(tuple, out.collect())) == [(i, i + 1) for i in range(100)]
-    out.unpersist()
+    out.unpersist(blocking=True)
+    # the jobs of filling that one cache with one count: no second copy
+    once = one_partition().coalesce(1).persist()
+    assert jobs == jobs_run_by(once.count, "one-cache-one-count")
+    once.unpersist()
 
 
 def test_frame_narrower_than_its_rows_need_is_cached_as_is(spark):

@@ -157,8 +157,9 @@ def test_pq_knn_refine_broadcasts_candidates_not_corpus(spark, sf_dir):
 
 
 def test_pq_refine_broadcast_gated_on_candidate_rows(spark, sf_dir, monkeypatch):
-    """The refine candidates broadcast onto the corpus scan only while
-    queries * fetch stays within REFINE_BROADCAST_MAX_ROWS: pq_knn_refined
+    """The refine candidates are forced onto a broadcast only while
+    queries * fetch stays within REFINE_BROADCAST_MAX_ROWS: with the
+    planner's own size-based broadcast switched off, pq_knn_refined
     (8 queries x 40) keeps that BroadcastExchange, pq_knn_exactrefine
     (8 x 5,000,000) joins without it and returns the same rows as when
     forced to broadcast."""
@@ -169,12 +170,19 @@ def test_pq_refine_broadcast_gated_on_candidate_rows(spark, sf_dir, monkeypatch)
         return len(re.findall(r"^\(\d+\) BroadcastExchange$", plan_of(df), re.M))
 
     qmap = registry.queries()
-    refined = broadcasts(qmap["pq_knn_refined"](spark, sf_dir))
-    exact = qmap["pq_knn_exactrefine"](spark, sf_dir)
-    plain = broadcasts(exact)
-    monkeypatch.setattr(pq, "REFINE_BROADCAST_MAX_ROWS", 10**12)
-    forced = qmap["pq_knn_exactrefine"](spark, sf_dir)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        refined = broadcasts(qmap["pq_knn_refined"](spark, sf_dir))
+        exact = qmap["pq_knn_exactrefine"](spark, sf_dir)
+        plain = broadcasts(exact)
+        monkeypatch.setattr(pq, "REFINE_BROADCAST_MAX_ROWS", 10**12)
+        forced = qmap["pq_knn_exactrefine"](spark, sf_dir)
+        forced_plan = broadcasts(forced)
+    finally:
+        spark.conf.set(key, prior)
     # the query batch broadcasts on every path; the candidates only below the bound
-    assert refined == broadcasts(forced) == 2
+    assert refined == forced_plan == 2
     assert plain == 1
     assert exact.collect() == forced.collect()

@@ -80,7 +80,7 @@ def test_ann_tradeoff_on_reference_reviews(spark):
     rows = {
         r["nprobe"]: r
         for r in ann_tradeoff(
-            emb, build_ivf_index(emb, nlist=39, seed=42), n_queries=64, k=10, nprobes=(1, 5, 20, 39)
+            emb, build_ivf_index(emb, nlist=39), n_queries=64, k=10, nprobes=(1, 5, 20, 39)
         ).collect()
     }
     # nprobe == nlist is exact

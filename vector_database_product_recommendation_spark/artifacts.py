@@ -85,17 +85,13 @@ def ivf_index(
     sf_dir: str,
     *,
     nlist: int | None = None,
-    seed: int = 42,
-    max_iter: int = 10,
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned) for the ``embeddings`` corpus — the FAISS
     IndexIVFFlat file analog (SURVEY.md section 2.7), built by
     ``ivf.build_ivf_index``."""
     from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
 
-    return build_ivf_index(
-        load_table(spark, sf_dir, "embeddings"), nlist=nlist, seed=seed, max_iter=max_iter
-    )
+    return build_ivf_index(load_table(spark, sf_dir, "embeddings"), nlist=nlist)
 
 
 @_memo
@@ -173,8 +169,6 @@ def ivf_store(
     sf_dir: str,
     *,
     nlist: int | None = None,
-    seed: int = 42,
-    max_iter: int = 10,
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, store) where `store` is the corpus REOPENED from a
     cluster-partitioned parquet layout (write_ivf_store) — probing filters
@@ -189,7 +183,7 @@ def ivf_store(
         write_ivf_store,
     )
 
-    cents, assigned = ivf_index(spark, sf_dir, nlist=nlist, seed=seed, max_iter=max_iter)
+    cents, assigned = ivf_index(spark, sf_dir, nlist=nlist)
     path = tempfile.mkdtemp(prefix="ivf_store_")
     write_ivf_store(assigned, path)
     return cents, read_ivf_store(spark, path)

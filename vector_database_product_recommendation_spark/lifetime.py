@@ -78,21 +78,30 @@ def persist_right_sized(df: DataFrame) -> DataFrame:
     rows per partition (at least 1, at most ``defaultParallelism``): the
     one rule for every session-scoped artifact.
 
-    When the materialized cache holds more partitions than its rows need,
-    or its rows fit one partition, the cached frame is coalesced (no
-    shuffle) to that number and cached in its turn; the wide copy is
-    released before this returns, so storage never holds both. A
-    one-partition artifact is thus always cached under ``coalesce(1)``,
-    whose plan declares the single partition: a sort or a per-key window
-    over it needs no exchange. A tiny table spread over shuffle partitions
-    pays per-task overhead on every read and never takes the
-    single-partition paths of the kernels (knn.py); at 100 TB the same
-    rule yields thousands of partitions."""
+    The partition count is read off the persisted frame before it is
+    filled (under adaptive execution that runs the map stages of a final
+    exchange, which the count then reuses). A one-partition frame is
+    cached once, under ``coalesce(1)``, whose plan declares the single
+    partition: a sort or a per-key window over it needs no exchange. A
+    wider frame is counted; when its cache holds more partitions than its
+    rows need, the cached frame is coalesced (no shuffle) to that number
+    and cached in its turn, and the wide copy is released before this
+    returns, so storage never holds both. A tiny table spread over
+    shuffle partitions pays per-task overhead on every read and never
+    takes the single-partition paths of the kernels (knn.py); at 100 TB
+    the same rule yields thousands of partitions."""
     wide = df.persist()
+    parts = wide.rdd.getNumPartitions()
+    if parts == 1:
+        # nothing is materialized yet
+        wide.unpersist()
+        out = df.coalesce(1).persist()
+        out.count()
+        return out
     n = wide.count()
     cap = int(wide.sparkSession.sparkContext.defaultParallelism)
     want = max(1, min(cap, n // ROWS_PER_PARTITION + 1))
-    if want > 1 and wide.rdd.getNumPartitions() <= want:
+    if parts <= want:
         return wide
     out = wide.coalesce(want).persist()
     out.count()

@@ -251,21 +251,15 @@ def assign_clusters(
     return emb.mapInPandas(assign, schema)
 
 
-def build_ivf_index(
-    emb: DataFrame,
-    *,
-    nlist: int | None = None,
-    seed: int = 42,
-    max_iter: int = 10,
-) -> tuple[DataFrame, DataFrame]:
+def build_ivf_index(emb: DataFrame, *, nlist: int | None = None) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned): the one IVF index builder. Trains the coarse
-    quantizer (``max_iter`` 10: a coarse quantizer converges to useful
-    centroids in a handful of iterations, and recall is measured against
-    the exact oracle anyway), assigns the corpus and caches the assignment
-    under ``lifetime.persist_right_sized``. Not memoized: its callers keep
-    one index per corpus (``artifacts.ivf_index`` per session and corpus,
-    ``api.ProductSearchEngine`` per engine)."""
-    cents = train_kmeans_centroids(emb, nlist, seed=seed, max_iter=max_iter)
+    quantizer (seed 42, 10 Lloyd iterations: a coarse quantizer converges
+    to useful centroids in a handful of iterations, and recall is measured
+    against the exact oracle anyway), assigns the corpus and caches the
+    assignment under ``lifetime.persist_right_sized``. Not memoized: its
+    callers keep one index per corpus (``artifacts.ivf_index`` per session
+    and corpus, ``api.ProductSearchEngine`` per engine)."""
+    cents = train_kmeans_centroids(emb, nlist, seed=42, max_iter=10)
     return cents, persist_right_sized(assign_clusters(emb, cents))
 
 

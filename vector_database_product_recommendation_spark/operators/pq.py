@@ -52,8 +52,8 @@ from vector_database_product_recommendation_spark.operators.knn import (
     rank_topk,
 )
 
-# the most refine candidates (queries * fetch) pq_knn broadcasts onto the
-# corpus scan; past it they take a sort-merge join
+# the most refine candidates (queries * fetch) pq_knn forces onto a
+# broadcast; past it the planner's size estimate picks the join
 REFINE_BROADCAST_MAX_ROWS = 1_000_000
 
 
@@ -151,9 +151,9 @@ def pq_knn(
     If ``emb`` is given, the ADC top ``k*refine_factor`` candidates are
     re-scored exactly against the full-precision vectors (a candidate set
     of at most ``REFINE_BROADCAST_MAX_ROWS`` rows is BROADCAST onto the
-    corpus scan, so the corpus never shuffles; a larger one takes a
-    sort-merge join) and re-ranked; output is then (query_id, neighbor_id,
-    score, rank) with exact scores, comparable to exact_knn's.
+    corpus scan, so the corpus never shuffles; for a larger one the
+    planner picks the join) and re-ranked; output is then (query_id,
+    neighbor_id, score, rank) with exact scores, comparable to exact_knn's.
     """
     sess = codes_df.sparkSession
     q_ids, q_mat = _query_batch(queries, "query_id", "query_vec", None)
@@ -224,8 +224,8 @@ def pq_knn(
     # (queries * fetch) broadcasts onto the corpus scan — emb itself never
     # shuffles; only the rescored candidates cross the rank-window
     # exchange. Past the bound (a refine_factor near the corpus size makes
-    # the candidates queries x corpus rows) a sort-merge join shuffles both
-    # sides instead: the corpus is then the smaller one.
+    # the candidates up to queries x corpus rows) the join is left to the
+    # planner's size estimate, which broadcasts whichever side is small.
     from vector_database_product_recommendation_spark.functions.vectors import dot
 
     full = emb.select(
@@ -238,8 +238,6 @@ def pq_knn(
     pairs = cand.select("query_id", "neighbor_id")
     if len(q_ids) * fetch <= REFINE_BROADCAST_MAX_ROWS:
         pairs = F.broadcast(pairs)
-    else:
-        pairs = pairs.hint("merge")
     rescored = (
         full.join(pairs, "neighbor_id")
         .join(F.broadcast(qdf), "query_id")
