@@ -253,3 +253,69 @@ def test_exact_scores_exclude_self(spark, emb):
     n = emb.count()
     assert len(out) == 2 * (n - 1)
     assert all(r["neighbor_id"] != r["query_id"] for r in out)
+
+
+def _numpy_topk(rows, queries, k, exclude_self):
+    """(query_id, neighbor_id, score, rank, label) of the top-k under
+    (rounded score desc, id asc), in numpy."""
+    ids = np.array([r["vec_id"] for r in rows])
+    mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
+    labels = [r["label"] for r in rows]
+    out = []
+    for qid in queries:
+        s = np.round(mat @ mat[ids == qid][0], 6)
+        order = [i for i in np.lexsort((ids, -s)) if not (exclude_self and ids[i] == qid)]
+        out += [(qid, int(ids[i]), float(s[i]), r, labels[i]) for r, i in enumerate(order[:k], 1)]
+    return out
+
+
+def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb):
+    """With Arrow batches of a few rows, each scan task prunes every batch
+    (the np.partition threshold) before its one ranking: the exact, IVF and
+    PQ kernels return the rows of a one-batch run, and exact and full-probe
+    IVF return numpy's."""
+    from vector_database_product_recommendation_spark.operators.ivf import (
+        assign_clusters,
+        ivf_knn,
+        train_kmeans_centroids,
+    )
+    from vector_database_product_recommendation_spark.operators.pq import (
+        encode_pq,
+        pq_knn,
+        train_pq,
+    )
+
+    corpus = emb.repartition(3)
+    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    assigned = assign_clusters(corpus, cents)
+    books = train_pq(emb)
+    codes = encode_pq(corpus, books)
+    q = _queries(emb)
+    k = 3
+
+    def run():
+        return {
+            "exact": exact_knn(corpus, q, k, exclude_self=True, payload=("label",)),
+            "ivf_partial": ivf_knn(assigned, cents, q, k, nprobe=2),
+            "ivf_full": ivf_knn(assigned, cents, q, k, nprobe=5),
+            "pq": pq_knn(codes, books, q, k),
+            "pq_refine": pq_knn(codes, books, q, k, emb=corpus, refine_factor=2),
+        }
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    one = {name: [tuple(r) for r in df.collect()] for name, df in run().items()}
+    spark.conf.set(key, "7")
+    try:
+        sizes = corpus.mapInPandas(
+            lambda it: (pd.DataFrame({"n": [len(p)]}) for p in it), "n long"
+        ).collect()
+        many = {name: [tuple(r) for r in df.collect()] for name, df in run().items()}
+    finally:
+        spark.conf.set(key, prior)
+    assert len(sizes) > 3 and max(r["n"] for r in sizes) <= 7
+    assert many == one
+    rows = emb.select("vec_id", "embedding", "label").collect()
+    assert one["exact"] == _numpy_topk(rows, range(5), k, exclude_self=True)
+    assert one["ivf_full"] == [r[:4] for r in _numpy_topk(rows, range(5), k, exclude_self=False)]
+    assert all(len(v) == 5 * k for v in one.values())

@@ -168,11 +168,13 @@ class ProductSearchEngine:
         tests/test_reference_parity.py).
 
         Like the reference's ``@st.cache_resource``, the serving state is
-        built once, here: products joined with their vectors into one
-        ``catalog`` table, sized by lifetime.persist_right_sized (~25k
-        rows per partition, so one partition at the reference's size) and
-        materialized before this returns, then, within
-        ``DRIVER_CATALOG_MAX_BYTES``, collected into driver arrays. A
+        built once, here. The parsed reviews (in ``load_reviews``), the
+        review embeddings and the ``catalog`` table (products joined once
+        with their vectors) are each cached and materialized under
+        lifetime.persist_right_sized (~25k rows per partition, so one
+        partition at the reference's size) before this returns; within
+        ``DRIVER_CATALOG_MAX_BYTES`` the catalog is then collected into
+        driver arrays. A
         vector or filtered search, an item-to-item lookup and a compare
         then run no Spark job. Above the bound, a request scans the cached
         table with one kernel pass, which returns its hits with their
@@ -191,12 +193,10 @@ class ProductSearchEngine:
             rebuild_products,
         )
 
-        # no .cache() here: load_reviews already persists the (expensive,
-        # unsplittable multiLine) CSV parse; the returned frame only adds a
-        # map lookup + cast on top of that cache, and re-caching it would
-        # pin a second, redundant copy of every row
         reviews = load_reviews(spark, f"{ref_dir}/reviews.csv")
-        review_emb = load_embeddings_npy(spark, f"{ref_dir}/review_embeddings.npy").cache()
+        review_emb = persist_right_sized(
+            load_embeddings_npy(spark, f"{ref_dir}/review_embeddings.npy")
+        )
         products = rebuild_products(reviews)
         vectors = rebuild_product_embeddings(reviews, review_emb).select(
             "id", F.col("vector").alias("embedding")

@@ -38,19 +38,18 @@ def ann_tradeoff(
     n_queries: int = 64,
     k: int = 10,
     nprobes: tuple[int, ...] = (1, 2, 5, 10, 20),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Regenerate the reference's nprobe trade-off table on any corpus,
-    for a prebuilt IVF ``index=(centroids, assigned)`` over ``emb``
-    (``ivf.build_ivf_index``): the reference evaluates its persisted FAISS
-    index, not a fresh train."""
+    """Regenerate the reference's nprobe trade-off table on any
+    (vec_id, embedding) corpus, for a prebuilt IVF
+    ``index=(centroids, assigned)`` over ``emb`` (``ivf.build_ivf_index``):
+    the reference evaluates its persisted FAISS index, not a fresh train.
+    The queries are the rows with ``vec_id < n_queries``."""
     spark = emb.sparkSession
     cents, assigned = index
 
     queries = (
-        emb.filter(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"))
+        emb.filter(F.col("vec_id") < n_queries)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
     )
 
     # Collect the (small) query batch and centroid table ONCE — the sweep
@@ -60,15 +59,7 @@ def ann_tradeoff(
     n_q = len(qrows)
     cent_rows = cents.orderBy("cluster_id").collect()
 
-    exact = exact_knn(
-        emb,
-        queries,
-        k,
-        corpus_id=id_col,
-        corpus_vec=vec_col,
-        exclude_self=True,
-        query_rows=qrows,
-    ).persist()
+    exact = exact_knn(emb, queries, k, exclude_self=True, query_rows=qrows).persist()
     exact_top1 = exact.filter(F.col("rank") == 1).select(
         "query_id", F.col("neighbor_id").alias("nn1")
     )
@@ -84,8 +75,6 @@ def ann_tradeoff(
             queries,
             k,
             nprobe,
-            corpus_id=id_col,
-            corpus_vec=vec_col,
             exclude_self=True,
             query_rows=qrows,
             centroid_rows=cent_rows,

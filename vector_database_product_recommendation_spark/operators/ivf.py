@@ -18,8 +18,10 @@ Spark-first mapping:
   parquet partition pruning.
 - probe (AN4): rank centroids per query (driver-side — the centroid table
   is tiny by construction), keep top-nprobe, then score ONLY corpus rows in
-  probed clusters: a broadcast join on cluster_id followed by the same
-  batched top-k kernel as exact KNN.
+  probed clusters: a pushable ``cluster_id`` isin filter, and a probe map
+  (cluster -> probing queries) held in the task closure that scores each
+  cluster's rows against only its probing queries, inside exact KNN's one
+  top-k scan (``knn.topk_scan``).
 
 nprobe == nlist degenerates to exact search (metamorphic test).
 """
@@ -34,11 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.lifetime import persist_right_sized
-from vector_database_product_recommendation_spark.operators.knn import (
-    _query_batch,
-    merge_topk,
-    rank_topk,
-)
+from vector_database_product_recommendation_spark.operators.knn import _query_batch, topk_scan
 
 
 # FAISS's Clustering.max_points_per_centroid: every k-means trainer in the
@@ -270,28 +268,19 @@ def ivf_knn(
     k: int,
     nprobe: int,
     *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
     exclude_self: bool = False,
-    round_decimals: int = 6,
     query_rows: list | None = None,
     centroid_rows: list | None = None,
 ) -> DataFrame:
-    """AN4: per-query top-k over the union of its nprobe best clusters.
+    """AN4: per-query top-k over the union of its nprobe best clusters of
+    a (vec_id, embedding, cluster_id) corpus.
 
-    Returns (query_id, neighbor_id, score, rank) like exact_knn. With the
+    Returns (query_id, neighbor_id, score, rank) like exact_knn, through
+    the same ``knn.topk_scan``, so the scores are rounded BEFORE selection
+    and only task-local top-k rows cross the merge exchange. With the
     corpus laid out partitionBy('cluster_id'), the cluster_id IN (...)
-    semi-join becomes partition pruning — only nprobe/nlist of the data is
+    filter becomes partition pruning — only nprobe/nlist of the data is
     read per query batch.
-
-    The scoring kernel rounds scores BEFORE selection and keeps only its
-    task-local top-k per query (``knn.rank_topk``, per Arrow batch and per
-    task); ``knn.merge_topk`` merges the tasks. So the merge shuffle moves
-    O(q * k * n_tasks) rows instead of every scored candidate — at 100 TB
-    the probed candidate set is nprobe/nlist of the corpus, which must
-    never cross an exchange.
 
     ``query_rows``: pre-collected (query_id, query_vec) rows — callers
     probing the same batch repeatedly (the nprobe sweep) pass them once
@@ -302,7 +291,7 @@ def ivf_knn(
     cmat = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
     cids = np.array([r["cluster_id"] for r in cent])
 
-    q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
+    q_ids, q_mat = _query_batch(queries, query_rows)
     # cluster -> row indices of the queries that probe it. The probe map
     # ships in the task closure (it is O(q * nprobe) ints) instead of a
     # broadcast-joined table: corpus rows then cross the Python boundary
@@ -317,76 +306,26 @@ def ivf_knn(
         for c in top:
             probe_map.setdefault(int(c), []).append(qi)
 
-    # Score candidates with a vectorized Arrow kernel — the query batch is
-    # already on the driver. Per batch, rows group by cluster and one BLAS
-    # matmul scores each cluster's rows against exactly the queries that
-    # probed it.
-    qid_dtype = queries.schema[query_id].dataType.simpleString()
-    nid_dtype = assigned.schema[corpus_id].dataType.simpleString()
-    dec = round_decimals
-    excl = exclude_self
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand_q: list[np.ndarray] = []
-        cand_n: list[np.ndarray] = []
-        cand_s: list[np.ndarray] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb_mat = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)
-            na_all = pdf[corpus_id].to_numpy()
-            cl = pdf["cluster_id"].to_numpy()
-            bq: list[np.ndarray] = []
-            bn: list[np.ndarray] = []
-            bs: list[np.ndarray] = []
-            for c in np.unique(cl):
-                qidx = probe_map.get(int(c))
-                if not qidx:
-                    continue
+    def score_batch(pdf: pd.DataFrame) -> np.ndarray:
+        # rows group by cluster; one BLAS matmul scores each cluster's rows
+        # against exactly the queries that probe it, and every other pair
+        # stays -inf (not a candidate)
+        emb_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        cl = pdf["cluster_id"].to_numpy()
+        scores = np.full((len(cl), len(q_ids)), -np.inf)
+        for c in np.unique(cl):
+            qidx = probe_map.get(int(c))
+            if qidx:
                 rows = np.nonzero(cl == c)[0]
-                s = np.round(emb_mat[rows] @ q_mat[qidx].T, dec)  # (nr, nq_c)
-                nr = len(rows)
-                bq.append(np.repeat(np.asarray(qidx), nr))
-                bn.append(np.tile(na_all[rows], len(qidx)))
-                bs.append(s.T.ravel())
-            if not bq:
-                continue
-            qa = np.concatenate(bq)
-            na = np.concatenate(bn)
-            s = np.concatenate(bs)
-            if excl:
-                keep = na != q_ids[qa]
-                qa, na, s = qa[keep], na[keep], s[keep]
-            # per-batch prune to the batch-local top-k (exact superset of
-            # the task-level top-k) so task memory stays O(q * k * batches)
-            idx, _ = rank_topk(qa, na, s, k)
-            cand_q.append(qa[idx])
-            cand_n.append(na[idx])
-            cand_s.append(s[idx])
-        if not cand_q:
-            return
-        cq = np.concatenate(cand_q)
-        cn = np.concatenate(cand_n)
-        cs = np.concatenate(cand_s)
-        idx, rank = rank_topk(cq, cn, cs, k)
-        yield pd.DataFrame(
-            {
-                "query_id": q_ids[cq[idx]],
-                "neighbor_id": cn[idx],
-                "score": cs[idx],
-                "rank": rank.astype(np.int32),
-            }
-        )
+                scores[np.ix_(rows, qidx)] = np.round(emb_mat[rows] @ q_mat[qidx].T, 6)
+        return scores
 
     pool = assigned.filter(
         F.col("cluster_id").isin(sorted(probe_map))
-    ).select("cluster_id", corpus_id, corpus_vec)
-    partial = pool.mapInPandas(
-        score,
-        f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double, rank int",
+    ).select("cluster_id", "vec_id", "embedding")
+    return topk_scan(
+        pool, queries, q_ids, k, score_batch, corpus_id="vec_id", exclude_self=exclude_self
     )
-    single = pool.rdd.getNumPartitions() == 1
-    return merge_topk(partial, k, single_task=single).orderBy("query_id", "rank")
 
 
 def write_ivf_store(

@@ -1,4 +1,4 @@
-"""Exact KNN as a broadcast scored join — the engine's central kernel.
+"""Exact KNN and the one top-k scan under every retrieval kernel.
 
 Reference semantics (SURVEY.md sections 2.3 J4, 2.5 K1-K3, 3 E1/E2):
 score = inner product of a query vector against every corpus vector
@@ -9,11 +9,13 @@ Spark-first physical shape (SURVEY.md section 4, "100-TB-safe"):
 - the CORPUS NEVER SHUFFLES. Queries are a small batch by construction
   (the reference's widest workload is 400 query vectors); we collect them
   to the driver and ship them to every task via closure broadcast.
-- scoring is a NumPy matmul inside mapInPandas (Arrow batches -> BLAS),
-  the distributed analog of the reference's `emb @ qv` hot loop.
-- each task emits only its LOCAL top-k per query (k rows per query per
-  Arrow batch), so the single shuffle that remains — the per-query global
-  top-k window — moves O(q * k * n_batches) rows, not O(q * N).
+- ``topk_scan`` is the one scan of the exact, IVF (operators/ivf.py) and
+  PQ (operators/pq.py) kernels. A kernel supplies only its per-batch
+  scorer, (rows x queries) scores inside mapInPandas (Arrow batches ->
+  BLAS, the distributed analog of the reference's `emb @ qv` hot loop);
+  the scan prunes each batch, ranks each task's candidates once and
+  merges the tasks, so the one shuffle that remains — the per-query
+  global top-k window — moves O(q * k * n_tasks) rows, not O(q * N).
 - ties break by (score desc, neighbor id asc) with scores rounded in
   float64 BEFORE selection, so results are deterministic and engine-
   independent (FIXTURES.md oracle notes).
@@ -31,13 +33,11 @@ from pyspark.sql import DataFrame, Window
 from vector_database_product_recommendation_spark.functions.vectors import dot
 
 
-def _query_batch(
-    queries: DataFrame, query_id: str, query_vec: str, query_rows: list | None
-) -> tuple[np.ndarray, np.ndarray]:
+def _query_batch(queries: DataFrame, query_rows: list | None) -> tuple[np.ndarray, np.ndarray]:
     """(ids, matrix) of the query batch: ``query_rows`` when the caller
     already holds them, else a driver-side gather (small by contract)."""
     if query_rows is None:
-        query_rows = queries.select(query_id, query_vec).collect()
+        query_rows = queries.select("query_id", "query_vec").collect()
     if not query_rows:
         raise ValueError("empty query batch")
     ids = np.array([r[0] for r in query_rows])
@@ -49,8 +49,8 @@ def rank_topk(
     cq: np.ndarray, cn: np.ndarray, cs: np.ndarray, k: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Task-local top-k of scored candidates under the one retrieval order
-    (query, score desc, neighbor id asc), shared by the exact, IVF and PQ
-    kernels.
+    (query, score desc, neighbor id asc): ``topk_scan``'s final selection
+    and the engine's driver-side ranking.
 
     ``cq``/``cn``/``cs`` are parallel arrays of query index, neighbor id
     and score. Returns ``(idx, rank)``: positions into those arrays of the
@@ -70,89 +70,103 @@ def rank_topk(
 def merge_topk(
     partial: DataFrame, k: int, *, single_task: bool, score: str = "score"
 ) -> DataFrame:
-    """Global top-k from the kernels' task-local top-k rows.
+    """Global top-k from task-local top-k rows.
 
     A single scan task's ranks ARE global, so ``partial`` comes back as is:
     the merge window (an exchange + sort over k rows/query/task) would be a
     no-op. The serving regime (one cached partition per ~25k vectors,
-    artifacts.py) hits this constantly. Otherwise the rows re-rank in a
-    ``row_number`` window under (``score`` desc, neighbor_id asc), keeping
-    ``partial.columns`` in their order. Task-local selection under that
+    lifetime.persist_right_sized) hits this constantly. Otherwise the rows
+    re-rank in a ``row_number`` window under (``score`` desc, neighbor_id
+    asc), keeping ``partial.columns`` in their order and appending
+    ``rank`` when ``partial`` has none. Task-local selection under that
     total order provably contains the global top-k, so the result is
     deterministic and independent of batch or partition boundaries.
     """
     if single_task:
         return partial
+    cols = partial.columns if "rank" in partial.columns else [*partial.columns, "rank"]
     w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
     return (
         partial.drop("rank")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(*partial.columns)
+        .select(*cols)
     )
 
 
-def exact_knn(
-    corpus: DataFrame,
+def _schema(frame: DataFrame, queries: DataFrame, corpus_id: str, rest: list[str]) -> str:
+    """mapInPandas schema: query_id and neighbor_id typed as in their
+    source frames, then ``rest``."""
+    qid = queries.schema["query_id"].dataType.simpleString()
+    nid = frame.schema[corpus_id].dataType.simpleString()
+    return ", ".join([f"query_id {qid}", f"neighbor_id {nid}", *rest])
+
+
+def _exact_scorer(q_mat: np.ndarray):
+    """The exact kernel's ``score_batch``: every row of an Arrow batch
+    against every query, one BLAS matmul, rounded in float64 BEFORE any
+    selection."""
+    qm = q_mat.T  # (d, q)
+
+    def score_batch(pdf: pd.DataFrame) -> np.ndarray:
+        return np.round(np.stack(pdf["embedding"].to_numpy()).astype(np.float64) @ qm, 6)
+
+    return score_batch
+
+
+def _scored(pdf, q_ids, score_batch, corpus_id: str, exclude_self: bool):
+    """(ids, scores) of one Arrow batch: ``score_batch``'s (rows x queries)
+    matrix with every row's score against a query of the same id set to
+    ``-inf`` under ``exclude_self``: the reference's item-to-item
+    self-exclusion (app.py:227-228), a filter BEFORE the limit (SURVEY.md
+    section 2.9.4), not a k+1 overfetch."""
+    ids = pdf[corpus_id].to_numpy()
+    scores = score_batch(pdf)
+    if exclude_self:
+        scores[ids[:, None] == q_ids[None, :]] = -np.inf
+    return ids, scores
+
+
+def topk_scan(
+    frame: DataFrame,
     queries: DataFrame,
+    q_ids: np.ndarray,
     k: int,
+    score_batch,
     *,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
+    corpus_id: str,
     exclude_self: bool = False,
-    round_decimals: int = 6,
-    query_rows: list | None = None,
     payload: tuple[str, ...] = (),
+    score: str = "score",
 ) -> DataFrame:
-    """Batch exact KNN: for every query row, the top-k corpus rows by dot.
+    """Per query of ``q_ids`` (the collected ids of ``queries``), the top-k
+    rows of ``frame``: the one scan of the exact, IVF and PQ kernels.
 
-    Returns (query_id, neighbor_id, score, rank, *payload), rank 1..k per
-    query.
-    `exclude_self` drops corpus rows whose id equals the query id — the
-    reference's item-to-item self-exclusion (app.py:227-228) done as a
-    filter BEFORE the limit (SURVEY.md section 2.9.4), not a k+1 overfetch.
+    ``score_batch(pdf)`` scores one Arrow batch of ``frame`` as a
+    (rows x queries) float64 matrix; ``-inf`` marks a pair that is not a
+    candidate. Per batch the scan keeps every row that ties or beats a
+    query's k-th score (an ``np.partition`` threshold: a superset of the
+    batch's top-k under (score desc, id asc), selected with no per-query
+    Python loop); per task it ranks the kept rows once with ``rank_topk``,
+    and ``merge_topk`` merges the tasks. SCALE.md "Bulk-KNN floor" has the
+    measured breakdown of where this kernel's milliseconds go.
 
-    ``query_rows``: pre-collected (query_id, query_vec) rows — callers
-    reusing one query batch across calls (the serving loop; the reference
-    encodes its query batch once, app.py:169-171) pass them to skip the
-    per-call collect job, exactly like ivf_knn.
-
-    Each task keeps a dense ``np.partition`` threshold superset of its
-    top-k, ranks it with ``rank_topk`` and ``merge_topk`` merges the tasks.
-
-    ``payload``: corpus columns returned on each hit row, the way a vector
-    store returns a point's payload with its score. They ride through the
-    task-local top-k and the merge untouched (nulls included), so a caller
-    needs no join back to the corpus. With the default ``()`` the plan and
-    output are those of a plain top-k.
+    Returns (query_id, neighbor_id, ``score``, rank, *payload) ordered by
+    (query_id, rank), rank 1..k per query; query_id is typed as in
+    ``queries``. ``payload`` columns of ``frame`` ride through the top-k
+    and the merge untouched (nulls included).
     """
-    q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
-    qid_dtype = queries.schema[query_id].dataType.simpleString()
-    nid_dtype = corpus.schema[corpus_id].dataType.simpleString()
-    out_cols = ["query_id", "neighbor_id", "score", "rank", *payload]
-    if set(out_cols[:4]) & set(payload):
+    if {"query_id", "neighbor_id", score, "rank"} & set(payload):
         raise ValueError(f"payload {payload!r} shadows an output column")
-    out_schema = ", ".join(
-        [f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double, rank int"]
-        + [f"`{c}` {corpus.schema[c].dataType.simpleString()}" for c in payload]
+    schema = _schema(
+        frame,
+        queries,
+        corpus_id,
+        [f"{score} double", "rank int"]
+        + [f"`{c}` {frame.schema[c].dataType.simpleString()}" for c in payload],
     )
-    excl = exclude_self
-    dec = round_decimals
 
-    def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qm = q_mat.T  # (d, q)
-        nq = q_mat.shape[0]
-        # Accumulate an exact-superset candidate pool across the task's
-        # Arrow batches, then rank ONCE per task. Per batch we keep every
-        # row whose score ties-or-beats the kk-th largest for its query
-        # (np.partition threshold) — a provable superset of the true
-        # (score desc, id asc) top-k, selected with no per-query Python
-        # loop. SCALE.md "Bulk-KNN floor" has the measured breakdown of
-        # where this kernel's milliseconds go (selection dominates the
-        # matmul ~20:1 at reference shapes; both are dwarfed by fixed
-        # job dispatch + Arrow at small corpora).
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cand_q: list[np.ndarray] = []
         cand_n: list[np.ndarray] = []
         cand_s: list[np.ndarray] = []
@@ -160,22 +174,11 @@ def exact_knn(
         for pdf in batches:
             if pdf.empty:
                 continue
-            cmat = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)  # (n, d)
-            ids = pdf[corpus_id].to_numpy()
-            scores = cmat @ qm  # (n, q) float64
-            np.round(scores, dec, out=scores)  # rounded pre-selection
+            ids, scores = _scored(pdf, q_ids, score_batch, corpus_id, exclude_self)
+            keep = ~np.isneginf(scores)
             n = len(ids)
-            if excl:
-                invalid = ids[:, None] == q_ids[None, :]  # (n, q)
-                scores[invalid] = -np.inf
-            kk = min(k, n)
-            if n > kk:
-                thr = np.partition(scores, n - kk, axis=0)[n - kk]  # (q,)
-                keep = scores >= thr
-            else:
-                keep = np.ones((n, nq), dtype=bool)
-            if excl:
-                keep &= ~invalid
+            if n > k:
+                keep &= scores >= np.partition(scores, n - k, axis=0)[n - k]
             rows, cols = np.nonzero(keep)
             cand_q.append(cols)
             cand_n.append(ids[rows])
@@ -192,7 +195,7 @@ def exact_knn(
             {
                 "query_id": q_ids[cq[idx]],
                 "neighbor_id": cn[idx],
-                "score": cs[idx],
+                score: cs[idx],
                 "rank": rank.astype(np.int32),
             }
         )
@@ -201,10 +204,49 @@ def exact_knn(
             out = pd.concat([out, hit_payload], axis=1)
         yield out
 
-    narrowed = corpus.select(corpus_id, corpus_vec, *payload)
-    partial = narrowed.mapInPandas(score_partition, out_schema)
-    single = narrowed.rdd.getNumPartitions() == 1
-    return merge_topk(partial, k, single_task=single).orderBy("query_id", "rank")
+    partial = frame.mapInPandas(scan, schema)
+    single = frame.rdd.getNumPartitions() == 1
+    return merge_topk(partial, k, single_task=single, score=score).orderBy("query_id", "rank")
+
+
+def exact_knn(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    *,
+    corpus_id: str = "vec_id",
+    exclude_self: bool = False,
+    query_rows: list | None = None,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """Batch exact KNN: for every (query_id, query_vec) row, the top-k
+    corpus rows by dot against their ``embedding``, through ``topk_scan``.
+
+    Returns (query_id, neighbor_id, score, rank, *payload), rank 1..k per
+    query. ``exclude_self`` drops corpus rows whose id equals the query id
+    (``_scored``).
+
+    ``query_rows``: pre-collected (query_id, query_vec) rows — callers
+    reusing one query batch across calls (the serving loop; the reference
+    encodes its query batch once, app.py:169-171) pass them to skip the
+    per-call collect job, exactly like ivf_knn.
+
+    ``payload``: corpus columns returned on each hit row, the way a vector
+    store returns a point's payload with its score, so a caller needs no
+    join back to the corpus. With the default ``()`` the plan and output
+    are those of a plain top-k.
+    """
+    q_ids, q_mat = _query_batch(queries, query_rows)
+    return topk_scan(
+        corpus.select(corpus_id, "embedding", *payload),
+        queries,
+        q_ids,
+        k,
+        _exact_scorer(q_mat),
+        corpus_id=corpus_id,
+        exclude_self=exclude_self,
+        payload=payload,
+    )
 
 
 def exact_scores(
@@ -212,11 +254,7 @@ def exact_scores(
     queries: DataFrame,
     *,
     corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
     exclude_self: bool = False,
-    round_decimals: int = 6,
     query_rows: list | None = None,
 ) -> DataFrame:
     """Score EVERY corpus row against the query batch — no top-k, no window.
@@ -224,42 +262,27 @@ def exact_scores(
     The blend path of hybrid search (app.py:202-210) needs all candidate
     scores, not a ranking; routing it through exact_knn with a sentinel
     k would drag O(N) rows through the per-query rank window (a single
-    serialized partition at scale). This is the same mapInPandas BLAS
-    kernel as exact_knn minus selection: output stays partition-local,
-    zero shuffles. Returns (query_id, neighbor_id, score). ``query_rows``
-    as in exact_knn.
+    serialized partition at scale). This is exact_knn's scorer and
+    exclusion rule with no selection: output stays partition-local, zero
+    shuffles. Returns (query_id, neighbor_id, score). ``query_rows`` as in
+    exact_knn.
     """
-    q_ids, q_mat = _query_batch(queries, query_id, query_vec, query_rows)
-    qid_dtype = queries.schema[query_id].dataType.simpleString()
-    nid_dtype = corpus.schema[corpus_id].dataType.simpleString()
-    out_schema = f"query_id {qid_dtype}, neighbor_id {nid_dtype}, score double"
-    excl = exclude_self
-    dec = round_decimals
+    q_ids, q_mat = _query_batch(queries, query_rows)
+    score_batch = _exact_scorer(q_mat)
 
-    def score_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qm = q_mat.T  # (d, q)
-        nq = q_mat.shape[0]
+    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            cmat = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)
-            ids = pdf[corpus_id].to_numpy()
-            scores = np.round(cmat @ qm, dec)  # (n, q)
-            n = len(ids)
-            # column-major flatten: all of query 0's rows, then query 1's…
-            out_q = np.repeat(np.arange(nq), n)
-            out_n = np.tile(ids, nq)
-            out_s = scores.T.ravel()
-            if excl:
-                valid = out_n != q_ids[out_q]
-                out_q, out_n, out_s = out_q[valid], out_n[valid], out_s[valid]
+            ids, scores = _scored(pdf, q_ids, score_batch, corpus_id, exclude_self)
+            # query-major: all of query 0's rows, then query 1's…
+            cols, rows = np.nonzero(~np.isneginf(scores.T))
             yield pd.DataFrame(
-                {"query_id": q_ids[out_q], "neighbor_id": out_n, "score": out_s}
+                {"query_id": q_ids[cols], "neighbor_id": ids[rows], "score": scores[rows, cols]}
             )
 
-    return corpus.select(corpus_id, corpus_vec).mapInPandas(
-        score_partition, out_schema
-    )
+    frame = corpus.select(corpus_id, "embedding")
+    return frame.mapInPandas(emit, _schema(frame, queries, corpus_id, ["score double"]))
 
 
 def item_to_item(
@@ -268,7 +291,6 @@ def item_to_item(
     k: int,
     *,
     corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
     payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """E2 (app.py:221-241): the query vector comes FROM the corpus —
@@ -276,7 +298,7 @@ def item_to_item(
     the item itself. An ``item_id`` missing from the corpus raises
     ValueError naming it. ``payload`` as in exact_knn."""
     q = corpus.filter(F.col(corpus_id) == F.lit(item_id)).select(
-        F.col(corpus_id).alias("query_id"), F.col(corpus_vec).alias("query_vec")
+        F.col(corpus_id).alias("query_id"), F.col("embedding").alias("query_vec")
     )
     rows = q.collect()
     if not rows:
@@ -286,7 +308,6 @@ def item_to_item(
         q,
         k,
         corpus_id=corpus_id,
-        corpus_vec=corpus_vec,
         exclude_self=True,
         query_rows=rows,
         payload=payload,

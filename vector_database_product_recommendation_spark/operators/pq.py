@@ -38,7 +38,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.operators.ivf import (
     MAX_POINTS_PER_CENTROID,
@@ -49,7 +49,7 @@ from vector_database_product_recommendation_spark.operators.ivf import (
 from vector_database_product_recommendation_spark.operators.knn import (
     _query_batch,
     merge_topk,
-    rank_topk,
+    topk_scan,
 )
 
 # the most refine candidates (queries * fetch) pq_knn forces onto a
@@ -133,91 +133,51 @@ def pq_knn(
     queries: DataFrame,
     k: int,
     *,
-    id_col: str = "vec_id",
     emb: DataFrame | None = None,
-    vec_col: str = "embedding",
     refine_factor: int = 4,
 ) -> DataFrame:
-    """ADC top-k per query over the coded corpus.
+    """ADC top-k per query over the coded corpus (``encode_pq``'s
+    (vec_id, codes)).
 
-    Per task: for each query, an (m x ksub) lookup table of subvector
-    dots, then scores = sum of m fancy-indexed lookups over the code
-    matrix. ADC scores are NOT rounded before selection. The kernel keeps
-    only its task-local top-``fetch`` per query (``knn.rank_topk``, per
-    Arrow batch and per task, order (adc_score desc, neighbor_id asc))
-    and ``knn.merge_topk`` merges the tasks, so the merge shuffle moves
+    Per query, an (m x ksub) lookup table of subvector dots; a coded row's
+    score is the sum of its m lookups. ADC scores are NOT rounded before
+    selection. ``knn.topk_scan`` keeps the top-``fetch`` per query under
+    (adc_score desc, neighbor_id asc), so the merge shuffle moves
     O(tasks * queries * fetch) rows instead of every scored candidate.
 
-    If ``emb`` is given, the ADC top ``k*refine_factor`` candidates are
-    re-scored exactly against the full-precision vectors (a candidate set
-    of at most ``REFINE_BROADCAST_MAX_ROWS`` rows is BROADCAST onto the
-    corpus scan, so the corpus never shuffles; for a larger one the
-    planner picks the join) and re-ranked; output is then (query_id,
+    If ``emb`` (vec_id, embedding) is given, the ADC top
+    ``k*refine_factor`` candidates are re-scored exactly against the
+    full-precision vectors (a candidate set of at most
+    ``REFINE_BROADCAST_MAX_ROWS`` rows is BROADCAST onto the corpus scan,
+    so the corpus never shuffles; for a larger one the planner picks the
+    join) and re-ranked by ``knn.merge_topk``; output is then (query_id,
     neighbor_id, score, rank) with exact scores, comparable to exact_knn's.
     """
-    sess = codes_df.sparkSession
-    q_ids, q_mat = _query_batch(queries, "query_id", "query_vec", None)
-    q_ids = q_ids.astype(np.int64)
+    q_ids, q_mat = _query_batch(queries, None)
     books = [np.asarray(c, dtype=np.float64) for c in codebooks]
     fetch = k * refine_factor if emb is not None else k
-    m = len(books)
+    dsub = books[0].shape[1]
+    # per subspace, a (queries x ksub) table of subvector dots
+    luts = [q_mat[:, j * dsub : (j + 1) * dsub] @ b.T for j, b in enumerate(books)]
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dsub = books[0].shape[1]
-        # luts[qi] is (m, ksub_j) ragged -> keep as list per subspace
-        luts = [q_mat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)]
-        nq = len(q_mat)
-        cand_q: list[np.ndarray] = []
-        cand_n: list[np.ndarray] = []
-        cand_s: list[np.ndarray] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(pdf["codes"].tolist(), dtype=np.int32)  # (n, m)
-            nid = pdf[id_col].to_numpy()
-            scores = np.zeros((nq, len(codes)), dtype=np.float64)
-            for j in range(m):
-                scores += luts[j][:, codes[:, j]]  # (nq, n) lookup-add
-            # batch-local exact top-fetch (a superset of the task-level
-            # top-fetch) bounds task memory at O(queries * fetch * batches)
-            bq = np.repeat(np.arange(nq), len(codes))
-            bn = np.tile(nid, nq)
-            bs = scores.ravel()
-            idx, _ = rank_topk(bq, bn, bs, fetch)
-            cand_q.append(bq[idx])
-            cand_n.append(bn[idx])
-            cand_s.append(bs[idx])
-        if not cand_q:
-            return
-        cq = np.concatenate(cand_q)
-        cn = np.concatenate(cand_n)
-        cs = np.concatenate(cand_s)
-        idx, rank = rank_topk(cq, cn, cs, fetch)
-        yield pd.DataFrame(
-            {
-                "query_id": q_ids[cq[idx]],
-                "neighbor_id": cn[idx],
-                "adc_score": cs[idx],
-                "rank": rank.astype(np.int32),
-            }
-        )
+    def score_batch(pdf: pd.DataFrame) -> np.ndarray:
+        codes = np.asarray(pdf["codes"].tolist(), dtype=np.int32)  # (n, m)
+        scores = np.zeros((len(q_ids), len(codes)), dtype=np.float64)
+        for j, lut in enumerate(luts):
+            scores += lut[:, codes[:, j]]  # (nq, n) lookup-add
+        return scores.T
 
-    partial = codes_df.select(id_col, "codes").mapInPandas(
-        score, "query_id long, neighbor_id long, adc_score double, rank int"
-    )
-    cand = merge_topk(
-        partial,
+    cand = topk_scan(
+        codes_df.select("vec_id", "codes"),
+        queries,
+        q_ids,
         fetch,
-        single_task=codes_df.rdd.getNumPartitions() == 1,
+        score_batch,
+        corpus_id="vec_id",
         score="adc_score",
     )
     if emb is None:
-        return cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_score", 6).alias("score"),
-            "rank",
-        ).orderBy("query_id", "rank")
+        return cand.select("query_id", "neighbor_id", F.round("adc_score", 6).alias("score"), "rank")
 
     # exact refine: re-score the candidate set with full vectors. A
     # candidate table of at most REFINE_BROADCAST_MAX_ROWS rows
@@ -228,12 +188,10 @@ def pq_knn(
     # planner's size estimate, which broadcasts whichever side is small.
     from vector_database_product_recommendation_spark.functions.vectors import dot
 
-    full = emb.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")
-    )
-    qdf = sess.createDataFrame(
-        list(zip(q_ids.tolist(), q_mat.tolist())),
-        "query_id long, qv array<double>",
+    full = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
+    qtype = queries.schema["query_id"].dataType.simpleString()
+    qdf = codes_df.sparkSession.createDataFrame(
+        list(zip(q_ids.tolist(), q_mat.tolist())), f"query_id {qtype}, qv array<double>"
     )
     pairs = cand.select("query_id", "neighbor_id")
     if len(q_ids) * fetch <= REFINE_BROADCAST_MAX_ROWS:
@@ -241,15 +199,6 @@ def pq_knn(
     rescored = (
         full.join(pairs, "neighbor_id")
         .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot("qv", "nv"), 6).alias("score"),
-        )
+        .select("query_id", "neighbor_id", F.round(dot("qv", "nv"), 6).alias("score"))
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return merge_topk(rescored, k, single_task=False).orderBy("query_id", "rank")

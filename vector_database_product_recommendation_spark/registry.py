@@ -926,10 +926,10 @@ def _ivf_knn_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # nprobe >= nlist probes every inverted list, so IVF degenerates to exact
-# search (operators/ivf.py:91 scores the union of all clusters with the
-# same rounding and tie-break as exact_knn) — the plain KNN oracle checks
-# the whole train/assign/probe pipeline end-to-end, turning the AN2-AN4
-# family from pytest-only into driver-verified.
+# search (ivf.ivf_knn scores the union of all clusters in exact_knn's one
+# scan, knn.topk_scan, with its rounding and tie-break) — the plain KNN
+# oracle checks the whole train/assign/probe pipeline end-to-end, turning
+# the AN2-AN4 family from pytest-only into driver-verified.
 @register("ivf_knn_exactprobe", _KNN_ORACLE)
 def _ivf_knn_exactprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.artifacts import ivf_index
@@ -2141,8 +2141,9 @@ def _pq_knn_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # refine_factor large enough that fetch >= N makes every corpus row an
 # exact-refine candidate, so PQ's ADC + refine pipeline provably returns
-# exact_knn's answer regardless of the trained codebooks (operators/
-# pq.py:176,244) — the plain KNN oracle then driver-verifies the whole
+# exact_knn's answer regardless of the trained codebooks (pq.pq_knn keeps
+# every row as an ADC candidate, then re-scores them all exactly and
+# re-ranks) — the plain KNN oracle then driver-verifies the whole
 # train/encode/ADC/refine path.
 @register("pq_knn_exactrefine", _KNN_ORACLE)
 def _pq_knn_exactrefine(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,6 +19,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
+from vector_database_product_recommendation_spark.lifetime import persist_right_sized
+
 REVIEWS_SCHEMA = (
     "`id` string, `asins` string, `brand` string, `categories` string, "
     "`reviews.title` string, `reviews.text` string, "
@@ -53,14 +55,15 @@ def load_reviews(spark: SparkSession, csv_path: str) -> DataFrame:
         "_mid", F.monotonically_increasing_id()
     )
     w = Window.partitionBy("_file").orderBy("_mid")
-    # persist BEFORE the counts action: multiLine CSV is expensive to parse
-    # (unsplittable, quote-scanning) and without the persist both the counts
+    # cache BEFORE the counts action: multiLine CSV is expensive to parse
+    # (unsplittable, quote-scanning) and without the cache both the counts
     # agg and every downstream consumer would re-parse the files from scratch.
-    # Lifetime contract: this cache IS the reviews cache — the frame this
-    # function returns derives from it with a map lookup + cast only, so
-    # callers must NOT re-cache the result (that pins a redundant copy);
-    # it lives for the session, like the reference's @st.cache_resource.
-    df = df.withColumn("_local", F.row_number().over(w) - 1).persist()
+    # Lifetime contract: this cache IS the reviews cache, right-sized by the
+    # one session-artifact rule — the frame this function returns derives
+    # from it with a map lookup + cast only, so callers must NOT re-cache
+    # the result (that pins a redundant copy); it lives for the session,
+    # like the reference's @st.cache_resource.
+    df = persist_right_sized(df.withColumn("_local", F.row_number().over(w) - 1))
     counts = {r["_file"]: r["cnt"] for r in df.groupBy("_file").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets, running = {}, 0
     for path in sorted(counts):
