@@ -333,3 +333,24 @@ def test_query_width_is_checked_before_any_spark_work(jobs_run_by, engine, spark
                     e.search_products("fire tablet", k=K, mode=mode)
 
             assert jobs_run_by(request, f"width-{path}-{mode}") == 0
+
+
+def test_reviews_split_over_part_files_mint_the_same_ids(spark, ref_fixture, tmp_path):
+    """``load_reviews`` over the fixture's reviews.csv cut into two part
+    files mints the single file's review_idx for every row; both frames
+    come back on one partition (hash-partitioned into one partition per
+    file for the per-file window, then right-sized)."""
+    from vector_database_product_recommendation_spark.sources.reference import load_reviews
+
+    src = pd.read_csv(f"{ref_fixture.ref_dir}/reviews.csv")
+    for i, part in enumerate((src.iloc[:25], src.iloc[25:])):
+        part.to_csv(tmp_path / f"part-{i:05d}.csv", index=False)
+
+    def minted(path):
+        df = load_reviews(spark, path)
+        rows = df.orderBy("review_idx").select("review_idx", "id", "`reviews.title`").collect()
+        return df.rdd.getNumPartitions(), [tuple(r) for r in rows]
+
+    single = minted(f"{ref_fixture.ref_dir}/reviews.csv")
+    assert minted(str(tmp_path)) == single
+    assert single[0] == 1 and [r[0] for r in single[1]] == list(range(len(src)))

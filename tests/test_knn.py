@@ -319,3 +319,45 @@ def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb):
     assert one["exact"] == _numpy_topk(rows, range(5), k, exclude_self=True)
     assert one["ivf_full"] == [r[:4] for r in _numpy_topk(rows, range(5), k, exclude_self=False)]
     assert all(len(v) == 5 * k for v in one.values())
+
+
+def test_topk_scan_cuts_ties_per_batch_by_id(spark, emb):
+    """Four copies of every vector under consecutive ids: in batches of 7
+    rows a query's k-th score ties across copies, so each batch's
+    ties-or-beats superset passes k rows per query and is cut to the
+    batch's top-k by (score desc, id asc). Exact KNN still returns numpy's
+    rows, self-exclusion included, and PQ the rows of a one-batch run."""
+    from vector_database_product_recommendation_spark.operators.pq import (
+        encode_pq,
+        pq_knn,
+        train_pq,
+    )
+
+    dup = (
+        emb.filter(F.col("vec_id") < 20)
+        .crossJoin(spark.range(4).withColumnRenamed("id", "copy"))
+        .select((F.col("vec_id") * 4 + F.col("copy")).alias("vec_id"), "embedding", "label")
+        .coalesce(1)
+        .cache()
+    )
+    books = train_pq(emb)
+    codes = encode_pq(dup, books).cache()
+    q = dup.filter(F.col("vec_id") % 4 == 0).filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    k = 2
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    one_pq = pq_knn(codes, books, q, k).collect()
+    spark.conf.set(key, "7")
+    try:
+        exact = [tuple(r) for r in exact_knn(dup, q, k, exclude_self=True, payload=("label",)).collect()]
+        many_pq = pq_knn(codes, books, q, k).collect()
+    finally:
+        spark.conf.set(key, prior)
+        codes.unpersist()
+        dup.unpersist()
+    rows = dup.select("vec_id", "embedding", "label").collect()
+    assert exact == _numpy_topk(rows, range(0, 20, 4), k, exclude_self=True)
+    assert many_pq == one_pq and len(one_pq) == 5 * k

@@ -73,6 +73,13 @@ def pinned_count() -> int:
     return len(_PINS)
 
 
+def right_sized_partitions(spark, n: int) -> int:
+    """Partitions for ``n`` rows under the session-artifact rule: ~25k rows
+    each, at least 1, at most ``defaultParallelism``."""
+    cap = int(spark.sparkContext.defaultParallelism)
+    return max(1, min(cap, n // ROWS_PER_PARTITION + 1))
+
+
 def persist_right_sized(df: DataFrame) -> DataFrame:
     """``df`` persisted, materialized with one count and cached at ~25k
     rows per partition (at least 1, at most ``defaultParallelism``): the
@@ -99,8 +106,7 @@ def persist_right_sized(df: DataFrame) -> DataFrame:
         out.count()
         return out
     n = wide.count()
-    cap = int(wide.sparkSession.sparkContext.defaultParallelism)
-    want = max(1, min(cap, n // ROWS_PER_PARTITION + 1))
+    want = right_sized_partitions(wide.sparkSession, n)
     if parts <= want:
         return wide
     out = wide.coalesce(want).persist()

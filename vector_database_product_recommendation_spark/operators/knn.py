@@ -67,16 +67,14 @@ def rank_topk(
     return order[sel], rank[sel]
 
 
-def merge_topk(
-    partial: DataFrame, k: int, *, single_task: bool, score: str = "score"
-) -> DataFrame:
+def merge_topk(partial: DataFrame, k: int, *, single_task: bool) -> DataFrame:
     """Global top-k from task-local top-k rows.
 
     A single scan task's ranks ARE global, so ``partial`` comes back as is:
     the merge window (an exchange + sort over k rows/query/task) would be a
     no-op. The serving regime (one cached partition per ~25k vectors,
     lifetime.persist_right_sized) hits this constantly. Otherwise the rows
-    re-rank in a ``row_number`` window under (``score`` desc, neighbor_id
+    re-rank in a ``row_number`` window under (score desc, neighbor_id
     asc), keeping ``partial.columns`` in their order and appending
     ``rank`` when ``partial`` has none. Task-local selection under that
     total order provably contains the global top-k, so the result is
@@ -85,7 +83,7 @@ def merge_topk(
     if single_task:
         return partial
     cols = partial.columns if "rank" in partial.columns else [*partial.columns, "rank"]
-    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         partial.drop("rank")
         .withColumn("rank", F.row_number().over(w))
@@ -137,7 +135,6 @@ def topk_scan(
     corpus_id: str,
     exclude_self: bool = False,
     payload: tuple[str, ...] = (),
-    score: str = "score",
 ) -> DataFrame:
     """Per query of ``q_ids`` (the collected ids of ``queries``), the top-k
     rows of ``frame``: the one scan of the exact, IVF and PQ kernels.
@@ -147,22 +144,25 @@ def topk_scan(
     candidate. Per batch the scan keeps every row that ties or beats a
     query's k-th score (an ``np.partition`` threshold: a superset of the
     batch's top-k under (score desc, id asc), selected with no per-query
-    Python loop); per task it ranks the kept rows once with ``rank_topk``,
+    Python loop); when ties push that superset past q * k rows
+    (duplicated vectors, identical PQ codes) ``rank_topk`` cuts it to the
+    batch's top-k, so a task holds at most q * k candidates per batch.
+    Per task it ranks the kept rows once more with ``rank_topk``,
     and ``merge_topk`` merges the tasks. SCALE.md "Bulk-KNN floor" has the
     measured breakdown of where this kernel's milliseconds go.
 
-    Returns (query_id, neighbor_id, ``score``, rank, *payload) ordered by
+    Returns (query_id, neighbor_id, score, rank, *payload) ordered by
     (query_id, rank), rank 1..k per query; query_id is typed as in
     ``queries``. ``payload`` columns of ``frame`` ride through the top-k
     and the merge untouched (nulls included).
     """
-    if {"query_id", "neighbor_id", score, "rank"} & set(payload):
+    if {"query_id", "neighbor_id", "score", "rank"} & set(payload):
         raise ValueError(f"payload {payload!r} shadows an output column")
     schema = _schema(
         frame,
         queries,
         corpus_id,
-        [f"{score} double", "rank int"]
+        ["score double", "rank int"]
         + [f"`{c}` {frame.schema[c].dataType.simpleString()}" for c in payload],
     )
 
@@ -180,6 +180,9 @@ def topk_scan(
             if n > k:
                 keep &= scores >= np.partition(scores, n - k, axis=0)[n - k]
             rows, cols = np.nonzero(keep)
+            if len(rows) > k * len(q_ids):
+                cut, _ = rank_topk(cols, ids[rows], scores[rows, cols], k)
+                rows, cols = rows[cut], cols[cut]
             cand_q.append(cols)
             cand_n.append(ids[rows])
             cand_s.append(scores[rows, cols])
@@ -195,7 +198,7 @@ def topk_scan(
             {
                 "query_id": q_ids[cq[idx]],
                 "neighbor_id": cn[idx],
-                score: cs[idx],
+                "score": cs[idx],
                 "rank": rank.astype(np.int32),
             }
         )
@@ -206,7 +209,7 @@ def topk_scan(
 
     partial = frame.mapInPandas(scan, schema)
     single = frame.rdd.getNumPartitions() == 1
-    return merge_topk(partial, k, single_task=single, score=score).orderBy("query_id", "rank")
+    return merge_topk(partial, k, single_task=single).orderBy("query_id", "rank")
 
 
 def exact_knn(

@@ -142,7 +142,7 @@ def pq_knn(
     Per query, an (m x ksub) lookup table of subvector dots; a coded row's
     score is the sum of its m lookups. ADC scores are NOT rounded before
     selection. ``knn.topk_scan`` keeps the top-``fetch`` per query under
-    (adc_score desc, neighbor_id asc), so the merge shuffle moves
+    (ADC score desc, neighbor_id asc), so the merge shuffle moves
     O(tasks * queries * fetch) rows instead of every scored candidate.
 
     If ``emb`` (vec_id, embedding) is given, the ADC top
@@ -174,10 +174,9 @@ def pq_knn(
         fetch,
         score_batch,
         corpus_id="vec_id",
-        score="adc_score",
     )
     if emb is None:
-        return cand.select("query_id", "neighbor_id", F.round("adc_score", 6).alias("score"), "rank")
+        return cand.select("query_id", "neighbor_id", F.round("score", 6).alias("score"), "rank")
 
     # exact refine: re-score the candidate set with full vectors. A
     # candidate table of at most REFINE_BROADCAST_MAX_ROWS rows

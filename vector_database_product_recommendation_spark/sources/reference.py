@@ -19,7 +19,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
-from vector_database_product_recommendation_spark.lifetime import persist_right_sized
+from vector_database_product_recommendation_spark.lifetime import (
+    persist_right_sized,
+    right_sized_partitions,
+)
 
 REVIEWS_SCHEMA = (
     "`id` string, `asins` string, `brand` string, `categories` string, "
@@ -39,9 +42,12 @@ def load_reviews(spark: SparkSession, csv_path: str) -> DataFrame:
     - within a file: multiLine CSV is unsplittable, so each file is parsed
       start-to-finish by exactly one task and monotonically_increasing_id
       is monotone in file order there; `row_number` over a PER-FILE window
-      turns it into a dense local rank. The window shuffles keyed by file
-      path — parallelism = #files, never the old 1-task global window that
-      both collapsed ingest and silently mis-ordered multi-file input.
+      turns it into a dense local rank. The rows are hash-partitioned by
+      file path into #files partitions, which the window reuses —
+      parallelism = #files (one partition, so one cached partition, for
+      the reference's single file), never the old 1-task global window
+      that both collapsed ingest and silently mis-ordered multi-file
+      input.
     - across files: per-file counts (one tiny agg, #files rows) become
       cumulative offsets on the driver in lexicographic path order —
       sharded exports (part-00000, part-00001, ...) sort correctly.
@@ -51,8 +57,10 @@ def load_reviews(spark: SparkSession, csv_path: str) -> DataFrame:
     df = spark.read.csv(
         csv_path, header=True, multiLine=True, escape='"', schema=REVIEWS_SCHEMA
     )
-    df = df.withColumn("_file", F.input_file_name()).withColumn(
-        "_mid", F.monotonically_increasing_id()
+    df = (
+        df.withColumn("_file", F.input_file_name())
+        .withColumn("_mid", F.monotonically_increasing_id())
+        .repartition(max(1, len(df.inputFiles())), "_file")
     )
     w = Window.partitionBy("_file").orderBy("_mid")
     # cache BEFORE the counts action: multiLine CSV is expensive to parse
@@ -82,7 +90,10 @@ def load_embeddings_npy(spark: SparkSession, npy_path: str) -> DataFrame:
     """A dense .npy matrix as (review_idx, embedding) — the positional-
     alignment invariant made explicit (S4)."""
     mat = np.load(npy_path).astype(np.float64)
-    rows = [(i, row.tolist()) for i, row in enumerate(mat)]
+    rows = spark.sparkContext.parallelize(
+        [(i, row.tolist()) for i, row in enumerate(mat)],
+        right_sized_partitions(spark, len(mat)),
+    )
     return spark.createDataFrame(rows, "review_idx int, embedding array<double>")
 
 
