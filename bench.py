@@ -70,18 +70,14 @@ def main() -> None:
         artifacts.ivf_index(spark, SF_DIR)
         artifacts.ivf_store(spark, SF_DIR)
         artifacts.encoded_documents(spark, SF_DIR)
-        # pq_index joined the artifact phase in r22: it is the same
-        # offline-artifact category as ivf_index (codebook training +
-        # corpus encode), but r21 and earlier paid it inside the first
-        # timed pq_knn_refined run — a measurement inconsistency, declared
-        # in OPTIMIZATION_r22.md (old numbers kept there).
+        # codebook training + corpus encode: the same offline-artifact
+        # category as ivf_index, so no timed pq query pays for it
         artifacts.pq_index(spark, SF_DIR)
-        # r22: the dedup signature/index tables joined too — they are
-        # corpus-only, query-independent derivations (the
-        # write-signatures-once step of every LSH pipeline), the same
-        # category as encoded_documents. Declared in OPTIMIZATION_r22.md:
-        # r21 and earlier paid each build inside the timed pair queries
-        # (flattered by lingering cache reuse across the median-of-3).
+        # the dedup signature/index tables: corpus-only, query-independent
+        # derivations (the write-signatures-once step of every LSH
+        # pipeline), the same category as encoded_documents; built inside
+        # a timed pair query they would also flatter its later runs with
+        # a warm cache
         artifacts.shingle_index(spark, SF_DIR)
         artifacts.minhash_signature_table(spark, SF_DIR)
         artifacts.simhash_signature_table(spark, SF_DIR)
@@ -226,9 +222,8 @@ def main() -> None:
         "see BASELINE.md 'Rebuild benchmark framing'",
     }
 
-    # Full summary -> a committed file the judge can diff round-over-round
-    # (the driver records only a 2000-char stdout tail, which truncated the
-    # one-line JSON for 14 straight rounds and left "parsed": null).
+    # Full summary -> a committed file that diffs run-over-run (a 2000-char
+    # stdout tail cannot hold the full JSON).
     try:
         with open(os.path.join(REPO, "BENCH_SUMMARY.json"), "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
@@ -239,15 +234,14 @@ def main() -> None:
     # Final stdout line: the same payload, compacted to fit the driver's
     # 2000-char tail so it machine-parses. The full 101-name queries map
     # CANNOT fit — the names alone sum to >1900 chars — so membership is
-    # trimmed, with a STABLE priority order so the emitted set no longer
-    # churns round-over-round (r21's PERF recorded 7 phantom
-    # "dropped_from_bench" entries because the old slowest-first cut
-    # dropped queries that got FASTER): every query the newest committed
-    # line emitted stays in the line (line_queries), then the remaining
-    # slots fill slowest-first. Values round to 10 ms in
-    # the line only (BENCH_SUMMARY.json keeps full precision), and the
-    # bulky floor/decomposition extras live in BENCH_SUMMARY.json only,
-    # which together fit ~20 more queries than r21's line carried.
+    # trimmed, with a STABLE priority order so the emitted set does not
+    # churn run-over-run (a pure slowest-first cut drops the queries that
+    # got faster, which then read as removed): every query the newest
+    # committed line emitted stays in the line (line_queries), then the
+    # remaining slots fill slowest-first. Values round to 10 ms in the
+    # line only (BENCH_SUMMARY.json keeps full precision), and the bulky
+    # floor/decomposition extras live in BENCH_SUMMARY.json only, which
+    # together leave room for more query names.
     line_budget = 1980
     compact = dict(payload)
     line = json.dumps(compact, separators=(",", ":"))

@@ -74,9 +74,11 @@ class RefFixture:
 def write_reference_fixture(out_dir: str) -> RefFixture:
     """``reviews.csv`` (8 columns, dotted ``reviews.*`` names, nullable
     ratings, comma-joined ``asins``/``categories``, ``combined_text =
-    lower(title + ' ' + text + ' ' + brand)``, one quoted multi-line body)
-    and the row-aligned, unit-norm float32 ``review_embeddings.npy``
-    (PAPER.md section 1.1)."""
+    lower(title + ' ' + text + ' ' + brand)`` with whitespace runs
+    collapsed, one quoted multi-line body) and the row-aligned, unit-norm
+    float32 ``review_embeddings.npy`` (PAPER.md section 1.1), plus the
+    derived ``products.csv`` and row-aligned ``product_embeddings.npy``
+    computed here in pandas/numpy."""
     n_products, n_reviews, dim = 12, 60, 16
     rng = np.random.default_rng(7)
     pids = np.array([f"AV{i:04d}" for i in rng.permutation(n_products)])
@@ -107,7 +109,7 @@ def write_reference_fixture(out_dir: str) -> RefFixture:
                 "reviews.title": title,
                 "reviews.text": text,
                 "reviews.rating": ratings[i],
-                "combined_text": f"{title} {text} {brand}".lower(),
+                "combined_text": " ".join(f"{title} {text} {brand}".lower().split()),
             }
         )
     reviews = pd.DataFrame(rows)
@@ -119,6 +121,19 @@ def write_reference_fixture(out_dir: str) -> RefFixture:
     groups = reviews.groupby("id", sort=True)
     sums = pd.DataFrame(vecs.astype(np.float64)).groupby(reviews["id"], sort=True).sum()
     emb = sums.to_numpy() / np.linalg.norm(sums.to_numpy(), axis=1, keepdims=True)
+    products = pd.DataFrame(
+        {
+            "id": first.index,
+            "brand": first["brand"].to_numpy(),
+            "categories": first["categories"].to_numpy(),
+            "asins": first["asins"].to_numpy(),
+            "n_reviews": groups.size().to_numpy(),
+            "example_text": first["combined_text"].to_numpy(),
+            "avg_rating": groups["reviews.rating"].mean().to_numpy(),
+        }
+    )
+    products.to_csv(os.path.join(out_dir, "products.csv"), index=False)
+    np.save(os.path.join(out_dir, "product_embeddings.npy"), emb.astype(np.float32))
     return RefFixture(
         ref_dir=out_dir,
         ids=first.index.to_numpy(),

@@ -36,7 +36,6 @@ def test_spelled_out_defaults_hit_the_same_entry(spark, sf_dir):
     assert artifacts.fitted_tfidf(spark, sf_dir, max_features=None) is artifacts.fitted_tfidf(
         spark, sf_dir
     )
-    assert artifacts.ivf_index(spark, sf_dir, nlist=None) is artifacts.ivf_index(spark, sf_dir)
 
 
 def plan_of(df) -> str:

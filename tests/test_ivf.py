@@ -13,7 +13,10 @@ import io
 import pyspark.sql.functions as F
 import pytest
 
-from vector_database_product_recommendation_spark.functions.embed import free_text_search
+from vector_database_product_recommendation_spark.functions.embed import (
+    encode_documents,
+    hash_embed_py,
+)
 from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff
 from vector_database_product_recommendation_spark.operators.ivf import (
     assign_clusters,
@@ -107,7 +110,11 @@ def test_ann_tradeoff_shape_and_monotonicity(emb):
 def test_free_text_self_retrieval(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     qtext = docs.filter(F.col("doc_id") == 5).select("text").first()[0]
-    top = free_text_search(qtext, docs, k=3).collect()
+    # E1's vector path: encode the corpus, embed the query, exact KNN
+    q = spark.createDataFrame(
+        [(0, hash_embed_py(qtext))], "query_id long, query_vec array<double>"
+    )
+    top = exact_knn(encode_documents(docs), q, 3).collect()
     assert top[0]["neighbor_id"] == 5
     assert abs(top[0]["score"] - 1.0) < 1e-4
 

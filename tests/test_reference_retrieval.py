@@ -5,7 +5,9 @@ NumPy on its shipped embeddings (the app's own scoring loop: `emb @ qv`,
 self-exclusion, argsort top-k — app.py:221-241), compared against this
 engine's distributed operators on the same data. The ANN layer is held to
 the recall regime of the shipped trade-off tables (BASELINE.md run B:
-Precision@K 0.906-0.915, MRR ~0.95 as nprobe 1→20 with nlist=39).
+Precision@K 0.906-0.915, MRR ~0.95 as nprobe 1→20 with nlist=39). Runs
+on the reference's own files when present, else on the seeded catalog in
+the same layout (conftest.ref_fixture).
 """
 
 from __future__ import annotations
@@ -19,14 +21,16 @@ import pyspark.sql.functions as F
 
 REF = "/root/reference"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference artifacts not present"
-)
 
 
 @pytest.fixture(scope="module")
-def ref_mat():
-    return np.load(f"{REF}/product_embeddings.npy").astype(np.float64)
+def ref(ref_fixture):
+    return REF if os.path.isdir(REF) else ref_fixture.ref_dir
+
+
+@pytest.fixture(scope="module")
+def ref_mat(ref):
+    return np.load(f"{ref}/product_embeddings.npy").astype(np.float64)
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +43,8 @@ def test_item_to_item_matches_numpy_reference(ref_emb, ref_mat):
     from vector_database_product_recommendation_spark.operators.knn import item_to_item
 
     k = 5
-    for qidx in (0, 7, 33, 65):
+    n = len(ref_mat)
+    for qidx in sorted({q for q in (0, 7, 33, 65) if q < n} | {n - 1}):
         qv = ref_mat[qidx]
         scores = ref_mat @ qv  # the app's scoring line (app.py:234)
         scores[qidx] = -np.inf  # self-exclusion (app.py:227-228)
@@ -65,36 +70,41 @@ def test_pairwise_matrix_matches_numpy(ref_emb, ref_mat):
             assert abs(ours[(i, j)] - gram[i, j]) < 1e-5
 
 
-def test_ann_tradeoff_on_reference_reviews(spark):
-    """E3 on the real corpus: 1578 review vectors, nlist=39 (the shipped
-    IVF header), nprobe sweep — recall must land in the reference's
-    regime and be monotone to exactness."""
+def test_ann_tradeoff_on_reference_reviews(spark, ref):
+    """E3 on the review vectors (1578 in the reference, nlist=39 from the
+    shipped IVF header; the seeded catalog takes max(2, ⌊√n⌋)), nprobe
+    sweep — recall must land in the reference's regime and be monotone to
+    exactness."""
     from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff
     from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
 
-    mat = np.load(f"{REF}/review_embeddings.npy").astype(np.float64)
+    mat = np.load(f"{ref}/review_embeddings.npy").astype(np.float64)
     emb = spark.createDataFrame(
         [(i, r.tolist()) for i, r in enumerate(mat)],
         "vec_id int, embedding array<double>",
     ).cache()
+    nlist = 39 if len(mat) == 1578 else max(2, int(len(mat) ** 0.5))
+    # the reference's sweep 1, 5, 20, 39 scaled to nlist
+    mid, hi = max(1, round(nlist * 5 / 39)), round(nlist * 20 / 39)
+    nprobes = tuple(sorted({1, mid, hi, nlist}))
     rows = {
         r["nprobe"]: r
         for r in ann_tradeoff(
-            emb, build_ivf_index(emb, nlist=39), n_queries=64, k=10, nprobes=(1, 5, 20, 39)
+            emb, build_ivf_index(emb, nlist=nlist), n_queries=64, k=10, nprobes=nprobes
         ).collect()
     }
     # nprobe == nlist is exact
-    assert rows[39]["precision_at_k"] == 1.0
-    assert rows[39]["mrr"] == 1.0
+    assert rows[nlist]["precision_at_k"] == 1.0
+    assert rows[nlist]["mrr"] == 1.0
     # reference regime: run B ships P@K ~0.91 at nprobe>=1; allow our
     # different quantizer some slack but stay in the same quality class
-    assert rows[20]["precision_at_k"] >= 0.85
-    assert rows[20]["mrr"] >= 0.85
-    assert rows[1]["precision_at_k"] <= rows[5]["precision_at_k"] + 1e-9
-    assert rows[5]["precision_at_k"] <= rows[20]["precision_at_k"] + 1e-9
+    assert rows[hi]["precision_at_k"] >= 0.85
+    assert rows[hi]["mrr"] >= 0.85
+    for lo, up in zip(nprobes, nprobes[1:]):
+        assert rows[lo]["precision_at_k"] <= rows[up]["precision_at_k"] + 1e-9
 
 
-def test_e1_two_stage_retrieval_on_reference_products(spark, ref_emb, ref_mat):
+def test_e1_two_stage_retrieval_on_reference_products(spark, ref, ref_emb, ref_mat):
     """E1 with metadata pre-filtering (app.py:156-188): filter products on
     (brand, min_rating, min_reviews), then score ONLY survivors against a
     query vector, top-k — compared against the app's own NumPy flow."""
@@ -102,10 +112,12 @@ def test_e1_two_stage_retrieval_on_reference_products(spark, ref_emb, ref_mat):
 
     from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
-    prod = pd.read_csv(f"{REF}/products.csv")
+    prod = pd.read_csv(f"{ref}/products.csv")
     sdf = spark.createDataFrame(prod.assign(row_idx=range(len(prod))))
 
-    min_rating, min_reviews, k, qidx = 4.0, 10, 5, 7
+    k, qidx = 5, 7
+    # the seeded catalog's products carry fewer, lower-rated reviews
+    min_rating, min_reviews = (4.0, 10) if ref == REF else (2.8, 3)
 
     # stage 1 (Spark): the reference's null-defaulted conjunctive mask
     cand = sdf.filter(
@@ -130,7 +142,7 @@ def test_e1_two_stage_retrieval_on_reference_products(spark, ref_emb, ref_mat):
     idxs = mask.nonzero()[0]
     scores = ref_mat[idxs] @ ref_mat[qidx]
     order = scores.argsort()[::-1][:k]
-    assert len(ours) == min(k, len(idxs))
+    assert len(idxs) > 0 and len(ours) == min(k, len(idxs))
     for r, (i, s) in zip(ours, zip(idxs[order], scores[order])):
         assert abs(r["score"] - s) < 1e-5
     # candidate set honored: nothing outside the filtered ids

@@ -7,9 +7,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from vector_database_product_recommendation_spark.operators.sampling import (
-    downsample_majority,
+    stratified_hash_sample,
     stratified_sample,
-    uniform_sample,
 )
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
@@ -17,9 +16,11 @@ SF_DIR = "/root/testdata/sf0.01"
 
 
 def test_uniform_sample_seeded_and_subset(spark):
+    """One fraction for every stratum: a uniform seeded sample."""
     events = load_table(spark, SF_DIR, "events")
-    s1 = uniform_sample(events, 0.2, seed=7)
-    s2 = uniform_sample(events, 0.2, seed=7)
+    frac = {"click": 0.2, "view": 0.2, "purchase": 0.2, "error": 0.2, "signup": 0.2}
+    s1 = stratified_sample(events, "event_type", frac, seed=7)
+    s2 = stratified_sample(events, "event_type", frac, seed=7)
     assert s1.exceptAll(s2).isEmpty() and s2.exceptAll(s1).isEmpty()  # deterministic
     assert s1.exceptAll(events).isEmpty()  # subset
     n, total = s1.count(), events.count()
@@ -39,21 +40,6 @@ def test_stratified_sample_respects_fractions(spark):
         assert abs(got.get(k, 0) / base[k] - f) < 0.1, (k, got.get(k), base[k])
 
 
-def test_downsample_majority_caps_classes(spark):
-    events = load_table(spark, SF_DIR, "events")
-    target = 300
-    s = downsample_majority(events, "event_type", target=target, seed=3)
-    got = {r["event_type"]: r["n"] for r in
-           s.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()}
-    base = {r["event_type"]: r["n"] for r in
-            events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()}
-    for k, n in got.items():
-        cap = min(base[k], target)
-        assert n <= cap * 1.35  # Bernoulli slack
-        if base[k] <= target:
-            assert n == base[k]  # fraction 1.0 keeps everything
-
-
 def test_approx_percentile_close_to_exact(spark):
     events = load_table(spark, SF_DIR, "events")
     both = (
@@ -70,26 +56,21 @@ def test_approx_percentile_close_to_exact(spark):
 
 
 def test_hash_sample_deterministic_and_partition_invariant(spark):
-    from vector_database_product_recommendation_spark.operators.sampling import hash_sample
-
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    s1 = {r["event_id"] for r in hash_sample(events, "event_id", 0.3).select("event_id").collect()}
-    s2 = {
-        r["event_id"]
-        for r in hash_sample(events.repartition(13), "event_id", 0.3)
-        .select("event_id")
-        .collect()
-    }
-    assert s1 == s2  # membership is a pure function of the key
+    types = [r[0] for r in events.select("event_type").distinct().collect()]
+    frac = dict.fromkeys(types, 0.3)
+
+    def kept(df):
+        s = stratified_hash_sample(df, "event_type", frac, key_col="event_id")
+        return {r["event_id"] for r in s.select("event_id").collect()}
+
+    s1 = kept(events)
+    assert s1 == kept(events.repartition(13))  # membership is a pure function of the key
     n = events.count()
     assert 0.25 * n < len(s1) < 0.35 * n
 
 
 def test_stratified_hash_sample_thresholds(spark):
-    from vector_database_product_recommendation_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
     frac = {"click": 0.5, "purchase": 1.0}
     s = stratified_hash_sample(events, "event_type", frac, key_col="event_id")

@@ -1,9 +1,5 @@
-"""Structured Streaming equivalence + multimodal plumbing tests.
-
-Streaming strategy (SURVEY.md section 2.8): the same logical plan runs in
-batch and streaming; correctness = streaming(availableNow) over the same
-parquet produces exactly the batch result.
-"""
+"""Multimodal plumbing tests: payload schema, feature extraction,
+metadata filters, resize and audio framing."""
 
 from __future__ import annotations
 
@@ -13,43 +9,8 @@ from vector_database_product_recommendation_spark.operators.multimodal import (
     attach_payload,
     extract_features,
     fake_feature_decoder,
-    frame_sample,
 )
 from vector_database_product_recommendation_spark.sources.tables import load_table
-from vector_database_product_recommendation_spark.streaming.events import (
-    stream_windowed_counts,
-    windowed_event_agg,
-)
-
-
-def test_stream_equals_batch_windowed_agg(spark, sf_dir, tmp_path):
-    events = load_table(spark, sf_dir, "events")
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_event_agg(events).drop("n_users").collect()
-    }
-
-    # FileStreamSource wants a directory; stage the (read-only) file into
-    # one via symlink, and hand over the RAW schema (ts as nanos-long).
-    stage = tmp_path / "events_stream"
-    stage.mkdir()
-    (stage / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    agg = stream_windowed_counts(spark, str(stage), schema=raw_schema)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM win_counts").collect()
-    }
-    assert stream == batch
 
 
 def test_multimodal_schema_and_determinism(spark, sf_dir):
@@ -75,147 +36,6 @@ def test_multimodal_metadata_pushdown_filter(spark, sf_dir):
     media = attach_payload(load_table(spark, sf_dir, "documents"))
     small = media.filter(F.col("meta.n_bytes") < 200)
     assert 0 < small.count() < media.count()
-
-
-def test_frame_sample(spark, sf_dir):
-    media = attach_payload(load_table(spark, sf_dir, "documents"))
-    sampled = frame_sample(media, every_n=10)
-    ids = [r["doc_id"] for r in sampled.select("doc_id").collect()]
-    assert ids and all(i % 10 == 0 for i in ids)
-
-
-def test_stateful_running_totals_equals_batch(spark, sf_dir, tmp_path):
-    from vector_database_product_recommendation_spark.streaming.events import (
-        user_running_totals_stream,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    batch = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-
-    stage = tmp_path / "events_stateful"
-    stage.mkdir()
-    (stage / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        user_running_totals_stream(spark, str(stage), schema=raw_schema)
-        .writeStream.format("memory")
-        .queryName("user_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM user_totals").collect()
-    }
-    assert set(got) == set(batch)
-    for uid, (n, s) in batch.items():
-        assert got[uid][0] == n
-        assert abs(got[uid][1] - s) < 1e-6
-
-
-def test_stream_static_join_equals_batch(spark, sf_dir, tmp_path):
-    from vector_database_product_recommendation_spark.streaming.events import (
-        enriched_segment_counts,
-        stream_enriched_segment_counts,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    customer = load_table(spark, sf_dir, "customer")
-    batch = {
-        (r["window_start"], r["c_mktsegment"]): (r["n_events"], r["sum_value"])
-        for r in enriched_segment_counts(events, customer).collect()
-    }
-    assert batch  # the join must land for the equivalence to mean anything
-
-    stage = tmp_path / "events_enrich"
-    stage.mkdir()
-    (stage / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        stream_enriched_segment_counts(spark, str(stage), customer, schema=raw_schema)
-        .writeStream.format("memory")
-        .queryName("enriched_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {
-        (r["window_start"], r["c_mktsegment"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM enriched_counts").collect()
-    }
-    assert stream == batch
-
-
-def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
-    from vector_database_product_recommendation_spark.streaming.events import (
-        stream_dedup_events,
-    )
-
-    # stage the SAME file twice -> every event_id arrives duplicated
-    stage = tmp_path / "events_dup"
-    stage.mkdir()
-    (stage / "a.parquet").symlink_to(f"{sf_dir}/events.parquet")
-    (stage / "b.parquet").symlink_to(f"{sf_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    q = (
-        stream_dedup_events(spark, str(stage), schema=raw_schema)
-        .writeStream.format("memory")
-        .queryName("deduped_events")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt4"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM deduped_events"
-    ).first()
-    expect = load_table(spark, sf_dir, "events").count()
-    assert got["n"] == got["d"] == expect
-
-
-def test_stream_stream_join_equals_batch(spark, sf_dir, tmp_path):
-    from vector_database_product_recommendation_spark.streaming.events import (
-        click_purchase_attribution,
-        stream_click_purchase_attribution,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    batch = {
-        (r["purchase_id"], r["click_id"]): (r["purchase_ts"], r["click_ts"], r["purchase_value"])
-        for r in click_purchase_attribution(events).collect()
-    }
-
-    stage = tmp_path / "events_ss"
-    stage.mkdir()
-    (stage / "events.parquet").symlink_to(f"{sf_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    joined = stream_click_purchase_attribution(spark, str(stage), schema=raw_schema)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_attrib")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {
-        (r["purchase_id"], r["click_id"]): (r["purchase_ts"], r["click_ts"], r["purchase_value"])
-        for r in spark.sql("SELECT * FROM ss_attrib").collect()
-    }
-    assert stream == batch
-    assert batch  # non-vacuous: the join produces rows at this SF
 
 
 def test_resize_payload_truncates_and_pads(spark, sf_dir):

@@ -1,0 +1,181 @@
+"""The package's public surface is what a query, request or benchmark
+reaches. An AST walk (so a docstring mention is not a caller) checks:
+
+- every public top-level function or class of the package is referenced
+  by a non-test module: the package itself, ``tools/``, ``bench.py``,
+  ``__spark_entry__.py`` or ``perfbench/``;
+- every defaulted parameter of a public top-level function is passed,
+  by keyword or by position, by some call in those modules or the tests.
+
+``KEPT`` names each exception and why it stays.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "vector_database_product_recommendation_spark"
+
+TRACED = "perfbench/layers.py traces it; its signature stays"
+
+KEPT = {
+    # functions no non-test module references
+    "functions.embed.sentence_encoder": "the bridge to the paper's SBERT encoder; "
+    "it needs sentence-transformers, which the engine does not ship",
+    "sources.tables.write_bucketed": "the co-located fact-fact join layout that "
+    "tests/test_plans.py pins; no registered query writes a table",
+    "plans.audit": "the plan-lint helpers of tests/test_plan_lint.py and tests/test_plans.py",
+    # defaulted parameters no call passes
+    "functions.embed.sentence_encoder.model_name": "deployment setting: the SBERT checkpoint",
+    "functions.embed.encode_documents.encoder": "deployment setting: sentence_encoder() plugs in here",
+    "sources.tables.write_bucketed.mode": "deployment setting: the write mode",
+    "operators.ivf.write_ivf_store.mode": "deployment setting: the write mode",
+    "operators.knn.pairwise_similarity.id_col": TRACED,
+    "operators.knn.pairwise_similarity.vec_col": TRACED,
+    "operators.knn.pairwise_similarity.round_decimals": TRACED,
+    "operators.ivf.train_kmeans_centroids.vec_col": TRACED,
+    "operators.ivf.assign_clusters.vec_col": TRACED,
+    "operators.centroids.group_centroids.normalize": TRACED,
+}
+
+
+def _files(*patterns: str) -> list[str]:
+    found = {p for pat in patterns for p in glob.glob(os.path.join(REPO, pat), recursive=True)}
+    return sorted(found)
+
+
+def _parse(paths: list[str]) -> dict[str, ast.Module]:
+    out = {}
+    for p in paths:
+        with open(p) as fh:
+            out[p] = ast.parse(fh.read(), p)
+    return out
+
+
+PACKAGE = _files(f"{PKG}/**/*.py")
+NON_TEST = PACKAGE + [
+    p
+    for p in _files("tools/*.py", "bench.py", "__spark_entry__.py", "perfbench/*.py")
+    if not os.path.basename(p).startswith("test_")
+]
+CALLERS = NON_TEST + _files("tests/*.py", "perfbench/test_*.py")
+TREES = _parse(sorted(set(CALLERS)))
+
+
+def _module(path: str) -> str:
+    rel = os.path.relpath(path, os.path.join(REPO, PKG))
+    return rel[: -len(".py")].replace(os.sep, ".")
+
+
+def _public_defs() -> list[tuple[str, ast.FunctionDef | ast.ClassDef]]:
+    """(module, node) for every public top-level def and class."""
+    return [
+        (_module(p), node)
+        for p in PACKAGE
+        for node in TREES[p].body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not node.name.startswith("_")
+    ]
+
+
+def _names(node: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Every name ``node`` reads: bare names, attributes and renamed imports."""
+    out: set[str] = set()
+    stack = [node]
+    while stack:
+        n = stack.pop()
+        if n is skip:
+            continue
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias) and n.asname:
+            out.add(n.name)
+        stack.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _calls() -> dict[str, list[ast.Call]]:
+    out: dict[str, list[ast.Call]] = {}
+    for tree in TREES.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call) and _callee(n):
+                out.setdefault(_callee(n), []).append(n)
+    return out
+
+
+def _passed(call: ast.Call, param: str, index: int | None) -> bool:
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True  # *args may carry anything
+    if any(k.arg is None for k in call.keywords):
+        return True  # so may **kwargs
+    if any(k.arg == param for k in call.keywords):
+        return True
+    return index is not None and len(call.args) > index
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(name, positional index or None) of every parameter with a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def unreferenced() -> set[str]:
+    """Public package functions and classes no non-test module names."""
+    module_names = {p: _names(TREES[p]) for p in NON_TEST}
+    out = set()
+    for module, node in _public_defs():
+        own = os.path.join(REPO, PKG, *module.split(".")) + ".py"
+        hit = any(
+            node.name in (_names(TREES[p], skip=node) if p == own else names)
+            for p, names in module_names.items()
+        )
+        if not hit:
+            out.add(f"{module}.{node.name}")
+    return out
+
+
+def unset_parameters() -> set[str]:
+    """Defaulted parameters of public package functions that no call passes."""
+    calls = _calls()
+    out = set()
+    for module, node in _public_defs():
+        if not isinstance(node, ast.FunctionDef):
+            continue
+        for param, index in _defaulted(node):
+            if not any(_passed(c, param, index) for c in calls.get(node.name, [])):
+                out.add(f"{module}.{node.name}.{param}")
+    return out
+
+
+def _kept(name: str) -> bool:
+    return any(name == k or name.startswith(k + ".") for k in KEPT)
+
+
+def test_every_public_function_has_a_non_test_caller():
+    assert sorted(n for n in unreferenced() if not _kept(n)) == []
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    assert sorted(n for n in unset_parameters() if not _kept(n)) == []
+
+
+def test_kept_entries_are_still_exceptions():
+    """A KEPT entry whose function gained a caller, or whose parameter
+    gained a passing call, is stale; at most 10 parameters stay unset."""
+    unset = unset_parameters()
+    found = unreferenced() | unset
+    stale = [k for k in KEPT if not any(n == k or n.startswith(k + ".") for n in found)]
+    assert stale == []
+    assert len(unset) <= 10, sorted(unset)

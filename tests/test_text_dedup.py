@@ -12,13 +12,11 @@ import pytest
 
 from vector_database_product_recommendation_spark.functions.text import (
     doc_fingerprint,
-    hash60,
     lang_id,
-    quality_score,
-    token_count_regex,
     token_count_ws,
-    word_shingles,
 )
+from vector_database_product_recommendation_spark.functions.textprof import profile_docs_py
+from vector_database_product_recommendation_spark.operators import dedup
 from vector_database_product_recommendation_spark.operators.dedup import (
     embedding_near_dup,
     exact_dedup_groups,
@@ -37,18 +35,14 @@ def _docs(spark, rows):
 
 def test_token_counts(spark):
     df = _docs(spark, [(1, "Hello,  world! x"), (2, ""), (3, "   ")])
-    out = {
-        r["doc_id"]: (r["ws"], r["re"])
-        for r in df.select(
-            "doc_id",
-            token_count_ws("text").alias("ws"),
-            token_count_regex("text").alias("re"),
-        ).collect()
+    ws = {r["doc_id"]: r["n"] for r in df.select("doc_id", token_count_ws("text").alias("n")).collect()}
+    prof = {
+        r["doc_id"]: (r["n_tokens"], r["n_tokens_re"])
+        for r in profile_docs_py(df, ("n_tokens", "n_tokens_re")).collect()
     }
     # "hello," "world!" "x" -> 3 ws tokens; regex: hello , world ! x -> 5
-    assert out[1] == (3, 5)
-    assert out[2] == (0, 0)
-    assert out[3] == (0, 0)
+    assert ws == {1: 3, 2: 0, 3: 0}
+    assert prof == {1: (3, 5), 2: (0, 0), 3: (0, 0)}
 
 
 def test_lang_id_markers(spark):
@@ -77,21 +71,28 @@ def test_fingerprint_order_invariant(spark):
 
 def test_quality_score_range(spark):
     df = _docs(spark, [(1, "the quick brown fox jumps over a lazy dog today ok"), (2, "x")])
-    out = {r["doc_id"]: r["q"] for r in df.select("doc_id", quality_score("text").alias("q")).collect()}
+    out = {r["doc_id"]: r["quality"] for r in profile_docs_py(df, ("quality",)).collect()}
     assert out[1] == 1.0
     assert 0.0 <= out[2] < 1.0
 
 
 def test_word_shingles_short_doc(spark):
     df = _docs(spark, [(1, "a b"), (2, "a b c d")])
-    out = {r["doc_id"]: sorted(r["s"]) for r in df.select("doc_id", word_shingles("text").alias("s")).collect()}
+    out = {r["doc_id"]: sorted(r["shingles"]) for r in dedup._doc_shingles_py(df).collect()}
     assert out[1] == ["a b"]  # shorter than n -> whole text
     assert out[2] == ["a b c", "b c d"]
 
 
-def test_hash60_positive_and_stable(spark):
-    rows = spark.range(1).select(hash60(F.lit("7|foo bar baz")).alias("h")).collect()
-    assert rows[0]["h"] == 46699026325707782  # cross-checked against DuckDB
+def test_hash60_positive_and_stable():
+    """The 60-bit md5 hash of the dedup kernels equals the DuckDB oracles'
+    ``_h60`` fragment, and stays positive in a signed int64."""
+    import duckdb
+
+    from vector_database_product_recommendation_spark.registry import _h60
+
+    expect = 46699026325707782
+    assert dedup._md5_60("7|foo bar baz") == expect
+    assert duckdb.sql(f"SELECT {_h60(repr('7|foo bar baz'))}").fetchone()[0] == expect
 
 
 def test_exact_dedup_groups(spark):
@@ -178,7 +179,7 @@ def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark):
 def test_text_functions_property_fuzz(spark):
     """Property fuzz (hypothesis): for arbitrary printable strings, the
     Column-expression text ops agree with their plain-Python definitions
-    and stay in range."""
+    and the profile kernel's quality stays in range."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -195,9 +196,8 @@ def test_text_functions_property_fuzz(spark):
     out = df.select(
         "doc_id",
         token_count_ws("text").alias("n"),
-        quality_score("text").alias("q"),
         doc_fingerprint("text").alias("f"),
-    ).collect()
+    ).join(profile_docs_py(df, ("quality",)).withColumnRenamed("quality", "q"), "doc_id").collect()
     by_id = {r["doc_id"]: r for r in out}
     for i, t in rows:
         r = by_id[i]
@@ -262,6 +262,17 @@ def test_connected_components_transitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4}
 
 
+def test_connected_components_raises_past_the_round_budget(spark, monkeypatch):
+    """A path graph needs one min-label round per hop: with a one-round
+    budget the labels have not converged, and the operator raises instead
+    of returning wrong components."""
+    verts = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(1, 5)], "id_a long, id_b long")
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 1)
+    with pytest.raises(RuntimeError, match="CC_MAX_ITER=1"):
+        dedup.connected_components(verts, edges)
+
+
 def test_dedup_components_keeps_min_id(spark):
     from vector_database_product_recommendation_spark.operators.dedup import dedup_components
 
@@ -299,17 +310,19 @@ def test_repetition_signals_extremes(spark):
     assert got[3]["n_tokens"] == 1 and got[3]["dup_bigram_frac"] == 0.0
 
 
-def test_embedding_near_dup_guard_raises_beyond_max_rows(spark):
+def test_embedding_near_dup_guard_raises_beyond_max_rows(spark, monkeypatch):
     """The exact all-pairs path collects the corpus to the driver — it must
-    refuse large inputs and point to the LSH scale path (VERDICT r01 #6)."""
+    refuse large inputs and point to the LSH scale path."""
     emb = spark.range(6).select(
         F.col("id").cast("int").alias("vec_id"),
         F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
     )
+    monkeypatch.setattr(dedup, "NEAR_DUP_MAX_ROWS", 5)
     with pytest.raises(ValueError, match="embedding_near_dup_lsh"):
-        embedding_near_dup(emb, max_rows=5)
+        embedding_near_dup(emb)
     # at or under the cap it still runs
-    assert embedding_near_dup(emb, max_rows=6).count() > 0
+    monkeypatch.setattr(dedup, "NEAR_DUP_MAX_ROWS", 6)
+    assert embedding_near_dup(emb).count() > 0
 
 
 def test_ngram_jaccard_sort_param_same_rows(spark, sf_dir):

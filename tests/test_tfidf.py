@@ -10,11 +10,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
 from vector_database_product_recommendation_spark.operators.knn import item_to_item
 from vector_database_product_recommendation_spark.operators.tfidf import (
+    TfidfModel,
     hybrid_search,
     tfidf_search,
-    tfidf_weights,
 )
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
@@ -29,9 +30,14 @@ def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").cache()
 
 
-def test_tfidf_weights_unit_norm(docs):
+@pytest.fixture(scope="module")
+def model(docs):
+    return TfidfModel(docs, "doc_id", "text", STOPWORDS_EN)
+
+
+def test_tfidf_weights_unit_norm(model):
     norms = (
-        tfidf_weights(docs, round_decimals=12)
+        model.weights(12)
         .groupBy("doc_id")
         .agg(F.sum(F.col("weight") * F.col("weight")).alias("sq"))
         .collect()
@@ -39,25 +45,25 @@ def test_tfidf_weights_unit_norm(docs):
     assert norms and all(abs(r["sq"] - 1.0) < 1e-6 for r in norms)
 
 
-def test_tfidf_self_retrieval_ranks_self_first(docs):
+def test_tfidf_self_retrieval_ranks_self_first(docs, model):
     qtext = docs.filter(F.col("doc_id") == 3).select("text").first()[0]
-    top = tfidf_search(qtext, docs, k=3).collect()
+    top = tfidf_search(qtext, model, k=3).collect()
     assert top[0]["doc_id"] == 3
     assert abs(top[0]["score"] - 1.0) < 1e-4  # cosine with itself
 
 
-def test_hybrid_alpha_one_equals_dense_ranking(docs, emb):
+def test_hybrid_alpha_one_equals_dense_ranking(docs, emb, model):
     qtext = docs.filter(F.col("doc_id") == 3).select("text").first()[0]
-    hybrid = hybrid_search(qtext, 3, docs, emb, k=10, alpha=1.0).collect()
+    hybrid = hybrid_search(qtext, 3, docs, emb, k=10, alpha=1.0, model=model).collect()
     dense = item_to_item(emb, 3, 10).collect()
     # hybrid(alpha=1) includes self at rank 1; dense item_to_item excludes it
     assert hybrid[0]["doc_id"] == 3
     assert [r["doc_id"] for r in hybrid[1:]] == [r["neighbor_id"] for r in dense][:9]
 
 
-def test_hybrid_scores_bounded(docs, emb):
+def test_hybrid_scores_bounded(docs, emb, model):
     qtext = docs.filter(F.col("doc_id") == 3).select("text").first()[0]
-    rows = hybrid_search(qtext, 3, docs, emb, k=50, alpha=0.7).collect()
+    rows = hybrid_search(qtext, 3, docs, emb, k=50, alpha=0.7, model=model).collect()
     # alpha*dot in [-1,1], (1-alpha)*minmax in [0, 0.3]
     assert all(-1.0 <= r["score"] <= 1.3 for r in rows)
 
@@ -82,9 +88,6 @@ def test_bm25_self_retrieval_and_positive_scores(spark, sf_dir):
 def test_base_tf_without_max_features_raises(docs):
     """A shared tf frame only seeds a capped refit; an uncapped model over
     it would co-own (and on teardown unpersist) the sibling's cache."""
-    from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
-    from vector_database_product_recommendation_spark.operators.tfidf import TfidfModel
-
     base = TfidfModel(docs, "doc_id", "text", STOPWORDS_EN)
     try:
         with pytest.raises(ValueError, match="max_features"):

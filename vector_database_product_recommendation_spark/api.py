@@ -292,7 +292,7 @@ class ProductSearchEngine:
         dense = exact_scores(
             cand, self._text_query, corpus_id="id", query_rows=rows
         ).select(F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs"))
-        top = blend_hybrid(sparse, dense, alpha, k, 6)
+        top = blend_hybrid(sparse, dense, alpha, k)
         # ranks are minted after the selection: the window sees k rows
         hits = top.select(F.col("doc_id").alias("id"), "score").withColumn(
             "rank", F.row_number().over(Window.orderBy(F.desc("score"), F.asc("id")))

@@ -11,8 +11,10 @@ Every public builder here is one ``build`` function behind the one memo
 (``_memo``), keyed by (applicationId, sf_dir, builder name, parameters
 with their defaults filled in), so a restarted session (whose persisted
 RDDs are gone) never sees stale handles and an omitted default hits the
-same entry as a spelled-out one. Every cached table goes through the one
-persist rule, ``lifetime.persist_right_sized``.
+same entry as a spelled-out one. Only ``fitted_tfidf`` takes a parameter
+(its vocabulary cap); every other builder has one entry per corpus.
+Every cached table goes through the one persist rule,
+``lifetime.persist_right_sized``.
 """
 
 from __future__ import annotations
@@ -80,22 +82,17 @@ def fitted_tfidf(
 
 
 @_memo
-def ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    nlist: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned) for the ``embeddings`` corpus — the FAISS
     IndexIVFFlat file analog (SURVEY.md section 2.7), built by
     ``ivf.build_ivf_index``."""
     from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
 
-    return build_ivf_index(load_table(spark, sf_dir, "embeddings"), nlist=nlist)
+    return build_ivf_index(load_table(spark, sf_dir, "embeddings"))
 
 
 @_memo
-def shingle_index(spark: SparkSession, sf_dir: str, *, n: int = 3) -> DataFrame:
+def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded (doc_id, shingle) inverted-index rows over ``documents`` —
     the write-the-index-once step of the n-gram Jaccard pipeline
     (dedup.py module docstring). Serving queries (dedup_ngram_jaccard,
@@ -107,22 +104,20 @@ def shingle_index(spark: SparkSession, sf_dir: str, *, n: int = 3) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return persist_right_sized(
-        _doc_shingles_py(docs, "doc_id", "text", n).select(
+        _doc_shingles_py(docs).select(
             "doc_id", F.explode("shingles").alias("shingle")
         )
     )
 
 
 @_memo
-def minhash_signature_table(
-    spark: SparkSession, sf_dir: str, *, n: int = 3, num_hashes: int = 32
-) -> DataFrame:
+def minhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingles, mh) MinHash signatures over ``documents`` — the
     write-signatures-once step of the MinHash-LSH pipeline."""
     from vector_database_product_recommendation_spark.operators.dedup import _with_minhash
 
     docs = load_table(spark, sf_dir, "documents")
-    return persist_right_sized(_with_minhash(docs, "doc_id", "text", n, num_hashes))
+    return persist_right_sized(_with_minhash(docs))
 
 
 @_memo
@@ -134,42 +129,29 @@ def simhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_memo
-def winnow_fingerprint_table(
-    spark: SparkSession, sf_dir: str, *, k: int = 4, w: int = 5
-) -> DataFrame:
+def winnow_fingerprint_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fp) winnowing fingerprints over ``documents`` (unsorted;
     consumers add their own presentation order)."""
     from vector_database_product_recommendation_spark.operators.dedup import winnow_fingerprints_df
 
     return persist_right_sized(
-        winnow_fingerprints_df(load_table(spark, sf_dir, "documents"), k=k, w=w, sort=False)
+        winnow_fingerprints_df(load_table(spark, sf_dir, "documents"), sort=False)
     )
 
 
 @_memo
-def embedding_band_table(
-    spark: SparkSession, sf_dir: str, *, n_planes: int = 16, n_bands: int = 4
-) -> DataFrame:
+def embedding_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vid, band_idx, band_key) hyperplane band signatures over
     ``embeddings`` — the embedding-LSH blocking index."""
     from vector_database_product_recommendation_spark.operators.dedup import (
         embedding_band_signatures,
     )
 
-    return persist_right_sized(
-        embedding_band_signatures(
-            load_table(spark, sf_dir, "embeddings"), n_planes=n_planes, n_bands=n_bands
-        )
-    )
+    return persist_right_sized(embedding_band_signatures(load_table(spark, sf_dir, "embeddings")))
 
 
 @_memo
-def ivf_store(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    nlist: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def ivf_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, store) where `store` is the corpus REOPENED from a
     cluster-partitioned parquet layout (write_ivf_store) — probing filters
     on cluster_id become native partition pruning, the on-disk
@@ -183,14 +165,14 @@ def ivf_store(
         write_ivf_store,
     )
 
-    cents, assigned = ivf_index(spark, sf_dir, nlist=nlist)
+    cents, assigned = ivf_index(spark, sf_dir)
     path = tempfile.mkdtemp(prefix="ivf_store_")
     write_ivf_store(assigned, path)
     return cents, read_ivf_store(spark, path)
 
 
 @_memo
-def encoded_documents(spark: SparkSession, sf_dir: str, *, dim: int = 384) -> DataFrame:
+def encoded_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precomputed hash-embeddings of the documents corpus — the
     review_embeddings.npy analog (the reference never encodes the corpus
     at serving time; only the query string is encoded per request,
@@ -198,18 +180,11 @@ def encoded_documents(spark: SparkSession, sf_dir: str, *, dim: int = 384) -> Da
     (session, corpus)."""
     from vector_database_product_recommendation_spark.functions.embed import encode_documents
 
-    return persist_right_sized(encode_documents(load_table(spark, sf_dir, "documents"), dim=dim))
+    return persist_right_sized(encode_documents(load_table(spark, sf_dir, "documents")))
 
 
 @_memo
-def pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    m: int = 8,
-    ksub: int = 16,
-    seed: int = 42,
-):
+def pq_index(spark: SparkSession, sf_dir: str):
     """(codebooks, codes) for the ``embeddings`` corpus — the PQ codebook
     + code-table pair, trained/encoded once per (session, corpus). codes
     is cached; codebooks are kilobytes of driver-side numpy (at
@@ -217,5 +192,5 @@ def pq_index(
     from vector_database_product_recommendation_spark.operators.pq import encode_pq, train_pq
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = train_pq(emb, m=m, ksub=ksub, seed=seed)
+    books = train_pq(emb)
     return books, persist_right_sized(encode_pq(emb, books))

@@ -25,13 +25,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 
 def hash_embed_py(text: str, dim: int = 384) -> list[float]:
     """Reference implementation (driver-side, one string). bucket =
-    h % dim, sign = +1 iff (h // dim) even, h = 60-bit md5 int — matches
-    functions.text.hash60 and the SQL oracle exactly."""
+    h % dim, sign = +1 iff (h // dim) even, h = 60-bit md5 int (first 15
+    hex digits) — matches the SQL oracle exactly."""
     v = np.zeros(dim, dtype=np.float64)
     for w in (text or "").lower().split():
         h = int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
@@ -39,13 +39,13 @@ def hash_embed_py(text: str, dim: int = 384) -> list[float]:
     return (v / (np.linalg.norm(v) + 1e-12)).tolist()
 
 
-def hash_embedder(dim: int = 384):
-    """Arrow-batched pandas UDF: text -> unit array<double>[dim]."""
+def hash_embedder():
+    """Arrow-batched pandas UDF: text -> unit array<double>[384]."""
 
     @F.pandas_udf("array<double>")
     def embed(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for texts in it:
-            yield pd.Series([hash_embed_py(t, dim) for t in texts])
+            yield pd.Series([hash_embed_py(t) for t in texts])
 
     return embed
 
@@ -74,15 +74,10 @@ def sentence_encoder(model_name: str = "sentence-transformers/all-MiniLM-L6-v2")
     return embed
 
 
-def encode_documents(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = 384,
-    encoder=None,
-) -> DataFrame:
-    """(vec_id, embedding) for every doc with at least one token.
+def encode_documents(docs: DataFrame, *, encoder=None) -> DataFrame:
+    """(vec_id, embedding) for every doc with at least one token, through
+    ``encoder`` (``hash_embedder()`` when None; ``sentence_encoder()`` for
+    SBERT).
 
     Zero-token docs are dropped (their embedding would be the zero vector,
     which breaks the unit-norm invariant — and the SQL oracle's sparse form
@@ -90,32 +85,7 @@ def encode_documents(
     """
     from vector_database_product_recommendation_spark.functions.text import token_count_ws
 
-    emb_udf = encoder or hash_embedder(dim)
-    return docs.filter(token_count_ws(text_col) > 0).select(
-        F.col(id_col).alias("vec_id"), emb_udf(F.col(text_col)).alias("embedding")
+    emb_udf = encoder or hash_embedder()
+    return docs.filter(token_count_ws("text") > 0).select(
+        F.col("doc_id").alias("vec_id"), emb_udf(F.col("text")).alias("embedding")
     )
-
-
-def free_text_search(
-    query_text: str,
-    docs: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = 384,
-) -> DataFrame:
-    """E1 vector path (app.py:281-303): encode query + corpus, exact KNN.
-
-    The corpus is encoded executor-side (Arrow batches); the single query
-    embeds on the driver and ships in the task closure — the reference's
-    embed-then-score lifecycle with the scoring distributed.
-    """
-    from vector_database_product_recommendation_spark.operators.knn import exact_knn
-
-    corpus = encode_documents(docs, id_col=id_col, text_col=text_col, dim=dim)
-    spark = docs.sparkSession
-    q = spark.createDataFrame(
-        [(0, hash_embed_py(query_text, dim))], "query_id long, query_vec array<double>"
-    )
-    return exact_knn(corpus, q, k)

@@ -10,10 +10,10 @@ Design rules:
   the hot path). Every function here has an exact DuckDB-SQL twin used by
   the driver oracle.
 - cross-engine determinism: the only hash primitive is md5 (identical
-  everywhere); 60-bit integer hashes are minted as
-  ``conv(substr(md5(x),1,15),16,10)`` which equals DuckDB's
-  ``('0x'||substr(md5(x),1,15))::BIGINT`` — 60 bits keeps the value
-  positive in a signed int64 on both engines.
+  everywhere).
+
+The per-document profile metrics (token counts, ratios, quality score)
+are computed by the Arrow kernel in functions/textprof.py.
 """
 
 from __future__ import annotations
@@ -58,64 +58,6 @@ def token_count_ws(text: Column | str) -> Column:
     return F.size(tokens_ws(text))
 
 
-def token_count_regex(text: Column | str) -> Column:
-    """BPE-ish token count: alnum runs and single non-space symbols each
-    count as one token — a cheap, deterministic proxy for subword counts.
-
-    Pattern `[a-z0-9]+|[^a-z0-9\\s]` is valid in both Java regex (Spark)
-    and RE2 (DuckDB).
-    """
-    return F.size(F.regexp_extract_all(F.lower(_c(text)), F.lit(r"[a-z0-9]+|[^a-z0-9\s]"), F.lit(0)))
-
-
-def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    """Fraction of whitespace tokens that are stop words (0.0 on empty)."""
-    toks = tokens_ws(text)
-    sw = F.array(*[F.lit(s) for s in stopwords])
-    n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    n = F.size(toks)
-    return F.when(n > 0, n_sw.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    """Fraction of non-space characters that are not alphanumeric."""
-    t = F.regexp_replace(F.lower(_c(text)), r"\s", "")
-    n = F.length(t)
-    n_alnum = F.length(F.regexp_replace(t, r"[^a-z0-9]", ""))
-    return F.when(n > 0, (n - n_alnum).cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def mean_token_len(text: Column | str) -> Column:
-    """Mean whitespace-token length in characters (0.0 on empty)."""
-    toks = tokens_ws(text)
-    n = F.size(toks)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def quality_score(text: Column | str) -> Column:
-    """Deterministic heuristic quality in [0,1] — the classic pre-training
-    filters (Gopher/C4-style length + punctuation + stopword checks)
-    collapsed into one arithmetic score:
-
-        0.25 * (5 <= n_tokens <= 2000)
-      + 0.25 * (2.0 <= mean_token_len <= 12.0)
-      + 0.25 * (stopword_ratio >= 0.01)
-      + 0.25 * (punct_ratio <= 0.3)
-    """
-    n = token_count_ws(text)
-    mtl = mean_token_len(text)
-    swr = stopword_ratio(text)
-    pr = punct_ratio(text)
-    part = lambda cond: F.when(cond, F.lit(0.25)).otherwise(F.lit(0.0))  # noqa: E731
-    return (
-        part((n >= 5) & (n <= 2000))
-        + part((mtl >= 2.0) & (mtl <= 12.0))
-        + part(swr >= 0.01)
-        + part(pr <= 0.3)
-    )
-
-
 def lang_id(text: Column | str) -> Column:
     """Marker-stopword language ID: count per-language marker hits over the
     token array; argmax wins, ties broken by language code order, rows with
@@ -145,25 +87,3 @@ def doc_fingerprint(text: Column | str) -> Column:
     duplicates -> identical fingerprint; robust to word order and repeats."""
     toks = F.array_sort(F.array_distinct(tokens_ws(text)))
     return F.md5(F.array_join(toks, " "))
-
-
-def hash60(x: Column | str) -> Column:
-    """Deterministic 60-bit positive integer hash of a string, identical in
-    Spark and DuckDB (see module docstring)."""
-    return F.conv(F.substring(F.md5(_c(x)), 1, 15), 16, 10).cast("bigint")
-
-
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of lowercased text -> array<string>.
-
-    Built from the token array with transform+slice (no Python). Documents
-    shorter than n tokens yield a single shingle of the whole text.
-    """
-    toks = tokens_ws(text)
-    k = F.size(toks)
-    ngrams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k - n + 1, F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.array_distinct(F.when(k > 0, ngrams).otherwise(F.array()))
-

@@ -1,20 +1,21 @@
-"""Arrow-kernel twins of the functions.text profile expressions.
+"""Per-document text profile — token counts, mean token length,
+stopword and punctuation ratios, quality score, language, fingerprint —
+in one Arrow kernel pass.
 
-The pure-Column forms in functions.text are the oracle-checkable
-reference (each has an exact DuckDB twin) — but the interpreted
-higher-order-function lambdas they expand to are the slowest thing
-Catalyst can run: ``lang_id`` alone (4 languages x per-token
-array_contains over 8 markers) costs ~2.9 s per 5000 docs at bench
-scale, ~10x the whole scan. Same story as the shingle/minhash/simhash
-kernels in operators/dedup.py: the profile is row-local, so one
-mapInPandas pass computes every metric in plain Python string ops,
-value-identical to the expressions (ASCII corpus; Python twins follow
-the ``_shingles_py`` precedent of ``text.lower().split()`` ==
+Each metric is defined by the DuckDB oracle of the registered
+``doc_text_profile`` query; ``lang`` and ``fingerprint`` equal the Column
+expressions ``functions.text.lang_id`` and ``doc_fingerprint``. Those
+interpreted higher-order-function lambdas are the slowest thing Catalyst
+can run: ``lang_id`` alone (4 languages x per-token array_contains over 8
+markers) costs ~2.9 s per 5000 docs at bench scale, ~10x the whole scan.
+Same story as the shingle/minhash/simhash kernels in operators/dedup.py:
+the profile is row-local, so one mapInPandas pass computes every metric
+in plain Python string ops (ASCII corpus; ``text.lower().split()`` ==
 ``split(lower(trim(text)), '\\s+')`` + empty filter, with re.ASCII
 pinning \\s and character classes to Java regex semantics).
 
-Rounding stays OUTSIDE the kernel: callers apply the same F.round they
-always did, so engine rounding semantics never enter Python.
+Rounding stays OUTSIDE the kernel: callers apply F.round, so engine
+rounding semantics never enter Python.
 """
 
 from __future__ import annotations
@@ -51,8 +52,7 @@ PROFILE_COLS = {
 
 
 def _metrics(text: str, want: tuple[str, ...]) -> dict:
-    """One doc -> the requested metrics, value-identical to the
-    functions.text Column expressions (see module docstring)."""
+    """One doc -> the requested metrics (see module docstring)."""
     t = text or ""
     low = t.lower()
     toks = low.split()
@@ -100,22 +100,17 @@ def _metrics(text: str, want: tuple[str, ...]) -> dict:
     return out
 
 
-def profile_docs_py(
-    docs: DataFrame,
-    cols: tuple[str, ...],
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, *cols) in one Arrow pass. ``cols`` picks from PROFILE_COLS;
-    output order follows ``cols``. Row-local — no shuffle."""
+def profile_docs_py(docs: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """(doc_id, *cols) of the ``text`` column in one Arrow pass. ``cols``
+    picks from PROFILE_COLS; output order follows ``cols``. Row-local — no
+    shuffle."""
     unknown = [c for c in cols if c not in PROFILE_COLS]
     if unknown:
         raise ValueError(f"unknown profile columns {unknown!r}")
-    src = docs.select(id_col, text_col)
-    id_dtype = src.schema[id_col].dataType.simpleString()
+    src = docs.select("doc_id", "text")
+    id_dtype = src.schema["doc_id"].dataType.simpleString()
     schema = ", ".join(
-        [f"{id_col} {id_dtype}"] + [f"{c} {PROFILE_COLS[c]}" for c in cols]
+        [f"doc_id {id_dtype}"] + [f"{c} {PROFILE_COLS[c]}" for c in cols]
     )
     want = tuple(cols)
 
@@ -123,8 +118,8 @@ def profile_docs_py(
         for pdf in batches:
             if pdf.empty:
                 continue
-            rows = [_metrics(t, want) for t in pdf[text_col]]
-            data = {id_col: pdf[id_col]}
+            rows = [_metrics(t, want) for t in pdf["text"]]
+            data = {"doc_id": pdf["doc_id"]}
             for c in want:
                 data[c] = [r[c] for r in rows]
             yield pd.DataFrame(data)

@@ -1,4 +1,4 @@
-"""Vector column expressions: dot / cosine / l2-normalize over array<float>.
+"""Vector column expressions: dot / norm / l2-normalize over array<float>.
 
 The reference relies on one invariant everywhere (SURVEY.md section 1.2):
 all vectors are unit-norm, so inner product == cosine similarity (raw `@`
@@ -43,19 +43,14 @@ def norm2(v: Column | str) -> Column:
     )
 
 
-def l2_normalize(v: Column | str, eps: float = 1e-12) -> Column:
-    """Unit-normalize an array<numeric> column -> array<double>.
+def l2_normalize(v: Column | str) -> Column:
+    """Unit-normalize an array<numeric> column -> array<double> (the norm
+    gets +1e-12, so a zero vector stays zero).
 
     The reference normalizes at encode time (app.py:170,
     normalize_embeddings=True) and when building product centroids
     (SURVEY.md section 1.2 — product vec = normalized mean of review vecs).
     """
     v = F.col(v) if isinstance(v, str) else v
-    n = norm2(v) + F.lit(eps)
+    n = norm2(v) + F.lit(1e-12)
     return F.transform(v, lambda x: x.cast("double") / n)
-
-
-def cosine(a: Column | str, b: Column | str, eps: float = 1e-12) -> Column:
-    """Cosine similarity for not-necessarily-normalized vectors."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return dot(a, b) / ((norm2(a) + F.lit(eps)) * (norm2(b) + F.lit(eps)))

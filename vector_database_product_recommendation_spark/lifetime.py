@@ -5,8 +5,7 @@ consumers inside the SAME query (LSH signature tables, winnowing
 fingerprints, the hybrid-search sparse scores). Those persists are
 QUERY-LOCAL: nothing outside the one invocation ever reads them — but a
 bare ``.persist()`` has no release point, so a long bench session pins a
-fresh copy per invocation (bounded only by LRU eviction; r21 verdict
-item 5).
+fresh copy per invocation (bounded only by LRU eviction).
 
 The contract: operators mark such intermediates with :func:`pin`; the
 registry wrapper calls :func:`release_pins` as each new query begins, so

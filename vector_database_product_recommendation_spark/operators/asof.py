@@ -30,23 +30,22 @@ def asof_join(
     *,
     on: str,
     left_ts: str = "ts",
-    right_ts: str | None = None,
     right_value_cols: list[str] | None = None,
     strict: bool = True,
     prefix: str = "asof_",
 ) -> DataFrame:
-    """Backward as-of left join. Carried columns come back as
-    `{prefix}{right_ts}` plus `{prefix}{col}` for each right value col."""
-    right_ts = right_ts or left_ts
+    """Backward as-of left join on ``left_ts``, which names the time
+    column on both sides. Carried columns come back as `{prefix}{left_ts}`
+    plus `{prefix}{col}` for each right value col."""
     right_value_cols = right_value_cols or []
 
     rstruct = F.struct(
-        F.col(right_ts).alias("__rts"),
+        F.col(left_ts).alias("__rts"),
         *[F.col(c).alias(c) for c in right_value_cols],
     )
     r = right.select(
         F.col(on),
-        F.col(right_ts).alias("__ts"),
+        F.col(left_ts).alias("__ts"),
         rstruct.alias("__rv"),
         F.lit(0).alias("__side"),
     )
@@ -71,7 +70,7 @@ def asof_join(
     out = (
         unioned.withColumn("__carry", carried)
         .filter(F.col("__side") == 1)
-        .withColumn(f"{prefix}{right_ts}", F.col("__carry.__rts"))
+        .withColumn(f"{prefix}{left_ts}", F.col("__carry.__rts"))
     )
     for c in right_value_cols:
         out = out.withColumn(f"{prefix}{c}", F.col(f"__carry.{c}"))

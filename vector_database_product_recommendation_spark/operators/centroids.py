@@ -49,21 +49,11 @@ def group_centroids(
     return assembled.select(group_col, vec.alias("vector"))
 
 
-def group_centroids_long(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-    *,
-    normalize: bool = True,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """Exploded (group, pos, val) form of group_centroids — the
+def group_centroids_long(df: DataFrame, group_col: str) -> DataFrame:
+    """Exploded (group, pos, val) form of group_centroids over the
+    ``embedding`` column, values rounded to 6 decimals — the
     oracle-friendly projection (arrays hash awkwardly across engines)."""
-    wide = group_centroids(
-        df, group_col, vec_col, normalize=normalize, round_decimals=None
-    )
-    return wide.select(
-        group_col, F.posexplode("vector").alias("pos", "val")
-    ).select(group_col, "pos", F.round("val", round_decimals).alias("val")).orderBy(
+    wide = group_centroids(df, group_col, round_decimals=6)
+    return wide.select(group_col, F.posexplode("vector").alias("pos", "val")).orderBy(
         group_col, "pos"
     )

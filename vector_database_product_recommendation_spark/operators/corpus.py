@@ -13,8 +13,8 @@ which is one hash shuffle on the fingerprint; the funnel summary is three
 tiny aggregates over the same persisted profile.
 
 Scale notes: the profile projection is ONE row-local Arrow kernel pass
-(functions/textprof.py — the value-identical twin of the functions.text
-expressions, whose interpreted HOF lambdas cost ~10x the scan); the
+(functions/textprof.py — an interpreted Column-expression profile costs
+~10x the scan); the
 fingerprint dedup shuffles only (fingerprint, doc_id, n_tokens) — never
 the text payload. At 100 TB the win of profiling BEFORE shuffling is the
 whole game: survivors of the gate are typically a small fraction of
@@ -30,15 +30,10 @@ from vector_database_product_recommendation_spark.functions.textprof import prof
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 
-def corpus_prep_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    lang: str = "en",
-    min_quality: float = 0.75,
-) -> DataFrame:
+def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returns the funnel: (stage, n_docs, total_tokens) for the raw
-    corpus, the post-gate corpus, and the post-dedup corpus.
+    corpus, the post-gate corpus (lang == "en" and quality >= 0.75), and
+    the post-dedup corpus.
 
     Single-pass shape: the profile projection runs ONCE (Spark does not
     share subplans across union branches, so a three-branch funnel would
@@ -47,14 +42,12 @@ def corpus_prep_pipeline(
     fingerprint window sorts gate-survivors first, so rank 1 is the
     lowest gated doc_id — non-gated rows never win a group."""
     docs = load_table(spark, sf_dir, "documents")
-    # one Arrow kernel pass for the whole profile (value-identical twin of
-    # the functions.text expressions — see functions/textprof.py; the
-    # interpreted lang_id/quality HOF lambdas alone cost ~10x the scan)
+    # one Arrow kernel pass for the whole profile (functions/textprof.py)
     prof = profile_docs_py(
         docs, ("lang", "quality", "n_tokens", "fingerprint")
     )
 
-    g = (F.col("lang") == F.lit(lang)) & (F.col("quality") >= F.lit(min_quality))
+    g = (F.col("lang") == F.lit("en")) & (F.col("quality") >= F.lit(0.75))
     w = Window.partitionBy("fingerprint").orderBy(F.desc("g"), "doc_id")
     flagged = (
         prof.withColumn("g", g)

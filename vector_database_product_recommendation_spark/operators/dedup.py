@@ -2,7 +2,7 @@
 
 Five families, all deterministic and oracle-checkable (every hash is md5 —
 the one hash both Spark and DuckDB compute identically; 60-bit integer
-hashes via ``functions.text.hash60``):
+hashes are the first 15 hex digits of an md5, ``_md5_60``):
 
 - exact:        group by md5(text)                          O(N) + 1 shuffle
 - n-gram Jaccard: inverted-index self-join on shingles      sparse O(pairs)
@@ -17,11 +17,11 @@ Scale notes (100 TB):
   shuffle.
   The only shuffles are the pair-finding joins, whose keys
   (shingle / band signature / simhash chunk) are engineered to be sparse.
-- the inverted-index join caps shingle document-frequency (``max_df``):
-  a shingle occurring in more than max_df docs is a stop-shingle and is
+- the inverted-index join caps shingle document-frequency (``MAX_DF``):
+  a shingle occurring in more than MAX_DF docs is a stop-shingle and is
   dropped from BOTH the numerator and the doc-size denominator (the
   operator is *defined* over the capped shingle space). This bounds the
-  worst-case join fan-out at max_df^2 per shingle — without it one viral
+  worst-case join fan-out at MAX_DF^2 per shingle — without it one viral
   sentence produces a quadratic blowup.
 - band/bucket joins move only (key, doc_id) pairs, never text.
 """
@@ -46,60 +46,75 @@ from vector_database_product_recommendation_spark.functions.text import tokens_w
 # literals.
 _MERSENNE_P = (1 << 31) - 1
 
+# word n-gram size of every shingle-based operator
+SHINGLE_N = 3
+# shingle document-frequency cap of the n-gram Jaccard join (module docstring)
+MAX_DF = 100
+# MinHash signature length and its LSH banding: BANDS bands of
+# NUM_HASHES // BANDS rows each
+NUM_HASHES = 32
+BANDS = 8
+# SimHash blocking: the 60-bit signature splits into SIMHASH_CHUNKS chunks
+SIMHASH_CHUNKS = 4
+# embedding LSH: N_PLANES hyperplane sign bits in N_BANDS bands
+N_PLANES = 16
+N_BANDS = 4
+# winnowing: K-token grams, windows of W gram hashes
+WINNOW_K = 4
+WINNOW_W = 5
+# the most corpus rows embedding_near_dup collects to the driver
+NEAR_DUP_MAX_ROWS = 100_000
+# the most min-label rounds connected_components runs before it raises
+CC_MAX_ITER = 25
+# how long connected_components waits for an observed label sum before it
+# runs the aggregate itself
+OBSERVE_TIMEOUT_S = 120.0
+
 
 def _perm_constants(num_hashes: int) -> tuple[list[int], list[int]]:
-    import hashlib
-
-    def h60(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    a = [(h60(f"{s}A") % (_MERSENNE_P - 1)) + 1 for s in range(num_hashes)]
-    b = [h60(f"{s}B") % _MERSENNE_P for s in range(num_hashes)]
+    a = [(_md5_60(f"{s}A") % (_MERSENNE_P - 1)) + 1 for s in range(num_hashes)]
+    b = [_md5_60(f"{s}B") % _MERSENNE_P for s in range(num_hashes)]
     return a, b
 
 
-def exact_dedup_groups(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups: one row per distinct text hash with the copy
     count and the canonical (minimum-id) survivor. Single hash-shuffle."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_hash"))
+        docs.groupBy(F.md5(F.col("text")).alias("text_hash"))
         .agg(
             F.count(F.lit(1)).alias("n_copies"),
-            F.min(F.col(id_col)).alias("keep_id"),
+            F.min(F.col("doc_id")).alias("keep_id"),
         )
         .orderBy("keep_id")
     )
 
 
-def _shingles_py(text: str, n: int) -> list[str]:
-    """Python form of functions.text.word_shingles: lowercased whitespace
-    tokens, distinct word n-grams in first-occurrence order, whole-text
-    shingle when the doc is shorter than n tokens."""
+def _shingles_py(text: str) -> list[str]:
+    """The shingles of one doc: lowercased whitespace tokens, distinct word
+    SHINGLE_N-grams in first-occurrence order, one whole-text shingle when
+    the doc is shorter than SHINGLE_N tokens (the DuckDB oracles' shingle
+    CTE)."""
     toks = (text or "").lower().split()
     if not toks:
         return []
+    n = SHINGLE_N
     grams = (" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1)))
     return list(dict.fromkeys(grams))
 
 
-def _doc_shingles_py(
-    docs: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(doc_id, shingles array<string>) for non-empty docs, one Arrow pass.
-
-    Same values as ``word_shingles`` over the text column; the interpreted
-    transform/slice/array_join chain costs ~10s per 5000 docs vs <1s in
-    Python string ops."""
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
+def _doc_shingles_py(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles array<string>) for non-empty docs, one Arrow pass
+    (an interpreted transform/slice/array_join chain costs ~10s per 5000
+    docs vs <1s in Python string ops)."""
+    src = docs.select("doc_id", "text")
     dtype = src.schema["doc_id"].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            sh = [_shingles_py(t, n) for t in pdf["__t"]]
+            sh = [_shingles_py(t) for t in pdf["text"]]
             out = pd.DataFrame({"doc_id": pdf["doc_id"], "shingles": sh})
             yield out[out["shingles"].map(len) > 0]
 
@@ -109,11 +124,7 @@ def _doc_shingles_py(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     threshold: float = 0.2,
-    max_df: int = 100,
     sort: bool = True,
     shingle_index: DataFrame | None = None,
 ) -> DataFrame:
@@ -121,11 +132,11 @@ def ngram_jaccard_pairs(
     inverted-index self-join (never an N^2 cross join).
 
     ``shingle_index``: a prebuilt, persisted (doc_id, shingle) exploded
-    index over the same (docs, n) — the offline write-the-index-once
+    index over the same docs — the offline write-the-index-once
     step (artifacts.shingle_index); when absent the index is built here
     and pinned for this query's lifetime.
 
-    Jaccard is computed over the capped shingle space (df <= max_df, see
+    Jaccard is computed over the capped shingle space (df <= MAX_DF, see
     module docstring). Returns (id_a, id_b, jaccard), id_a < id_b.
 
     Physical shape (the ssjoin staples, both exact — the result set is
@@ -144,13 +155,13 @@ def ngram_jaccard_pairs(
     """
     sh = shingle_index
     if sh is None:
-        sh = pin(_doc_shingles_py(docs, id_col, text_col, n).select(
+        sh = pin(_doc_shingles_py(docs).select(
             "doc_id", F.explode("shingles").alias("shingle")
         ))  # query-local pin: feeds df-count and (via the cap join) sizes + self-join
     cold = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
+        .filter(F.col("df") <= MAX_DF)
         .select("shingle")
     )
     sh = sh.join(cold, "shingle")  # keep only cold shingles
@@ -191,7 +202,7 @@ def _md5_60(s: str) -> int:
 
 
 def _minhash_np(shingles, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """``num_hashes`` minhashes of one doc: base = hash60(shingle) mod P
+    """``len(a)`` minhashes of one doc: base = _md5_60(shingle) mod P
     computed ONCE per shingle, then mh[s] = min over shingles of
     (a_s*base + b_s) mod P, as one vectorized (k, n_shingles) permutation
     table (an interpreted JVM higher-order-function fold measured ~20x
@@ -200,14 +211,12 @@ def _minhash_np(shingles, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return ((a[:, None] * hs[None, :] + b[:, None]) % _MERSENNE_P).min(axis=1)
 
 
-def _with_minhash(
-    docs: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
-) -> DataFrame:
+def _with_minhash(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles, mh array<bigint>) via the Arrow kernel."""
-    a_const, b_const = _perm_constants(num_hashes)
+    a_const, b_const = _perm_constants(NUM_HASHES)
     a = np.asarray(a_const, dtype=np.int64)
     b = np.asarray(b_const, dtype=np.int64)
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
+    src = docs.select("doc_id", "text")
     dtype = src.schema["doc_id"].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -215,8 +224,8 @@ def _with_minhash(
             if pdf.empty:
                 continue
             ids, shs, mhs = [], [], []
-            for did, t in zip(pdf["doc_id"], pdf["__t"]):
-                sh = _shingles_py(t, n)
+            for did, t in zip(pdf["doc_id"], pdf["text"]):
+                sh = _shingles_py(t)
                 if not sh:
                     continue
                 ids.append(did)
@@ -229,16 +238,9 @@ def _with_minhash(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Long-form MinHash signatures: (doc_id, seed, minhash)."""
-    sig = _with_minhash(docs, id_col, text_col, n, num_hashes)
+    sig = _with_minhash(docs)
     return sig.select(
         "doc_id", F.posexplode("mh").alias("seed", "minhash")
     ).orderBy("doc_id", "seed")
@@ -247,11 +249,6 @@ def minhash_signatures(
 def minhash_lsh_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.2,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
@@ -259,26 +256,24 @@ def minhash_lsh_pairs(
     Jaccard verification on the candidates only.
 
     ``signatures``: a prebuilt, persisted (doc_id, shingles, mh) table
-    over the same (docs, n, num_hashes) — the write-signatures-once step
+    over the same docs — the write-signatures-once step
     (artifacts.minhash_signature_table); built and pinned here when
     absent.
 
-    bands * rows == num_hashes; a pair becomes a candidate iff some band of
+    BANDS * rows == NUM_HASHES; a pair becomes a candidate iff some band of
     `rows` consecutive minhashes matches exactly. Returns
     (id_a, id_b, jaccard) for verified candidates, id_a < id_b.
     """
-    if num_hashes % bands != 0:
-        raise ValueError("bands must divide num_hashes")
-    rows = num_hashes // bands
+    rows = NUM_HASHES // BANDS
     # Persist the signature table: it feeds the band self-join (2 scans) and
     # both verify joins (2 more) — without it Spark re-runs the whole
     # shingle+minhash pipeline per scan. At warehouse scale this is the
     # "write signatures once" step of any LSH pipeline.
     with_mh = signatures
     if with_mh is None:
-        with_mh = pin(_with_minhash(docs, id_col, text_col, n, num_hashes))
+        with_mh = pin(_with_minhash(docs))
     band_sigs = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
         lambda j: F.md5(
             F.concat_ws(
                 ",",
@@ -322,21 +317,17 @@ def minhash_lsh_pairs(
     )
 
 
-_SIMHASH_BITS = 60  # hash60 yields 60-bit values; stay within them
+_SIMHASH_BITS = 60  # _md5_60 yields 60-bit values; stay within them
 
 
-def simhash_signatures(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — row-local, no shuffle at all.
 
     Charikar SimHash of the whitespace-token multiset (token frequency is
     the weight): bit b is set iff sum over tokens of (+1 if bit b of
-    hash60(token) else -1) is positive. Computed by an Arrow/numpy kernel
+    _md5_60(token) else -1) is positive. Computed by an Arrow/numpy kernel
     (an interpreted higher-order fold costs ~60x T lambda evals per row)."""
-    src = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_ws(text_col).alias("toks")
-    ).filter(F.size("toks") > 0)
+    src = docs.select("doc_id", tokens_ws("text").alias("toks")).filter(F.size("toks") > 0)
     bit_idx = np.arange(_SIMHASH_BITS, dtype=np.int64)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -358,10 +349,7 @@ def simhash_signatures(
 def simhash_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 8,
-    n_chunks: int = 4,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, blocked on 15-bit
@@ -369,17 +357,17 @@ def simhash_pairs(
     agree exactly on at least one of 4 chunks whenever d < 4 — the
     standard pigeonhole blocking; for d >= 4 it is a recall-bounded
     approximation, stated in the docs)."""
-    chunk_bits = _SIMHASH_BITS // n_chunks
+    chunk_bits = _SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     # prebuilt (artifacts.simhash_signature_table) or pinned here: both
     # sides of the block self-join read it
     sig = signatures
     if sig is None:
-        sig = pin(simhash_signatures(docs, id_col=id_col, text_col=text_col))
+        sig = pin(simhash_signatures(docs))
     chunks = F.array(
         *[
             F.shiftright(F.col("simhash"), chunk_bits * c).bitwiseAND(F.lit(mask))
-            for c in range(n_chunks)
+            for c in range(SIMHASH_CHUNKS)
         ]
     )
     blocked = sig.select(
@@ -406,21 +394,13 @@ def simhash_pairs(
     )
 
 
-def embedding_near_dup(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    round_decimals: int = 6,
-    max_rows: int = 100_000,
-) -> DataFrame:
+def embedding_near_dup(emb: DataFrame, *, threshold: float = 0.95) -> DataFrame:
     """Exact cosine near-dup pairs over unit vectors: (id_a, id_b, score),
-    score = dot >= threshold, id_a < id_b.
+    score = round(dot, 6) >= threshold, id_a < id_b.
 
-    Raises beyond ``max_rows`` corpus rows: the whole corpus ships in the
-    task closure, so this is the small-corpus audit oracle ONLY — use
-    ``embedding_near_dup_lsh`` as the scale path.
+    Raises beyond ``NEAR_DUP_MAX_ROWS`` corpus rows: the whole corpus
+    ships in the task closure, so this is the small-corpus audit oracle
+    ONLY — use ``embedding_near_dup_lsh`` as the scale path.
 
     This is the exact baseline (all-pairs); it is the correctness oracle
     for the LSH-blocked variant and is only appropriate when one side fits
@@ -433,40 +413,40 @@ def embedding_near_dup(
     O(N^2 d) inner loop never runs as interpreted per-pair expressions.
     """
     n = emb.count()
-    if n > max_rows:
+    if n > NEAR_DUP_MAX_ROWS:
         raise ValueError(
             f"embedding_near_dup is the all-pairs audit oracle and collects "
-            f"the corpus to the driver; got {n} rows > max_rows={max_rows}. "
-            f"Use embedding_near_dup_lsh (hyperplane-blocked, exact-verified) "
-            f"for large corpora."
+            f"the corpus to the driver; got {n} rows > NEAR_DUP_MAX_ROWS="
+            f"{NEAR_DUP_MAX_ROWS}. Use embedding_near_dup_lsh "
+            f"(hyperplane-blocked, exact-verified) for large corpora."
         )
-    rows = emb.select(id_col, vec_col).collect()
+    src = emb.select("vec_id", "embedding")
+    rows = src.collect()
     ids = np.array([r[0] for r in rows])
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    dec = round_decimals
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            block = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bids = pdf[id_col].to_numpy()
-            scores = np.round(block @ mat.T, dec)  # (n_block, N)
+            block = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            bids = pdf["vec_id"].to_numpy()
+            scores = np.round(block @ mat.T, 6)  # (n_block, N)
             keep = (scores >= threshold) & (bids[:, None] < ids[None, :])
             bi, ci = np.nonzero(keep)
             yield pd.DataFrame(
                 {"id_a": bids[bi], "id_b": ids[ci], "score": scores[bi, ci]}
             )
 
-    dtype = emb.schema[id_col].dataType.simpleString()
-    return emb.select(id_col, vec_col).mapInPandas(
+    dtype = emb.schema["vec_id"].dataType.simpleString()
+    return src.mapInPandas(
         kernel, f"id_a {dtype}, id_b {dtype}, score double"
     ).orderBy("id_a", "id_b")
 
 
 def _rademacher_planes(n_planes: int, dim: int) -> np.ndarray:
     """Deterministic ±1 hyperplanes from md5 bits: entry (p, d) flips on
-    the low bit of hash60(f"{p}|{d}"). Same constants every run/engine."""
+    the low bit of _md5_60(f"{p}|{d}"). Same constants every run/engine."""
     out = np.empty((n_planes, dim), dtype=np.float64)
     for p in range(n_planes):
         for d in range(dim):
@@ -474,45 +454,36 @@ def _rademacher_planes(n_planes: int, dim: int) -> np.ndarray:
     return out
 
 
-def embedding_band_signatures(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    n_bands: int = 4,
-) -> DataFrame:
+def embedding_band_signatures(emb: DataFrame) -> DataFrame:
     """(vid, band_idx, band_key) hyperplane band signatures — the
     write-signatures-once step of the embedding-LSH pipeline, row-local
     (one BLAS matvec per Arrow batch, no shuffle). Unpersisted; callers
     own the lifetime (pin inside one query, or the session artifact
     cache)."""
-    if n_planes % n_bands != 0:
-        raise ValueError("n_bands must divide n_planes")
-    r_bits = n_planes // n_bands
-    dim = len(emb.select(vec_col).first()[0])
-    planes = _rademacher_planes(n_planes, dim)
-    id_dtype = emb.schema[id_col].dataType.simpleString()
+    r_bits = N_PLANES // N_BANDS
+    dim = len(emb.select("embedding").first()[0])
+    planes = _rademacher_planes(N_PLANES, dim)
+    id_dtype = emb.schema["vec_id"].dataType.simpleString()
 
     def sign_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            bits = (mat @ planes.T) >= 0  # (n, n_planes)
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            bits = (mat @ planes.T) >= 0  # (n, N_PLANES)
             ids, band_idx, band_key = [], [], []
             pows = 1 << np.arange(r_bits)
-            for j in range(n_bands):
+            for j in range(N_BANDS):
                 chunk = bits[:, j * r_bits : (j + 1) * r_bits]
                 keys = (chunk * pows).sum(axis=1)
-                ids.extend(pdf[id_col])
+                ids.extend(pdf["vec_id"])
                 band_idx.extend([j] * len(keys))
                 band_key.extend(keys.tolist())
             yield pd.DataFrame(
                 {"vid": ids, "band_idx": band_idx, "band_key": band_key}
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select("vec_id", "embedding").mapInPandas(
         sign_bands, f"vid {id_dtype}, band_idx int, band_key long"
     )
 
@@ -520,21 +491,16 @@ def embedding_band_signatures(
 def embedding_near_dup_lsh(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    round_decimals: int = 6,
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """The 100-TB path for embedding near-dup: random-hyperplane (SimHash
     for vectors) blocking + exact verification of candidates only.
 
-    Each vector gets an n_planes-bit sign signature (one BLAS matvec
+    Each vector gets an N_PLANES-bit sign signature (one BLAS matvec
     against the fixed Rademacher plane matrix, row-local); bands of
-    n_planes/n_bands bits become join keys; candidate pairs sharing any
-    band are verified with the exact dot >= threshold.
+    N_PLANES/N_BANDS bits become join keys; candidate pairs sharing any
+    band are verified with the exact round(dot, 6) >= threshold.
 
     Precision is exact (every emitted pair is verified). Recall is the
     standard SRP-LSH bound: a pair at cosine s agrees per-plane with
@@ -548,15 +514,7 @@ def embedding_near_dup_lsh(
         # cache the signature kernel — a full Arrow pass over the corpus —
         # runs once per side). Pass a prebuilt, persisted table
         # (artifacts.embedding_band_table) on serving paths.
-        banded = pin(
-            embedding_band_signatures(
-                emb,
-                id_col=id_col,
-                vec_col=vec_col,
-                n_planes=n_planes,
-                n_bands=n_bands,
-            )
-        )
+        banded = pin(embedding_band_signatures(emb))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -570,32 +528,23 @@ def embedding_near_dup_lsh(
     )
     from vector_database_product_recommendation_spark.functions.vectors import dot
 
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .select(
-            "id_a", "id_b", F.round(dot("__va", "__vb"), round_decimals).alias("score")
-        )
+        .select("id_a", "id_b", F.round(dot("__va", "__vb"), 6).alias("score"))
         .filter(F.col("score") >= threshold)
         .orderBy("id_a", "id_b")
     )
 
 
-def winnow_fingerprints_df(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 5,
-    sort: bool = True,
-) -> DataFrame:
+def winnow_fingerprints_df(docs: DataFrame, *, sort: bool = True) -> DataFrame:
     """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the
-    MOSS algorithm): hash every k-gram of the token stream, keep the MIN
-    of each w-wide window of k-gram hashes, dedup per document. Guarantees
-    any shared token run of length >= w+k-1 shares a fingerprint.
+    MOSS algorithm): hash every k-gram (k = WINNOW_K) of the token stream,
+    keep the MIN of each w-wide (w = WINNOW_W) window of k-gram hashes,
+    dedup per document. Guarantees any shared token run of length
+    >= w+k-1 shares a fingerprint.
 
     Shape: the whole computation is ROW-LOCAL (k-gram hashes, rolling
     window min, per-doc distinct all live inside one document), so it runs
@@ -611,8 +560,9 @@ def winnow_fingerprints_df(
     (composite consumers that immediately reshuffle skip the presentation
     range-exchange).
     """
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
+    src = docs.select("doc_id", "text")
     dtype = src.schema["doc_id"].dataType.simpleString()
+    k, w = WINNOW_K, WINNOW_W
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -620,7 +570,7 @@ def winnow_fingerprints_df(
                 continue
             ids: list = []
             fps: list[int] = []
-            for did, t in zip(pdf["doc_id"], pdf["__t"]):
+            for did, t in zip(pdf["doc_id"], pdf["text"]):
                 toks = (t or "").lower().split()
                 n = len(toks)
                 if n < k:
@@ -641,13 +591,7 @@ def winnow_fingerprints_df(
     return out.orderBy("doc_id", "fp") if sort else out
 
 
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components over a near-duplicate pair graph by iterative
     min-label propagation: every vertex starts labeled with its own id and
     repeatedly takes the minimum label among itself and its neighbors.
@@ -677,7 +621,10 @@ def connected_components(
     canonical choice (reference lineage: products 'first row per group',
     SURVEY.md A-g3).
 
+    ``vertices`` carries a ``doc_id`` column; ``edges`` (id_a, id_b).
     Returns (doc_id, component_id) with component_id = min doc_id reachable.
+    Raises ``RuntimeError`` when the labels have not converged after
+    ``CC_MAX_ITER`` rounds.
     """
     e = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # pre-partition the (big, round-invariant) edge table by its join key
@@ -690,7 +637,7 @@ def connected_components(
     )
     from pyspark.sql import Observation
 
-    def _observed_sum(obs: Observation, df: DataFrame, timeout: float = 120.0):
+    def _observed_sum(obs: Observation, df: DataFrame):
         """Label-sum metric observed on the (already materialized, eager)
         checkpoint job. Observation fulfillment rides Spark's SQL-listener
         path — validated on PySpark 4.1.2 — but Observation.get blocks with
@@ -703,7 +650,7 @@ def connected_components(
         box: list = []
         t = threading.Thread(target=lambda: box.append(obs.get["s"]), daemon=True)
         t.start()
-        t.join(timeout)
+        t.join(OBSERVE_TIMEOUT_S)
         if box:
             return box[0]
         return df.agg(F.sum("label")).first()[0]
@@ -716,7 +663,7 @@ def connected_components(
     # |V| to |V_connected|; the isolated remainder is unioned back once
     # at the end from the caller's vertex table (NOT from ``e``, which is
     # unpersisted before return).
-    verts = vertices.select(F.col(id_col).cast("long").alias("u"))
+    verts = vertices.select(F.col("doc_id").cast("long").alias("u"))
     obs0 = Observation()
     labels = (
         verts.join(e.select("u").distinct(), "u", "left_semi")
@@ -726,7 +673,7 @@ def connected_components(
     )
     prev_sum = _observed_sum(obs0, labels)
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # new label = min(own, every neighbor's): one union + one min
         # aggregate. Every u appears on the `labels` branch, so vertices
         # without neighbors keep their label — identical semantics to a
@@ -756,10 +703,10 @@ def connected_components(
     if not converged:
         labels.unpersist()
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds — returning here would yield silently-wrong component "
-            "labels. The graph's diameter exceeds the round budget; raise "
-            "max_iter (rounds needed ~ graph diameter)."
+            f"connected_components did not converge within CC_MAX_ITER="
+            f"{CC_MAX_ITER} rounds — returning here would yield silently-wrong "
+            "component labels. The graph's diameter exceeds the round budget; "
+            "raise CC_MAX_ITER (rounds needed ~ graph diameter)."
         )
     # isolated vertices rejoin with label = own id; the anti-join keys off
     # the CHECKPOINTED loop result, so the returned (lazy) plan never
@@ -772,18 +719,9 @@ def connected_components(
     )
 
 
-def dedup_components(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int = 100,
-    shingle_index: DataFrame | None = None,
-) -> DataFrame:
-    """End-to-end fuzzy dedup: n-gram Jaccard pairs -> connected components
-    -> canonical keep/drop. The full pipeline a pretraining corpus needs:
+def dedup_components(docs: DataFrame, *, shingle_index: DataFrame | None = None) -> DataFrame:
+    """End-to-end fuzzy dedup: n-gram Jaccard pairs (Jaccard >= 0.5) ->
+    connected components -> canonical keep/drop. The full pipeline a pretraining corpus needs:
     pair discovery gives LOCAL similarity, components give GLOBAL clusters
     (A~B, B~C => {A,B,C} even when A!~C), min-id is kept as canonical.
 
@@ -791,15 +729,11 @@ def dedup_components(
     """
     pairs = ngram_jaccard_pairs(
         docs,
-        id_col=id_col,
-        text_col=text_col,
-        n=n,
-        threshold=threshold,
-        max_df=max_df,
+        threshold=0.5,
         sort=False,  # edges feed a shuffle immediately; the sort is waste
         shingle_index=shingle_index,
     )
-    comp = connected_components(docs.select(id_col), pairs, id_col=id_col)
+    comp = connected_components(docs.select("doc_id"), pairs)
     return comp.select(
         "doc_id",
         "component_id",

@@ -24,31 +24,23 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def with_combined_text(
-    docs: DataFrame, cols: tuple[str, ...] = ("text", "lang", "source")
-) -> DataFrame:
-    """P10: combined_text = lower(space-joined text columns)."""
-    return docs.withColumn("combined_text", F.lower(F.concat_ws(" ", *cols)))
+def with_combined_text(docs: DataFrame) -> DataFrame:
+    """P10: combined_text = lower(text || ' ' || lang || ' ' || source)."""
+    return docs.withColumn("combined_text", F.lower(F.concat_ws(" ", "text", "lang", "source")))
 
 
-def docs_to_catalog(
-    docs: DataFrame,
-    *,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    round_decimals: int = 6,
-) -> DataFrame:
+def docs_to_catalog(docs: DataFrame) -> DataFrame:
     """The `reviews -> products` aggregate (A-g1..A-g3) over documents:
-    one row per group with count-all, null-skipping mean, and the
-    deterministic first-row values."""
+    one row per source with count-all, null-skipping mean, and the
+    deterministic first-row (lowest doc_id) values."""
     r = with_combined_text(docs)
     return (
-        r.groupBy(F.col(group_col).alias("group_id"))
+        r.groupBy(F.col("source").alias("group_id"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("n_chars"), round_decimals).alias("avg_chars"),
-            F.min_by("combined_text", F.col(id_col)).alias("example_text"),
-            F.min_by("lang", F.col(id_col)).alias("first_lang"),
+            F.round(F.avg("n_chars"), 6).alias("avg_chars"),
+            F.min_by("combined_text", F.col("doc_id")).alias("example_text"),
+            F.min_by("lang", F.col("doc_id")).alias("first_lang"),
         )
         .orderBy("group_id")
     )

@@ -1,17 +1,16 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 decoded/feature-extracted executor-side in Arrow batches.
 
-The container ships no image/audio libraries, so real decoders are STUBS
-behind import-tries (`pil_image_decoder` raises NotImplementedError when
-Pillow is absent). What IS real — and tested — is everything Spark-side:
-the (id, payload binary, meta struct) schema, the mapInPandas batch shape,
-partition-preserving feature extraction, and downstream composability
-(features -> KNN / dedup operate unchanged).
+No image/audio decoder ships with the engine. What IS real — and
+tested — is everything Spark-side: the (id, payload binary, meta struct)
+schema, the mapInPandas batch shape, partition-preserving feature
+extraction, and downstream composability (features -> KNN / dedup operate
+unchanged).
 
-`fake_feature_decoder` is the deterministic test double: an md5-derived
-8-dim feature vector whose arithmetic is mirrored in the DuckDB oracle
-(registry: multimodal_features), so even the UDF plumbing is value-checked
-cross-engine.
+`fake_feature_decoder` stands in for decode + feature extraction: an
+md5-derived 8-dim feature vector whose arithmetic is mirrored in the
+DuckDB oracle (registry: multimodal_features), so even the UDF plumbing
+is value-checked cross-engine.
 
 Scale notes: payloads never shuffle (feature extraction is row-local);
 features are small arrays; metadata predicates (format/width filters)
@@ -22,7 +21,7 @@ row groups BEFORE any Python worker sees a payload.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -32,15 +31,13 @@ from pyspark.sql import DataFrame
 FEATURE_DIM = 8
 
 
-def attach_payload(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Build a multimodal-shaped table from the documents fixture:
     (doc_id, payload binary, meta struct<format,n_bytes>). Stands in for
     an image/audio table; the payload is the UTF-8 text bytes."""
-    payload = F.col(text_col).cast("binary")
+    payload = F.col("text").cast("binary")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         payload.alias("payload"),
         F.struct(
             F.lit("text/plain").alias("format"),
@@ -51,7 +48,8 @@ def attach_payload(
 
 def fake_feature_decoder(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for image decode + feature extraction:
-    feature[j] = (hash60(md5hex(payload) || '|' || j) % 1e6) / 1e6.
+    feature[j] = (md5_60(md5hex(payload) || '|' || j) % 1e6) / 1e6, md5_60 the
+    first 15 hex digits of an md5 as an integer.
     Mirrored exactly by the SQL oracle."""
     hx = hashlib.md5(payload).hexdigest()
     out = np.empty(FEATURE_DIM, dtype=np.float64)
@@ -61,64 +59,27 @@ def fake_feature_decoder(payload: bytes) -> np.ndarray:
     return out
 
 
-def pil_image_decoder(payload: bytes) -> np.ndarray:  # pragma: no cover
-    """Real image decode -> mean-pooled pixel features. STUB: the container
-    has no Pillow; raises NotImplementedError until one is available."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decoding requires Pillow, which is not installed; "
-            "use fake_feature_decoder for plumbing tests"
-        ) from e
-    raise NotImplementedError("wire the real decoder here when PIL exists")
-
-
-def extract_features(
-    media: DataFrame,
-    decoder: Callable[[bytes], np.ndarray] = fake_feature_decoder,
-    *,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    dim: int = FEATURE_DIM,
-) -> DataFrame:
-    """mapInPandas feature extraction: (doc_id, features array<double>).
+def extract_features(media: DataFrame) -> DataFrame:
+    """mapInPandas feature extraction: (doc_id, features array<double>)
+    through ``fake_feature_decoder``.
 
     One Arrow batch in, one out; payload bytes stay inside the task. The
-    decoder is a plain bytes->ndarray callable so real decoders drop in
+    decoder is a plain bytes->ndarray call, so a real decoder drops in
     without touching the Spark plumbing.
     """
-    out_schema = f"{id_col} {media.schema[id_col].dataType.simpleString()}, features array<double>"
+    out_schema = f"doc_id {media.schema['doc_id'].dataType.simpleString()}, features array<double>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            feats = [decoder(bytes(p)).tolist() for p in pdf[payload_col]]
-            yield pd.DataFrame({id_col: pdf[id_col], "features": feats})
+            feats = [fake_feature_decoder(bytes(p)).tolist() for p in pdf["payload"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
-    return media.select(id_col, payload_col).mapInPandas(run, out_schema)
-
-
-def frame_sample(
-    media: DataFrame,
-    every_n: int = 10,
-    *,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Video-style frame sampling stub: keeps every n-th row by id — the
-    partition-local sampling shape (no shuffle); a real video table would
-    sample frames inside the decoder instead."""
-    return media.filter((F.col(id_col) % every_n) == 0)
+    return media.select("doc_id", "payload").mapInPandas(run, out_schema)
 
 
-def resize_payload(
-    media: DataFrame,
-    *,
-    target_bytes: int = 256,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def resize_payload(media: DataFrame, *, target_bytes: int = 256) -> DataFrame:
     """Image-resize-shaped op: payload -> fixed-size payload + updated meta.
 
     The stand-in transform truncates/zero-pads to ``target_bytes`` (a real
@@ -127,32 +88,26 @@ def resize_payload(
     carries. Pure mapInPandas — payloads never leave the task, output
     partitioning == input partitioning.
     """
-    meta_t = media.schema[
-        "meta"
-    ].dataType.simpleString() if "meta" in media.columns else None
     out_schema = (
-        f"{id_col} {media.schema[id_col].dataType.simpleString()}, "
+        f"doc_id {media.schema['doc_id'].dataType.simpleString()}, "
         f"payload binary, meta struct<format:string,n_bytes:int,orig_bytes:int>"
     )
 
-    def run(batches):
-        import pandas as pd
-
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
             resized, metas = [], []
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 b = bytes(p)
                 out = b[:target_bytes].ljust(target_bytes, b"\x00")
                 resized.append(out)
                 metas.append(
                     {"format": "text/plain", "n_bytes": len(out), "orig_bytes": len(b)}
                 )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": resized, "meta": metas})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": resized, "meta": metas})
 
-    _ = meta_t  # original meta is recomputed, not propagated
-    return media.select(id_col, payload_col).mapInPandas(run, out_schema)
+    return media.select("doc_id", "payload").mapInPandas(run, out_schema)
 
 
 def audio_frame_windows(
@@ -160,7 +115,6 @@ def audio_frame_windows(
     *,
     frame_bytes: int = 100,
     hop_bytes: int = 50,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Audio-framing-shaped op: one row per (doc, frame) with byte offsets.
 
@@ -179,7 +133,7 @@ def audio_frame_windows(
     return (
         media.withColumn("frame_start", F.explode(starts))
         .select(
-            id_col,
+            "doc_id",
             "frame_start",
             F.least(F.col("frame_start") + frame_bytes, n).alias("frame_end"),
             F.expr(

@@ -57,47 +57,34 @@ from vector_database_product_recommendation_spark.operators.knn import (
 REFINE_BROADCAST_MAX_ROWS = 1_000_000
 
 
-def train_pq(
-    emb: DataFrame,
-    *,
-    m: int = 8,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list[np.ndarray]:
+def train_pq(emb: DataFrame, *, m: int = 8, ksub: int = 16) -> list[np.ndarray]:
     """Train per-subspace codebooks on a bounded sample.
 
-    Driver-side by contract: one float64 sample of at most
+    Driver-side by contract: one float64 sample (seed 42) of at most
     ``MAX_POINTS_PER_CENTROID * ksub`` rows (codebook quality depends on
     the distribution, not the corpus size), then one Lloyd run per
-    subspace, seeded ``seed + j``. The result is m arrays of
+    subspace, seeded ``42 + j``. The result is m arrays of
     (<=ksub, d/m) floats, kilobytes total. A subspace with at most ksub
     distinct sample rows takes those rows as its codebook: zero
     distortion, the lossless regime the exactness test exploits.
     """
-    n, d = _corpus_shape(emb, vec_col)
+    n, d = _corpus_shape(emb, "embedding")
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     x = _sample_matrix(
-        emb, vec_col, n, d, MAX_POINTS_PER_CENTROID * ksub, seed=seed, dtype=np.float64
+        emb, "embedding", n, d, MAX_POINTS_PER_CENTROID * ksub, seed=42, dtype=np.float64
     )
     dsub = d // m
     books = []
     for j in range(m):
         sub = x[:, j * dsub : (j + 1) * dsub]
         uniq = np.unique(sub, axis=0)
-        books.append(uniq if len(uniq) <= ksub else _lloyd(sub, ksub, iters=25, seed=seed + j))
+        books.append(uniq if len(uniq) <= ksub else _lloyd(sub, ksub, iters=25, seed=42 + j))
     return books
 
 
-def encode_pq(
-    emb: DataFrame,
-    codebooks: list[np.ndarray],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Corpus -> (id, codes array<int>): nearest centroid per subspace.
+def encode_pq(emb: DataFrame, codebooks: list[np.ndarray]) -> DataFrame:
+    """Corpus -> (vec_id, codes array<int>): nearest centroid per subspace.
 
     One mapInPandas pass; per Arrow batch and subspace the assignment is a
     single (batch x ksub) distance matmul. No shuffle, no collect.
@@ -110,7 +97,7 @@ def encode_pq(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            x = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
             codes = np.empty((len(x), m), dtype=np.int32)
             for j, cents in enumerate(books):
                 sub = x[:, j * dsub : (j + 1) * dsub]
@@ -120,11 +107,9 @@ def encode_pq(
                     + (cents * cents).sum(axis=1)[None, :]
                 )
                 codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "codes": list(codes)})
 
-    return emb.select(id_col, vec_col).mapInPandas(
-        encode, f"{id_col} long, codes array<int>"
-    )
+    return emb.select("vec_id", "embedding").mapInPandas(encode, "vec_id long, codes array<int>")
 
 
 def pq_knn(

@@ -23,13 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def repetition_signals(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    round_decimals: int = 6,
-) -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Per-document repetition metrics:
 
     - n_tokens:           whitespace token count
@@ -38,6 +32,8 @@ def repetition_signals(
     - dup_bigram_frac:    bigram occurrences whose bigram appears more
                           than once / total bigram occurrences (0.0 when
                           the doc has fewer than 2 tokens)
+
+    Ratios are rounded to 6 decimals.
 
     Physical shape: gram counting is DOC-LOCAL (a token's multiplicity in
     one document never depends on another row), so the integer counts
@@ -58,7 +54,7 @@ def repetition_signals(
 
     import pandas as pd
 
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
+    src = docs.select("doc_id", "text")
     dtype = src.schema["doc_id"].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -66,7 +62,7 @@ def repetition_signals(
             if pdf.empty:
                 continue
             rows = []
-            for did, t in zip(pdf["doc_id"], pdf["__t"]):
+            for did, t in zip(pdf["doc_id"], pdf["text"]):
                 toks = (t or "").lower().split()
                 n = len(toks)
                 tc = Counter(toks)
@@ -99,15 +95,15 @@ def repetition_signals(
             "n_tokens",
             F.round(
                 F.when(F.col("n_tok") > 0, F.col("n_distinct") / F.col("n_tok")).otherwise(0.0),
-                round_decimals,
+                6,
             ).alias("unique_token_ratio"),
             F.round(
                 F.when(F.col("n_tok") > 0, F.col("top_c") / F.col("n_tok")).otherwise(0.0),
-                round_decimals,
+                6,
             ).alias("top_token_frac"),
             F.round(
                 F.when(F.col("n_bg") > 0, F.col("dup_occ") / F.col("n_bg")).otherwise(0.0),
-                round_decimals,
+                6,
             ).alias("dup_bigram_frac"),
         )
         .orderBy("doc_id")

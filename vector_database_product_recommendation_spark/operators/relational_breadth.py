@@ -550,7 +550,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem semi-join (repo-wide dimension-table convention — without
     the hint the planner picked a SortMergeJoin that exchanged+sorted the
     whole fact table on l_suppkey, TWICE, once per consumer of the
-    aggregate; measured as the r21 driver's worst 32-core anti-scaler).
+    aggregate; measured as the worst 32-core anti-scaler of the bench).
     At 100 TB the plan is scan -> broadcast semi-join region suppliers ->
     hash aggregate on l_partkey -> one-row broadcast compare.  No
     re-execution per group, no driver collect.  (If one region's supplier

@@ -1,12 +1,12 @@
-"""Sampling operators for training-data pipelines: seeded uniform and
-stratified (per-class) downsampling.
+"""Sampling operators for training-data pipelines: per-class
+(stratified) downsampling, seeded-Bernoulli or key-hash gated.
 
 At 100 TB, sampling is how class balance, eval holdouts, and codebook
-training sets are produced. Both forms are scan-local (Bernoulli draw per
-row, seeded) — no shuffle, no collect; the output is a DataFrame that
-composes with everything downstream. Exact row membership is
-RNG-dependent, so these are property-tested (fraction tolerance,
-subset-of-source, determinism under a fixed seed) rather than
+training sets are produced. Both forms are scan-local — no shuffle, no
+collect; the output is a DataFrame that composes with everything
+downstream. Bernoulli membership is RNG-dependent, so that form is
+property-tested (fraction tolerance, determinism under a fixed seed);
+the key-hash form keeps a set that is a pure function of the keys and is
 oracle-hashed.
 """
 
@@ -14,11 +14,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-
-def uniform_sample(df: DataFrame, fraction: float, *, seed: int = 42) -> DataFrame:
-    """Seeded Bernoulli sample of ~fraction of rows."""
-    return df.sample(fraction=fraction, seed=seed)
 
 
 def stratified_sample(
@@ -29,73 +24,31 @@ def stratified_sample(
     return df.sampleBy(strata_col, fractions, seed=seed)
 
 
-def downsample_majority(
-    df: DataFrame, label_col: str, *, target: int, seed: int = 42
-) -> DataFrame:
-    """Cap every class at ~``target`` rows: compute per-class counts (one
-    tiny aggregate), derive per-class fractions, sampleBy. The count
-    aggregate is the only extra pass; the sample itself stays scan-local.
-    """
-    counts = {
-        r[label_col]: r["n"]
-        for r in df.groupBy(label_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    fractions = {k: min(1.0, target / n) for k, n in counts.items()}
-    return df.sampleBy(label_col, fractions, seed=seed)
+# key buckets per stratum: a fraction keeps the keys below round(fraction * _MOD)
+_MOD = 1_000_000
 
 
-def _hash_bucket(key_col: str, *, mod: int, salt: str):
+def _hash_bucket(key_col: str):
     """Stable 60-bit md5 bucket of a key column: membership depends only
     on the key's string form, never on partitioning, task order, or RNG
     state — the property that makes a sample reproducible across reruns,
     repartitions, and engines (DuckDB mirrors the same arithmetic:
-    ('0x' || substr(md5(k), 1, 15))::UBIGINT % mod)."""
+    ('0x' || substr(md5(k), 1, 15))::UBIGINT % 1000000)."""
     return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % mod
+        F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10).cast("long")
+        % _MOD
     )
-
-
-def hash_sample(
-    df: DataFrame,
-    key_col: str,
-    fraction: float,
-    *,
-    mod: int = 1_000_000,
-    salt: str = "",
-) -> DataFrame:
-    """Deterministic ~fraction sample gated on a key hash. Unlike
-    ``uniform_sample`` (RNG Bernoulli, engine-specific membership), the
-    kept set is a pure function of the keys — the right tool for holdout
-    splits and train/eval partitions that must be stable at 100 TB and
-    auditable by another engine. Scan-local: no shuffle, no collect."""
-    thr = int(round(fraction * mod))
-    return df.filter(_hash_bucket(key_col, mod=mod, salt=salt) < thr)
 
 
 def stratified_hash_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict,
-    *,
-    key_col: str,
-    mod: int = 1_000_000,
-    salt: str = "",
+    df: DataFrame, strata_col: str, fractions: dict, *, key_col: str
 ) -> DataFrame:
     """Per-stratum deterministic sampling: each stratum keeps rows whose
-    key bucket falls under round(fraction*mod); absent strata keep 0.
+    key bucket falls under round(fraction * _MOD); absent strata keep 0.
     Thresholds are integerized driver-side so engines never disagree on
     float*mod rounding."""
-    thresholds = {k: int(round(v * mod)) for k, v in fractions.items()}
+    thresholds = {k: int(round(v * _MOD)) for k, v in fractions.items()}
     thr = F.create_map(
         [F.lit(x) for kv in thresholds.items() for x in kv]
     )[F.col(strata_col)]
-    return df.filter(
-        _hash_bucket(key_col, mod=mod, salt=salt) < F.coalesce(thr, F.lit(0))
-    )
+    return df.filter(_hash_bucket(key_col) < F.coalesce(thr, F.lit(0)))

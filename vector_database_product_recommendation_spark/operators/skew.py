@@ -5,11 +5,11 @@ type) can pin an entire aggregate on one reducer. AQE's skew-join
 splitting covers joins; for aggregates the classic fix is salting:
 
   phase 1: group by (key, salt) -> partial aggregates  (hot key spread
-           over n_salts reducers)
-  phase 2: group by key         -> merge partials      (n_salts rows per
+           over N_SALTS reducers)
+  phase 2: group by key         -> merge partials      (N_SALTS rows per
            key, trivially small)
 
-The salt is deterministic (hash of the whole row mod n_salts), so results
+The salt is deterministic (hash of the whole row mod N_SALTS), so results
 are reproducible run-to-run and the operator stays oracle-checkable: the
 salted plan must produce EXACTLY the unsalted result.
 
@@ -24,13 +24,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def salted_event_rollup(
-    events: DataFrame, *, n_salts: int = 16, round_decimals: int = 6
-) -> DataFrame:
+# phase-1 spread: each key's rows split over this many partial groups
+N_SALTS = 16
+
+
+def salted_event_rollup(events: DataFrame) -> DataFrame:
     """Per-event-type totals via the two-phase salted aggregate:
-    (event_type, n_events, sum_value, avg_value, max_value)."""
+    (event_type, n_events, sum_value, avg_value, max_value), sum and
+    average rounded to 6 decimals."""
     salted = events.withColumn(
-        "salt", F.pmod(F.hash("event_id", "user_id", "ts"), F.lit(n_salts))
+        "salt", F.pmod(F.hash("event_id", "user_id", "ts"), F.lit(N_SALTS))
     )
     partial = salted.groupBy("event_type", "salt").agg(
         F.count(F.lit(1)).alias("c"),
@@ -41,8 +44,8 @@ def salted_event_rollup(
         partial.groupBy("event_type")
         .agg(
             F.sum("c").alias("n_events"),
-            F.round(F.sum("s"), round_decimals).alias("sum_value"),
-            F.round(F.sum("s") / F.sum("c"), round_decimals).alias("avg_value"),
+            F.round(F.sum("s"), 6).alias("sum_value"),
+            F.round(F.sum("s") / F.sum("c"), 6).alias("avg_value"),
             F.max("m").alias("max_value"),
         )
         .orderBy("event_type")

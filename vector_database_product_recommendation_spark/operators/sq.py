@@ -17,7 +17,7 @@ no driver collect):
   corpus (whole-stage codegen) computes code -> midpoint reconstruction
   -> dot(xhat, query) per row; top candidates come out through
   TakeOrderedAndProject (per-partition heap, no corpus shuffle).
-- refine: exact full-precision rescoring of the k*refine_factor
+- refine: exact full-precision rescoring of the k*REFINE_FACTOR
   candidates (already in hand — no rejoin), restoring exact-KNN ordering
   within the candidate set.
 
@@ -36,9 +36,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def sq_dim_stats(emb: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
+# the top REFINE_FACTOR * k approximate candidates are rescored exactly
+REFINE_FACTOR = 4
+
+
+def sq_dim_stats(emb: DataFrame) -> DataFrame:
     """Per-dimension (pos, mn, mx) training stats; #dims output rows."""
-    ex = emb.select(F.posexplode(vec_col).alias("pos", "x"))
+    ex = emb.select(F.posexplode("embedding").alias("pos", "x"))
     return ex.groupBy("pos").agg(
         F.min(F.col("x").cast("double")).alias("mn"),
         F.max(F.col("x").cast("double")).alias("mx"),
@@ -57,19 +61,11 @@ def _stat_arrays(stats: DataFrame) -> DataFrame:
     )
 
 
-def sq8_knn(
-    emb: DataFrame,
-    query_id: int = 7,
-    k: int = 20,
-    *,
-    refine_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_decimals: int = 6,
-) -> DataFrame:
+def sq8_knn(emb: DataFrame, query_id: int = 7, k: int = 20) -> DataFrame:
     """SQ8 approximate KNN with exact refine: quantize corpus to 8-bit
     codes, rank by dot(midpoint-reconstruction, query), keep the top
-    k*refine_factor, rescore those exactly, return the top k.
+    k*REFINE_FACTOR, rescore those exactly, return the top k. Both
+    scores are rounded to 6 decimals.
 
     Codes: q = clamp(floor(256*(x-mn)/(mx-mn)), 0, 255) (floor, not
     round — round's half-way ties differ between engines); constant
@@ -80,9 +76,9 @@ def sq8_knn(
     Returns (vec_id, score, approx_score) — exact-score ranked, self
     excluded, deterministic (score DESC, vec_id ASC) ties.
     """
-    arrs = _stat_arrays(sq_dim_stats(emb, vec_col=vec_col))
-    qdf = emb.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).cast("array<double>").alias("qv")
+    arrs = _stat_arrays(sq_dim_stats(emb))
+    qdf = emb.filter(F.col("vec_id") == query_id).select(
+        F.col("embedding").cast("array<double>").alias("qv")
     )
 
     def _xhat(x, i):
@@ -110,25 +106,23 @@ def sq8_knn(
         )
 
     scored = (
-        emb.filter(F.col(id_col) != query_id)
+        emb.filter(F.col("vec_id") != query_id)
         .crossJoin(F.broadcast(arrs))
         .crossJoin(F.broadcast(qdf))
         .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("__v"),
+            "vec_id",
+            F.col("embedding").alias("__v"),
             "qv",
-            F.round(_dot(F.transform(F.col(vec_col), _xhat), F.col("qv")), round_decimals).alias(
+            F.round(_dot(F.transform(F.col("embedding"), _xhat), F.col("qv")), 6).alias(
                 "approx_score"
             ),
         )
     )
-    cand = scored.orderBy(F.desc("approx_score"), F.asc("vec_id")).limit(k * refine_factor)
+    cand = scored.orderBy(F.desc("approx_score"), F.asc("vec_id")).limit(k * REFINE_FACTOR)
     return (
         cand.select(
             "vec_id",
-            F.round(_dot(F.col("__v").cast("array<double>"), F.col("qv")), round_decimals).alias(
-                "score"
-            ),
+            F.round(_dot(F.col("__v").cast("array<double>"), F.col("qv")), 6).alias("score"),
             "approx_score",
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))

@@ -52,6 +52,10 @@ TOKEN_PATTERN = r"\w\w+"
 # "café" yields the same "caf" token as the Column form.
 _token_pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
 
+# Okapi BM25 term-frequency saturation and length normalization
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 
 def _tokens(text: str | None, stop: frozenset) -> list[str]:
     """The tokens of one string, in order: TOKEN_PATTERN runs over the
@@ -250,15 +254,13 @@ class TfidfModel:
         )
 
 
-def blend_hybrid(
-    sparse: DataFrame, dense: DataFrame, alpha: float, k: int, round_decimals: int
-) -> DataFrame:
+def blend_hybrid(sparse: DataFrame, dense: DataFrame, alpha: float, k: int) -> DataFrame:
     """F3+F4 (app.py:206-210), the one hybrid blend: min-max the sparse
     ``(doc_id, ts)`` over the candidate set it covers (guarded like
     app.py:207-208: no rescale when every score ties, an epsilon in
     the denominator), leave the dense ``(doc_id, vs)`` raw, and return the
     top-k ``(doc_id, score)`` of ``alpha*vs + (1-alpha)*scaled`` rounded
-    to ``round_decimals``, by (score desc, doc_id asc). The top-k is a
+    to 6 decimals, by (score desc, doc_id asc). The top-k is a
     TakeOrderedAndProject: partition-local heaps, no full-set shuffle."""
     bounds = sparse.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
     scaled = sparse.crossJoin(F.broadcast(bounds)).select(
@@ -276,7 +278,7 @@ def blend_hybrid(
             "doc_id",
             F.round(
                 F.lit(alpha) * F.col("vs") + F.lit(1.0 - alpha) * F.col("ts_scaled"),
-                round_decimals,
+                6,
             ).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -284,35 +286,12 @@ def blend_hybrid(
     )
 
 
-def tfidf_weights(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = STOPWORDS_EN,
-    round_decimals: int = 6,
-) -> DataFrame:
-    """l2-normalized smooth-idf TF-IDF, long sparse form."""
-    return TfidfModel(docs, id_col, text_col, stopwords).weights(round_decimals)
-
-
-def tfidf_search(
-    query_text: str,
-    docs: DataFrame,
-    k: int = 20,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = STOPWORDS_EN,
-    round_decimals: int = 6,
-    model: TfidfModel | None = None,
-) -> DataFrame:
-    """F2: the top-k of ``TfidfModel.scores``, rounded. Pass a prefitted
-    ``model`` to skip the fit (the joblib-artifact serving path)."""
-    model = model or TfidfModel(docs, id_col, text_col, stopwords)
+def tfidf_search(query_text: str, model: TfidfModel, k: int = 20) -> DataFrame:
+    """F2: the top-k of the fitted ``model``'s ``scores``, rounded to 6
+    decimals (the joblib-artifact serving path)."""
     return (
         model.scores(query_text)
-        .select("doc_id", F.round("ts", round_decimals).alias("score"))
+        .select("doc_id", F.round("ts", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -326,51 +305,35 @@ def hybrid_search(
     k: int = 20,
     *,
     alpha: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stopwords: tuple[str, ...] = STOPWORDS_EN,
-    round_decimals: int = 6,
-    model: TfidfModel | None = None,
+    model: TfidfModel,
 ) -> DataFrame:
     """F3+F4 (app.py:202-210): hybrid = alpha*dense_dot + (1-alpha)*
     minmax(tfidf_cosine), replicating the reference's quirks exactly
-    (SURVEY 2.9.2-3): TF-IDF cosine computed over the WHOLE corpus, min-max
-    over the candidate set (here: all docs), dense side left raw.
+    (SURVEY 2.9.2-3): TF-IDF cosine computed over the WHOLE corpus by the
+    fitted ``model``, min-max over the candidate set (here: all ``docs``),
+    dense side left raw.
     """
     from vector_database_product_recommendation_spark.functions.vectors import dot
 
     # sparse side — cosine for every doc; query-local pin: it feeds the
     # blend's min/max bounds agg AND its rescale projection
-    model = model or TfidfModel(docs, id_col, text_col, stopwords)
-    sparse = pin(model.scores(query_text, docs.select(F.col(id_col).alias("doc_id"))))
+    sparse = pin(model.scores(query_text, docs.select("doc_id")))
     # dense side — raw dot against the query item's own vector (E2 shape)
-    qv = emb.filter(F.col(vec_id_col) == F.lit(query_vec_id)).select(
-        F.col(vec_col).alias("__qv")
+    qv = emb.filter(F.col("vec_id") == F.lit(query_vec_id)).select(
+        F.col("embedding").alias("__qv")
     )
     dense = emb.crossJoin(F.broadcast(qv)).select(
-        F.col(vec_id_col).alias("doc_id"), dot(vec_col, "__qv").alias("vs")
+        F.col("vec_id").alias("doc_id"), dot("embedding", "__qv").alias("vs")
     )
-    return blend_hybrid(sparse, dense, alpha, k, round_decimals)
+    return blend_hybrid(sparse, dense, alpha, k)
 
 
-def bm25_search(
-    query_text: str,
-    docs: DataFrame,
-    k: int = 20,
-    *,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = STOPWORDS_EN,
-    round_decimals: int = 6,
-) -> DataFrame:
+def bm25_search(query_text: str, docs: DataFrame, k: int = 20) -> DataFrame:
     """Okapi BM25 ranked retrieval (Robertson et al., TREC-3), the lexical
     scorer the reference's TF-IDF path approximates: score(q, d) =
     sum over query terms of idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
-    with the always-positive Lucene idf ln(1 + (n-df+0.5)/(df+0.5)).
+    with the always-positive Lucene idf ln(1 + (n-df+0.5)/(df+0.5)),
+    k1 = BM25_K1 and b = BM25_B, over the STOPWORDS_EN-filtered tokens.
 
     Spark shape: BOTH corpus statistics BM25 needs — query-term tf and
     per-doc length dl — are DOC-LOCAL, so ONE Arrow kernel pass over the
@@ -386,10 +349,11 @@ def bm25_search(
     before the sum so engine FP noise stays below the final 6-decimal
     round (same policy as TfidfModel).
     """
-    stop = frozenset(stopwords)
+    stop = frozenset(STOPWORDS_EN)
     qset = frozenset(_tokens(query_text, stop))
+    k1, b = BM25_K1, BM25_B
 
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
+    src = docs.select("doc_id", "text")
     dtype = src.schema["doc_id"].dataType.simpleString()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -402,7 +366,7 @@ def bm25_search(
             terms_out: list = []
             tfs: list = []
             dls: list = []
-            for did, t in zip(pdf["doc_id"], pdf["__t"]):
+            for did, t in zip(pdf["doc_id"], pdf["text"]):
                 toks = _tokens(t, stop)
                 if not toks:
                     # zero post-stopword tokens: absent from dl (and tf),
@@ -452,7 +416,7 @@ def bm25_search(
     )
     return (
         contrib.groupBy("doc_id")
-        .agg(F.round(F.sum("c"), round_decimals).alias("score"))
+        .agg(F.round(F.sum("c"), 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )

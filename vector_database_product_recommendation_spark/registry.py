@@ -262,19 +262,14 @@ from vector_database_product_recommendation_spark.functions.text import (  # noq
     STOPWORDS_EN,
     doc_fingerprint,
     lang_id,
-    mean_token_len,
-    punct_ratio,
-    quality_score,
-    stopword_ratio,
-    token_count_regex,
-    token_count_ws,
 )
 from vector_database_product_recommendation_spark.operators import dedup as D  # noqa: E402
 
-# Shared DuckDB fragments — must mirror functions/text.py exactly:
-# tokens = lowercased whitespace split, zero-length dropped; shingles =
-# distinct word 3-grams (short docs -> one whole-text shingle); hash60 =
-# first 60 bits of md5 as a positive BIGINT (= Spark conv(substr(md5,1,15),16,10)).
+# Shared DuckDB fragments — must mirror the engine's tokenization exactly:
+# tokens = lowercased whitespace split, zero-length dropped (functions.text
+# tokens_ws); shingles = distinct word 3-grams, short docs -> one whole-text
+# shingle (dedup._shingles_py); _h60 = first 60 bits of md5 as a positive
+# BIGINT (= dedup._md5_60).
 _TOKS_SQL = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> len(x) > 0)"
 
 
@@ -327,8 +322,8 @@ FROM q ORDER BY doc_id
 
 @register("doc_text_profile", _PROFILE_ORACLE)
 def _doc_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one Arrow kernel pass (functions/textprof.py, value-identical twin of
-    # the functions.text expressions); rounding stays in the engine
+    # one Arrow kernel pass (functions/textprof.py); rounding stays in the
+    # engine
     from vector_database_product_recommendation_spark.functions.textprof import profile_docs_py
 
     docs = load_table(spark, sf_dir, "documents")
@@ -483,7 +478,6 @@ def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"),
         threshold=0.5,
-        max_df=100,
         shingle_index=shingle_index(spark, sf_dir),
     )
 
@@ -783,7 +777,7 @@ def _tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     qtext = docs.filter(F.col("doc_id") == 7).select("text").first()[0]
-    return tfidf_search(qtext, docs, k=20, model=fitted_tfidf(spark, sf_dir))
+    return tfidf_search(qtext, fitted_tfidf(spark, sf_dir), k=20)
 
 
 _HYBRID_ORACLE = f"""
@@ -957,8 +951,7 @@ def _ann_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Event streams (batch forms of the streaming plans; streaming equivalence
-# is tested in tests/test_streaming.py) + multimodal plumbing
+# Event-log operators + multimodal plumbing
 # ---------------------------------------------------------------------------
 
 from vector_database_product_recommendation_spark.operators.multimodal import (  # noqa: E402
@@ -1448,9 +1441,8 @@ ORDER BY nation, priority
 register("nation_revenue_cube", _CUBE_ORACLE)(R.nation_revenue_cube)
 
 
-# Per-user running totals: the batch twin of the
-# applyInPandasWithState stream op (streaming/events.py), as cumulative
-# window + lag delta. Partitioned by user_id -> one shuffle, no global sort.
+# Per-user running totals as cumulative window + lag delta. Partitioned by
+# user_id -> one shuffle, no global sort.
 _RUNNING_ORACLE = """
 SELECT user_id, event_id,
        round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1500,9 +1492,8 @@ def _events_approx_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Stream-static enrichment join (batch twin; streaming equivalence in
-# tests/test_streaming_multimodal.py): events x broadcast customer dim,
-# hourly counts per market segment.
+# Dimension enrichment join: events x broadcast customer dim, hourly
+# counts per market segment.
 _ENRICHED_ORACLE = """
 SELECT date_trunc('hour', ts) AS window_start, c_mktsegment,
        count(*) AS n_events, round(sum(value), 6) AS sum_value
@@ -2089,8 +2080,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Stream-stream join (batch twin; streaming equivalence in
-# tests/test_streaming_multimodal.py::test_stream_stream_join_equals_batch)
+# Interval self-join: purchases attributed to the user's preceding clicks
 # ---------------------------------------------------------------------------
 
 from vector_database_product_recommendation_spark.streaming.events import (  # noqa: E402

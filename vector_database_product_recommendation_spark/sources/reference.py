@@ -145,13 +145,3 @@ def rebuild_product_embeddings(reviews: DataFrame, emb: DataFrame) -> DataFrame:
 
     joined = reviews.select("id", "review_idx").join(emb, "review_idx")
     return group_centroids(joined, "id", "embedding")
-
-
-def filter_by_category(products: DataFrame, category: str) -> DataFrame:
-    """P12 (SURVEY.md section 2.2): the reference stores `categories` /
-    `asins` as comma-separated multi-value cells and only ever compares
-    them as opaque strings (products.csv:1); the Spark-native form splits
-    to ArrayType once and filters with array_contains — sargable, and the
-    split array is reusable for explode/facet queries."""
-    cats = F.split(F.col("categories"), ",")
-    return products.filter(F.array_contains(F.transform(cats, F.trim), category))

@@ -31,9 +31,9 @@ TABLES = (
 )
 
 
-def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize the event-time column to plain TIMESTAMP (LTZ) no matter
-    how the parquet writer typed it:
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize the event-time column ``ts`` to plain TIMESTAMP (LTZ) no
+    matter how the parquet writer typed it:
 
     - TIMESTAMP(NANOS) read via the legacy nanosAsLong conf -> bigint:
       floor-divide to micros (the same truncation DuckDB applies).
@@ -44,11 +44,11 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
       window()) all require TIMESTAMP, so this is the single point where
       every writer flavor converges.
     """
-    dt = dict(df.dtypes).get(col)
+    dt = dict(df.dtypes).get("ts")
     if dt == "bigint":
-        df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     elif dt == "timestamp_ntz":
-        df = df.withColumn(col, F.col(col).cast("timestamp"))
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -80,23 +80,27 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         df.createOrReplaceTempView(n)
 
 
+# buckets per table written by write_bucketed; two tables join without an
+# exchange only when their bucket counts match
+N_BUCKETS = 8
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,
     path: str,
     *,
     bucket_col: str,
-    n_buckets: int = 8,
     mode: str = "overwrite",
 ) -> None:
-    """Persist a table bucketed (and sorted) by the join key — the 100-TB
+    """Persist a table in N_BUCKETS buckets, sorted by the join key — the 100-TB
     co-located-join layout: two tables bucketed the same way join with NO
     exchange (each task zips bucket i with bucket i), eliminating the
     dominant shuffle of large fact-fact joins. External table at `path`
     so no Hive metastore/warehouse dir is involved."""
     (
         df.write.mode(mode)
-        .bucketBy(n_buckets, bucket_col)
+        .bucketBy(N_BUCKETS, bucket_col)
         .sortBy(bucket_col)
         .option("path", path)
         .saveAsTable(table_name)

@@ -1,36 +1,29 @@
-"""Event-stream operators: tumbling-window aggregation, sessionization,
-JSON prop extraction — batch and Structured Streaming share one logical
-plan builder (the Spark way: the same DataFrame expressions run in either
-mode; only the source/sink differ).
+"""Event-log operators: tumbling-window aggregation, sessionization,
+JSON prop extraction, a broadcast dimension enrichment and an interval
+self-join, all as batch DataFrame programs over the ``events`` table.
 
-The reference has no streaming surface (SURVEY.md section 2.8) — this is
-the planned `events` extension (section 7 M7). Correctness strategy:
-- batch forms are DuckDB-oracle-checked (registry entries);
-- the streaming path is tested by equivalence: readStream over the same
-  parquet, availableNow trigger, memory sink, result == batch result
-  (tests/test_streaming.py).
+The reference has no event surface (SURVEY.md section 2.8) — this is
+the planned `events` extension (section 7 M7). Every operator here backs
+a registered query and is DuckDB-oracle-checked there.
 
-Scale notes: tumbling windows + watermark bound state; sessionization uses
-session_window (state per active session only). Counts/sums are partial-
+Scale notes: windows and sessions are keyed aggregates, partial-
 aggregated map-side before the single keyed shuffle. distinct-user counts
-would use approx_count_distinct in production streams (sketcheable,
-mergeable); the oracle-checked batch form keeps exact count(distinct).
+would use approx_count_distinct at scale (sketchable, mergeable); the
+oracle-checked form keeps exact count(distinct).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-from vector_database_product_recommendation_spark.sources.tables import normalize_event_ts
+from pyspark.sql import DataFrame
 
 
-def windowed_event_agg(events: DataFrame, *, window: str = "1 hour") -> DataFrame:
-    """Tumbling-window counts/sums per event_type. Epoch-aligned windows
-    (Spark default) == date_trunc for whole-unit windows."""
+def windowed_event_agg(events: DataFrame) -> DataFrame:
+    """Hourly tumbling-window counts/sums per event_type. Epoch-aligned
+    windows (Spark default) == date_trunc for whole-unit windows."""
     return (
         events.groupBy(
-            F.window("ts", window).getField("start").alias("window_start"),
+            F.window("ts", "1 hour").getField("start").alias("window_start"),
             "event_type",
         )
         .agg(
@@ -78,76 +71,11 @@ def json_props_agg(events: DataFrame) -> DataFrame:
     )
 
 
-def stream_windowed_counts(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    schema,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-):
-    """Structured Streaming form of windowed_event_agg (without the exact
-    distinct, which is not incrementally mergeable): readStream parquet ->
-    watermark -> tumbling window agg. Caller attaches the sink.
-
-    `events_dir` must be a DIRECTORY (FileStreamSource contract). If the
-    provided schema carries ts as bigint (nanos read via the legacy conf),
-    it is floor-divided to micros exactly like the batch loader.
-    """
-    stream = normalize_event_ts(spark.readStream.schema(schema).parquet(events_dir))
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).getField("start").alias("window_start"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-
-
-def user_running_totals_stream(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    schema,
-):
-    """Custom stateful operator (the applyInPandasWithState surface): a
-    per-user running (count, sum) accumulator, emitted in Update mode on
-    every trigger. State is one (long, double) pair per user — bounded by
-    the user population, the canonical keyed-state shape. A production
-    variant adds a GroupStateTimeout to expire idle users; the accumulator
-    logic is identical.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = normalize_event_ts(spark.readStream.schema(schema).parquet(events_dir))
-
-    def update(key, pdfs, state: GroupState):
-        c, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            c += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((c, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [c], "sum_value": [s]}
-        )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_events long, sum_value double",
-        stateStructType="c long, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def enriched_segment_counts(events: DataFrame, customer: DataFrame) -> DataFrame:
-    """Batch form of the stream-static enrichment join: events joined to
-    the customer dimension on user_id == c_custkey, windowed counts per
-    (hour, market segment). The dim side is broadcast — at 100 TB the
-    event stream never shuffles for the join, only for the (tiny-keyed)
-    window aggregate."""
+    """Dimension enrichment: events joined to the customer dimension on
+    user_id == c_custkey, windowed counts per (hour, market segment). The
+    dim side is broadcast — at 100 TB the event table never shuffles for
+    the join, only for the (tiny-keyed) window aggregate."""
     dim = customer.select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     return (
         events.join(F.broadcast(dim), "user_id")
@@ -163,62 +91,12 @@ def enriched_segment_counts(events: DataFrame, customer: DataFrame) -> DataFrame
     )
 
 
-def stream_enriched_segment_counts(
-    spark: SparkSession,
-    events_dir: str,
-    customer: DataFrame,
-    *,
-    schema,
-    watermark: str = "10 minutes",
-):
-    """Stream-static join + windowed agg: the streaming side reads events,
-    the static customer dim is broadcast into every micro-batch (Spark
-    re-resolves the static side per trigger, picking up dim updates).
-    Same logical plan as enriched_segment_counts minus the final sort."""
-    stream = normalize_event_ts(spark.readStream.schema(schema).parquet(events_dir))
-    dim = customer.select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
-    return (
-        stream.withWatermark("ts", watermark)
-        .join(F.broadcast(dim), "user_id")
-        .groupBy(
-            F.window("ts", "1 hour").getField("start").alias("window_start"),
-            "c_mktsegment",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-
-
-def stream_dedup_events(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    schema,
-    watermark: str = "30 minutes",
-):
-    """Streaming exact dedup on event_id: dropDuplicatesWithinWatermark
-    keeps one row per id seen within the watermark horizon — the
-    at-least-once -> exactly-once repair stage of an ingestion pipeline.
-    State is one entry per distinct id inside the horizon (bounded, unlike
-    global dropDuplicates on an unbounded stream)."""
-    stream = normalize_event_ts(spark.readStream.schema(schema).parquet(events_dir))
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def click_purchase_attribution(
-    events: DataFrame, *, horizon: str = "10 minutes"
-) -> DataFrame:
-    """Batch form of the stream-stream join: each purchase attributed to
-    every click by the same user within the preceding `horizon`.
+def click_purchase_attribution(events: DataFrame) -> DataFrame:
+    """Interval self-join: each purchase attributed to every click by the
+    same user within the preceding 10 minutes.
 
     At 100 TB both sides shuffle once on user_id; the interval predicate
-    evaluates inside the join. The streaming twin
-    (stream_click_purchase_attribution) runs the identical condition with
-    watermarks bounding the buffered state.
+    evaluates inside the join.
     """
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -233,7 +111,7 @@ def click_purchase_attribution(
     )
     cond = (
         (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
+        & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 10 minutes"))
     )
     return (
         purchases.join(clicks, on=["user_id"], how="inner")
@@ -243,45 +121,4 @@ def click_purchase_attribution(
             F.round("purchase_value", 6).alias("purchase_value"),
         )
         .orderBy("purchase_id", "click_id")
-    )
-
-
-def stream_click_purchase_attribution(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    schema,
-    horizon: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """Stream-stream inner join with watermarks on BOTH sides.
-
-    The interval condition (purchase within [click, click+horizon)) plus
-    the two watermarks lets Spark expire buffered click state `horizon +
-    watermark` behind the stream clock — bounded state on an unbounded
-    stream, the requirement for any production stream-stream join.
-    """
-    def side(filter_type: str) -> DataFrame:
-        s = normalize_event_ts(spark.readStream.schema(schema).parquet(events_dir))
-        return s.filter(F.col("event_type") == filter_type)
-
-    clicks = side("click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
-    purchases = side("purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", watermark)
-    cond = (
-        (F.col("user_id") == F.col("click_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {horizon}"))
-    )
-    return purchases.join(clicks, cond, "inner").select(
-        "purchase_id", "user_id", "purchase_ts", "click_id", "click_ts",
-        F.round("purchase_value", 6).alias("purchase_value"),
     )
