@@ -100,10 +100,10 @@ def main() -> None:
         timings[name] = time_query(name, fn)
 
     # Median-of-3 for the queries where single-shot numbers are unreadable:
-    # every query over 1 s single-shot (r06 ran 8 such queries outside the
-    # old 5-slowest cut) plus the two that feed derived throughput metrics.
-    # (Driver-box contention showed ±25-400% single-shot variance in r03 —
-    # 12.9s vs a 1.7s warm median for ivf_store_pruned_probe.)
+    # every query over 1 s single-shot (a fixed 5-slowest cut left such
+    # queries out) plus the two that feed derived throughput metrics.
+    # (Driver-box contention showed ±25-400% single-shot variance — 12.9s
+    # vs a 1.7s warm median for ivf_store_pruned_probe.)
     over_1s = [n for n in timings if timings[n] > 1.0]
     median3 = sorted(set(over_1s) | {"knn_exact_batch", "corpus_prep_pipeline"})
     for name in median3:
@@ -167,8 +167,7 @@ def main() -> None:
         # Floor decomposition (SCALE.md "Bulk-KNN floor"): the fixed,
         # query-count-independent share of each bulk job — (a) job
         # dispatch + persisted scan with no Python, (b) plus Arrow ser/de
-        # into the worker. A contaminated box (r05's 2.399 ms/q reading)
-        # shows up here as an inflated floor with an unchanged math
+        # into the worker. A contaminated box shows up here as an inflated floor with an unchanged math
         # residual, making the headline self-diagnosing.
         import pandas as _pd
 

@@ -84,8 +84,8 @@ def test_ann_side_by_side_full_probe_equals_exact(engine):
 
 
 def test_hybrid_plan_ranks_after_selection(engine):
-    """VERDICT r01 fix: the blend path must not route O(N) candidate rows
-    through a single-partition rank window. The plan selects top-k first
+    """The blend path must not route O(N) candidate rows through a
+    single-partition rank window. The plan selects top-k first
     (TakeOrderedAndProject) and the only Window sits above it, seeing k
     rows."""
     import contextlib

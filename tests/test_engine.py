@@ -188,6 +188,20 @@ def test_ann_full_probe_equals_exact(engine):
     assert [(r["neighbor_id"], r["score"]) for r in ivf.collect()] == e
 
 
+def test_ann_review_search_collects_its_query_once(jobs_run_by, engine):
+    """E3 hands its one collected query row to both kernels, so a call
+    on a built index runs that collect's one job on top of the IVF
+    kernel's centroid collect. An unknown ``q_idx`` raises ValueError
+    naming it."""
+    engine.ann_review_search(11, k=K, nprobe=2)  # builds the review index
+    cents, _ = engine._review_index()
+    centroid_jobs = jobs_run_by(lambda: cents.orderBy("cluster_id").collect(), "e3-centroids")
+    e3_jobs = jobs_run_by(lambda: engine.ann_review_search(11, k=K, nprobe=2), "e3")
+    assert e3_jobs == centroid_jobs + 1
+    with pytest.raises(ValueError, match="review 987654321 is not in the corpus"):
+        engine.ann_review_search(987654321, k=K)
+
+
 def test_ann_tradeoff_table_derives_nlist(engine):
     """AN5 on the review corpus: the index has ⌊√n⌋ lists, and probing
     all of them gives precision == MRR == 1.0."""
@@ -213,7 +227,7 @@ def test_review_index_is_trained_once_per_engine(engine, monkeypatch):
         return trained[-1]
 
     monkeypatch.setattr(ivf, "train_kmeans_centroids", spy)
-    fresh = ProductSearchEngine(engine.catalog, reviews=engine.reviews, review_emb=engine.review_emb)
+    fresh = ProductSearchEngine(engine.catalog, review_emb=engine.review_emb)
     nlist = math.isqrt(engine.review_emb.count())
     for q_idx in (3, 11):
         exact, probed = fresh.ann_review_search(q_idx, k=K, nprobe=nlist)

@@ -10,6 +10,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -105,6 +106,44 @@ def test_ann_tradeoff_shape_and_monotonicity(emb):
     assert rows[-1]["precision_at_k"] == 1.0
     assert rows[-1]["mrr"] == 1.0
     assert rows[0]["precision_at_k"] <= rows[-1]["precision_at_k"]
+
+
+def test_ann_tradeoff_scores_the_kernels_hit_lists(emb, ivf_parts):
+    """At nprobe=1 some queries miss exact neighbours. The sweep's
+    precision and MRR are still those of exact_knn's and ivf_knn's own
+    hit lists, recomputed here in numpy: |ivf ∩ exact| / k and 1/rank of
+    the exact top-1 in the IVF list, averaged over the queries."""
+    n_q, k = 8, 5
+    cents, assigned = ivf_parts
+    q = _queries(emb, n_q)
+    exact = exact_knn(emb, q, k, exclude_self=True).toPandas()
+    ivf = ivf_knn(assigned, cents, q, k, 1, exclude_self=True).toPandas()
+    precision, rr = [], []
+    for qid in range(n_q):
+        e = exact[exact.query_id == qid].sort_values("rank").neighbor_id.to_numpy()
+        i = ivf[ivf.query_id == qid].sort_values("rank").neighbor_id.to_numpy()
+        precision.append(np.isin(i, e).sum() / k)
+        at = np.flatnonzero(i == e[0])
+        rr.append(1.0 / (at[0] + 1) if len(at) else 0.0)
+    assert min(precision) < 1.0
+
+    (row,) = ann_tradeoff(emb, ivf_parts, n_queries=n_q, k=k, nprobes=(1,)).collect()
+    assert row["queries_used"] == n_q
+    assert row["precision_at_k"] == pytest.approx(np.mean(precision), abs=1e-6)
+    assert row["mrr"] == pytest.approx(np.mean(rr), abs=1e-6)
+
+
+def test_ann_tradeoff_persists_nothing(emb, ivf_parts, monkeypatch):
+    """The sweep collects its hit lists and scores them on the driver: it
+    caches no frame of its own."""
+
+    def refuse(self, *a, **kw):
+        raise AssertionError("ann_tradeoff cached a frame")
+
+    monkeypatch.setattr(type(emb), "persist", refuse)
+    monkeypatch.setattr(type(emb), "cache", refuse)
+    rows = ann_tradeoff(emb, ivf_parts, n_queries=8, k=5, nprobes=(1, NLIST)).collect()
+    assert [r["nprobe"] for r in rows] == [1, NLIST]
 
 
 def test_free_text_self_retrieval(spark, sf_dir):

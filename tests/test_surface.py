@@ -4,8 +4,11 @@ reaches. An AST walk (so a docstring mention is not a caller) checks:
 - every public top-level function or class of the package is referenced
   by a non-test module: the package itself, ``tools/``, ``bench.py``,
   ``__spark_entry__.py`` or ``perfbench/``;
-- every defaulted parameter of a public top-level function is passed,
-  by keyword or by position, by some call in those modules or the tests.
+- every defaulted parameter of a public top-level function, or of a
+  public method (``__init__`` included) of a public class, is passed, by
+  keyword or by position, by some call in those modules or the tests. A
+  class is called by its name, or as ``cls(...)`` in one of its
+  classmethods.
 
 ``KEPT`` names each exception and why it stays.
 """
@@ -39,6 +42,9 @@ KEPT = {
     "operators.ivf.train_kmeans_centroids.vec_col": TRACED,
     "operators.ivf.assign_clusters.vec_col": TRACED,
     "operators.centroids.group_centroids.normalize": TRACED,
+    # defaulted method parameters no call passes
+    "api.ProductSearchEngine.__init__.encoder": "deployment setting: "
+    "sentence_encoder() plugs in here, the SBERT deployment's query encoder",
 }
 
 
@@ -131,6 +137,37 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
     return out
 
 
+def _methods() -> list[tuple[str, ast.ClassDef, ast.FunctionDef]]:
+    """(module, class, method) for every public method, ``__init__``
+    included, of every public class."""
+    return [
+        (module, cls, fn)
+        for module, cls in _public_defs()
+        if isinstance(cls, ast.ClassDef)
+        for fn in cls.body
+        if isinstance(fn, ast.FunctionDef)
+        and (fn.name == "__init__" or not fn.name.startswith("_"))
+    ]
+
+
+def _decorated(fn: ast.FunctionDef, name: str) -> bool:
+    return any(isinstance(d, ast.Name) and d.id == name for d in fn.decorator_list)
+
+
+def _class_calls(cls: ast.ClassDef, calls: dict[str, list[ast.Call]]) -> list[ast.Call]:
+    """Calls of ``cls``: by its name, or as ``cls(...)`` in a classmethod."""
+    own = []
+    for fn in cls.body:
+        if isinstance(fn, ast.FunctionDef) and _decorated(fn, "classmethod"):
+            first = fn.args.args[0].arg
+            own += [
+                n
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == first
+            ]
+    return calls.get(cls.name, []) + own
+
+
 def unreferenced() -> set[str]:
     """Public package functions and classes no non-test module names."""
     module_names = {p: _names(TREES[p]) for p in NON_TEST}
@@ -159,6 +196,22 @@ def unset_parameters() -> set[str]:
     return out
 
 
+def unset_method_parameters() -> set[str]:
+    """Defaulted parameters of public methods of public classes that no
+    call passes. A method call is matched by the method's name alone."""
+    calls = _calls()
+    out = set()
+    for module, cls, fn in _methods():
+        callers = _class_calls(cls, calls) if fn.name == "__init__" else calls.get(fn.name, [])
+        # a bound call does not pass ``self`` or ``cls``: shift positions
+        shift = 0 if _decorated(fn, "staticmethod") else 1
+        for param, index in _defaulted(fn):
+            pos = None if index is None else index - shift
+            if not any(_passed(c, param, pos) for c in callers):
+                out.add(f"{module}.{cls.name}.{fn.name}.{param}")
+    return out
+
+
 def _kept(name: str) -> bool:
     return any(name == k or name.startswith(k + ".") for k in KEPT)
 
@@ -171,11 +224,17 @@ def test_every_defaulted_parameter_is_set_by_some_caller():
     assert sorted(n for n in unset_parameters() if not _kept(n)) == []
 
 
+def test_every_defaulted_method_parameter_is_set_by_some_caller():
+    assert sorted(n for n in unset_method_parameters() if not _kept(n)) == []
+
+
 def test_kept_entries_are_still_exceptions():
     """A KEPT entry whose function gained a caller, or whose parameter
-    gained a passing call, is stale; at most 10 parameters stay unset."""
-    unset = unset_parameters()
-    found = unreferenced() | unset
+    gained a passing call, is stale; at most 10 function parameters and
+    1 method parameter stay unset."""
+    unset, unset_methods = unset_parameters(), unset_method_parameters()
+    found = unreferenced() | unset | unset_methods
     stale = [k for k in KEPT if not any(n == k or n.startswith(k + ".") for n in found)]
     assert stale == []
     assert len(unset) <= 10, sorted(unset)
+    assert len(unset_methods) <= 1, sorted(unset_methods)

@@ -102,7 +102,7 @@ class _DriverCatalog:
 class ProductSearchEngine:
     """Serving engine over one catalog table (a row per product: its
     products.csv fields plus its unit ``embedding``) with optional
-    (reviews, review_embeddings) for the ANN demo paths.
+    review embeddings for the ANN demo paths.
 
     Construction runs one job for the catalog's row count and embedding
     width and, when ``0 < rows * width * 8 <= DRIVER_CATALOG_MAX_BYTES``,
@@ -113,19 +113,13 @@ class ProductSearchEngine:
         self,
         catalog: DataFrame,
         *,
-        reviews: DataFrame | None = None,
         review_emb: DataFrame | None = None,
-        text_col: str = "example_text",
         encoder=None,
-        stopwords: tuple[str, ...] = STOPWORDS_EN,
         embedding_dim: int | None = None,
     ):
         self.catalog = catalog
-        self.reviews = reviews
         self.review_emb = review_emb  # (review_idx, embedding)
-        self.text_col = text_col
         self.encoder = encoder  # None -> driver-side hash_embed_py
-        self.stopwords = stopwords
         self._tfidf = None
         self._ivf = None
         # the free-text query frame only carries the schema: each request's
@@ -161,7 +155,9 @@ class ProductSearchEngine:
     # -- construction -----------------------------------------------------
 
     @classmethod
-    def from_reference_dir(cls, spark: SparkSession, ref_dir: str, **kw):
+    def from_reference_dir(
+        cls, spark: SparkSession, ref_dir: str, *, embedding_dim: int | None = None
+    ):
         """Build from the reference's shipped artifacts: reviews.csv +
         review_embeddings.npy, products/product-vectors REBUILT through
         this engine's lineage operators (proved identical in
@@ -202,12 +198,7 @@ class ProductSearchEngine:
             "id", F.col("vector").alias("embedding")
         )
         catalog = persist_right_sized(products.join(vectors, "id"))
-        return cls(
-            catalog,
-            reviews=reviews,
-            review_emb=review_emb,
-            **kw,
-        )
+        return cls(catalog, review_emb=review_emb, embedding_dim=embedding_dim)
 
     # -- stage 1: metadata prefilter (P1-P4) ------------------------------
 
@@ -305,9 +296,7 @@ class ProductSearchEngine:
 
     def _tfidf_model(self) -> TfidfModel:
         if self._tfidf is None:
-            self._tfidf = TfidfModel(
-                self.catalog, "id", self.text_col, self.stopwords
-            )
+            self._tfidf = TfidfModel(self.catalog, "id", "example_text", STOPWORDS_EN)
         return self._tfidf
 
     # -- E2: item-to-item -------------------------------------------------
@@ -386,16 +375,20 @@ class ProductSearchEngine:
     ) -> tuple[DataFrame, DataFrame]:
         """E3 (app.py:360-440): (exact, ivf) hit lists for one review
         query — the side-by-side demo, probing the engine's one review
-        index. Requires review_emb."""
+        index. Requires review_emb. The query row is collected once, for
+        both kernels; an unknown ``q_idx`` raises ValueError naming it."""
         from vector_database_product_recommendation_spark.operators.ivf import ivf_knn
 
         emb = self._review_vectors()
         q = emb.filter(F.col("vec_id") == q_idx).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        exact = exact_knn(emb, q, k, exclude_self=True)
+        rows = q.collect()
+        if not rows:
+            raise ValueError(f"review {q_idx!r} is not in the corpus")
+        exact = exact_knn(emb, q, k, exclude_self=True, query_rows=rows)
         cents, assigned = self._review_index()
-        ivf = ivf_knn(assigned, cents, q, k, nprobe, exclude_self=True)
+        ivf = ivf_knn(assigned, cents, q, k, nprobe, exclude_self=True, query_rows=rows)
         return exact, ivf
 
     def ann_tradeoff_table(self, **kw) -> DataFrame:

@@ -9,26 +9,42 @@ nothing itself.
 Output schema matches the reference table: (nprobe, precision_at_k, mrr,
 avg_query_time_ms, queries_used).
 
+The kernels run distributed; the scoring does not. As the reference does
+with the lists FAISS returns, the exact and per-nprobe IVF hit lists are
+collected and scored on the driver. That is at most
+(1 + len(nprobes)) * n_queries * k rows (SCALE.md, driver-side
+materializations).
+
 Metric definitions (J6 lineage):
 - Precision@K: |ivf_topk ∩ exact_topk| / k, averaged over queries
   (self-matches excluded on both sides, as the reference's post-hoc
   self-removal does).
 - MRR: reciprocal of the rank of the exact top-1 neighbor within the IVF
-  list (0 if absent), averaged.
-- avg_query_time_ms: wall-clock of the IVF batch divided by #queries —
-  batch throughput, the honest Spark-native equivalent of the reference's
-  per-query ms (SURVEY.md section 6 framing note).
+  list (0 if absent), averaged. A query with no hits scores 0 on both.
+- avg_query_time_ms: wall-clock of building and collecting the IVF batch
+  divided by #queries — batch throughput, the honest Spark-native
+  equivalent of the reference's per-query ms (SURVEY.md section 6
+  framing note).
 """
 
 from __future__ import annotations
 
 import time
+from collections import defaultdict
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.operators.ivf import ivf_knn
 from vector_database_product_recommendation_spark.operators.knn import exact_knn
+
+
+def _hit_lists(topk: DataFrame) -> dict[int, dict[int, int]]:
+    """query_id -> {neighbor_id: rank} of a collected top-k list."""
+    hits: dict[int, dict[int, int]] = defaultdict(dict)
+    for r in topk.collect():
+        hits[r["query_id"]][r["neighbor_id"]] = r["rank"]
+    return hits
 
 
 def ann_tradeoff(
@@ -44,7 +60,6 @@ def ann_tradeoff(
     ``index=(centroids, assigned)`` over ``emb`` (``ivf.build_ivf_index``):
     the reference evaluates its persisted FAISS index, not a fresh train.
     The queries are the rows with ``vec_id < n_queries``."""
-    spark = emb.sparkSession
     cents, assigned = index
 
     queries = (
@@ -56,89 +71,34 @@ def ann_tradeoff(
     # reuses them across every per-nprobe probe and the exact oracle, so
     # no per-iteration collect job ever runs inside a timed bracket.
     qrows = queries.collect()
-    n_q = len(qrows)
+    q_ids = [r["query_id"] for r in qrows]
+    n_q = len(q_ids)
     cent_rows = cents.orderBy("cluster_id").collect()
 
-    exact = exact_knn(emb, queries, k, exclude_self=True, query_rows=qrows).persist()
-    exact_top1 = exact.filter(F.col("rank") == 1).select(
-        "query_id", F.col("neighbor_id").alias("nn1")
-    )
+    exact = _hit_lists(exact_knn(emb, queries, k, exclude_self=True, query_rows=qrows))
+    nn1 = {q: n for q, hits in exact.items() for n, rank in hits.items() if rank == 1}
 
-    # Phase 1 — one timed materialization per nprobe (the latency metric
-    # needs its own wall-clock bracket, exactly like app.py:393-399).
-    per_probe: list[tuple[int, float, DataFrame]] = []
+    out_rows = []
     for nprobe in nprobes:
+        # one wall-clock bracket per nprobe, like app.py:393-399
         t0 = time.time()
-        ivf = ivf_knn(
-            assigned,
-            cents,
-            queries,
-            k,
-            nprobe,
-            exclude_self=True,
-            query_rows=qrows,
-            centroid_rows=cent_rows,
-        ).persist()
-        ivf.count()
-        per_probe.append((nprobe, (time.time() - t0) * 1000.0, ivf))
-
-    # Phase 2 — ONE fused quality job for the whole sweep: union the
-    # (already persisted) hit lists tagged by nprobe, mark exact-set and
-    # nn1 membership, aggregate per (nprobe, query), average. The frames
-    # are len(nprobes)*q*k rows, so the sweep costs one metrics job
-    # instead of one per nprobe.
-    from functools import reduce
-
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            ivf.select(
-                F.lit(nprobe).alias("nprobe"), "query_id", "neighbor_id", "rank"
+        ivf = _hit_lists(
+            ivf_knn(
+                assigned,
+                cents,
+                queries,
+                k,
+                nprobe,
+                exclude_self=True,
+                query_rows=qrows,
+                centroid_rows=cent_rows,
             )
-            for nprobe, _, ivf in per_probe
-        ],
-    )
-    marked = tagged.join(
-        exact.select("query_id", "neighbor_id").withColumn("hit", F.lit(1)),
-        ["query_id", "neighbor_id"],
-        "left",
-    ).join(exact_top1, "query_id")
-    per_query = marked.groupBy("nprobe", "query_id").agg(
-        F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-        F.max(
-            F.when(F.col("neighbor_id") == F.col("nn1"), 1.0 / F.col("rank"))
-        ).alias("rr"),
-    )
-    stats = {
-        r["nprobe"]: r
-        for r in (
-            queries.crossJoin(
-                spark.createDataFrame([(int(p),) for p in nprobes], "nprobe int")
-            )
-            .join(per_query, ["nprobe", "query_id"], "left")
-            .groupBy("nprobe")
-            .agg(
-                F.avg(F.coalesce(F.col("n_hit"), F.lit(0)) / F.lit(float(k))).alias("p"),
-                F.avg(F.coalesce(F.col("rr"), F.lit(0.0))).alias("m"),
-            )
-            .collect()
         )
-    }
-
-    out_rows = [
-        (
-            nprobe,
-            round(float(stats[nprobe]["p"]), 6),
-            round(float(stats[nprobe]["m"]), 6),
-            round(elapsed_ms / n_q, 3),
-            n_q,
-        )
-        for nprobe, elapsed_ms, _ in per_probe
-    ]
-    for _, _, ivf in per_probe:
-        ivf.unpersist()
-    exact.unpersist()
-    return spark.createDataFrame(
+        ms_per_query = (time.time() - t0) * 1000.0 / n_q
+        precision = sum(len(ivf[q].keys() & exact[q].keys()) / k for q in q_ids) / n_q
+        mrr = sum(1.0 / ivf[q][nn1[q]] for q in q_ids if nn1.get(q) in ivf[q]) / n_q
+        out_rows.append((nprobe, round(precision, 6), round(mrr, 6), round(ms_per_query, 3), n_q))
+    return emb.sparkSession.createDataFrame(
         out_rows,
         "nprobe int, precision_at_k double, mrr double, "
         "avg_query_time_ms double, queries_used long",

@@ -1,8 +1,8 @@
-"""Relational breadth round 3: the remaining classic analytic query shapes.
+"""Relational breadth: the classic analytic query shapes.
 
 The reference's serving queries (SURVEY.md section 2.2-2.5) are all
-filter -> join -> aggregate -> top-k skeletons; rounds 1-2 covered the
-direct forms.  This module adds the query *shapes* a user migrating a
+filter -> join -> aggregate -> top-k skeletons; operators/relational.py
+covers the direct forms.  This module adds the query *shapes* a user migrating a
 full analytics workload would expect the engine to plan well — each is
 a TPC-H pattern adapted to the synthetic star schema (TESTDATA.md):
 

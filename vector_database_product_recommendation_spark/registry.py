@@ -280,8 +280,8 @@ def _h60(expr: str) -> str:
 _SHINGLES_CTE = f"""
 t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
 s AS (SELECT doc_id,
-             list_distinct([array_to_string(toks[i:i+2], ' ')
-                            FOR i IN range(1, greatest(len(toks)-2,1)+1)]) AS shingles
+             list_distinct([array_to_string(toks[i:i+{D.SHINGLE_N - 1}], ' ')
+                            FOR i IN range(1, greatest(len(toks)-{D.SHINGLE_N - 1},1)+1)]) AS shingles
       FROM t WHERE len(toks) > 0)
 """
 
@@ -457,7 +457,7 @@ def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_JACCARD_ORACLE = f"""
 WITH {_SHINGLES_CTE},
 ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM s),
-cold AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= 100),
+cold AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= {D.MAX_DF}),
 ex2 AS (SELECT ex.* FROM ex JOIN cold USING (shingle)),
 sz AS (SELECT doc_id, count(*) AS sz FROM ex2 GROUP BY doc_id),
 common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
@@ -489,8 +489,10 @@ from vector_database_product_recommendation_spark.operators.dedup import (  # no
     _perm_constants,
 )
 
-_A32, _B32 = _perm_constants(32)
-_CONSTS_SQL = f"(SELECT {_A32} AS pa, {_B32} AS pb) consts"
+_PERM_A, _PERM_B = _perm_constants(D.NUM_HASHES)
+_CONSTS_SQL = f"(SELECT {_PERM_A} AS pa, {_PERM_B} AS pb) consts"
+# signature rows per LSH band
+_ROWS = D.NUM_HASHES // D.BANDS
 
 _MINHASH_SIG_ORACLE = f"""
 WITH {_SHINGLES_CTE},
@@ -499,7 +501,7 @@ hsrc AS (SELECT doc_id, list_transform(shingles,
 SELECT doc_id, t2.seed,
        list_min(list_transform(hs,
                 h -> (pa[t2.seed + 1] * h + pb[t2.seed + 1]) % {_MERSENNE_P})) AS minhash
-FROM hsrc CROSS JOIN {_CONSTS_SQL} CROSS JOIN range(0, 32) t2(seed)
+FROM hsrc CROSS JOIN {_CONSTS_SQL} CROSS JOIN range(0, {D.NUM_HASHES}) t2(seed)
 ORDER BY doc_id, t2.seed
 """
 
@@ -514,13 +516,13 @@ WITH {_SHINGLES_CTE},
 hsrc AS (SELECT doc_id, shingles, list_transform(shingles,
                  sh -> {_h60("sh")} % {_MERSENNE_P}) AS hs FROM s),
 mh AS (SELECT doc_id, shingles,
-              list_transform(range(0, 32),
+              list_transform(range(0, {D.NUM_HASHES}),
                 sd -> list_min(list_transform(hs,
                        h -> (pa[sd + 1] * h + pb[sd + 1]) % {_MERSENNE_P}))) AS mh
        FROM hsrc CROSS JOIN {_CONSTS_SQL}),
 banded AS (SELECT doc_id, j AS band,
-                  md5(array_to_string(mh[j*4+1 : j*4+4], ',')) AS sig
-           FROM mh CROSS JOIN range(0, 8) t2(j)),
+                  md5(array_to_string(mh[j*{_ROWS}+1 : j*{_ROWS}+{_ROWS}], ',')) AS sig
+           FROM mh CROSS JOIN range(0, {D.BANDS}) t2(j)),
 cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
          FROM banded a JOIN banded b
            ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
@@ -555,12 +557,12 @@ t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
 h AS (SELECT doc_id, list_transform(toks, tk -> {_h60("tk")}) AS hs
       FROM t WHERE len(toks) > 0),
 v AS (SELECT doc_id,
-             list_transform(range(0, 60),
+             list_transform(range(0, {D._SIMHASH_BITS}),
                b -> list_sum(list_transform(hs,
                       hh -> CASE WHEN (hh >> b) & 1 = 1 THEN 1 ELSE -1 END))) AS votes
       FROM h),
 sig AS (SELECT doc_id,
-               list_sum(list_transform(range(0, 60),
+               list_sum(list_transform(range(0, {D._SIMHASH_BITS}),
                  b -> CASE WHEN votes[b+1] > 0 THEN (1::BIGINT << b)
                            ELSE 0 END))::BIGINT AS simhash
         FROM v)
@@ -574,11 +576,14 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.simhash_signatures(load_table(spark, sf_dir, "documents"))
 
 
+# bits per SimHash blocking chunk, as dedup.simhash_pairs splits them
+_CHUNK_BITS = D._SIMHASH_BITS // D.SIMHASH_CHUNKS
+
 _SIMHASH_PAIRS_ORACLE = f"""
 WITH {_SIMHASH_CTE},
 blocked AS (SELECT doc_id, simhash, c AS chunk_idx,
-                   (simhash >> (15*c)) & 32767 AS chunk
-            FROM sig CROSS JOIN range(0, 4) t2(c)),
+                   (simhash >> ({_CHUNK_BITS}*c)) & {(1 << _CHUNK_BITS) - 1} AS chunk
+            FROM sig CROSS JOIN range(0, {D.SIMHASH_CHUNKS}) t2(c)),
 pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
                  bit_count(xor(a.simhash, b.simhash)) AS hamming
           FROM blocked a JOIN blocked b
@@ -621,7 +626,7 @@ def _dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DEDUP_COMPONENTS_ORACLE = f"""
 WITH RECURSIVE {_SHINGLES_CTE},
 ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM s),
-cold AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= 100),
+cold AS (SELECT shingle FROM ex GROUP BY shingle HAVING count(*) <= {D.MAX_DF}),
 ex2 AS (SELECT ex.* FROM ex JOIN cold USING (shingle)),
 sz AS (SELECT doc_id, count(*) AS sz FROM ex2 GROUP BY doc_id),
 common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
@@ -1377,8 +1382,8 @@ def _events_user_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Relational breadth round 2: multi-way star join, outer-join histogram,
-# grouped top-k, CUBE (SURVEY.md section 2.2/2.4/2.5 generalizations)
+# Relational breadth, star shapes: multi-way star join, outer-join
+# histogram, grouped top-k, CUBE (SURVEY.md section 2.2/2.4/2.5 generalizations)
 # ---------------------------------------------------------------------------
 
 _Q5_ORACLE = """
@@ -1825,8 +1830,8 @@ def _hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Relational breadth round 3: remaining classic shapes (correlated
-# subqueries, HAVING, conditional-agg ratios, LIKE, disjunctions, pivot)
+# Relational breadth, TPC-H shapes: correlated subqueries, HAVING,
+# conditional-agg ratios, LIKE, disjunctions, pivot
 # ---------------------------------------------------------------------------
 
 from vector_database_product_recommendation_spark.operators import relational_breadth as RB  # noqa: E402
@@ -2149,7 +2154,7 @@ def _pq_knn_exactrefine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Relational breadth round 4: Q9/Q20 shapes, schema-evolution union,
+# Relational breadth, Q9/Q20 and data quality: schema-evolution union,
 # z-score anomaly flagging, approximate percentile sketch
 # ---------------------------------------------------------------------------
 
@@ -2384,7 +2389,7 @@ def _cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal round 2: resize-shaped payload transform and audio framing
+# Multimodal transforms: resize-shaped payload transform and audio framing
 # ---------------------------------------------------------------------------
 
 from vector_database_product_recommendation_spark.operators.multimodal import (  # noqa: E402
