@@ -40,7 +40,7 @@ def emb(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def ivf_parts(emb):
-    cents = train_kmeans_centroids(emb, NLIST, seed=42)
+    cents = train_kmeans_centroids(emb, NLIST)
     assigned = assign_clusters(emb, cents).cache()
     return cents, assigned
 
@@ -89,7 +89,7 @@ def test_mllib_fallback_past_the_byte_budget(emb, monkeypatch):
     from vector_database_product_recommendation_spark.operators import ivf
 
     monkeypatch.setattr(ivf, "MAX_TRAIN_BYTES", 1)
-    rows = train_kmeans_centroids(emb, 5, seed=42, max_iter=5).orderBy("cluster_id").collect()
+    rows = train_kmeans_centroids(emb, 5).orderBy("cluster_id").collect()
     d = len(emb.first()["embedding"])
     assert [r["cluster_id"] for r in rows] == list(range(5))
     assert all(len(r["centroid"]) == d for r in rows)
@@ -204,7 +204,7 @@ def plan_of(df) -> str:
 
 def test_ivf_knn_single_partition_elides_merge_window(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").coalesce(1)
-    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    cents = train_kmeans_centroids(emb, 5)
     assigned = assign_clusters(emb, cents)
     plan = plan_of(ivf_knn(assigned, cents, _queries(emb), 5, nprobe=2))
     # kernel emits task-local ranks; a one-task pool needs no merge window
@@ -214,7 +214,7 @@ def test_ivf_knn_single_partition_elides_merge_window(spark, sf_dir):
 
 def test_ivf_knn_multi_partition_matches_single(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    cents = train_kmeans_centroids(emb, 5)
     one = assign_clusters(emb.coalesce(1), cents)
     many = assign_clusters(emb.repartition(7), cents)
     a = ivf_knn(one, cents, _queries(emb), 5, nprobe=3).collect()
@@ -224,7 +224,7 @@ def test_ivf_knn_multi_partition_matches_single(spark, sf_dir):
 
 def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    cents = train_kmeans_centroids(emb, 5)
     assigned = assign_clusters(emb, cents)
     q = _queries(emb)
     rows = cents.orderBy("cluster_id").collect()
@@ -235,7 +235,7 @@ def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
 
 def test_ivf_knn_store_probe_statically_pruned(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    cents = train_kmeans_centroids(emb, 5)
     assigned = assign_clusters(emb, cents)
     path = str(tmp_path / "store")
     write_ivf_store(assigned, path)

@@ -233,7 +233,8 @@ def test_exact_scores_full_matrix_no_selection(spark, emb):
     scored per query, values identical to the numpy product."""
     from vector_database_product_recommendation_spark.operators.knn import exact_scores
 
-    out = exact_scores(emb, _queries(emb, 3)).collect()
+    q = _queries(emb, 3)
+    out = exact_scores(emb, q, query_rows=q.collect()).collect()
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows])
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
@@ -244,15 +245,6 @@ def test_exact_scores_full_matrix_no_selection(spark, emb):
         s = np.round(mat @ mat[ids == qid][0], 6)
         for i, nid in enumerate(ids):
             assert got[(qid, int(nid))] == float(s[i])
-
-
-def test_exact_scores_exclude_self(spark, emb):
-    from vector_database_product_recommendation_spark.operators.knn import exact_scores
-
-    out = exact_scores(emb, _queries(emb, 2), exclude_self=True).collect()
-    n = emb.count()
-    assert len(out) == 2 * (n - 1)
-    assert all(r["neighbor_id"] != r["query_id"] for r in out)
 
 
 def _numpy_topk(rows, queries, k, exclude_self):
@@ -286,7 +278,7 @@ def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb):
     )
 
     corpus = emb.repartition(3)
-    cents = train_kmeans_centroids(emb, 5, seed=42, max_iter=5)
+    cents = train_kmeans_centroids(emb, 5)
     assigned = assign_clusters(corpus, cents)
     books = train_pq(emb)
     codes = encode_pq(corpus, books)

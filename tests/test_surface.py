@@ -8,7 +8,13 @@ reaches. An AST walk (so a docstring mention is not a caller) checks:
   public method (``__init__`` included) of a public class, is passed, by
   keyword or by position, by some call in those modules or the tests. A
   class is called by its name, or as ``cls(...)`` in one of its
-  classmethods.
+  classmethods;
+- every parameter of those that defaults to ``None`` is left unset by
+  some call in the non-test modules: a ``None`` default that selects a
+  branch (build an index here, collect the query batch here) only tests
+  reach is a second implementation, so the caller's value becomes
+  required. A call that forwards ``*args`` or ``**kwargs`` counts as
+  leaving it unset.
 
 ``KEPT`` names each exception and why it stays.
 """
@@ -22,8 +28,6 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "vector_database_product_recommendation_spark"
 
-TRACED = "perfbench/layers.py traces it; its signature stays"
-
 KEPT = {
     # functions no non-test module references
     "functions.embed.sentence_encoder": "the bridge to the paper's SBERT encoder; "
@@ -36,15 +40,18 @@ KEPT = {
     "functions.embed.encode_documents.encoder": "deployment setting: sentence_encoder() plugs in here",
     "sources.tables.write_bucketed.mode": "deployment setting: the write mode",
     "operators.ivf.write_ivf_store.mode": "deployment setting: the write mode",
-    "operators.knn.pairwise_similarity.id_col": TRACED,
-    "operators.knn.pairwise_similarity.vec_col": TRACED,
-    "operators.knn.pairwise_similarity.round_decimals": TRACED,
-    "operators.ivf.train_kmeans_centroids.vec_col": TRACED,
-    "operators.ivf.assign_clusters.vec_col": TRACED,
-    "operators.centroids.group_centroids.normalize": TRACED,
     # defaulted method parameters no call passes
     "api.ProductSearchEngine.__init__.encoder": "deployment setting: "
     "sentence_encoder() plugs in here, the SBERT deployment's query encoder",
+    # None defaults every non-test call overrides
+    "api.ProductSearchEngine.from_reference_dir.embedding_dim": "perfbench/serve.py "
+    "passes one; the default is the catalog's width",
+    "api.ProductSearchEngine.__init__.embedding_dim": "from_reference_dir forwards its "
+    "own value; the default is the catalog's width",
+    "operators.ivf.train_kmeans_centroids.nlist": "build_ivf_index forwards its own "
+    "value, which is None in every query",
+    "operators.pq.pq_knn.emb": "without it pq_knn is the ADC-only scan, the quantizer "
+    "output that tests/test_pq.py's lossless audit measures",
 }
 
 
@@ -109,10 +116,11 @@ def _callee(call: ast.Call) -> str | None:
     return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
 
 
-def _calls() -> dict[str, list[ast.Call]]:
+def _calls(paths: list[str]) -> dict[str, list[ast.Call]]:
+    """Every call in ``paths``, by callee name."""
     out: dict[str, list[ast.Call]] = {}
-    for tree in TREES.values():
-        for n in ast.walk(tree):
+    for p in paths:
+        for n in ast.walk(TREES[p]):
             if isinstance(n, ast.Call) and _callee(n):
                 out.setdefault(_callee(n), []).append(n)
     return out
@@ -128,12 +136,14 @@ def _passed(call: ast.Call, param: str, index: int | None) -> bool:
     return index is not None and len(call.args) > index
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
-    """(name, positional index or None) of every parameter with a default."""
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, positional index or None, default) of every parameter with a
+    default."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    out = [(p.arg, i) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, first + i, d) for i, (p, d) in enumerate(zip(pos[first:], a.defaults))]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return out
 
 
@@ -183,32 +193,80 @@ def unreferenced() -> set[str]:
     return out
 
 
+def _function_targets(calls: dict[str, list[ast.Call]]) -> list[tuple]:
+    """(name, def, its calls, 0) of every public package function."""
+    return [
+        (f"{module}.{node.name}", node, calls.get(node.name, []), 0)
+        for module, node in _public_defs()
+        if isinstance(node, ast.FunctionDef)
+    ]
+
+
+def _method_targets(calls: dict[str, list[ast.Call]]) -> list[tuple]:
+    """(name, def, its calls, positions a bound call skips) of every public
+    method of a public class. A method call is matched by the method's
+    name alone; a bound call does not pass ``self`` or ``cls``."""
+    return [
+        (
+            f"{module}.{cls.name}.{fn.name}",
+            fn,
+            _class_calls(cls, calls) if fn.name == "__init__" else calls.get(fn.name, []),
+            0 if _decorated(fn, "staticmethod") else 1,
+        )
+        for module, cls, fn in _methods()
+    ]
+
+
+def _unset(targets: list[tuple]) -> set[str]:
+    """Defaulted parameters of ``targets`` that none of their calls passes."""
+    out = set()
+    for name, fn, callers, shift in targets:
+        for param, index, _ in _defaulted(fn):
+            pos = None if index is None else index - shift
+            if not any(_passed(c, param, pos) for c in callers):
+                out.add(f"{name}.{param}")
+    return out
+
+
 def unset_parameters() -> set[str]:
     """Defaulted parameters of public package functions that no call passes."""
-    calls = _calls()
-    out = set()
-    for module, node in _public_defs():
-        if not isinstance(node, ast.FunctionDef):
-            continue
-        for param, index in _defaulted(node):
-            if not any(_passed(c, param, index) for c in calls.get(node.name, [])):
-                out.add(f"{module}.{node.name}.{param}")
-    return out
+    return _unset(_function_targets(_calls(CALLERS)))
 
 
 def unset_method_parameters() -> set[str]:
     """Defaulted parameters of public methods of public classes that no
-    call passes. A method call is matched by the method's name alone."""
-    calls = _calls()
+    call passes."""
+    return _unset(_method_targets(_calls(CALLERS)))
+
+
+def _is_none(node: ast.expr) -> bool:
+    return isinstance(node, ast.Constant) and node.value is None
+
+
+def _leaves_unset(call: ast.Call, param: str, index: int | None) -> bool:
+    """Whether ``call`` may take ``param``'s default: it forwards ``*args``
+    or ``**kwargs``, passes a literal ``None``, or does not pass it."""
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    if any(k.arg is None for k in call.keywords):
+        return True
+    value = next((k.value for k in call.keywords if k.arg == param), None)
+    if value is None and index is not None and len(call.args) > index:
+        value = call.args[index]
+    return value is None or _is_none(value)
+
+
+def none_defaults_only_tests_take() -> set[str]:
+    """Parameters defaulting to None, of public package functions and of
+    public methods of public classes, that no call outside the tests
+    leaves unset."""
+    calls = _calls(NON_TEST)
     out = set()
-    for module, cls, fn in _methods():
-        callers = _class_calls(cls, calls) if fn.name == "__init__" else calls.get(fn.name, [])
-        # a bound call does not pass ``self`` or ``cls``: shift positions
-        shift = 0 if _decorated(fn, "staticmethod") else 1
-        for param, index in _defaulted(fn):
+    for name, fn, callers, shift in _function_targets(calls) + _method_targets(calls):
+        for param, index, default in _defaulted(fn):
             pos = None if index is None else index - shift
-            if not any(_passed(c, param, pos) for c in callers):
-                out.add(f"{module}.{cls.name}.{fn.name}.{param}")
+            if _is_none(default) and not any(_leaves_unset(c, param, pos) for c in callers):
+                out.add(f"{name}.{param}")
     return out
 
 
@@ -228,13 +286,18 @@ def test_every_defaulted_method_parameter_is_set_by_some_caller():
     assert sorted(n for n in unset_method_parameters() if not _kept(n)) == []
 
 
+def test_every_none_default_is_taken_outside_the_tests():
+    assert sorted(n for n in none_defaults_only_tests_take() if not _kept(n)) == []
+
+
 def test_kept_entries_are_still_exceptions():
     """A KEPT entry whose function gained a caller, or whose parameter
-    gained a passing call, is stale; at most 10 function parameters and
-    1 method parameter stay unset."""
+    gained a passing call, or whose None default gained a non-test call
+    that takes it, is stale; at most 4 function parameters and 1 method
+    parameter stay unset."""
     unset, unset_methods = unset_parameters(), unset_method_parameters()
-    found = unreferenced() | unset | unset_methods
+    found = unreferenced() | unset | unset_methods | none_defaults_only_tests_take()
     stale = [k for k in KEPT if not any(n == k or n.startswith(k + ".") for n in found)]
     assert stale == []
-    assert len(unset) <= 10, sorted(unset)
+    assert len(unset) <= 4, sorted(unset)
     assert len(unset_methods) <= 1, sorted(unset_methods)

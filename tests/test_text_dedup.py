@@ -21,7 +21,9 @@ from vector_database_product_recommendation_spark.operators.dedup import (
     embedding_near_dup,
     exact_dedup_groups,
     minhash_lsh_pairs,
+    minhash_table,
     ngram_jaccard_pairs,
+    shingle_postings,
     simhash_pairs,
     simhash_signatures,
     winnow_fingerprints_df,
@@ -109,9 +111,9 @@ def test_near_dup_family_finds_planted_pair(spark):
         (3, "totally different words entirely unrelated content here now"),
     ]
     df = _docs(spark, rows)
-    jac = ngram_jaccard_pairs(df, threshold=0.5)
+    jac = ngram_jaccard_pairs(shingle_postings(df), threshold=0.5)
     assert [(r["id_a"], r["id_b"]) for r in jac.collect()] == [(1, 2)]
-    lsh = minhash_lsh_pairs(df, threshold=0.5)
+    lsh = minhash_lsh_pairs(minhash_table(df), threshold=0.5)
     assert [(r["id_a"], r["id_b"]) for r in lsh.collect()] == [(1, 2)]
 
 
@@ -129,7 +131,7 @@ def test_simhash_pairs_identical_docs_blocked_join(spark):
             (3, "totally different words entirely unrelated content here now"),
         ],
     )
-    out = [(r["id_a"], r["id_b"], r["hamming"]) for r in simhash_pairs(df, max_hamming=3).collect()]
+    out = [(r["id_a"], r["id_b"], r["hamming"]) for r in simhash_pairs(simhash_signatures(df), max_hamming=3).collect()]
     assert out == [(1, 2, 0)]
 
 
@@ -154,6 +156,7 @@ def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark):
     import numpy as np
 
     from vector_database_product_recommendation_spark.operators.dedup import (
+        embedding_band_signatures,
         embedding_near_dup_lsh,
     )
 
@@ -170,7 +173,11 @@ def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     exact = {(r["id_a"], r["id_b"]) for r in embedding_near_dup(emb, threshold=0.95).collect()}
-    lsh = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_lsh(emb, threshold=0.95).collect()}
+    banded = embedding_band_signatures(emb)
+    lsh = {
+        (r["id_a"], r["id_b"])
+        for r in embedding_near_dup_lsh(emb, banded, threshold=0.95).collect()
+    }
     assert lsh <= exact                      # precision exact by construction
     assert len(exact) >= 10
     assert len(lsh) / len(exact) >= 0.9      # SRP recall at near-dup cosine
@@ -223,8 +230,6 @@ def test_winnowing_shared_run_guarantee(spark):
     """Schleimer et al. guarantee: two documents sharing a token run of
     length >= w + k - 1 (= 8 for k=4, w=5) share at least one
     fingerprint; disjoint-vocabulary documents share none."""
-    from vector_database_product_recommendation_spark.operators.dedup import winnow_fingerprints_df
-
     shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
     rows = [
         (0, f"intro words here {shared} closing remarks"),
@@ -242,8 +247,6 @@ def test_winnowing_shared_run_guarantee(spark):
 
 
 def test_winnowing_short_doc_fingerprint(spark):
-    from vector_database_product_recommendation_spark.operators.dedup import winnow_fingerprints_df
-
     docs = spark.createDataFrame(
         [(0, "one two three"), (1, "one two three")], "doc_id long, text string"
     )
@@ -284,7 +287,7 @@ def test_dedup_components_keeps_min_id(spark):
         (20, "totally different words one two three four five six seven"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: (r["component_id"], r["is_kept"]) for r in dedup_components(docs).collect()}
+    out = {r["doc_id"]: (r["component_id"], r["is_kept"]) for r in dedup_components(docs, shingle_postings(docs)).collect()}
     assert out[10] == (10, True)
     assert out[11][0] == 10 and out[11][1] is False
     assert out[12][0] == 10 and out[12][1] is False
@@ -327,13 +330,11 @@ def test_embedding_near_dup_guard_raises_beyond_max_rows(spark, monkeypatch):
 
 def test_ngram_jaccard_sort_param_same_rows(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(300)
-    srt = ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    uns = ngram_jaccard_pairs(docs, threshold=0.5, sort=False).collect()
+    # cached, as callers pass it: every scan of the index sees the same
+    # limit(300) rows
+    index = shingle_postings(docs).cache()
+    srt = ngram_jaccard_pairs(index, threshold=0.5).collect()
+    uns = ngram_jaccard_pairs(index, threshold=0.5, sort=False).collect()
+    index.unpersist()
     assert sorted(map(tuple, uns)) == [tuple(r) for r in srt]
 
-
-def test_winnow_sort_param_same_rows(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    srt = winnow_fingerprints_df(docs).collect()
-    uns = winnow_fingerprints_df(docs, sort=False).collect()
-    assert sorted(map(tuple, uns)) == [tuple(r) for r in srt]

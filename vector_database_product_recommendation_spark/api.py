@@ -101,8 +101,8 @@ class _DriverCatalog:
 
 class ProductSearchEngine:
     """Serving engine over one catalog table (a row per product: its
-    products.csv fields plus its unit ``embedding``) with optional
-    review embeddings for the ANN demo paths.
+    products.csv fields plus its unit ``embedding``) and the review
+    embeddings (review_idx, embedding) that the ANN demo paths search.
 
     Construction runs one job for the catalog's row count and embedding
     width and, when ``0 < rows * width * 8 <= DRIVER_CATALOG_MAX_BYTES``,
@@ -113,7 +113,7 @@ class ProductSearchEngine:
         self,
         catalog: DataFrame,
         *,
-        review_emb: DataFrame | None = None,
+        review_emb: DataFrame,
         encoder=None,
         embedding_dim: int | None = None,
     ):
@@ -122,6 +122,7 @@ class ProductSearchEngine:
         self.encoder = encoder  # None -> driver-side hash_embed_py
         self._tfidf = None
         self._ivf = None
+        self._ivf_centroid_rows = None
         # the free-text query frame only carries the schema: each request's
         # encoded vector reaches the kernel as query_rows
         self._text_query = catalog.sparkSession.createDataFrame(
@@ -375,8 +376,10 @@ class ProductSearchEngine:
     ) -> tuple[DataFrame, DataFrame]:
         """E3 (app.py:360-440): (exact, ivf) hit lists for one review
         query — the side-by-side demo, probing the engine's one review
-        index. Requires review_emb. The query row is collected once, for
-        both kernels; an unknown ``q_idx`` raises ValueError naming it."""
+        index. The query row is collected once, for both kernels, and the
+        index's centroid rows once per engine, so a call on a built index
+        runs one Spark job; an unknown ``q_idx`` raises ValueError naming
+        it."""
         from vector_database_product_recommendation_spark.operators.ivf import ivf_knn
 
         emb = self._review_vectors()
@@ -388,7 +391,16 @@ class ProductSearchEngine:
             raise ValueError(f"review {q_idx!r} is not in the corpus")
         exact = exact_knn(emb, q, k, exclude_self=True, query_rows=rows)
         cents, assigned = self._review_index()
-        ivf = ivf_knn(assigned, cents, q, k, nprobe, exclude_self=True, query_rows=rows)
+        ivf = ivf_knn(
+            assigned,
+            cents,
+            q,
+            k,
+            nprobe,
+            exclude_self=True,
+            query_rows=rows,
+            centroid_rows=self._ivf_centroid_rows,
+        )
         return exact, ivf
 
     def ann_tradeoff_table(self, **kw) -> DataFrame:
@@ -404,12 +416,14 @@ class ProductSearchEngine:
 
     def _review_index(self) -> tuple[DataFrame, DataFrame]:
         """The review corpus's IVF index (``ivf.build_ivf_index``), built on
-        the first E3 or AN5 call and kept: the reference's one shipped
-        IndexIVFFlat, read by both."""
+        the first E3 or AN5 call and kept with its centroid rows, which E3
+        hands to ``ivf_knn``: the reference's one shipped IndexIVFFlat,
+        read by both."""
         from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
 
         if self._ivf is None:
             self._ivf = build_ivf_index(self._review_vectors())
+            self._ivf_centroid_rows = self._ivf[0].orderBy("cluster_id").collect()
         return self._ivf
 
 

@@ -98,26 +98,18 @@ def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup.py module docstring). Serving queries (dedup_ngram_jaccard,
     dedup_components) probe it; the build is an offline job at warehouse
     scale, reported in artifact_build_sec here."""
-    import pyspark.sql.functions as F
+    from vector_database_product_recommendation_spark.operators.dedup import shingle_postings
 
-    from vector_database_product_recommendation_spark.operators.dedup import _doc_shingles_py
-
-    docs = load_table(spark, sf_dir, "documents")
-    return persist_right_sized(
-        _doc_shingles_py(docs).select(
-            "doc_id", F.explode("shingles").alias("shingle")
-        )
-    )
+    return persist_right_sized(shingle_postings(load_table(spark, sf_dir, "documents")))
 
 
 @_memo
 def minhash_signature_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingles, mh) MinHash signatures over ``documents`` — the
     write-signatures-once step of the MinHash-LSH pipeline."""
-    from vector_database_product_recommendation_spark.operators.dedup import _with_minhash
+    from vector_database_product_recommendation_spark.operators.dedup import minhash_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    return persist_right_sized(_with_minhash(docs))
+    return persist_right_sized(minhash_table(load_table(spark, sf_dir, "documents")))
 
 
 @_memo
@@ -134,9 +126,7 @@ def winnow_fingerprint_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers add their own presentation order)."""
     from vector_database_product_recommendation_spark.operators.dedup import winnow_fingerprints_df
 
-    return persist_right_sized(
-        winnow_fingerprints_df(load_table(spark, sf_dir, "documents"), sort=False)
-    )
+    return persist_right_sized(winnow_fingerprints_df(load_table(spark, sf_dir, "documents")))
 
 
 @_memo

@@ -1,11 +1,13 @@
 """Persist lifetimes: query-scoped pins and session-scoped artifacts.
 
-Several composite queries persist an intermediate that feeds two or more
-consumers inside the SAME query (LSH signature tables, winnowing
-fingerprints, the hybrid-search sparse scores). Those persists are
-QUERY-LOCAL: nothing outside the one invocation ever reads them — but a
-bare ``.persist()`` has no release point, so a long bench session pins a
-fresh copy per invocation (bounded only by LRU eviction).
+Two queries persist an intermediate that feeds two or more consumers
+inside the SAME query and depends on the query itself:
+``tfidf.hybrid_search`` its sparse scores (the blend's bounds and its
+rescale) and ``tfidf.bm25_search`` its per-document term stats (four
+consumers of one kernel pass). Those persists are QUERY-LOCAL: nothing
+outside the one invocation ever reads them — but a bare ``.persist()``
+has no release point, so a long bench session pins a fresh copy per
+invocation (bounded only by LRU eviction).
 
 The contract: operators mark such intermediates with :func:`pin`; the
 registry wrapper calls :func:`release_pins` as each new query begins, so
@@ -15,10 +17,12 @@ DataFrames — the pins must survive until the caller materializes the
 result.
 
 Session-scoped artifacts (fitted TF-IDF tables, the IVF assignment,
-signature tables, encoded documents, PQ codes, the serving catalog) are
-NOT pins: each is cached once, under :func:`persist_right_sized`, and
-lives as long as the session (``artifacts.py`` memoizes them per
-session and corpus).
+the shingle index, the MinHash, SimHash, embedding-band and winnowing
+tables, encoded documents, PQ codes, the serving catalog) are NOT pins:
+each is cached once, under :func:`persist_right_sized`, and lives as
+long as the session (``artifacts.py`` memoizes them per session and
+corpus). Every dedup operator takes its index from there as a required
+argument and never builds one itself.
 """
 
 from __future__ import annotations

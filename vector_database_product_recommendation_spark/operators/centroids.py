@@ -24,10 +24,9 @@ def group_centroids(
     group_col: str,
     vec_col: str = "embedding",
     *,
-    normalize: bool = True,
     round_decimals: int | None = None,
 ) -> DataFrame:
-    """(group, vector) where vector = [l2-normalized] element-wise mean."""
+    """(group, vector) where vector = l2-normalized element-wise mean."""
     exploded = df.select(
         F.col(group_col).alias("group_key"),
         F.posexplode(F.col(vec_col)).alias("pos", "val"),
@@ -43,7 +42,7 @@ def group_centroids(
             F.transform("pm", lambda x: x["m"]).alias("vector"),
         )
     )
-    vec = l2_normalize("vector") if normalize else F.col("vector")
+    vec = l2_normalize("vector")
     if round_decimals is not None:
         vec = F.transform(vec, lambda x: F.round(x, round_decimals))
     return assembled.select(group_col, vec.alias("vector"))

@@ -36,7 +36,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.lifetime import pin
 from vector_database_product_recommendation_spark.functions.text import tokens_ws
 
 # MinHash permutation family: one md5-based hash per shingle, then k affine
@@ -121,20 +120,24 @@ def _doc_shingles_py(docs: DataFrame) -> DataFrame:
     return src.mapInPandas(kernel, f"doc_id {dtype}, shingles array<string>")
 
 
+def shingle_postings(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) inverted-index rows, one per distinct shingle of
+    each non-empty doc: the n-gram Jaccard index (artifacts.shingle_index
+    builds and caches it once per corpus)."""
+    return _doc_shingles_py(docs).select("doc_id", F.explode("shingles").alias("shingle"))
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame,
+    shingle_index: DataFrame,
     *,
     threshold: float = 0.2,
     sort: bool = True,
-    shingle_index: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard, found with an
-    inverted-index self-join (never an N^2 cross join).
-
-    ``shingle_index``: a prebuilt, persisted (doc_id, shingle) exploded
-    index over the same docs — the offline write-the-index-once
-    step (artifacts.shingle_index); when absent the index is built here
-    and pinned for this query's lifetime.
+    inverted-index self-join (never an N^2 cross join) over
+    ``shingle_index``, the (doc_id, shingle) rows of ``shingle_postings``.
+    The index feeds the df count, the sizes and both sides of the
+    self-join, so callers pass it cached (artifacts.shingle_index).
 
     Jaccard is computed over the capped shingle space (df <= MAX_DF, see
     module docstring). Returns (id_a, id_b, jaccard), id_a < id_b.
@@ -153,18 +156,13 @@ def ngram_jaccard_pairs(
     ``sort=False`` skips the presentation orderBy (a full range-exchange)
     for composite consumers (dedup_components) that immediately reshuffle.
     """
-    sh = shingle_index
-    if sh is None:
-        sh = pin(_doc_shingles_py(docs).select(
-            "doc_id", F.explode("shingles").alias("shingle")
-        ))  # query-local pin: feeds df-count and (via the cap join) sizes + self-join
     cold = (
-        sh.groupBy("shingle")
+        shingle_index.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") <= MAX_DF)
         .select("shingle")
     )
-    sh = sh.join(cold, "shingle")  # keep only cold shingles
+    sh = shingle_index.join(cold, "shingle")  # keep only cold shingles
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     shz = sh.join(sizes, "doc_id")  # index rows carry their doc's size
     a, b = shz.alias("a"), shz.alias("b")
@@ -211,8 +209,9 @@ def _minhash_np(shingles, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return ((a[:, None] * hs[None, :] + b[:, None]) % _MERSENNE_P).min(axis=1)
 
 
-def _with_minhash(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles, mh array<bigint>) via the Arrow kernel."""
+def minhash_table(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles, mh array<bigint>) via the Arrow kernel: the
+    MinHash-LSH index (artifacts.minhash_signature_table)."""
     a_const, b_const = _perm_constants(NUM_HASHES)
     a = np.asarray(a_const, dtype=np.int64)
     b = np.asarray(b_const, dtype=np.int64)
@@ -240,38 +239,26 @@ def _with_minhash(docs: DataFrame) -> DataFrame:
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Long-form MinHash signatures: (doc_id, seed, minhash)."""
-    sig = _with_minhash(docs)
+    sig = minhash_table(docs)
     return sig.select(
         "doc_id", F.posexplode("mh").alias("seed", "minhash")
     ).orderBy("doc_id", "seed")
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    *,
-    threshold: float = 0.2,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(signatures: DataFrame, *, threshold: float = 0.2) -> DataFrame:
     """MinHash-LSH near-dup pairs: band-bucket candidate join, then exact
     Jaccard verification on the candidates only.
 
-    ``signatures``: a prebuilt, persisted (doc_id, shingles, mh) table
-    over the same docs — the write-signatures-once step
-    (artifacts.minhash_signature_table); built and pinned here when
-    absent.
+    ``signatures``: the (doc_id, shingles, mh) rows of ``minhash_table``.
+    They feed the band self-join (2 scans) and both verify joins (2
+    more), so callers pass them cached (artifacts.minhash_signature_table,
+    the "write signatures once" step of any LSH pipeline).
 
     BANDS * rows == NUM_HASHES; a pair becomes a candidate iff some band of
     `rows` consecutive minhashes matches exactly. Returns
     (id_a, id_b, jaccard) for verified candidates, id_a < id_b.
     """
     rows = NUM_HASHES // BANDS
-    # Persist the signature table: it feeds the band self-join (2 scans) and
-    # both verify joins (2 more) — without it Spark re-runs the whole
-    # shingle+minhash pipeline per scan. At warehouse scale this is the
-    # "write signatures once" step of any LSH pipeline.
-    with_mh = signatures
-    if with_mh is None:
-        with_mh = pin(_with_minhash(docs))
     band_sigs = F.transform(
         F.sequence(F.lit(0), F.lit(BANDS - 1)),
         lambda j: F.md5(
@@ -283,7 +270,7 @@ def minhash_lsh_pairs(
             )
         ),
     )
-    banded = with_mh.select(
+    banded = signatures.select(
         "doc_id", F.posexplode(band_sigs).alias("band", "sig")
     )
     a, b = banded.alias("a"), banded.alias("b")
@@ -297,8 +284,8 @@ def minhash_lsh_pairs(
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    sa = with_mh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = with_mh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    sa = signatures.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    sb = signatures.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     return (
         cand.join(sa, "id_a")
@@ -346,31 +333,24 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return src.mapInPandas(kernel, f"doc_id {dtype}, simhash long").orderBy("doc_id")
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    *,
-    max_hamming: int = 8,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, blocked on 15-bit
-    signature chunks (a pair within Hamming d of a 60-bit signature must
-    agree exactly on at least one of 4 chunks whenever d < 4 — the
-    standard pigeonhole blocking; for d >= 4 it is a recall-bounded
+def simhash_pairs(signatures: DataFrame, *, max_hamming: int = 8) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance over the (doc_id,
+    simhash) rows of ``simhash_signatures``, which both sides of the
+    block self-join read (callers pass them cached:
+    artifacts.simhash_signature_table). Blocked on 15-bit signature
+    chunks (a pair within Hamming d of a 60-bit signature must agree
+    exactly on at least one of 4 chunks whenever d < 4 — the standard
+    pigeonhole blocking; for d >= 4 it is a recall-bounded
     approximation, stated in the docs)."""
     chunk_bits = _SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
-    # prebuilt (artifacts.simhash_signature_table) or pinned here: both
-    # sides of the block self-join read it
-    sig = signatures
-    if sig is None:
-        sig = pin(simhash_signatures(docs))
     chunks = F.array(
         *[
             F.shiftright(F.col("simhash"), chunk_bits * c).bitwiseAND(F.lit(mask))
             for c in range(SIMHASH_CHUNKS)
         ]
     )
-    blocked = sig.select(
+    blocked = signatures.select(
         "doc_id", "simhash", F.posexplode(chunks).alias("chunk_idx", "chunk")
     )
     a, b = blocked.alias("a"), blocked.alias("b")
@@ -457,9 +437,9 @@ def _rademacher_planes(n_planes: int, dim: int) -> np.ndarray:
 def embedding_band_signatures(emb: DataFrame) -> DataFrame:
     """(vid, band_idx, band_key) hyperplane band signatures — the
     write-signatures-once step of the embedding-LSH pipeline, row-local
-    (one BLAS matvec per Arrow batch, no shuffle). Unpersisted; callers
-    own the lifetime (pin inside one query, or the session artifact
-    cache)."""
+    (one BLAS matvec per Arrow batch, no shuffle). Unpersisted: the
+    session artifact cache owns its lifetime
+    (artifacts.embedding_band_table)."""
     r_bits = N_PLANES // N_BANDS
     dim = len(emb.select("embedding").first()[0])
     planes = _rademacher_planes(N_PLANES, dim)
@@ -489,18 +469,19 @@ def embedding_band_signatures(emb: DataFrame) -> DataFrame:
 
 
 def embedding_near_dup_lsh(
-    emb: DataFrame,
-    *,
-    threshold: float = 0.95,
-    banded: DataFrame | None = None,
+    emb: DataFrame, banded: DataFrame, *, threshold: float = 0.95
 ) -> DataFrame:
     """The 100-TB path for embedding near-dup: random-hyperplane (SimHash
     for vectors) blocking + exact verification of candidates only.
 
-    Each vector gets an N_PLANES-bit sign signature (one BLAS matvec
-    against the fixed Rademacher plane matrix, row-local); bands of
-    N_PLANES/N_BANDS bits become join keys; candidate pairs sharing any
-    band are verified with the exact round(dot, 6) >= threshold.
+    ``banded``: the (vid, band_idx, band_key) rows of
+    ``embedding_band_signatures`` over ``emb``: each vector's
+    N_PLANES-bit sign signature (one BLAS matvec against the fixed
+    Rademacher plane matrix, row-local) cut into bands of
+    N_PLANES/N_BANDS bits. The band self-join reads it twice, so callers
+    pass it cached (artifacts.embedding_band_table). Candidate pairs
+    sharing any band are verified with the exact round(dot, 6) >=
+    threshold.
 
     Precision is exact (every emitted pair is verified). Recall is the
     standard SRP-LSH bound: a pair at cosine s agrees per-plane with
@@ -508,13 +489,6 @@ def embedding_near_dup_lsh(
     near-dup thresholds (s >= 0.95, 4x4 bands) that is ~0.99; the exact
     all-pairs operator `embedding_near_dup` is its audit oracle on samples.
     """
-    if banded is None:
-        # built here and pinned: the band self-join reads it twice (the
-        # broadcast build side has no exchange to reuse, so without the
-        # cache the signature kernel — a full Arrow pass over the corpus —
-        # runs once per side). Pass a prebuilt, persisted table
-        # (artifacts.embedding_band_table) on serving paths.
-        banded = pin(embedding_band_signatures(emb))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -539,7 +513,7 @@ def embedding_near_dup_lsh(
     )
 
 
-def winnow_fingerprints_df(docs: DataFrame, *, sort: bool = True) -> DataFrame:
+def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
     """Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the
     MOSS algorithm): hash every k-gram (k = WINNOW_K) of the token stream,
     keep the MIN of each w-wide (w = WINNOW_W) window of k-gram hashes,
@@ -556,9 +530,8 @@ def winnow_fingerprints_df(docs: DataFrame, *, sort: bool = True) -> DataFrame:
     token stream; documents with fewer than w k-grams to the min k-gram
     hash (the first window truncates at the end, yielding exactly that).
 
-    Returns (doc_id, fp); sorted by (doc_id, fp) unless ``sort=False``
-    (composite consumers that immediately reshuffle skip the presentation
-    range-exchange).
+    Returns (doc_id, fp) unsorted: every consumer either reshuffles it
+    at once or adds its own presentation order.
     """
     src = docs.select("doc_id", "text")
     dtype = src.schema["doc_id"].dataType.simpleString()
@@ -587,8 +560,7 @@ def winnow_fingerprints_df(docs: DataFrame, *, sort: bool = True) -> DataFrame:
                 fps.extend(sorted_fps)
             yield pd.DataFrame({"doc_id": ids, "fp": fps})
 
-    out = src.mapInPandas(kernel, f"doc_id {dtype}, fp long")
-    return out.orderBy("doc_id", "fp") if sort else out
+    return src.mapInPandas(kernel, f"doc_id {dtype}, fp long")
 
 
 def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
@@ -719,19 +691,19 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def dedup_components(docs: DataFrame, *, shingle_index: DataFrame | None = None) -> DataFrame:
-    """End-to-end fuzzy dedup: n-gram Jaccard pairs (Jaccard >= 0.5) ->
-    connected components -> canonical keep/drop. The full pipeline a pretraining corpus needs:
+def dedup_components(docs: DataFrame, shingle_index: DataFrame) -> DataFrame:
+    """End-to-end fuzzy dedup: n-gram Jaccard pairs (Jaccard >= 0.5) over
+    ``shingle_index`` (``shingle_postings`` of ``docs``) -> connected
+    components -> canonical keep/drop. The full pipeline a pretraining corpus needs:
     pair discovery gives LOCAL similarity, components give GLOBAL clusters
     (A~B, B~C => {A,B,C} even when A!~C), min-id is kept as canonical.
 
     Returns (doc_id, component_id, is_kept) sorted by doc_id.
     """
     pairs = ngram_jaccard_pairs(
-        docs,
+        shingle_index,
         threshold=0.5,
         sort=False,  # edges feed a shuffle immediately; the sort is waste
-        shingle_index=shingle_index,
     )
     comp = connected_components(docs.select("doc_id"), pairs)
     return comp.select(

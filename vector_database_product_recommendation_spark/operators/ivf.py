@@ -47,18 +47,18 @@ MAX_POINTS_PER_CENTROID = 256
 MAX_TRAIN_BYTES = 2 << 30
 # rows per Lloyd assignment block (FAISS chunks the same way)
 ASSIGN_BLOCK = 65_536
+# the coarse quantizer's k-means seed and iteration count: a coarse
+# quantizer converges to useful centroids in a handful of iterations, and
+# recall is measured against the exact oracle anyway
+KMEANS_SEED = 42
+KMEANS_ITERS = 10
 
 
-def train_kmeans_centroids(
-    emb: DataFrame,
-    nlist: int | None = None,
-    *,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """AN2: (cluster_id, centroid array<double>) — seeded Lloyd on a
-    BOUNDED sample, FAISS-style. ``nlist`` defaults to max(2, ⌊√n⌋).
+def train_kmeans_centroids(emb: DataFrame, nlist: int | None = None) -> DataFrame:
+    """AN2: (cluster_id, centroid array<double>) of the ``embedding``
+    column — Lloyd on a BOUNDED sample, FAISS-style, seeded with
+    ``KMEANS_SEED`` for ``KMEANS_ITERS`` iterations at most. ``nlist``
+    defaults to max(2, ⌊√n⌋).
 
     FAISS's own IVF training subsamples to Clustering.max_points_per_centroid
     (default 256) points per centroid before running k-means; the reference's
@@ -87,7 +87,7 @@ def train_kmeans_centroids(
     metamorphic test; clustering quality only shifts the recall/nprobe
     trade-off, which tests/test_ivf.py bounds.
     """
-    n, d = _corpus_shape(emb, vec_col)
+    n, d = _corpus_shape(emb)
     if nlist is None:
         nlist = max(2, int(n**0.5))
     ppc = MAX_POINTS_PER_CENTROID
@@ -97,32 +97,32 @@ def train_kmeans_centroids(
     if bytes_per_elem * d * ppc * nlist > MAX_TRAIN_BYTES:
         ppc = max(16, MAX_TRAIN_BYTES // (bytes_per_elem * d * nlist))
     if bytes_per_elem * d * ppc * nlist > MAX_TRAIN_BYTES:
-        return _mllib_centroids(emb, nlist, vec_col=vec_col, seed=seed, max_iter=max_iter)
+        return _mllib_centroids(emb, nlist)
     bound = max(nlist * ppc, nlist + 1)
-    x = _sample_matrix(emb, vec_col, n, d, bound, seed=seed, dtype=np.float32)
-    cents = _lloyd(x, nlist, iters=max_iter, seed=seed)
+    x = _sample_matrix(emb, n, d, bound, seed=KMEANS_SEED, dtype=np.float32)
+    cents = _lloyd(x, nlist, iters=KMEANS_ITERS, seed=KMEANS_SEED)
     out = [(i, [float(v) for v in c]) for i, c in enumerate(cents)]
     return emb.sparkSession.createDataFrame(
         out, "cluster_id int, centroid array<double>"
     )
 
 
-def _corpus_shape(emb: DataFrame, vec_col: str) -> tuple[int, int]:
+def _corpus_shape(emb: DataFrame) -> tuple[int, int]:
     """(rows, width) of the corpus in one job. An empty corpus raises
     here, before any sample job."""
-    n, d = emb.agg(F.count(F.lit(1)), F.first(F.size(vec_col), ignorenulls=True)).first()
+    n, d = emb.agg(F.count(F.lit(1)), F.first(F.size("embedding"), ignorenulls=True)).first()
     if not n:
         raise ValueError("cannot train k-means on an empty corpus")
     return int(n), int(d)
 
 
 def _sample_matrix(
-    emb: DataFrame, vec_col: str, n: int, d: int, bound: int, *, seed: int, dtype
+    emb: DataFrame, n: int, d: int, bound: int, *, seed: int, dtype
 ) -> np.ndarray:
     """At most ``bound`` of the corpus's ``n`` vectors of width ``d`` as one
     driver-side (rows, d) matrix of ``dtype``: the one k-means training
     sample transfer."""
-    sample = emb.select(vec_col)
+    sample = emb.select("embedding")
     if n > bound:
         # seeded Bernoulli sample with slack, trimmed to the bound: one
         # narrow scan, deterministic for a fixed input partitioning. (The
@@ -139,7 +139,7 @@ def _sample_matrix(
     n_rows = tbl.num_rows
     x = np.empty((n_rows, d), dtype=dtype)
     pos = 0
-    for chunk in tbl.column(vec_col).chunks:
+    for chunk in tbl.column("embedding").chunks:
         flat = chunk.flatten()  # offset-adjusted float64 values array
         m = np.asarray(flat).reshape(-1, d)
         x[pos : pos + len(m)] = m  # cast into place
@@ -198,17 +198,15 @@ def _lloyd(x: np.ndarray, k: int, *, iters: int, seed: int) -> np.ndarray:
     return cents
 
 
-def _mllib_centroids(
-    emb: DataFrame, nlist: int, *, vec_col: str, seed: int, max_iter: int
-) -> DataFrame:
+def _mllib_centroids(emb: DataFrame, nlist: int) -> DataFrame:
     """Distributed KMeans escape hatch for nlist too large to train
     driver-side (the sample alone would blow ``MAX_TRAIN_BYTES``). One full
     corpus pass per iteration — the price of never collecting vectors."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    vecs = emb.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=nlist, seed=seed, maxIter=max_iter).fit(vecs)
+    vecs = emb.select(array_to_vector(F.col("embedding")).alias("features"))
+    model = KMeans(k=nlist, seed=KMEANS_SEED, maxIter=KMEANS_ITERS).fit(vecs)
     spark = emb.sparkSession
     cents = spark.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())],
@@ -217,13 +215,9 @@ def _mllib_centroids(
     return cents
 
 
-def assign_clusters(
-    emb: DataFrame,
-    centroids: DataFrame,
-    *,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """AN3: append `cluster_id` = argmax-dot centroid, row-local.
+def assign_clusters(emb: DataFrame, centroids: DataFrame) -> DataFrame:
+    """AN3: append `cluster_id` = argmax-dot centroid of the `embedding`
+    column, row-local.
 
     The centroid matrix ships in the task closure (nlist x d floats); each
     Arrow batch does one matmul + argmax. No shuffle of the corpus.
@@ -241,7 +235,7 @@ def assign_clusters(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             best = cids[np.argmax(mat @ cmat.T, axis=1)]
             pdf = pdf.assign(cluster_id=best.astype(np.int32))
             yield pdf[out_cols]
@@ -251,13 +245,11 @@ def assign_clusters(
 
 def build_ivf_index(emb: DataFrame, *, nlist: int | None = None) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned): the one IVF index builder. Trains the coarse
-    quantizer (seed 42, 10 Lloyd iterations: a coarse quantizer converges
-    to useful centroids in a handful of iterations, and recall is measured
-    against the exact oracle anyway), assigns the corpus and caches the
-    assignment under ``lifetime.persist_right_sized``. Not memoized: its
+    quantizer (``train_kmeans_centroids``), assigns the corpus and caches
+    the assignment under ``lifetime.persist_right_sized``. Not memoized: its
     callers keep one index per corpus (``artifacts.ivf_index`` per session
     and corpus, ``api.ProductSearchEngine`` per engine)."""
-    cents = train_kmeans_centroids(emb, nlist, seed=42, max_iter=10)
+    cents = train_kmeans_centroids(emb, nlist)
     return cents, persist_right_sized(assign_clusters(emb, cents))
 
 

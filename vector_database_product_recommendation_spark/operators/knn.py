@@ -112,19 +112,6 @@ def _exact_scorer(q_mat: np.ndarray):
     return score_batch
 
 
-def _scored(pdf, q_ids, score_batch, corpus_id: str, exclude_self: bool):
-    """(ids, scores) of one Arrow batch: ``score_batch``'s (rows x queries)
-    matrix with every row's score against a query of the same id set to
-    ``-inf`` under ``exclude_self``: the reference's item-to-item
-    self-exclusion (app.py:227-228), a filter BEFORE the limit (SURVEY.md
-    section 2.9.4), not a k+1 overfetch."""
-    ids = pdf[corpus_id].to_numpy()
-    scores = score_batch(pdf)
-    if exclude_self:
-        scores[ids[:, None] == q_ids[None, :]] = -np.inf
-    return ids, scores
-
-
 def topk_scan(
     frame: DataFrame,
     queries: DataFrame,
@@ -174,7 +161,13 @@ def topk_scan(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids, scores = _scored(pdf, q_ids, score_batch, corpus_id, exclude_self)
+            ids = pdf[corpus_id].to_numpy()
+            scores = score_batch(pdf)
+            if exclude_self:
+                # the reference's item-to-item self-exclusion (app.py:227-228):
+                # a filter BEFORE the limit (SURVEY.md section 2.9.4), not a
+                # k+1 overfetch
+                scores[ids[:, None] == q_ids[None, :]] = -np.inf
             keep = ~np.isneginf(scores)
             n = len(ids)
             if n > k:
@@ -227,7 +220,7 @@ def exact_knn(
 
     Returns (query_id, neighbor_id, score, rank, *payload), rank 1..k per
     query. ``exclude_self`` drops corpus rows whose id equals the query id
-    (``_scored``).
+    (``topk_scan``).
 
     ``query_rows``: pre-collected (query_id, query_vec) rows — callers
     reusing one query batch across calls (the serving loop; the reference
@@ -256,19 +249,19 @@ def exact_scores(
     corpus: DataFrame,
     queries: DataFrame,
     *,
+    query_rows: list,
     corpus_id: str = "vec_id",
-    exclude_self: bool = False,
-    query_rows: list | None = None,
 ) -> DataFrame:
     """Score EVERY corpus row against the query batch — no top-k, no window.
 
     The blend path of hybrid search (app.py:202-210) needs all candidate
     scores, not a ranking; routing it through exact_knn with a sentinel
     k would drag O(N) rows through the per-query rank window (a single
-    serialized partition at scale). This is exact_knn's scorer and
-    exclusion rule with no selection: output stays partition-local, zero
-    shuffles. Returns (query_id, neighbor_id, score). ``query_rows`` as in
-    exact_knn.
+    serialized partition at scale). This is exact_knn's scorer with no
+    selection: output stays partition-local, zero shuffles. Returns
+    (query_id, neighbor_id, score). ``query_rows``: the collected
+    (query_id, query_vec) rows of ``queries``, which supplies only the
+    query_id type.
     """
     q_ids, q_mat = _query_batch(queries, query_rows)
     score_batch = _exact_scorer(q_mat)
@@ -277,11 +270,15 @@ def exact_scores(
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids, scores = _scored(pdf, q_ids, score_batch, corpus_id, exclude_self)
+            ids = pdf[corpus_id].to_numpy()
+            scores = score_batch(pdf)
             # query-major: all of query 0's rows, then query 1's…
-            cols, rows = np.nonzero(~np.isneginf(scores.T))
             yield pd.DataFrame(
-                {"query_id": q_ids[cols], "neighbor_id": ids[rows], "score": scores[rows, cols]}
+                {
+                    "query_id": np.repeat(q_ids, len(ids)),
+                    "neighbor_id": np.tile(ids, len(q_ids)),
+                    "score": scores.T.ravel(),
+                }
             )
 
     frame = corpus.select(corpus_id, "embedding")
@@ -317,21 +314,16 @@ def item_to_item(
     )
 
 
-def pairwise_similarity(
-    items: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_decimals: int = 6,
-) -> DataFrame:
+def pairwise_similarity(items: DataFrame) -> DataFrame:
     """J5 (app.py:348-354): similarity matrix for a small selected set
-    (reference allows 2-4 products). Long form (id_a, id_b, score) including
-    the diagonal, a < b ordering not applied so the square matrix can be
+    (reference allows 2-4 products) of (vec_id, embedding) rows. Long form
+    (id_a, id_b, score) including the diagonal, scores rounded to 6
+    decimals, a < b ordering not applied so the square matrix can be
     pivoted client-side exactly like `V @ V.T`."""
-    a = items.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    b = items.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    a = items.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    b = items.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     return (
         a.crossJoin(F.broadcast(b))
-        .select("id_a", "id_b", F.round(dot("__va", "__vb"), round_decimals).alias("score"))
+        .select("id_a", "id_b", F.round(dot("__va", "__vb"), 6).alias("score"))
         .orderBy("id_a", "id_b")
     )

@@ -68,12 +68,10 @@ def train_pq(emb: DataFrame, *, m: int = 8, ksub: int = 16) -> list[np.ndarray]:
     distinct sample rows takes those rows as its codebook: zero
     distortion, the lossless regime the exactness test exploits.
     """
-    n, d = _corpus_shape(emb, "embedding")
+    n, d = _corpus_shape(emb)
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
-    x = _sample_matrix(
-        emb, "embedding", n, d, MAX_POINTS_PER_CENTROID * ksub, seed=42, dtype=np.float64
-    )
+    x = _sample_matrix(emb, n, d, MAX_POINTS_PER_CENTROID * ksub, seed=42, dtype=np.float64)
     dsub = d // m
     books = []
     for j in range(m):

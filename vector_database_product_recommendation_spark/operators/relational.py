@@ -205,22 +205,22 @@ def format_results(
     df: DataFrame,
     show_cols: list[str],
     *,
-    preview_col: str | None = None,
+    preview_col: str,
     preview_len: int = 160,
-    head: int | None = None,
+    head: int,
 ) -> DataFrame:
     """P5/P8/K4 (app.py:243-273): dynamic column projection with a
-    truncated preview column (substr + '...') and an optional head-n slice.
+    truncated preview column (substr + '...') and a head-n slice.
     Columns requested but absent are skipped, mirroring the reference's
-    existence-checked show_cols."""
+    existence-checked show_cols; so is an absent ``preview_col``."""
     cols = [c for c in show_cols if c in df.columns]
     out = df.select(*cols)
-    if preview_col and preview_col in df.columns:
+    if preview_col in df.columns:
         out = out.withColumn(
             f"{preview_col}_preview",
             F.concat(F.substring(F.col(preview_col), 1, preview_len), F.lit("...")),
         ).drop(preview_col)
-    return out.limit(head) if head is not None else out
+    return out.limit(head)
 
 
 def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,6 +35,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from vector_database_product_recommendation_spark.functions.vectors import dot
+
 
 # the top REFINE_FACTOR * k approximate candidates are rescored exactly
 REFINE_FACTOR = 4
@@ -100,11 +102,6 @@ def sq8_knn(emb: DataFrame, query_id: int = 7, k: int = 20) -> DataFrame:
         )
         return mn_i + (code + 0.5) * (mx_i - mn_i) / 256.0
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda u, v: u * v), F.lit(0.0), lambda acc, v: acc + v
-        )
-
     scored = (
         emb.filter(F.col("vec_id") != query_id)
         .crossJoin(F.broadcast(arrs))
@@ -113,7 +110,7 @@ def sq8_knn(emb: DataFrame, query_id: int = 7, k: int = 20) -> DataFrame:
             "vec_id",
             F.col("embedding").alias("__v"),
             "qv",
-            F.round(_dot(F.transform(F.col("embedding"), _xhat), F.col("qv")), 6).alias(
+            F.round(dot(F.transform(F.col("embedding"), _xhat), "qv"), 6).alias(
                 "approx_score"
             ),
         )
@@ -122,7 +119,7 @@ def sq8_knn(emb: DataFrame, query_id: int = 7, k: int = 20) -> DataFrame:
     return (
         cand.select(
             "vec_id",
-            F.round(_dot(F.col("__v").cast("array<double>"), F.col("qv")), 6).alias("score"),
+            F.round(dot("__v", "qv"), 6).alias("score"),
             "approx_score",
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))

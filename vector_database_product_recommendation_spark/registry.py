@@ -475,11 +475,7 @@ ORDER BY id_a, id_b
 def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.artifacts import shingle_index
 
-    return D.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=0.5,
-        shingle_index=shingle_index(spark, sf_dir),
-    )
+    return D.ngram_jaccard_pairs(shingle_index(spark, sf_dir), threshold=0.5)
 
 
 # Permutation constants mirror operators/dedup.py (_perm_constants): one
@@ -545,11 +541,7 @@ def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature_table,
     )
 
-    return D.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=0.5,
-        signatures=minhash_signature_table(spark, sf_dir),
-    )
+    return D.minhash_lsh_pairs(minhash_signature_table(spark, sf_dir), threshold=0.5)
 
 
 _SIMHASH_CTE = f"""
@@ -599,11 +591,7 @@ def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_signature_table,
     )
 
-    return D.simhash_pairs(
-        load_table(spark, sf_dir, "documents"),
-        max_hamming=3,
-        signatures=simhash_signature_table(spark, sf_dir),
-    )
+    return D.simhash_pairs(simhash_signature_table(spark, sf_dir), max_hamming=3)
 
 
 _EMB_NEAR_DUP_ORACLE = """
@@ -652,8 +640,7 @@ def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.artifacts import shingle_index
 
     return D.dedup_components(
-        load_table(spark, sf_dir, "documents"),
-        shingle_index=shingle_index(spark, sf_dir),
+        load_table(spark, sf_dir, "documents"), shingle_index(spark, sf_dir)
     )
 
 
@@ -1156,8 +1143,8 @@ def _dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return D.embedding_near_dup_lsh(
         load_table(spark, sf_dir, "embeddings"),
+        embedding_band_table(spark, sf_dir),
         threshold=0.4,
-        banded=embedding_band_table(spark, sf_dir),
     )
 
 
