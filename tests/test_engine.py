@@ -346,6 +346,45 @@ def test_query_width_is_checked_before_any_spark_work(jobs_run_by, engine, spark
             assert jobs_run_by(request, f"width-{path}-{mode}") == 0
 
 
+# requests under the reference's k and nprobe sliders, which start at 1:
+# (request, the value its error names)
+OUT_OF_RANGE = {
+    "E1_k0": (lambda e, pid: e.search_products("fire tablet", k=0), "k must be at least 1, got 0"),
+    "E1_hybrid_k0": (
+        lambda e, pid: e.search_products("fire tablet", k=0, mode="hybrid"),
+        "k must be at least 1, got 0",
+    ),
+    "E2_k0": (lambda e, pid: e.search_by_product_id(pid, k=0), "k must be at least 1, got 0"),
+    "E3_k0": (lambda e, pid: e.ann_review_search(11, k=0), "k must be at least 1, got 0"),
+    "E3_nprobe0": (
+        lambda e, pid: e.ann_review_search(11, k=K, nprobe=0),
+        "nprobe must be at least 1, got 0",
+    ),
+    "E3_nprobe-1": (
+        lambda e, pid: e.ann_review_search(11, k=K, nprobe=-1),
+        "nprobe must be at least 1, got -1",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(OUT_OF_RANGE))
+def test_out_of_range_k_and_nprobe_raise_before_any_spark_work(
+    jobs_run_by, engine, spark_engine, ref_fixture, case
+):
+    """A k or nprobe below 1 raises ValueError naming it on either path,
+    running no job: not an empty reply, a failed task or a probe of all
+    lists but one."""
+    request, message = OUT_OF_RANGE[case]
+    pid = str(ref_fixture.ids[0])
+    for path, e in (("driver", engine), ("spark", spark_engine)):
+
+        def call():
+            with pytest.raises(ValueError, match=f"^{re.escape(message)}$"):
+                request(e, pid)
+
+        assert jobs_run_by(call, f"range-{case}-{path}") == 0
+
+
 def test_reviews_split_over_part_files_mint_the_same_ids(spark, ref_fixture, tmp_path):
     """``load_reviews`` over the fixture's reviews.csv cut into two part
     files mints the single file's review_idx for every row; both frames

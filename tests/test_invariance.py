@@ -46,8 +46,8 @@ def test_simhash_partition_invariant(spark, sf_dir):
 
 def test_minhash_lsh_partition_invariant(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    a = _rows(minhash_lsh_pairs(minhash_table(docs.repartition(2)), threshold=0.5))
-    b = _rows(minhash_lsh_pairs(minhash_table(docs.repartition(9)), threshold=0.5))
+    a = _rows(minhash_lsh_pairs(minhash_table(docs.repartition(2))))
+    b = _rows(minhash_lsh_pairs(minhash_table(docs.repartition(9))))
     assert a == b
 
 

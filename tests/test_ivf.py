@@ -18,6 +18,7 @@ from vector_database_product_recommendation_spark.functions.embed import (
     encode_documents,
     hash_embed_py,
 )
+from vector_database_product_recommendation_spark.operators import ivf
 from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff
 from vector_database_product_recommendation_spark.operators.ivf import (
     assign_clusters,
@@ -33,6 +34,15 @@ from vector_database_product_recommendation_spark.sources.tables import load_tab
 NLIST = 7
 
 
+@pytest.fixture(scope="module", autouse=True)
+def fixed_nlist():
+    """Every index here has NLIST lists, whatever the corpus size, so a
+    probe of 2 lists is a partial probe and one of NLIST a full one."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ivf, "_nlist", lambda n: NLIST)
+        yield
+
+
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").cache()
@@ -40,7 +50,7 @@ def emb(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def ivf_parts(emb):
-    cents = train_kmeans_centroids(emb, NLIST)
+    cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents).cache()
     return cents, assigned
 
@@ -81,22 +91,20 @@ def test_assign_clusters_covers_corpus(emb, ivf_parts):
 
 def test_train_on_empty_corpus_names_it(emb):
     with pytest.raises(ValueError, match="empty corpus"):
-        train_kmeans_centroids(emb.limit(0), NLIST)
+        train_kmeans_centroids(emb.limit(0))
 
 
 def test_mllib_fallback_past_the_byte_budget(emb, monkeypatch):
     """A sample past the driver byte budget trains with MLlib KMeans."""
-    from vector_database_product_recommendation_spark.operators import ivf
-
     monkeypatch.setattr(ivf, "MAX_TRAIN_BYTES", 1)
-    rows = train_kmeans_centroids(emb, 5).orderBy("cluster_id").collect()
+    rows = train_kmeans_centroids(emb).orderBy("cluster_id").collect()
     d = len(emb.first()["embedding"])
-    assert [r["cluster_id"] for r in rows] == list(range(5))
+    assert [r["cluster_id"] for r in rows] == list(range(NLIST))
     assert all(len(r["centroid"]) == d for r in rows)
 
 
 def test_ann_tradeoff_shape_and_monotonicity(emb):
-    index = build_ivf_index(emb, nlist=NLIST)
+    index = build_ivf_index(emb)
     rows = ann_tradeoff(emb, index, n_queries=8, k=5, nprobes=(1, NLIST)).collect()
     assert [r["nprobe"] for r in rows] == [1, NLIST]
     for r in rows:
@@ -166,15 +174,14 @@ def test_ann_tradeoff_exact_at_full_probe(spark, sf_dir):
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    nlist = 8
     out = {
         r["nprobe"]: r
         for r in ann_tradeoff(
-            emb, build_ivf_index(emb, nlist=nlist), n_queries=16, k=5, nprobes=(1, nlist)
+            emb, build_ivf_index(emb), n_queries=16, k=5, nprobes=(1, NLIST)
         ).collect()
     }
-    assert out[nlist]["precision_at_k"] == 1.0
-    assert out[nlist]["mrr"] == 1.0
+    assert out[NLIST]["precision_at_k"] == 1.0
+    assert out[NLIST]["mrr"] == 1.0
     assert out[1]["precision_at_k"] <= 1.0
 
 
@@ -204,7 +211,7 @@ def plan_of(df) -> str:
 
 def test_ivf_knn_single_partition_elides_merge_window(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").coalesce(1)
-    cents = train_kmeans_centroids(emb, 5)
+    cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents)
     plan = plan_of(ivf_knn(assigned, cents, _queries(emb), 5, nprobe=2))
     # kernel emits task-local ranks; a one-task pool needs no merge window
@@ -214,7 +221,7 @@ def test_ivf_knn_single_partition_elides_merge_window(spark, sf_dir):
 
 def test_ivf_knn_multi_partition_matches_single(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5)
+    cents = train_kmeans_centroids(emb)
     one = assign_clusters(emb.coalesce(1), cents)
     many = assign_clusters(emb.repartition(7), cents)
     a = ivf_knn(one, cents, _queries(emb), 5, nprobe=3).collect()
@@ -224,7 +231,7 @@ def test_ivf_knn_multi_partition_matches_single(spark, sf_dir):
 
 def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5)
+    cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents)
     q = _queries(emb)
     rows = cents.orderBy("cluster_id").collect()
@@ -235,7 +242,7 @@ def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
 
 def test_ivf_knn_store_probe_statically_pruned(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5)
+    cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents)
     path = str(tmp_path / "store")
     write_ivf_store(assigned, path)

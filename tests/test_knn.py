@@ -234,7 +234,7 @@ def test_exact_scores_full_matrix_no_selection(spark, emb):
     from vector_database_product_recommendation_spark.operators.knn import exact_scores
 
     q = _queries(emb, 3)
-    out = exact_scores(emb, q, query_rows=q.collect()).collect()
+    out = exact_scores(emb, q, query_rows=q.collect(), corpus_id="vec_id").collect()
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows])
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
@@ -261,11 +261,12 @@ def _numpy_topk(rows, queries, k, exclude_self):
     return out
 
 
-def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb):
+def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb, monkeypatch):
     """With Arrow batches of a few rows, each scan task prunes every batch
     (the np.partition threshold) before its one ranking: the exact, IVF and
     PQ kernels return the rows of a one-batch run, and exact and full-probe
     IVF return numpy's."""
+    from vector_database_product_recommendation_spark.operators import ivf
     from vector_database_product_recommendation_spark.operators.ivf import (
         assign_clusters,
         ivf_knn,
@@ -278,7 +279,8 @@ def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb):
     )
 
     corpus = emb.repartition(3)
-    cents = train_kmeans_centroids(emb, 5)
+    monkeypatch.setattr(ivf, "_nlist", lambda n: 5)  # nprobe=5 probes every list
+    cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(corpus, cents)
     books = train_pq(emb)
     codes = encode_pq(corpus, books)

@@ -83,7 +83,7 @@ def test_exact_knn_single_partition_elides_merge_window(spark, sf_dir):
 @pytest.fixture(scope="module")
 def ivf_store(spark, sf_dir, tmp_path_factory):
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb, 5)
+    cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents)
     path = str(tmp_path_factory.mktemp("ivf") / "store")
     write_ivf_store(assigned, path)

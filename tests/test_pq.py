@@ -32,21 +32,23 @@ def _assert_pq_equals_exact(emb, books):
     assert g == w
 
 
-def test_pq_lossless_regime_equals_exact(spark):
+def test_pq_lossless_regime_equals_exact(spark, monkeypatch):
+    from vector_database_product_recommendation_spark.operators import pq
+
     emb = load_table(spark, SF_DIR, "embeddings")
-    n = emb.count()
-    books = train_pq(emb, m=8, ksub=n + 10)  # every subvector its own centroid
+    monkeypatch.setattr(pq, "KSUB", emb.count() + 10)  # every subvector its own centroid
+    books = train_pq(emb)
     _assert_pq_equals_exact(emb, books)
 
 
 def test_pq_lossless_regime_with_more_rows_than_centroids(spark):
-    # 40 rows, 5 distinct vectors: more rows than ksub, yet ksub covers
+    # 40 rows, 5 distinct vectors: more rows than KSUB, yet KSUB covers
     # every distinct subvector, so the codebooks are those subvectors
     base = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 5)
     emb = base.crossJoin(spark.range(8).withColumnRenamed("id", "copy")).select(
         (F.col("vec_id") * 8 + F.col("copy")).alias("vec_id"), "embedding"
     )
-    books = train_pq(emb, m=8, ksub=16)
+    books = train_pq(emb)
     assert all(len(b) == 5 for b in books)
     _assert_pq_equals_exact(emb, books)
 
@@ -59,7 +61,7 @@ def test_pq_train_on_empty_corpus_names_it(spark):
 
 def test_pq_refine_recall_bound(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    books = train_pq(emb, m=8, ksub=16)
+    books = train_pq(emb)
     codes = encode_pq(emb, books)
     got = pq_knn(codes, books, _queries(emb), 10, emb=emb, refine_factor=8)
     want = exact_knn(emb, _queries(emb), 10)
@@ -73,7 +75,7 @@ def test_pq_refine_recall_bound(spark):
 
 def test_pq_codes_compress_and_bound(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    books = train_pq(emb, m=8, ksub=16)
+    books = train_pq(emb)
     codes = encode_pq(emb, books)
     rows = codes.collect()
     assert len(rows) == emb.count()
@@ -103,7 +105,7 @@ def test_sq8_knn_matches_exact_top1(spark, sf_dir):
 
 def test_pq_knn_empty_query_batch_raises(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    books = train_pq(emb, m=8, ksub=16)
+    books = train_pq(emb)
     codes = encode_pq(emb, books)
     empty = _queries(emb).limit(0)
     for kw in ({}, {"emb": emb}):

@@ -71,9 +71,8 @@ def test_pairwise_matrix_matches_numpy(ref_emb, ref_mat):
 
 
 def test_ann_tradeoff_on_reference_reviews(spark, ref):
-    """E3 on the review vectors (1578 in the reference, nlist=39 from the
-    shipped IVF header; the seeded catalog takes max(2, ⌊√n⌋)), nprobe
-    sweep — recall must land in the reference's regime and be monotone to
+    """E3 on the review vectors (1578 in the reference, whose max(2, ⌊√n⌋)
+    index lists are the shipped IVF header's nlist=39), nprobe sweep — recall must land in the reference's regime and be monotone to
     exactness."""
     from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff
     from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
@@ -83,14 +82,14 @@ def test_ann_tradeoff_on_reference_reviews(spark, ref):
         [(i, r.tolist()) for i, r in enumerate(mat)],
         "vec_id int, embedding array<double>",
     ).cache()
-    nlist = 39 if len(mat) == 1578 else max(2, int(len(mat) ** 0.5))
+    nlist = max(2, int(len(mat) ** 0.5))
     # the reference's sweep 1, 5, 20, 39 scaled to nlist
     mid, hi = max(1, round(nlist * 5 / 39)), round(nlist * 20 / 39)
     nprobes = tuple(sorted({1, mid, hi, nlist}))
     rows = {
         r["nprobe"]: r
         for r in ann_tradeoff(
-            emb, build_ivf_index(emb, nlist=nlist), n_queries=64, k=10, nprobes=nprobes
+            emb, build_ivf_index(emb), n_queries=64, k=10, nprobes=nprobes
         ).collect()
     }
     # nprobe == nlist is exact

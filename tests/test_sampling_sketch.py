@@ -19,8 +19,8 @@ def test_uniform_sample_seeded_and_subset(spark):
     """One fraction for every stratum: a uniform seeded sample."""
     events = load_table(spark, SF_DIR, "events")
     frac = {"click": 0.2, "view": 0.2, "purchase": 0.2, "error": 0.2, "signup": 0.2}
-    s1 = stratified_sample(events, "event_type", frac, seed=7)
-    s2 = stratified_sample(events, "event_type", frac, seed=7)
+    s1 = stratified_sample(events, "event_type", frac)
+    s2 = stratified_sample(events, "event_type", frac)
     assert s1.exceptAll(s2).isEmpty() and s2.exceptAll(s1).isEmpty()  # deterministic
     assert s1.exceptAll(events).isEmpty()  # subset
     n, total = s1.count(), events.count()
@@ -30,7 +30,7 @@ def test_uniform_sample_seeded_and_subset(spark):
 def test_stratified_sample_respects_fractions(spark):
     events = load_table(spark, SF_DIR, "events")
     frac = {"click": 0.5, "view": 0.1}
-    s = stratified_sample(events, "event_type", frac, seed=11)
+    s = stratified_sample(events, "event_type", frac)
     base = {r["event_type"]: r["n"] for r in
             events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()}
     got = {r["event_type"]: r["n"] for r in

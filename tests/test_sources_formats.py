@@ -61,14 +61,13 @@ def test_csv_reader_needs_no_inference_job(spark, tmp_path):
     assert before == after
 
 
-def test_orc_roundtrip_row_identity(spark, sf_dir):
+def test_orc_roundtrip_row_identity(spark, sf_dir, tmp_path):
     from vector_database_product_recommendation_spark.sources import formats as FMT
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path, done = FMT._mirror_dir("orc_emb_identity", sf_dir)
-    if not done:
-        FMT.write_orc(emb, path)
+    path = str(tmp_path / "orc_emb")
+    FMT.write_orc(emb, path)
     back = FMT.read_orc(spark, path)
     assert back.schema == emb.schema
     assert back.count() == emb.count()

@@ -38,11 +38,13 @@ def test_multimodal_metadata_pushdown_filter(spark, sf_dir):
     assert 0 < small.count() < media.count()
 
 
-def test_resize_payload_truncates_and_pads(spark, sf_dir):
-    from vector_database_product_recommendation_spark.operators.multimodal import resize_payload
+def test_resize_payload_truncates_and_pads(spark, sf_dir, monkeypatch):
+    from vector_database_product_recommendation_spark.operators import multimodal
 
+    # 64 bytes: under some payloads (truncated), over others (padded)
+    monkeypatch.setattr(multimodal, "TARGET_BYTES", 64)
     media = attach_payload(load_table(spark, sf_dir, "documents"))
-    out = {r["doc_id"]: r for r in resize_payload(media, target_bytes=64).collect()}
+    out = {r["doc_id"]: r for r in multimodal.resize_payload(media).collect()}
     src = {r["doc_id"]: bytes(r["payload"]) for r in media.collect()}
     assert set(out) == set(src)
     for i, r in out.items():
@@ -59,7 +61,7 @@ def test_audio_frames_cover_payload(spark, sf_dir):
     )
 
     media = attach_payload(load_table(spark, sf_dir, "documents"))
-    frames = audio_frame_windows(media, frame_bytes=100, hop_bytes=50).collect()
+    frames = audio_frame_windows(media).collect()
     by_doc: dict[int, list] = {}
     for r in frames:
         by_doc.setdefault(r["doc_id"], []).append(r)

@@ -14,7 +14,14 @@ reaches. An AST walk (so a docstring mention is not a caller) checks:
   branch (build an index here, collect the query batch here) only tests
   reach is a second implementation, so the caller's value becomes
   required. A call that forwards ``*args`` or ``**kwargs`` counts as
-  leaving it unset.
+  leaving it unset;
+- every defaulted parameter of those takes at least two values in the
+  non-test calls: an option the traffic sets to one value is a constant
+  (a tuning value, threshold or fixed column name) or a required
+  argument (a request input). A literal counts by its source text and a
+  call that leaves the parameter unset as its default; a name, any other
+  expression or a forwarded ``*args``/``**kwargs`` carries whatever its
+  own caller passes, so it counts as a value of its own beside the rest.
 
 ``KEPT`` names each exception and why it stays.
 """
@@ -48,10 +55,13 @@ KEPT = {
     "passes one; the default is the catalog's width",
     "api.ProductSearchEngine.__init__.embedding_dim": "from_reference_dir forwards its "
     "own value; the default is the catalog's width",
-    "operators.ivf.train_kmeans_centroids.nlist": "build_ivf_index forwards its own "
-    "value, which is None in every query",
     "operators.pq.pq_knn.emb": "without it pq_knn is the ADC-only scan, the quantizer "
     "output that tests/test_pq.py's lossless audit measures",
+    # request inputs no non-test call varies: the reference app's widgets
+    "api.ProductSearchEngine.search_products.mode": "the search-mode widget (app.py:151)",
+    "api.ProductSearchEngine.search_products.alpha": "the alpha slider (app.py:151)",
+    "api.ProductSearchEngine.ann_review_search.k": "the k slider (app.py:131)",
+    "api.ProductSearchEngine.ann_review_search.nprobe": "the nprobe slider (app.py:383-384)",
 }
 
 
@@ -270,6 +280,38 @@ def none_defaults_only_tests_take() -> set[str]:
     return out
 
 
+def _value(call: ast.Call, param: str, index: int | None, default: ast.expr) -> object:
+    """The value ``call`` gives ``param``: the source text of a literal or
+    of the default it leaves in place, else the node itself, which equals
+    no other value."""
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return call
+    value = next((k.value for k in call.keywords if k.arg == param), None)
+    if value is None and index is not None and len(call.args) > index:
+        value = call.args[index]
+    if value is None:
+        value = default
+    return ast.unparse(value) if isinstance(value, ast.Constant) else value
+
+
+def single_valued_options() -> set[str]:
+    """Defaulted parameters, of public package functions and of public
+    methods of public classes, that the non-test calls give fewer than two
+    values. A name or expression stands for every value its caller may
+    pass, so a parameter that takes one never counts as single-valued."""
+    calls = _calls(NON_TEST)
+    out = set()
+    for name, fn, callers, shift in _function_targets(calls) + _method_targets(calls):
+        for param, index, default in _defaulted(fn):
+            pos = None if index is None else index - shift
+            values = [_value(c, param, pos, default) for c in callers]
+            if all(isinstance(v, str) for v in values) and len(set(values)) < 2:
+                out.add(f"{name}.{param}")
+    return out
+
+
 def _kept(name: str) -> bool:
     return any(name == k or name.startswith(k + ".") for k in KEPT)
 
@@ -290,13 +332,23 @@ def test_every_none_default_is_taken_outside_the_tests():
     assert sorted(n for n in none_defaults_only_tests_take() if not _kept(n)) == []
 
 
+def test_every_option_takes_two_values_outside_the_tests():
+    assert sorted(n for n in single_valued_options() if not _kept(n)) == []
+
+
 def test_kept_entries_are_still_exceptions():
     """A KEPT entry whose function gained a caller, or whose parameter
     gained a passing call, or whose None default gained a non-test call
-    that takes it, is stale; at most 4 function parameters and 1 method
+    that takes it, or whose option gained a second value, is stale; at most 4 function parameters and 1 method
     parameter stay unset."""
     unset, unset_methods = unset_parameters(), unset_method_parameters()
-    found = unreferenced() | unset | unset_methods | none_defaults_only_tests_take()
+    found = (
+        unreferenced()
+        | unset
+        | unset_methods
+        | none_defaults_only_tests_take()
+        | single_valued_options()
+    )
     stale = [k for k in KEPT if not any(n == k or n.startswith(k + ".") for n in found)]
     assert stale == []
     assert len(unset) <= 4, sorted(unset)

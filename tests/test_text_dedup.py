@@ -111,17 +111,17 @@ def test_near_dup_family_finds_planted_pair(spark):
         (3, "totally different words entirely unrelated content here now"),
     ]
     df = _docs(spark, rows)
-    jac = ngram_jaccard_pairs(shingle_postings(df), threshold=0.5)
+    jac = ngram_jaccard_pairs(shingle_postings(df))
     assert [(r["id_a"], r["id_b"]) for r in jac.collect()] == [(1, 2)]
-    lsh = minhash_lsh_pairs(minhash_table(df), threshold=0.5)
+    lsh = minhash_lsh_pairs(minhash_table(df))
     assert [(r["id_a"], r["id_b"]) for r in lsh.collect()] == [(1, 2)]
 
 
 def test_simhash_pairs_identical_docs_blocked_join(spark):
     # identical docs -> hamming 0, must be found through the chunk blocking;
     # an unrelated doc must not pair up. (A one-token edit on a short doc
-    # legitimately flips ~5-8 of 60 bits, so near-dup recall at small
-    # max_hamming is only meaningful on longer documents — covered by the
+    # legitimately flips ~5-8 of 60 bits, so near-dup recall at a small
+    # MAX_HAMMING is only meaningful on longer documents — covered by the
     # sf0.01 oracle check with its planted near-dups.)
     df = _docs(
         spark,
@@ -131,7 +131,7 @@ def test_simhash_pairs_identical_docs_blocked_join(spark):
             (3, "totally different words entirely unrelated content here now"),
         ],
     )
-    out = [(r["id_a"], r["id_b"], r["hamming"]) for r in simhash_pairs(simhash_signatures(df), max_hamming=3).collect()]
+    out = [(r["id_a"], r["id_b"], r["hamming"]) for r in simhash_pairs(simhash_signatures(df)).collect()]
     assert out == [(1, 2, 0)]
 
 
@@ -148,11 +148,11 @@ def test_embedding_near_dup(spark):
         [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])],
         "vec_id bigint, embedding array<float>",
     )
-    out = embedding_near_dup(emb, threshold=0.99).collect()
+    out = embedding_near_dup(emb).collect()
     assert [(r["id_a"], r["id_b"], r["score"]) for r in out] == [(1, 2, 1.0)]
 
 
-def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark):
+def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark, monkeypatch):
     import numpy as np
 
     from vector_database_product_recommendation_spark.operators.dedup import (
@@ -172,12 +172,11 @@ def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark):
             rows.append((1000 + i, w.tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    exact = {(r["id_a"], r["id_b"]) for r in embedding_near_dup(emb, threshold=0.95).collect()}
+    # SRP recall is ~0.99 at near-dup cosine, ~0.5 at the registry's 0.4
+    monkeypatch.setattr(dedup, "COSINE_THRESHOLD", 0.95)
+    exact = {(r["id_a"], r["id_b"]) for r in embedding_near_dup(emb).collect()}
     banded = embedding_band_signatures(emb)
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_lsh(emb, banded, threshold=0.95).collect()
-    }
+    lsh = {(r["id_a"], r["id_b"]) for r in embedding_near_dup_lsh(emb, banded).collect()}
     assert lsh <= exact                      # precision exact by construction
     assert len(exact) >= 10
     assert len(lsh) / len(exact) >= 0.9      # SRP recall at near-dup cosine
@@ -333,8 +332,8 @@ def test_ngram_jaccard_sort_param_same_rows(spark, sf_dir):
     # cached, as callers pass it: every scan of the index sees the same
     # limit(300) rows
     index = shingle_postings(docs).cache()
-    srt = ngram_jaccard_pairs(index, threshold=0.5).collect()
-    uns = ngram_jaccard_pairs(index, threshold=0.5, sort=False).collect()
+    srt = ngram_jaccard_pairs(index).collect()
+    uns = ngram_jaccard_pairs(index, sort=False).collect()
     index.unpersist()
     assert sorted(map(tuple, uns)) == [tuple(r) for r in srt]
 

@@ -65,6 +65,14 @@ HIT_PAYLOAD = ("brand", "n_reviews", "avg_rating")
 DRIVER_CATALOG_MAX_BYTES = 64 << 20
 
 
+def _at_least_one(**sliders: int) -> None:
+    """The reference's k and nprobe sliders start at 1: a smaller value
+    raises ValueError naming it, before any Spark work, on either path."""
+    for name, value in sliders.items():
+        if value < 1:
+            raise ValueError(f"{name} must be at least 1, got {value!r}")
+
+
 class _DriverCatalog:
     """The catalog as driver arrays, row-aligned: what a vector, filtered,
     item-to-item or compare request reads instead of running a job."""
@@ -250,9 +258,10 @@ class ProductSearchEngine:
     ) -> DataFrame:
         """E1 (app.py:281-303): filter -> score -> top-k -> gather. On the
         driver arrays when held, else the gather rides on the kernel's hits
-        (exact_knn ``payload``)."""
+        (exact_knn ``payload``). A ``k`` below 1 raises ValueError."""
         if mode not in ("vector", "hybrid"):
             raise ValueError(f"unknown mode {mode!r}")
+        _at_least_one(k=k)
         qv = self._encode_query(query_text)
         if mode == "vector" and self._driver is not None:
             mask = self._driver.mask(brand, min_rating, min_reviews)
@@ -304,7 +313,9 @@ class ProductSearchEngine:
 
     def search_by_product_id(self, pid, k: int = 5) -> DataFrame:
         """E2 (app.py:221-241): the query vector comes FROM the corpus.
-        An unknown ``pid`` raises ValueError naming it."""
+        An unknown ``pid``, or a ``k`` below 1, raises ValueError naming
+        it."""
+        _at_least_one(k=k)
         if self._driver is None:
             return _hit_rows(
                 item_to_item(self.catalog, pid, k, corpus_id="id", payload=HIT_PAYLOAD)
@@ -378,9 +389,11 @@ class ProductSearchEngine:
         query — the side-by-side demo, probing the engine's one review
         index. The query row is collected once, for both kernels, and the
         index's centroid rows once per engine, so a call on a built index
-        runs one Spark job; an unknown ``q_idx`` raises ValueError naming
-        it."""
+        runs one Spark job; an unknown ``q_idx``, or a ``k`` or ``nprobe``
+        below 1, raises ValueError naming it."""
         from vector_database_product_recommendation_spark.operators.ivf import ivf_knn
+
+        _at_least_one(k=k, nprobe=nprobe)
 
         emb = self._review_vectors()
         q = emb.filter(F.col("vec_id") == q_idx).select(

@@ -20,16 +20,13 @@ from vector_database_product_recommendation_spark.functions.vectors import l2_no
 
 
 def group_centroids(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-    *,
-    round_decimals: int | None = None,
+    df: DataFrame, group_col: str, *, round_decimals: int | None = None
 ) -> DataFrame:
-    """(group, vector) where vector = l2-normalized element-wise mean."""
+    """(group, vector) where vector = l2-normalized element-wise mean of
+    the group's ``embedding`` rows."""
     exploded = df.select(
         F.col(group_col).alias("group_key"),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"),
+        F.posexplode(F.col("embedding")).alias("pos", "val"),
     )
     means = exploded.groupBy("group_key", "pos").agg(
         F.avg(F.col("val").cast("double")).alias("m")

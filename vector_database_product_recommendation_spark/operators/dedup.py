@@ -61,6 +61,13 @@ N_BANDS = 4
 # winnowing: K-token grams, windows of W gram hashes
 WINNOW_K = 4
 WINNOW_W = 5
+# near-duplicate thresholds: Jaccard for the n-gram and MinHash pairs
+# (and dedup_components' edges), cosine for the embedding pairs, Hamming
+# distance for the SimHash pairs (below SIMHASH_CHUNKS, so the chunk
+# blocking is exact)
+JACCARD_THRESHOLD = 0.5
+COSINE_THRESHOLD = 0.4
+MAX_HAMMING = 3
 # the most corpus rows embedding_near_dup collects to the driver
 NEAR_DUP_MAX_ROWS = 100_000
 # the most min-label rounds connected_components runs before it raises
@@ -127,12 +134,7 @@ def shingle_postings(docs: DataFrame) -> DataFrame:
     return _doc_shingles_py(docs).select("doc_id", F.explode("shingles").alias("shingle"))
 
 
-def ngram_jaccard_pairs(
-    shingle_index: DataFrame,
-    *,
-    threshold: float = 0.2,
-    sort: bool = True,
-) -> DataFrame:
+def ngram_jaccard_pairs(shingle_index: DataFrame, *, sort: bool = True) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard, found with an
     inverted-index self-join (never an N^2 cross join) over
     ``shingle_index``, the (doc_id, shingle) rows of ``shingle_postings``.
@@ -140,7 +142,8 @@ def ngram_jaccard_pairs(
     self-join, so callers pass it cached (artifacts.shingle_index).
 
     Jaccard is computed over the capped shingle space (df <= MAX_DF, see
-    module docstring). Returns (id_a, id_b, jaccard), id_a < id_b.
+    module docstring). Returns (id_a, id_b, jaccard) with jaccard >=
+    ``JACCARD_THRESHOLD``, id_a < id_b.
 
     Physical shape (the ssjoin staples, both exact — the result set is
     unchanged):
@@ -166,7 +169,7 @@ def ngram_jaccard_pairs(
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     shz = sh.join(sizes, "doc_id")  # index rows carry their doc's size
     a, b = shz.alias("a"), shz.alias("b")
-    tol = threshold - 1e-6  # slack for the 6-decimal round-up edge
+    tol = JACCARD_THRESHOLD - 1e-6  # slack for the 6-decimal round-up edge
     common = (
         a.join(
             b,
@@ -191,7 +194,7 @@ def ngram_jaccard_pairs(
             / (F.col("sz_a") + F.col("sz_b") - F.col("common")).cast("double"),
             6,
         ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     return out.orderBy("id_a", "id_b") if sort else out
 
 
@@ -245,7 +248,7 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     ).orderBy("doc_id", "seed")
 
 
-def minhash_lsh_pairs(signatures: DataFrame, *, threshold: float = 0.2) -> DataFrame:
+def minhash_lsh_pairs(signatures: DataFrame) -> DataFrame:
     """MinHash-LSH near-dup pairs: band-bucket candidate join, then exact
     Jaccard verification on the candidates only.
 
@@ -256,7 +259,8 @@ def minhash_lsh_pairs(signatures: DataFrame, *, threshold: float = 0.2) -> DataF
 
     BANDS * rows == NUM_HASHES; a pair becomes a candidate iff some band of
     `rows` consecutive minhashes matches exactly. Returns
-    (id_a, id_b, jaccard) for verified candidates, id_a < id_b.
+    (id_a, id_b, jaccard) for candidates verified at jaccard >=
+    ``JACCARD_THRESHOLD``, id_a < id_b.
     """
     rows = NUM_HASHES // BANDS
     band_sigs = F.transform(
@@ -299,7 +303,7 @@ def minhash_lsh_pairs(signatures: DataFrame, *, threshold: float = 0.2) -> DataF
                 6,
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("id_a", "id_b")
     )
 
@@ -333,15 +337,14 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return src.mapInPandas(kernel, f"doc_id {dtype}, simhash long").orderBy("doc_id")
 
 
-def simhash_pairs(signatures: DataFrame, *, max_hamming: int = 8) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance over the (doc_id,
-    simhash) rows of ``simhash_signatures``, which both sides of the
-    block self-join read (callers pass them cached:
+def simhash_pairs(signatures: DataFrame) -> DataFrame:
+    """Near-dup pairs within Hamming distance ``MAX_HAMMING`` over the
+    (doc_id, simhash) rows of ``simhash_signatures``, which both sides of
+    the block self-join read (callers pass them cached:
     artifacts.simhash_signature_table). Blocked on 15-bit signature
-    chunks (a pair within Hamming d of a 60-bit signature must agree
+    chunks: a pair within Hamming d of a 60-bit signature must agree
     exactly on at least one of 4 chunks whenever d < 4 — the standard
-    pigeonhole blocking; for d >= 4 it is a recall-bounded
-    approximation, stated in the docs)."""
+    pigeonhole blocking, so at ``MAX_HAMMING`` = 3 it loses no pair."""
     chunk_bits = _SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     chunks = F.array(
@@ -369,14 +372,14 @@ def simhash_pairs(signatures: DataFrame, *, max_hamming: int = 8) -> DataFrame:
             ),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .orderBy("id_a", "id_b")
     )
 
 
-def embedding_near_dup(emb: DataFrame, *, threshold: float = 0.95) -> DataFrame:
+def embedding_near_dup(emb: DataFrame) -> DataFrame:
     """Exact cosine near-dup pairs over unit vectors: (id_a, id_b, score),
-    score = round(dot, 6) >= threshold, id_a < id_b.
+    score = round(dot, 6) >= ``COSINE_THRESHOLD``, id_a < id_b.
 
     Raises beyond ``NEAR_DUP_MAX_ROWS`` corpus rows: the whole corpus
     ships in the task closure, so this is the small-corpus audit oracle
@@ -412,7 +415,7 @@ def embedding_near_dup(emb: DataFrame, *, threshold: float = 0.95) -> DataFrame:
             block = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             bids = pdf["vec_id"].to_numpy()
             scores = np.round(block @ mat.T, 6)  # (n_block, N)
-            keep = (scores >= threshold) & (bids[:, None] < ids[None, :])
+            keep = (scores >= COSINE_THRESHOLD) & (bids[:, None] < ids[None, :])
             bi, ci = np.nonzero(keep)
             yield pd.DataFrame(
                 {"id_a": bids[bi], "id_b": ids[ci], "score": scores[bi, ci]}
@@ -468,9 +471,7 @@ def embedding_band_signatures(emb: DataFrame) -> DataFrame:
     )
 
 
-def embedding_near_dup_lsh(
-    emb: DataFrame, banded: DataFrame, *, threshold: float = 0.95
-) -> DataFrame:
+def embedding_near_dup_lsh(emb: DataFrame, banded: DataFrame) -> DataFrame:
     """The 100-TB path for embedding near-dup: random-hyperplane (SimHash
     for vectors) blocking + exact verification of candidates only.
 
@@ -481,13 +482,14 @@ def embedding_near_dup_lsh(
     N_PLANES/N_BANDS bits. The band self-join reads it twice, so callers
     pass it cached (artifacts.embedding_band_table). Candidate pairs
     sharing any band are verified with the exact round(dot, 6) >=
-    threshold.
+    ``COSINE_THRESHOLD``.
 
     Precision is exact (every emitted pair is verified). Recall is the
     standard SRP-LSH bound: a pair at cosine s agrees per-plane with
-    p = 1 - arccos(s)/pi, per-band with p^r, overall 1-(1-p^r)^b — at
-    near-dup thresholds (s >= 0.95, 4x4 bands) that is ~0.99; the exact
-    all-pairs operator `embedding_near_dup` is its audit oracle on samples.
+    p = 1 - arccos(s)/pi, per-band with p^r, overall 1-(1-p^r)^b — with
+    4x4 bands ~0.99 at s = 0.95, but ~0.5 for a pair right at
+    ``COSINE_THRESHOLD`` = 0.4; the exact all-pairs operator
+    `embedding_near_dup` is its audit oracle on samples.
     """
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -508,7 +510,7 @@ def embedding_near_dup_lsh(
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", F.round(dot("__va", "__vb"), 6).alias("score"))
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= COSINE_THRESHOLD)
         .orderBy("id_a", "id_b")
     )
 
@@ -692,7 +694,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def dedup_components(docs: DataFrame, shingle_index: DataFrame) -> DataFrame:
-    """End-to-end fuzzy dedup: n-gram Jaccard pairs (Jaccard >= 0.5) over
+    """End-to-end fuzzy dedup: n-gram Jaccard pairs (>= ``JACCARD_THRESHOLD``) over
     ``shingle_index`` (``shingle_postings`` of ``docs``) -> connected
     components -> canonical keep/drop. The full pipeline a pretraining corpus needs:
     pair discovery gives LOCAL similarity, components give GLOBAL clusters
@@ -700,11 +702,8 @@ def dedup_components(docs: DataFrame, shingle_index: DataFrame) -> DataFrame:
 
     Returns (doc_id, component_id, is_kept) sorted by doc_id.
     """
-    pairs = ngram_jaccard_pairs(
-        shingle_index,
-        threshold=0.5,
-        sort=False,  # edges feed a shuffle immediately; the sort is waste
-    )
+    # edges feed a shuffle immediately; the sort is waste
+    pairs = ngram_jaccard_pairs(shingle_index, sort=False)
     comp = connected_components(docs.select("doc_id"), pairs)
     return comp.select(
         "doc_id",

@@ -54,11 +54,16 @@ KMEANS_SEED = 42
 KMEANS_ITERS = 10
 
 
-def train_kmeans_centroids(emb: DataFrame, nlist: int | None = None) -> DataFrame:
+def _nlist(n: int) -> int:
+    """The coarse quantizer's list count for an n-row corpus: max(2, ⌊√n⌋)."""
+    return max(2, int(n**0.5))
+
+
+def train_kmeans_centroids(emb: DataFrame) -> DataFrame:
     """AN2: (cluster_id, centroid array<double>) of the ``embedding``
     column — Lloyd on a BOUNDED sample, FAISS-style, seeded with
-    ``KMEANS_SEED`` for ``KMEANS_ITERS`` iterations at most. ``nlist``
-    defaults to max(2, ⌊√n⌋).
+    ``KMEANS_SEED`` for ``KMEANS_ITERS`` iterations at most, into
+    nlist = ``_nlist(n)`` = max(2, ⌊√n⌋) lists.
 
     FAISS's own IVF training subsamples to Clustering.max_points_per_centroid
     (default 256) points per centroid before running k-means; the reference's
@@ -88,8 +93,7 @@ def train_kmeans_centroids(emb: DataFrame, nlist: int | None = None) -> DataFram
     trade-off, which tests/test_ivf.py bounds.
     """
     n, d = _corpus_shape(emb)
-    if nlist is None:
-        nlist = max(2, int(n**0.5))
+    nlist = _nlist(n)
     ppc = MAX_POINTS_PER_CENTROID
     # 12 B/elem = true transfer peak (8 B Arrow float64 + 4 B float32
     # target), not just the 4 B/elem matrix Lloyd holds afterwards
@@ -243,13 +247,13 @@ def assign_clusters(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     return emb.mapInPandas(assign, schema)
 
 
-def build_ivf_index(emb: DataFrame, *, nlist: int | None = None) -> tuple[DataFrame, DataFrame]:
+def build_ivf_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned): the one IVF index builder. Trains the coarse
     quantizer (``train_kmeans_centroids``), assigns the corpus and caches
     the assignment under ``lifetime.persist_right_sized``. Not memoized: its
     callers keep one index per corpus (``artifacts.ivf_index`` per session
     and corpus, ``api.ProductSearchEngine`` per engine)."""
-    cents = train_kmeans_centroids(emb, nlist)
+    cents = train_kmeans_centroids(emb)
     return cents, persist_right_sized(assign_clusters(emb, cents))
 
 

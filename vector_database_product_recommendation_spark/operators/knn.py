@@ -250,7 +250,7 @@ def exact_scores(
     queries: DataFrame,
     *,
     query_rows: list,
-    corpus_id: str = "vec_id",
+    corpus_id: str,
 ) -> DataFrame:
     """Score EVERY corpus row against the query batch — no top-k, no window.
 
@@ -259,9 +259,9 @@ def exact_scores(
     k would drag O(N) rows through the per-query rank window (a single
     serialized partition at scale). This is exact_knn's scorer with no
     selection: output stays partition-local, zero shuffles. Returns
-    (query_id, neighbor_id, score). ``query_rows``: the collected
-    (query_id, query_vec) rows of ``queries``, which supplies only the
-    query_id type.
+    (query_id, neighbor_id, score), neighbor_id read from the corpus's
+    ``corpus_id`` column. ``query_rows``: the collected (query_id,
+    query_vec) rows of ``queries``, which supplies only the query_id type.
     """
     q_ids, q_mat = _query_batch(queries, query_rows)
     score_batch = _exact_scorer(q_mat)

@@ -29,6 +29,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 FEATURE_DIM = 8
+# resize_payload's output size, and audio_frame_windows' frame width and
+# hop, all in bytes
+TARGET_BYTES = 256
+FRAME_BYTES = 100
+HOP_BYTES = 50
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:
@@ -79,10 +84,10 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.select("doc_id", "payload").mapInPandas(run, out_schema)
 
 
-def resize_payload(media: DataFrame, *, target_bytes: int = 256) -> DataFrame:
+def resize_payload(media: DataFrame) -> DataFrame:
     """Image-resize-shaped op: payload -> fixed-size payload + updated meta.
 
-    The stand-in transform truncates/zero-pads to ``target_bytes`` (a real
+    The stand-in transform truncates/zero-pads to ``TARGET_BYTES`` (a real
     resize is also bytes -> smaller bytes, row-local); meta records both
     the original and new size, the shape a real thumbnailing pipeline
     carries. Pure mapInPandas — payloads never leave the task, output
@@ -100,7 +105,7 @@ def resize_payload(media: DataFrame, *, target_bytes: int = 256) -> DataFrame:
             resized, metas = [], []
             for p in pdf["payload"]:
                 b = bytes(p)
-                out = b[:target_bytes].ljust(target_bytes, b"\x00")
+                out = b[:TARGET_BYTES].ljust(TARGET_BYTES, b"\x00")
                 resized.append(out)
                 metas.append(
                     {"format": "text/plain", "n_bytes": len(out), "orig_bytes": len(b)}
@@ -110,13 +115,9 @@ def resize_payload(media: DataFrame, *, target_bytes: int = 256) -> DataFrame:
     return media.select("doc_id", "payload").mapInPandas(run, out_schema)
 
 
-def audio_frame_windows(
-    media: DataFrame,
-    *,
-    frame_bytes: int = 100,
-    hop_bytes: int = 50,
-) -> DataFrame:
-    """Audio-framing-shaped op: one row per (doc, frame) with byte offsets.
+def audio_frame_windows(media: DataFrame) -> DataFrame:
+    """Audio-framing-shaped op: one row per (doc, frame) with byte offsets:
+    ``FRAME_BYTES``-wide frames every ``HOP_BYTES``.
 
     Overlapping frame boundaries come from `sequence` + explode — pure
     Column expressions, no UDF, so the frame fan-out happens JVM-side and
@@ -127,17 +128,17 @@ def audio_frame_windows(
     n = F.col("meta.n_bytes")
     starts = F.sequence(
         F.lit(0),
-        F.greatest(n - F.lit(frame_bytes), F.lit(0)),
-        F.lit(hop_bytes),
+        F.greatest(n - F.lit(FRAME_BYTES), F.lit(0)),
+        F.lit(HOP_BYTES),
     )
     return (
         media.withColumn("frame_start", F.explode(starts))
         .select(
             "doc_id",
             "frame_start",
-            F.least(F.col("frame_start") + frame_bytes, n).alias("frame_end"),
+            F.least(F.col("frame_start") + FRAME_BYTES, n).alias("frame_end"),
             F.expr(
-                f"substring(payload, frame_start + 1, {frame_bytes})"
+                f"substring(payload, frame_start + 1, {FRAME_BYTES})"
             ).alias("frame_payload"),
         )
     )

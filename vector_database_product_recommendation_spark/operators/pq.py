@@ -55,29 +55,32 @@ from vector_database_product_recommendation_spark.operators.knn import (
 # the most refine candidates (queries * fetch) pq_knn forces onto a
 # broadcast; past it the planner's size estimate picks the join
 REFINE_BROADCAST_MAX_ROWS = 1_000_000
+# subspaces per vector (M) and centroids per subspace (KSUB)
+M = 8
+KSUB = 16
 
 
-def train_pq(emb: DataFrame, *, m: int = 8, ksub: int = 16) -> list[np.ndarray]:
+def train_pq(emb: DataFrame) -> list[np.ndarray]:
     """Train per-subspace codebooks on a bounded sample.
 
     Driver-side by contract: one float64 sample (seed 42) of at most
-    ``MAX_POINTS_PER_CENTROID * ksub`` rows (codebook quality depends on
+    ``MAX_POINTS_PER_CENTROID * KSUB`` rows (codebook quality depends on
     the distribution, not the corpus size), then one Lloyd run per
-    subspace, seeded ``42 + j``. The result is m arrays of
-    (<=ksub, d/m) floats, kilobytes total. A subspace with at most ksub
+    subspace, seeded ``42 + j``. The result is ``M`` arrays of
+    (<=KSUB, d/M) floats, kilobytes total. A subspace with at most KSUB
     distinct sample rows takes those rows as its codebook: zero
     distortion, the lossless regime the exactness test exploits.
     """
     n, d = _corpus_shape(emb)
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    x = _sample_matrix(emb, n, d, MAX_POINTS_PER_CENTROID * ksub, seed=42, dtype=np.float64)
-    dsub = d // m
+    if d % M != 0:
+        raise ValueError(f"dim {d} not divisible by M={M}")
+    x = _sample_matrix(emb, n, d, MAX_POINTS_PER_CENTROID * KSUB, seed=42, dtype=np.float64)
+    dsub = d // M
     books = []
-    for j in range(m):
+    for j in range(M):
         sub = x[:, j * dsub : (j + 1) * dsub]
         uniq = np.unique(sub, axis=0)
-        books.append(uniq if len(uniq) <= ksub else _lloyd(sub, ksub, iters=25, seed=42 + j))
+        books.append(uniq if len(uniq) <= KSUB else _lloyd(sub, KSUB, iters=25, seed=42 + j))
     return books
 
 

@@ -18,6 +18,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+# the points' time column, the intervals' [start, end) columns, and the
+# bucket width: roughly the typical interval length (module docstring)
+POINT_TS = "ts"
+START_COL = "start_ts"
+END_COL = "end_ts"
+BUCKET_SECONDS = 600
+
 
 def _epoch_micros(c: str) -> Column:
     """unix_micros requires TIMESTAMP; tolerate TIMESTAMP_NTZ inputs by
@@ -26,32 +33,23 @@ def _epoch_micros(c: str) -> Column:
     return F.unix_micros(F.col(c).cast("timestamp"))
 
 
-def range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    *,
-    on: str,
-    point_ts: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
-    bucket_seconds: int = 600,
-) -> DataFrame:
+def range_join(points: DataFrame, intervals: DataFrame, *, on: str) -> DataFrame:
     """Inner keyed range join: rows of `points` joined to every interval
-    of the same key containing them ([start, end) semantics). Output has
-    all point columns plus the interval's start/end."""
-    b = F.lit(bucket_seconds)
+    of the same key whose [``START_COL``, ``END_COL``) contains their
+    ``POINT_TS``. Output has all point and interval columns."""
+    b = F.lit(BUCKET_SECONDS)
     p = points.withColumn(
-        "__bucket", (_epoch_micros(point_ts) / 1_000_000 / b).cast("long")
+        "__bucket", (_epoch_micros(POINT_TS) / 1_000_000 / b).cast("long")
     )
     iv = intervals.withColumn(
-        "__b0", (_epoch_micros(start_col) / 1_000_000 / b).cast("long")
+        "__b0", (_epoch_micros(START_COL) / 1_000_000 / b).cast("long")
     ).withColumn(
-        "__b1", (_epoch_micros(end_col) / 1_000_000 / b).cast("long")
+        "__b1", (_epoch_micros(END_COL) / 1_000_000 / b).cast("long")
     )
     iv = iv.withColumn(
         "__bucket", F.explode(F.sequence(F.col("__b0"), F.col("__b1")))
     ).drop("__b0", "__b1")
     joined = p.join(iv, [on, "__bucket"]).filter(
-        (F.col(point_ts) >= F.col(start_col)) & (F.col(point_ts) < F.col(end_col))
+        (F.col(POINT_TS) >= F.col(START_COL)) & (F.col(POINT_TS) < F.col(END_COL))
     )
     return joined.drop("__bucket")

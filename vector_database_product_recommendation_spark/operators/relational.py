@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
+# characters format_results keeps of its preview column
+PREVIEW_LEN = 80
+
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-heavy group-by over lineitem.
@@ -206,11 +209,11 @@ def format_results(
     show_cols: list[str],
     *,
     preview_col: str,
-    preview_len: int = 160,
     head: int,
 ) -> DataFrame:
     """P5/P8/K4 (app.py:243-273): dynamic column projection with a
-    truncated preview column (substr + '...') and a head-n slice.
+    preview column truncated to ``PREVIEW_LEN`` characters (substr +
+    '...') and a head-n slice.
     Columns requested but absent are skipped, mirroring the reference's
     existence-checked show_cols; so is an absent ``preview_col``."""
     cols = [c for c in show_cols if c in df.columns]
@@ -218,7 +221,7 @@ def format_results(
     if preview_col in df.columns:
         out = out.withColumn(
             f"{preview_col}_preview",
-            F.concat(F.substring(F.col(preview_col), 1, preview_len), F.lit("...")),
+            F.concat(F.substring(F.col(preview_col), 1, PREVIEW_LEN), F.lit("...")),
         ).drop(preview_col)
     return out.limit(head)
 

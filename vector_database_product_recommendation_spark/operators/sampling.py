@@ -15,13 +15,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# the Bernoulli sampler's seed: a fixed seed makes the sample reproducible
+SAMPLE_SEED = 42
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, *, seed: int = 42
-) -> DataFrame:
+
+def stratified_sample(df: DataFrame, strata_col: str, fractions: dict) -> DataFrame:
     """Per-stratum Bernoulli sampling (class rebalancing): each key in
-    ``fractions`` keeps ~that share of its rows; absent keys keep 0."""
-    return df.sampleBy(strata_col, fractions, seed=seed)
+    ``fractions`` keeps ~that share of its rows; absent keys keep 0.
+    Seeded with ``SAMPLE_SEED``."""
+    return df.sampleBy(strata_col, fractions, seed=SAMPLE_SEED)
 
 
 # key buckets per stratum: a fraction keeps the keys below round(fraction * _MOD)

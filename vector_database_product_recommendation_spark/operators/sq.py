@@ -63,7 +63,7 @@ def _stat_arrays(stats: DataFrame) -> DataFrame:
     )
 
 
-def sq8_knn(emb: DataFrame, query_id: int = 7, k: int = 20) -> DataFrame:
+def sq8_knn(emb: DataFrame, query_id: int, k: int) -> DataFrame:
     """SQ8 approximate KNN with exact refine: quantize corpus to 8-bit
     codes, rank by dot(midpoint-reconstruction, query), keep the top
     k*REFINE_FACTOR, rescore those exactly, return the top k. Both

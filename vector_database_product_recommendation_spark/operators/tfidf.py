@@ -286,7 +286,7 @@ def blend_hybrid(sparse: DataFrame, dense: DataFrame, alpha: float, k: int) -> D
     )
 
 
-def tfidf_search(query_text: str, model: TfidfModel, k: int = 20) -> DataFrame:
+def tfidf_search(query_text: str, model: TfidfModel, k: int) -> DataFrame:
     """F2: the top-k of the fitted ``model``'s ``scores``, rounded to 6
     decimals (the joblib-artifact serving path)."""
     return (
@@ -302,9 +302,9 @@ def hybrid_search(
     query_vec_id,
     docs: DataFrame,
     emb: DataFrame,
-    k: int = 20,
+    k: int,
     *,
-    alpha: float = 0.7,
+    alpha: float,
     model: TfidfModel,
 ) -> DataFrame:
     """F3+F4 (app.py:202-210): hybrid = alpha*dense_dot + (1-alpha)*
@@ -328,7 +328,7 @@ def hybrid_search(
     return blend_hybrid(sparse, dense, alpha, k)
 
 
-def bm25_search(query_text: str, docs: DataFrame, k: int = 20) -> DataFrame:
+def bm25_search(query_text: str, docs: DataFrame, k: int) -> DataFrame:
     """Okapi BM25 ranked retrieval (Robertson et al., TREC-3), the lexical
     scorer the reference's TF-IDF path approximates: score(q, d) =
     sum over query terms of idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))

@@ -466,7 +466,7 @@ common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
 SELECT id_a, id_b,
        round(common::DOUBLE / (sa.sz + sb.sz - common), 6) AS jaccard
 FROM common JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-WHERE round(common::DOUBLE / (sa.sz + sb.sz - common), 6) >= 0.5
+WHERE round(common::DOUBLE / (sa.sz + sb.sz - common), 6) >= {D.JACCARD_THRESHOLD}
 ORDER BY id_a, id_b
 """
 
@@ -475,7 +475,7 @@ ORDER BY id_a, id_b
 def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.artifacts import shingle_index
 
-    return D.ngram_jaccard_pairs(shingle_index(spark, sf_dir), threshold=0.5)
+    return D.ngram_jaccard_pairs(shingle_index(spark, sf_dir))
 
 
 # Permutation constants mirror operators/dedup.py (_perm_constants): one
@@ -530,7 +530,7 @@ verified AS (
 SELECT id_a, id_b,
        round(common::DOUBLE / (sz_a + sz_b - common), 6) AS jaccard
 FROM verified
-WHERE round(common::DOUBLE / (sz_a + sz_b - common), 6) >= 0.5
+WHERE round(common::DOUBLE / (sz_a + sz_b - common), 6) >= {D.JACCARD_THRESHOLD}
 ORDER BY id_a, id_b
 """
 
@@ -541,7 +541,7 @@ def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signature_table,
     )
 
-    return D.minhash_lsh_pairs(minhash_signature_table(spark, sf_dir), threshold=0.5)
+    return D.minhash_lsh_pairs(minhash_signature_table(spark, sf_dir))
 
 
 _SIMHASH_CTE = f"""
@@ -581,7 +581,7 @@ pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
           FROM blocked a JOIN blocked b
             ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk
                AND a.doc_id < b.doc_id)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b
+SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {D.MAX_HAMMING} ORDER BY id_a, id_b
 """
 
 
@@ -591,21 +591,21 @@ def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash_signature_table,
     )
 
-    return D.simhash_pairs(simhash_signature_table(spark, sf_dir), max_hamming=3)
+    return D.simhash_pairs(simhash_signature_table(spark, sf_dir))
 
 
-_EMB_NEAR_DUP_ORACLE = """
+_EMB_NEAR_DUP_ORACLE = f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_inner_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS score
 FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE round(list_inner_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.4
+WHERE round(list_inner_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= {D.COSINE_THRESHOLD}
 ORDER BY id_a, id_b
 """
 
 
 @register("dedup_embedding_cosine", _EMB_NEAR_DUP_ORACLE)
 def _dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.embedding_near_dup(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
+    return D.embedding_near_dup(load_table(spark, sf_dir, "embeddings"))
 
 
 # Fuzzy-dedup endgame: Jaccard pairs -> connected components -> keep/drop.
@@ -623,7 +623,7 @@ common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
 pairs AS (
   SELECT id_a, id_b
   FROM common JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-  WHERE round(common::DOUBLE / (sa.sz + sb.sz - common), 6) >= 0.5),
+  WHERE round(common::DOUBLE / (sa.sz + sb.sz - common), 6) >= {D.JACCARD_THRESHOLD}),
 edges AS (SELECT id_a AS u, id_b AS v FROM pairs
           UNION ALL SELECT id_b, id_a FROM pairs),
 reach(u, lbl) AS (
@@ -951,6 +951,7 @@ from vector_database_product_recommendation_spark.operators.multimodal import ( 
     extract_features,
 )
 from vector_database_product_recommendation_spark.streaming.events import (  # noqa: E402
+    SESSION_GAP_MINUTES,
     json_props_agg,
     sessionize,
     windowed_event_agg,
@@ -973,12 +974,12 @@ def _events_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gaps-and-islands mirror of Spark session_window semantics: an event at
 # exactly prev_ts + gap does NOT merge ([start, end) windows), so a new
 # session starts when ts >= prev + gap; session_end = last ts + gap.
-_SESSION_ORACLE = """
+_SESSION_ORACLE = f"""
 WITH o AS (SELECT user_id, ts, value,
                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
            FROM events),
 m AS (SELECT user_id, ts, value,
-             CASE WHEN prev IS NULL OR ts >= prev + INTERVAL 5 MINUTE
+             CASE WHEN prev IS NULL OR ts >= prev + INTERVAL {SESSION_GAP_MINUTES} MINUTE
                   THEN 1 ELSE 0 END AS new_s
       FROM o),
 g AS (SELECT user_id, ts, value,
@@ -987,7 +988,7 @@ g AS (SELECT user_id, ts, value,
       FROM m)
 SELECT user_id,
        min(ts) AS session_start,
-       max(ts) + INTERVAL 5 MINUTE AS session_end,
+       max(ts) + INTERVAL {SESSION_GAP_MINUTES} MINUTE AS session_end,
        count(*) AS n_events,
        round(sum(value), 6) AS sum_value
 FROM g GROUP BY user_id, sid
@@ -997,7 +998,7 @@ ORDER BY user_id, session_start
 
 @register("events_sessionization", _SESSION_ORACLE)
 def _events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sessionize(load_table(spark, sf_dir, "events"), gap="5 minutes")
+    return sessionize(load_table(spark, sf_dir, "events"))
 
 
 _JSON_ORACLE = """
@@ -1097,7 +1098,7 @@ def _salted_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuild the identical plane matrix, band keys, and candidate set; the
 # exact-verify step is list_inner_product. The metamorphic audit vs the
 # exact operator remains in tests/test_text_dedup.py.
-_EMB_LSH_ORACLE = """
+_EMB_LSH_ORACLE = f"""
 WITH planes AS (
   SELECT p, d,
          CASE WHEN strpos('02468ace', substr(md5(p::VARCHAR || '|' || d::VARCHAR), 15, 1)) > 0
@@ -1130,7 +1131,7 @@ SELECT id_a, id_b, round(list_inner_product(va.e, vb.e), 6) AS score
 FROM cand
 JOIN v va ON va.vec_id = id_a
 JOIN v vb ON vb.vec_id = id_b
-WHERE round(list_inner_product(va.e, vb.e), 6) >= 0.4
+WHERE round(list_inner_product(va.e, vb.e), 6) >= {D.COSINE_THRESHOLD}
 ORDER BY id_a, id_b
 """
 
@@ -1142,9 +1143,7 @@ def _dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return D.embedding_near_dup_lsh(
-        load_table(spark, sf_dir, "embeddings"),
-        embedding_band_table(spark, sf_dir),
-        threshold=0.4,
+        load_table(spark, sf_dir, "embeddings"), embedding_band_table(spark, sf_dir)
     )
 
 
@@ -1183,9 +1182,9 @@ def _tfidf_weights_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fitted_tfidf(spark, sf_dir, max_features=20).weights()
 
 
-_FORMAT_ORACLE = """
+_FORMAT_ORACLE = f"""
 SELECT doc_id, lang, source,
-       concat(substring(text, 1, 80), '...') AS text_preview
+       concat(substring(text, 1, {R.PREVIEW_LEN}), '...') AS text_preview
 FROM documents ORDER BY doc_id LIMIT 25
 """
 
@@ -1197,7 +1196,6 @@ def _format_results(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         ["doc_id", "lang", "source", "text", "missing_col_is_skipped"],
         preview_col="text",
-        preview_len=80,
         head=25,
     )
 
@@ -1235,9 +1233,7 @@ ORDER BY a.event_id
 def _events_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click")
-    joined = asof_join(
-        events, clicks, on="user_id", left_ts="ts", strict=True, prefix="asof_"
-    )
+    joined = asof_join(events, clicks, on="user_id")
     return joined.select(
         "event_id",
         "user_id",
@@ -1275,15 +1271,7 @@ def _events_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("start_ts"),
         (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("end_ts"),
     )
-    joined = range_join(
-        events.select("event_id", "user_id", "ts"),
-        iv,
-        on="user_id",
-        point_ts="ts",
-        start_col="start_ts",
-        end_col="end_ts",
-        bucket_seconds=600,
-    )
+    joined = range_join(events.select("event_id", "user_id", "ts"), iv, on="user_id")
     return joined.select(
         "event_id", "user_id", "ts", "click_id", "start_ts"
     ).orderBy("event_id", "click_id")
@@ -2379,26 +2367,23 @@ def _cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multimodal transforms: resize-shaped payload transform and audio framing
 # ---------------------------------------------------------------------------
 
-from vector_database_product_recommendation_spark.operators.multimodal import (  # noqa: E402
-    audio_frame_windows,
-    resize_payload,
-)
+from vector_database_product_recommendation_spark.operators import multimodal as MM  # noqa: E402
 
 # Frame fan-out is expression-only on both engines; md5 of each sliced
 # frame pins the slicing semantics byte-for-byte. DuckDB cannot substring
 # BLOBs, but the corpus is pure ASCII at every SF (verified:
 # octet_length(encode(text)) == length(text) for all rows), so VARCHAR
 # substring slices the identical bytes that Spark's binary substring sees.
-_AUDIO_FRAMES_ORACLE = """
+_AUDIO_FRAMES_ORACLE = f"""
 WITH m AS (SELECT doc_id, text,
                   octet_length(encode(text))::INT AS n_bytes
            FROM documents),
 fr AS (SELECT doc_id, n_bytes,
-              unnest(range(0, greatest(n_bytes - 100, 0) + 1, 50))::INT AS frame_start
+              unnest(range(0, greatest(n_bytes - {MM.FRAME_BYTES}, 0) + 1, {MM.HOP_BYTES}))::INT AS frame_start
        FROM m)
 SELECT fr.doc_id, frame_start,
-       least(frame_start + 100, fr.n_bytes) AS frame_end,
-       md5(substring(m.text, frame_start + 1, 100)) AS frame_md5
+       least(frame_start + {MM.FRAME_BYTES}, fr.n_bytes) AS frame_end,
+       md5(substring(m.text, frame_start + 1, {MM.FRAME_BYTES})) AS frame_md5
 FROM fr JOIN m ON fr.doc_id = m.doc_id
 ORDER BY fr.doc_id, frame_start
 """
@@ -2406,10 +2391,8 @@ ORDER BY fr.doc_id, frame_start
 
 @register("multimodal_audio_frames", _AUDIO_FRAMES_ORACLE)
 def _multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_database_product_recommendation_spark.operators.multimodal import attach_payload
-
     media = attach_payload(load_table(spark, sf_dir, "documents"))
-    frames = audio_frame_windows(media, frame_bytes=100, hop_bytes=50)
+    frames = MM.audio_frame_windows(media)
     return frames.select(
         "doc_id",
         "frame_start",
@@ -2418,8 +2401,8 @@ def _multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "frame_start")
 
 
-_RESIZE_ORACLE = """
-SELECT doc_id, 256 AS n_bytes,
+_RESIZE_ORACLE = f"""
+SELECT doc_id, {MM.TARGET_BYTES} AS n_bytes,
        octet_length(encode(text))::INT AS orig_bytes
 FROM documents ORDER BY doc_id
 """
@@ -2427,10 +2410,8 @@ FROM documents ORDER BY doc_id
 
 @register("multimodal_resize_meta", _RESIZE_ORACLE)
 def _multimodal_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_database_product_recommendation_spark.operators.multimodal import attach_payload
-
     media = attach_payload(load_table(spark, sf_dir, "documents"))
-    resized = resize_payload(media, target_bytes=256)
+    resized = MM.resize_payload(media)
     return resized.select(
         "doc_id", F.col("meta.n_bytes").alias("n_bytes"),
         F.col("meta.orig_bytes").alias("orig_bytes"),

@@ -11,9 +11,10 @@ must prune partitions (asserted in tests/test_sources_formats.py).
 
 Scale notes (100 TB):
 - CSV/JSON are ingest/egress formats here, never the analytic layout —
-  each round-trip query re-lands the data as it would on a real cluster
-  (schema-on-read with an explicit StructType, no inference job over the
-  full dataset: ``inferSchema`` would be a second full scan).
+  each round-trip query re-lands the data as it would on a real cluster,
+  on every call, into a fresh temp dir of its own (schema-on-read with
+  an explicit StructType, no inference job over the full dataset:
+  ``inferSchema`` would be a second full scan).
 - Text fields survive quoting/newlines via the RFC-4180 style
   ``escape='"'`` + ``multiLine`` pair on BOTH writer and reader.
 - The partitioned sink writes one directory per key value; a filter on
@@ -24,24 +25,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-_MIRROR_CACHE: dict[tuple, str] = {}
-
-
-def _mirror_dir(tag: str, *key) -> tuple[str, bool]:
-    """Session-scoped output dir per (tag, key); True if already written."""
-    k = (tag, *key)
-    if k in _MIRROR_CACHE:
-        return _MIRROR_CACHE[k], True
-    path = tempfile.mkdtemp(prefix=f"{tag}_")
-    _MIRROR_CACHE[k] = path
-    return path, False
 
 
 def write_csv(df: DataFrame, path: str) -> None:
@@ -123,9 +111,8 @@ def csv_roundtrip_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    path, done = _mirror_dir("csv_docs", sf_dir)
-    if not done:
-        write_csv(docs, path)
+    path = tempfile.mkdtemp(prefix="csv_docs_")
+    write_csv(docs, path)
     back = read_csv(spark, path, docs.schema)
     # 60-bit md5 prefix reduced mod a prime so the SUM stays inside a long
     text_h60 = (
@@ -152,9 +139,8 @@ def json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     events = load_table(spark, sf_dir, "events")
-    path, done = _mirror_dir("json_events", sf_dir)
-    if not done:
-        write_json(events, path)
+    path = tempfile.mkdtemp(prefix="json_events_")
+    write_json(events, path)
     back = read_json(spark, path, events.schema)
     return (
         back.groupBy("event_type")
@@ -177,9 +163,8 @@ def partitioned_orders_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    path, done = _mirror_dir("part_orders", sf_dir)
-    if not done:
-        write_partitioned(orders, path, "o_orderstatus")
+    path = tempfile.mkdtemp(prefix="part_orders_")
+    write_partitioned(orders, path, "o_orderstatus")
     back = read_partitioned(spark, path)
     return (
         back.filter(F.col("o_orderstatus") == "F")
@@ -214,9 +199,8 @@ def orc_roundtrip_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path, done = _mirror_dir("orc_emb", sf_dir)
-    if not done:
-        write_orc(emb, path)
+    path = tempfile.mkdtemp(prefix="orc_emb_")
+    write_orc(emb, path)
     back = read_orc(spark, path)
     return (
         back.groupBy("label")

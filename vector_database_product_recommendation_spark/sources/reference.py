@@ -144,4 +144,4 @@ def rebuild_product_embeddings(reviews: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
     joined = reviews.select("id", "review_idx").join(emb, "review_idx")
-    return group_centroids(joined, "id", "embedding")
+    return group_centroids(joined, "id")

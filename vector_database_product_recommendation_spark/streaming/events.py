@@ -17,6 +17,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+# inactivity that ends a session
+SESSION_GAP_MINUTES = 5
+
 
 def windowed_event_agg(events: DataFrame) -> DataFrame:
     """Hourly tumbling-window counts/sums per event_type. Epoch-aligned
@@ -35,10 +38,12 @@ def windowed_event_agg(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, *, gap: str = "5 minutes") -> DataFrame:
-    """Session windows per user: a session ends after `gap` of inactivity.
-    Spark session_window semantics: start = first event ts, end = last
-    event ts + gap; an event at exactly `end` opens a NEW session."""
+def sessionize(events: DataFrame) -> DataFrame:
+    """Session windows per user: a session ends after
+    ``SESSION_GAP_MINUTES`` of inactivity. Spark session_window semantics:
+    start = first event ts, end = last event ts + gap; an event at exactly
+    `end` opens a NEW session."""
+    gap = f"{SESSION_GAP_MINUTES} minutes"
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
