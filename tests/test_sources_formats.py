@@ -5,12 +5,18 @@ pin row-level fidelity and the physical pruning behavior."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from urllib.parse import urlparse
+
 import pyspark.sql.functions as F
 
 from vector_database_product_recommendation_spark.sources import formats as FMT
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_csv_roundtrip_is_row_identical(spark, tmp_path):
@@ -72,3 +78,31 @@ def test_orc_roundtrip_row_identity(spark, sf_dir, tmp_path):
     assert back.schema == emb.schema
     assert back.count() == emb.count()
     assert back.exceptAll(emb).count() == 0 and emb.exceptAll(back).count() == 0
+
+
+def test_roundtrip_copies_land_under_one_root(spark):
+    queries = (
+        FMT.csv_roundtrip_catalog,
+        FMT.json_roundtrip_events,
+        FMT.partitioned_orders_pruned,
+        FMT.orc_roundtrip_embeddings,
+    )
+    files = [f for q in queries for f in q(spark, SF_DIR).inputFiles()]
+    root = FMT._copies_root
+    assert root is not None and os.path.isdir(root)
+    assert files and all(urlparse(f).path.startswith(root + os.sep) for f in files)
+
+
+def test_roundtrip_copies_root_is_removed_at_exit(tmp_path):
+    code = (
+        "from vector_database_product_recommendation_spark.sources import formats as FMT\n"
+        "print(FMT._copy_dir('csv_docs_'))\n"
+    )
+    env = dict(os.environ, PYTHONPATH=REPO, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True
+    )
+    copy = out.stdout.strip()
+    assert os.path.dirname(os.path.dirname(copy)) == str(tmp_path)
+    assert not os.path.exists(os.path.dirname(copy))
+    assert os.listdir(tmp_path) == []
