@@ -38,6 +38,7 @@ def _sf_of(path: str) -> float:
 
 def main() -> None:
     from vector_database_product_recommendation_spark.session import get_spark
+    from vector_database_product_recommendation_spark.sources.tables import load_table
 
     import __spark_entry__ as entrymod
 
@@ -122,7 +123,7 @@ def main() -> None:
     # second of the exact KNN batch (8 queries x corpus rows).
     extras: dict[str, float] = {}
     try:
-        n_corpus = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+        n_corpus = load_table(spark, SF_DIR, "embeddings").count()
         t_knn = timings.get("knn_exact_batch", -1.0)
         if t_knn > 0:
             extras["knn_scored_pairs_per_sec"] = round(8 * n_corpus / t_knn, 1)
@@ -141,9 +142,10 @@ def main() -> None:
     try:
         import pyspark.sql.functions as SF
 
-        from vector_database_product_recommendation_spark.operators.knn import exact_knn
-        from vector_database_product_recommendation_spark.sources.tables import load_table
-
+        from vector_database_product_recommendation_spark.operators.knn import (
+            collect_queries,
+            exact_knn,
+        )
         emb = load_table(spark, SF_DIR, "embeddings").persist()
         emb.count()
         n_q = min(512, n_corpus)
@@ -151,12 +153,12 @@ def main() -> None:
             SF.col("vec_id").alias("query_id"),
             SF.col("embedding").alias("query_vec"),
         )
-        qrows = qdf.collect()
-        exact_knn(emb, qdf, 10, query_rows=qrows).count()  # warm
+        q_arrays = collect_queries(qdf)
+        exact_knn(emb, qdf, 10, query_arrays=q_arrays).count()  # warm
         runs = []
         for _ in range(3):
             t = time.time()
-            exact_knn(emb, qdf, 10, query_rows=qrows).count()
+            exact_knn(emb, qdf, 10, query_arrays=q_arrays).count()
             runs.append(time.time() - t)
         dt = sorted(runs)[1]
         extras["knn_bulk_queries"] = n_q
@@ -199,7 +201,7 @@ def main() -> None:
 
     # Corpus-prep throughput (docs/sec through profile->gate->dedup).
     try:
-        n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
+        n_docs = load_table(spark, SF_DIR, "documents").count()
         t_prep = timings.get("corpus_prep_pipeline", -1.0)
         if t_prep > 0:
             extras["corpus_prep_docs_per_sec"] = round(n_docs / t_prep, 1)

@@ -23,6 +23,7 @@ from vector_database_product_recommendation_spark.operators.eval import ann_trad
 from vector_database_product_recommendation_spark.operators.ivf import (
     assign_clusters,
     build_ivf_index,
+    collect_centroids,
     ivf_knn,
     read_ivf_store,
     train_kmeans_centroids,
@@ -234,9 +235,9 @@ def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
     cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents)
     q = _queries(emb)
-    rows = cents.orderBy("cluster_id").collect()
+    arrays = collect_centroids(cents)
     a = ivf_knn(assigned, cents, q, 5, nprobe=2).collect()
-    b = ivf_knn(assigned, cents, q, 5, nprobe=2, centroid_rows=rows).collect()
+    b = ivf_knn(assigned, cents, q, 5, nprobe=2, centroid_arrays=arrays).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 

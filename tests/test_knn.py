@@ -231,10 +231,10 @@ def test_group_centroids_long_shape(spark, emb):
 def test_exact_scores_full_matrix_no_selection(spark, emb):
     """exact_scores = the exact_knn kernel minus top-k: every corpus row
     scored per query, values identical to the numpy product."""
-    from vector_database_product_recommendation_spark.operators.knn import exact_scores
+    from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_scores
 
     q = _queries(emb, 3)
-    out = exact_scores(emb, q, query_rows=q.collect(), corpus_id="vec_id").collect()
+    out = exact_scores(emb, q, query_arrays=collect_queries(q), corpus_id="vec_id").collect()
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows])
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])

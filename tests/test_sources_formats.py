@@ -106,3 +106,28 @@ def test_roundtrip_copies_root_is_removed_at_exit(tmp_path):
     assert os.path.dirname(os.path.dirname(copy)) == str(tmp_path)
     assert not os.path.exists(os.path.dirname(copy))
     assert os.listdir(tmp_path) == []
+
+
+def test_a_second_load_table_runs_no_job(spark, jobs_run_by):
+    """The footer schema is read once per file version: a repeated read of
+    a table passes it back and runs no schema-inference job."""
+    load_table(spark, SF_DIR, "orders")
+    assert jobs_run_by(lambda: load_table(spark, SF_DIR, "orders"), "reload-orders") == 0
+    events = load_table(spark, SF_DIR, "events")
+    again = jobs_run_by(lambda: load_table(spark, SF_DIR, "events"), "reload-events")
+    assert again == 0 and load_table(spark, SF_DIR, "events").schema == events.schema
+
+
+def test_a_rewritten_table_is_read_again(spark, tmp_path):
+    """A file rewritten in place with one more column has a new stamp, so
+    its schema is read again and the column shows."""
+    import pandas as pd
+
+    path = tmp_path / "region.parquet"
+    pd.DataFrame({"r_regionkey": [0, 1], "r_name": ["A", "B"]}).to_parquet(path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    assert load_table(spark, str(tmp_path), "region").count() == 2
+    pd.DataFrame({"r_regionkey": [0, 1, 2], "r_name": ["A", "B", "C"], "r_comment": ["x", "y", "z"]}).to_parquet(path)
+    back = load_table(spark, str(tmp_path), "region")
+    assert back.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r["r_comment"] for r in back.collect()) == ["x", "y", "z"]

@@ -7,6 +7,7 @@ the right answer is obvious.
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -266,13 +267,82 @@ def test_connected_components_transitive(spark):
 
 def test_connected_components_raises_past_the_round_budget(spark, monkeypatch):
     """A path graph needs one min-label round per hop: with a one-round
-    budget the labels have not converged, and the operator raises instead
-    of returning wrong components."""
+    budget the distributed loop (forced by an edge bound of 0) has not
+    converged, and the operator raises instead of returning wrong
+    components."""
     verts = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(1, 5)], "id_a long, id_b long")
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
     monkeypatch.setattr(dedup, "CC_MAX_ITER", 1)
     with pytest.raises(RuntimeError, match="CC_MAX_ITER=1"):
         dedup.connected_components(verts, edges)
+
+
+def _union_find_labels(vertices: list[int], edges: list[tuple[int, int]]) -> dict[int, int]:
+    """The oracle: a plain union-find, each vertex labeled with the
+    smallest id of its component."""
+    parent = {v: v for v in vertices}
+
+    def root(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: root(v) for v in vertices}
+
+
+def _random_graph(seed: int, n: int, n_edges: int) -> tuple[list[int], list[tuple[int, int]]]:
+    """Sparse ids and random edges among them, with duplicate and reversed
+    copies of some edges mixed in."""
+    rng = np.random.default_rng(seed)
+    ids = sorted(int(v) for v in rng.choice(10 * n, size=n, replace=False))
+    edges = [tuple(int(v) for v in rng.choice(ids, size=2, replace=False)) for _ in range(n_edges)]
+    extra = [edges[i] for i in rng.integers(0, len(edges), size=n_edges // 3)] if edges else []
+    edges += extra + [(b, a) for a, b in extra]
+    return ids, [edges[i] for i in rng.permutation(len(edges))]
+
+
+CC_CASES = {
+    # mostly isolated vertices beside a few components
+    "sparse": _random_graph(1, 40, 12),
+    "zero_edges": (_random_graph(2, 10, 0)[0], []),
+    "dense": _random_graph(3, 30, 45),
+    # one hop per round: 9 hops against a planted 3-round budget
+    "long_path": ([7 * i for i in range(10, 0, -1)], [(7 * i, 7 * (i + 1)) for i in range(1, 10)] + [(99, 100)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CC_CASES))
+def test_connected_components_both_paths_match_union_find(spark, monkeypatch, case):
+    """The driver path (edges within ``CC_DRIVER_MAX_EDGES``) equals a
+    plain union-find on every graph; the distributed path, forced by an
+    edge bound of 0, equals it wherever it converges within the round
+    budget (the default's 25 rounds for the random graphs), and raises
+    on the path that is longer than its planted budget."""
+    verts, edges = CC_CASES[case]
+    if case == "long_path":
+        verts = verts + [99, 100]
+    want = _union_find_labels(verts, edges)
+    vdf = spark.createDataFrame([(v,) for v in verts], "doc_id long")
+    edf = spark.createDataFrame(edges, "id_a long, id_b long")
+    if case == "long_path":
+        monkeypatch.setattr(dedup, "CC_MAX_ITER", 3)
+
+    def labels():
+        out = dedup.connected_components(vdf, edf).collect()
+        assert len(out) == len(verts)
+        return {r["doc_id"]: r["component_id"] for r in out}
+
+    assert labels() == want
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    if case == "long_path":
+        with pytest.raises(RuntimeError, match="CC_MAX_ITER=3"):
+            labels()
+    else:
+        assert labels() == want
 
 
 def test_dedup_components_keeps_min_id(spark):

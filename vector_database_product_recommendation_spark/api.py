@@ -21,7 +21,8 @@ and the one blend of operators/tfidf.py (``TfidfModel.scores``,
 Like the reference's ``@st.cache_resource`` numpy/FAISS state, the engine
 collects its catalog once, at construction, into driver arrays (ids,
 filter columns, hit payload and the float64 embedding matrix) when the
-matrix fits ``DRIVER_CATALOG_MAX_BYTES``. Vector and filtered search,
+matrix fits ``DRIVER_CATALOG_MAX_BYTES``, through the one bounded Arrow
+transfer (``lifetime.collect_bounded``). Vector and filtered search,
 item-to-item and compare then mask, score (``np.round(mat @ qv, 6)``) and
 rank (``knn.rank_topk``) on the driver and reply with an inline table:
 no Spark job per request. A larger catalog is never collected: it is
@@ -45,7 +46,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
 from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
+from vector_database_product_recommendation_spark.functions.vectors import matrix
+from vector_database_product_recommendation_spark.lifetime import collect_bounded
 from vector_database_product_recommendation_spark.operators.knn import (
+    collect_queries,
     exact_knn,
     exact_scores,
     item_to_item,
@@ -77,14 +81,16 @@ class _DriverCatalog:
     """The catalog as driver arrays, row-aligned: what a vector, filtered,
     item-to-item or compare request reads instead of running a job."""
 
-    def __init__(self, rows: list):
-        self.ids = np.array([r[0] for r in rows], dtype=object)
+    def __init__(self, pdf):
+        self.ids = pdf["id"].to_numpy(dtype=object)
         self.row = {pid: i for i, pid in enumerate(self.ids)}
-        self.brand_lower = np.array([r[1] for r in rows], dtype=object)
-        self.rating = np.array([r[2] for r in rows], dtype=np.float64)
-        self.reviews = np.array([r[3] for r in rows], dtype=np.int64)
-        self.payload = [tuple(r[4:-1]) for r in rows]  # raw, nulls kept
-        self.mat = np.array([r[-1] for r in rows], dtype=np.float64)
+        self.brand_lower = pdf["brand_lower"].to_numpy(dtype=object)
+        self.rating = pdf["rating"].to_numpy(dtype=np.float64)
+        self.reviews = pdf["reviews"].to_numpy(dtype=np.int64)
+        # raw, nulls kept: Arrow hands a null numeric cell over as NaN
+        raw = pdf[list(HIT_PAYLOAD)].astype(object)
+        self.payload = list(raw.where(raw.notna(), None).itertuples(index=False, name=None))
+        self.mat = matrix(pdf["embedding"])
 
     def mask(self, brand: str, min_rating: float, min_reviews: int) -> np.ndarray:
         """candidate_products' filters: ``lower(brand)`` equality (a null
@@ -112,10 +118,11 @@ class ProductSearchEngine:
     products.csv fields plus its unit ``embedding``) and the review
     embeddings (review_idx, embedding) that the ANN demo paths search.
 
-    Construction runs one job for the catalog's row count and embedding
-    width and, when ``0 < rows * width * 8 <= DRIVER_CATALOG_MAX_BYTES``,
-    one more that collects it into a ``_DriverCatalog``; ``embedding_dim``
-    defaults to that width."""
+    Construction runs one job for the catalog's embedding width and, when
+    the catalog has one, one more that collects it into a
+    ``_DriverCatalog`` if its ``rows * width * 8`` bytes fit
+    ``DRIVER_CATALOG_MAX_BYTES``; ``embedding_dim`` defaults to that
+    width."""
 
     def __init__(
         self,
@@ -130,15 +137,13 @@ class ProductSearchEngine:
         self.encoder = encoder  # None -> driver-side hash_embed_py
         self._tfidf = None
         self._ivf = None
-        self._ivf_centroid_rows = None
+        self._ivf_centroid_arrays = None
         # the free-text query frame only carries the schema: each request's
-        # encoded vector reaches the kernel as query_rows
+        # encoded vector reaches the kernel as query_arrays
         self._text_query = catalog.sparkSession.createDataFrame(
             [], "query_id int, query_vec array<double>"
         )
-        n, self._width = catalog.select(
-            F.count(F.lit(1)), F.max(F.size("embedding"))
-        ).first()
+        self._width = catalog.select(F.max(F.size("embedding"))).first()[0]
         self.embedding_dim = self._width if embedding_dim is None else embedding_dim
         types = {f.name: f.dataType.simpleString() for f in catalog.schema}
         self._hit_schema = [
@@ -146,20 +151,25 @@ class ProductSearchEngine:
             *((c, types[c]) for c in HIT_PAYLOAD),
         ]
         self._compare_schema = [("id_a", types["id"]), ("id_b", types["id"]), ("score", "double")]
-        # the bound is checked before the collect: an over-bound catalog
-        # never reaches the driver (nor does an empty one, which has no
-        # width; the Spark path serves both)
+        # the bound is the transfer's row limit: an over-bound catalog
+        # moves at most one row past it, an empty one (no width) nothing;
+        # the Spark path serves both
         self._driver = None
-        if 0 < n * (self._width or 0) * 8 <= DRIVER_CATALOG_MAX_BYTES:
-            rows = catalog.select(
-                "id",
-                F.lower("brand"),
-                F.coalesce(F.col("avg_rating"), F.lit(-1.0)),
-                F.coalesce(F.col("n_reviews"), F.lit(0)),
-                *HIT_PAYLOAD,
-                "embedding",
-            ).collect()
-            self._driver = _DriverCatalog(rows)
+        if self._width:
+            pdf = collect_bounded(
+                catalog.select(
+                    "id",
+                    F.lower("brand").alias("brand_lower"),
+                    F.coalesce(F.col("avg_rating"), F.lit(-1.0)).alias("rating"),
+                    F.coalesce(F.col("n_reviews"), F.lit(0)).alias("reviews"),
+                    *HIT_PAYLOAD,
+                    "embedding",
+                ),
+                DRIVER_CATALOG_MAX_BYTES // (8 * self._width),
+                what=None,
+            )
+            if pdf is not None:
+                self._driver = _DriverCatalog(pdf)
 
     # -- construction -----------------------------------------------------
 
@@ -269,7 +279,7 @@ class ProductSearchEngine:
         cand = self.candidate_products(
             brand=brand, min_rating=min_rating, min_reviews=min_reviews
         )
-        rows = [(0, qv)]
+        arrays = (np.array([0]), np.asarray([qv], dtype=np.float64))
         if mode == "vector":
             return _hit_rows(
                 exact_knn(
@@ -277,7 +287,7 @@ class ProductSearchEngine:
                     self._text_query,
                     k,
                     corpus_id="id",
-                    query_rows=rows,
+                    query_arrays=arrays,
                     payload=HIT_PAYLOAD,
                 )
             )
@@ -291,7 +301,7 @@ class ProductSearchEngine:
             query_text, cand.select(F.col("id").alias("doc_id"))
         )
         dense = exact_scores(
-            cand, self._text_query, corpus_id="id", query_rows=rows
+            cand, self._text_query, corpus_id="id", query_arrays=arrays
         ).select(F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs"))
         top = blend_hybrid(sparse, dense, alpha, k)
         # ranks are minted after the selection: the window sees k rows
@@ -344,12 +354,13 @@ class ProductSearchEngine:
             d = self._driver
             vec = {p: d.mat[d.row[p]] for p in wanted if p in d.row}
         else:
-            vec = {
-                r[0]: np.asarray(r[1], dtype=np.float64)
-                for r in self.catalog.filter(F.col("id").isin(wanted))
-                .select("id", "embedding")
-                .collect()
-            }
+            # ids are the catalog's key: at most one row per wanted id
+            pdf = collect_bounded(
+                self.catalog.filter(F.col("id").isin(wanted)).select("id", "embedding"),
+                len(wanted),
+                what="the compared products (one catalog row per id)",
+            )
+            vec = dict(zip(pdf["id"], matrix(pdf["embedding"])))
         missing = [p for p in wanted if p not in vec]
         if missing:
             raise ValueError(f"products {missing!r} are not in the catalog")
@@ -399,10 +410,10 @@ class ProductSearchEngine:
         q = emb.filter(F.col("vec_id") == q_idx).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        rows = q.collect()
-        if not rows:
+        arrays = collect_queries(q)
+        if not len(arrays[0]):
             raise ValueError(f"review {q_idx!r} is not in the corpus")
-        exact = exact_knn(emb, q, k, exclude_self=True, query_rows=rows)
+        exact = exact_knn(emb, q, k, exclude_self=True, query_arrays=arrays)
         cents, assigned = self._review_index()
         ivf = ivf_knn(
             assigned,
@@ -411,8 +422,8 @@ class ProductSearchEngine:
             k,
             nprobe,
             exclude_self=True,
-            query_rows=rows,
-            centroid_rows=self._ivf_centroid_rows,
+            query_arrays=arrays,
+            centroid_arrays=self._ivf_centroid_arrays,
         )
         return exact, ivf
 
@@ -429,14 +440,17 @@ class ProductSearchEngine:
 
     def _review_index(self) -> tuple[DataFrame, DataFrame]:
         """The review corpus's IVF index (``ivf.build_ivf_index``), built on
-        the first E3 or AN5 call and kept with its centroid rows, which E3
-        hands to ``ivf_knn``: the reference's one shipped IndexIVFFlat,
+        the first E3 or AN5 call and kept with its centroid arrays, which
+        E3 hands to ``ivf_knn``: the reference's one shipped IndexIVFFlat,
         read by both."""
-        from vector_database_product_recommendation_spark.operators.ivf import build_ivf_index
+        from vector_database_product_recommendation_spark.operators.ivf import (
+            build_ivf_index,
+            collect_centroids,
+        )
 
         if self._ivf is None:
             self._ivf = build_ivf_index(self._review_vectors())
-            self._ivf_centroid_rows = self._ivf[0].orderBy("cluster_id").collect()
+            self._ivf_centroid_arrays = collect_centroids(self._ivf[0])
         return self._ivf
 
 

@@ -17,8 +17,19 @@ Two tiers:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
+
+
+def matrix(vectors: pd.Series) -> np.ndarray:
+    """A pandas column of equal-width vectors (an Arrow batch's or a
+    ``lifetime.collect_bounded`` frame's) as one float64 (rows, width)
+    matrix; an empty column is a (0, 0) matrix."""
+    if vectors.empty:
+        return np.empty((0, 0))
+    return np.stack(vectors.to_numpy()).astype(np.float64)
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

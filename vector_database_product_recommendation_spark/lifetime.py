@@ -1,4 +1,5 @@
-"""Persist lifetimes: query-scoped pins and session-scoped artifacts.
+"""Persist lifetimes: query-scoped pins and session-scoped artifacts, and
+the one bounded transfer of a frame to the driver (:func:`collect_bounded`).
 
 Two queries persist an intermediate that feeds two or more consumers
 inside the SAME query and depends on the query itself:
@@ -27,6 +28,7 @@ argument and never builds one itself.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
 ROWS_PER_PARTITION = 25_000
@@ -116,3 +118,23 @@ def persist_right_sized(df: DataFrame) -> DataFrame:
     out.count()
     wide.unpersist(blocking=True)
     return out
+
+
+def collect_bounded(df: DataFrame, max_rows: int, *, what: str | None) -> pd.DataFrame | None:
+    """``df`` on the driver as a pandas frame when it holds at most
+    ``max_rows`` rows: the one driver materialization of the package.
+
+    The rows move with Arrow (``toPandas``; session.py turns Arrow on), so
+    a vector column arrives as numpy arrays, not Row cells. The bound is a
+    ``limit(max_rows + 1)`` on the transfer itself: no count job runs
+    first, and an over-bound frame moves at most one row more than the
+    bound. Above it the result is ``None`` when ``what`` is None (the
+    caller has a fallback); otherwise a ValueError names ``what``, which
+    names the rows and their bound constant. An empty frame comes back as
+    an empty pandas frame with ``df``'s columns."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) <= max_rows:
+        return pdf
+    if what is None:
+        return None
+    raise ValueError(f"{what}: more than {max_rows} rows would reach the driver")

@@ -37,6 +37,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.text import tokens_ws
+from vector_database_product_recommendation_spark.functions.vectors import matrix
+from vector_database_product_recommendation_spark.lifetime import collect_bounded
 
 # MinHash permutation family: one md5-based hash per shingle, then k affine
 # permutations h -> (a*h + b) mod P over the Mersenne prime P = 2^31 - 1.
@@ -70,7 +72,10 @@ COSINE_THRESHOLD = 0.4
 MAX_HAMMING = 3
 # the most corpus rows embedding_near_dup collects to the driver
 NEAR_DUP_MAX_ROWS = 100_000
-# the most min-label rounds connected_components runs before it raises
+# the most edges connected_components labels on the driver; past it the
+# distributed min-label loop runs (16 bytes an edge: 16 MB at the bound)
+CC_DRIVER_MAX_EDGES = 1_000_000
+# the most min-label rounds the distributed loop runs before it raises
 CC_MAX_ITER = 25
 # how long connected_components waits for an observed label sum before it
 # runs the aggregate itself
@@ -381,9 +386,11 @@ def embedding_near_dup(emb: DataFrame) -> DataFrame:
     """Exact cosine near-dup pairs over unit vectors: (id_a, id_b, score),
     score = round(dot, 6) >= ``COSINE_THRESHOLD``, id_a < id_b.
 
-    Raises beyond ``NEAR_DUP_MAX_ROWS`` corpus rows: the whole corpus
-    ships in the task closure, so this is the small-corpus audit oracle
-    ONLY — use ``embedding_near_dup_lsh`` as the scale path.
+    Raises ValueError beyond ``NEAR_DUP_MAX_ROWS`` corpus rows, checked by
+    the bounded transfer itself (``lifetime.collect_bounded``, no count
+    job): the whole corpus ships in the task closure, so this is the
+    small-corpus audit oracle ONLY — use ``embedding_near_dup_lsh`` as the
+    scale path.
 
     This is the exact baseline (all-pairs); it is the correctness oracle
     for the LSH-blocked variant and is only appropriate when one side fits
@@ -395,24 +402,21 @@ def embedding_near_dup(emb: DataFrame) -> DataFrame:
     corpus matrix (BLAS), emitting only pairs over the threshold — the
     O(N^2 d) inner loop never runs as interpreted per-pair expressions.
     """
-    n = emb.count()
-    if n > NEAR_DUP_MAX_ROWS:
-        raise ValueError(
-            f"embedding_near_dup is the all-pairs audit oracle and collects "
-            f"the corpus to the driver; got {n} rows > NEAR_DUP_MAX_ROWS="
-            f"{NEAR_DUP_MAX_ROWS}. Use embedding_near_dup_lsh "
-            f"(hyperplane-blocked, exact-verified) for large corpora."
-        )
     src = emb.select("vec_id", "embedding")
-    rows = src.collect()
-    ids = np.array([r[0] for r in rows])
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    corpus = collect_bounded(
+        src,
+        NEAR_DUP_MAX_ROWS,
+        what="the corpus of embedding_near_dup, the all-pairs audit oracle "
+        "(dedup.NEAR_DUP_MAX_ROWS); embedding_near_dup_lsh is the scale path",
+    )
+    ids = corpus["vec_id"].to_numpy()
+    mat = matrix(corpus["embedding"])
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            block = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            block = matrix(pdf["embedding"])
             bids = pdf["vec_id"].to_numpy()
             scores = np.round(block @ mat.T, 6)  # (n_block, N)
             keep = (scores >= COSINE_THRESHOLD) & (bids[:, None] < ids[None, :])
@@ -452,7 +456,7 @@ def embedding_band_signatures(emb: DataFrame) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            mat = matrix(pdf["embedding"])
             bits = (mat @ planes.T) >= 0  # (n, N_PLANES)
             ids, band_idx, band_key = [], [], []
             pows = 1 << np.arange(r_bits)
@@ -565,29 +569,67 @@ def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
     return src.mapInPandas(kernel, f"doc_id {dtype}, fp long")
 
 
-def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
-    """Connected components over a near-duplicate pair graph by iterative
-    min-label propagation: every vertex starts labeled with its own id and
-    repeatedly takes the minimum label among itself and its neighbors.
-    Converges in O(graph diameter) rounds — near-dup clusters are dense
-    quasi-cliques with tiny diameters (2-3), so a handful of rounds
-    suffices even on billion-edge graphs (the Kiveris et al. large-star /
-    small-star trick only pays off for high-diameter graphs such as web
-    link graphs, not dedup clusters).
+def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:
+    """(u, label) for every vertex of the (id_a, id_b) edge rows: a
+    union-find whose root is always the smaller id, so each root is its
+    component's minimum."""
+    parent: dict[int, int] = {}
 
-    Scale notes: the (undirected) edge table — the BIG relation — is
-    hash-partitioned on its join key once and persisted, so each round
-    shuffles only the current (vertex, label) table; the per-round
-    neighbor-min is a single union + min aggregate (map-side partial
-    combine shrinks neighbor labels before the exchange) instead of a
-    join-back. Text never moves. ``localCheckpoint`` after every round
-    truncates the lineage so round N's plan does not replay rounds
-    1..N-1. Convergence is detected with a label-sum metric (labels are
-    monotone non-increasing, so an unchanged label sum means a fixed
-    point) OBSERVED on the checkpoint materialization itself
-    (`Dataset.observe` piggybacks the aggregate on the job that is
-    already running) — no separate convergence job per round, and no
-    per-row change join.
+    def find(x: int) -> int:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(pairs["id_a"].tolist(), pairs["id_b"].tolist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    us = list(parent)
+    return pd.DataFrame({"u": us, "label": [find(u) for u in us]}, dtype="int64")
+
+
+def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
+    """Connected components over a near-duplicate pair graph: every vertex
+    is labeled with the minimum id reachable from it.
+
+    Two paths, one answer:
+
+    - **Driver** (edge list within ``CC_DRIVER_MAX_EDGES``: 25 edges at
+      sf0.01, 256 at sf0.1): the edges reach the driver through one
+      bounded Arrow transfer (``lifetime.collect_bounded``, no count job
+      first) and a union-find labels them, label = min id of the
+      component. The labels come back as a local relation,
+      broadcast-joined onto ``vertices`` with ``coalesce(label,
+      doc_id)``, so a vertex in no edge is its own component. No eager
+      job runs beyond the transfer, and nothing is left in storage.
+    - **Distributed** (more edges than the bound): iterative min-label
+      propagation. Every vertex starts labeled with its own id and
+      repeatedly takes the minimum label among itself and its neighbors.
+      Converges in O(graph diameter) rounds — near-dup clusters are dense
+      quasi-cliques with tiny diameters (2-3), so a handful of rounds
+      suffices even on billion-edge graphs (the Kiveris et al. large-star
+      / small-star trick only pays off for high-diameter graphs such as
+      web link graphs, not dedup clusters). Raises ``RuntimeError`` when
+      the labels have not converged after ``CC_MAX_ITER`` rounds.
+
+    Scale notes for the distributed path: the (undirected) edge table —
+    the BIG relation — is hash-partitioned on its join key once and
+    persisted, so each round shuffles only the current (vertex, label)
+    table; the per-round neighbor-min is a single union + min aggregate
+    (map-side partial combine shrinks neighbor labels before the
+    exchange) instead of a join-back. Text never moves.
+    ``localCheckpoint`` after every round truncates the lineage so round
+    N's plan does not replay rounds 1..N-1. Convergence is detected with
+    a label-sum metric (labels are monotone non-increasing, so an
+    unchanged label sum means a fixed point) OBSERVED on the checkpoint
+    materialization itself (`Dataset.observe` piggybacks the aggregate on
+    the job that is already running) — no separate convergence job per
+    round, and no per-row change join.
 
     Parity: the reference app has no dedup at all (SURVEY.md section 2.8)
     — this is part of the training-data-pipeline extension layer; the
@@ -595,11 +637,22 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     canonical choice (reference lineage: products 'first row per group',
     SURVEY.md A-g3).
 
-    ``vertices`` carries a ``doc_id`` column; ``edges`` (id_a, id_b).
-    Returns (doc_id, component_id) with component_id = min doc_id reachable.
-    Raises ``RuntimeError`` when the labels have not converged after
-    ``CC_MAX_ITER`` rounds.
+    ``vertices`` carries a ``doc_id`` column; ``edges`` (id_a, id_b)
+    joins vertices of ``vertices``. Returns (doc_id, component_id) with
+    component_id = min doc_id reachable, both long.
     """
+    verts = vertices.select(F.col("doc_id").cast("long").alias("u"))
+    pairs = collect_bounded(
+        edges.select(F.col("id_a").cast("long"), F.col("id_b").cast("long")),
+        CC_DRIVER_MAX_EDGES,
+        what=None,
+    )
+    if pairs is not None:
+        labels = vertices.sparkSession.createDataFrame(_min_labels(pairs), "u long, label long")
+        return verts.join(F.broadcast(labels), "u", "left").select(
+            F.col("u").alias("doc_id"),
+            F.coalesce(F.col("label"), F.col("u")).alias("component_id"),
+        )
     e = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # pre-partition the (big, round-invariant) edge table by its join key
     # BEFORE persisting: every round's join then reuses the cached layout
@@ -637,7 +690,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     # |V| to |V_connected|; the isolated remainder is unioned back once
     # at the end from the caller's vertex table (NOT from ``e``, which is
     # unpersisted before return).
-    verts = vertices.select(F.col("doc_id").cast("long").alias("u"))
     obs0 = Observation()
     labels = (
         verts.join(e.select("u").distinct(), "u", "left_semi")

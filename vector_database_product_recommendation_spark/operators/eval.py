@@ -12,8 +12,8 @@ avg_query_time_ms, queries_used).
 The kernels run distributed; the scoring does not. As the reference does
 with the lists FAISS returns, the exact and per-nprobe IVF hit lists are
 collected and scored on the driver. That is at most
-(1 + len(nprobes)) * n_queries * k rows (SCALE.md, driver-side
-materializations).
+(1 + len(nprobes)) * n_queries * k rows, each list at most
+``HIT_LIST_MAX_ROWS`` (SCALE.md, driver-side materializations).
 
 Metric definitions (J6 lineage):
 - Precision@K: |ivf_topk ∩ exact_topk| / k, averaged over queries
@@ -35,15 +35,24 @@ from collections import defaultdict
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.operators.ivf import ivf_knn
-from vector_database_product_recommendation_spark.operators.knn import exact_knn
+from vector_database_product_recommendation_spark.lifetime import collect_bounded
+from vector_database_product_recommendation_spark.operators.ivf import collect_centroids, ivf_knn
+from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_knn
+
+# the most rows of one top-k list the sweep collects to the driver
+HIT_LIST_MAX_ROWS = 100_000
 
 
 def _hit_lists(topk: DataFrame) -> dict[int, dict[int, int]]:
     """query_id -> {neighbor_id: rank} of a collected top-k list."""
+    pdf = collect_bounded(
+        topk.select("query_id", "neighbor_id", "rank"),
+        HIT_LIST_MAX_ROWS,
+        what="a top-k list of the nprobe sweep (eval.HIT_LIST_MAX_ROWS)",
+    )
     hits: dict[int, dict[int, int]] = defaultdict(dict)
-    for r in topk.collect():
-        hits[r["query_id"]][r["neighbor_id"]] = r["rank"]
+    for q, n, rank in zip(*(pdf[c].tolist() for c in pdf.columns)):
+        hits[q][n] = rank
     return hits
 
 
@@ -70,12 +79,12 @@ def ann_tradeoff(
     # Collect the (small) query batch and centroid table ONCE — the sweep
     # reuses them across every per-nprobe probe and the exact oracle, so
     # no per-iteration collect job ever runs inside a timed bracket.
-    qrows = queries.collect()
-    q_ids = [r["query_id"] for r in qrows]
+    q_arrays = collect_queries(queries)
+    q_ids = q_arrays[0].tolist()
     n_q = len(q_ids)
-    cent_rows = cents.orderBy("cluster_id").collect()
+    c_arrays = collect_centroids(cents)
 
-    exact = _hit_lists(exact_knn(emb, queries, k, exclude_self=True, query_rows=qrows))
+    exact = _hit_lists(exact_knn(emb, queries, k, exclude_self=True, query_arrays=q_arrays))
     nn1 = {q: n for q, hits in exact.items() for n, rank in hits.items() if rank == 1}
 
     out_rows = []
@@ -90,8 +99,8 @@ def ann_tradeoff(
                 k,
                 nprobe,
                 exclude_self=True,
-                query_rows=qrows,
-                centroid_rows=cent_rows,
+                query_arrays=q_arrays,
+                centroid_arrays=c_arrays,
             )
         )
         ms_per_query = (time.time() - t0) * 1000.0 / n_q

@@ -35,7 +35,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.lifetime import persist_right_sized
+from vector_database_product_recommendation_spark.functions.vectors import matrix
+from vector_database_product_recommendation_spark.lifetime import collect_bounded, persist_right_sized
 from vector_database_product_recommendation_spark.operators.knn import _query_batch, topk_scan
 
 
@@ -52,6 +53,9 @@ ASSIGN_BLOCK = 65_536
 # recall is measured against the exact oracle anyway
 KMEANS_SEED = 42
 KMEANS_ITERS = 10
+# the most centroids a probe collects to the driver: nlist = ⌊√n⌋ reaches
+# it at n ≈ 4.3e9 rows (65,536 x 384 float64 is 201 MB)
+MAX_CENTROIDS = 65_536
 
 
 def _nlist(n: int) -> int:
@@ -219,6 +223,16 @@ def _mllib_centroids(emb: DataFrame, nlist: int) -> DataFrame:
     return cents
 
 
+def collect_centroids(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(cluster ids, float64 centroid matrix) of a (cluster_id, centroid)
+    table, ordered by cluster_id, in one bounded Arrow transfer; more than
+    ``MAX_CENTROIDS`` rows raise ValueError."""
+    pdf = collect_bounded(
+        centroids.orderBy("cluster_id"), MAX_CENTROIDS, what="the centroid table (ivf.MAX_CENTROIDS)"
+    )
+    return pdf["cluster_id"].to_numpy(), matrix(pdf["centroid"])
+
+
 def assign_clusters(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """AN3: append `cluster_id` = argmax-dot centroid of the `embedding`
     column, row-local.
@@ -226,9 +240,7 @@ def assign_clusters(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     The centroid matrix ships in the task closure (nlist x d floats); each
     Arrow batch does one matmul + argmax. No shuffle of the corpus.
     """
-    cent = centroids.orderBy("cluster_id").collect()
-    cmat = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
-    cids = np.array([r["cluster_id"] for r in cent])
+    cids, cmat = collect_centroids(centroids)
     # fresh StructType — .add() would mutate the DataFrame's cached schema
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -239,7 +251,7 @@ def assign_clusters(emb: DataFrame, centroids: DataFrame) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            mat = matrix(pdf["embedding"])
             best = cids[np.argmax(mat @ cmat.T, axis=1)]
             pdf = pdf.assign(cluster_id=best.astype(np.int32))
             yield pdf[out_cols]
@@ -265,8 +277,8 @@ def ivf_knn(
     nprobe: int,
     *,
     exclude_self: bool = False,
-    query_rows: list | None = None,
-    centroid_rows: list | None = None,
+    query_arrays: tuple[np.ndarray, np.ndarray] | None = None,
+    centroid_arrays: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """AN4: per-query top-k over the union of its nprobe best clusters of
     a (vec_id, embedding, cluster_id) corpus.
@@ -278,16 +290,14 @@ def ivf_knn(
     filter becomes partition pruning — only nprobe/nlist of the data is
     read per query batch.
 
-    ``query_rows``: pre-collected (query_id, query_vec) rows — callers
-    probing the same batch repeatedly (the nprobe sweep) pass them once
-    instead of re-running the collect job per call. ``centroid_rows``:
-    same for the (tiny) centroid table, ordered by cluster_id.
+    ``query_arrays``: the batch's (ids, matrix) from
+    ``knn.collect_queries`` — callers probing the same batch repeatedly
+    (the nprobe sweep) pass them once instead of re-running the collect
+    job per call. ``centroid_arrays``: same for the (tiny) centroid table,
+    from ``collect_centroids``.
     """
-    cent = centroid_rows if centroid_rows is not None else centroids.orderBy("cluster_id").collect()
-    cmat = np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
-    cids = np.array([r["cluster_id"] for r in cent])
-
-    q_ids, q_mat = _query_batch(queries, query_rows)
+    cids, cmat = collect_centroids(centroids) if centroid_arrays is None else centroid_arrays
+    q_ids, q_mat = _query_batch(queries, query_arrays)
     # cluster -> row indices of the queries that probe it. The probe map
     # ships in the task closure (it is O(q * nprobe) ints) instead of a
     # broadcast-joined table: corpus rows then cross the Python boundary
@@ -306,7 +316,7 @@ def ivf_knn(
         # rows group by cluster; one BLAS matmul scores each cluster's rows
         # against exactly the queries that probe it, and every other pair
         # stays -inf (not a candidate)
-        emb_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        emb_mat = matrix(pdf["embedding"])
         cl = pdf["cluster_id"].to_numpy()
         scores = np.full((len(cl), len(q_ids)), -np.inf)
         for c in np.unique(cl):

@@ -30,18 +30,34 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from vector_database_product_recommendation_spark.functions.vectors import dot
+from vector_database_product_recommendation_spark.functions.vectors import dot, matrix
+from vector_database_product_recommendation_spark.lifetime import collect_bounded
+
+# the most query rows a kernel collects to the driver and ships in every
+# task's closure (10k x 384 float64 is 31 MB)
+QUERY_BATCH_MAX_ROWS = 10_000
 
 
-def _query_batch(queries: DataFrame, query_rows: list | None) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, matrix) of the query batch: ``query_rows`` when the caller
-    already holds them, else a driver-side gather (small by contract)."""
-    if query_rows is None:
-        query_rows = queries.select("query_id", "query_vec").collect()
-    if not query_rows:
+def collect_queries(queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, float64 matrix) of a (query_id, query_vec) batch, in one
+    bounded Arrow transfer; more than ``QUERY_BATCH_MAX_ROWS`` rows raise
+    ValueError. An empty batch is two empty arrays."""
+    pdf = collect_bounded(
+        queries.select("query_id", "query_vec"),
+        QUERY_BATCH_MAX_ROWS,
+        what="the query batch (knn.QUERY_BATCH_MAX_ROWS)",
+    )
+    return pdf["query_id"].to_numpy(), matrix(pdf["query_vec"])
+
+
+def _query_batch(
+    queries: DataFrame, query_arrays: tuple[np.ndarray, np.ndarray] | None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, matrix) of the query batch: ``query_arrays`` when the caller
+    already holds them, else ``collect_queries``. An empty batch raises."""
+    ids, mat = collect_queries(queries) if query_arrays is None else query_arrays
+    if not len(ids):
         raise ValueError("empty query batch")
-    ids = np.array([r[0] for r in query_rows])
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in query_rows])
     return ids, mat
 
 
@@ -107,7 +123,7 @@ def _exact_scorer(q_mat: np.ndarray):
     qm = q_mat.T  # (d, q)
 
     def score_batch(pdf: pd.DataFrame) -> np.ndarray:
-        return np.round(np.stack(pdf["embedding"].to_numpy()).astype(np.float64) @ qm, 6)
+        return np.round(matrix(pdf["embedding"]) @ qm, 6)
 
     return score_batch
 
@@ -212,7 +228,7 @@ def exact_knn(
     *,
     corpus_id: str = "vec_id",
     exclude_self: bool = False,
-    query_rows: list | None = None,
+    query_arrays: tuple[np.ndarray, np.ndarray] | None = None,
     payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """Batch exact KNN: for every (query_id, query_vec) row, the top-k
@@ -222,17 +238,17 @@ def exact_knn(
     query. ``exclude_self`` drops corpus rows whose id equals the query id
     (``topk_scan``).
 
-    ``query_rows``: pre-collected (query_id, query_vec) rows — callers
-    reusing one query batch across calls (the serving loop; the reference
-    encodes its query batch once, app.py:169-171) pass them to skip the
-    per-call collect job, exactly like ivf_knn.
+    ``query_arrays``: the batch's (ids, matrix) from ``collect_queries``
+    — callers reusing one query batch across calls (the serving loop; the
+    reference encodes its query batch once, app.py:169-171) pass them to
+    skip the per-call collect job, exactly like ivf_knn.
 
     ``payload``: corpus columns returned on each hit row, the way a vector
     store returns a point's payload with its score, so a caller needs no
     join back to the corpus. With the default ``()`` the plan and output
     are those of a plain top-k.
     """
-    q_ids, q_mat = _query_batch(queries, query_rows)
+    q_ids, q_mat = _query_batch(queries, query_arrays)
     return topk_scan(
         corpus.select(corpus_id, "embedding", *payload),
         queries,
@@ -249,7 +265,7 @@ def exact_scores(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    query_rows: list,
+    query_arrays: tuple[np.ndarray, np.ndarray],
     corpus_id: str,
 ) -> DataFrame:
     """Score EVERY corpus row against the query batch — no top-k, no window.
@@ -260,10 +276,10 @@ def exact_scores(
     serialized partition at scale). This is exact_knn's scorer with no
     selection: output stays partition-local, zero shuffles. Returns
     (query_id, neighbor_id, score), neighbor_id read from the corpus's
-    ``corpus_id`` column. ``query_rows``: the collected (query_id,
-    query_vec) rows of ``queries``, which supplies only the query_id type.
+    ``corpus_id`` column. ``query_arrays``: the (ids, matrix) of
+    ``queries``, which supplies only the query_id type.
     """
-    q_ids, q_mat = _query_batch(queries, query_rows)
+    q_ids, q_mat = _query_batch(queries, query_arrays)
     score_batch = _exact_scorer(q_mat)
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -300,8 +316,8 @@ def item_to_item(
     q = corpus.filter(F.col(corpus_id) == F.lit(item_id)).select(
         F.col(corpus_id).alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    rows = q.collect()
-    if not rows:
+    arrays = collect_queries(q)
+    if not len(arrays[0]):
         raise ValueError(f"item {item_id!r} is not in the corpus")
     return exact_knn(
         corpus,
@@ -309,7 +325,7 @@ def item_to_item(
         k,
         corpus_id=corpus_id,
         exclude_self=True,
-        query_rows=rows,
+        query_arrays=arrays,
         payload=payload,
     )
 

@@ -14,8 +14,11 @@ only ever collected when they are a *query batch* (small by construction).
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -29,6 +32,13 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# path -> (stamp, schema read under it); the stamp is the file's
+# (st_mtime_ns, st_size), the rule _daemon.py applies to zip archives, and
+# the nanosAsLong setting, which changes how a ts column reads
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -52,8 +62,28 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the footer schema read once per
+    stamp: a later read passes the memoized schema through ``.schema()``
+    and runs no schema-inference job. A rewritten file (a new stamp) is
+    read again; a path that cannot be stat'ed is never memoized. The data
+    scan stays lazy either way."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size, spark.conf.get(NANOS_AS_LONG, "false"))
+    seen = _SCHEMAS.get(path)
+    if seen is not None and seen[0] == stamp:
+        return spark.read.schema(seen[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table. ``name`` must be in TABLES.
+    """Read one synthetic table. ``name`` must be in TABLES. Each table's
+    schema is read once per file version (``_read_parquet``).
 
     The events table's ts has shipped as TIMESTAMP(NANOS) and as
     TIMESTAMP_NTZ micros across testdata generations; normalize_event_ts
@@ -61,11 +91,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return normalize_event_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        spark.conf.set(NANOS_AS_LONG, "true")
+        return normalize_event_ts(_read_parquet(spark, path))
+    return _read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
