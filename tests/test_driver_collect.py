@@ -10,7 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from vector_database_product_recommendation_spark.lifetime import collect_bounded
-from vector_database_product_recommendation_spark.operators import dedup, eval as ev, ivf, knn
+from vector_database_product_recommendation_spark.operators import dedup, ivf, knn
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -69,7 +69,6 @@ def test_sites_without_a_fallback_raise_naming_their_bound(spark, monkeypatch):
     cases = {
         "QUERY_BATCH_MAX_ROWS": (knn, lambda: knn.exact_knn(emb, q, 3)),
         "MAX_CENTROIDS": (ivf, lambda: ivf.ivf_knn(assigned, cents, q, 3, nprobe=2)),
-        "HIT_LIST_MAX_ROWS": (ev, lambda: ev.ann_tradeoff(emb, (cents, assigned), n_queries=4, nprobes=(1,))),
         "NEAR_DUP_MAX_ROWS": (dedup, lambda: dedup.embedding_near_dup(emb)),
     }
     for name, (module, call) in cases.items():

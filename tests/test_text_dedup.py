@@ -278,6 +278,31 @@ def test_connected_components_raises_past_the_round_budget(spark, monkeypatch):
         dedup.connected_components(verts, edges)
 
 
+@pytest.mark.parametrize("bound", ["driver", "distributed"])
+def test_connected_components_computes_the_edges_once(spark, monkeypatch, bound):
+    """Each edge row is computed once on either path: the transfer that
+    decides the path fills the cache the distributed loop then reads, so
+    an over-bound graph does not run its pair join twice."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    verts = spark.createDataFrame([(i,) for i in range(60)], "doc_id long")
+    edges = (
+        spark.createDataFrame([(i, i + 1) for i in range(0, 40, 2)], "id_a long, id_b long")
+        .repartition(4)
+        .mapInPandas(counted, "id_a long, id_b long")
+    )
+    if bound == "distributed":
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    out = dedup.connected_components(verts, edges).collect()
+    assert len(out) == 60
+    assert seen.value == 20
+
+
 def _union_find_labels(vertices: list[int], edges: list[tuple[int, int]]) -> dict[int, int]:
     """The oracle: a plain union-find, each vertex labeled with the
     smallest id of its component."""

@@ -118,11 +118,10 @@ class ProductSearchEngine:
     products.csv fields plus its unit ``embedding``) and the review
     embeddings (review_idx, embedding) that the ANN demo paths search.
 
-    Construction runs one job for the catalog's embedding width and, when
-    the catalog has one, one more that collects it into a
-    ``_DriverCatalog`` if its ``rows * width * 8`` bytes fit
-    ``DRIVER_CATALOG_MAX_BYTES``; ``embedding_dim`` defaults to that
-    width."""
+    Construction runs one job for the catalog's row count and embedding
+    width and, when ``0 < rows * width * 8 <= DRIVER_CATALOG_MAX_BYTES``,
+    one more that collects it into a ``_DriverCatalog``; ``embedding_dim``
+    defaults to that width."""
 
     def __init__(
         self,
@@ -143,7 +142,9 @@ class ProductSearchEngine:
         self._text_query = catalog.sparkSession.createDataFrame(
             [], "query_id int, query_vec array<double>"
         )
-        self._width = catalog.select(F.max(F.size("embedding"))).first()[0]
+        n, self._width = catalog.select(
+            F.count(F.lit(1)), F.max(F.size("embedding"))
+        ).first()
         self.embedding_dim = self._width if embedding_dim is None else embedding_dim
         types = {f.name: f.dataType.simpleString() for f in catalog.schema}
         self._hit_schema = [
@@ -151,11 +152,11 @@ class ProductSearchEngine:
             *((c, types[c]) for c in HIT_PAYLOAD),
         ]
         self._compare_schema = [("id_a", types["id"]), ("id_b", types["id"]), ("score", "double")]
-        # the bound is the transfer's row limit: an over-bound catalog
-        # moves at most one row past it, an empty one (no width) nothing;
-        # the Spark path serves both
+        # the bound is checked before the collect: an over-bound catalog
+        # never reaches the driver (nor does an empty one, which has no
+        # width; the Spark path serves both)
         self._driver = None
-        if self._width:
+        if 0 < n * (self._width or 0) * 8 <= DRIVER_CATALOG_MAX_BYTES:
             pdf = collect_bounded(
                 catalog.select(
                     "id",
@@ -165,7 +166,7 @@ class ProductSearchEngine:
                     *HIT_PAYLOAD,
                     "embedding",
                 ),
-                DRIVER_CATALOG_MAX_BYTES // (8 * self._width),
+                n,
                 what=None,
             )
             if pdf is not None:

@@ -73,8 +73,11 @@ MAX_HAMMING = 3
 # the most corpus rows embedding_near_dup collects to the driver
 NEAR_DUP_MAX_ROWS = 100_000
 # the most edges connected_components labels on the driver; past it the
-# distributed min-label loop runs (16 bytes an edge: 16 MB at the bound)
-CC_DRIVER_MAX_EDGES = 1_000_000
+# distributed min-label loop runs. The largest graph timed on both paths
+# (SCALE.md): the driver path was faster at every size from 10k to 4M
+# edges (21 s against 40-44 s at 4M), with ~1 GB of driver Python memory at
+# 4M; no crossover was found, and past 4M neither side is measured
+CC_DRIVER_MAX_EDGES = 4_000_000
 # the most min-label rounds the distributed loop runs before it raises
 CC_MAX_ITER = 25
 # how long connected_components waits for an observed label sum before it
@@ -570,7 +573,7 @@ def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
 
 
 def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:
-    """(u, label) for every vertex of the (id_a, id_b) edge rows: a
+    """(u, label) for every vertex of the (u, v) edge rows: a
     union-find whose root is always the smaller id, so each root is its
     component's minimum."""
     parent: dict[int, int] = {}
@@ -583,7 +586,7 @@ def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(pairs["id_a"].tolist(), pairs["id_b"].tolist()):
+    for a, b in zip(pairs["u"].tolist(), pairs["v"].tolist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -606,7 +609,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
       component. The labels come back as a local relation,
       broadcast-joined onto ``vertices`` with ``coalesce(label,
       doc_id)``, so a vertex in no edge is its own component. No eager
-      job runs beyond the transfer, and nothing is left in storage.
+      job runs beyond the transfer.
     - **Distributed** (more edges than the bound): iterative min-label
       propagation. Every vertex starts labeled with its own id and
       repeatedly takes the minimum label among itself and its neighbors.
@@ -616,6 +619,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
       / small-star trick only pays off for high-diameter graphs such as
       web link graphs, not dedup clusters). Raises ``RuntimeError`` when
       the labels have not converged after ``CC_MAX_ITER`` rounds.
+
+    Both paths read ``edges`` once: its (u, v) projection is persisted
+    before the bounded transfer, which fills that cache, so past the
+    bound the loop builds its edge table from the cached rows instead of
+    re-running the pair join; either path releases it.
 
     Scale notes for the distributed path: the (undirected) edge table —
     the BIG relation — is hash-partitioned on its join key once and
@@ -642,23 +650,23 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     component_id = min doc_id reachable, both long.
     """
     verts = vertices.select(F.col("doc_id").cast("long").alias("u"))
-    pairs = collect_bounded(
-        edges.select(F.col("id_a").cast("long"), F.col("id_b").cast("long")),
-        CC_DRIVER_MAX_EDGES,
-        what=None,
-    )
+    # the transfer fills this cache; past the bound the loop reads it
+    uv = edges.select(
+        F.col("id_a").cast("long").alias("u"), F.col("id_b").cast("long").alias("v")
+    ).persist()
+    pairs = collect_bounded(uv, CC_DRIVER_MAX_EDGES, what=None)
     if pairs is not None:
+        uv.unpersist()
         labels = vertices.sparkSession.createDataFrame(_min_labels(pairs), "u long, label long")
         return verts.join(F.broadcast(labels), "u", "left").select(
             F.col("u").alias("doc_id"),
             F.coalesce(F.col("label"), F.col("u")).alias("component_id"),
         )
-    e = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # pre-partition the (big, round-invariant) edge table by its join key
     # BEFORE persisting: every round's join then reuses the cached layout
     # and only the (small, changing) label table crosses an exchange
     e = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        uv.unionByName(uv.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .repartition(F.col("v"))
         .persist()
     )
@@ -698,6 +706,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     prev_sum = _observed_sum(obs0, labels)
+    # that job filled ``e``, which no longer reads the transferred rows
+    uv.unpersist()
     converged = False
     for _ in range(CC_MAX_ITER):
         # new label = min(own, every neighbor's): one union + one min

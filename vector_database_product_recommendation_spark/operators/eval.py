@@ -12,8 +12,8 @@ avg_query_time_ms, queries_used).
 The kernels run distributed; the scoring does not. As the reference does
 with the lists FAISS returns, the exact and per-nprobe IVF hit lists are
 collected and scored on the driver. That is at most
-(1 + len(nprobes)) * n_queries * k rows, each list at most
-``HIT_LIST_MAX_ROWS`` (SCALE.md, driver-side materializations).
+(1 + len(nprobes)) * n_queries * k rows, and the query batch is bounded
+by ``knn.QUERY_BATCH_MAX_ROWS`` (SCALE.md, driver-side materializations).
 
 Metric definitions (J6 lineage):
 - Precision@K: |ivf_topk ∩ exact_topk| / k, averaged over queries
@@ -39,16 +39,14 @@ from vector_database_product_recommendation_spark.lifetime import collect_bounde
 from vector_database_product_recommendation_spark.operators.ivf import collect_centroids, ivf_knn
 from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_knn
 
-# the most rows of one top-k list the sweep collects to the driver
-HIT_LIST_MAX_ROWS = 100_000
 
-
-def _hit_lists(topk: DataFrame) -> dict[int, dict[int, int]]:
-    """query_id -> {neighbor_id: rank} of a collected top-k list."""
+def _hit_lists(topk: DataFrame, max_rows: int) -> dict[int, dict[int, int]]:
+    """query_id -> {neighbor_id: rank} of a collected top-k list of at
+    most ``max_rows`` (n_queries * k) rows."""
     pdf = collect_bounded(
         topk.select("query_id", "neighbor_id", "rank"),
-        HIT_LIST_MAX_ROWS,
-        what="a top-k list of the nprobe sweep (eval.HIT_LIST_MAX_ROWS)",
+        max_rows,
+        what="a top-k list of the nprobe sweep (n_queries * k)",
     )
     hits: dict[int, dict[int, int]] = defaultdict(dict)
     for q, n, rank in zip(*(pdf[c].tolist() for c in pdf.columns)):
@@ -84,7 +82,9 @@ def ann_tradeoff(
     n_q = len(q_ids)
     c_arrays = collect_centroids(cents)
 
-    exact = _hit_lists(exact_knn(emb, queries, k, exclude_self=True, query_arrays=q_arrays))
+    exact = _hit_lists(
+        exact_knn(emb, queries, k, exclude_self=True, query_arrays=q_arrays), n_q * k
+    )
     nn1 = {q: n for q, hits in exact.items() for n, rank in hits.items() if rank == 1}
 
     out_rows = []
@@ -101,7 +101,8 @@ def ann_tradeoff(
                 exclude_self=True,
                 query_arrays=q_arrays,
                 centroid_arrays=c_arrays,
-            )
+            ),
+            n_q * k,
         )
         ms_per_query = (time.time() - t0) * 1000.0 / n_q
         precision = sum(len(ivf[q].keys() & exact[q].keys()) / k for q in q_ids) / n_q

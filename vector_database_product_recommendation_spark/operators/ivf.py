@@ -54,7 +54,9 @@ ASSIGN_BLOCK = 65_536
 KMEANS_SEED = 42
 KMEANS_ITERS = 10
 # the most centroids a probe collects to the driver: nlist = ⌊√n⌋ reaches
-# it at n ≈ 4.3e9 rows (65,536 x 384 float64 is 201 MB)
+# it at n ≈ 4.3e9 rows (65,536 x 384 float64 is 201 MB). assign_clusters'
+# per-batch scores (batch x nlist float64) outgrow a task well before it
+# (SCALE.md)
 MAX_CENTROIDS = 65_536
 
 

@@ -34,7 +34,9 @@ from vector_database_product_recommendation_spark.functions.vectors import dot, 
 from vector_database_product_recommendation_spark.lifetime import collect_bounded
 
 # the most query rows a kernel collects to the driver and ships in every
-# task's closure (10k x 384 float64 is 31 MB)
+# task's closure. The scan's memory sets it, not the transfer (31 MB at 384
+# dims): a task scores an Arrow batch (10,000 rows by default) against every
+# query, 800 MB of float64 scores at the bound (SCALE.md)
 QUERY_BATCH_MAX_ROWS = 10_000
 
 
