@@ -60,6 +60,24 @@ def _new_cached_rdds(spark, fn) -> list[int]:
     return [n for i, n in _cached_rdds(spark).items() if i not in before]
 
 
+def test_capped_model_caches_only_its_normalized_table(spark, sf_dir):
+    """The capped-vocabulary model is a view over the uncapped model's
+    cached tf and df: building it and reading its weights caches one
+    table, its normalized weights (no second tf or df)."""
+    full = artifacts.fitted_tfidf(spark, sf_dir)
+    views = []
+
+    def build():
+        views.append(full.capped(7))
+        views[0].weights().count()
+
+    try:
+        assert len(_new_cached_rdds(spark, build)) == 1
+    finally:
+        if views:
+            views[0]._normalized().unpersist()
+
+
 def test_wide_frame_is_coalesced_materialized_and_the_wide_copy_released(spark):
     df = spark.range(100).repartition(7).selectExpr("id", "id * 2 AS x")
     assert df.rdd.getNumPartitions() == 7

@@ -61,7 +61,7 @@ def test_query_local_pins_released_between_queries(spark, sf_dir):
     from vector_database_product_recommendation_spark import lifetime, registry
 
     qmap = registry.queries()
-    fn = qmap["bm25_search"]
+    fn = qmap["hybrid_search"]
 
     def n_cached() -> int:
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
@@ -72,12 +72,10 @@ def test_query_local_pins_released_between_queries(spark, sf_dir):
     for _ in range(3):  # median-of-3 style re-runs stay warm and bounded
         fn(spark, sf_dir).count()
     assert n_cached() <= cached_after_one
-    # a different pinning query evicts the previous query's pins (the
-    # session-scoped tfidf/embedding ARTIFACTS it builds are not pins and
-    # live as long as the session, so assert on the pin registry)
-    qmap["hybrid_search"](spark, sf_dir).count()
-    assert lifetime.pinned_count() == 1  # only hybrid's sparse pin lives
-    lifetime.release_pins()
+    # a different query evicts hybrid's pins (the session-scoped tfidf/
+    # embedding ARTIFACTS it reads are not pins and live as long as the
+    # session, so assert on the pin registry)
+    qmap["tfidf_search"](spark, sf_dir).count()
     assert lifetime.pinned_count() == 0
 
 

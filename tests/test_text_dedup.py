@@ -278,6 +278,24 @@ def test_connected_components_raises_past_the_round_budget(spark, monkeypatch):
         dedup.connected_components(verts, edges)
 
 
+def test_connected_components_frees_superseded_round_checkpoints(spark, monkeypatch):
+    """The distributed loop (forced by an edge bound of 0) checkpoints
+    every round; a 9-hop path takes ten of them. Each call leaves at most
+    one new storage entry: the final labels its lazy result reads."""
+    verts = spark.createDataFrame([(i,) for i in range(1, 11)], "doc_id long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(1, 10)], "id_a long, id_b long")
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+
+    def stored() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    for _ in range(3):
+        before = stored()
+        out = dedup.connected_components(verts, edges).collect()
+        assert {r["component_id"] for r in out} == {1}
+        assert stored() - before <= 1
+
+
 @pytest.mark.parametrize("bound", ["driver", "distributed"])
 def test_connected_components_computes_the_edges_once(spark, monkeypatch, bound):
     """Each edge row is computed once on either path: the transfer that

@@ -10,7 +10,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
 from vector_database_product_recommendation_spark.operators.knn import item_to_item
 from vector_database_product_recommendation_spark.operators.tfidf import (
     TfidfModel,
@@ -32,7 +31,7 @@ def emb(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def model(docs):
-    return TfidfModel(docs, "doc_id", "text", STOPWORDS_EN)
+    return TfidfModel(docs, "doc_id", "text")
 
 
 def test_tfidf_weights_unit_norm(model):
@@ -68,15 +67,11 @@ def test_hybrid_scores_bounded(docs, emb, model):
     assert all(-1.0 <= r["score"] <= 1.3 for r in rows)
 
 
-def test_bm25_self_retrieval_and_positive_scores(spark, sf_dir):
-    import pyspark.sql.functions as F
-
+def test_bm25_self_retrieval_and_positive_scores(docs, model):
     from vector_database_product_recommendation_spark.operators.tfidf import bm25_search
-    from vector_database_product_recommendation_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
     qtext = docs.filter(F.col("doc_id") == 7).select("text").first()[0]
-    rows = bm25_search(qtext, docs, k=10).collect()
+    rows = bm25_search(qtext, model, k=10).collect()
     assert rows, "bm25 returned no rows"
     assert all(r["score"] > 0 for r in rows)
     # the query document scores at least as high as every other hit
@@ -85,13 +80,32 @@ def test_bm25_self_retrieval_and_positive_scores(spark, sf_dir):
     assert self_score and self_score[0] == top_score
 
 
-def test_base_tf_without_max_features_raises(docs):
-    """A shared tf frame only seeds a capped refit; an uncapped model over
-    it would co-own (and on teardown unpersist) the sibling's cache."""
-    base = TfidfModel(docs, "doc_id", "text", STOPWORDS_EN)
-    try:
-        with pytest.raises(ValueError, match="max_features"):
-            TfidfModel(docs, "doc_id", "text", STOPWORDS_EN, base_tf=base.tf)
-    finally:
-        for df in (base.tf, base.dfreq):
-            df.unpersist()
+def _run_nodes(plan) -> list[str]:
+    """The node names of an executed physical plan, through its adaptive
+    query stages. A cached table is a leaf: its own plan ran when it was
+    filled, not in this query."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _run_nodes(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _run_nodes(plan.plan())
+    kids = plan.children()
+    return [plan.nodeName()] + [n for i in range(kids.size()) for n in _run_nodes(kids.apply(i))]
+
+
+def test_bm25_reads_the_fitted_stats_without_retokenizing(spark, docs, model):
+    """BM25 scores over the model's cached tf/df: its executed plan runs no
+    Arrow kernel and it caches nothing of its own, so the corpus is not
+    tokenized again."""
+    from vector_database_product_recommendation_spark.operators.tfidf import bm25_search
+
+    def n_cached() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    qtext = docs.filter(F.col("doc_id") == 7).select("text").first()[0]
+    before = n_cached()
+    out = bm25_search(qtext, model, k=10)
+    assert out.collect()
+    nodes = _run_nodes(out._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in nodes and "MapInPandas" not in nodes
+    assert n_cached() == before

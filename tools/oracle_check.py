@@ -16,7 +16,7 @@ import os
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

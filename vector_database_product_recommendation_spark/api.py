@@ -45,7 +45,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
-from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
 from vector_database_product_recommendation_spark.functions.vectors import matrix
 from vector_database_product_recommendation_spark.lifetime import collect_bounded
 from vector_database_product_recommendation_spark.operators.knn import (
@@ -317,7 +316,7 @@ class ProductSearchEngine:
 
     def _tfidf_model(self) -> TfidfModel:
         if self._tfidf is None:
-            self._tfidf = TfidfModel(self.catalog, "id", "example_text", STOPWORDS_EN)
+            self._tfidf = TfidfModel(self.catalog, "id", "example_text")
         return self._tfidf
 
     # -- E2: item-to-item -------------------------------------------------

@@ -61,24 +61,14 @@ def fitted_tfidf(
     max_features: int | None = None,
 ):
     """The corpus-fitted TfidfModel over ``documents`` (joblib-pickle
-    analog, SURVEY.md section 1.4)."""
-    from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
+    analog, SURVEY.md section 1.4); with ``max_features``, the uncapped
+    model's capped-vocabulary view (``TfidfModel.capped``), which shares
+    its cached tf and df tables."""
     from vector_database_product_recommendation_spark.operators.tfidf import TfidfModel
 
-    # a capped-vocabulary fit only prunes the vocabulary of the uncapped
-    # fit over the same corpus: reuse its (cached) tf table instead of
-    # re-tokenizing the corpus (values identical)
-    base_tf = None
     if max_features is not None:
-        base_tf = fitted_tfidf(spark, sf_dir).tf
-    return TfidfModel(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        STOPWORDS_EN,
-        max_features=max_features,
-        base_tf=base_tf,
-    )
+        return fitted_tfidf(spark, sf_dir).capped(max_features)
+    return TfidfModel(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @_memo

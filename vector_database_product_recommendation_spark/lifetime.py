@@ -1,14 +1,12 @@
 """Persist lifetimes: query-scoped pins and session-scoped artifacts, and
 the one bounded transfer of a frame to the driver (:func:`collect_bounded`).
 
-Two queries persist an intermediate that feeds two or more consumers
-inside the SAME query and depends on the query itself:
-``tfidf.hybrid_search`` its sparse scores (the blend's bounds and its
-rescale) and ``tfidf.bm25_search`` its per-document term stats (four
-consumers of one kernel pass). Those persists are QUERY-LOCAL: nothing
-outside the one invocation ever reads them — but a bare ``.persist()``
-has no release point, so a long bench session pins a fresh copy per
-invocation (bounded only by LRU eviction).
+One query persists an intermediate that feeds two consumers inside the
+SAME query and depends on the query itself: ``tfidf.hybrid_search`` its
+sparse scores (the blend's bounds and its rescale). That persist is
+QUERY-LOCAL: nothing outside the one invocation ever reads it — but a
+bare ``.persist()`` has no release point, so a long bench session would
+pin a fresh copy per invocation (bounded only by LRU eviction).
 
 The contract: operators mark such intermediates with :func:`pin`; the
 registry wrapper calls :func:`release_pins` as each new query begins, so

@@ -596,6 +596,13 @@ def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"u": us, "label": [find(u) for u in us]}, dtype="int64")
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``ed frame. Its rows live in a
+    persisted RDD that the CacheManager does not know, so
+    ``df.unpersist()`` releases nothing; the RDD is unpersisted itself."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every vertex
     is labeled with the minimum id reachable from it.
@@ -632,9 +639,10 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     (map-side partial combine shrinks neighbor labels before the
     exchange) instead of a join-back. Text never moves.
     ``localCheckpoint`` after every round truncates the lineage so round
-    N's plan does not replay rounds 1..N-1. Convergence is detected with
-    a label-sum metric (labels are monotone non-increasing, so an
-    unchanged label sum means a fixed point) OBSERVED on the checkpoint
+    N's plan does not replay rounds 1..N-1; each round frees the
+    checkpoint it supersedes, so only the final labels stay stored. Convergence is
+    detected with a label-sum metric (labels are monotone non-increasing,
+    so an unchanged label sum means a fixed point) OBSERVED on the checkpoint
     materialization itself (`Dataset.observe` piggybacks the aggregate on
     the job that is already running) — no separate convergence job per
     round, and no per-row change join.
@@ -728,8 +736,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
         cur_sum = _observed_sum(obs, new_labels)
         # the new checkpoint is materialized (eager=True), so the superseded
         # round's blocks can be released now — without this, every round's
-        # checkpoint lives until the job ends (unbounded storage growth)
-        labels.unpersist()
+        # checkpoint lives until a JVM garbage collection
+        _release_checkpoint(labels)
         labels = new_labels
         if cur_sum == prev_sum:
             converged = True
@@ -737,7 +745,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
         prev_sum = cur_sum
     e.unpersist()
     if not converged:
-        labels.unpersist()
+        _release_checkpoint(labels)
         raise RuntimeError(
             f"connected_components did not converge within CC_MAX_ITER="
             f"{CC_MAX_ITER} rounds — returning here would yield silently-wrong "

@@ -40,6 +40,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from vector_database_product_recommendation_spark.functions.vectors import dot, matrix
 from vector_database_product_recommendation_spark.operators.ivf import (
     MAX_POINTS_PER_CENTROID,
     _corpus_shape,
@@ -98,7 +99,7 @@ def encode_pq(emb: DataFrame, codebooks: list[np.ndarray]) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
+            x = matrix(pdf["embedding"])
             codes = np.empty((len(x), m), dtype=np.int32)
             for j, cents in enumerate(books):
                 sub = x[:, j * dsub : (j + 1) * dsub]
@@ -171,8 +172,6 @@ def pq_knn(
     # exchange. Past the bound (a refine_factor near the corpus size makes
     # the candidates up to queries x corpus rows) the join is left to the
     # planner's size estimate, which broadcasts whichever side is small.
-    from vector_database_product_recommendation_spark.functions.vectors import dot
-
     full = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
     qtype = queries.schema["query_id"].dataType.simpleString()
     qdf = codes_df.sparkSession.createDataFrame(

@@ -22,14 +22,17 @@ sklearn parity notes:
 - smooth idf: ln((1+n)/(1+df)) + 1
 - tf is the raw count (sublinear_tf=False), l2-normalized per doc AFTER
   tf*idf
-- stop-word list is a parameter; the engine default is our 20-word list,
-  not sklearn's 318 (vocabulary choice, not an algorithm difference).
+- stop words are STOPWORDS_EN, our 20-word list, not sklearn's 318
+  (vocabulary choice, not an algorithm difference).
+
+One fitted state per corpus: ``TfidfModel``'s cached tf and df tables
+(plus n) are the only term statistics. The capped-vocabulary model
+(``TfidfModel.capped``) and BM25 (``bm25_search``) are views over them;
+nothing re-tokenizes the corpus after the fit.
 
 Scale notes: tf/df/norm are all hash aggregates with map-side combine; the
 scored join broadcasts the query's terms (a query has O(10) terms). The
 only full-corpus shuffles key on `term` and `doc_id`, both fine-grained.
-The df table doubles as the vocabulary pruner (max_features) via top-k on
-df — omitted here because the synthetic vocab is far below 20000.
 """
 
 from __future__ import annotations
@@ -51,23 +54,22 @@ TOKEN_PATTERN = r"\w\w+"
 # (oracle-verified across sf0.001/0.01/0.1): a non-ASCII query like
 # "café" yields the same "caf" token as the Column form.
 _token_pat = re.compile(TOKEN_PATTERN, flags=re.ASCII)
+_STOP = frozenset(STOPWORDS_EN)
 
 # Okapi BM25 term-frequency saturation and length normalization
 BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _tokens(text: str | None, stop: frozenset) -> list[str]:
+def _tokens(text: str | None) -> list[str]:
     """The tokens of one string, in order: TOKEN_PATTERN runs over the
-    lowercased text (None has none), stop words dropped. The one
-    tokenizer of every TF-IDF/BM25 path, corpus kernels and driver-side
-    queries alike."""
-    return [w for w in _token_pat.findall((text or "").lower()) if w not in stop]
+    lowercased text (None has none), STOPWORDS_EN dropped. The one
+    tokenizer of every TF-IDF/BM25 path, the corpus kernel and
+    driver-side queries alike."""
+    return [w for w in _token_pat.findall((text or "").lower()) if w not in _STOP]
 
 
-def _doc_term_counts(
-    docs: DataFrame, id_col: str, text_col: str, stopwords
-) -> DataFrame:
+def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, term, tf) — term frequency per document, one Arrow kernel.
 
     Same values as exploding ``regexp_extract_all(lower(text),
@@ -77,7 +79,6 @@ def _doc_term_counts(
     token occurrence AND the (doc_id, term) hash exchange. Tokens come
     from ``_tokens``, byte-identical to the Column form.
     """
-    stop = frozenset(stopwords)
     src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     dtype = src.schema["doc_id"].dataType.simpleString()
 
@@ -91,7 +92,7 @@ def _doc_term_counts(
             terms: list[str] = []
             tfs: list[int] = []
             for did, t in zip(pdf["doc_id"], pdf["__t"]):
-                counts = Counter(_tokens(t, stop))
+                counts = Counter(_tokens(t))
                 ids.extend([did] * len(counts))
                 terms.extend(counts.keys())
                 tfs.extend(counts.values())
@@ -103,66 +104,50 @@ def _doc_term_counts(
 class TfidfModel:
     """The fitted state (tf, df, n) with the per-scan shuffles cached under
     the one persist rule (``lifetime.persist_right_sized``) —
-    every downstream consumer (weights, query transform, search, hybrid)
-    derives from these without re-running tokenization/aggregation. The
-    warehouse-scale analog is writing the tf/df tables once per corpus."""
+    every downstream consumer (weights, query transform, search, hybrid,
+    the capped view, BM25) derives from these without re-running
+    tokenization/aggregation. The warehouse-scale analog is writing the
+    tf/df tables once per corpus."""
 
-    def __init__(
-        self,
-        docs: DataFrame,
-        id_col: str,
-        text_col: str,
-        stopwords,
-        max_features: int | None = None,
-        base_tf: DataFrame | None = None,
-    ):
-        if base_tf is not None and max_features is None:
-            # an uncapped model over base_tf would only be the sibling's
-            # own fit, sharing its cached tf frame
-            raise ValueError("base_tf seeds a capped refit only: pass max_features")
-        self.docs = docs
-        self.id_col = id_col
-        self.text_col = text_col
-        self.stopwords = stopwords
+    def __init__(self, docs: DataFrame, id_col: str, text_col: str):
         # corpus row count is FITTED STATE (sklearn stores it as n_samples_);
         # kept as a plain int so consumers fold it into expressions as a
         # literal (the old one-row crossJoin form re-scanned docs on every
         # query transform).
         self.n = docs.count()
-        # ``base_tf``: an already-fitted (doc_id, term, tf) table from a
-        # sibling model over the SAME (docs, stopwords) — a capped-vocabulary
-        # refit only prunes the vocabulary, so re-tokenizing the corpus for
-        # it is pure waste (artifacts.fitted_tfidf passes the uncapped
-        # model's tf). Values are identical by construction.
-        tf = (
-            base_tf
-            if base_tf is not None
-            else _doc_term_counts(docs, id_col, text_col, stopwords)
-        )
-        if max_features is not None:
-            # sklearn max_features semantics: keep the top-k vocabulary by
-            # total corpus term count (ties broken alphabetically — made
-            # explicit here where sklearn relies on sort stability).
-            from pyspark.sql import Window
-
-            vocab = (
-                tf.groupBy("term")
-                .agg(F.sum("tf").alias("cnt"))
-                .withColumn(
-                    "rk",
-                    F.row_number().over(
-                        Window.orderBy(F.desc("cnt"), F.asc("term"))
-                    ),
-                )
-                .filter(F.col("rk") <= max_features)
-                .select("term")
-            )
-            tf = tf.join(F.broadcast(vocab), "term")
-        self.tf = persist_right_sized(tf)
+        self.tf = persist_right_sized(_doc_term_counts(docs, id_col, text_col))
         self.dfreq = persist_right_sized(
             self.tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         )
         self._normalized_df: DataFrame | None = None
+
+    def capped(self, max_features: int) -> TfidfModel:
+        """The model with its vocabulary capped at ``max_features`` terms,
+        as a view: tf and df are this model's cached tables restricted to
+        the capped vocabulary, n is shared, and only the view's own
+        normalized table is persisted (when first read). sklearn
+        max_features semantics: keep the top-k vocabulary by total corpus
+        term count (ties broken alphabetically — made explicit here where
+        sklearn relies on sort stability); df on a kept term is the same
+        count either way."""
+        from pyspark.sql import Window
+
+        vocab = F.broadcast(
+            self.tf.groupBy("term")
+            .agg(F.sum("tf").alias("cnt"))
+            .withColumn(
+                "rk", F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("term")))
+            )
+            .filter(F.col("rk") <= max_features)
+            .select("term")
+        )
+        # the view shares the fitted tables, so it skips the fit
+        view = TfidfModel.__new__(TfidfModel)
+        view.n = self.n
+        view.tf = self.tf.join(vocab, "term")
+        view.dfreq = self.dfreq.join(vocab, "term")
+        view._normalized_df = None
+        return view
 
     def _raw(self, tf: DataFrame, keys: list[str]) -> DataFrame:
         # (1 + n) enters as an exact integer literal — value-identical to
@@ -216,13 +201,21 @@ class TfidfModel:
         tokenized DRIVER-SIDE (``_tokens``, byte-identical to the Column
         form) into a literal local relation: no corpus-side job runs just
         to split one string. Counts are exact integers; every float enters
-        downstream through the same engine expressions as before."""
+        downstream through the same engine expressions as before.
+
+        The relation comes from a pandas frame, which Spark keeps as a
+        LocalRelation (a list would become a fresh RDD scan), so the same
+        query text builds the same plan: a re-run matches its cached
+        (``lifetime.pin``ned) intermediates. An empty query carries one
+        null row, filtered out, because an empty frame would become an
+        RDD scan."""
         from collections import Counter
 
-        spark = self.docs.sparkSession
-        counts = Counter(_tokens(query_text, frozenset(self.stopwords)))
+        spark = self.tf.sparkSession
+        counts = Counter(_tokens(query_text))
+        q_tf = pd.DataFrame(sorted(counts.items()) or [(None, None)], columns=["term", "tf"])
         q_tf = spark.createDataFrame(
-            sorted(counts.items()) or [(None, None)], "term string, tf long"
+            q_tf.astype({"tf": "Int64"}), "term string, tf long"
         ).filter(F.col("term").isNotNull())
         raw = self._raw(q_tf, ["term"])
         nrm = raw.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
@@ -328,77 +321,34 @@ def hybrid_search(
     return blend_hybrid(sparse, dense, alpha, k)
 
 
-def bm25_search(query_text: str, docs: DataFrame, k: int) -> DataFrame:
+def bm25_search(query_text: str, model: TfidfModel, k: int) -> DataFrame:
     """Okapi BM25 ranked retrieval (Robertson et al., TREC-3), the lexical
     scorer the reference's TF-IDF path approximates: score(q, d) =
     sum over query terms of idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
     with the always-positive Lucene idf ln(1 + (n-df+0.5)/(df+0.5)),
     k1 = BM25_K1 and b = BM25_B, over the STOPWORDS_EN-filtered tokens.
 
-    Spark shape: BOTH corpus statistics BM25 needs — query-term tf and
-    per-doc length dl — are DOC-LOCAL, so ONE Arrow kernel pass over the
-    corpus emits them together (dl rows carry term=NULL): no token
-    occurrence is ever exploded or exchanged (the previous form exploded
-    every corpus token twice, once per statistic, and hash-exchanged the
-    query-term postings to count them). Query terms are tokenized
-    driver-side by the same ``_tokens`` as the corpus and ship in the
-    kernel closure. df over the kernel's tf rows equals full-corpus df
-    on those terms; dl/avgdl stay all-terms by definition. Corpus-level
-    scalars (n, avgdl) ride along as broadcast crossJoins, so nothing
-    collects to the driver. Per-term contributions round to 12 decimals
-    before the sum so engine FP noise stays below the final 6-decimal
-    round (same policy as TfidfModel).
+    Every corpus statistic is read off the fitted ``model``: tf is the
+    query terms' rows of ``model.tf``, df their rows of ``model.dfreq``, n
+    is ``model.n``, and a document's length dl is its summed tf (the same
+    ``_tokens`` stream, so a document without tokens has no dl, as it has
+    no tf). Query terms are tokenized driver-side by ``_tokens``; the
+    corpus is not tokenized again. avgdl rides along as a broadcast
+    crossJoin, so nothing collects to the driver. Per-term contributions
+    round to 12 decimals before the sum so engine FP noise stays below
+    the final 6-decimal round (same policy as TfidfModel).
     """
-    stop = frozenset(STOPWORDS_EN)
-    qset = frozenset(_tokens(query_text, stop))
+    qterms = sorted(set(_tokens(query_text)))
     k1, b = BM25_K1, BM25_B
 
-    src = docs.select("doc_id", "text")
-    dtype = src.schema["doc_id"].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids: list = []
-            terms_out: list = []
-            tfs: list = []
-            dls: list = []
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                toks = _tokens(t, stop)
-                if not toks:
-                    # zero post-stopword tokens: absent from dl (and tf),
-                    # exactly like the old explode->aggregate form
-                    continue
-                ids.append(did)
-                terms_out.append(None)
-                tfs.append(None)
-                dls.append(len(toks))
-                counts = Counter(w for w in toks if w in qset)
-                ids.extend([did] * len(counts))
-                terms_out.extend(counts.keys())
-                tfs.extend(counts.values())
-                dls.extend([None] * len(counts))
-            yield pd.DataFrame(
-                {"doc_id": ids, "term": terms_out, "tf": tfs, "dl": dls}
-            )
-
-    # query-local pin: the stats table feeds dl (avgdl + contribution join)
-    # and tf (df count + contribution) — four consumers of one kernel pass
-    stats = pin(
-        src.mapInPandas(kernel, f"doc_id {dtype}, term string, tf long, dl long")
-    )
-    dl = stats.filter(F.col("term").isNull()).select("doc_id", "dl")
-    tf = stats.filter(F.col("term").isNotNull()).select("doc_id", "term", "tf")
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = docs.agg(F.count(F.lit(1)).alias("n"))
+    tf = model.tf.filter(F.col("term").isin(qterms))
+    dl = model.tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     avgdl = dl.agg(F.avg("dl").alias("avgdl"))
-
-    idf = dfreq.crossJoin(F.broadcast(n)).select(
+    idf = model.dfreq.filter(F.col("term").isin(qterms)).select(
         "term",
-        F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
+        F.log(
+            F.lit(1.0) + (F.lit(model.n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+        ).alias("idf"),
     )
     contrib = (
         tf.join(F.broadcast(idf), "term")

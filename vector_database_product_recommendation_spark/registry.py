@@ -831,11 +831,12 @@ FROM contrib GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20
 
 @register("bm25_search", _BM25_ORACLE)
 def _bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from vector_database_product_recommendation_spark.artifacts import fitted_tfidf
     from vector_database_product_recommendation_spark.operators.tfidf import bm25_search
 
     docs = load_table(spark, sf_dir, "documents")
     qtext = docs.filter(F.col("doc_id") == 7).select("text").first()[0]
-    return bm25_search(qtext, docs, k=20)
+    return bm25_search(qtext, fitted_tfidf(spark, sf_dir), k=20)
 
 
 # ---------------------------------------------------------------------------
