@@ -95,6 +95,24 @@ def test_train_on_empty_corpus_names_it(emb):
         train_kmeans_centroids(emb.limit(0))
 
 
+def test_build_checks_max_centroids_before_training(emb, monkeypatch):
+    """More lists than ivf.MAX_CENTROIDS raise before either trainer runs."""
+    calls = []
+    for name in ("_lloyd", "_mllib_centroids"):
+        real = getattr(ivf, name)
+
+        def spy(*args, _real=real, _name=name, **kwargs):
+            calls.append(_name)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(ivf, name, spy)
+    monkeypatch.setattr(ivf, "MAX_CENTROIDS", 2)
+    assert emb.count() >= 9
+    with pytest.raises(ValueError, match="MAX_CENTROIDS"):
+        build_ivf_index(emb)
+    assert calls == []
+
+
 def test_mllib_fallback_past_the_byte_budget(emb, monkeypatch):
     """A sample past the driver byte budget trains with MLlib KMeans."""
     monkeypatch.setattr(ivf, "MAX_TRAIN_BYTES", 1)

@@ -53,6 +53,16 @@ def test_star_joins_broadcast_dims(built_plans):
         assert audit.count_broadcast_joins(built_plans[name]) >= 1, name
 
 
+def test_profile_queries_run_one_arrow_pass_and_no_lambda(built_plans):
+    """Language ID and fingerprinting read the profile kernel: one
+    MapInPandas each, and no interpreted per-token lambda function."""
+    for name in ("lang_id_pred", "doc_fingerprint"):
+        df = built_plans[name]
+        df.collect()
+        assert audit.executed_nodes(df).count("MapInPandas") == 1, name
+        assert "lambdafunction" not in audit.optimized_plan(df), name
+
+
 def test_query_local_pins_released_between_queries(spark, sf_dir):
     """Lifetime contract: the cached-RDD population
     must not grow across a bench session — same-query re-runs reuse the

@@ -12,6 +12,8 @@ from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 
+from vector_database_product_recommendation_spark import lifetime
+from vector_database_product_recommendation_spark.artifacts import ivf_store
 from vector_database_product_recommendation_spark.sources import formats as FMT
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
@@ -88,15 +90,16 @@ def test_roundtrip_copies_land_under_one_root(spark):
         FMT.orc_roundtrip_embeddings,
     )
     files = [f for q in queries for f in q(spark, SF_DIR).inputFiles()]
-    root = FMT._copies_root
+    files += ivf_store(spark, SF_DIR)[1].inputFiles()
+    root = lifetime._scratch_root
     assert root is not None and os.path.isdir(root)
     assert files and all(urlparse(f).path.startswith(root + os.sep) for f in files)
 
 
 def test_roundtrip_copies_root_is_removed_at_exit(tmp_path):
     code = (
-        "from vector_database_product_recommendation_spark.sources import formats as FMT\n"
-        "print(FMT._copy_dir('csv_docs_'))\n"
+        "from vector_database_product_recommendation_spark.lifetime import scratch_dir\n"
+        "print(scratch_dir('csv_docs_'))\n"
     )
     env = dict(os.environ, PYTHONPATH=REPO, TMPDIR=str(tmp_path))
     out = subprocess.run(

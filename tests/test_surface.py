@@ -23,6 +23,10 @@ reaches. An AST walk (so a docstring mention is not a caller) checks:
   expression or a forwarded ``*args``/``**kwargs`` carries whatever its
   own caller passes, so it counts as a value of its own beside the rest.
 
+No two public top-level definitions of the package share a name: the
+checks above match a definition by its bare name, so a same-named twin
+would hide one that only the tests call.
+
 ``KEPT`` names each exception and why it stays.
 """
 
@@ -31,6 +35,7 @@ from __future__ import annotations
 import ast
 import glob
 import os
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "vector_database_product_recommendation_spark"
@@ -314,6 +319,11 @@ def single_valued_options() -> set[str]:
 
 def _kept(name: str) -> bool:
     return any(name == k or name.startswith(k + ".") for k in KEPT)
+
+
+def test_no_two_public_definitions_share_a_name():
+    names = Counter(node.name for _, node in _public_defs())
+    assert sorted(n for n, c in names.items() if c > 1) == []
 
 
 def test_every_public_function_has_a_non_test_caller():

@@ -11,11 +11,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from vector_database_product_recommendation_spark.functions.text import (
-    doc_fingerprint,
-    lang_id,
-    token_count_ws,
-)
+from vector_database_product_recommendation_spark.functions.text import token_count_ws
 from vector_database_product_recommendation_spark.functions.textprof import profile_docs_py
 from vector_database_product_recommendation_spark.operators import dedup
 from vector_database_product_recommendation_spark.operators.dedup import (
@@ -58,7 +54,7 @@ def test_lang_id_markers(spark):
             (4, "xyzzy qwerty"),
         ],
     )
-    out = {r["doc_id"]: r["l"] for r in df.select("doc_id", lang_id("text").alias("l")).collect()}
+    out = {r["doc_id"]: r["lang"] for r in profile_docs_py(df, ("lang",)).collect()}
     assert out[1] == "en"
     assert out[2] == "de"
     assert out[3] == "fr"
@@ -67,7 +63,7 @@ def test_lang_id_markers(spark):
 
 def test_fingerprint_order_invariant(spark):
     df = _docs(spark, [(1, "b a c a"), (2, "a b c"), (3, "a b d")])
-    out = {r["doc_id"]: r["f"] for r in df.select("doc_id", doc_fingerprint("text").alias("f")).collect()}
+    out = {r["doc_id"]: r["fingerprint"] for r in profile_docs_py(df, ("fingerprint",)).collect()}
     assert out[1] == out[2]  # same distinct token set
     assert out[1] != out[3]
 
@@ -185,8 +181,9 @@ def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark, monkeypatch)
 
 def test_text_functions_property_fuzz(spark):
     """Property fuzz (hypothesis): for arbitrary printable strings, the
-    Column-expression text ops agree with their plain-Python definitions
-    and the profile kernel's quality stays in range."""
+    Column-expression token count and the profile kernel's fingerprint
+    agree with their plain-Python definitions and its quality stays in
+    range."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -200,20 +197,18 @@ def test_text_functions_property_fuzz(spark):
     collect()
     rows = [(i, t) for i, t in enumerate(texts_acc)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = df.select(
-        "doc_id",
-        token_count_ws("text").alias("n"),
-        doc_fingerprint("text").alias("f"),
-    ).join(profile_docs_py(df, ("quality",)).withColumnRenamed("quality", "q"), "doc_id").collect()
+    out = df.select("doc_id", token_count_ws("text").alias("n")).join(
+        profile_docs_py(df, ("quality", "fingerprint")), "doc_id"
+    ).collect()
     by_id = {r["doc_id"]: r for r in out}
     for i, t in rows:
         r = by_id[i]
         assert r["n"] == len(t.lower().split())
-        assert 0.0 <= r["q"] <= 1.0
+        assert 0.0 <= r["quality"] <= 1.0
         import hashlib as _h
 
         expect = _h.md5(" ".join(sorted(set(t.lower().split()))).encode()).hexdigest()
-        assert r["f"] == expect
+        assert r["fingerprint"] == expect
 
 
 def test_corpus_prep_funnel_monotone(spark, sf_dir):

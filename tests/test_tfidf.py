@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from vector_database_product_recommendation_spark.operators.knn import item_to_item
+from vector_database_product_recommendation_spark.plans import audit
 from vector_database_product_recommendation_spark.operators.tfidf import (
     TfidfModel,
     hybrid_search,
@@ -80,19 +81,6 @@ def test_bm25_self_retrieval_and_positive_scores(docs, model):
     assert self_score and self_score[0] == top_score
 
 
-def _run_nodes(plan) -> list[str]:
-    """The node names of an executed physical plan, through its adaptive
-    query stages. A cached table is a leaf: its own plan ran when it was
-    filled, not in this query."""
-    name = plan.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        return _run_nodes(plan.executedPlan())
-    if name.endswith("QueryStageExec"):
-        return _run_nodes(plan.plan())
-    kids = plan.children()
-    return [plan.nodeName()] + [n for i in range(kids.size()) for n in _run_nodes(kids.apply(i))]
-
-
 def test_bm25_reads_the_fitted_stats_without_retokenizing(spark, docs, model):
     """BM25 scores over the model's cached tf/df: its executed plan runs no
     Arrow kernel and it caches nothing of its own, so the corpus is not
@@ -106,6 +94,6 @@ def test_bm25_reads_the_fitted_stats_without_retokenizing(spark, docs, model):
     before = n_cached()
     out = bm25_search(qtext, model, k=10)
     assert out.collect()
-    nodes = _run_nodes(out._jdf.queryExecution().executedPlan())
+    nodes = audit.executed_nodes(out)
     assert "InMemoryTableScan" in nodes and "MapInPandas" not in nodes
     assert n_cached() == before

@@ -25,7 +25,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from vector_database_product_recommendation_spark.lifetime import persist_right_sized
+from vector_database_product_recommendation_spark.lifetime import persist_right_sized, scratch_dir
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 _CACHE: dict[tuple, Any] = {}
@@ -135,18 +135,16 @@ def ivf_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centroids, store) where `store` is the corpus REOPENED from a
     cluster-partitioned parquet layout (write_ivf_store) — probing filters
     on cluster_id become native partition pruning, the on-disk
-    inverted-file. Written once per (session, corpus) under a scratch dir;
-    at warehouse scale this is a real table written by the offline
-    indexing job."""
-    import tempfile
-
+    inverted-file. Written once per (session, corpus) under a
+    ``lifetime.scratch_dir``, removed at process exit; at warehouse scale
+    this is a real table written by the offline indexing job."""
     from vector_database_product_recommendation_spark.operators.ivf import (
         read_ivf_store,
         write_ivf_store,
     )
 
     cents, assigned = ivf_index(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="ivf_store_")
+    path = scratch_dir("ivf_store_")
     write_ivf_store(assigned, path)
     return cents, read_ivf_store(spark, path)
 

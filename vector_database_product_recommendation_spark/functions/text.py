@@ -6,14 +6,16 @@ text into `combined_text`, SURVEY.md section 1.1 P10; everything further —
 tokenization, stop words — lives inside its sklearn TF-IDF, section 1.4).
 
 Design rules:
-- pure Column expressions only (whole-stage codegen; no Python workers in
-  the hot path). Every function here has an exact DuckDB-SQL twin used by
-  the driver oracle.
+- pure Column expressions only. Every function here has an exact
+  DuckDB-SQL twin used by the driver oracle.
 - cross-engine determinism: the only hash primitive is md5 (identical
   everywhere).
 
-The per-document profile metrics (token counts, ratios, quality score)
-are computed by the Arrow kernel in functions/textprof.py.
+The whitespace tokens and their count stay Column expressions because
+SimHash and the document encoder read them. The per-document profile
+(ratios, quality score, language ID, fingerprint) is the Arrow kernel of
+functions/textprof.py: as Column expressions, its per-token lambdas cost
+more than the whole scan.
 """
 
 from __future__ import annotations
@@ -22,8 +24,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 # Marker stop words per language for the n-gram/stopword language-ID
-# heuristic. Tiny on purpose: the heuristic must be expressible in ANSI SQL
-# (the oracle) and cheap at 100 TB (a handful of array_contains per row).
+# heuristic (functions/textprof.py). Tiny on purpose: the heuristic must be
+# expressible in ANSI SQL (the oracle) and cheap at 100 TB (a handful of
+# set lookups per token).
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "and", "of", "to", "is", "in", "it"),
     "de": ("der", "die", "das", "und", "ist", "nicht", "ein", "zu"),
@@ -56,34 +59,3 @@ def tokens_ws(text: Column | str) -> Column:
 def token_count_ws(text: Column | str) -> Column:
     """Whitespace token count (the `wc -w` number)."""
     return F.size(tokens_ws(text))
-
-
-def lang_id(text: Column | str) -> Column:
-    """Marker-stopword language ID: count per-language marker hits over the
-    token array; argmax wins, ties broken by language code order, rows with
-    zero hits everywhere -> 'und' (undetermined, BCP-47 convention)."""
-    toks = tokens_ws(text)
-    pairs = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        arr = F.array(*[F.lit(m) for m in markers])
-        # NB: F.filter consumes the lambda immediately, so closing over `arr`
-        # is safe; a default-arg binding would make pyspark treat it as the
-        # 2-arg (element, index) form.
-        pairs.append(
-            (lang, F.size(F.filter(toks, lambda t: F.array_contains(arr, t))))
-        )
-    # left fold, earlier language wins ties (matches the oracle's CASE chain)
-    best_lang, best_score = F.lit(pairs[0][0]), pairs[0][1]
-    for lang, score in pairs[1:]:
-        keep = best_score >= score
-        best_lang = F.when(keep, best_lang).otherwise(F.lit(lang))
-        best_score = F.when(keep, best_score).otherwise(score)
-    return F.when(best_score > 0, best_lang).otherwise(F.lit("und"))
-
-
-def doc_fingerprint(text: Column | str) -> Column:
-    """OpenRefine-style content fingerprint: md5 of the sorted distinct
-    whitespace tokens joined by one space. Identical token multiset-modulo-
-    duplicates -> identical fingerprint; robust to word order and repeats."""
-    toks = F.array_sort(F.array_distinct(tokens_ws(text)))
-    return F.md5(F.array_join(toks, " "))

@@ -1,18 +1,22 @@
-"""Per-document text profile — token counts, mean token length,
-stopword and punctuation ratios, quality score, language, fingerprint —
-in one Arrow kernel pass.
+"""The one per-document Arrow pass (:func:`per_doc`) and the text profile
+built on it: token counts, mean token length, stopword and punctuation
+ratios, quality score, language, fingerprint.
 
-Each metric is defined by the DuckDB oracle of the registered
-``doc_text_profile`` query; ``lang`` and ``fingerprint`` equal the Column
-expressions ``functions.text.lang_id`` and ``doc_fingerprint``. Those
-interpreted higher-order-function lambdas are the slowest thing Catalyst
-can run: ``lang_id`` alone (4 languages x per-token array_contains over 8
-markers) costs ~2.9 s per 5000 docs at bench scale, ~10x the whole scan.
-Same story as the shingle/minhash/simhash kernels in operators/dedup.py:
-the profile is row-local, so one mapInPandas pass computes every metric
-in plain Python string ops (ASCII corpus; ``text.lower().split()`` ==
+Every text kernel of the package is doc-local (the TF-IDF term counts,
+shingles, MinHash, SimHash, winnowing, repetition counts and this
+profile), so each is a Python function of one document that ``per_doc``
+runs, with no shuffle. Interpreted Column lambdas are the slowest thing
+Catalyst runs: the Column language ID (a per-token array_contains for
+each of 4 languages) took 7.1-7.7 s per 5000 docs at sf0.1 through a
+noop sink, this kernel 0.51-0.59 s (interquartile ranges of 10 runs, a
+4-core VM).
+
+Each profile metric is defined by the DuckDB oracle of
+``doc_text_profile``, ``lang_id_pred`` or ``doc_fingerprint``, in plain
+Python string ops (ASCII corpus; ``text.lower().split()`` ==
 ``split(lower(trim(text)), '\\s+')`` + empty filter, with re.ASCII
-pinning \\s and character classes to Java regex semantics).
+pinning \\s and character classes to Java regex semantics). A null text
+profiles as the empty string.
 
 Rounding stays OUTSIDE the kernel: callers apply F.round, so engine
 rounding semantics never enter Python.
@@ -22,7 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterator
+from typing import Any, Callable, Collection, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -85,7 +89,7 @@ def _metrics(text: str, want: tuple[str, ...]) -> dict:
         )
     if "lang" in want:
         # left fold, earlier language (sorted code order) wins ties —
-        # identical to functions.text.lang_id's CASE chain
+        # identical to the lang_id_pred oracle's CASE chain
         best_lang, best = _MARKER_SETS[0][0], sum(
             1 for x in toks if x in _MARKER_SETS[0][1]
         )
@@ -100,28 +104,46 @@ def _metrics(text: str, want: tuple[str, ...]) -> dict:
     return out
 
 
-def profile_docs_py(docs: DataFrame, cols: tuple[str, ...]) -> DataFrame:
-    """(doc_id, *cols) of the ``text`` column in one Arrow pass. ``cols``
-    picks from PROFILE_COLS; output order follows ``cols``. Row-local — no
-    shuffle."""
-    unknown = [c for c in cols if c not in PROFILE_COLS]
-    if unknown:
-        raise ValueError(f"unknown profile columns {unknown!r}")
-    src = docs.select("doc_id", "text")
-    id_dtype = src.schema["doc_id"].dataType.simpleString()
-    schema = ", ".join(
-        [f"doc_id {id_dtype}"] + [f"{c} {PROFILE_COLS[c]}" for c in cols]
-    )
-    want = tuple(cols)
+def per_doc(src: DataFrame, schema: str, fn: Callable[[Any], Collection[tuple]]) -> DataFrame:
+    """The one per-document pass: ``src`` is an (id, value) frame and
+    ``fn(value)`` returns one document's output rows, a list (or other
+    sized collection) of zero, one or many tuples typed by the DDL
+    ``schema``. Each row comes out behind its document's id, which keeps
+    its name and type. Row-local: no shuffle.
+
+    A batch is built by ``DataFrame.from_records`` over the rows, with the
+    ids inserted as its first column; its column labels stay integers,
+    which Spark matches to the schema by position. Batches that produce
+    no rows are skipped."""
+    key = src.schema.fields[0]
+    out_schema = f"{key.name} {key.dataType.simpleString()}, {schema}"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = [_metrics(t, want) for t in pdf["text"]]
-            data = {"doc_id": pdf["doc_id"]}
-            for c in want:
-                data[c] = [r[c] for r in rows]
-            yield pd.DataFrame(data)
+            ids, rows = [], []
+            for i, v in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
+                out = fn(v)
+                ids += [i] * len(out)
+                rows += out
+            if rows:
+                frame = pd.DataFrame.from_records(rows)
+                frame.insert(0, -1, ids)
+                yield frame
 
-    return src.mapInPandas(kernel, schema)
+    return src.mapInPandas(kernel, out_schema)
+
+
+def profile_docs_py(docs: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """(doc_id, *cols) of the ``text`` column in one ``per_doc`` pass.
+    ``cols`` picks from PROFILE_COLS; output order follows ``cols``."""
+    unknown = [c for c in cols if c not in PROFILE_COLS]
+    if unknown:
+        raise ValueError(f"unknown profile columns {unknown!r}")
+    want = tuple(cols)
+
+    def row(text: str | None) -> list[tuple]:
+        m = _metrics(text, want)
+        return [tuple(m[c] for c in want)]
+
+    schema = ", ".join(f"{c} {PROFILE_COLS[c]}" for c in want)
+    return per_doc(docs.select("doc_id", "text"), schema, row)

@@ -1,5 +1,6 @@
-"""Persist lifetimes: query-scoped pins and session-scoped artifacts, and
-the one bounded transfer of a frame to the driver (:func:`collect_bounded`).
+"""Persist lifetimes: query-scoped pins and session-scoped artifacts, the
+one bounded transfer of a frame to the driver (:func:`collect_bounded`),
+and process-scoped scratch directories (:func:`scratch_dir`).
 
 One query persists an intermediate that feeds two consumers inside the
 SAME query and depends on the query itself: ``tfidf.hybrid_search`` its
@@ -26,6 +27,10 @@ argument and never builds one itself.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -33,6 +38,9 @@ ROWS_PER_PARTITION = 25_000
 
 _PINS: list[DataFrame] = []
 _CURRENT_QUERY: str | None = None
+# the per-process directory every scratch_dir lands under; frames read
+# their files lazily, so it goes only at exit
+_scratch_root: str | None = None
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -136,3 +144,14 @@ def collect_bounded(df: DataFrame, max_rows: int, *, what: str | None) -> pd.Dat
     if what is None:
         return None
     raise ValueError(f"{what}: more than {max_rows} rows would reach the driver")
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for files a returned frame reads (the format
+    round-trip copies, the IVF store), under one per-process root that is
+    created on first use and removed when the process exits."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="vdb_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)

@@ -11,10 +11,11 @@ hashes are the first 15 hex digits of an md5, ``_md5_60``):
 - embedding cosine: threshold pairs over unit vectors       (exact baseline)
 
 Scale notes (100 TB):
-- signatures (minhash, simhash, fingerprints) are ROW-LOCAL: computed in
-  Arrow-batched mapInPandas kernels (vectorized numpy int math; the
-  pure-Column higher-order folds measured ~20x slower interpreted). No
-  shuffle.
+- shingles and signatures (minhash, simhash, fingerprints) are
+  ROW-LOCAL: each is a function of one document run by the one
+  per-document Arrow pass, ``functions.textprof.per_doc`` (numpy int
+  math; the pure-Column higher-order folds measured ~20x slower
+  interpreted). No shuffle.
   The only shuffles are the pair-finding joins, whose keys
   (shingle / band signature / simhash chunk) are engineered to be sparse.
 - the inverted-index join caps shingle document-frequency (``MAX_DF``):
@@ -37,6 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.text import tokens_ws
+from vector_database_product_recommendation_spark.functions.textprof import per_doc
 from vector_database_product_recommendation_spark.functions.vectors import matrix
 from vector_database_product_recommendation_spark.lifetime import collect_bounded
 
@@ -60,9 +62,12 @@ SIMHASH_CHUNKS = 4
 # embedding LSH: N_PLANES hyperplane sign bits in N_BANDS bands
 N_PLANES = 16
 N_BANDS = 4
-# winnowing: K-token grams, windows of W gram hashes
+# winnowing: K-token grams, windows of W gram hashes; a winnowing pair
+# shares at least WINNOW_MIN_SHARED fingerprints, each held by at most
+# MAX_DF docs (the hot-fingerprint cap works like the stop-shingles)
 WINNOW_K = 4
 WINNOW_W = 5
+WINNOW_MIN_SHARED = 3
 # near-duplicate thresholds: Jaccard for the n-gram and MinHash pairs
 # (and dedup_components' edges), cosine for the embedding pairs, Hamming
 # distance for the SimHash pairs (below SIMHASH_CHUNKS, so the chunk
@@ -118,21 +123,15 @@ def _shingles_py(text: str) -> list[str]:
 
 
 def _doc_shingles_py(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingles array<string>) for non-empty docs, one Arrow pass
-    (an interpreted transform/slice/array_join chain costs ~10s per 5000
-    docs vs <1s in Python string ops)."""
-    src = docs.select("doc_id", "text")
-    dtype = src.schema["doc_id"].dataType.simpleString()
+    """(doc_id, shingles array<string>) for non-empty docs, one ``per_doc``
+    pass (an interpreted transform/slice/array_join chain costs ~10s per
+    5000 docs vs <1s in Python string ops)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sh = [_shingles_py(t) for t in pdf["text"]]
-            out = pd.DataFrame({"doc_id": pdf["doc_id"], "shingles": sh})
-            yield out[out["shingles"].map(len) > 0]
+    def row(text: str | None) -> list[tuple]:
+        sh = _shingles_py(text)
+        return [(sh,)] if sh else []
 
-    return src.mapInPandas(kernel, f"doc_id {dtype}, shingles array<string>")
+    return per_doc(docs.select("doc_id", "text"), "shingles array<string>", row)
 
 
 def shingle_postings(docs: DataFrame) -> DataFrame:
@@ -226,25 +225,13 @@ def minhash_table(docs: DataFrame) -> DataFrame:
     a_const, b_const = _perm_constants(NUM_HASHES)
     a = np.asarray(a_const, dtype=np.int64)
     b = np.asarray(b_const, dtype=np.int64)
-    src = docs.select("doc_id", "text")
-    dtype = src.schema["doc_id"].dataType.simpleString()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, shs, mhs = [], [], []
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                sh = _shingles_py(t)
-                if not sh:
-                    continue
-                ids.append(did)
-                shs.append(sh)
-                mhs.append(_minhash_np(sh, a, b).tolist())
-            yield pd.DataFrame({"doc_id": ids, "shingles": shs, "mh": mhs})
+    def row(text: str | None) -> list[tuple]:
+        sh = _shingles_py(text)
+        return [(sh, _minhash_np(sh, a, b).tolist())] if sh else []
 
-    return src.mapInPandas(
-        kernel, f"doc_id {dtype}, shingles array<string>, mh array<bigint>"
+    return per_doc(
+        docs.select("doc_id", "text"), "shingles array<string>, mh array<bigint>", row
     )
 
 
@@ -329,20 +316,13 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     src = docs.select("doc_id", tokens_ws("text").alias("toks")).filter(F.size("toks") > 0)
     bit_idx = np.arange(_SIMHASH_BITS, dtype=np.int64)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sigs = []
-            for toks in pdf["toks"]:
-                hs = np.fromiter((_md5_60(t) for t in toks), dtype=np.int64)
-                bits = (hs[:, None] >> bit_idx) & 1  # (T, 60)
-                votes = (2 * bits - 1).sum(axis=0)
-                sigs.append(int(((votes > 0).astype(np.int64) << bit_idx).sum()))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": sigs})
+    def row(toks) -> list[tuple[int]]:
+        hs = np.fromiter((_md5_60(t) for t in toks), dtype=np.int64)
+        bits = (hs[:, None] >> bit_idx) & 1  # (T, 60)
+        votes = (2 * bits - 1).sum(axis=0)
+        return [(int(((votes > 0).astype(np.int64) << bit_idx).sum()),)]
 
-    dtype = src.schema["doc_id"].dataType.simpleString()
-    return src.mapInPandas(kernel, f"doc_id {dtype}, simhash long").orderBy("doc_id")
+    return per_doc(src, "simhash long", row).orderBy("doc_id")
 
 
 def simhash_pairs(signatures: DataFrame) -> DataFrame:
@@ -531,7 +511,7 @@ def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
 
     Shape: the whole computation is ROW-LOCAL (k-gram hashes, rolling
     window min, per-doc distinct all live inside one document), so it runs
-    as a single Arrow mapInPandas pass with ZERO shuffles — the previous
+    as a single ``per_doc`` pass with ZERO shuffles — the previous
     explode -> per-doc window -> global distinct formulation paid two hash
     exchanges of the exploded k-gram table for work no other row ever
     sees. Semantics (bit-identical, the DuckDB oracle twin is unchanged):
@@ -542,34 +522,18 @@ def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
     Returns (doc_id, fp) unsorted: every consumer either reshuffles it
     at once or adds its own presentation order.
     """
-    src = docs.select("doc_id", "text")
-    dtype = src.schema["doc_id"].dataType.simpleString()
     k, w = WINNOW_K, WINNOW_W
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids: list = []
-            fps: list[int] = []
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                toks = (t or "").lower().split()
-                n = len(toks)
-                if n < k:
-                    doc_fps = {_md5_60(" ".join(toks))}
-                else:
-                    hs = [
-                        _md5_60(" ".join(toks[i : i + k])) for i in range(n - k + 1)
-                    ]
-                    m = len(hs)
-                    keep = max(m - w + 1, 1)
-                    doc_fps = {min(hs[i : i + w]) for i in range(keep)}
-                sorted_fps = sorted(doc_fps)
-                ids.extend([did] * len(sorted_fps))
-                fps.extend(sorted_fps)
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+    def rows(text: str | None) -> list[tuple[int]]:
+        toks = (text or "").lower().split()
+        n = len(toks)
+        if n < k:
+            return [(_md5_60(" ".join(toks)),)]
+        hs = [_md5_60(" ".join(toks[i : i + k])) for i in range(n - k + 1)]
+        keep = max(len(hs) - w + 1, 1)
+        return [(fp,) for fp in sorted({min(hs[i : i + w]) for i in range(keep)})]
 
-    return src.mapInPandas(kernel, f"doc_id {dtype}, fp long")
+    return per_doc(docs.select("doc_id", "text"), "fp long", rows)
 
 
 def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:

@@ -69,7 +69,8 @@ def train_kmeans_centroids(emb: DataFrame) -> DataFrame:
     """AN2: (cluster_id, centroid array<double>) of the ``embedding``
     column — Lloyd on a BOUNDED sample, FAISS-style, seeded with
     ``KMEANS_SEED`` for ``KMEANS_ITERS`` iterations at most, into
-    nlist = ``_nlist(n)`` = max(2, ⌊√n⌋) lists.
+    nlist = ``_nlist(n)`` = max(2, ⌊√n⌋) lists; an nlist over
+    ``MAX_CENTROIDS`` raises ValueError before any training.
 
     FAISS's own IVF training subsamples to Clustering.max_points_per_centroid
     (default 256) points per centroid before running k-means; the reference's
@@ -100,6 +101,12 @@ def train_kmeans_centroids(emb: DataFrame) -> DataFrame:
     """
     n, d = _corpus_shape(emb)
     nlist = _nlist(n)
+    if nlist > MAX_CENTROIDS:
+        # checked before training: assign_clusters could not collect the
+        # table, and training it costs corpus passes
+        raise ValueError(
+            f"{n} rows need {nlist} IVF lists, more than ivf.MAX_CENTROIDS = {MAX_CENTROIDS}"
+        )
     ppc = MAX_POINTS_PER_CENTROID
     # 12 B/elem = true transfer peak (8 B Arrow float64 + 4 B float32
     # target), not just the 4 B/elem matrix Lloyd holds afterwards

@@ -9,8 +9,8 @@ this module is part of the training-data-pipeline extension layer and
 composes with corpus_prep_pipeline's lang/quality gate.
 
 Scale shape: gram counting is doc-local, so the integer counts come from
-one Arrow kernel pass with hash-map (dict) counting — linear per
-document, zero shuffles, never moves text. (The array-EXPRESSION form of
+the one per-document pass (``textprof.per_doc``) with hash-map (dict)
+counting — linear per document, zero shuffles, never moves text. (The array-EXPRESSION form of
 multiplicity counting would be O(len * distinct) per row — quadratic on
 long documents — which is why this is a kernel, not a transform/filter
 fold; the old explode -> (doc, gram) aggregate shape was linear too but
@@ -19,8 +19,24 @@ paid four exchanges and two joins for per-row work.)
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from vector_database_product_recommendation_spark.functions.textprof import per_doc
+
+
+def _repetition_counts(text: str | None) -> list[tuple[int, int, int, int, int]]:
+    """One doc's (n_tokens, top_c, n_distinct, dup_occ, n_bg): token count,
+    modal token count, distinct tokens, occurrences of repeated bigrams and
+    bigram count, by dict counting over the whitespace tokens."""
+    toks = (text or "").lower().split()
+    n = len(toks)
+    tc = Counter(toks)
+    bc = Counter(" ".join(toks[i : i + 2]) for i in range(n - 1))
+    dup_occ = sum(c for c in bc.values() if c > 1)
+    return [(n, max(tc.values()) if tc else 0, len(tc), dup_occ, sum(bc.values()))]
 
 
 def repetition_signals(docs: DataFrame) -> DataFrame:
@@ -33,59 +49,17 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
                           than once / total bigram occurrences (0.0 when
                           the doc has fewer than 2 tokens)
 
-    Ratios are rounded to 6 decimals.
-
-    Physical shape: gram counting is DOC-LOCAL (a token's multiplicity in
-    one document never depends on another row), so the integer counts
-    (top token count, distinct tokens, bigram dup occurrences) come from
-    one Arrow kernel pass with hash-map counting — linear per document,
-    zero shuffles. (The previous explode -> (doc, gram) hash aggregate ->
-    per-doc re-aggregate shape paid four exchanges plus two joins for
-    per-row work; the docstring's quadratic warning applies to counting
-    multiplicities with ARRAY EXPRESSIONS — O(len * distinct) per row —
-    not to a dict count.) Every float division and rounding stays in
-    engine expressions over the kernel's integers, so no Python float
-    semantics enter the oracle-checked output.
+    Ratios are rounded to 6 decimals. The integer counts come from one
+    ``per_doc`` pass (module docstring); every float division and rounding
+    stays in engine expressions over them, so no Python float semantics
+    enter the oracle-checked output.
 
     Returns one row per input doc, sorted by doc_id.
     """
-    from collections import Counter
-    from typing import Iterator
-
-    import pandas as pd
-
-    src = docs.select("doc_id", "text")
-    dtype = src.schema["doc_id"].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for did, t in zip(pdf["doc_id"], pdf["text"]):
-                toks = (t or "").lower().split()
-                n = len(toks)
-                tc = Counter(toks)
-                bc = Counter(
-                    " ".join(toks[i : i + 2]) for i in range(n - 1)
-                ) if n >= 2 else Counter()
-                n_bg = sum(bc.values())
-                dup_occ = sum(c for c in bc.values() if c > 1)
-                rows.append(
-                    (did, n, max(tc.values()) if tc else 0, len(tc), n, dup_occ, n_bg)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_tokens", "top_c", "n_distinct", "n_tok",
-                    "dup_occ", "n_bg",
-                ],
-            )
-
-    counts = src.mapInPandas(
-        kernel,
-        f"doc_id {dtype}, n_tokens int, top_c long, n_distinct long, "
-        "n_tok long, dup_occ long, n_bg long",
+    counts = per_doc(
+        docs.select("doc_id", "text"),
+        "n_tokens int, top_c long, n_distinct long, dup_occ long, n_bg long",
+        _repetition_counts,
     )
 
     return (
@@ -94,11 +68,11 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
             "doc_id",
             "n_tokens",
             F.round(
-                F.when(F.col("n_tok") > 0, F.col("n_distinct") / F.col("n_tok")).otherwise(0.0),
+                F.when(F.col("n_tokens") > 0, F.col("n_distinct") / F.col("n_tokens")).otherwise(0.0),
                 6,
             ).alias("unique_token_ratio"),
             F.round(
-                F.when(F.col("n_tok") > 0, F.col("top_c") / F.col("n_tok")).otherwise(0.0),
+                F.when(F.col("n_tokens") > 0, F.col("top_c") / F.col("n_tokens")).otherwise(0.0),
                 6,
             ).alias("top_token_frac"),
             F.round(

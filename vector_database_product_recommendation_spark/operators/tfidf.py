@@ -38,13 +38,14 @@ only full-corpus shuffles key on `term` and `doc_id`, both fine-grained.
 from __future__ import annotations
 
 import re
-from typing import Iterator
+from collections import Counter
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
+from vector_database_product_recommendation_spark.functions.textprof import per_doc
 from vector_database_product_recommendation_spark.lifetime import persist_right_sized, pin
 
 # sklearn's (?u)\b\w\w+\b — runs of >=2 word chars (ASCII corpus).
@@ -70,7 +71,8 @@ def _tokens(text: str | None) -> list[str]:
 
 
 def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, term, tf) — term frequency per document, one Arrow kernel.
+    """(doc_id, term, tf) — term frequency per document, one ``per_doc``
+    pass.
 
     Same values as exploding ``regexp_extract_all(lower(text),
     TOKEN_PATTERN)`` minus stop words, then ``groupBy("doc_id","term")
@@ -79,26 +81,8 @@ def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     token occurrence AND the (doc_id, term) hash exchange. Tokens come
     from ``_tokens``, byte-identical to the Column form.
     """
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
-    dtype = src.schema["doc_id"].dataType.simpleString()
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids: list = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            for did, t in zip(pdf["doc_id"], pdf["__t"]):
-                counts = Counter(_tokens(t))
-                ids.extend([did] * len(counts))
-                terms.extend(counts.keys())
-                tfs.extend(counts.values())
-            yield pd.DataFrame({"doc_id": ids, "term": terms, "tf": tfs})
-
-    return src.mapInPandas(kernel, f"doc_id {dtype}, term string, tf long")
+    src = docs.select(F.col(id_col).alias("doc_id"), text_col)
+    return per_doc(src, "term string, tf long", lambda t: Counter(_tokens(t)).items())
 
 
 class TfidfModel:
@@ -209,8 +193,6 @@ class TfidfModel:
         (``lifetime.pin``ned) intermediates. An empty query carries one
         null row, filtered out, because an empty frame would become an
         RDD scan."""
-        from collections import Counter
-
         spark = self.tf.sparkSession
         counts = Counter(_tokens(query_text))
         q_tf = pd.DataFrame(sorted(counts.items()) or [(None, None)], columns=["term", "tf"])

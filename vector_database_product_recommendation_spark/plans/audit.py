@@ -21,6 +21,23 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def executed_nodes(df: DataFrame) -> list[str]:
+    """The node names of ``df``'s executed physical plan, through its
+    adaptive query stages (after an action, the final plan). A cached
+    table is a leaf: its own plan ran when it was filled, not here."""
+
+    def walk(plan) -> list[str]:
+        name = plan.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(plan.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(plan.plan())
+        kids = plan.children()
+        return [plan.nodeName()] + [n for i in range(kids.size()) for n in walk(kids.apply(i))]
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def optimized_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 

@@ -260,8 +260,9 @@ def _centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 from vector_database_product_recommendation_spark.functions.text import (  # noqa: E402
     LANG_MARKERS,
     STOPWORDS_EN,
-    doc_fingerprint,
-    lang_id,
+)
+from vector_database_product_recommendation_spark.functions.textprof import (  # noqa: E402
+    profile_docs_py,
 )
 from vector_database_product_recommendation_spark.operators import dedup as D  # noqa: E402
 
@@ -324,8 +325,6 @@ FROM q ORDER BY doc_id
 def _doc_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one Arrow kernel pass (functions/textprof.py); rounding stays in the
     # engine
-    from vector_database_product_recommendation_spark.functions.textprof import profile_docs_py
-
     docs = load_table(spark, sf_dir, "documents")
     prof = profile_docs_py(
         docs,
@@ -361,7 +360,8 @@ def _lang_scores_sql() -> tuple[str, str]:
 
 
 _LANG_COLS, _LANG_NAMES = _lang_scores_sql()
-# CASE chain == the left fold in functions.text.lang_id (earlier lang wins ties)
+# CASE chain == the left fold of the profile kernel's language ID
+# (functions/textprof.py; earlier lang wins ties)
 _LANG_CASE = (
     "CASE WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de' "
     "WHEN s_en >= s_es AND s_en >= s_fr THEN 'en' "
@@ -384,8 +384,8 @@ FROM sc ORDER BY doc_id
 
 @register("lang_id_pred", _LANG_ORACLE)
 def _lang_id_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", lang_id("text").alias("lang_pred")).orderBy("doc_id")
+    prof = profile_docs_py(load_table(spark, sf_dir, "documents"), ("lang",))
+    return prof.withColumnRenamed("lang", "lang_pred").orderBy("doc_id")
 
 
 _FPRINT_ORACLE = f"""
@@ -398,10 +398,8 @@ FROM t ORDER BY doc_id
 
 @register("doc_fingerprint", _FPRINT_ORACLE)
 def _doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", doc_fingerprint("text").alias("fingerprint")
-    ).orderBy("doc_id")
+    prof = profile_docs_py(load_table(spark, sf_dir, "documents"), ("fingerprint",))
+    return prof.orderBy("doc_id")
 
 
 _REPETITION_ORACLE = f"""
@@ -1707,16 +1705,16 @@ def _winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprint_table(spark, sf_dir).orderBy("doc_id", "fp")
 
 
-# Near-dup candidates: documents sharing >= 3 winnowing fingerprints
-# (inverted-index self-join on fp — the MOSS match step; hot fingerprints
-# capped like the n-gram jaccard stop-shingles).
+# Near-dup candidates: documents sharing >= WINNOW_MIN_SHARED winnowing
+# fingerprints (inverted-index self-join on fp — the MOSS match step; hot
+# fingerprints capped at MAX_DF like the n-gram jaccard stop-shingles).
 _WINNOW_PAIRS_ORACLE = f"""
 WITH {_WINNOW_CTE},
-cold AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 100),
+cold AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= {D.MAX_DF}),
 f AS (SELECT fp.* FROM fp JOIN cold USING (fp))
 SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
 FROM f a JOIN f b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING count(*) >= 3
+GROUP BY 1, 2 HAVING count(*) >= {D.WINNOW_MIN_SHARED}
 ORDER BY id_a, id_b
 """
 
@@ -1732,7 +1730,7 @@ def _dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fp = winnow_fingerprint_table(spark, sf_dir)
     cold = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
-        F.col("df") <= 100
+        F.col("df") <= D.MAX_DF
     ).select("fp")
     f = fp.join(cold, "fp")
     a, b = f.alias("a"), f.alias("b")
@@ -1740,7 +1738,7 @@ def _dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= 3)
+        .filter(F.col("n_shared") >= D.WINNOW_MIN_SHARED)
         .orderBy("id_a", "id_b")
     )
 

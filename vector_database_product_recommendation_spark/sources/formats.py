@@ -12,9 +12,9 @@ must prune partitions (asserted in tests/test_sources_formats.py).
 Scale notes (100 TB):
 - CSV/JSON are ingest/egress formats here, never the analytic layout —
   each round-trip query re-lands the data as it would on a real cluster,
-  on every call, into a fresh directory of its own under one per-process
-  temp root that an exit hook removes (schema-on-read with an explicit
-  StructType, no inference job over the full dataset: ``inferSchema``
+  on every call, into a fresh ``lifetime.scratch_dir`` (one per-process
+  temp root that an exit hook removes), schema-on-read with an explicit
+  StructType: no inference job over the full dataset (``inferSchema``
   would be a second full scan).
 - Text fields survive quoting/newlines via the RFC-4180 style
   ``escape='"'`` + ``multiLine`` pair on BOTH writer and reader.
@@ -26,13 +26,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from vector_database_product_recommendation_spark.lifetime import scratch_dir
 
 
 def write_csv(df: DataFrame, path: str) -> None:
@@ -103,21 +101,6 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 # Round-trip queries (wired into the registry)
 # ---------------------------------------------------------------------------
 
-# the per-process directory every round-trip copy lands under; the
-# returned DataFrames read their copy lazily, so it goes only at exit
-_copies_root: str | None = None
-
-
-def _copy_dir(prefix: str) -> str:
-    """A fresh directory for one round-trip copy, under ``_copies_root``
-    (created on first use, removed when the process exits)."""
-    global _copies_root
-    if _copies_root is None:
-        _copies_root = tempfile.mkdtemp(prefix="vdb_formats_")
-        atexit.register(shutil.rmtree, _copies_root, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_copies_root)
-
-
 def csv_roundtrip_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> CSV -> read back -> per-(lang, source) aggregate.
 
@@ -128,7 +111,7 @@ def csv_roundtrip_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _copy_dir("csv_docs_")
+    path = scratch_dir("csv_docs_")
     write_csv(docs, path)
     back = read_csv(spark, path, docs.schema)
     # 60-bit md5 prefix reduced mod a prime so the SUM stays inside a long
@@ -156,7 +139,7 @@ def json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     events = load_table(spark, sf_dir, "events")
-    path = _copy_dir("json_events_")
+    path = scratch_dir("json_events_")
     write_json(events, path)
     back = read_json(spark, path, events.schema)
     return (
@@ -180,7 +163,7 @@ def partitioned_orders_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    path = _copy_dir("part_orders_")
+    path = scratch_dir("part_orders_")
     write_partitioned(orders, path, "o_orderstatus")
     back = read_partitioned(spark, path)
     return (
@@ -216,7 +199,7 @@ def orc_roundtrip_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _copy_dir("orc_emb_")
+    path = scratch_dir("orc_emb_")
     write_orc(emb, path)
     back = read_orc(spark, path)
     return (

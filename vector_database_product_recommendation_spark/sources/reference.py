@@ -97,28 +97,6 @@ def load_embeddings_npy(spark: SparkSession, npy_path: str) -> DataFrame:
     return spark.createDataFrame(rows, "review_idx int, embedding array<double>")
 
 
-def with_combined_text(reviews: DataFrame) -> DataFrame:
-    """P10 [verified]: lower(title || ' ' || text || ' ' || brand).
-
-    NB: concat (not concat_ws) semantics — the reference joins with single
-    spaces even when a part is empty, which concat_ws would collapse — and
-    whitespace runs are collapsed to single spaces afterwards (3 of 1578
-    rows carry multi-space runs in the raw fields that the shipped
-    combined_text does not: the offline pipeline normalized whitespace).
-    """
-    joined = F.concat(
-        F.coalesce(F.col("`reviews.title`"), F.lit("")),
-        F.lit(" "),
-        F.coalesce(F.col("`reviews.text`"), F.lit("")),
-        F.lit(" "),
-        F.coalesce(F.col("brand"), F.lit("")),
-    )
-    return reviews.withColumn(
-        "combined_text_rebuilt",
-        F.trim(F.regexp_replace(F.lower(joined), r"\s+", " ")),
-    )
-
-
 def rebuild_products(reviews: DataFrame) -> DataFrame:
     """products.csv derivation (section 1.1, all columns [verified]):
     count-all, null-skipping mean, first-row-in-file-order fields."""
