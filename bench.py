@@ -7,10 +7,12 @@ JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Timing policy: per query, wall-clock around a full materialization
-(count of the result DataFrame — forces every exchange/UDF; avoids
-driver-side row shipping skewing the number). One warm-up run of the
-cheapest query amortizes JVM/session startup out of the per-query numbers
-(session startup is reported separately in "startup_sec").
+through the noop sink (``write.format("noop")``: computes every row and
+column, ships none to the driver). A ``.count()`` would not do: Catalyst
+answers it without the projections of a Column-only query. One warm-up
+run of the cheapest query amortizes JVM/session startup out of the
+per-query numbers (session startup is reported separately in
+"startup_sec").
 """
 
 from __future__ import annotations
@@ -36,6 +38,10 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
+def _materialize(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     from vector_database_product_recommendation_spark.session import get_spark
     from vector_database_product_recommendation_spark.sources.tables import load_table
@@ -52,7 +58,7 @@ def main() -> None:
 
     # Warm-up: touch the parquet footers / fill the code cache once.
     try:
-        next(iter(qmap.values()))(spark, SF_DIR).count()
+        _materialize(next(iter(qmap.values()))(spark, SF_DIR))
     except Exception:
         pass
 
@@ -91,7 +97,7 @@ def main() -> None:
     def time_query(name: str, fn) -> float:
         t = time.time()
         try:
-            fn(spark, SF_DIR).count()
+            _materialize(fn(spark, SF_DIR))
             return round(time.time() - t, 4)
         except Exception as e:  # a broken query should not sink the bench
             print(f"# bench error in {name}: {e}", file=sys.stderr)

@@ -173,6 +173,14 @@ def test_ann_tradeoff_persists_nothing(emb, ivf_parts, monkeypatch):
     assert [r["nprobe"] for r in rows] == [1, NLIST]
 
 
+def test_ann_tradeoff_table_collects_without_a_job(jobs_run_by, emb, ivf_parts):
+    """The sweep's rows are scored on the driver and returned as a
+    ``lifetime.local_frame``: collecting the table runs no job."""
+    table = ann_tradeoff(emb, ivf_parts, n_queries=8, k=5, nprobes=(1, NLIST))
+    assert jobs_run_by(table.collect, "ann-tradeoff-table") == 0
+    assert [r["nprobe"] for r in table.collect()] == [1, NLIST]
+
+
 def test_free_text_self_retrieval(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     qtext = docs.filter(F.col("doc_id") == 5).select("text").first()[0]

@@ -63,11 +63,13 @@ def test_profile_queries_run_one_arrow_pass_and_no_lambda(built_plans):
         assert "lambdafunction" not in audit.optimized_plan(df), name
 
 
-def test_query_local_pins_released_between_queries(spark, sf_dir):
+def test_query_local_pins_released_between_queries(jobs_run_by, spark, sf_dir):
     """Lifetime contract: the cached-RDD population
     must not grow across a bench session — same-query re-runs reuse the
-    warm pins (CacheManager plan matching), and moving to a different
-    query releases the previous query's pins."""
+    warm pins (CacheManager plan matching: the query's terms are a
+    ``lifetime.local_frame``, so a re-run builds an equal plan, pins
+    nothing new and runs the same jobs), and moving to a different query
+    releases the previous query's pins."""
     from vector_database_product_recommendation_spark import lifetime, registry
 
     qmap = registry.queries()
@@ -79,9 +81,12 @@ def test_query_local_pins_released_between_queries(spark, sf_dir):
     fn(spark, sf_dir).count()
     assert lifetime.pinned_count() >= 1  # the query does pin
     cached_after_one = n_cached()
-    for _ in range(3):  # median-of-3 style re-runs stay warm and bounded
-        fn(spark, sf_dir).count()
+    jobs = set()
+    for i in range(3):  # median-of-3 style re-runs stay warm and bounded
+        jobs.add(jobs_run_by(lambda: fn(spark, sf_dir).count(), f"hybrid-rerun-{i}"))
+        assert lifetime.pinned_count() == 1
     assert n_cached() <= cached_after_one
+    assert len(jobs) == 1
     # a different query evicts hybrid's pins (the session-scoped tfidf/
     # embedding ARTIFACTS it reads are not pins and live as long as the
     # session, so assert on the pin registry)

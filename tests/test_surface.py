@@ -27,6 +27,11 @@ No two public top-level definitions of the package share a name: the
 checks above match a definition by its bare name, so a same-named twin
 would hide one that only the tests call.
 
+A table the driver builds enters Spark one way, ``lifetime.local_frame``:
+``createDataFrame`` is called only there and in the sites
+``CREATE_DATAFRAME`` names with their reasons, and ``api.py`` runs no
+SQL text.
+
 ``KEPT`` names each exception and why it stays.
 """
 
@@ -67,6 +72,16 @@ KEPT = {
     "api.ProductSearchEngine.search_products.alpha": "the alpha slider (app.py:151)",
     "api.ProductSearchEngine.ann_review_search.k": "the k slider (app.py:131)",
     "api.ProductSearchEngine.ann_review_search.nprobe": "the nprobe slider (app.py:383-384)",
+}
+
+# the package definitions that call createDataFrame, each with its reason
+CREATE_DATAFRAME = {
+    "lifetime.local_frame": "the one way a driver-built table enters Spark",
+    "sources.reference.load_embeddings_npy": "bulk ingest of a matrix of any size, "
+    "parallelized into right-sized partitions",
+    "operators.ivf._centroid_table": "every reader collects the centroids back "
+    "through collect_centroids, which runs 1 job over an RDD-backed table and 3 "
+    "over a LocalRelation",
 }
 
 
@@ -363,3 +378,22 @@ def test_kept_entries_are_still_exceptions():
     assert stale == []
     assert len(unset) <= 4, sorted(unset)
     assert len(unset_methods) <= 1, sorted(unset_methods)
+
+
+def _definitions_calling(callee: str, paths: list[str]) -> set[str]:
+    """``module.name`` of every top-level definition of ``paths`` (a
+    class's methods count as the class) with a call of ``callee``; a
+    call outside any definition counts as the module."""
+    out = set()
+    for p in paths:
+        for node in TREES[p].body:
+            name = getattr(node, "name", None)
+            if any(isinstance(n, ast.Call) and _callee(n) == callee for n in ast.walk(node)):
+                out.add(f"{_module(p)}.{name}" if name else _module(p))
+    return out
+
+
+def test_driver_built_tables_enter_spark_through_local_frame():
+    assert _definitions_calling("createDataFrame", PACKAGE) == set(CREATE_DATAFRAME)
+    api = os.path.join(REPO, PKG, "api.py")
+    assert _definitions_calling("sql", [api]) == set()

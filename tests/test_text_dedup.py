@@ -11,7 +11,6 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from vector_database_product_recommendation_spark.functions.text import token_count_ws
 from vector_database_product_recommendation_spark.functions.textprof import profile_docs_py
 from vector_database_product_recommendation_spark.operators import dedup
 from vector_database_product_recommendation_spark.operators.dedup import (
@@ -34,13 +33,11 @@ def _docs(spark, rows):
 
 def test_token_counts(spark):
     df = _docs(spark, [(1, "Hello,  world! x"), (2, ""), (3, "   ")])
-    ws = {r["doc_id"]: r["n"] for r in df.select("doc_id", token_count_ws("text").alias("n")).collect()}
     prof = {
         r["doc_id"]: (r["n_tokens"], r["n_tokens_re"])
         for r in profile_docs_py(df, ("n_tokens", "n_tokens_re")).collect()
     }
     # "hello," "world!" "x" -> 3 ws tokens; regex: hello , world ! x -> 5
-    assert ws == {1: 3, 2: 0, 3: 0}
     assert prof == {1: (3, 5), 2: (0, 0), 3: (0, 0)}
 
 
@@ -181,9 +178,8 @@ def test_embedding_lsh_blocked_matches_exact_on_planted_dups(spark, monkeypatch)
 
 def test_text_functions_property_fuzz(spark):
     """Property fuzz (hypothesis): for arbitrary printable strings, the
-    Column-expression token count and the profile kernel's fingerprint
-    agree with their plain-Python definitions and its quality stays in
-    range."""
+    profile kernel's token count and fingerprint agree with their
+    plain-Python definitions and its quality stays in range."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -197,13 +193,11 @@ def test_text_functions_property_fuzz(spark):
     collect()
     rows = [(i, t) for i, t in enumerate(texts_acc)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = df.select("doc_id", token_count_ws("text").alias("n")).join(
-        profile_docs_py(df, ("quality", "fingerprint")), "doc_id"
-    ).collect()
+    out = profile_docs_py(df, ("n_tokens", "quality", "fingerprint")).collect()
     by_id = {r["doc_id"]: r for r in out}
     for i, t in rows:
         r = by_id[i]
-        assert r["n"] == len(t.lower().split())
+        assert r["n_tokens"] == len(t.lower().split())
         assert 0.0 <= r["quality"] <= 1.0
         import hashlib as _h
 
@@ -258,6 +252,26 @@ def test_connected_components_transitive(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     got = {r["doc_id"]: r["component_id"] for r in connected_components(verts, edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 4}
+
+
+def test_connected_components_labels_no_edge_without_a_job(jobs_run_by, spark):
+    """With no edge the driver path's label table is empty. As a
+    ``lifetime.local_frame`` it costs no job: the call runs the edge
+    transfer and the vertex scan, and nothing more."""
+    from vector_database_product_recommendation_spark.lifetime import collect_bounded
+
+    verts = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    floor = jobs_run_by(
+        lambda: (collect_bounded(edges, 1, what=None), verts.collect()), "cc-no-edge-floor"
+    )
+    out = []
+
+    def labels():
+        out.extend(dedup.connected_components(verts, edges).collect())
+
+    assert jobs_run_by(labels, "cc-no-edge") == floor
+    assert {r["doc_id"]: r["component_id"] for r in out} == {i: i for i in range(5)}
 
 
 def test_connected_components_raises_past_the_round_budget(spark, monkeypatch):

@@ -1,11 +1,10 @@
 """Per-query isolation profiler.
 
 Times each named query with the noop sink (guide section 1.4 — computes
-every column, no driver shipping) after one warm run, and dumps
-``.explain('formatted')`` to plans/<subdir>/<name>_<tag>.txt.
+every column, no driver shipping) after one warm run, and prints its
+plan shape (``plans.audit.plan_summary``) next to the timings.
 
-Usage: python tools/query_profile.py <subdir> <tag> <query> [<query> ...]
-       python tools/query_profile.py <subdir> <tag> --plans-only <query> ...
+Usage: python tools/query_profile.py <tag> <query> [<query> ...]
 """
 
 from __future__ import annotations
@@ -22,19 +21,15 @@ RUNS = int(os.environ.get("PROFILE_RUNS", "3"))
 
 
 def main() -> None:
-    subdir, tag = sys.argv[1], sys.argv[2]
-    args = sys.argv[3:]
-    plans_only = "--plans-only" in args
-    names = [a for a in args if not a.startswith("--")]
+    tag, names = sys.argv[1], sys.argv[2:]
 
+    from vector_database_product_recommendation_spark.plans.audit import plan_summary
     from vector_database_product_recommendation_spark.session import get_spark
 
     import __spark_entry__ as entrymod
 
-    spark = get_spark(f"profile-{subdir}")
+    spark = get_spark(f"profile-{tag}")
     qmap = entrymod.queries()
-    out_dir = os.path.join(REPO, "plans", subdir)
-    os.makedirs(out_dir, exist_ok=True)
 
     for name in names:
         fn = qmap[name]
@@ -42,14 +37,7 @@ def main() -> None:
         t_build0 = time.time()
         df = fn(spark, SF_DIR)
         t_build = time.time() - t_build0
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
-        if plans_only:
-            print(f"{name}: plan written (build {t_build:.2f}s)")
-            continue
+        plan = plan_summary(df)
         runs = []
         for _ in range(1 + RUNS):  # first run is warm-up
             t0 = time.time()
@@ -58,7 +46,8 @@ def main() -> None:
         timed = sorted(runs[1:])
         print(
             f"{name}: build={t_build:.2f}s warm={runs[0]:.2f}s "
-            f"median={timed[len(timed) // 2]:.2f}s runs={[round(r, 2) for r in runs]}"
+            f"median={timed[len(timed) // 2]:.2f}s runs={[round(r, 2) for r in runs]} "
+            f"plan={plan}"
         )
         spark.sparkContext.setJobDescription(None)
 

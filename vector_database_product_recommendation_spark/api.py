@@ -24,8 +24,9 @@ filter columns, hit payload and the float64 embedding matrix) when the
 matrix fits ``DRIVER_CATALOG_MAX_BYTES``, through the one bounded Arrow
 transfer (``lifetime.collect_bounded``). Vector and filtered search,
 item-to-item and compare then mask, score (``np.round(mat @ qv, 6)``) and
-rank (``knn.rank_topk``) on the driver and reply with an inline table:
-no Spark job per request. A larger catalog is never collected: it is
+rank (``knn.rank_topk``) on the driver and reply with a local table
+(``lifetime.local_frame``, the reverse transfer): no Spark job, and no
+SQL to parse, per request. A larger catalog is never collected: it is
 served by the one-job ``exact_knn(payload=...)`` pass over the cached
 ``catalog``. Hybrid search always runs on Spark. E3 and AN5 read one
 review IVF index per engine, built on the first such call.
@@ -46,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
 from vector_database_product_recommendation_spark.functions.vectors import matrix
-from vector_database_product_recommendation_spark.lifetime import collect_bounded
+from vector_database_product_recommendation_spark.lifetime import collect_bounded, local_frame
 from vector_database_product_recommendation_spark.operators.knn import (
     collect_queries,
     exact_knn,
@@ -138,19 +139,20 @@ class ProductSearchEngine:
         self._ivf_centroid_arrays = None
         # the free-text query frame only carries the schema: each request's
         # encoded vector reaches the kernel as query_arrays
-        self._text_query = catalog.sparkSession.createDataFrame(
-            [], "query_id int, query_vec array<double>"
+        self._text_query = local_frame(
+            catalog.sparkSession, [], "query_id int, query_vec array<double>"
         )
         n, self._width = catalog.select(
             F.count(F.lit(1)), F.max(F.size("embedding"))
         ).first()
         self.embedding_dim = self._width if embedding_dim is None else embedding_dim
+        # the Spark path's reply schemas, as DDL for the driver path's
+        # local_frame replies
         types = {f.name: f.dataType.simpleString() for f in catalog.schema}
-        self._hit_schema = [
-            ("rank", "int"), ("id", types["id"]), ("score", "double"),
-            *((c, types[c]) for c in HIT_PAYLOAD),
-        ]
-        self._compare_schema = [("id_a", types["id"]), ("id_b", types["id"]), ("score", "double")]
+        self._hit_schema = ", ".join(
+            [f"rank int, id {types['id']}, score double"] + [f"{c} {types[c]}" for c in HIT_PAYLOAD]
+        )
+        self._compare_schema = f"id_a {types['id']}, id_b {types['id']}, score double"
         # the bound is checked before the collect: an over-bound catalog
         # never reaches the driver (nor does an empty one, which has no
         # width; the Spark path serves both)
@@ -275,7 +277,8 @@ class ProductSearchEngine:
         qv = self._encode_query(query_text)
         if mode == "vector" and self._driver is not None:
             mask = self._driver.mask(brand, min_rating, min_reviews)
-            return self._inline(self._hit_schema, self._driver.hits(qv, mask, k))
+            hits = self._driver.hits(qv, mask, k)
+            return local_frame(self.catalog.sparkSession, hits, self._hit_schema)
         cand = self.candidate_products(
             brand=brand, min_rating=min_rating, min_reviews=min_reviews
         )
@@ -335,7 +338,8 @@ class ProductSearchEngine:
             raise ValueError(f"item {pid!r} is not in the corpus")
         mask = np.ones(len(self._driver.ids), dtype=bool)
         mask[i] = False
-        return self._inline(self._hit_schema, self._driver.hits(self._driver.mat[i], mask, k))
+        hits = self._driver.hits(self._driver.mat[i], mask, k)
+        return local_frame(self.catalog.sparkSession, hits, self._hit_schema)
 
     # -- J5: pairwise compare ---------------------------------------------
 
@@ -345,7 +349,7 @@ class ProductSearchEngine:
         (id_a, id_b). The vectors come from the driver arrays when held,
         else one job collects them; the matrix is the reference's
         ``V @ V.T`` on the driver, each pair scored once so the cells are
-        exactly symmetric, and comes back as an inline table. Unknown ids
+        exactly symmetric, and comes back as a local table. Unknown ids
         raise ValueError naming them, as does an empty ``pids``."""
         wanted = list(dict.fromkeys(pids))
         if not wanted:
@@ -369,27 +373,8 @@ class ProductSearchEngine:
         for i, a in enumerate(ids):
             for b in ids[i:]:
                 score[a, b] = score[b, a] = float(np.round(vec[a] @ vec[b], 6))
-        return self._inline(self._compare_schema, [(a, b, score[a, b]) for a in ids for b in ids])
-
-    def _inline(self, schema: list[tuple[str, str]], rows: list[tuple]) -> DataFrame:
-        """``rows`` as an inline ``VALUES`` table of ``schema`` (name, type)
-        pairs, which Spark returns without a job. Named markers bind the
-        values as literals: no quoting, no injection. Each column is cast
-        to its type, and a trailing all-NULL row, filtered out again,
-        keeps every column nullable and typed when a reply has no row or
-        an all-null column, so the schema is the Spark path's."""
-        args, values = {}, []
-        for i, row in enumerate(rows):
-            args.update({f"v{i}_{j}": v for j, v in enumerate(row) if v is not None})
-            cells = [f":v{i}_{j}" if v is not None else "NULL" for j, v in enumerate(row)]
-            values.append(f"({', '.join(cells)}, true)")
-        values.append(f"({'NULL, ' * len(schema)}false)")
-        cols = ", ".join(f"`{c}`" for c, _ in schema)
-        cast = ", ".join(f"CAST(`{c}` AS {t}) AS `{c}`" for c, t in schema)
-        return self.catalog.sparkSession.sql(
-            f"SELECT {cast} FROM VALUES {', '.join(values)} AS t({cols}, `__row`) WHERE `__row`",
-            args=args,
-        )
+        rows = [(a, b, score[a, b]) for a in ids for b in ids]
+        return local_frame(self.catalog.sparkSession, rows, self._compare_schema)
 
     # -- E3: ANN demo -----------------------------------------------------
 

@@ -83,9 +83,8 @@ def encode_documents(docs: DataFrame, *, encoder=None) -> DataFrame:
     which breaks the unit-norm invariant — and the SQL oracle's sparse form
     produces no rows for them either).
     """
-    from vector_database_product_recommendation_spark.functions.text import token_count_ws
-
     emb_udf = encoder or hash_embedder()
-    return docs.filter(token_count_ws("text") > 0).select(
+    # a token is a run of non-whitespace
+    return docs.filter(F.col("text").rlike(r"\S")).select(
         F.col("doc_id").alias("vec_id"), emb_udf(F.col("text")).alias("embedding")
     )

@@ -1,6 +1,8 @@
 """Persist lifetimes: query-scoped pins and session-scoped artifacts, the
-one bounded transfer of a frame to the driver (:func:`collect_bounded`),
-and process-scoped scratch directories (:func:`scratch_dir`).
+one bounded transfer of a frame to the driver (:func:`collect_bounded`)
+and its inverse, the one way driver-built rows enter Spark
+(:func:`local_frame`), and process-scoped scratch directories
+(:func:`scratch_dir`).
 
 One query persists an intermediate that feeds two consumers inside the
 SAME query and depends on the query itself: ``tfidf.hybrid_search`` its
@@ -32,7 +34,8 @@ import shutil
 import tempfile
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 ROWS_PER_PARTITION = 25_000
 
@@ -144,6 +147,29 @@ def collect_bounded(df: DataFrame, max_rows: int, *, what: str | None) -> pd.Dat
     if what is None:
         return None
     raise ValueError(f"{what}: more than {max_rows} rows would reach the driver")
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows``, tuples in the order of the DDL ``schema``, as a frame Spark
+    holds in the plan itself (a LocalRelation): the inverse of
+    :func:`collect_bounded`, and the one way a table the driver built
+    enters Spark. Spark answers a ``collect`` of it without a job (an
+    Arrow ``toPandas`` or a broadcast into a join still runs one), and the
+    same rows build an equal plan, so a re-run matches its cached
+    intermediates.
+
+    The rows travel as Arrow batches (session.py turns Arrow on); each
+    caller bounds how many there are (SCALE.md). Past Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB of Arrow
+    data) Spark keeps them as an RDD instead. The pandas frame holds
+    the Python values themselves, so a null cell stays null and a bigint
+    past 2**53 is not rounded through float64. No rows is one all-null
+    row under ``limit(0)``: an empty pandas frame would be scanned as an
+    RDD, one job per read."""
+    struct = StructType.fromDDL(schema)
+    cells = rows or [(None,) * len(struct)]
+    df = spark.createDataFrame(pd.DataFrame(cells, columns=struct.fieldNames(), dtype=object), struct)
+    return df if rows else df.limit(0)
 
 
 def scratch_dir(prefix: str) -> str:

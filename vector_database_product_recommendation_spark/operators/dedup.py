@@ -37,10 +37,9 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.functions.text import tokens_ws
 from vector_database_product_recommendation_spark.functions.textprof import per_doc
 from vector_database_product_recommendation_spark.functions.vectors import matrix
-from vector_database_product_recommendation_spark.lifetime import collect_bounded
+from vector_database_product_recommendation_spark.lifetime import collect_bounded, local_frame
 
 # MinHash permutation family: one md5-based hash per shingle, then k affine
 # permutations h -> (a*h + b) mod P over the Mersenne prime P = 2^31 - 1.
@@ -312,17 +311,20 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     Charikar SimHash of the whitespace-token multiset (token frequency is
     the weight): bit b is set iff sum over tokens of (+1 if bit b of
     _md5_60(token) else -1) is positive. Computed by an Arrow/numpy kernel
-    (an interpreted higher-order fold costs ~60x T lambda evals per row)."""
-    src = docs.select("doc_id", tokens_ws("text").alias("toks")).filter(F.size("toks") > 0)
+    (an interpreted higher-order fold costs ~60x T lambda evals per row)
+    that splits each text itself; a doc with no token has no row."""
     bit_idx = np.arange(_SIMHASH_BITS, dtype=np.int64)
 
-    def row(toks) -> list[tuple[int]]:
+    def row(text: str | None) -> list[tuple[int]]:
+        toks = (text or "").lower().split()
+        if not toks:
+            return []
         hs = np.fromiter((_md5_60(t) for t in toks), dtype=np.int64)
         bits = (hs[:, None] >> bit_idx) & 1  # (T, 60)
         votes = (2 * bits - 1).sum(axis=0)
         return [(int(((votes > 0).astype(np.int64) << bit_idx).sum()),)]
 
-    return per_doc(src, "simhash long", row).orderBy("doc_id")
+    return per_doc(docs.select("doc_id", "text"), "simhash long", row).orderBy("doc_id")
 
 
 def simhash_pairs(signatures: DataFrame) -> DataFrame:
@@ -536,7 +538,7 @@ def winnow_fingerprints_df(docs: DataFrame) -> DataFrame:
     return per_doc(docs.select("doc_id", "text"), "fp long", rows)
 
 
-def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:
+def _min_labels(pairs: pd.DataFrame) -> list[tuple[int, int]]:
     """(u, label) for every vertex of the (u, v) edge rows: a
     union-find whose root is always the smaller id, so each root is its
     component's minimum."""
@@ -556,8 +558,7 @@ def _min_labels(pairs: pd.DataFrame) -> pd.DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    us = list(parent)
-    return pd.DataFrame({"u": us, "label": [find(u) for u in us]}, dtype="int64")
+    return [(u, find(u)) for u in parent]
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -629,7 +630,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
     pairs = collect_bounded(uv, CC_DRIVER_MAX_EDGES, what=None)
     if pairs is not None:
         uv.unpersist()
-        labels = vertices.sparkSession.createDataFrame(_min_labels(pairs), "u long, label long")
+        labels = local_frame(vertices.sparkSession, _min_labels(pairs), "u long, label long")
         return verts.join(F.broadcast(labels), "u", "left").select(
             F.col("u").alias("doc_id"),
             F.coalesce(F.col("label"), F.col("u")).alias("component_id"),

@@ -35,7 +35,7 @@ from collections import defaultdict
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.lifetime import collect_bounded
+from vector_database_product_recommendation_spark.lifetime import collect_bounded, local_frame
 from vector_database_product_recommendation_spark.operators.ivf import collect_centroids, ivf_knn
 from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_knn
 
@@ -108,7 +108,8 @@ def ann_tradeoff(
         precision = sum(len(ivf[q].keys() & exact[q].keys()) / k for q in q_ids) / n_q
         mrr = sum(1.0 / ivf[q][nn1[q]] for q in q_ids if nn1.get(q) in ivf[q]) / n_q
         out_rows.append((nprobe, round(precision, 6), round(mrr, 6), round(ms_per_query, 3), n_q))
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         out_rows,
         "nprobe int, precision_at_k double, mrr double, "
         "avg_query_time_ms double, queries_used long",

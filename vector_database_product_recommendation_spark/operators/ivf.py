@@ -118,9 +118,17 @@ def train_kmeans_centroids(emb: DataFrame) -> DataFrame:
     bound = max(nlist * ppc, nlist + 1)
     x = _sample_matrix(emb, n, d, bound, seed=KMEANS_SEED, dtype=np.float32)
     cents = _lloyd(x, nlist, iters=KMEANS_ITERS, seed=KMEANS_SEED)
-    out = [(i, [float(v) for v in c]) for i, c in enumerate(cents)]
-    return emb.sparkSession.createDataFrame(
-        out, "cluster_id int, centroid array<double>"
+    return _centroid_table(emb.sparkSession, cents)
+
+
+def _centroid_table(spark, cents) -> DataFrame:
+    """(cluster_id, centroid) rows of the trained centroids, as an
+    RDD-backed frame. Not a ``lifetime.local_frame``: every reader pulls
+    the table back through ``collect_centroids``, whose ordered Arrow
+    ``toPandas`` runs 1 job over these rows but 3 over a LocalRelation."""
+    return spark.createDataFrame(
+        [(i, [float(v) for v in c]) for i, c in enumerate(cents)],
+        "cluster_id int, centroid array<double>",
     )
 
 
@@ -224,12 +232,7 @@ def _mllib_centroids(emb: DataFrame, nlist: int) -> DataFrame:
 
     vecs = emb.select(array_to_vector(F.col("embedding")).alias("features"))
     model = KMeans(k=nlist, seed=KMEANS_SEED, maxIter=KMEANS_ITERS).fit(vecs)
-    spark = emb.sparkSession
-    cents = spark.createDataFrame(
-        [(i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())],
-        "cluster_id int, centroid array<double>",
-    )
-    return cents
+    return _centroid_table(emb.sparkSession, model.clusterCenters())
 
 
 def collect_centroids(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:

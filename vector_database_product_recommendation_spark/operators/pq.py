@@ -41,6 +41,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.vectors import dot, matrix
+from vector_database_product_recommendation_spark.lifetime import local_frame
 from vector_database_product_recommendation_spark.operators.ivf import (
     MAX_POINTS_PER_CENTROID,
     _corpus_shape,
@@ -174,8 +175,10 @@ def pq_knn(
     # planner's size estimate, which broadcasts whichever side is small.
     full = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
     qtype = queries.schema["query_id"].dataType.simpleString()
-    qdf = codes_df.sparkSession.createDataFrame(
-        list(zip(q_ids.tolist(), q_mat.tolist())), f"query_id {qtype}, qv array<double>"
+    qdf = local_frame(
+        codes_df.sparkSession,
+        list(zip(q_ids.tolist(), q_mat.tolist())),
+        f"query_id {qtype}, qv array<double>",
     )
     pairs = cand.select("query_id", "neighbor_id")
     if len(q_ids) * fetch <= REFINE_BROADCAST_MAX_ROWS:

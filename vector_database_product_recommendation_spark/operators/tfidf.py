@@ -40,13 +40,16 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
 from vector_database_product_recommendation_spark.functions.textprof import per_doc
-from vector_database_product_recommendation_spark.lifetime import persist_right_sized, pin
+from vector_database_product_recommendation_spark.lifetime import (
+    local_frame,
+    persist_right_sized,
+    pin,
+)
 
 # sklearn's (?u)\b\w\w+\b — runs of >=2 word chars (ASCII corpus).
 TOKEN_PATTERN = r"\w\w+"
@@ -182,23 +185,14 @@ class TfidfModel:
         sklearn transform). Tiny result, meant to be broadcast.
 
         The query is a scalar parameter, not data, so its term counts are
-        tokenized DRIVER-SIDE (``_tokens``, byte-identical to the Column
-        form) into a literal local relation: no corpus-side job runs just
-        to split one string. Counts are exact integers; every float enters
-        downstream through the same engine expressions as before.
-
-        The relation comes from a pandas frame, which Spark keeps as a
-        LocalRelation (a list would become a fresh RDD scan), so the same
-        query text builds the same plan: a re-run matches its cached
-        (``lifetime.pin``ned) intermediates. An empty query carries one
-        null row, filtered out, because an empty frame would become an
-        RDD scan."""
-        spark = self.tf.sparkSession
-        counts = Counter(_tokens(query_text))
-        q_tf = pd.DataFrame(sorted(counts.items()) or [(None, None)], columns=["term", "tf"])
-        q_tf = spark.createDataFrame(
-            q_tf.astype({"tf": "Int64"}), "term string, tf long"
-        ).filter(F.col("term").isNotNull())
+        tokenized DRIVER-SIDE (``_tokens``, the fit's tokenizer) into a
+        ``lifetime.local_frame``: no corpus-side job runs just to split
+        one string. Counts are exact integers; every float enters
+        downstream through the same engine expressions as the fit's. The
+        same query text builds the same plan, so a re-run matches its
+        cached (``lifetime.pin``ned) intermediates."""
+        counts = sorted(Counter(_tokens(query_text)).items())
+        q_tf = local_frame(self.tf.sparkSession, counts, "term string, tf long")
         raw = self._raw(q_tf, ["term"])
         nrm = raw.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
         return raw.crossJoin(F.broadcast(nrm)).select(

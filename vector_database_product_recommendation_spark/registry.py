@@ -267,10 +267,10 @@ from vector_database_product_recommendation_spark.functions.textprof import (  #
 from vector_database_product_recommendation_spark.operators import dedup as D  # noqa: E402
 
 # Shared DuckDB fragments — must mirror the engine's tokenization exactly:
-# tokens = lowercased whitespace split, zero-length dropped (functions.text
-# tokens_ws); shingles = distinct word 3-grams, short docs -> one whole-text
-# shingle (dedup._shingles_py); _h60 = first 60 bits of md5 as a positive
-# BIGINT (= dedup._md5_60).
+# tokens = lowercased whitespace split, zero-length dropped (the kernels'
+# ``(text or "").lower().split()``); shingles = distinct word 3-grams,
+# short docs -> one whole-text shingle (dedup._shingles_py); _h60 = first
+# 60 bits of md5 as a positive BIGINT (= dedup._md5_60).
 _TOKS_SQL = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> len(x) > 0)"
 
 
@@ -846,6 +846,17 @@ from vector_database_product_recommendation_spark.operators.ivf import ivf_knn  
 
 _FREE_TEXT_Q = "spark fast table join query scan stream window"
 
+
+def _free_text_query(spark: SparkSession) -> DataFrame:
+    """The free-text queries' one encoded query row."""
+    from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
+    from vector_database_product_recommendation_spark.lifetime import local_frame
+
+    return local_frame(
+        spark, [(0, hash_embed_py(_FREE_TEXT_Q))], "query_id long, query_vec array<double>"
+    )
+
+
 # Mirrors functions/embed.py hash_embed_py: bucket = h % 384, sign from
 # (h // 384) parity, l2 norm with +1e-12; dense dot == sparse sum over
 # shared buckets because absent buckets are zero.
@@ -881,14 +892,10 @@ def _free_text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serving path: corpus embeddings are a prebuilt artifact
     # (review_embeddings.npy analog); only the query encodes per request.
     from vector_database_product_recommendation_spark.artifacts import encoded_documents
-    from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
     from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
     corpus = encoded_documents(spark, sf_dir)
-    q = spark.createDataFrame(
-        [(0, hash_embed_py(_FREE_TEXT_Q))], "query_id long, query_vec array<double>"
-    )
-    return exact_knn(corpus, q, 10)
+    return exact_knn(corpus, _free_text_query(spark), 10)
 
 
 # ---------------------------------------------------------------------------
@@ -1614,7 +1621,6 @@ def _free_text_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join + top-k. Mirrors the reference: candidate_indices() filters
     # metadata, then gathers PREcomputed vectors (app.py:156-188).
     from vector_database_product_recommendation_spark.artifacts import encoded_documents
-    from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
     from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
     cand = (
@@ -1623,10 +1629,7 @@ def _free_text_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     corpus = encoded_documents(spark, sf_dir).join(cand, "vec_id")
-    q = spark.createDataFrame(
-        [(0, hash_embed_py(_FREE_TEXT_Q))], "query_id long, query_vec array<double>"
-    )
-    return exact_knn(corpus, q, 10)
+    return exact_knn(corpus, _free_text_query(spark), 10)
 
 
 # On-disk inverted file: the probe runs against the cluster-partitioned

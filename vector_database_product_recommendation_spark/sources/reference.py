@@ -90,6 +90,8 @@ def load_embeddings_npy(spark: SparkSession, npy_path: str) -> DataFrame:
     """A dense .npy matrix as (review_idx, embedding) — the positional-
     alignment invariant made explicit (S4)."""
     mat = np.load(npy_path).astype(np.float64)
+    # bulk ingest, not a lifetime.local_frame: the matrix is data of any
+    # size, parallelized straight into right-sized partitions
     rows = spark.sparkContext.parallelize(
         [(i, row.tolist()) for i, row in enumerate(mat)],
         right_sized_partitions(spark, len(mat)),
