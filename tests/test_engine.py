@@ -181,38 +181,47 @@ def test_compare_unknown_ids_names_them(engine, spark_engine, ref_fixture):
 def test_driver_replies_keep_nulls_and_wide_ids(jobs_run_by, spark, monkeypatch):
     """A driver-path reply is a ``lifetime.local_frame`` of its rows: a
     null ``n_reviews``, a null ``brand`` and ids past 2**53 come back
-    exactly, and as the Spark path returns them. A reply with no hit runs
-    no job and keeps the Spark path's schema."""
+    exactly, and as the Spark path returns them, in one schema whether
+    the catalog spans one partition (the scan's ranks) or three (the
+    merge window's). A reply with no hit runs no job and keeps the Spark
+    path's schema."""
     from vector_database_product_recommendation_spark import api
 
     big = 2**53 + 1
-    catalog = spark.createDataFrame(
-        [
-            (big, None, 3, 4.5, [1.0, 0.0, 0.0]),
-            (big + 2, "Amazon", None, None, [0.6, 0.8, 0.0]),
-            (7, "Moshi", 2, 3.0, [0.0, 0.6, 0.8]),
-        ],
-        "id bigint, brand string, n_reviews bigint, avg_rating double, embedding array<double>",
-    ).coalesce(1)  # one partition, as from_reference_dir right-sizes it
-    review_emb = spark.createDataFrame([], "review_idx int, embedding array<double>")
-    engine = api.ProductSearchEngine(catalog, review_emb=review_emb)
-    monkeypatch.setattr(api, "DRIVER_CATALOG_MAX_BYTES", 0)
-    spark_engine = api.ProductSearchEngine(catalog, review_emb=review_emb)
-    assert engine._driver is not None and spark_engine._driver is None
-
-    rows = _same_on_both_paths(engine, spark_engine, lambda e: e.search_by_product_id(big, k=2))
-    assert [tuple(r) for r in rows] == [
-        (1, big + 2, 0.6, "Amazon", None, None),
-        (2, 7, 0.0, "Moshi", 2, 3.0),
+    rows = [
+        (big, None, 3, 4.5, "kindle case", [1.0, 0.0, 0.0]),
+        (big + 2, "Amazon", None, None, "echo speaker", [0.6, 0.8, 0.0]),
+        (7, "Moshi", 2, 3.0, "kindle light", [0.0, 0.6, 0.8]),
     ]
-    rows = _same_on_both_paths(engine, spark_engine, lambda e: e.compare_products([7, big]))
-    assert [tuple(r) for r in rows] == [(7, 7, 1.0), (7, big, 0.0), (big, 7, 0.0), (big, big, 1.0)]
+    schema = (
+        "id bigint, brand string, n_reviews bigint, avg_rating double, "
+        "example_text string, embedding array<double>"
+    )
+    review_emb = spark.createDataFrame([], "review_idx int, embedding array<double>")
 
     def empty(e):
         return e.search_products("anything", k=K, brand="no-such-brand")
 
-    assert jobs_run_by(lambda: empty(engine).collect(), "empty-reply") == 0
-    assert _same_on_both_paths(engine, spark_engine, empty) == []
+    for parts in (1, 3):
+        catalog = spark.createDataFrame(rows, schema).repartition(parts)
+        assert catalog.rdd.getNumPartitions() == parts
+        engine = api.ProductSearchEngine(catalog, review_emb=review_emb)
+        with monkeypatch.context() as m:
+            m.setattr(api, "DRIVER_CATALOG_MAX_BYTES", 0)
+            spark_engine = api.ProductSearchEngine(catalog, review_emb=review_emb)
+        assert engine._driver is not None and spark_engine._driver is None
+
+        got = _same_on_both_paths(engine, spark_engine, lambda e: e.search_by_product_id(big, k=2))
+        assert [tuple(r) for r in got] == [
+            (1, big + 2, 0.6, "Amazon", None, None),
+            (2, 7, 0.0, "Moshi", 2, 3.0),
+        ]
+        got = _same_on_both_paths(engine, spark_engine, lambda e: e.compare_products([7, big]))
+        assert [tuple(r) for r in got] == [(7, 7, 1.0), (7, big, 0.0), (big, 7, 0.0), (big, big, 1.0)]
+        assert jobs_run_by(lambda: empty(engine).collect(), f"empty-reply-{parts}") == 0
+        assert _same_on_both_paths(engine, spark_engine, empty) == []
+        hybrid = spark_engine.search_products("kindle", k=K, mode="hybrid")
+        assert hybrid.schema == empty(engine).schema
 
 
 def test_ann_full_probe_equals_exact(engine):
@@ -325,7 +334,7 @@ def test_hybrid_blend_matches_numpy_over_filtered_candidates(engine, ref_fixture
     # the rescale branch runs, over bounds the whole catalog does not share
     assert mn < mx < ts.max()
     scaled = (cand - mn) / (mx - mn + 1e-12)
-    vs = np.round(fx.emb[idx] @ np.asarray(hash_embed_py(text, fx.emb.shape[1])), 6)
+    vs = fx.emb[idx] @ np.asarray(hash_embed_py(text, fx.emb.shape[1]))
     scores = np.round(alpha * vs + (1 - alpha) * scaled, 6)
     order = np.lexsort((fx.ids[idx], -scores))[:K]
     rows = engine.search_products(text, mode="hybrid", alpha=alpha, brand="amazon", k=K).collect()

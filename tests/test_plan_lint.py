@@ -2,9 +2,10 @@
 
 Builds the plan of EVERY registered query at sf0.001 (no execution) and
 asserts the scale invariants the oracle can't see: no unbounded cartesian
-products, and core fact-table queries keep their filters pushed into the
-parquet scans. Also a free analysis-error smoke test for all queries,
-the registry's query-local pin lifetime and its query order.
+products, core fact-table queries keep their filters pushed into the
+parquet scans, and no vector product runs as an interpreted lambda. Also
+a free analysis-error smoke test for all queries, the registry's
+query-local pin lifetime and its query order.
 """
 
 from __future__ import annotations
@@ -19,6 +20,11 @@ SF_DIR = "/root/testdata/sf0.001"
 # Queries whose plan legitimately materializes work at build time or runs
 # driver-side loops (timed sweeps); they're exercised by their own tests.
 _SKIP = {"ann_tradeoff"}
+
+# the registered queries whose optimized plans may hold a lambda function:
+# dedup_minhash_lsh folds md5 band keys over its signature arrays, a
+# string lambda, not a vector product
+_LAMBDA_ALLOWED = {"dedup_minhash_lsh"}
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +67,16 @@ def test_profile_queries_run_one_arrow_pass_and_no_lambda(built_plans):
         df.collect()
         assert audit.executed_nodes(df).count("MapInPandas") == 1, name
         assert "lambdafunction" not in audit.optimized_plan(df), name
+
+
+def test_no_query_runs_a_vector_product_as_a_lambda(built_plans):
+    """``zip_with``, ``aggregate`` and ``transform`` are CodegenFallback:
+    a lambda over a vector runs interpreted, per element. Every vector
+    product is a numpy kernel instead (functions/vectors.py), so outside
+    the allow-list no optimized plan holds a ``lambdafunction``, cached
+    artifacts' plans included."""
+    offenders = {n for n, df in built_plans.items() if "lambdafunction" in audit.optimized_plan(df)}
+    assert offenders == _LAMBDA_ALLOWED
 
 
 def test_query_local_pins_released_between_queries(jobs_run_by, spark, sf_dir):

@@ -164,7 +164,8 @@ def test_pq_refine_broadcast_gated_on_candidate_rows(spark, sf_dir, monkeypatch)
     planner's own size-based broadcast switched off, pq_knn_refined
     (8 queries x 40) keeps that BroadcastExchange, pq_knn_exactrefine
     (8 x 5,000,000) joins without it and returns the same rows as when
-    forced to broadcast."""
+    forced to broadcast. No query table is joined: each candidate row is
+    scored against its own query's collected vector."""
     from vector_database_product_recommendation_spark import registry
     from vector_database_product_recommendation_spark.operators import pq
 
@@ -184,7 +185,7 @@ def test_pq_refine_broadcast_gated_on_candidate_rows(spark, sf_dir, monkeypatch)
         forced_plan = broadcasts(forced)
     finally:
         spark.conf.set(key, prior)
-    # the query batch broadcasts on every path; the candidates only below the bound
-    assert refined == forced_plan == 2
-    assert plain == 1
+    # the candidates broadcast only below the bound, and nothing else does
+    assert refined == forced_plan == 1
+    assert plain == 0
     assert exact.collect() == forced.collect()

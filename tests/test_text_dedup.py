@@ -449,6 +449,32 @@ def test_embedding_near_dup_guard_raises_beyond_max_rows(spark, monkeypatch):
     assert embedding_near_dup(emb).count() > 0
 
 
+def test_embedding_lsh_bucket_over_the_bound_raises(spark, monkeypatch):
+    """A band bucket of the LSH path holds at most NEAR_DUP_MAX_ROWS rows:
+    a larger one raises a ValueError naming the bound and the operator,
+    checked in the bucket's task before its matrix is stacked."""
+    from pyspark.errors import PythonException
+
+    from vector_database_product_recommendation_spark.operators.dedup import (
+        embedding_band_signatures,
+        embedding_near_dup_lsh,
+    )
+
+    # six copies of one vector: every band puts all six in one bucket
+    emb = spark.range(6).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.lit(0.6), F.lit(0.8), F.lit(0.0), F.lit(0.0)).alias("embedding"),
+    )
+    banded = embedding_band_signatures(emb).cache()
+    monkeypatch.setattr(dedup, "NEAR_DUP_MAX_ROWS", 5)
+    with pytest.raises(PythonException, match=r"ValueError.*embedding_near_dup_lsh.*NEAR_DUP_MAX_ROWS = 5"):
+        embedding_near_dup_lsh(emb, banded).collect()
+    # at the bound the bucket is verified: all 15 pairs, once each
+    monkeypatch.setattr(dedup, "NEAR_DUP_MAX_ROWS", 6)
+    assert embedding_near_dup_lsh(emb, banded).count() == 15
+    banded.unpersist()
+
+
 def test_ngram_jaccard_sort_param_same_rows(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(300)
     # cached, as callers pass it: every scan of the index sees the same

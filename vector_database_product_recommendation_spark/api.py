@@ -54,6 +54,7 @@ from vector_database_product_recommendation_spark.operators.knn import (
     exact_scores,
     item_to_item,
     rank_topk,
+    similarity_rows,
 )
 from vector_database_product_recommendation_spark.operators.tfidf import (
     TfidfModel,
@@ -313,7 +314,7 @@ class ProductSearchEngine:
         )
         return (
             hits.join(self.catalog, "id")
-            .select("rank", "id", "score", *HIT_PAYLOAD)
+            .select(_nullable_rank(), "id", "score", *HIT_PAYLOAD)
             .orderBy("rank")
         )
 
@@ -348,15 +349,17 @@ class ProductSearchEngine:
         products, long form (id_a, id_b, score), rows sorted by
         (id_a, id_b). The vectors come from the driver arrays when held,
         else one job collects them; the matrix is the reference's
-        ``V @ V.T`` on the driver, each pair scored once so the cells are
-        exactly symmetric, and comes back as a local table. Unknown ids
-        raise ValueError naming them, as does an empty ``pids``."""
+        ``V @ V.T`` on the driver (``knn.similarity_rows``, which
+        ``knn.pairwise_similarity`` shares) and comes back as a local
+        table. Unknown ids raise ValueError naming them, as does an empty
+        ``pids``."""
         wanted = list(dict.fromkeys(pids))
         if not wanted:
             raise ValueError("no product ids to compare")
         if self._driver is not None:
             d = self._driver
-            vec = {p: d.mat[d.row[p]] for p in wanted if p in d.row}
+            ids = [p for p in wanted if p in d.row]
+            mat = d.mat[[d.row[p] for p in ids]]
         else:
             # ids are the catalog's key: at most one row per wanted id
             pdf = collect_bounded(
@@ -364,16 +367,11 @@ class ProductSearchEngine:
                 len(wanted),
                 what="the compared products (one catalog row per id)",
             )
-            vec = dict(zip(pdf["id"], matrix(pdf["embedding"])))
-        missing = [p for p in wanted if p not in vec]
+            ids, mat = pdf["id"].tolist(), matrix(pdf["embedding"])
+        missing = [p for p in wanted if p not in ids]
         if missing:
             raise ValueError(f"products {missing!r} are not in the catalog")
-        ids = sorted(vec)
-        score = {}
-        for i, a in enumerate(ids):
-            for b in ids[i:]:
-                score[a, b] = score[b, a] = float(np.round(vec[a] @ vec[b], 6))
-        rows = [(a, b, score[a, b]) for a in ids for b in ids]
+        rows = similarity_rows(ids, mat)
         return local_frame(self.catalog.sparkSession, rows, self._compare_schema)
 
     # -- E3: ANN demo -----------------------------------------------------
@@ -439,8 +437,14 @@ class ProductSearchEngine:
         return self._ivf
 
 
+def _nullable_rank():
+    """``rank``, nullable as in the driver path's replies whether a scan or a
+    ``row_number`` minted it; the optimizer folds the guard away."""
+    return F.when(F.col("rank").isNotNull(), F.col("rank")).alias("rank")
+
+
 def _hit_rows(hits: DataFrame) -> DataFrame:
     """exact_knn's (query_id, neighbor_id, score, rank, *HIT_PAYLOAD) rows
     of one query as the API's (rank, id, score, *HIT_PAYLOAD), in rank
     order."""
-    return hits.select("rank", F.col("neighbor_id").alias("id"), "score", *HIT_PAYLOAD)
+    return hits.select(_nullable_rank(), F.col("neighbor_id").alias("id"), "score", *HIT_PAYLOAD)

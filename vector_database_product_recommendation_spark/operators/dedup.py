@@ -8,7 +8,8 @@ hashes are the first 15 hex digits of an md5, ``_md5_60``):
 - n-gram Jaccard: inverted-index self-join on shingles      sparse O(pairs)
 - MinHash+LSH:  row-local signatures -> band-bucket join    O(N) + tiny join
 - SimHash:      row-local 60-bit signature -> chunk blocks  O(N) + tiny join
-- embedding cosine: threshold pairs over unit vectors       (exact baseline)
+- embedding cosine: threshold pairs over unit vectors       (exact baseline;
+                  band buckets -> per-bucket all-pairs     the LSH scale path)
 
 Scale notes (100 TB):
 - shingles and signatures (minhash, simhash, fingerprints) are
@@ -74,8 +75,11 @@ WINNOW_MIN_SHARED = 3
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.4
 MAX_HAMMING = 3
-# the most corpus rows embedding_near_dup collects to the driver
+# the most corpus rows embedding_near_dup collects to the driver, and the
+# most rows of one embedding_near_dup_lsh band bucket
 NEAR_DUP_MAX_ROWS = 100_000
+# rows of an LSH bucket scored per matmul: an Arrow batch's worth (SCALE.md)
+_VERIFY_BLOCK = 10_000
 # the most edges connected_components labels on the driver; past it the
 # distributed min-label loop runs. The largest graph timed on both paths
 # (SCALE.md): the driver path was faster at every size from 10k to 4M
@@ -367,6 +371,18 @@ def simhash_pairs(signatures: DataFrame) -> DataFrame:
     )
 
 
+def _near_dup_pairs(
+    ids_a: np.ndarray, block: np.ndarray, ids_b: np.ndarray, mat: np.ndarray, threshold: float
+) -> pd.DataFrame:
+    """The all-pairs kernel of both embedding near-dup operators, one BLAS
+    matmul: (id_a, id_b, score) of every (``block`` row, ``mat`` row) pair
+    with id_a < id_b and score = round(dot, 6) >= ``threshold``."""
+    scores = np.round(block @ mat.T, 6)
+    keep = (scores >= threshold) & (ids_a[:, None] < ids_b[None, :])
+    bi, ci = np.nonzero(keep)
+    return pd.DataFrame({"id_a": ids_a[bi], "id_b": ids_b[ci], "score": scores[bi, ci]})
+
+
 def embedding_near_dup(emb: DataFrame) -> DataFrame:
     """Exact cosine near-dup pairs over unit vectors: (id_a, id_b, score),
     score = round(dot, 6) >= ``COSINE_THRESHOLD``, id_a < id_b.
@@ -383,9 +399,8 @@ def embedding_near_dup(emb: DataFrame) -> DataFrame:
     batch in exact_knn). The 100-TB path is the banded/blocked variant
     (cluster or hyperplane blocking) verified against this on samples.
 
-    Physical shape: each partition's block matmuls against the broadcast
-    corpus matrix (BLAS), emitting only pairs over the threshold — the
-    O(N^2 d) inner loop never runs as interpreted per-pair expressions.
+    Physical shape: each partition's block runs ``_near_dup_pairs``
+    against the broadcast corpus matrix.
     """
     src = emb.select("vec_id", "embedding")
     corpus = collect_bounded(
@@ -402,13 +417,7 @@ def embedding_near_dup(emb: DataFrame) -> DataFrame:
             if pdf.empty:
                 continue
             block = matrix(pdf["embedding"])
-            bids = pdf["vec_id"].to_numpy()
-            scores = np.round(block @ mat.T, 6)  # (n_block, N)
-            keep = (scores >= COSINE_THRESHOLD) & (bids[:, None] < ids[None, :])
-            bi, ci = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id_a": bids[bi], "id_b": ids[ci], "score": scores[bi, ci]}
-            )
+            yield _near_dup_pairs(pdf["vec_id"].to_numpy(), block, ids, mat, COSINE_THRESHOLD)
 
     dtype = emb.schema["vec_id"].dataType.simpleString()
     return src.mapInPandas(
@@ -462,16 +471,19 @@ def embedding_band_signatures(emb: DataFrame) -> DataFrame:
 
 def embedding_near_dup_lsh(emb: DataFrame, banded: DataFrame) -> DataFrame:
     """The 100-TB path for embedding near-dup: random-hyperplane (SimHash
-    for vectors) blocking + exact verification of candidates only.
+    for vectors) blocking + exact verification inside each bucket only.
 
     ``banded``: the (vid, band_idx, band_key) rows of
-    ``embedding_band_signatures`` over ``emb``: each vector's
-    N_PLANES-bit sign signature (one BLAS matvec against the fixed
-    Rademacher plane matrix, row-local) cut into bands of
-    N_PLANES/N_BANDS bits. The band self-join reads it twice, so callers
-    pass it cached (artifacts.embedding_band_table). Candidate pairs
-    sharing any band are verified with the exact round(dot, 6) >=
-    ``COSINE_THRESHOLD``.
+    ``embedding_band_signatures`` over ``emb`` (each vector's
+    N_PLANES-bit sign signature cut into bands of N_PLANES/N_BANDS
+    bits), cached by the caller (artifacts.embedding_band_table). The
+    band rows are joined to their vectors once, and each
+    (band_idx, band_key) bucket is verified by ``embedding_near_dup``'s
+    kernel (``_near_dup_pairs``) in one ``groupBy(...).applyInPandas``
+    pass; ``distinct`` keeps a pair found in several bands once. Returns
+    (id_a, id_b, score), id_a < id_b, sorted by (id_a, id_b). A bucket
+    over ``NEAR_DUP_MAX_ROWS`` rows raises ValueError before its matrix
+    is stacked (SCALE.md).
 
     Precision is exact (every emitted pair is verified). Recall is the
     standard SRP-LSH bound: a pair at cosine s agrees per-plane with
@@ -480,26 +492,27 @@ def embedding_near_dup_lsh(emb: DataFrame, banded: DataFrame) -> DataFrame:
     ``COSINE_THRESHOLD`` = 0.4; the exact all-pairs operator
     `embedding_near_dup` is its audit oracle on samples.
     """
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .distinct()
-    )
-    from vector_database_product_recommendation_spark.functions.vectors import dot
+    threshold, bound = COSINE_THRESHOLD, NEAR_DUP_MAX_ROWS
 
-    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
-    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
+    def verify(bucket: pd.DataFrame) -> pd.DataFrame:
+        if len(bucket) > bound:
+            raise ValueError(
+                f"an embedding_near_dup_lsh band bucket holds {len(bucket)} rows, "
+                f"more than dedup.NEAR_DUP_MAX_ROWS = {bound}"
+            )
+        ids = bucket["vid"].to_numpy()
+        mat = matrix(bucket["embedding"])
+        b = _VERIFY_BLOCK
+        blocks = range(0, len(ids), b)
+        return pd.concat([_near_dup_pairs(ids[i : i + b], mat[i : i + b], ids, mat, threshold) for i in blocks])
+
+    dtype = emb.schema["vec_id"].dataType.simpleString()
+    vectors = emb.select(F.col("vec_id").alias("vid"), "embedding")
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", F.round(dot("__va", "__vb"), 6).alias("score"))
-        .filter(F.col("score") >= COSINE_THRESHOLD)
+        banded.join(vectors, "vid")
+        .groupBy("band_idx", "band_key")
+        .applyInPandas(verify, f"id_a {dtype}, id_b {dtype}, score double")
+        .distinct()
         .orderBy("id_a", "id_b")
     )
 

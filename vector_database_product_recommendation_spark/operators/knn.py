@@ -9,9 +9,9 @@ Spark-first physical shape (SURVEY.md section 4, "100-TB-safe"):
 - the CORPUS NEVER SHUFFLES. Queries are a small batch by construction
   (the reference's widest workload is 400 query vectors); we collect them
   to the driver and ship them to every task via closure broadcast.
-- ``topk_scan`` is the one scan of the exact, IVF (operators/ivf.py) and
-  PQ (operators/pq.py) kernels. A kernel supplies only its per-batch
-  scorer, (rows x queries) scores inside mapInPandas (Arrow batches ->
+- ``topk_scan`` is the one scan of the exact, IVF (operators/ivf.py), PQ
+  (operators/pq.py) and SQ8 (operators/sq.py) kernels. A kernel supplies
+  only its per-batch scorer, (rows x queries) scores inside mapInPandas (Arrow batches ->
   BLAS, the distributed analog of the reference's `emb @ qv` hot loop);
   the scan prunes each batch, ranks each task's candidates once and
   merges the tasks, so the one shuffle that remains — the per-query
@@ -30,8 +30,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from vector_database_product_recommendation_spark.functions.vectors import dot, matrix
-from vector_database_product_recommendation_spark.lifetime import collect_bounded
+from vector_database_product_recommendation_spark.functions.vectors import matrix
+from vector_database_product_recommendation_spark.lifetime import collect_bounded, local_frame
 
 # the most query rows a kernel collects to the driver and ships in every
 # task's closure. The scan's memory sets it, not the transfer (31 MB at 384
@@ -85,6 +85,12 @@ def rank_topk(
     return order[sel], rank[sel]
 
 
+def row_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise products of ``a`` and ``b`` (or its one broadcast row), summed
+    left to right as DuckDB's ``list_inner_product`` sums: one pair per row."""
+    return np.cumsum(a * b, axis=1)[:, -1]
+
+
 def merge_topk(partial: DataFrame, k: int, *, single_task: bool) -> DataFrame:
     """Global top-k from task-local top-k rows.
 
@@ -118,18 +124,6 @@ def _schema(frame: DataFrame, queries: DataFrame, corpus_id: str, rest: list[str
     return ", ".join([f"query_id {qid}", f"neighbor_id {nid}", *rest])
 
 
-def _exact_scorer(q_mat: np.ndarray):
-    """The exact kernel's ``score_batch``: every row of an Arrow batch
-    against every query, one BLAS matmul, rounded in float64 BEFORE any
-    selection."""
-    qm = q_mat.T  # (d, q)
-
-    def score_batch(pdf: pd.DataFrame) -> np.ndarray:
-        return np.round(matrix(pdf["embedding"]) @ qm, 6)
-
-    return score_batch
-
-
 def topk_scan(
     frame: DataFrame,
     queries: DataFrame,
@@ -142,7 +136,7 @@ def topk_scan(
     payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per query of ``q_ids`` (the collected ids of ``queries``), the top-k
-    rows of ``frame``: the one scan of the exact, IVF and PQ kernels.
+    rows of ``frame``: the one scan of the exact, IVF, PQ and SQ8 kernels.
 
     ``score_batch(pdf)`` scores one Arrow batch of ``frame`` as a
     (rows x queries) float64 matrix; ``-inf`` marks a pair that is not a
@@ -251,12 +245,15 @@ def exact_knn(
     are those of a plain top-k.
     """
     q_ids, q_mat = _query_batch(queries, query_arrays)
+    qm = q_mat.T  # (d, q)
     return topk_scan(
         corpus.select(corpus_id, "embedding", *payload),
         queries,
         q_ids,
         k,
-        _exact_scorer(q_mat),
+        # every row of a batch against every query, one BLAS matmul,
+        # rounded in float64 BEFORE any selection
+        lambda pdf: np.round(matrix(pdf["embedding"]) @ qm, 6),
         corpus_id=corpus_id,
         exclude_self=exclude_self,
         payload=payload,
@@ -275,21 +272,22 @@ def exact_scores(
     The blend path of hybrid search (app.py:202-210) needs all candidate
     scores, not a ranking; routing it through exact_knn with a sentinel
     k would drag O(N) rows through the per-query rank window (a single
-    serialized partition at scale). This is exact_knn's scorer with no
-    selection: output stays partition-local, zero shuffles. Returns
+    serialized partition at scale). This is exact_knn's BLAS product with
+    no rounding (the blend's dense side is raw) and no selection: output
+    stays partition-local, zero shuffles. Returns
     (query_id, neighbor_id, score), neighbor_id read from the corpus's
     ``corpus_id`` column. ``query_arrays``: the (ids, matrix) of
     ``queries``, which supplies only the query_id type.
     """
     q_ids, q_mat = _query_batch(queries, query_arrays)
-    score_batch = _exact_scorer(q_mat)
+    qm = q_mat.T  # (d, q)
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
             ids = pdf[corpus_id].to_numpy()
-            scores = score_batch(pdf)
+            scores = matrix(pdf["embedding"]) @ qm
             # query-major: all of query 0's rows, then query 1's…
             yield pd.DataFrame(
                 {
@@ -332,16 +330,27 @@ def item_to_item(
     )
 
 
+def similarity_rows(ids: list, mat: np.ndarray) -> list[tuple]:
+    """J5's ``V @ V.T`` (app.py:348-354) over the rows of ``mat`` in long form:
+    (id_a, id_b, round(score, 6)) for every ordered pair of ``ids``, diagonal
+    included, sorted by (id_a, id_b); each pair is scored once, so the cells
+    are exactly symmetric."""
+    order = sorted(range(len(ids)), key=ids.__getitem__)
+    s = np.round(mat[order] @ mat[order].T, 6)
+    s = np.triu(s) + np.triu(s, 1).T
+    return [(ids[a], ids[b], float(s[i, j])) for i, a in enumerate(order) for j, b in enumerate(order)]
+
+
 def pairwise_similarity(items: DataFrame) -> DataFrame:
-    """J5 (app.py:348-354): similarity matrix for a small selected set
-    (reference allows 2-4 products) of (vec_id, embedding) rows. Long form
-    (id_a, id_b, score) including the diagonal, scores rounded to 6
-    decimals, a < b ordering not applied so the square matrix can be
-    pivoted client-side exactly like `V @ V.T`."""
-    a = items.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
-    b = items.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
-    return (
-        a.crossJoin(F.broadcast(b))
-        .select("id_a", "id_b", F.round(dot("__va", "__vb"), 6).alias("score"))
-        .orderBy("id_a", "id_b")
+    """J5 (app.py:348-354) over a small selected set (the reference allows 2-4
+    products) of (vec_id, embedding) rows: ``similarity_rows`` of the rows'
+    one bounded transfer, returned as a local table."""
+    ids, mat = collect_queries(
+        items.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    )
+    id_type = items.schema["vec_id"].dataType.simpleString()
+    return local_frame(
+        items.sparkSession,
+        similarity_rows(ids.tolist(), mat),
+        f"id_a {id_type}, id_b {id_type}, score double",
     )

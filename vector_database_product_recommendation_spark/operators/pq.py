@@ -40,8 +40,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from vector_database_product_recommendation_spark.functions.vectors import dot, matrix
-from vector_database_product_recommendation_spark.lifetime import local_frame
+from vector_database_product_recommendation_spark.functions.vectors import matrix
 from vector_database_product_recommendation_spark.operators.ivf import (
     MAX_POINTS_PER_CENTROID,
     _corpus_shape,
@@ -50,7 +49,9 @@ from vector_database_product_recommendation_spark.operators.ivf import (
 )
 from vector_database_product_recommendation_spark.operators.knn import (
     _query_batch,
+    _schema,
     merge_topk,
+    row_dots,
     topk_scan,
 )
 
@@ -138,7 +139,9 @@ def pq_knn(
     full-precision vectors (a candidate set of at most
     ``REFINE_BROADCAST_MAX_ROWS`` rows is BROADCAST onto the corpus scan,
     so the corpus never shuffles; for a larger one the planner picks the
-    join) and re-ranked by ``knn.merge_topk``; output is then (query_id,
+    join), each joined row against its own query's collected vector in
+    one mapInPandas pass (``knn.row_dots``), and re-ranked by
+    ``knn.merge_topk``; output is then (query_id,
     neighbor_id, score, rank) with exact scores, comparable to exact_knn's.
     """
     q_ids, q_mat = _query_batch(queries, None)
@@ -166,26 +169,28 @@ def pq_knn(
     if emb is None:
         return cand.select("query_id", "neighbor_id", F.round("score", 6).alias("score"), "rank")
 
-    # exact refine: re-score the candidate set with full vectors. A
-    # candidate table of at most REFINE_BROADCAST_MAX_ROWS rows
-    # (queries * fetch) broadcasts onto the corpus scan — emb itself never
-    # shuffles; only the rescored candidates cross the rank-window
-    # exchange. Past the bound (a refine_factor near the corpus size makes
-    # the candidates up to queries x corpus rows) the join is left to the
-    # planner's size estimate, which broadcasts whichever side is small.
-    full = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
-    qtype = queries.schema["query_id"].dataType.simpleString()
-    qdf = local_frame(
-        codes_df.sparkSession,
-        list(zip(q_ids.tolist(), q_mat.tolist())),
-        f"query_id {qtype}, qv array<double>",
-    )
+    # exact refine: a candidate table of at most REFINE_BROADCAST_MAX_ROWS
+    # rows (queries * fetch) broadcasts onto the corpus scan — emb itself
+    # never shuffles; only the rescored candidates cross the rank-window
+    # exchange. Past the bound (a refine_factor near the corpus size) the
+    # planner's size estimate picks the join.
     pairs = cand.select("query_id", "neighbor_id")
     if len(q_ids) * fetch <= REFINE_BROADCAST_MAX_ROWS:
         pairs = F.broadcast(pairs)
-    rescored = (
-        full.join(pairs, "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", F.round(dot("qv", "nv"), 6).alias("score"))
+    joined = (
+        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("nv"))
+        .join(pairs, "neighbor_id")
+        .select("query_id", "neighbor_id", "nv")
     )
+    pos = pd.Index(q_ids)
+
+    def rescore(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            own = q_mat[pos.get_indexer(pdf["query_id"])]  # each row's query
+            score = np.round(row_dots(matrix(pdf["nv"]), own), 6)
+            yield pdf[["query_id", "neighbor_id"]].assign(score=score)
+
+    rescored = joined.mapInPandas(rescore, _schema(joined, queries, "neighbor_id", ["score double"]))
     return merge_topk(rescored, k, single_task=False).orderBy("query_id", "rank")

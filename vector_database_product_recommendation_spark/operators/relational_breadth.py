@@ -484,11 +484,15 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decorrelated the way Catalyst's RewriteCorrelatedScalarSubquery would:
     one aggregate per (orderkey, suppkey) with per-line late counts, one
     per orderkey with supplier/late-supplier counts, then a filter — both
-    EXISTS subqueries collapse into the same shuffled aggregate instead of
-    re-scanning lineitem per outer row.  At 100 TB: two hash aggregates
-    keyed on l_orderkey (map-side partial combine shrinks each to one row
-    per group) and one join between them that AQE plans from actual sizes;
-    lineitem is scanned once.
+    EXISTS subqueries collapse into shuffled aggregates instead of
+    re-scanning lineitem per outer row.  At 100 TB: hash aggregates keyed
+    on l_orderkey (map-side partial combine shrinks each to one row per
+    group) and one join between them that AQE plans from actual sizes.
+    Its two consumers do NOT share that aggregate: Catalyst pushes the
+    blamed side's ``n_late_lines > 0`` below the repartition, so the
+    subtrees differ. The final AQE plan at sf0.01 scans lineitem twice and
+    runs the lineitem ⋈ orders join and the aggregate once per consumer;
+    only the orders broadcast is reused (one ReusedExchange).
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -502,12 +506,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")).cast("int"),
     )
     # per_supp feeds two consumers (per_order and the blamed join) keyed on
-    # l_orderkey: repartition it by that key ONCE so both consumers hang
-    # off the same exchange — ReuseExchange then computes the lineitem ⋈
-    # orders join and the (orderkey, suppkey) aggregate a single time, and
-    # neither the per-order rollup nor the join needs any further shuffle
-    # (hashpartitioning(l_orderkey) satisfies both). The naive form ran the
-    # whole join+aggregate subtree once per consumer with an exchange each.
+    # l_orderkey: repartitioned by that key, neither needs a further shuffle
     per_supp = (
         lines.groupBy("l_orderkey", "l_suppkey")
         .agg(F.sum("late").alias("n_late_lines"))

@@ -50,6 +50,7 @@ from vector_database_product_recommendation_spark.lifetime import (
     persist_right_sized,
     pin,
 )
+from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_scores
 
 # sklearn's (?u)\b\w\w+\b — runs of >=2 word chars (ASCII corpus).
 TOKEN_PATTERN = r"\w\w+"
@@ -280,20 +281,19 @@ def hybrid_search(
     minmax(tfidf_cosine), replicating the reference's quirks exactly
     (SURVEY 2.9.2-3): TF-IDF cosine computed over the WHOLE corpus by the
     fitted ``model``, min-max over the candidate set (here: all ``docs``),
-    dense side left raw.
+    dense side left raw: ``knn.exact_scores`` against the query item's
+    collected vector, as in the serving engine's hybrid.
     """
-    from vector_database_product_recommendation_spark.functions.vectors import dot
-
     # sparse side — cosine for every doc; query-local pin: it feeds the
     # blend's min/max bounds agg AND its rescale projection
     sparse = pin(model.scores(query_text, docs.select("doc_id")))
-    # dense side — raw dot against the query item's own vector (E2 shape)
-    qv = emb.filter(F.col("vec_id") == F.lit(query_vec_id)).select(
-        F.col("embedding").alias("__qv")
+    # dense side — raw products against the query item's own vector (E2 shape)
+    q = emb.filter(F.col("vec_id") == F.lit(query_vec_id)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    dense = emb.crossJoin(F.broadcast(qv)).select(
-        F.col("vec_id").alias("doc_id"), dot("embedding", "__qv").alias("vs")
-    )
+    dense = exact_scores(
+        emb, q, query_arrays=collect_queries(q), corpus_id="vec_id"
+    ).select(F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs"))
     return blend_hybrid(sparse, dense, alpha, k)
 
 

@@ -847,14 +847,17 @@ from vector_database_product_recommendation_spark.operators.ivf import ivf_knn  
 _FREE_TEXT_Q = "spark fast table join query scan stream window"
 
 
-def _free_text_query(spark: SparkSession) -> DataFrame:
-    """The free-text queries' one encoded query row."""
+def _free_text_query(spark: SparkSession) -> tuple[DataFrame, tuple]:
+    """The free-text queries' one encoded query row, as a frame and as the
+    (ids, matrix) ``exact_knn`` takes in place of collecting it back."""
+    import numpy as np
+
     from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
     from vector_database_product_recommendation_spark.lifetime import local_frame
 
-    return local_frame(
-        spark, [(0, hash_embed_py(_FREE_TEXT_Q))], "query_id long, query_vec array<double>"
-    )
+    qv = hash_embed_py(_FREE_TEXT_Q)
+    frame = local_frame(spark, [(0, qv)], "query_id long, query_vec array<double>")
+    return frame, (np.array([0]), np.asarray([qv], dtype=np.float64))
 
 
 # Mirrors functions/embed.py hash_embed_py: bucket = h % 384, sign from
@@ -895,7 +898,8 @@ def _free_text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
     corpus = encoded_documents(spark, sf_dir)
-    return exact_knn(corpus, _free_text_query(spark), 10)
+    q, arrays = _free_text_query(spark)
+    return exact_knn(corpus, q, 10, query_arrays=arrays)
 
 
 # ---------------------------------------------------------------------------
@@ -1629,7 +1633,8 @@ def _free_text_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     corpus = encoded_documents(spark, sf_dir).join(cand, "vec_id")
-    return exact_knn(corpus, _free_text_query(spark), 10)
+    q, arrays = _free_text_query(spark)
+    return exact_knn(corpus, q, 10, query_arrays=arrays)
 
 
 # On-disk inverted file: the probe runs against the cluster-partitioned
