@@ -155,16 +155,12 @@ def main() -> None:
         emb = load_table(spark, SF_DIR, "embeddings").persist()
         emb.count()
         n_q = min(512, n_corpus)
-        qdf = emb.filter(SF.col("vec_id") < n_q).select(
-            SF.col("vec_id").alias("query_id"),
-            SF.col("embedding").alias("query_vec"),
-        )
-        q_arrays = collect_queries(qdf)
-        exact_knn(emb, qdf, 10, query_arrays=q_arrays).count()  # warm
+        batch = collect_queries(emb, SF.col("vec_id") < n_q)
+        exact_knn(emb, batch, 10).count()  # warm
         runs = []
         for _ in range(3):
             t = time.time()
-            exact_knn(emb, qdf, 10, query_arrays=q_arrays).count()
+            exact_knn(emb, batch, 10).count()
             runs.append(time.time() - t)
         dt = sorted(runs)[1]
         extras["knn_bulk_queries"] = n_q

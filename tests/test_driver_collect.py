@@ -16,12 +16,6 @@ from vector_database_product_recommendation_spark.sources.tables import load_tab
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _queries(emb, n=4):
-    return emb.filter(F.col("vec_id") < n).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-
 def test_within_the_bound_rows_arrive_as_arrays(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
@@ -64,11 +58,10 @@ def test_no_more_jobs_than_a_plain_collect(spark, jobs_run_by, shape):
 
 def test_sites_without_a_fallback_raise_naming_their_bound(spark, monkeypatch):
     emb = load_table(spark, SF_DIR, "embeddings")
-    q = _queries(emb)
-    cents, assigned = ivf.build_ivf_index(emb)
+    cents = ivf.train_kmeans_centroids(emb)
     cases = {
-        "QUERY_BATCH_MAX_ROWS": (knn, lambda: knn.exact_knn(emb, q, 3)),
-        "MAX_CENTROIDS": (ivf, lambda: ivf.ivf_knn(assigned, cents, q, 3, nprobe=2)),
+        "QUERY_BATCH_MAX_ROWS": (knn, lambda: knn.collect_queries(emb, F.col("vec_id") < 4)),
+        "MAX_CENTROIDS": (ivf, lambda: ivf.collect_centroids(cents)),
         "NEAR_DUP_MAX_ROWS": (dedup, lambda: dedup.embedding_near_dup(emb)),
     }
     for name, (module, call) in cases.items():

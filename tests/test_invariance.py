@@ -15,7 +15,7 @@ from vector_database_product_recommendation_spark.operators.dedup import (
     minhash_table,
     simhash_signatures,
 )
-from vector_database_product_recommendation_spark.operators.knn import exact_knn
+from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_knn
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 
@@ -29,9 +29,7 @@ def _rows(df):
 
 
 def test_exact_knn_partition_invariant(emb):
-    q = emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = collect_queries(emb, F.col("vec_id") < 6)
     narrow = exact_knn(emb.repartition(1), q, 7)
     wide = exact_knn(emb.repartition(13), q, 7)
     assert _rows(narrow) == _rows(wide)

@@ -29,7 +29,11 @@ from vector_database_product_recommendation_spark.operators.ivf import (
     train_kmeans_centroids,
     write_ivf_store,
 )
-from vector_database_product_recommendation_spark.operators.knn import exact_knn
+from vector_database_product_recommendation_spark.operators.knn import (
+    QueryBatch,
+    collect_queries,
+    exact_knn,
+)
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 NLIST = 7
@@ -56,24 +60,22 @@ def ivf_parts(emb):
     return cents, assigned
 
 
-def _queries(emb, n=6):
-    return emb.filter(F.col("vec_id") < n).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+def _queries(emb, n=6) -> QueryBatch:
+    return collect_queries(emb, F.col("vec_id") < n)
 
 
 def test_ivf_full_probe_equals_exact(emb, ivf_parts):
     cents, assigned = ivf_parts
     q = _queries(emb)
     exact = exact_knn(emb, q, 5).collect()
-    full = ivf_knn(assigned, cents, q, 5, nprobe=NLIST).collect()
+    full = ivf_knn(assigned, collect_centroids(cents), q, 5, nprobe=NLIST).collect()
     assert [tuple(r) for r in full] == [tuple(r) for r in exact]
 
 
 def test_ivf_partial_probe_subset_of_corpus_and_sane(emb, ivf_parts):
     cents, assigned = ivf_parts
     q = _queries(emb)
-    part = ivf_knn(assigned, cents, q, 5, nprobe=2)
+    part = ivf_knn(assigned, collect_centroids(cents), q, 5, nprobe=2)
     rows = part.collect()
     assert len(rows) == 6 * 5
     assert all(-1.0001 <= r["score"] <= 1.0001 for r in rows)
@@ -144,7 +146,7 @@ def test_ann_tradeoff_scores_the_kernels_hit_lists(emb, ivf_parts):
     cents, assigned = ivf_parts
     q = _queries(emb, n_q)
     exact = exact_knn(emb, q, k, exclude_self=True).toPandas()
-    ivf = ivf_knn(assigned, cents, q, k, 1, exclude_self=True).toPandas()
+    ivf = ivf_knn(assigned, collect_centroids(cents), q, k, 1, exclude_self=True).toPandas()
     precision, rr = [], []
     for qid in range(n_q):
         e = exact[exact.query_id == qid].sort_values("rank").neighbor_id.to_numpy()
@@ -185,9 +187,7 @@ def test_free_text_self_retrieval(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     qtext = docs.filter(F.col("doc_id") == 5).select("text").first()[0]
     # E1's vector path: encode the corpus, embed the query, exact KNN
-    q = spark.createDataFrame(
-        [(0, hash_embed_py(qtext))], "query_id long, query_vec array<double>"
-    )
+    q = QueryBatch(np.array([0]), np.array([hash_embed_py(qtext)]), "bigint")
     top = exact_knn(encode_documents(docs), q, 3).collect()
     assert top[0]["neighbor_id"] == 5
     assert abs(top[0]["score"] - 1.0) < 1e-4
@@ -220,10 +220,8 @@ def test_ivf_task_holding_only_the_query_row(spark):
     assigned = sc.parallelize([(i, v, i) for i, v in enumerate(vecs)], 3).toDF(
         "vec_id long, embedding array<double>, cluster_id int"
     )
-    cents = spark.createDataFrame(list(enumerate(vecs)), "cluster_id int, centroid array<double>")
-    q = assigned.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    cents = (np.arange(3), np.array(vecs))
+    q = collect_queries(assigned, F.col("vec_id") == 0)
     assert ivf_knn(assigned, cents, q, 2, nprobe=1, exclude_self=True).collect() == []
     two = ivf_knn(assigned, cents, q, 2, nprobe=2, exclude_self=True).collect()
     assert [(r["neighbor_id"], r["rank"]) for r in two] == [(1, 1)]
@@ -240,7 +238,7 @@ def test_ivf_knn_single_partition_elides_merge_window(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").coalesce(1)
     cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(emb, cents)
-    plan = plan_of(ivf_knn(assigned, cents, _queries(emb), 5, nprobe=2))
+    plan = plan_of(ivf_knn(assigned, collect_centroids(cents), _queries(emb), 5, nprobe=2))
     # kernel emits task-local ranks; a one-task pool needs no merge window
     assert "hashpartitioning" not in plan, plan
     assert "Window" not in plan.replace("WindowGroupLimit", ""), plan
@@ -251,19 +249,9 @@ def test_ivf_knn_multi_partition_matches_single(spark, sf_dir):
     cents = train_kmeans_centroids(emb)
     one = assign_clusters(emb.coalesce(1), cents)
     many = assign_clusters(emb.repartition(7), cents)
-    a = ivf_knn(one, cents, _queries(emb), 5, nprobe=3).collect()
-    b = ivf_knn(many, cents, _queries(emb), 5, nprobe=3).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_ivf_knn_centroid_rows_param_equivalent(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_kmeans_centroids(emb)
-    assigned = assign_clusters(emb, cents)
-    q = _queries(emb)
-    arrays = collect_centroids(cents)
-    a = ivf_knn(assigned, cents, q, 5, nprobe=2).collect()
-    b = ivf_knn(assigned, cents, q, 5, nprobe=2, centroid_arrays=arrays).collect()
+    centroids, q = collect_centroids(cents), _queries(emb)
+    a = ivf_knn(one, centroids, q, 5, nprobe=3).collect()
+    b = ivf_knn(many, centroids, q, 5, nprobe=3).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
@@ -274,7 +262,7 @@ def test_ivf_knn_store_probe_statically_pruned(spark, sf_dir, tmp_path):
     path = str(tmp_path / "store")
     write_ivf_store(assigned, path)
     store = read_ivf_store(spark, path)
-    plan = plan_of(ivf_knn(store, cents, _queries(emb), 5, nprobe=2))
+    plan = plan_of(ivf_knn(store, collect_centroids(cents), _queries(emb), 5, nprobe=2))
     # the isin cluster filter must reach the store scan as partition pruning
     assert "PartitionFilters" in plan
     pf_line = plan.split("PartitionFilters")[1].splitlines()[0]

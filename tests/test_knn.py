@@ -10,6 +10,8 @@ from pyspark.sql import DataFrame, Window
 
 from vector_database_product_recommendation_spark.operators.centroids import group_centroids, group_centroids_long
 from vector_database_product_recommendation_spark.operators.knn import (
+    QueryBatch,
+    collect_queries,
     exact_knn,
     item_to_item,
     pairwise_similarity,
@@ -35,11 +37,14 @@ def _expr_dot(a: str, b: str):
     )
 
 
-def exact_knn_expr(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """Pure-expression cross-check of exact_knn: crossJoin(broadcast(queries))
-    + zip_with dot + a row_number window. JVM-only, no Python worker, but it
-    shuffles O(q*N) scored rows, so it is a test oracle, not a serving path."""
-    q = queries.select("query_id", F.col("query_vec").alias("__qv"))
+def exact_knn_expr(corpus: DataFrame, where, k: int) -> DataFrame:
+    """Pure-expression cross-check of exact_knn for the corpus rows matching
+    ``where``: crossJoin(broadcast(queries)) + zip_with dot + a row_number
+    window. JVM-only, no Python worker, but it shuffles O(q*N) scored rows,
+    so it is a test oracle, not a serving path."""
+    q = corpus.filter(where).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
+    )
     scored = (
         corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
         .crossJoin(F.broadcast(q))
@@ -53,10 +58,8 @@ def exact_knn_expr(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _queries(emb, n=5):
-    return emb.filter(F.col("vec_id") < n).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+def _queries(emb, n=5) -> QueryBatch:
+    return collect_queries(emb, F.col("vec_id") < n)
 
 
 def test_exact_knn_matches_numpy(spark, emb):
@@ -79,7 +82,7 @@ def test_exact_knn_matches_numpy(spark, emb):
 def test_exact_knn_expr_agrees_with_kernel(spark, emb):
     k = 4
     a = exact_knn(emb, _queries(emb, 3), k).collect()
-    b = exact_knn_expr(emb, _queries(emb, 3), k).collect()
+    b = exact_knn_expr(emb, F.col("vec_id") < 3, k).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
@@ -89,9 +92,7 @@ def test_exact_knn_task_holding_only_the_query_row(spark):
     nothing rather than fail."""
     vecs = [[1.0, 0.0], [0.8, 0.6], [0.0, 1.0]]
     corpus = spark.sparkContext.parallelize(list(enumerate(vecs)), 3).toDF("vec_id long, embedding array<double>")
-    q = corpus.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = collect_queries(corpus, F.col("vec_id") == 0)
     out = exact_knn(corpus, q, 2, exclude_self=True).collect()
     assert [(r["neighbor_id"], r["score"], r["rank"]) for r in out] == [(1, 0.8, 1), (2, 0.0, 2)]
 
@@ -146,7 +147,7 @@ def test_exact_knn_payload_on_merge_path(spark, exclude_self):
     )
     assert corpus.rdd.getNumPartitions() == 3
     queries = [(6, [1.0, 0.0, 0.0]), (4, [0.0, 1.0, 0.0])]
-    q = spark.createDataFrame(queries, "query_id long, query_vec array<double>")
+    q = QueryBatch(np.array([6, 4]), np.array([v for _, v in queries]), "bigint")
     out = exact_knn(corpus, q, 3, exclude_self=exclude_self, payload=PAYLOAD)
     assert out.columns == ["query_id", "neighbor_id", "score", "rank", *PAYLOAD]
     got = [tuple(r) for r in out.collect()]
@@ -243,10 +244,9 @@ def test_exact_scores_full_matrix_no_selection(spark, emb):
     corpus row scored per query, raw values equal to the numpy product
     (to the last bits a BLAS blocking may move), not on the 6-decimal
     grid."""
-    from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_scores
+    from vector_database_product_recommendation_spark.operators.knn import exact_scores
 
-    q = _queries(emb, 3)
-    out = exact_scores(emb, q, query_arrays=collect_queries(q), corpus_id="vec_id").collect()
+    out = exact_scores(emb, _queries(emb, 3), corpus_id="vec_id").collect()
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows])
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
@@ -282,6 +282,7 @@ def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb, monkeypat
     from vector_database_product_recommendation_spark.operators import ivf
     from vector_database_product_recommendation_spark.operators.ivf import (
         assign_clusters,
+        collect_centroids,
         ivf_knn,
         train_kmeans_centroids,
     )
@@ -295,6 +296,7 @@ def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb, monkeypat
     monkeypatch.setattr(ivf, "_nlist", lambda n: 5)  # nprobe=5 probes every list
     cents = train_kmeans_centroids(emb)
     assigned = assign_clusters(corpus, cents)
+    centroids = collect_centroids(cents)
     books = train_pq(emb)
     codes = encode_pq(corpus, books)
     q = _queries(emb)
@@ -303,8 +305,8 @@ def test_topk_scan_multi_batch_matches_one_batch_and_numpy(spark, emb, monkeypat
     def run():
         return {
             "exact": exact_knn(corpus, q, k, exclude_self=True, payload=("label",)),
-            "ivf_partial": ivf_knn(assigned, cents, q, k, nprobe=2),
-            "ivf_full": ivf_knn(assigned, cents, q, k, nprobe=5),
+            "ivf_partial": ivf_knn(assigned, centroids, q, k, nprobe=2),
+            "ivf_full": ivf_knn(assigned, centroids, q, k, nprobe=5),
             "pq": pq_knn(codes, books, q, k),
             "pq_refine": pq_knn(codes, books, q, k, emb=corpus, refine_factor=2),
         }
@@ -349,9 +351,7 @@ def test_topk_scan_cuts_ties_per_batch_by_id(spark, emb):
     )
     books = train_pq(emb)
     codes = encode_pq(dup, books).cache()
-    q = dup.filter(F.col("vec_id") % 4 == 0).filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = collect_queries(dup, (F.col("vec_id") % 4 == 0) & (F.col("vec_id") < 20))
     k = 2
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"

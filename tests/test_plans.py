@@ -18,11 +18,12 @@ from vector_database_product_recommendation_spark.operators.ivf import (
     train_kmeans_centroids,
     write_ivf_store,
 )
-from vector_database_product_recommendation_spark.operators.knn import exact_knn
+from vector_database_product_recommendation_spark.operators.knn import collect_queries, exact_knn
 from vector_database_product_recommendation_spark.operators.relational import (
     q1_pricing_summary,
     q3_shipping_priority,
 )
+from vector_database_product_recommendation_spark.plans import audit
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 
@@ -52,9 +53,7 @@ def test_q3_filters_pushed_and_column_pruned(spark, sf_dir):
 
 def test_exact_knn_single_shuffle(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").repartition(13)
-    q = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = collect_queries(emb, F.col("vec_id") < 4)
     plan = plan_of(exact_knn(emb, q, 5))
     # exactly one MERGE hash exchange beyond the explicit repartition (the
     # per-query top-k window, over k rows/query/task of kernel output); the
@@ -72,9 +71,7 @@ def test_exact_knn_single_partition_elides_merge_window(spark, sf_dir):
     # a one-task corpus scan makes task-local top-k ranks global: the plan
     # must carry NO hash exchange at all — kernel, filter, output sort only
     emb = load_table(spark, sf_dir, "embeddings").coalesce(1)
-    q = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = collect_queries(emb, F.col("vec_id") < 4)
     plan = plan_of(exact_knn(emb, q, 5))
     assert "hashpartitioning" not in plan, plan
     assert "Window" not in plan.replace("WindowGroupLimit", ""), plan
@@ -136,3 +133,23 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
     # and it still computes the right thing
     expect = orders.join(li, orders.o_orderkey == li.l_orderkey).count()
     assert joined.count() == expect
+
+
+def test_audit_counts_the_final_plan_once(spark, sf_dir):
+    """After an action the executed plan's text holds AQE's final and
+    initial plans; the audit counts walk the final plan's nodes, so a
+    collected broadcast join is one BroadcastHashJoin over no shuffle and
+    a collected aggregate one shuffle."""
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation")
+    joined = orders.join(
+        F.broadcast(nation), orders.o_custkey % 25 == nation.n_nationkey
+    ).select("o_orderkey", "n_name")
+    joined.collect()
+    assert audit.count_broadcast_joins(joined) == 1
+    assert audit.count_exchanges(joined) == 0
+    assert not audit.has_cartesian(joined)
+    counted = orders.groupBy("o_orderstatus").count()
+    counted.collect()
+    assert audit.count_exchanges(counted) == 1
+    assert audit.plan_summary(counted)["exchanges"] == 1

@@ -10,17 +10,19 @@ import re
 import pyspark.sql.functions as F
 import pytest
 
-from vector_database_product_recommendation_spark.operators.knn import exact_knn
+from vector_database_product_recommendation_spark.operators.knn import (
+    QueryBatch,
+    collect_queries,
+    exact_knn,
+)
 from vector_database_product_recommendation_spark.operators.pq import encode_pq, pq_knn, train_pq
 from vector_database_product_recommendation_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _queries(emb, n=8):
-    return emb.filter(F.col("vec_id") < n).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+def _queries(emb, n=8) -> QueryBatch:
+    return collect_queries(emb, F.col("vec_id") < n)
 
 
 def _assert_pq_equals_exact(emb, books):
@@ -107,7 +109,7 @@ def test_pq_knn_empty_query_batch_raises(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     books = train_pq(emb)
     codes = encode_pq(emb, books)
-    empty = _queries(emb).limit(0)
+    empty = _queries(emb, 0)
     for kw in ({}, {"emb": emb}):
         # raised while building the query, not inside a scoring task
         with pytest.raises(ValueError, match="empty query batch"):
@@ -125,9 +127,7 @@ def _fixture(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     books = train_pq(emb)
     codes = encode_pq(emb, books)
-    q = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    q = _queries(emb, 4)
     return emb, books, codes, q
 
 

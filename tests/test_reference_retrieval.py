@@ -109,7 +109,7 @@ def test_e1_two_stage_retrieval_on_reference_products(spark, ref, ref_emb, ref_m
     query vector, top-k — compared against the app's own NumPy flow."""
     import pandas as pd
 
-    from vector_database_product_recommendation_spark.operators.knn import exact_knn
+    from vector_database_product_recommendation_spark.operators.knn import QueryBatch, exact_knn
 
     prod = pd.read_csv(f"{ref}/products.csv")
     sdf = spark.createDataFrame(prod.assign(row_idx=range(len(prod))))
@@ -127,9 +127,7 @@ def test_e1_two_stage_retrieval_on_reference_products(spark, ref, ref_emb, ref_m
     corpus = cand.join(ref_emb, cand.row_idx == ref_emb.vec_id).select(
         "vec_id", "embedding"
     )
-    q = spark.createDataFrame(
-        [(0, ref_mat[qidx].tolist())], "query_id long, query_vec array<double>"
-    )
+    q = QueryBatch(np.array([0]), ref_mat[qidx][None, :].astype(np.float64), "bigint")
     ours = exact_knn(corpus, q, k).collect()
 
     # the app's flow in numpy (app.py:156-164, 181-182)

@@ -2,8 +2,9 @@
 
 The rows-only IVF probes (k-means assignment is iterative, so they have
 no oracle) must still return exact scores of real pairs in rank order,
-and the free-text queries must not collect back the query row they
-built on the driver.
+and each query of the KNN family runs a pinned number of Spark jobs:
+its query batch reaches the kernel collected once, and a free-text
+batch encoded on the driver is never collected back.
 """
 
 from __future__ import annotations
@@ -37,11 +38,45 @@ def test_rows_only_ivf_probes_return_exact_scores_of_real_pairs(spark, name, sf_
     assert len(set(pairs)) == len(pairs)
 
 
-def test_free_text_queries_collect_no_query_row(jobs_run_by, spark):
-    """The free-text queries hand their encoded query row to exact_knn as
-    ``query_arrays``, so no job collects it back: at sf0.01 a search runs
-    one job and a filtered search three."""
-    qmap = queries()
-    for name, jobs in (("free_text_search", 1), ("free_text_filtered_search", 3)):
-        qmap[name](spark, SF_DIR_MID).collect()  # builds the encoded-documents artifact
-        assert jobs_run_by(lambda: qmap[name](spark, SF_DIR_MID).collect(), name) == jobs, name
+# warm ``.collect()`` jobs of the KNN family's queries at sf0.01, and of
+# the engine's E3 side-by-side (both hit lists) on the reference fixture
+KNN_JOBS = {
+    "knn_exact_batch": 4,
+    "knn_item_to_item": 4,
+    "pairwise_similarity": 1,
+    "ivf_knn_probe": 3,
+    "ivf_knn_exactprobe": 3,
+    "ivf_store_pruned_probe": 6,
+    "pq_knn_refined": 6,
+    "sq8_knn": 4,
+    "hybrid_search": 6,
+    "ann_tradeoff": 8,
+    "free_text_search": 1,
+    "free_text_filtered_search": 3,
+    "ann_review_search": 3,
+}
+
+
+@pytest.fixture(scope="module")
+def engine(spark, ref_fixture):
+    from vector_database_product_recommendation_spark.api import ProductSearchEngine
+
+    return ProductSearchEngine.from_reference_dir(spark, ref_fixture.ref_dir)
+
+
+@pytest.mark.parametrize("name", list(KNN_JOBS))
+def test_knn_family_runs_its_pinned_jobs(request, jobs_run_by, spark, name):
+    if name == "ann_review_search":
+        engine = request.getfixturevalue("engine")
+
+        def run():
+            for hits in engine.ann_review_search(11, k=K, nprobe=2):
+                hits.collect()
+
+    else:
+
+        def run():
+            queries()[name](spark, SF_DIR_MID).collect()
+
+    run()  # builds the artifacts (or the review index) the query reads
+    assert jobs_run_by(run, name) == KNN_JOBS[name]

@@ -49,6 +49,7 @@ from vector_database_product_recommendation_spark.functions.embed import hash_em
 from vector_database_product_recommendation_spark.functions.vectors import matrix
 from vector_database_product_recommendation_spark.lifetime import collect_bounded, local_frame
 from vector_database_product_recommendation_spark.operators.knn import (
+    QueryBatch,
     collect_queries,
     exact_knn,
     exact_scores,
@@ -137,12 +138,7 @@ class ProductSearchEngine:
         self.encoder = encoder  # None -> driver-side hash_embed_py
         self._tfidf = None
         self._ivf = None
-        self._ivf_centroid_arrays = None
-        # the free-text query frame only carries the schema: each request's
-        # encoded vector reaches the kernel as query_arrays
-        self._text_query = local_frame(
-            catalog.sparkSession, [], "query_id int, query_vec array<double>"
-        )
+        self._ivf_centroids = None
         n, self._width = catalog.select(
             F.count(F.lit(1)), F.max(F.size("embedding"))
         ).first()
@@ -283,18 +279,9 @@ class ProductSearchEngine:
         cand = self.candidate_products(
             brand=brand, min_rating=min_rating, min_reviews=min_reviews
         )
-        arrays = (np.array([0]), np.asarray([qv], dtype=np.float64))
+        batch = QueryBatch(np.array([0]), np.asarray([qv], dtype=np.float64), "int")
         if mode == "vector":
-            return _hit_rows(
-                exact_knn(
-                    cand,
-                    self._text_query,
-                    k,
-                    corpus_id="id",
-                    query_arrays=arrays,
-                    payload=HIT_PAYLOAD,
-                )
-            )
+            return _hit_rows(exact_knn(cand, batch, k, corpus_id="id", payload=HIT_PAYLOAD))
         # F2-F4 with the reference's quirks: TF-IDF cosine over the WHOLE
         # catalog, min-max over the CANDIDATE set, dense side raw
         # (app.py:202-210). The blend needs every candidate's dense score,
@@ -304,9 +291,9 @@ class ProductSearchEngine:
         sparse = self._tfidf_model().scores(
             query_text, cand.select(F.col("id").alias("doc_id"))
         )
-        dense = exact_scores(
-            cand, self._text_query, corpus_id="id", query_arrays=arrays
-        ).select(F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs"))
+        dense = exact_scores(cand, batch, corpus_id="id").select(
+            F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs")
+        )
         top = blend_hybrid(sparse, dense, alpha, k)
         # ranks are minted after the selection: the window sees k rows
         hits = top.select(F.col("doc_id").alias("id"), "score").withColumn(
@@ -390,24 +377,12 @@ class ProductSearchEngine:
         _at_least_one(k=k, nprobe=nprobe)
 
         emb = self._review_vectors()
-        q = emb.filter(F.col("vec_id") == q_idx).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
-        arrays = collect_queries(q)
-        if not len(arrays[0]):
+        batch = collect_queries(emb, F.col("vec_id") == q_idx)
+        if not len(batch.ids):
             raise ValueError(f"review {q_idx!r} is not in the corpus")
-        exact = exact_knn(emb, q, k, exclude_self=True, query_arrays=arrays)
-        cents, assigned = self._review_index()
-        ivf = ivf_knn(
-            assigned,
-            cents,
-            q,
-            k,
-            nprobe,
-            exclude_self=True,
-            query_arrays=arrays,
-            centroid_arrays=self._ivf_centroid_arrays,
-        )
+        exact = exact_knn(emb, batch, k, exclude_self=True)
+        _, assigned = self._review_index()
+        ivf = ivf_knn(assigned, self._ivf_centroids, batch, k, nprobe, exclude_self=True)
         return exact, ivf
 
     def ann_tradeoff_table(self, **kw) -> DataFrame:
@@ -433,7 +408,7 @@ class ProductSearchEngine:
 
         if self._ivf is None:
             self._ivf = build_ivf_index(self._review_vectors())
-            self._ivf_centroid_arrays = collect_centroids(self._ivf[0])
+            self._ivf_centroids = collect_centroids(self._ivf[0])
         return self._ivf
 
 

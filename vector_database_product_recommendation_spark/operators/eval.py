@@ -69,22 +69,15 @@ def ann_tradeoff(
     The queries are the rows with ``vec_id < n_queries``."""
     cents, assigned = index
 
-    queries = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-
     # Collect the (small) query batch and centroid table ONCE — the sweep
     # reuses them across every per-nprobe probe and the exact oracle, so
     # no per-iteration collect job ever runs inside a timed bracket.
-    q_arrays = collect_queries(queries)
-    q_ids = q_arrays[0].tolist()
+    batch = collect_queries(emb, F.col("vec_id") < n_queries)
+    q_ids = batch.ids.tolist()
     n_q = len(q_ids)
-    c_arrays = collect_centroids(cents)
+    centroids = collect_centroids(cents)
 
-    exact = _hit_lists(
-        exact_knn(emb, queries, k, exclude_self=True, query_arrays=q_arrays), n_q * k
-    )
+    exact = _hit_lists(exact_knn(emb, batch, k, exclude_self=True), n_q * k)
     nn1 = {q: n for q, hits in exact.items() for n, rank in hits.items() if rank == 1}
 
     out_rows = []
@@ -92,17 +85,7 @@ def ann_tradeoff(
         # one wall-clock bracket per nprobe, like app.py:393-399
         t0 = time.time()
         ivf = _hit_lists(
-            ivf_knn(
-                assigned,
-                cents,
-                queries,
-                k,
-                nprobe,
-                exclude_self=True,
-                query_arrays=q_arrays,
-                centroid_arrays=c_arrays,
-            ),
-            n_q * k,
+            ivf_knn(assigned, centroids, batch, k, nprobe, exclude_self=True), n_q * k
         )
         ms_per_query = (time.time() - t0) * 1000.0 / n_q
         precision = sum(len(ivf[q].keys() & exact[q].keys()) / k for q in q_ids) / n_q

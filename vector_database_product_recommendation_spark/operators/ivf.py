@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark.functions.vectors import matrix
 from vector_database_product_recommendation_spark.lifetime import collect_bounded, persist_right_sized
-from vector_database_product_recommendation_spark.operators.knn import _query_batch, topk_scan
+from vector_database_product_recommendation_spark.operators.knn import QueryBatch, topk_scan
 
 
 # FAISS's Clustering.max_points_per_centroid: every k-means trainer in the
@@ -283,33 +283,27 @@ def build_ivf_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def ivf_knn(
     assigned: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
+    centroids: tuple[np.ndarray, np.ndarray],
+    batch: QueryBatch,
     k: int,
     nprobe: int,
     *,
     exclude_self: bool = False,
-    query_arrays: tuple[np.ndarray, np.ndarray] | None = None,
-    centroid_arrays: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """AN4: per-query top-k over the union of its nprobe best clusters of
-    a (vec_id, embedding, cluster_id) corpus.
+    a (vec_id, embedding, cluster_id) corpus, for the (cluster ids,
+    matrix) ``centroids`` of ``collect_centroids``.
 
     Returns (query_id, neighbor_id, score, rank) like exact_knn, through
     the same ``knn.topk_scan``, so the scores are rounded BEFORE selection
     and only task-local top-k rows cross the merge exchange. With the
     corpus laid out partitionBy('cluster_id'), the cluster_id IN (...)
     filter becomes partition pruning — only nprobe/nlist of the data is
-    read per query batch.
-
-    ``query_arrays``: the batch's (ids, matrix) from
-    ``knn.collect_queries`` — callers probing the same batch repeatedly
-    (the nprobe sweep) pass them once instead of re-running the collect
-    job per call. ``centroid_arrays``: same for the (tiny) centroid table,
-    from ``collect_centroids``.
+    read per query batch. A caller probing one batch repeatedly (the
+    nprobe sweep) collects the batch and the centroids once.
     """
-    cids, cmat = collect_centroids(centroids) if centroid_arrays is None else centroid_arrays
-    q_ids, q_mat = _query_batch(queries, query_arrays)
+    cids, cmat = centroids
+    q_mat = batch.mat
     # cluster -> row indices of the queries that probe it. The probe map
     # ships in the task closure (it is O(q * nprobe) ints) instead of a
     # broadcast-joined table: corpus rows then cross the Python boundary
@@ -330,7 +324,7 @@ def ivf_knn(
         # stays -inf (not a candidate)
         emb_mat = matrix(pdf["embedding"])
         cl = pdf["cluster_id"].to_numpy()
-        scores = np.full((len(cl), len(q_ids)), -np.inf)
+        scores = np.full((len(cl), len(q_mat)), -np.inf)
         for c in np.unique(cl):
             qidx = probe_map.get(int(c))
             if qidx:
@@ -341,9 +335,7 @@ def ivf_knn(
     pool = assigned.filter(
         F.col("cluster_id").isin(sorted(probe_map))
     ).select("cluster_id", "vec_id", "embedding")
-    return topk_scan(
-        pool, queries, q_ids, k, score_batch, corpus_id="vec_id", exclude_self=exclude_self
-    )
+    return topk_scan(pool, batch, k, score_batch, corpus_id="vec_id", exclude_self=exclude_self)
 
 
 def write_ivf_store(

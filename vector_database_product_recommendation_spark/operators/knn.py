@@ -7,8 +7,10 @@ then top-k by score with self-exclusion for item-to-item (app.py:227-228).
 
 Spark-first physical shape (SURVEY.md section 4, "100-TB-safe"):
 - the CORPUS NEVER SHUFFLES. Queries are a small batch by construction
-  (the reference's widest workload is 400 query vectors); we collect them
-  to the driver and ship them to every task via closure broadcast.
+  (the reference's widest workload is 400 query vectors). Every kernel
+  takes them already on the driver, as one ``QueryBatch`` (from
+  ``collect_queries``, or encoded there), and ships them to every task
+  via closure broadcast.
 - ``topk_scan`` is the one scan of the exact, IVF (operators/ivf.py), PQ
   (operators/pq.py) and SQ8 (operators/sq.py) kernels. A kernel supplies
   only its per-batch scorer, (rows x queries) scores inside mapInPandas (Arrow batches ->
@@ -23,7 +25,7 @@ Spark-first physical shape (SURVEY.md section 4, "100-TB-safe"):
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -40,27 +42,38 @@ from vector_database_product_recommendation_spark.lifetime import collect_bounde
 QUERY_BATCH_MAX_ROWS = 10_000
 
 
-def collect_queries(queries: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, float64 matrix) of a (query_id, query_vec) batch, in one
-    bounded Arrow transfer; more than ``QUERY_BATCH_MAX_ROWS`` rows raise
-    ValueError. An empty batch is two empty arrays."""
+class QueryBatch(NamedTuple):
+    """A query batch on the driver, the one form every kernel takes: the
+    query ids, their float64 (queries x dim) matrix, and ``id_type``, the
+    SQL type of the kernel's ``query_id`` output column."""
+
+    ids: np.ndarray
+    mat: np.ndarray
+    id_type: str
+
+
+def collect_queries(corpus: DataFrame, where=None, *, corpus_id: str = "vec_id") -> QueryBatch:
+    """The rows of ``corpus`` that match ``where`` (every row when None) as
+    a ``QueryBatch`` of their ``corpus_id`` and ``embedding``, in one
+    bounded Arrow transfer; ``id_type`` is ``corpus_id``'s type. More than
+    ``QUERY_BATCH_MAX_ROWS`` rows raise ValueError; no row is an empty
+    batch, which a kernel refuses."""
+    rows = corpus if where is None else corpus.filter(where)
     pdf = collect_bounded(
-        queries.select("query_id", "query_vec"),
+        rows.select(corpus_id, "embedding"),
         QUERY_BATCH_MAX_ROWS,
         what="the query batch (knn.QUERY_BATCH_MAX_ROWS)",
     )
-    return pdf["query_id"].to_numpy(), matrix(pdf["query_vec"])
+    id_type = corpus.schema[corpus_id].dataType.simpleString()
+    return QueryBatch(pdf[corpus_id].to_numpy(), matrix(pdf["embedding"]), id_type)
 
 
-def _query_batch(
-    queries: DataFrame, query_arrays: tuple[np.ndarray, np.ndarray] | None
-) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, matrix) of the query batch: ``query_arrays`` when the caller
-    already holds them, else ``collect_queries``. An empty batch raises."""
-    ids, mat = collect_queries(queries) if query_arrays is None else query_arrays
-    if not len(ids):
+def _nonempty(batch: QueryBatch) -> QueryBatch:
+    """``batch``, or ValueError when it holds no query: raised while a
+    kernel builds its plan, not inside a scoring task."""
+    if not len(batch.ids):
         raise ValueError("empty query batch")
-    return ids, mat
+    return batch
 
 
 def rank_topk(
@@ -116,18 +129,16 @@ def merge_topk(partial: DataFrame, k: int, *, single_task: bool) -> DataFrame:
     )
 
 
-def _schema(frame: DataFrame, queries: DataFrame, corpus_id: str, rest: list[str]) -> str:
-    """mapInPandas schema: query_id and neighbor_id typed as in their
-    source frames, then ``rest``."""
-    qid = queries.schema["query_id"].dataType.simpleString()
+def _schema(frame: DataFrame, id_type: str, corpus_id: str, rest: list[str]) -> str:
+    """mapInPandas schema: query_id of type ``id_type``, neighbor_id typed
+    as ``frame``'s ``corpus_id``, then ``rest``."""
     nid = frame.schema[corpus_id].dataType.simpleString()
-    return ", ".join([f"query_id {qid}", f"neighbor_id {nid}", *rest])
+    return ", ".join([f"query_id {id_type}", f"neighbor_id {nid}", *rest])
 
 
 def topk_scan(
     frame: DataFrame,
-    queries: DataFrame,
-    q_ids: np.ndarray,
+    batch: QueryBatch,
     k: int,
     score_batch,
     *,
@@ -135,8 +146,8 @@ def topk_scan(
     exclude_self: bool = False,
     payload: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Per query of ``q_ids`` (the collected ids of ``queries``), the top-k
-    rows of ``frame``: the one scan of the exact, IVF, PQ and SQ8 kernels.
+    """Per query of ``batch``, the top-k rows of ``frame``: the one scan of
+    the exact, IVF, PQ and SQ8 kernels. An empty batch raises ValueError.
 
     ``score_batch(pdf)`` scores one Arrow batch of ``frame`` as a
     (rows x queries) float64 matrix; ``-inf`` marks a pair that is not a
@@ -151,15 +162,16 @@ def topk_scan(
     measured breakdown of where this kernel's milliseconds go.
 
     Returns (query_id, neighbor_id, score, rank, *payload) ordered by
-    (query_id, rank), rank 1..k per query; query_id is typed as in
-    ``queries``. ``payload`` columns of ``frame`` ride through the top-k
+    (query_id, rank), rank 1..k per query; query_id is of the batch's
+    ``id_type``. ``payload`` columns of ``frame`` ride through the top-k
     and the merge untouched (nulls included).
     """
     if {"query_id", "neighbor_id", "score", "rank"} & set(payload):
         raise ValueError(f"payload {payload!r} shadows an output column")
+    q_ids = _nonempty(batch).ids
     schema = _schema(
         frame,
-        queries,
+        batch.id_type,
         corpus_id,
         ["score double", "rank int"]
         + [f"`{c}` {frame.schema[c].dataType.simpleString()}" for c in payload],
@@ -219,37 +231,31 @@ def topk_scan(
 
 def exact_knn(
     corpus: DataFrame,
-    queries: DataFrame,
+    batch: QueryBatch,
     k: int,
     *,
     corpus_id: str = "vec_id",
     exclude_self: bool = False,
-    query_arrays: tuple[np.ndarray, np.ndarray] | None = None,
     payload: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Batch exact KNN: for every (query_id, query_vec) row, the top-k
-    corpus rows by dot against their ``embedding``, through ``topk_scan``.
+    """Batch exact KNN: for every query of ``batch``, the top-k corpus rows
+    by dot against their ``embedding``, through ``topk_scan``.
 
     Returns (query_id, neighbor_id, score, rank, *payload), rank 1..k per
     query. ``exclude_self`` drops corpus rows whose id equals the query id
-    (``topk_scan``).
-
-    ``query_arrays``: the batch's (ids, matrix) from ``collect_queries``
-    — callers reusing one query batch across calls (the serving loop; the
-    reference encodes its query batch once, app.py:169-171) pass them to
-    skip the per-call collect job, exactly like ivf_knn.
+    (``topk_scan``). A caller collects its batch once and may search it
+    any number of times, as the reference encodes its query batch once
+    (app.py:169-171).
 
     ``payload``: corpus columns returned on each hit row, the way a vector
     store returns a point's payload with its score, so a caller needs no
     join back to the corpus. With the default ``()`` the plan and output
     are those of a plain top-k.
     """
-    q_ids, q_mat = _query_batch(queries, query_arrays)
-    qm = q_mat.T  # (d, q)
+    qm = batch.mat.T  # (d, q)
     return topk_scan(
         corpus.select(corpus_id, "embedding", *payload),
-        queries,
-        q_ids,
+        batch,
         k,
         # every row of a batch against every query, one BLAS matmul,
         # rounded in float64 BEFORE any selection
@@ -260,13 +266,7 @@ def exact_knn(
     )
 
 
-def exact_scores(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    query_arrays: tuple[np.ndarray, np.ndarray],
-    corpus_id: str,
-) -> DataFrame:
+def exact_scores(corpus: DataFrame, batch: QueryBatch, *, corpus_id: str) -> DataFrame:
     """Score EVERY corpus row against the query batch — no top-k, no window.
 
     The blend path of hybrid search (app.py:202-210) needs all candidate
@@ -276,11 +276,10 @@ def exact_scores(
     no rounding (the blend's dense side is raw) and no selection: output
     stays partition-local, zero shuffles. Returns
     (query_id, neighbor_id, score), neighbor_id read from the corpus's
-    ``corpus_id`` column. ``query_arrays``: the (ids, matrix) of
-    ``queries``, which supplies only the query_id type.
+    ``corpus_id`` column. An empty batch raises ValueError.
     """
-    q_ids, q_mat = _query_batch(queries, query_arrays)
-    qm = q_mat.T  # (d, q)
+    q_ids = _nonempty(batch).ids
+    qm = batch.mat.T  # (d, q)
 
     def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -298,7 +297,7 @@ def exact_scores(
             )
 
     frame = corpus.select(corpus_id, "embedding")
-    return frame.mapInPandas(emit, _schema(frame, queries, corpus_id, ["score double"]))
+    return frame.mapInPandas(emit, _schema(frame, batch.id_type, corpus_id, ["score double"]))
 
 
 def item_to_item(
@@ -313,21 +312,10 @@ def item_to_item(
     look up the item's vector, score everyone else, top-k, never return
     the item itself. An ``item_id`` missing from the corpus raises
     ValueError naming it. ``payload`` as in exact_knn."""
-    q = corpus.filter(F.col(corpus_id) == F.lit(item_id)).select(
-        F.col(corpus_id).alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    arrays = collect_queries(q)
-    if not len(arrays[0]):
+    batch = collect_queries(corpus, F.col(corpus_id) == F.lit(item_id), corpus_id=corpus_id)
+    if not len(batch.ids):
         raise ValueError(f"item {item_id!r} is not in the corpus")
-    return exact_knn(
-        corpus,
-        q,
-        k,
-        corpus_id=corpus_id,
-        exclude_self=True,
-        query_arrays=arrays,
-        payload=payload,
-    )
+    return exact_knn(corpus, batch, k, corpus_id=corpus_id, exclude_self=True, payload=payload)
 
 
 def similarity_rows(ids: list, mat: np.ndarray) -> list[tuple]:
@@ -345,12 +333,9 @@ def pairwise_similarity(items: DataFrame) -> DataFrame:
     """J5 (app.py:348-354) over a small selected set (the reference allows 2-4
     products) of (vec_id, embedding) rows: ``similarity_rows`` of the rows'
     one bounded transfer, returned as a local table."""
-    ids, mat = collect_queries(
-        items.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-    id_type = items.schema["vec_id"].dataType.simpleString()
+    batch = collect_queries(items)
     return local_frame(
         items.sparkSession,
-        similarity_rows(ids.tolist(), mat),
-        f"id_a {id_type}, id_b {id_type}, score double",
+        similarity_rows(batch.ids.tolist(), batch.mat),
+        f"id_a {batch.id_type}, id_b {batch.id_type}, score double",
     )

@@ -48,7 +48,8 @@ from vector_database_product_recommendation_spark.operators.ivf import (
     _sample_matrix,
 )
 from vector_database_product_recommendation_spark.operators.knn import (
-    _query_batch,
+    QueryBatch,
+    _nonempty,
     _schema,
     merge_topk,
     row_dots,
@@ -119,14 +120,14 @@ def encode_pq(emb: DataFrame, codebooks: list[np.ndarray]) -> DataFrame:
 def pq_knn(
     codes_df: DataFrame,
     codebooks: list[np.ndarray],
-    queries: DataFrame,
+    batch: QueryBatch,
     k: int,
     *,
     emb: DataFrame | None = None,
     refine_factor: int = 4,
 ) -> DataFrame:
-    """ADC top-k per query over the coded corpus (``encode_pq``'s
-    (vec_id, codes)).
+    """ADC top-k per query of ``batch`` over the coded corpus
+    (``encode_pq``'s (vec_id, codes)). An empty batch raises ValueError.
 
     Per query, an (m x ksub) lookup table of subvector dots; a coded row's
     score is the sum of its m lookups. ADC scores are NOT rounded before
@@ -144,7 +145,7 @@ def pq_knn(
     ``knn.merge_topk``; output is then (query_id,
     neighbor_id, score, rank) with exact scores, comparable to exact_knn's.
     """
-    q_ids, q_mat = _query_batch(queries, None)
+    q_ids, q_mat, _ = _nonempty(batch)
     books = [np.asarray(c, dtype=np.float64) for c in codebooks]
     fetch = k * refine_factor if emb is not None else k
     dsub = books[0].shape[1]
@@ -158,14 +159,8 @@ def pq_knn(
             scores += lut[:, codes[:, j]]  # (nq, n) lookup-add
         return scores.T
 
-    cand = topk_scan(
-        codes_df.select("vec_id", "codes"),
-        queries,
-        q_ids,
-        fetch,
-        score_batch,
-        corpus_id="vec_id",
-    )
+    codes = codes_df.select("vec_id", "codes")
+    cand = topk_scan(codes, batch, fetch, score_batch, corpus_id="vec_id")
     if emb is None:
         return cand.select("query_id", "neighbor_id", F.round("score", 6).alias("score"), "rank")
 
@@ -192,5 +187,6 @@ def pq_knn(
             score = np.round(row_dots(matrix(pdf["nv"]), own), 6)
             yield pdf[["query_id", "neighbor_id"]].assign(score=score)
 
-    rescored = joined.mapInPandas(rescore, _schema(joined, queries, "neighbor_id", ["score double"]))
+    schema = _schema(joined, batch.id_type, "neighbor_id", ["score double"])
+    rescored = joined.mapInPandas(rescore, schema)
     return merge_topk(rescored, k, single_task=False).orderBy("query_id", "rank")

@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame
 from vector_database_product_recommendation_spark.functions.vectors import matrix
 from vector_database_product_recommendation_spark.lifetime import collect_bounded, local_frame
 from vector_database_product_recommendation_spark.operators.knn import (
-    _query_batch,
+    _nonempty,
+    collect_queries,
     rank_topk,
     row_dots,
     topk_scan,
@@ -73,11 +74,8 @@ def sq8_knn(emb: DataFrame, query_id: int, k: int) -> DataFrame:
     driver before this returns. Returns (vec_id, score, approx_score) —
     exact-score ranked, self excluded, (score DESC, vec_id ASC) ties.
     """
-    queries = emb.filter(F.col("vec_id") == query_id).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    q_ids, q_mat = _query_batch(queries, None)
-    qv = q_mat[0]
+    batch = _nonempty(collect_queries(emb, F.col("vec_id") == query_id))
+    qv = batch.mat[0]
     stats = collect_bounded(
         sq_dim_stats(emb).orderBy("pos"),
         len(qv),
@@ -98,8 +96,7 @@ def sq8_knn(emb: DataFrame, query_id: int, k: int) -> DataFrame:
     cand = collect_bounded(
         topk_scan(
             emb.select("vec_id", "embedding"),
-            queries,
-            q_ids,
+            batch,
             fetch,
             score_batch,
             corpus_id="vec_id",
@@ -113,9 +110,8 @@ def sq8_knn(emb: DataFrame, query_id: int, k: int) -> DataFrame:
     vecs = matrix(cand["embedding"]).reshape(len(ids), len(qv))
     score = np.round(row_dots(vecs, qv[None, :]), 6)
     idx, _ = rank_topk(np.zeros(len(ids), dtype=np.int64), ids, score, k)
-    id_type = emb.schema["vec_id"].dataType.simpleString()
     return local_frame(
         emb.sparkSession,
         [(int(ids[i]), float(score[i]), float(cand["score"].iat[i])) for i in idx],
-        f"vec_id {id_type}, score double, approx_score double",
+        f"vec_id {batch.id_type}, score double, approx_score double",
     )

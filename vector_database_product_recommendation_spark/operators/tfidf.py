@@ -288,12 +288,10 @@ def hybrid_search(
     # blend's min/max bounds agg AND its rescale projection
     sparse = pin(model.scores(query_text, docs.select("doc_id")))
     # dense side — raw products against the query item's own vector (E2 shape)
-    q = emb.filter(F.col("vec_id") == F.lit(query_vec_id)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    batch = collect_queries(emb, F.col("vec_id") == F.lit(query_vec_id))
+    dense = exact_scores(emb, batch, corpus_id="vec_id").select(
+        F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs")
     )
-    dense = exact_scores(
-        emb, q, query_arrays=collect_queries(q), corpus_id="vec_id"
-    ).select(F.col("neighbor_id").alias("doc_id"), F.col("score").alias("vs"))
     return blend_hybrid(sparse, dense, alpha, k)
 
 

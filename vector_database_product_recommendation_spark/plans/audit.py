@@ -17,25 +17,28 @@ import re
 from pyspark.sql import DataFrame
 
 
-def executed_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _nodes(plan, cached: bool) -> list[str]:
+    """Node names of a physical plan through its adaptive query stages;
+    with ``cached``, through the plans of the cached tables it reads too."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _nodes(plan.executedPlan(), cached)
+    if name.endswith("QueryStageExec"):
+        return _nodes(plan.plan(), cached)
+    out = [plan.nodeName()]
+    if cached and name == "InMemoryTableScanExec":
+        out += _nodes(plan.relation().cachedPlan(), cached)
+    kids = plan.children()
+    return out + [n for i in range(kids.size()) for n in _nodes(kids.apply(i), cached)]
 
 
 def executed_nodes(df: DataFrame) -> list[str]:
     """The node names of ``df``'s executed physical plan, through its
     adaptive query stages (after an action, the final plan). A cached
-    table is a leaf: its own plan ran when it was filled, not here."""
-
-    def walk(plan) -> list[str]:
-        name = plan.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            return walk(plan.executedPlan())
-        if name.endswith("QueryStageExec"):
-            return walk(plan.plan())
-        kids = plan.children()
-        return [plan.nodeName()] + [n for i in range(kids.size()) for n in walk(kids.apply(i))]
-
-    return walk(df._jdf.queryExecution().executedPlan())
+    table is a leaf: its own plan ran when it was filled, not here. A
+    reused exchange is a leaf too: its shuffle ran once, elsewhere in the
+    plan."""
+    return _nodes(df._jdf.queryExecution().executedPlan(), cached=False)
 
 
 def optimized_plan(df: DataFrame) -> str:
@@ -60,22 +63,20 @@ def spark_plan(df: DataFrame) -> str:
 
 
 def count_exchanges(df: DataFrame) -> int:
-    """Shuffle count (excludes broadcast exchanges)."""
-    p = executed_plan(df)
-    return p.count("Exchange hashpartitioning") + p.count(
-        "Exchange rangepartitioning"
-    ) + p.count("Exchange SinglePartition")
+    """Shuffle count of ``executed_nodes`` (excludes broadcast exchanges)."""
+    return executed_nodes(df).count("Exchange")
 
 
 def count_broadcast_joins(df: DataFrame) -> int:
-    return executed_plan(df).count("BroadcastHashJoin")
+    return executed_nodes(df).count("BroadcastHashJoin")
 
 
 def has_cartesian(df: DataFrame) -> bool:
-    """True if the plan contains a NON-broadcast cartesian product — the
-    join shape that cannot scale (a broadcast nested loop with a tiny
-    build side is fine and sometimes intentional, e.g. scalar crossing)."""
-    return "CartesianProduct" in executed_plan(df)
+    """True if the plan, or the plan of a cached table it reads, contains a
+    NON-broadcast cartesian product — the join shape that cannot scale (a
+    broadcast nested loop with a tiny build side is fine and sometimes
+    intentional, e.g. scalar crossing)."""
+    return "CartesianProduct" in _nodes(df._jdf.queryExecution().executedPlan(), cached=True)
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -87,16 +88,17 @@ def pushed_filters(df: DataFrame) -> list[str]:
 
 
 def plan_summary(df: DataFrame) -> dict:
-    """One-stop plan facts for debugging and bench annotations."""
-    p = executed_plan(df)
+    """One-stop plan facts of ``executed_nodes`` for debugging and bench
+    annotations."""
+    nodes = executed_nodes(df)
     return {
-        "exchanges": count_exchanges(df),
-        "broadcast_joins": p.count("BroadcastHashJoin"),
-        "sort_merge_joins": p.count("SortMergeJoin"),
-        "nested_loop_joins": p.count("BroadcastNestedLoopJoin"),
-        "cartesian": p.count("CartesianProduct"),
-        "wholestage_spans": p.count("WholeStageCodegen"),
-        "python_boundaries": p.count("ArrowEvalPython")
-        + p.count("MapInPandas")
-        + p.count("FlatMapGroupsInPandas"),
+        "exchanges": nodes.count("Exchange"),
+        "broadcast_joins": nodes.count("BroadcastHashJoin"),
+        "sort_merge_joins": nodes.count("SortMergeJoin"),
+        "nested_loop_joins": nodes.count("BroadcastNestedLoopJoin"),
+        "cartesian": nodes.count("CartesianProduct"),
+        "wholestage_spans": sum(n.startswith("WholeStageCodegen") for n in nodes),
+        "python_boundaries": sum(
+            n in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas") for n in nodes
+        ),
     }

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from vector_database_product_recommendation_spark.operators import relational as R
 from vector_database_product_recommendation_spark.operators.centroids import group_centroids_long
 from vector_database_product_recommendation_spark.operators.knn import (
+    QueryBatch,
+    collect_queries,
     exact_knn,
     item_to_item,
     pairwise_similarity,
@@ -173,13 +175,15 @@ ORDER BY query_id, rank
 """
 
 
+def _knn_queries(emb: DataFrame) -> QueryBatch:
+    """The KNN queries' batch: the 8 corpus rows with ``vec_id < 8``."""
+    return collect_queries(emb, F.col("vec_id") < 8)
+
+
 @register("knn_exact_batch", _KNN_ORACLE)
 def _knn_exact_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return exact_knn(emb, q, 5)
+    return exact_knn(emb, _knn_queries(emb), 5)
 
 
 _ITEM_ORACLE = """
@@ -842,22 +846,21 @@ def _bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from vector_database_product_recommendation_spark.operators.eval import ann_tradeoff  # noqa: E402
-from vector_database_product_recommendation_spark.operators.ivf import ivf_knn  # noqa: E402
+from vector_database_product_recommendation_spark.operators.ivf import (  # noqa: E402
+    collect_centroids,
+    ivf_knn,
+)
 
 _FREE_TEXT_Q = "spark fast table join query scan stream window"
 
 
-def _free_text_query(spark: SparkSession) -> tuple[DataFrame, tuple]:
-    """The free-text queries' one encoded query row, as a frame and as the
-    (ids, matrix) ``exact_knn`` takes in place of collecting it back."""
+def _free_text_batch() -> QueryBatch:
+    """The free-text queries' one query, encoded on the driver."""
     import numpy as np
 
     from vector_database_product_recommendation_spark.functions.embed import hash_embed_py
-    from vector_database_product_recommendation_spark.lifetime import local_frame
 
-    qv = hash_embed_py(_FREE_TEXT_Q)
-    frame = local_frame(spark, [(0, qv)], "query_id long, query_vec array<double>")
-    return frame, (np.array([0]), np.asarray([qv], dtype=np.float64))
+    return QueryBatch(np.array([0]), np.asarray([hash_embed_py(_FREE_TEXT_Q)]), "bigint")
 
 
 # Mirrors functions/embed.py hash_embed_py: bucket = h % 384, sign from
@@ -895,11 +898,9 @@ def _free_text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serving path: corpus embeddings are a prebuilt artifact
     # (review_embeddings.npy analog); only the query encodes per request.
     from vector_database_product_recommendation_spark.artifacts import encoded_documents
-    from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
     corpus = encoded_documents(spark, sf_dir)
-    q, arrays = _free_text_query(spark)
-    return exact_knn(corpus, q, 10, query_arrays=arrays)
+    return exact_knn(corpus, _free_text_batch(), 10)
 
 
 # ---------------------------------------------------------------------------
@@ -915,10 +916,7 @@ def _ivf_knn_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, assigned = ivf_index(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_knn(assigned, cents, q, 5, nprobe=5)
+    return ivf_knn(assigned, collect_centroids(cents), _knn_queries(emb), 5, nprobe=5)
 
 
 # nprobe >= nlist probes every inverted list, so IVF degenerates to exact
@@ -932,10 +930,7 @@ def _ivf_knn_exactprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, assigned = ivf_index(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_knn(assigned, cents, q, 5, nprobe=10**9)
+    return ivf_knn(assigned, collect_centroids(cents), _knn_queries(emb), 5, nprobe=10**9)
 
 
 @register("ann_tradeoff")
@@ -1625,7 +1620,6 @@ def _free_text_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join + top-k. Mirrors the reference: candidate_indices() filters
     # metadata, then gathers PREcomputed vectors (app.py:156-188).
     from vector_database_product_recommendation_spark.artifacts import encoded_documents
-    from vector_database_product_recommendation_spark.operators.knn import exact_knn
 
     cand = (
         load_table(spark, sf_dir, "documents")
@@ -1633,8 +1627,7 @@ def _free_text_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("vec_id"))
     )
     corpus = encoded_documents(spark, sf_dir).join(cand, "vec_id")
-    q, arrays = _free_text_query(spark)
-    return exact_knn(corpus, q, 10, query_arrays=arrays)
+    return exact_knn(corpus, _free_text_batch(), 10)
 
 
 # On-disk inverted file: the probe runs against the cluster-partitioned
@@ -1649,10 +1642,7 @@ def _ivf_store_pruned_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, store = ivf_store(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_knn(store, cents, q, 5, nprobe=5)
+    return ivf_knn(store, collect_centroids(cents), _knn_queries(emb), 5, nprobe=5)
 
 
 # Probing every partition of the persisted IVF store degenerates to exact
@@ -1666,10 +1656,7 @@ def _ivf_store_exactprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents, store = ivf_store(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return ivf_knn(store, cents, q, 5, nprobe=10**9)
+    return ivf_knn(store, collect_centroids(cents), _knn_queries(emb), 5, nprobe=10**9)
 
 
 # ---------------------------------------------------------------------------
@@ -2110,10 +2097,7 @@ def _pq_knn_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     books, codes = pq_index(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return pq_knn(codes, books, q, 5, emb=emb, refine_factor=8)
+    return pq_knn(codes, books, _knn_queries(emb), 5, emb=emb, refine_factor=8)
 
 
 # refine_factor large enough that fetch >= N makes every corpus row an
@@ -2129,10 +2113,7 @@ def _pq_knn_exactrefine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     books, codes = pq_index(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return pq_knn(codes, books, q, 5, emb=emb, refine_factor=10**6)
+    return pq_knn(codes, books, _knn_queries(emb), 5, emb=emb, refine_factor=10**6)
 
 
 # ---------------------------------------------------------------------------
