@@ -1,5 +1,6 @@
-"""Session artifacts: one memo for every builder in artifacts.py and one
-persist rule (lifetime.persist_right_sized) for every cached table."""
+"""Session artifacts: one memo for every builder in artifacts.py, each
+builder one call that builds its artifact whole, and one persist rule
+(lifetime.persist_right_sized) for every cached table."""
 
 from __future__ import annotations
 
@@ -8,18 +9,23 @@ import inspect
 import io
 
 import pytest
+from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark import artifacts
 from vector_database_product_recommendation_spark.lifetime import persist_right_sized
+from vector_database_product_recommendation_spark.operators.tfidf import TfidfModel
 
-BUILDERS = sorted(
-    name
-    for name, fn in vars(artifacts).items()
-    if inspect.isfunction(fn) and fn.__module__ == artifacts.__name__ and not name.startswith("_")
-)
+BUILDERS = [b.__name__ for b in artifacts.BUILDERS]
 
 
 def test_artifacts_has_ten_builders():
+    """``BUILDERS`` holds every public function of the module, each once."""
+    public = {
+        name
+        for name, fn in vars(artifacts).items()
+        if inspect.isfunction(fn) and fn.__module__ == artifacts.__name__ and not name.startswith("_")
+    }
+    assert sorted(BUILDERS) == sorted(public)
     assert len(BUILDERS) == 10, BUILDERS
 
 
@@ -30,12 +36,6 @@ def test_builder_second_call_is_the_same_object_with_no_job(spark, sf_dir, jobs_
     again = []
     assert jobs_run_by(lambda: again.append(build(spark, sf_dir)), f"memo-{name}") == 0
     assert again[0] is first
-
-
-def test_spelled_out_defaults_hit_the_same_entry(spark, sf_dir):
-    assert artifacts.fitted_tfidf(spark, sf_dir, max_features=None) is artifacts.fitted_tfidf(
-        spark, sf_dir
-    )
 
 
 def plan_of(df) -> str:
@@ -60,22 +60,41 @@ def _new_cached_rdds(spark, fn) -> list[int]:
     return [n for i, n in _cached_rdds(spark).items() if i not in before]
 
 
-def test_capped_model_caches_only_its_normalized_table(spark, sf_dir):
-    """The capped-vocabulary model is a view over the uncapped model's
-    cached tf and df: building it and reading its weights caches one
-    table, its normalized weights (no second tf or df)."""
+def _frames(artifact) -> list[DataFrame]:
+    """The frames a reader of ``artifact`` reads: the frame itself, each
+    frame of a tuple, and a fitted TF-IDF model's tf, df and weights."""
+    if isinstance(artifact, DataFrame):
+        return [artifact]
+    if isinstance(artifact, tuple):
+        return [f for a in artifact for f in _frames(a)]
+    if isinstance(artifact, TfidfModel):
+        return [artifact.tf, artifact.dfreq, artifact.weights()]
+    return []
+
+
+@pytest.mark.parametrize("name", BUILDERS)
+def test_builder_call_builds_its_artifact_whole(spark, sf_dir, name):
+    """After one fresh builder call, reading every frame the artifact
+    holds caches no new RDD: the call persisted and filled them all."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    artifacts._CACHE.pop(key, None)
+    artifact = getattr(artifacts, name)(spark, sf_dir)
+    frames = []
+
+    def read():
+        frames.extend(_frames(artifact))
+        for f in frames:
+            f.count()
+
+    assert _new_cached_rdds(spark, read) == []
+    assert frames, name
+
+
+def test_capped_weights_cache_nothing(spark, sf_dir):
+    """The capped-vocabulary weights are computed from the fitted model's
+    cached tf and df: reading them caches no table."""
     full = artifacts.fitted_tfidf(spark, sf_dir)
-    views = []
-
-    def build():
-        views.append(full.capped(7))
-        views[0].weights().count()
-
-    try:
-        assert len(_new_cached_rdds(spark, build)) == 1
-    finally:
-        if views:
-            views[0]._normalized().unpersist()
+    assert _new_cached_rdds(spark, lambda: full.capped_weights(7).count()) == []
 
 
 def test_wide_frame_is_coalesced_materialized_and_the_wide_copy_released(spark):

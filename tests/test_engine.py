@@ -392,6 +392,29 @@ def test_query_width_is_checked_before_any_spark_work(jobs_run_by, engine, spark
             assert jobs_run_by(request, f"width-{path}-{mode}") == 0
 
 
+def test_custom_encoder_sets_the_query_vector(engine, spark_engine, ref_fixture, monkeypatch):
+    """``encoder`` is a driver-side str -> floats function of the
+    catalog's width: an engine built with a fake one scores vector search
+    against the fake's vector, on the driver and on the Spark path."""
+    from vector_database_product_recommendation_spark import api
+
+    vec = np.random.default_rng(5).standard_normal(ref_fixture.emb.shape[1])
+    vec /= np.linalg.norm(vec)
+    texts = []
+
+    def fake(text):
+        texts.append(text)
+        return vec.tolist()
+
+    driver = api.ProductSearchEngine(engine.catalog, review_emb=engine.review_emb, encoder=fake)
+    monkeypatch.setattr(api, "DRIVER_CATALOG_MAX_BYTES", 0)
+    over = api.ProductSearchEngine(spark_engine.catalog, review_emb=spark_engine.review_emb, encoder=fake)
+    assert driver._driver is not None and over._driver is None
+    rows = _same_on_both_paths(driver, over, lambda e: e.search_products("fire tablet", k=K))
+    _assert_hits(ref_fixture, rows, *_oracle(ref_fixture, vec, _app_mask(ref_fixture)))
+    assert texts == ["fire tablet", "fire tablet"]
+
+
 # requests under the reference's k and nprobe sliders, which start at 1:
 # (request, the value its error names)
 OUT_OF_RANGE = {

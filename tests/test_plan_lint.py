@@ -22,9 +22,9 @@ SF_DIR = "/root/testdata/sf0.001"
 _SKIP = {"ann_tradeoff"}
 
 # the registered queries whose optimized plans may hold a lambda function:
-# dedup_minhash_lsh folds md5 band keys over its signature arrays, a
-# string lambda, not a vector product
-_LAMBDA_ALLOWED = {"dedup_minhash_lsh"}
+# none (dedup_minhash_lsh builds its md5 band keys from unrolled element
+# Columns)
+_LAMBDA_ALLOWED: set[str] = set()
 
 
 @pytest.fixture(scope="module")

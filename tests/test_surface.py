@@ -57,9 +57,11 @@ KEPT = {
     "functions.embed.encode_documents.encoder": "deployment setting: sentence_encoder() plugs in here",
     "sources.tables.write_bucketed.mode": "deployment setting: the write mode",
     "operators.ivf.write_ivf_store.mode": "deployment setting: the write mode",
-    # defaulted method parameters no call passes
-    "api.ProductSearchEngine.__init__.encoder": "deployment setting: "
-    "sentence_encoder() plugs in here, the SBERT deployment's query encoder",
+    # options the non-test calls leave at one value
+    "api.ProductSearchEngine.__init__.encoder": "deployment setting: a driver-side "
+    "str -> floats query encoder of the catalog's width (tests/test_engine.py "
+    "plugs in a fake); sentence_encoder() is a Column function and plugs into "
+    "encode_documents instead",
     # None defaults every non-test call overrides
     "api.ProductSearchEngine.from_reference_dir.embedding_dim": "perfbench/serve.py "
     "passes one; the default is the catalog's width",

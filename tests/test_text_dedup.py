@@ -473,15 +473,3 @@ def test_embedding_lsh_bucket_over_the_bound_raises(spark, monkeypatch):
     monkeypatch.setattr(dedup, "NEAR_DUP_MAX_ROWS", 6)
     assert embedding_near_dup_lsh(emb, banded).count() == 15
     banded.unpersist()
-
-
-def test_ngram_jaccard_sort_param_same_rows(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(300)
-    # cached, as callers pass it: every scan of the index sees the same
-    # limit(300) rows
-    index = shingle_postings(docs).cache()
-    srt = ngram_jaccard_pairs(index).collect()
-    uns = ngram_jaccard_pairs(index, sort=False).collect()
-    index.unpersist()
-    assert sorted(map(tuple, uns)) == [tuple(r) for r in srt]
-

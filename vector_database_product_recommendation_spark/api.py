@@ -31,9 +31,13 @@ served by the one-job ``exact_knn(payload=...)`` pass over the cached
 ``catalog``. Hybrid search always runs on Spark. E3 and AN5 read one
 review IVF index per engine, built on the first such call.
 
-The encoder is pluggable: hash_embedder by default (deterministic,
-oracle-checkable), sentence_encoder(SBERT) when installed — matching the
-reference's all-MiniLM-L6-v2 (app.py:84). NB: with the default hash
+The query encoder is pluggable: ``encoder`` is a driver-side function
+from the query string to a sequence of floats of the catalog's width
+(the reference's ``model.encode(query)``, app.py:169-171), called once
+per free-text request; by default ``hash_embed_py`` (deterministic,
+oracle-checkable). ``functions.embed.sentence_encoder()`` is not one: it
+returns a pandas UDF, a Column function, and plugs into
+``encode_documents`` to encode a corpus. NB: with the default hash
 encoder, free-text scores differ from the reference's SBERT scores by
 design; item-to-item / compare / ANN paths use the corpus vectors and
 match the reference bit-for-bit (tests/test_reference_retrieval.py).
@@ -135,7 +139,7 @@ class ProductSearchEngine:
     ):
         self.catalog = catalog
         self.review_emb = review_emb  # (review_idx, embedding)
-        self.encoder = encoder  # None -> driver-side hash_embed_py
+        self.encoder = encoder  # str -> floats on the driver; None -> hash_embed_py
         self._tfidf = None
         self._ivf = None
         self._ivf_centroids = None

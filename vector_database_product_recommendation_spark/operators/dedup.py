@@ -144,7 +144,7 @@ def shingle_postings(docs: DataFrame) -> DataFrame:
     return _doc_shingles_py(docs).select("doc_id", F.explode("shingles").alias("shingle"))
 
 
-def ngram_jaccard_pairs(shingle_index: DataFrame, *, sort: bool = True) -> DataFrame:
+def ngram_jaccard_pairs(shingle_index: DataFrame) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard, found with an
     inverted-index self-join (never an N^2 cross join) over
     ``shingle_index``, the (doc_id, shingle) rows of ``shingle_postings``.
@@ -153,7 +153,8 @@ def ngram_jaccard_pairs(shingle_index: DataFrame, *, sort: bool = True) -> DataF
 
     Jaccard is computed over the capped shingle space (df <= MAX_DF, see
     module docstring). Returns (id_a, id_b, jaccard) with jaccard >=
-    ``JACCARD_THRESHOLD``, id_a < id_b.
+    ``JACCARD_THRESHOLD``, id_a < id_b, unsorted: consumers add their own
+    presentation order or reshuffle at once (dedup_components).
 
     Physical shape (the ssjoin staples, both exact — the result set is
     unchanged):
@@ -165,9 +166,6 @@ def ngram_jaccard_pairs(shingle_index: DataFrame, *, sort: bool = True) -> DataF
     - length-ratio prune inside the join condition: round6(jaccard) >= t
       forces min(sz) >= (t - 5e-7) * max(sz), so pairs outside the size
       band are dropped before the pair aggregate ever sees them.
-
-    ``sort=False`` skips the presentation orderBy (a full range-exchange)
-    for composite consumers (dedup_components) that immediately reshuffle.
     """
     cold = (
         shingle_index.groupBy("shingle")
@@ -196,7 +194,7 @@ def ngram_jaccard_pairs(shingle_index: DataFrame, *, sort: bool = True) -> DataF
         )
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    out = common.select(
+    return common.select(
         "id_a",
         "id_b",
         F.round(
@@ -205,7 +203,6 @@ def ngram_jaccard_pairs(shingle_index: DataFrame, *, sort: bool = True) -> DataF
             6,
         ).alias("jaccard"),
     ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    return out.orderBy("id_a", "id_b") if sort else out
 
 
 def _md5_60(s: str) -> int:
@@ -261,16 +258,13 @@ def minhash_lsh_pairs(signatures: DataFrame) -> DataFrame:
     ``JACCARD_THRESHOLD``, id_a < id_b.
     """
     rows = NUM_HASHES // BANDS
-    band_sigs = F.transform(
-        F.sequence(F.lit(0), F.lit(BANDS - 1)),
-        lambda j: F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.slice(F.col("mh"), j * rows + 1, rows), lambda x: x.cast("string")
-                ),
-            )
-        ),
+    # band j's key: md5 of its `rows` minhashes joined by commas, one
+    # Column per element (no interpreted lambda)
+    band_sigs = F.array(
+        *[
+            F.md5(F.concat_ws(",", *[F.col("mh")[j * rows + i].cast("string") for i in range(rows)]))
+            for j in range(BANDS)
+        ]
     )
     banded = signatures.select(
         "doc_id", F.posexplode(band_sigs).alias("band", "sig")
@@ -316,7 +310,8 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     the weight): bit b is set iff sum over tokens of (+1 if bit b of
     _md5_60(token) else -1) is positive. Computed by an Arrow/numpy kernel
     (an interpreted higher-order fold costs ~60x T lambda evals per row)
-    that splits each text itself; a doc with no token has no row."""
+    that splits each text itself; a doc with no token has no row.
+    Unsorted: the signature query adds its presentation order."""
     bit_idx = np.arange(_SIMHASH_BITS, dtype=np.int64)
 
     def row(text: str | None) -> list[tuple[int]]:
@@ -328,7 +323,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
         votes = (2 * bits - 1).sum(axis=0)
         return [(int(((votes > 0).astype(np.int64) << bit_idx).sum()),)]
 
-    return per_doc(docs.select("doc_id", "text"), "simhash long", row).orderBy("doc_id")
+    return per_doc(docs.select("doc_id", "text"), "simhash long", row)
 
 
 def simhash_pairs(signatures: DataFrame) -> DataFrame:
@@ -438,19 +433,21 @@ def _rademacher_planes(n_planes: int, dim: int) -> np.ndarray:
 def embedding_band_signatures(emb: DataFrame) -> DataFrame:
     """(vid, band_idx, band_key) hyperplane band signatures — the
     write-signatures-once step of the embedding-LSH pipeline, row-local
-    (one BLAS matvec per Arrow batch, no shuffle). Unpersisted: the
-    session artifact cache owns its lifetime
-    (artifacts.embedding_band_table)."""
+    (one BLAS matvec per Arrow batch, no shuffle). The hyperplanes are
+    drawn in the kernel at the width of the first batch, so building the
+    plan runs no job. Unpersisted: the session artifact cache owns its
+    lifetime (artifacts.embedding_band_table)."""
     r_bits = N_PLANES // N_BANDS
-    dim = len(emb.select("embedding").first()[0])
-    planes = _rademacher_planes(N_PLANES, dim)
     id_dtype = emb.schema["vec_id"].dataType.simpleString()
 
     def sign_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        planes = None
         for pdf in batches:
             if pdf.empty:
                 continue
             mat = matrix(pdf["embedding"])
+            if planes is None:
+                planes = _rademacher_planes(N_PLANES, mat.shape[1])
             bits = (mat @ planes.T) >= 0  # (n, N_PLANES)
             ids, band_idx, band_key = [], [], []
             pows = 1 << np.arange(r_bits)
@@ -750,9 +747,7 @@ def dedup_components(docs: DataFrame, shingle_index: DataFrame) -> DataFrame:
 
     Returns (doc_id, component_id, is_kept) sorted by doc_id.
     """
-    # edges feed a shuffle immediately; the sort is waste
-    pairs = ngram_jaccard_pairs(shingle_index, sort=False)
-    comp = connected_components(docs.select("doc_id"), pairs)
+    comp = connected_components(docs.select("doc_id"), ngram_jaccard_pairs(shingle_index))
     return comp.select(
         "doc_id",
         "component_id",

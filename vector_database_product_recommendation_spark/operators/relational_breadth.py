@@ -482,17 +482,14 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (app.py has no multi-way semi/anti joins; this is breadth beyond it).
 
     Decorrelated the way Catalyst's RewriteCorrelatedScalarSubquery would:
-    one aggregate per (orderkey, suppkey) with per-line late counts, one
-    per orderkey with supplier/late-supplier counts, then a filter — both
-    EXISTS subqueries collapse into shuffled aggregates instead of
-    re-scanning lineitem per outer row.  At 100 TB: hash aggregates keyed
-    on l_orderkey (map-side partial combine shrinks each to one row per
-    group) and one join between them that AQE plans from actual sizes.
-    Its two consumers do NOT share that aggregate: Catalyst pushes the
-    blamed side's ``n_late_lines > 0`` below the repartition, so the
-    subtrees differ. The final AQE plan at sf0.01 scans lineitem twice and
-    runs the lineitem ⋈ orders join and the aggregate once per consumer;
-    only the orders broadcast is reused (one ReusedExchange).
+    one aggregate per (orderkey, suppkey) with per-line late counts, then
+    two windows over l_orderkey on those rows (the order's supplier count
+    and its late-supplier count) and one filter, so both EXISTS
+    subqueries collapse into one shuffled aggregate read once instead of
+    re-scanning lineitem per outer row.  At 100 TB: a hash aggregate keyed
+    on (l_orderkey, l_suppkey) with map-side partial combine, one exchange
+    on l_orderkey for the windows and one on l_suppkey for the blame
+    count.  The final AQE plan at sf0.01 scans lineitem once.
     """
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -505,22 +502,17 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "late",
         (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")).cast("int"),
     )
-    # per_supp feeds two consumers (per_order and the blamed join) keyed on
-    # l_orderkey: repartitioned by that key, neither needs a further shuffle
-    per_supp = (
-        lines.groupBy("l_orderkey", "l_suppkey")
-        .agg(F.sum("late").alias("n_late_lines"))
-        .repartition(F.col("l_orderkey"))
-    )
-    per_order = per_supp.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum((F.col("n_late_lines") > 0).cast("int")).alias("n_late_supp"),
-    )
+    per_supp = lines.groupBy("l_orderkey", "l_suppkey").agg(F.sum("late").alias("n_late_lines"))
+    order = Window.partitionBy("l_orderkey")
     blamed = (
-        per_supp.filter(F.col("n_late_lines") > 0)
-        .join(
-            per_order.filter((F.col("n_supp") > 1) & (F.col("n_late_supp") == 1)),
-            "l_orderkey",
+        per_supp.select(
+            "l_suppkey",
+            "n_late_lines",
+            F.count(F.lit(1)).over(order).alias("n_supp"),
+            F.sum((F.col("n_late_lines") > 0).cast("int")).over(order).alias("n_late_supp"),
+        )
+        .filter(
+            (F.col("n_late_lines") > 0) & (F.col("n_supp") > 1) & (F.col("n_late_supp") == 1)
         )
         .groupBy("l_suppkey")
         .agg(F.sum("n_late_lines").alias("numwait"))

@@ -26,9 +26,10 @@ sklearn parity notes:
   (vocabulary choice, not an algorithm difference).
 
 One fitted state per corpus: ``TfidfModel``'s cached tf and df tables
-(plus n) are the only term statistics. The capped-vocabulary model
-(``TfidfModel.capped``) and BM25 (``bm25_search``) are views over them;
-nothing re-tokenizes the corpus after the fit.
+(plus n) are the only term statistics, and its normalized weight table
+is filled by the fit. The capped-vocabulary weights
+(``TfidfModel.capped_weights``) and BM25 (``bm25_search``) are computed
+from them; nothing re-tokenizes the corpus after the fit.
 
 Scale notes: tf/df/norm are all hash aggregates with map-side combine; the
 scored join broadcasts the query's terms (a query has O(10) terms). The
@@ -89,13 +90,44 @@ def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return per_doc(src, "term string, tf long", lambda t: Counter(_tokens(t)).items())
 
 
+def _raw(tf: DataFrame, dfreq: DataFrame, n: int, keys: list[str]) -> DataFrame:
+    """``keys`` plus w = tf * smooth idf, the idf read off ``dfreq`` over
+    ``n`` documents. (1 + n) enters as an exact integer literal."""
+    return tf.join(dfreq, "term").select(
+        *keys,
+        (
+            F.col("tf").cast("double") * (F.log(F.lit(1 + n) / (1 + F.col("df"))) + F.lit(1.0))
+        ).alias("w"),
+    )
+
+
+def _normalized(tf: DataFrame, dfreq: DataFrame, n: int) -> DataFrame:
+    """The UNROUNDED l2-normalized weight table (doc_id, term, wn) of the
+    (doc_id, term, tf) rows ``tf``: the one normalization of the fit and
+    of the capped weights."""
+    raw = _raw(tf, dfreq, n, ["doc_id", "term"])
+    norms = raw.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
+    return raw.join(norms, "doc_id").select(
+        "doc_id", "term", (F.col("w") / F.col("nrm")).alias("wn")
+    )
+
+
+def _rounded(normalized: DataFrame, decimals: int) -> DataFrame:
+    """(doc_id, term, weight): ``normalized``'s wn rounded to ``decimals``,
+    ordered by (doc_id, term)."""
+    return normalized.select(
+        "doc_id", "term", F.round(F.col("wn"), decimals).alias("weight")
+    ).orderBy("doc_id", "term")
+
+
 class TfidfModel:
-    """The fitted state (tf, df, n) with the per-scan shuffles cached under
-    the one persist rule (``lifetime.persist_right_sized``) —
-    every downstream consumer (weights, query transform, search, hybrid,
-    the capped view, BM25) derives from these without re-running
-    tokenization/aggregation. The warehouse-scale analog is writing the
-    tf/df tables once per corpus."""
+    """The fitted state: tf, df and n, and the l2-normalized weight table
+    (the reference's tfidf_matrix.joblib), each table cached and filled
+    here under the one persist rule (``lifetime.persist_right_sized``).
+    Every downstream consumer (weights, query transform, search, hybrid,
+    the capped weights, BM25) derives from these without re-running
+    tokenization or aggregation, and none fills a cache. The
+    warehouse-scale analog is writing the tf/df tables once per corpus."""
 
     def __init__(self, docs: DataFrame, id_col: str, text_col: str):
         # corpus row count is FITTED STATE (sklearn stores it as n_samples_);
@@ -107,17 +139,23 @@ class TfidfModel:
         self.dfreq = persist_right_sized(
             self.tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         )
-        self._normalized_df: DataFrame | None = None
+        # every rounding level is a projection over this one table
+        self.normalized = persist_right_sized(_normalized(self.tf, self.dfreq, self.n))
 
-    def capped(self, max_features: int) -> TfidfModel:
-        """The model with its vocabulary capped at ``max_features`` terms,
-        as a view: tf and df are this model's cached tables restricted to
-        the capped vocabulary, n is shared, and only the view's own
-        normalized table is persisted (when first read). sklearn
-        max_features semantics: keep the top-k vocabulary by total corpus
-        term count (ties broken alphabetically — made explicit here where
-        sklearn relies on sort stability); df on a kept term is the same
-        count either way."""
+    def weights(self, round_decimals: int = 6) -> DataFrame:
+        """l2-normalized smooth-idf TF-IDF, long sparse form
+        (doc_id, term, weight), rounded per consumer contract: a
+        projection over the cached normalized table."""
+        return _rounded(self.normalized, round_decimals)
+
+    def capped_weights(self, max_features: int) -> DataFrame:
+        """``weights()`` of the model with its vocabulary capped at
+        ``max_features`` terms: tf and df restricted to the capped
+        vocabulary, n shared, normalized by the fit's own helper, and
+        nothing persisted. sklearn max_features semantics: keep the top-k
+        vocabulary by total corpus term count (ties broken alphabetically,
+        made explicit here where sklearn relies on sort stability); df on
+        a kept term is the same count either way."""
         from pyspark.sql import Window
 
         vocab = F.broadcast(
@@ -129,56 +167,8 @@ class TfidfModel:
             .filter(F.col("rk") <= max_features)
             .select("term")
         )
-        # the view shares the fitted tables, so it skips the fit
-        view = TfidfModel.__new__(TfidfModel)
-        view.n = self.n
-        view.tf = self.tf.join(vocab, "term")
-        view.dfreq = self.dfreq.join(vocab, "term")
-        view._normalized_df = None
-        return view
-
-    def _raw(self, tf: DataFrame, keys: list[str]) -> DataFrame:
-        # (1 + n) enters as an exact integer literal — value-identical to
-        # the previous one-row crossJoin, minus a job and a broadcast
-        return (
-            tf.join(self.dfreq, "term")
-            .select(
-                *keys,
-                (
-                    F.col("tf").cast("double")
-                    * (F.log(F.lit(1 + self.n) / (1 + F.col("df"))) + F.lit(1.0))
-                ).alias("w"),
-            )
-        )
-
-    def _normalized(self) -> DataFrame:
-        """The UNROUNDED l2-normalized weight table (doc_id, term, wn),
-        cached once — every rounding level is a projection over it, so
-        the normalize join+aggregate runs once per model instead of once
-        per rounding level (and pins one cached copy, not one per level)."""
-        if self._normalized_df is None:
-            raw = self._raw(self.tf, ["doc_id", "term"])
-            norms = raw.groupBy("doc_id").agg(
-                F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
-            )
-            self._normalized_df = persist_right_sized(
-                raw.join(norms, "doc_id").select(
-                    "doc_id", "term", (F.col("w") / F.col("nrm")).alias("wn")
-                )
-            )
-        return self._normalized_df
-
-    def weights(self, round_decimals: int = 6) -> DataFrame:
-        """l2-normalized smooth-idf TF-IDF, long sparse form
-        (doc_id, term, weight), rounded per consumer contract — a cheap
-        projection over the persisted normalized table (the reference's
-        tfidf_matrix.joblib). round(w/nrm) is computed from the identical
-        w/nrm double as before; only the persist boundary moved."""
-        return self._normalized().select(
-            "doc_id",
-            "term",
-            F.round(F.col("wn"), round_decimals).alias("weight"),
-        ).orderBy("doc_id", "term")
+        tf, dfreq = self.tf.join(vocab, "term"), self.dfreq.join(vocab, "term")
+        return _rounded(_normalized(tf, dfreq, self.n), 6)
 
     def transform_query(self, query_text: str) -> DataFrame:
         """One query string -> (term, qw) under the corpus-fitted idf.
@@ -194,7 +184,7 @@ class TfidfModel:
         cached (``lifetime.pin``ned) intermediates."""
         counts = sorted(Counter(_tokens(query_text)).items())
         q_tf = local_frame(self.tf.sparkSession, counts, "term string, tf long")
-        raw = self._raw(q_tf, ["term"])
+        raw = _raw(q_tf, self.dfreq, self.n, ["term"])
         nrm = raw.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
         return raw.crossJoin(F.broadcast(nrm)).select(
             "term", (F.col("w") / F.col("nrm")).alias("qw")

@@ -477,7 +477,7 @@ ORDER BY id_a, id_b
 def _dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.artifacts import shingle_index
 
-    return D.ngram_jaccard_pairs(shingle_index(spark, sf_dir))
+    return D.ngram_jaccard_pairs(shingle_index(spark, sf_dir)).orderBy("id_a", "id_b")
 
 
 # Permutation constants mirror operators/dedup.py (_perm_constants): one
@@ -567,7 +567,7 @@ _SIMHASH_SIG_ORACLE = f"WITH {_SIMHASH_CTE} SELECT doc_id, simhash FROM sig ORDE
 
 @register("simhash_signatures", _SIMHASH_SIG_ORACLE)
 def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.simhash_signatures(load_table(spark, sf_dir, "documents"))
+    return D.simhash_signatures(load_table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 # bits per SimHash blocking chunk, as dedup.simhash_pairs splits them
@@ -1184,7 +1184,7 @@ ORDER BY doc_id, term
 def _tfidf_weights_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_database_product_recommendation_spark.artifacts import fitted_tfidf
 
-    return fitted_tfidf(spark, sf_dir, max_features=20).weights()
+    return fitted_tfidf(spark, sf_dir).capped_weights(20)
 
 
 _FORMAT_ORACLE = f"""
