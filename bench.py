@@ -80,20 +80,21 @@ def main() -> None:
     # Offline artifact build, timed separately (the baseline's methodology:
     # the reference's per-query numbers run against PREBUILT FAISS/TF-IDF
     # artifacts — ann_tradeoff_table.csv excludes index training. Serving
-    # queries below consume these; artifact_build_sec reports the cost and
-    # artifact_build_jobs the Spark jobs, counted under one job group.)
+    # queries below consume these; artifact_build_sec reports the cost.)
+    # Each builder, and each query's first timed call, runs under a job
+    # group named after it; its jobs are counted after the timed region.
     from vector_database_product_recommendation_spark import artifacts
 
     sc = spark.sparkContext
-    sc.setJobGroup("artifact_build", "artifact_build")
     t_art = time.time()
     try:
         for build in artifacts.BUILDERS:
+            sc.setJobGroup(build.__name__, build.__name__)
             build(spark, SF_DIR)
     except Exception as e:
         print(f"# artifact build error: {e}", file=sys.stderr)
     artifact_build = time.time() - t_art
-    artifact_jobs = _jobs_in_group(sc, "artifact_build")
+    artifact_jobs = {b.__name__: _jobs_in_group(sc, b.__name__) for b in artifacts.BUILDERS}
 
     def time_query(name: str, fn) -> float:
         t = time.time()
@@ -105,7 +106,9 @@ def main() -> None:
             return -1.0
 
     for name, fn in qmap.items():
+        sc.setJobGroup(name, name)
         timings[name] = time_query(name, fn)
+    query_jobs = {name: _jobs_in_group(sc, name) for name in qmap}
 
     # Median-of-3 for the queries where single-shot numbers are unreadable:
     # every query over 1 s single-shot (a fixed 5-slowest cut left such
@@ -219,7 +222,9 @@ def main() -> None:
         "sf": _sf_of(SF_DIR),
         "startup_sec": round(startup, 2),
         "artifact_build_sec": round(artifact_build, 2),
-        "artifact_build_jobs": artifact_jobs,
+        "artifact_build_jobs": sum(artifact_jobs.values()),
+        "artifact_jobs": artifact_jobs,
+        "query_jobs": query_jobs,
         "runs": 3,
         "median3_queries": median3,
         **extras,
@@ -245,10 +250,11 @@ def main() -> None:
     # committed line emitted stays in the line (line_queries), then the
     # remaining slots fill slowest-first. Values round to 10 ms in the
     # line only (BENCH_SUMMARY.json keeps full precision), and the bulky
-    # floor/decomposition extras live in BENCH_SUMMARY.json only, which
-    # together leave room for more query names.
+    # floor/decomposition extras and the per-builder and per-query job
+    # maps live in BENCH_SUMMARY.json only, which together leave room for
+    # more query names.
     line_budget = 1980
-    compact = dict(payload)
+    compact = {k: v for k, v in payload.items() if k not in ("artifact_jobs", "query_jobs")}
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) > line_budget:
         for k in (

@@ -46,6 +46,18 @@ def jobs_run_by(spark):
     return count
 
 
+def optimized_nodes(df) -> list:
+    """The nodes of ``df``'s optimized logical plan (JVM objects); a cached
+    table (InMemoryRelation) is a leaf."""
+    out, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        out.append(node)
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

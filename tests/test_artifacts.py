@@ -9,11 +9,13 @@ import inspect
 import io
 
 import pytest
+from conftest import optimized_nodes
 from pyspark.sql import DataFrame
 
 from vector_database_product_recommendation_spark import artifacts
 from vector_database_product_recommendation_spark.lifetime import persist_right_sized
 from vector_database_product_recommendation_spark.operators.tfidf import TfidfModel
+from vector_database_product_recommendation_spark.registry import queries
 
 BUILDERS = [b.__name__ for b in artifacts.BUILDERS]
 
@@ -62,13 +64,14 @@ def _new_cached_rdds(spark, fn) -> list[int]:
 
 def _frames(artifact) -> list[DataFrame]:
     """The frames a reader of ``artifact`` reads: the frame itself, each
-    frame of a tuple, and a fitted TF-IDF model's tf, df and weights."""
+    frame of a tuple, and a fitted TF-IDF model's vocab, postings and
+    weights."""
     if isinstance(artifact, DataFrame):
         return [artifact]
     if isinstance(artifact, tuple):
         return [f for a in artifact for f in _frames(a)]
     if isinstance(artifact, TfidfModel):
-        return [artifact.tf, artifact.dfreq, artifact.weights()]
+        return [artifact.vocab, artifact.postings, artifact.weights()]
     return []
 
 
@@ -92,9 +95,22 @@ def test_builder_call_builds_its_artifact_whole(spark, sf_dir, name):
 
 def test_capped_weights_cache_nothing(spark, sf_dir):
     """The capped-vocabulary weights are computed from the fitted model's
-    cached tf and df: reading them caches no table."""
+    cached vocab and postings: reading them caches no table."""
     full = artifacts.fitted_tfidf(spark, sf_dir)
     assert _new_cached_rdds(spark, lambda: full.capped_weights(7).count()) == []
+
+
+@pytest.mark.parametrize("name", ["minhash_signatures", "simhash_signatures"])
+def test_signature_queries_compute_in_their_own_call(spark, sf_dir, name):
+    """With every artifact built, the signature queries still run their
+    own kernel: no cached kernel output (the signature tables) stands in
+    for them."""
+    for build in artifacts.BUILDERS:
+        build(spark, sf_dir)
+    nodes = optimized_nodes(queries()[name](spark, sf_dir))
+    assert "MapInPandas" in [n.nodeName() for n in nodes]
+    cached = [n.cachedPlan().toString() for n in nodes if n.nodeName() == "InMemoryRelation"]
+    assert not any("MapInPandas" in plan for plan in cached)
 
 
 def test_wide_frame_is_coalesced_materialized_and_the_wide_copy_released(spark):

@@ -1,5 +1,6 @@
 """bench.py's stdout line pins the queries of the newest committed
-``BENCH_r<round>.json`` line, so membership only grows."""
+``BENCH_r<round>.json`` line, so membership only grows, and its job
+counter counts the jobs run under one job group."""
 
 from __future__ import annotations
 
@@ -47,3 +48,12 @@ def test_line_queries_read_the_highest_round_only(tmp_path):
     write("BENCH_r10.json", ["a", "b"])
     write("BENCH_r10_c8.json", ["c"])  # a core-count variant, not a round
     assert _bench().line_queries(str(tmp_path)) == ["a", "b"]
+
+
+def test_jobs_in_group_counts_the_jobs_run_under_the_group(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("bench-two-jobs", "bench-two-jobs")
+    sc.parallelize([1, 2], 1).count()
+    sc.parallelize([3], 1).count()
+    assert _bench()._jobs_in_group(sc, "bench-two-jobs") == 2
+    assert sc.getLocalProperty("spark.jobGroup.id") is None

@@ -6,6 +6,8 @@ and compares row count, sorted column names, and an order-insensitive
 value hash (floats rounded to 6 decimals). Usage:
 
     python tools/oracle_check.py [query ...]
+
+A named query that is not registered exits non-zero before anything runs.
 """
 
 from __future__ import annotations
@@ -92,6 +94,11 @@ def main():
     import __spark_entry__ as entrymod
     from vector_database_product_recommendation_spark.session import get_spark
 
+    qs = entrymod.queries()
+    only = set(sys.argv[1:])
+    unknown = sorted(only - set(qs))
+    if unknown:
+        sys.exit(f"unknown queries: {', '.join(unknown)}")
     spark = get_spark("oracle-check")
 
     t0 = time.time()
@@ -107,10 +114,8 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    only = set(sys.argv[1:])
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -126,6 +131,7 @@ def main():
             continue
         if name not in oracles:
             print(f"ROWS-ONLY {name}: {len(srows)} rows ({t_spark:.1f}s)")
+            n_rows_only += 1
             continue
         try:
             t0 = time.time()
@@ -175,7 +181,7 @@ def main():
                   f"(spark {t_spark:.1f}s, duck {t_duck:.2f}s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, "
-          f"{len(qs) - len(oracles)} rows-only, {len(qs)} total queries")
+          f"{n_rows_only} rows-only, {len(qs)} total queries")
     spark.stop()
     sys.exit(1 if n_fail else 0)
 

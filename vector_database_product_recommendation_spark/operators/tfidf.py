@@ -25,15 +25,17 @@ sklearn parity notes:
 - stop words are STOPWORDS_EN, our 20-word list, not sklearn's 318
   (vocabulary choice, not an algorithm difference).
 
-One fitted state per corpus: ``TfidfModel``'s cached tf and df tables
-(plus n) are the only term statistics, and its normalized weight table
-is filled by the fit. The capped-vocabulary weights
-(``TfidfModel.capped_weights``) and BM25 (``bm25_search``) are computed
-from them; nothing re-tokenizes the corpus after the fit.
+One fitted state per corpus, the reference's two artifacts:
+``TfidfModel.vocab`` (term, df, cnt) and ``TfidfModel.postings``
+(doc_id, term, tf, dl, wn), both filled by the fit, plus the numbers n
+and avgdl. The weights, the query transform, the capped-vocabulary
+weights (``TfidfModel.capped_weights``) and BM25 (``bm25_search``) read
+them; nothing re-tokenizes or re-aggregates the corpus after the fit.
 
-Scale notes: tf/df/norm are all hash aggregates with map-side combine; the
-scored join broadcasts the query's terms (a query has O(10) terms). The
-only full-corpus shuffles key on `term` and `doc_id`, both fine-grained.
+Scale notes: the postings' df, dl and norm are windows over the term
+counts, keyed on `term` and then `doc_id` (both fine-grained), and the
+vocabulary is a hash aggregate with map-side combine; the scored join
+broadcasts the query's terms (a query has O(10) terms).
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ import re
 from collections import Counter
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 
 from vector_database_product_recommendation_spark.functions.text import STOPWORDS_EN
 from vector_database_product_recommendation_spark.functions.textprof import per_doc
@@ -90,85 +92,79 @@ def _doc_term_counts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return per_doc(src, "term string, tf long", lambda t: Counter(_tokens(t)).items())
 
 
-def _raw(tf: DataFrame, dfreq: DataFrame, n: int, keys: list[str]) -> DataFrame:
-    """``keys`` plus w = tf * smooth idf, the idf read off ``dfreq`` over
-    ``n`` documents. (1 + n) enters as an exact integer literal."""
-    return tf.join(dfreq, "term").select(
-        *keys,
-        (
-            F.col("tf").cast("double") * (F.log(F.lit(1 + n) / (1 + F.col("df"))) + F.lit(1.0))
-        ).alias("w"),
+def _tfidf(n: int) -> Column:
+    """w = tf * smooth idf, the idf ln((1 + n) / (1 + df)) + 1 of the
+    ``df`` column over ``n`` documents, (1 + n) an exact integer literal."""
+    return F.col("tf").cast("double") * (F.log(F.lit(1 + n) / (1 + F.col("df"))) + F.lit(1.0))
+
+
+def _postings(tf: DataFrame, n: int) -> DataFrame:
+    """The (doc_id, term, tf) rows ``tf`` as postings (doc_id, term, tf,
+    dl, wn): windows over ``tf`` count each term's df and each document's
+    length dl (its summed tf) and l2 norm, and wn is the UNROUNDED
+    normalized weight. The one normalization of the fit and of the capped
+    weights."""
+    by_doc = Window.partitionBy("doc_id")
+    rows = tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+    rows = rows.withColumn("w", _tfidf(n))
+    nrm = F.sqrt(F.sum(F.col("w") * F.col("w")).over(by_doc))
+    return rows.select(
+        "doc_id", "term", "tf", F.sum("tf").over(by_doc).alias("dl"), (F.col("w") / nrm).alias("wn")
     )
 
 
-def _normalized(tf: DataFrame, dfreq: DataFrame, n: int) -> DataFrame:
-    """The UNROUNDED l2-normalized weight table (doc_id, term, wn) of the
-    (doc_id, term, tf) rows ``tf``: the one normalization of the fit and
-    of the capped weights."""
-    raw = _raw(tf, dfreq, n, ["doc_id", "term"])
-    norms = raw.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-    return raw.join(norms, "doc_id").select(
-        "doc_id", "term", (F.col("w") / F.col("nrm")).alias("wn")
-    )
-
-
-def _rounded(normalized: DataFrame, decimals: int) -> DataFrame:
-    """(doc_id, term, weight): ``normalized``'s wn rounded to ``decimals``,
+def _rounded(postings: DataFrame, decimals: int) -> DataFrame:
+    """(doc_id, term, weight): ``postings``' wn rounded to ``decimals``,
     ordered by (doc_id, term)."""
-    return normalized.select(
+    return postings.select(
         "doc_id", "term", F.round(F.col("wn"), decimals).alias("weight")
     ).orderBy("doc_id", "term")
 
 
 class TfidfModel:
-    """The fitted state: tf, df and n, and the l2-normalized weight table
-    (the reference's tfidf_matrix.joblib), each table cached and filled
-    here under the one persist rule (``lifetime.persist_right_sized``).
-    Every downstream consumer (weights, query transform, search, hybrid,
-    the capped weights, BM25) derives from these without re-running
-    tokenization or aggregation, and none fills a cache. The
-    warehouse-scale analog is writing the tf/df tables once per corpus."""
+    """The fitted state, the reference's two artifacts, each cached and
+    filled here under the one persist rule (``lifetime.persist_right_sized``):
+    ``vocab`` (term, df, cnt), the vectorizer's vocabulary
+    (tfidf_vectorizer.joblib), and ``postings`` (doc_id, term, tf, dl, wn),
+    the document-term matrix (tfidf_matrix.joblib); plus two numbers, the
+    corpus size ``n`` and ``avgdl``. Every consumer (weights, query
+    transform, search, hybrid, the capped weights, BM25) reads these, and
+    none aggregates the corpus again or fills a cache."""
 
     def __init__(self, docs: DataFrame, id_col: str, text_col: str):
-        # corpus row count is FITTED STATE (sklearn stores it as n_samples_);
-        # kept as a plain int so consumers fold it into expressions as a
-        # literal (the old one-row crossJoin form re-scanned docs on every
-        # query transform).
+        # plain numbers (sklearn's n_samples_), folded into expressions as
+        # literals; avgdl is the mean length of the documents with a term
         self.n = docs.count()
-        self.tf = persist_right_sized(_doc_term_counts(docs, id_col, text_col))
-        self.dfreq = persist_right_sized(
-            self.tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        tf = _doc_term_counts(docs, id_col, text_col)
+        self.postings = persist_right_sized(_postings(tf, self.n))
+        self.vocab = persist_right_sized(
+            self.postings.groupBy("term").agg(F.count("tf").alias("df"), F.sum("tf").alias("cnt"))
         )
-        # every rounding level is a projection over this one table
-        self.normalized = persist_right_sized(_normalized(self.tf, self.dfreq, self.n))
+        self.avgdl = self.postings.agg(F.sum("tf") / F.countDistinct("doc_id")).first()[0] or 0.0
 
     def weights(self, round_decimals: int = 6) -> DataFrame:
         """l2-normalized smooth-idf TF-IDF, long sparse form
         (doc_id, term, weight), rounded per consumer contract: a
-        projection over the cached normalized table."""
-        return _rounded(self.normalized, round_decimals)
+        projection over the cached postings."""
+        return _rounded(self.postings, round_decimals)
 
     def capped_weights(self, max_features: int) -> DataFrame:
         """``weights()`` of the model with its vocabulary capped at
-        ``max_features`` terms: tf and df restricted to the capped
-        vocabulary, n shared, normalized by the fit's own helper, and
-        nothing persisted. sklearn max_features semantics: keep the top-k
-        vocabulary by total corpus term count (ties broken alphabetically,
-        made explicit here where sklearn relies on sort stability); df on
-        a kept term is the same count either way."""
-        from pyspark.sql import Window
-
-        vocab = F.broadcast(
-            self.tf.groupBy("term")
-            .agg(F.sum("tf").alias("cnt"))
-            .withColumn(
+        ``max_features`` terms: the kept terms' postings normalized again
+        by the fit's own helper, n shared, and nothing persisted. sklearn
+        max_features semantics: keep the top-k vocabulary by total corpus
+        term count (``vocab.cnt``; ties broken alphabetically, made
+        explicit here where sklearn relies on sort stability); df on a
+        kept term is the same count either way."""
+        kept = F.broadcast(
+            self.vocab.withColumn(
                 "rk", F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("term")))
             )
             .filter(F.col("rk") <= max_features)
             .select("term")
         )
-        tf, dfreq = self.tf.join(vocab, "term"), self.dfreq.join(vocab, "term")
-        return _rounded(_normalized(tf, dfreq, self.n), 6)
+        tf = self.postings.join(kept, "term").select("doc_id", "term", "tf")
+        return _rounded(_postings(tf, self.n), 6)
 
     def transform_query(self, query_text: str) -> DataFrame:
         """One query string -> (term, qw) under the corpus-fitted idf.
@@ -183,8 +179,8 @@ class TfidfModel:
         same query text builds the same plan, so a re-run matches its
         cached (``lifetime.pin``ned) intermediates."""
         counts = sorted(Counter(_tokens(query_text)).items())
-        q_tf = local_frame(self.tf.sparkSession, counts, "term string, tf long")
-        raw = _raw(q_tf, self.dfreq, self.n, ["term"])
+        q_tf = local_frame(self.postings.sparkSession, counts, "term string, tf long")
+        raw = q_tf.join(self.vocab, "term").select("term", _tfidf(self.n).alias("w"))
         nrm = raw.agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
         return raw.crossJoin(F.broadcast(nrm)).select(
             "term", (F.col("w") / F.col("nrm")).alias("qw")
@@ -292,38 +288,35 @@ def bm25_search(query_text: str, model: TfidfModel, k: int) -> DataFrame:
     with the always-positive Lucene idf ln(1 + (n-df+0.5)/(df+0.5)),
     k1 = BM25_K1 and b = BM25_B, over the STOPWORDS_EN-filtered tokens.
 
-    Every corpus statistic is read off the fitted ``model``: tf is the
-    query terms' rows of ``model.tf``, df their rows of ``model.dfreq``, n
-    is ``model.n``, and a document's length dl is its summed tf (the same
-    ``_tokens`` stream, so a document without tokens has no dl, as it has
-    no tf). Query terms are tokenized driver-side by ``_tokens``; the
-    corpus is not tokenized again. avgdl rides along as a broadcast
-    crossJoin, so nothing collects to the driver. Per-term contributions
-    round to 12 decimals before the sum so engine FP noise stays below
-    the final 6-decimal round (same policy as TfidfModel).
+    Every corpus statistic is read off the fitted ``model``: tf and the
+    document length dl (summed tf over the same ``_tokens`` stream, so a
+    document without tokens has neither) are the query terms' rows of
+    ``model.postings``, df their rows of ``model.vocab``, and n and avgdl
+    are ``model``'s numbers, folded in as literals. Query terms are
+    tokenized driver-side by ``_tokens``; the corpus is neither tokenized
+    nor aggregated again: the one aggregate is the per-document sum of
+    the query terms' contributions. Per-term contributions round to 12
+    decimals before the sum so engine FP noise stays below the final
+    6-decimal round (same policy as TfidfModel).
     """
     qterms = sorted(set(_tokens(query_text)))
     k1, b = BM25_K1, BM25_B
 
-    tf = model.tf.filter(F.col("term").isin(qterms))
-    dl = model.tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    avgdl = dl.agg(F.avg("dl").alias("avgdl"))
-    idf = model.dfreq.filter(F.col("term").isin(qterms)).select(
+    idf = model.vocab.filter(F.col("term").isin(qterms)).select(
         "term",
         F.log(
             F.lit(1.0) + (F.lit(model.n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         ).alias("idf"),
     )
     contrib = (
-        tf.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
+        model.postings.filter(F.col("term").isin(qterms))
+        .join(F.broadcast(idf), "term")
         .select(
             "doc_id",
             F.round(
                 F.col("idf")
                 * (F.col("tf") * (k1 + 1.0))
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
+                / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(model.avgdl))),
                 12,
             ).alias("c"),
         )
